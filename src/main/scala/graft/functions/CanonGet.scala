@@ -58,14 +58,19 @@ case class CanonGet(child: Expression, name: String)
 }
 
 object CanonGet {
-  private final val KV: Byte = 0x01
-  private final val FS: Byte = 0x02
+  import graft.streaming.DeltaEngine
+  require(DeltaEngine.KV < 0x80 && DeltaEngine.FS < 0x80,
+    "the byte scan needs single-byte (ASCII) canon delimiters")
+  private val KV: Byte = DeltaEngine.KV.toByte
+  private val FS: Byte = DeltaEngine.FS.toByte
 
   /** First value stored under `name`, or null when absent. Pure byte
     * scan over the row's UTF-8 buffer (KV/FS are single bytes; a
     * multi-byte character can never alias them — UTF-8 continuation
     * bytes have the high bit set). */
   def get(row: UTF8String, name: UTF8String): UTF8String = {
+    val KV = CanonGet.KV
+    val FS = CanonGet.FS
     val r = row.getBytes
     val nm = name.getBytes
     val n = r.length

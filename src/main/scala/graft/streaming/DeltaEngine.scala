@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{array, col, concat, explode, hash, lit, lpad, pmod, str_to_map, to_timestamp}
+import org.apache.spark.sql.functions.{array, col, concat, explode, hash, lit, lpad, pmod, to_timestamp}
 import org.apache.spark.sql.Column
 
 /** The incremental acyclic-FK-join-tree engine — the Cquirrel/AJU
@@ -122,7 +122,7 @@ object DeltaEngine {
   }
 
   // ---- canonical row form (state-store and shuffle friendly) --------
-  val KV = '\u0001'; val FS = '\u0002'
+  final val KV = '\u0001'; final val FS = '\u0002'
 
   def canon(cols: Map[String, String]): String =
     cols.toSeq.sortBy(_._1).map { case (k, v) => s"$k$KV$v" }.mkString(FS.toString)
@@ -1055,6 +1055,14 @@ object DeltaEngine {
     * the JVM heap and checkpoints upload changelogs rather than full
     * snapshots — at 100 TB the buffered-children state is far larger
     * than any executor heap.
+    *
+    * Session setting: [[runStreamTree]] and [[runStreamTreeTws]] set
+    * `spark.sql.streaming.checkpointFileManagerClass` on the
+    * Dataset's session to [[LocalCheckpointFileManager]] (same files,
+    * `.crc`s and checksums, but `file:` checkpoints commit without
+    * launching `chmod`/`readlink` processes — see
+    * [[LocalCheckpointFs]]). A manager the caller has already set on
+    * the session wins and is left as set.
     */
   def runStream(specs: Seq[NodeSpec], changelogs: Map[String, Dataset[Evt]],
                 stateTtl: Option[java.time.Duration] = None,
@@ -1102,6 +1110,7 @@ object DeltaEngine {
     require(stateTtl.isEmpty || eventTtl.isEmpty,
       "choose ONE state-bounding policy: processing-time stateTtl or event-time eventTtl")
     val spark = changelogs.head._2.sparkSession
+    LocalCheckpointFs.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val timeout =
@@ -1348,6 +1357,7 @@ object DeltaEngine {
                        sourceFiltered: Boolean = false): Dataset[Evt] = {
     checkStages(stages)
     val spark = changelogs.head._2.sparkSession
+    LocalCheckpointFs.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val timeMode =

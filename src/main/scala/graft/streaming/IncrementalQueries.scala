@@ -61,11 +61,14 @@ object IncrementalQueries {
     // 60 s) and its 100-version retention exist for RECOVERY of
     // long-running production queries and are pure overhead here:
     // every store instance (one per shuffle partition per stateful
-    // operator per query) schedules maintenance and fsyncs delta files
-    // it will never reread. 2 m (not longer): the maintenance thread
-    // is ALSO what unloads finished queries' providers — a first try
-    // at 1 h let hundreds of finished replays' providers pile up in
-    // the shared suite JVM and the suite wall grew 18 -> 25 min; 2 m
+    // operator per query) schedules maintenance and rewrites snapshot
+    // files it will never reread. (Hadoop's local file system does not
+    // fsync; the measured per-file cost was chmod/readlink process
+    // launches, which LocalCheckpointFs removes.) 2 m (not longer): the
+    // maintenance thread is ALSO what unloads finished queries'
+    // providers — a first try at 1 h let hundreds of finished replays'
+    // providers pile up in the shared suite JVM and the suite wall
+    // grew 18 -> 25 min; 2 m
     // still outlives a fixture replay (so zero mid-query churn) while
     // unloading promptly. Production guidance unchanged — a real
     // deployment keeps the defaults (or RocksDB) on its own sessions.
@@ -1118,14 +1121,10 @@ object IncrementalQueries {
       |GROUP BY n_name""".stripMargin
   private val unionDeletes = Map("lineitem" -> (col("l_partkey") % 3 === 0))
 
-  // Cross-branch changelog sharing (SqlCompiler.sharedBranchChangelogs
-  // — lineitem feeds both branches under the same filter) was tried in
-  // round 17 and measured SLOWER at sf0.1: min 2.65 -> 2.89 s with the
-  // control query FASTER in the same window (the r16 two-consumer
-  // lesson again — the shared canon's serial checkpoint barrier costs
-  // more than the lazy re-scan, which pipelines into each branch's
-  // first shuffle map stage and is page-cache absorbed). The helper
-  // stays for >= 3-branch compositions, where the math flips.
+  // Building lineitem's changelog once for both branches measured
+  // SLOWER at sf0.1 (min 2.65 -> 2.89 s, control faster): the shared
+  // canon's checkpoint barrier costs more than each branch's lazy
+  // re-scan, which pipelines into its first shuffle map stage.
   def incrementalSqlUnion(s: SparkSession, dir: String): DataFrame =
     SqlCompiler.compileUnionAll(s, dir, unionSql)
       .map(_.run(s, dir, unionDeletes)).reduce(_ unionAll _)

@@ -132,33 +132,6 @@ object SqlCompiler {
     cs
   }
 
-  /** Changelogs SHARED across sibling branches (the UNION ALL
-    * composition): a relation read by two or more branches under the
-    * SAME scan filter gets its changelog built once — union of every
-    * branch's carried columns plus every branch's routing key —
-    * materialized with exact stats, and each branch re-keys from the
-    * shared canon ([[Compiled.leafDeltas]]'s `sharedLogs`). Without
-    * this, each branch re-scans and re-canon-encodes the relation's
-    * parquet independently (insert AND delete legs: 2 scans per
-    * branch). Branches whose filters differ keep their own builds —
-    * a shared canon cannot carry two different scan predicates. */
-  def sharedBranchChangelogs(spark: SparkSession, dir: String,
-      branches: Seq[Compiled],
-      deletes: Map[String, Column] = Map.empty): Map[String, Dataset] = {
-    import org.apache.spark.sql.GraftBridge
-    val usages = branches.flatMap(b => b.path.map(rel => rel -> b))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    usages.collect {
-      case (rel, bs) if bs.size >= 2 &&
-          bs.map(_.wheres.get(rel)).distinct.size == 1 =>
-        val cols = bs.flatMap(b => b.needed(rel) :+ b.keyCol(rel)).distinct
-        val raw = IncrementalQueries.changelog(
-          bs.head.loadRel(spark, dir, rel), bs.head.keyCol(rel), cols,
-          deletes.get(rel), bs.head.wheres.get(rel).map(expr))
-        rel -> GraftBridge.localCheckpointStats(raw.toDF()).as[Evt](raw.encoder)
-    }
-  }
-
   /** Top-level `INTERSECT` / `EXCEPT` (SET semantics) of two
     * independently compilable NON-AGGREGATE view branches, maintained
     * incrementally — the cross-branch netting the UNION ALL path
@@ -1304,11 +1277,10 @@ object SqlCompiler {
       * given per-relation delete conditions; returns the maintained
       * aggregate (groups with net rows > 0, like any GROUP BY). */
     def run(spark: SparkSession, dir: String,
-            deletes: Map[String, Column] = Map.empty,
-            sharedLogs: Map[String, Dataset] = Map.empty): DataFrame =
+            deletes: Map[String, Column] = Map.empty): DataFrame =
       if (scalarGates.nonEmpty)
-        withScalarGatesResolved(spark, dir, deletes).run(spark, dir, deletes, sharedLogs)
-      else aggregate(leafDeltas(spark, dir, deletes, sharedLogs).toDF())
+        withScalarGatesResolved(spark, dir, deletes).run(spark, dir, deletes)
+      else aggregate(leafDeltas(spark, dir, deletes).toDF())
 
     /** Resolve every [[ScalarGateSpec]] against the CURRENT survivor
       * inputs (base parquet minus the delete conditions, the same
@@ -1350,19 +1322,8 @@ object SqlCompiler {
       * composition surface: set-operation compilation feeds branch
       * deltas into further engine stages. */
     def leafDeltas(spark: SparkSession, dir: String,
-                   deletes: Map[String, Column] = Map.empty,
-                   sharedLogs: Map[String, Dataset] = Map.empty): Dataset = {
-      // cross-branch sharing: a relation whose changelog was built
-      // ONCE for several sibling branches (see [[sharedBranchChangelogs]])
-      // re-keys from the shared materialized canon instead of
-      // re-scanning and re-encoding the parquet per branch
-      val logs00 = sourceChangelogs(spark, dir, deletes) // enforces the FULL OUTER delete scope
-      val logs0 = logs00.map { case (rel, ds) =>
-        rel -> (sharedLogs.get(rel) match {
-          case Some(sh) => rekeyByCanon(sh, keyCol(rel))
-          case None => ds
-        })
-      }
+                   deletes: Map[String, Column] = Map.empty): Dataset = {
+      val logs0 = sourceChangelogs(spark, dir, deletes) // enforces the FULL OUTER delete scope
       // OPT-IN bloom semi-join reduction, applied by the COMPILER: with
       // [[IncrementalQueries.BloomPrefilterConf]] set on this session,
       // the leaf (largest) changelog is pre-filtered by a bloom over

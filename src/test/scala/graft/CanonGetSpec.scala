@@ -13,7 +13,7 @@ class CanonGetSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
 
-  private val KV = ''; private val FS = ''
+  import graft.streaming.DeltaEngine.{FS, KV}
 
   private val rows = Seq(
     s"a${KV}1${FS}ab${KV}2${FS}b${KV}",            // prefix collision + empty value

@@ -22,7 +22,7 @@ object SparkTestSession {
       // IncrementalQueries.replaySession): every streaming test's
       // checkpoints are throwaway temp dirs, so the HDFS-backed
       // store's 60 s background maintenance and 100-version retention
-      // are pure fsync/cleanup churn across the hundreds of
+      // are pure snapshot/cleanup churn across the hundreds of
       // short-lived queries a suite run spins up
       .config("spark.sql.streaming.minBatchesToRetain", "2")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "2m")

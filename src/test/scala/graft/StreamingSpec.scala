@@ -401,13 +401,17 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     } finally query.stop()
   }
 
-  test("tree stream recovers from a checkpoint restart with state intact") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
+  /** Q10 over sf0.001 as two micro-batches, inserts then deletes,
+    * with the query stopped after the first and restarted from `ckpt`
+    * (`beforeRestart` runs while it is down). Returns the folded leaf
+    * deltas of both incarnations and the batch answer they must equal. */
+  private def q10AcrossRestart(session: org.apache.spark.sql.SparkSession, ckpt: String,
+      beforeRestart: () => Unit = () => ()): (Map[String, Int], Map[String, Int]) = {
+    implicit val sq = session.sqlContext
+    import session.implicits._
     import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val logs = IncrementalQueries.q10Changelogs(spark, dir)
+    val logs = IncrementalQueries.q10Changelogs(session, dir)
       .view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     // the memory sink can't recover from a checkpoint; foreachBatch
@@ -423,34 +427,73 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
           sunk.put(batchId, df.collect().toSeq): Unit)
         .option("checkpointLocation", ckpt).outputMode("append").start()
     }
+    def feed(seq: Long): Unit = streams.foreach { case (rel, ms) =>
+      val evts = logs(rel).filter(_.seq == seq)
+      if (evts.nonEmpty) ms.addData(evts)
+    }
     // batch 1 (inserts) under the FIRST query incarnation
     val q1 = startQuery()
-    try {
-      streams.foreach { case (rel, ms) =>
-        val ins = logs(rel).filter(_.seq == 0L)
-        if (ins.nonEmpty) ms.addData(ins)
-      }
-      q1.processAllAvailable()
-    } finally q1.stop()
+    try { feed(0L); q1.processAllAvailable() } finally q1.stop()
+    beforeRestart()
     // deletes under a RESTARTED query: parent-death fan-out and child
     // retraction must hit state recovered from the checkpoint, not
     // fresh empty state
     val q2 = startQuery()
+    try { feed(1L); q2.processAllAvailable() } finally q2.stop()
+    def fold(evts: Seq[Evt]): Map[String, Int] =
+      evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
+        .filter(_._2 != 0).toMap
+    (fold(sunk.values.flatten.toSeq),
+      fold(runBatch(IncrementalQueries.q10Tree,
+        IncrementalQueries.q10Changelogs(session, dir)).collect().toSeq))
+  }
+
+  test("tree stream recovers from a checkpoint restart with state intact") {
+    import graft.streaming.{LocalCheckpointFileManager, LocalCheckpointFs}
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    val session = spark.newSession()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    // the first incarnation writes under Spark's stock manager (set by
+    // the caller, so the engine leaves it); the restart reads and
+    // extends that checkpoint under the engine's own manager
+    session.conf.set(LocalCheckpointFs.ManagerConf,
+      classOf[FileContextBasedCheckpointFileManager].getName)
+    val (streamed, batched) = q10AcrossRestart(session, ckpt,
+      () => session.conf.unset(LocalCheckpointFs.ManagerConf))
+    assert(session.conf.get(LocalCheckpointFs.ManagerConf) ==
+      classOf[LocalCheckpointFileManager].getName)
+    assert(batched.nonEmpty && streamed == batched)
+  }
+
+  test("a checkpoint reached through a symlink runs and restarts") {
+    val real = java.nio.file.Files.createTempDirectory("graft_ckpt_real")
+    val link = real.resolveSibling(real.getFileName.toString + "_link")
+    java.nio.file.Files.createSymbolicLink(link, real)
+    val (streamed, batched) = q10AcrossRestart(spark.newSession(), link.resolve("ckpt").toString)
+    assert(java.nio.file.Files.isDirectory(real.resolve("ckpt").resolve("commits")))
+    assert(batched.nonEmpty && streamed == batched)
+  }
+
+  test("a Q10 stream commits its checkpoint without launching processes") {
+    import scala.jdk.CollectionConverters._
+    // Hadoop's local file system shells out to chmod/readlink when
+    // libhadoop is absent; every such command names the file it acts
+    // on, so filtering by this query's checkpoint keeps other suites'
+    // processes out of the count
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_procs").toRealPath()
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val (streamed, batched) =
+      try q10AcrossRestart(spark.newSession(), ckpt.toString) finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("graft_procs", ".jfr")
     try {
-      streams.foreach { case (rel, ms) =>
-        val dels = logs(rel).filter(_.seq == 1L)
-        if (dels.nonEmpty) ms.addData(dels)
-      }
-      q2.processAllAvailable()
-      def fold(evts: Seq[Evt]): Map[String, Int] =
-        evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
-          .filter(_._2 != 0).toMap
-      val streamed = fold(sunk.values.flatten.toSeq)
-      val batched = fold(
-        runBatch(IncrementalQueries.q10Tree,
-          IncrementalQueries.q10Changelogs(spark, dir)).collect().toSeq)
-      assert(batched.nonEmpty && streamed == batched)
-    } finally q2.stop()
+      rec.dump(dump)
+      val hits = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).filter(_.contains(ckpt.toString))
+      assert(hits.size == 0, s"processes touched the checkpoint, e.g. ${hits.take(3)}")
+    } finally { rec.close(); java.nio.file.Files.delete(dump) }
+    assert(batched.nonEmpty && streamed == batched)
   }
 
   test("branching tree streams: runStreamTree micro-batches equal runTree (sf0.001)") {
