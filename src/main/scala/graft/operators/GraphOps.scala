@@ -25,6 +25,13 @@ import graft.GraftQuery.sql
   * `persist`/checkpoint `ranks` each round to truncate the lineage —
   * an execution-management choice, not a change of plan shape.
   *
+  * LINEAGE CAVEAT for every `localCheckpoint` below (and
+  * `GraftBridge.localCheckpointCounted`): the checkpoint cuts the
+  * lineage, so its blocks are never recomputed. A block lost with its
+  * executor, or one unpersisted while a plan still reads it, fails the
+  * job that reads it ("Checkpoint block not found"); free a checkpoint
+  * only when no live frame reads it.
+  *
   * Reference: beyond-reference analytics surface; PageRank per Brin &
   * Page (1998), integer-arithmetic determinism per this repo's
   * exact-fold conventions.

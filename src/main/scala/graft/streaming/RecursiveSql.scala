@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import graft.Tables
 import graft.sources.SqlDml
@@ -91,6 +93,89 @@ object RecursiveSql {
     * while keeping compaction I/O amortized (|acc| written once per
     * `compactEvery` rounds, not once per round). */
   private val compactEvery = 16
+
+  /** Every RDD one call checkpoints — its materialized helpers, the
+    * accumulator's deltas, resets and compactions, the DRed mark sets —
+    * so the call can free, on return, whatever its result does not
+    * read ([[release]]).
+    *
+    * LINEAGE CAVEAT: these are LOCAL checkpoints. Eager
+    * `localCheckpoint` cuts the lineage, so a block is never
+    * recomputed: a lost block (executor loss) or an unpersisted one
+    * fails the job that reads it ("Checkpoint block not found"). What
+    * stays is therefore decided by walking the result's analyzed plan
+    * ([[GraftBridge.rddsRead]]), never by names or text. */
+  private[graft] final class Ledger {
+    private val rdds = mutable.ArrayBuffer[RDD[_]]()
+    /** The current materialized copy of each term-read helper CTE. */
+    val helpers = mutable.Map[String, RDD[_]]()
+
+    def checkpoint(df: DataFrame): (DataFrame, Long) = {
+      val (c, n) = GraftBridge.localCheckpointCounted(df)
+      rdds ++= GraftBridge.rddsRead(c)
+      (c, n)
+    }
+
+    /** Materialize helper `name`, freeing the copy it replaces: a
+      * maintained run re-materializes term-read helpers per batch, and
+      * every frame built over the old copy has run by then. */
+    def helper(name: String, df: DataFrame): DataFrame = {
+      val c = checkpoint(df)._1
+      helpers.put(name, GraftBridge.rddsRead(c).head).foreach { old =>
+        rdds -= old
+        old.unpersist(blocking = true)
+      }
+      c
+    }
+
+    /** Drop the child session's temp views and free every listed RDD
+      * that `result` (already analyzed) does not read — all of them
+      * when the call failed. Spark 4.1.2 keeps a child session
+      * reachable once it has run an action, so its views would
+      * otherwise pin every checkpoint for the SparkContext's life. */
+    def release(s: SparkSession, views: Seq[String],
+                result: Option[DataFrame]): Unit = {
+      val read = result.fold(Set.empty[Int])(GraftBridge.rddsRead(_).map(_.id).toSet)
+      views.foreach(s.catalog.dropTempView)
+      rdds.filterNot(r => read(r.id)).foreach(_.unpersist(blocking = true))
+      rdds.clear()
+    }
+  }
+
+  private val aqeKey = "spark.sql.adaptive.enabled"
+
+  /** Run one call in a CHILD session of `spark`, so caller bindings
+    * stay untouched. `eager` runs the call's own jobs — helper
+    * materialization, the fixpoint rounds, compactions, the DRed loops
+    * — with AQE off: every frame those jobs join carries exact
+    * checkpoint stats, so static planning already broadcasts the small
+    * side and AQE's per-stage re-planning only adds jobs. The thunk it
+    * returns builds the outer query under the caller's AQE setting, so
+    * the returned frame plans as the caller configured. Then `views`
+    * are dropped and the ledger freed ([[Ledger.release]]), also when
+    * the call fails. */
+  private def inChildSession(spark: SparkSession, ledger: Ledger, views: Seq[String])
+                            (eager: SparkSession => (() => DataFrame)): DataFrame = {
+    val s = spark.newSession()
+    val callerAqe = spark.conf.get(aqeKey)
+    s.conf.set(aqeKey, "false")
+    var out: Option[DataFrame] = None
+    try {
+      val outer = eager(s)
+      s.conf.set(aqeKey, callerAqe)
+      out = Some(outer())
+      out.get
+    } finally ledger.release(s, views, out)
+  }
+
+  /** Base relations the statement names, by the same identifier scan
+    * as [[countRefs]] over the comment-masked text; a call binds only
+    * these. Over-counting (a column or CTE sharing a table's name) only
+    * binds one table more. */
+  private def tablesRead(sqlText: String): Seq[String] = {
+    val masked = SqlDml.maskComments(sqlText)
+    Tables.names.filter(t => countRefs(masked, t) > 0)
+  }
 
   private[graft] final case class Cte(name: String, aliases: Seq[String], body: String)
 
@@ -265,7 +350,7 @@ object RecursiveSql {
     * closure exceeds the byte threshold and plans exactly as before;
     * the knob is Spark's own broadcast threshold, the deployment's to
     * size. */
-  private final class Fixpoint(unionAll: Boolean) {
+  private final class Fixpoint(unionAll: Boolean, ledger: Ledger) {
     private val deltas = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var rounds = 0
     var deltaRows = 0L
@@ -286,7 +371,7 @@ object RecursiveSql {
       * stays the per-round delta diagnostic ("checkpoint I/O linear
       * in delta"), which an |closure|-sized import would swamp. */
     def reset(df: DataFrame): Unit = {
-      val (c, n) = GraftBridge.localCheckpointCounted(df)
+      val (c, n) = ledger.checkpoint(df)
       compactedRows += n
       deltas.clear()
       deltas += c
@@ -298,13 +383,13 @@ object RecursiveSql {
       * materializing job IS the emptiness probe — one job, not
       * checkpoint + count — and the frame carries its exact stats. */
     def push(df: DataFrame): Option[DataFrame] = {
-      val (d, n) = GraftBridge.localCheckpointCounted(df)
+      val (d, n) = ledger.checkpoint(df)
       if (n == 0) None
       else {
         deltas += d
         deltaRows += n
         if (deltas.size > compactEvery) {
-          val (c, cn) = GraftBridge.localCheckpointCounted(acc)
+          val (c, cn) = ledger.checkpoint(acc)
           compactedRows += cn
           deltas.clear()
           deltas += c
@@ -402,7 +487,8 @@ object RecursiveSql {
     * recomputed twice per BFS round vs read once from checkpointed
     * rows). Helpers read only by the anchor or outer query evaluate
     * once either way and stay lazy. */
-  private def bindHelper(s: SparkSession, h: Cte, materialize: Boolean): Unit = {
+  private def bindHelper(s: SparkSession, ledger: Ledger, h: Cte,
+                         materialize: Boolean): Unit = {
     val df = s.sql(h.body)
     val out =
       if (h.aliases.isEmpty) df
@@ -413,17 +499,24 @@ object RecursiveSql {
     // materialized helpers carry exact stats too (same single job as a
     // plain eager localCheckpoint): the loop's frontier ⋈ edges join
     // then sees the REAL edge-set size on its probe side every round
-    (if (materialize) GraftBridge.localCheckpointStats(out) else out)
+    (if (materialize) ledger.helper(h.name, out) else out)
       .createOrReplaceTempView(h.name)
   }
 
-  /** Run the statement against the parquet fixture at `dir`: every
-    * base table name in [[Tables.names]] is bound as a temp view in a
-    * CHILD session (so caller bindings are untouched), pre-fixpoint
-    * helpers bind next, the anchor seeds the accumulator, the loop
-    * iterates the recursive term over the frontier until it adds
-    * nothing (or fails at `maxIters`), post-fixpoint helpers bind
-    * last, and the outer query runs over all of them. */
+  /** Run the statement against the parquet fixture at `dir`. Only the
+    * base tables of [[Tables.names]] the statement names are loaded,
+    * each bound as a temp view in a CHILD session (so caller bindings
+    * are untouched); pre-fixpoint helpers bind next, the anchor seeds
+    * the accumulator, the loop iterates the recursive term over the
+    * frontier until it adds nothing (or fails at `maxIters`),
+    * post-fixpoint helpers bind last, and the outer query runs over
+    * all of them.
+    *
+    * The returned DataFrame owns the checkpointed accumulator legs
+    * (and any materialized helper) its plan reads; everything else
+    * the call checkpointed is freed, and its temp views dropped,
+    * before it returns. The call's own jobs plan without AQE; the
+    * returned DataFrame plans under the caller's setting. */
   def run(spark: SparkSession, dir: String, sqlText: String,
           maxIters: Int = 100): DataFrame =
     runWithStats(spark, dir, sqlText, maxIters)._1
@@ -482,34 +575,46 @@ object RecursiveSql {
     * diagnostics. */
   def runWithStats(spark: SparkSession, dir: String, sqlText: String,
                    maxIters: Int = 100): (DataFrame, Stats) = {
+    val (df, stats, _) = runWithLedger(spark, dir, sqlText, maxIters)
+    (df, stats)
+  }
+
+  /** [[runWithStats]] plus the call's [[Ledger]], for specs. */
+  private[graft] def runWithLedger(spark: SparkSession, dir: String, sqlText: String,
+                                   maxIters: Int): (DataFrame, Stats, Ledger) = {
     val (ctes, outerText) = parseAll(sqlText)
     val rec = soleRecursive(ctes)
     val (anchorText, recText, unionAll) = splitRecursiveBody(rec)
     val (helpersBefore, helpersAfter) =
       classifyHelpers(ctes, rec, anchorText, recText)
+    val tables = tablesRead(sqlText)
+    val ledger = new Ledger
+    val fp = new Fixpoint(unionAll, ledger)
+    val df = inChildSession(spark, ledger, tables ++ ctes.map(_.name)) { s =>
+      tables.foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
+      val recMasked0 = SqlDml.maskComments(recText)
+      helpersBefore.foreach(h =>
+        bindHelper(s, ledger, h, materialize = countRefs(recMasked0, h.name) > 0))
 
-    val s = spark.newSession()
-    Tables.names.foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
-    val recMasked0 = SqlDml.maskComments(recText)
-    helpersBefore.foreach(h =>
-      bindHelper(s, h, materialize = countRefs(recMasked0, h.name) > 0))
+      var anchorCols: Seq[String] = Nil
+      val (renamed, aligned) = shaperFor(rec, anchorCols)
+      val shape: DataFrame => DataFrame = df => aligned(renamed(df))
 
-    val fp = new Fixpoint(unionAll)
-    var anchorCols: Seq[String] = Nil
-    val (renamed, aligned) = shaperFor(rec, anchorCols)
-    val shape: DataFrame => DataFrame = df => aligned(renamed(df))
-
-    val anchor = renamed(s.sql(anchorText))
-    anchorCols = anchor.columns.toSeq
-    fp.push(if (unionAll) anchor else anchor.distinct()).foreach { frontier =>
-      fp.loop(s, rec.name, recText, shape, frontier, maxIters)
+      val anchor = renamed(s.sql(anchorText))
+      anchorCols = anchor.columns.toSeq
+      fp.push(if (unionAll) anchor else anchor.distinct()).foreach { frontier =>
+        fp.loop(s, rec.name, recText, shape, frontier, maxIters)
+      }
+      () => {
+        val result =
+          if (fp.deltaRows == 0) anchor.limit(0) // empty anchor → empty recursion
+          else fp.acc
+        result.createOrReplaceTempView(rec.name)
+        helpersAfter.foreach(bindHelper(s, ledger, _, materialize = false))
+        s.sql(outerText)
+      }
     }
-    val result =
-      if (fp.deltaRows == 0) anchor.limit(0) // empty anchor → empty recursion
-      else fp.acc
-    result.createOrReplaceTempView(rec.name)
-    helpersAfter.foreach(bindHelper(s, _, materialize = false))
-    (s.sql(outerText), fp.stats)
+    (df, fp.stats, ledger)
   }
 
   /** MAINTAINED recursion under a base-table CHANGELOG — semi-naive
@@ -608,7 +713,12 @@ object RecursiveSql {
     * closure), reopens it from the log in a fresh session, and passes
     * it here with the SAME batches/deletesAt lists (state filters are
     * pure expressions — respecifying them reconstructs every base
-    * state without re-running prior batches). */
+    * state without re-running prior batches).
+    *
+    * Loads only the base tables the statement, the batch maps and the
+    * delete maps name, and frees what the call created as [[run]]
+    * does; a term-read helper materialized again for a new batch frees
+    * the copy it replaces. */
   def runIncrementalWithStats(spark: SparkSession, dir: String, sqlText: String,
                      batches: Seq[Map[String, Column]],
                      deletesAt: Map[Int, Map[String, Column]] = Map.empty,
@@ -643,241 +753,249 @@ object RecursiveSql {
     (changing ++ delRels).distinct.foreach(t => if (!Tables.names.contains(t))
       fail(s"batch filter names unknown base relation '$t'"))
 
-    val s = spark.newSession()
-    val base: Map[String, DataFrame] =
-      Tables.names.map(t => t -> Tables.load(s, dir, t)).toMap
-    // Base relations each PRE-FIXPOINT helper transitively reads
-    // (helpers may read earlier helpers — definition-order fold). A
-    // temp view captures its plan at creation, so helper views must be
-    // RE-CREATED after every state rebinding — that is what keeps a
-    // delta binding of `orders` visible through an `edges` helper
-    // instead of freezing the batch-0 state.
-    val helperRels: Map[String, Set[String]] =
-      helpersBefore.foldLeft(Map.empty[String, Set[String]]) { (acc, h) =>
-        val m = SqlDml.maskComments(h.body)
-        val direct = Tables.names.filter(t => countRefs(m, t) > 0).toSet
-        val viaEarlier = acc.collect {
-          case (hn, rels) if countRefs(m, hn) > 0 => rels
-        }.flatten.toSet
-        acc + (h.name -> (direct ++ viaEarlier))
-      }
-    /** Base relations the (masked) text reads, directly or through a
-      * pre-fixpoint helper — the delta-binding and seed-skipping
-      * decisions must see THROUGH helpers. */
-    def textReads(masked: String): Set[String] =
-      Tables.names.filter(t => countRefs(masked, t) > 0).toSet ++
-        helperRels.collect {
-          case (hn, rels) if countRefs(masked, hn) > 0 => rels
-        }.flatten
-    // bind each relation to a specific state for the next SQL evals,
-    // then re-create the pre-fixpoint helper views over that state
-    // (definition order — later helpers may read earlier ones).
-    // `materialize` checkpoints term-read helpers once per call: the
-    // state is loop-invariant WITHIN a batch's fixpoint loop, so the
-    // loop reads checkpointed rows instead of recomputing the helper's
-    // join every round (same reasoning as [[bindHelper]] in [[run]]).
-    val recMaskedForBind = SqlDml.maskComments(recText)
-    def bind(state: Map[String, DataFrame],
-             materialize: Boolean = false): Unit = {
-      state.foreach { case (t, df) => df.createOrReplaceTempView(t) }
-      helpersBefore.foreach(h => bindHelper(s, h,
-        materialize = materialize && countRefs(recMaskedForBind, h.name) > 0))
-    }
-    def delFilter(t: String, throughK: Int): Option[Column] =
-      (0 to throughK).flatMap(j => deletesAt.get(j).flatMap(_.get(t)))
-        .reduceOption(_ || _)
-    /** Rows of `t` present with inserts through `insK` and deletes
-      * through `delK` applied. */
-    def stateOf(t: String, insK: Int, delK: Int): DataFrame = {
-      val afterIns =
-        if (!batches.exists(_.contains(t))) base(t)
-        else batches.take(insK + 1).flatMap(_.get(t)).reduceOption(_ || _) match {
-          case Some(f) => base(t).filter(f)
-          case None => base(t).limit(0)
+    val tables = Tables.names.filter(
+      (tablesRead(sqlText) ++ changing ++ delRels).contains)
+    val ledger = new Ledger
+    val fp = new Fixpoint(unionAll = false, ledger)
+    val df = inChildSession(spark, ledger, tables ++ ctes.map(_.name)) { s =>
+      val base: Map[String, DataFrame] =
+        tables.map(t => t -> Tables.load(s, dir, t)).toMap
+      // Base relations each PRE-FIXPOINT helper transitively reads
+      // (helpers may read earlier helpers — definition-order fold). A
+      // temp view captures its plan at creation, so helper views must be
+      // RE-CREATED after every state rebinding — that is what keeps a
+      // delta binding of `orders` visible through an `edges` helper
+      // instead of freezing the batch-0 state.
+      val helperRels: Map[String, Set[String]] =
+        helpersBefore.foldLeft(Map.empty[String, Set[String]]) { (acc, h) =>
+          val m = SqlDml.maskComments(h.body)
+          val direct = Tables.names.filter(t => countRefs(m, t) > 0).toSet
+          val viaEarlier = acc.collect {
+            case (hn, rels) if countRefs(m, hn) > 0 => rels
+          }.flatten.toSet
+          acc + (h.name -> (direct ++ viaEarlier))
         }
-      delFilter(t, delK).map(f => afterIns.filter(!f)).getOrElse(afterIns)
-    }
-    def stateMap(insK: Int, delK: Int): Map[String, DataFrame] =
-      Tables.names.map(t => t -> stateOf(t, insK, delK)).toMap
-
-    val fp = new Fixpoint(unionAll = false)
-    var anchorCols: Seq[String] = Nil
-    val (renamed, aligned) = shaperFor(rec, anchorCols)
-    val shape: DataFrame => DataFrame = df => aligned(renamed(df))
-    val anchorMasked = SqlDml.maskComments(anchorText)
-    val recMasked = SqlDml.maskComments(recText)
-    // base relations the term/anchor read THROUGH helpers too — a term
-    // reading `edges` (a helper over orders join lineitem) reads orders
-    val recReads = textReads(recMasked)
-    val anchorReads = textReads(anchorMasked)
-
-    // batch 0: the ordinary fixpoint over the initial base state
-    // (deletes at batch 0 simply never appear in the state) — or, on
-    // RESUME, the imported closure becomes the single accumulator leg
-    // (anchor runs for its SCHEMA only; .columns analyzes, no job)
-    val anchor0 = initialClosure match {
-      case Some(c0raw) =>
-        bind(stateMap(startBatch - 1, startBatch - 1))
-        val a = renamed(s.sql(anchorText)).distinct()
-        anchorCols = a.columns.toSeq
-        // re-home the imported closure into THIS child session: the
-        // loop binds frontier temp views via the frame's OWN session,
-        // and a caller-session frame would bind into the wrong catalog
-        val c0 = s.createDataFrame(c0raw.rdd, c0raw.schema)
-        // reset-style import: the closure is NOT a delta — crediting
-        // it to deltaRows would swamp the "checkpoint I/O linear in
-        // delta" diagnostic on every resumed run
-        fp.reset(shape(c0))
-        a
-      case None =>
-        bind(stateMap(0, 0), materialize = true)
-        val a = renamed(s.sql(anchorText)).distinct()
-        anchorCols = a.columns.toSeq
-        fp.push(a).foreach(f => fp.loop(s, rec.name, recText, shape, f, maxIters))
-        a
-    }
-
-    /** Evaluate the recursive term with r bound to the closure and the
-      * base relations bound per `state`. */
-    def evalTerm(state: Map[String, DataFrame], r: DataFrame): DataFrame = {
-      bind(state)
-      // every call site binds the ACCUMULATOR as r — its checkpointed
-      // legs carry exact stats, so the term's joins plan from real sizes
-      r.createOrReplaceTempView(rec.name)
-      shape(s.sql(recText))
-    }
-    def closure: DataFrame = if (fp.hasAcc) fp.acc else anchor0.limit(0)
-
-    (math.max(1, startBatch) until batches.size).foreach { k =>
-      // ---- phase A: deletes (applied before this batch's inserts) --
-      val delSpec = deletesAt.getOrElse(k, Map.empty)
-      if (delSpec.nonEmpty && fp.hasAcc) {
-        val preDel = stateMap(k - 1, k - 1)
-        val postDel = stateMap(k - 1, k)
-        // deleted rows per relation: present before, matched now
-        def deletedRows(t: String): DataFrame =
-          stateOf(t, k - 1, k - 1).filter(delSpec(t))
-        // over-delete seed: derivations that USED a deleted row — the
-        // per-relation delta binding, deleted rows as the delta,
-        // everything else at the PRE-delete state, r at the closure
-        val seedParts =
-          delSpec.keys.toSeq.filter(recReads).map { t =>
-            evalTerm(preDel + (t -> deletedRows(t)), closure)
-          } ++
-          delSpec.keys.toSeq.filter(anchorReads).map { t =>
-            bind(preDel + (t -> deletedRows(t)))
-            renamed(s.sql(anchorText))
+      /** Base relations the (masked) text reads, directly or through a
+        * pre-fixpoint helper — the delta-binding and seed-skipping
+        * decisions must see THROUGH helpers. */
+      def textReads(masked: String): Set[String] =
+        Tables.names.filter(t => countRefs(masked, t) > 0).toSet ++
+          helperRels.collect {
+            case (hn, rels) if countRefs(masked, hn) > 0 => rels
+          }.flatten
+      // bind each relation to a specific state for the next SQL evals,
+      // then re-create the pre-fixpoint helper views over that state
+      // (definition order — later helpers may read earlier ones).
+      // `materialize` checkpoints term-read helpers once per call: the
+      // state is loop-invariant WITHIN a batch's fixpoint loop, so the
+      // loop reads checkpointed rows instead of recomputing the helper's
+      // join every round (same reasoning as [[bindHelper]] in [[run]]).
+      val recMaskedForBind = SqlDml.maskComments(recText)
+      def bind(state: Map[String, DataFrame],
+               materialize: Boolean = false): Unit = {
+        state.foreach { case (t, df) => df.createOrReplaceTempView(t) }
+        helpersBefore.foreach(h => bindHelper(s, ledger, h,
+          materialize = materialize && countRefs(recMaskedForBind, h.name) > 0))
+      }
+      def delFilter(t: String, throughK: Int): Option[Column] =
+        (0 to throughK).flatMap(j => deletesAt.get(j).flatMap(_.get(t)))
+          .reduceOption(_ || _)
+      /** Rows of `t` present with inserts through `insK` and deletes
+        * through `delK` applied. */
+      def stateOf(t: String, insK: Int, delK: Int): DataFrame = {
+        val afterIns =
+          if (!batches.exists(_.contains(t))) base(t)
+          else batches.take(insK + 1).flatMap(_.get(t)).reduceOption(_ || _) match {
+            case Some(f) => base(t).filter(f)
+            case None => base(t).limit(0)
           }
-        if (seedParts.nonEmpty) {
-          // propagate marks over the POST-delete base: rows derivable
-          // from marked rows through surviving edges join the set
-          // (every step intersects the old closure — marks can only
-          // name rows that exist). The mark set runs on its OWN
-          // Fixpoint: each round checkpoints only its delta
-          // (O(|new marks|)), the accumulator stays a lazy union
-          // compacted every compactEvery legs — same delta-only
-          // discipline as the main fixpoint; a deep delete cascade
-          // pays O(|marks|) checkpoint I/O, not O(rounds·|marks|).
-          val marks = new Fixpoint(unionAll = false)
-          var frontierOpt =
-            marks.push(seedParts.reduce(_ unionAll _).distinct())
-          // the seeds' delta-bound plans are captured above (s.sql
-          // resolves at call time), so the loop can bind the
-          // post-delete state ONCE, materialized — term-read helpers
-          // checkpoint here instead of recomputing per round
-          bind(postDel, materialize = frontierOpt.isDefined)
-          var rounds = 0
-          while (frontierOpt.isDefined) {
-            if (rounds >= maxIters)
-              fail(s"over-delete propagation still growing after $maxIters " +
-                "rounds — raise maxIters")
-            frontierOpt.get.createOrReplaceTempView(rec.name)
-            // distinct() BEFORE the intersect for the same map-side
-            // combine reason as dedupNew: intersect dedups too, but
-            // only after shuffling the raw step into its join
-            val step = shape(s.sql(recText)).distinct()
-            frontierOpt = marks.push(marks.dedupNew(step.intersect(fp.acc)))
-            // count productive mark rounds on the marks Fixpoint itself
-            // (push() alone never bumps rounds — only loop() does), so
-            // absorb() folds the DRed rounds into the run's Stats as
-            // the scaladoc promises
-            if (frontierOpt.isDefined) marks.rounds += 1
-            rounds += 1
-          }
-          // an empty seed marks nothing: the closure is untouched, so
-          // skip the reset (it would re-checkpoint the whole
-          // accumulator) and the re-derive (it would add nothing)
-          if (marks.hasAcc) {
-            // survivors replace the accumulator; then RE-DERIVE: one
-            // support probe over the survivors + the anchor re-seeds
-            // every marked row that still has a derivation, and the
-            // ordinary loop does the rest
-            val survivors = fp.acc.except(marks.acc)
-            fp.absorb(marks)
-            fp.reset(survivors)
-            bind(postDel)
-            val reSeed = fp.dedupNew(
-              evalTerm(postDel, fp.acc).unionAll {
-                bind(postDel)
-                renamed(s.sql(anchorText))
-              })
-            // materialize term-read helpers only when the loop will
-            // actually run — an empty re-seed (nothing to re-derive)
-            // must not pay a helper checkpoint job
-            fp.push(reSeed).foreach { f =>
-              bind(postDel, materialize = true)
-              fp.loop(s, rec.name, recText, shape, f, maxIters)
+        delFilter(t, delK).map(f => afterIns.filter(!f)).getOrElse(afterIns)
+      }
+      def stateMap(insK: Int, delK: Int): Map[String, DataFrame] =
+        tables.map(t => t -> stateOf(t, insK, delK)).toMap
+
+      var anchorCols: Seq[String] = Nil
+      val (renamed, aligned) = shaperFor(rec, anchorCols)
+      val shape: DataFrame => DataFrame = df => aligned(renamed(df))
+      val anchorMasked = SqlDml.maskComments(anchorText)
+      val recMasked = SqlDml.maskComments(recText)
+      // base relations the term/anchor read THROUGH helpers too — a term
+      // reading `edges` (a helper over orders join lineitem) reads orders
+      val recReads = textReads(recMasked)
+      val anchorReads = textReads(anchorMasked)
+
+      // batch 0: the ordinary fixpoint over the initial base state
+      // (deletes at batch 0 simply never appear in the state) — or, on
+      // RESUME, the imported closure becomes the single accumulator leg
+      // (anchor runs for its SCHEMA only; .columns analyzes, no job)
+      initialClosure match {
+        case Some(c0raw) =>
+          bind(stateMap(startBatch - 1, startBatch - 1))
+          anchorCols = renamed(s.sql(anchorText)).columns.toSeq
+          // re-home the imported closure into THIS child session: the
+          // loop binds frontier temp views via the frame's OWN session,
+          // and a caller-session frame would bind into the wrong catalog
+          val c0 = s.createDataFrame(c0raw.rdd, c0raw.schema)
+          // reset-style import: the closure is NOT a delta — crediting
+          // it to deltaRows would swamp the "checkpoint I/O linear in
+          // delta" diagnostic on every resumed run
+          fp.reset(shape(c0))
+        case None =>
+          bind(stateMap(0, 0), materialize = true)
+          val a = renamed(s.sql(anchorText)).distinct()
+          anchorCols = a.columns.toSeq
+          fp.push(a).foreach(f => fp.loop(s, rec.name, recText, shape, f, maxIters))
+      }
+
+      /** Evaluate the recursive term with r bound to the closure and the
+        * base relations bound per `state`. */
+      def evalTerm(state: Map[String, DataFrame], r: DataFrame): DataFrame = {
+        bind(state)
+        // every call site binds the ACCUMULATOR as r — its checkpointed
+        // legs carry exact stats, so the term's joins plan from real sizes
+        r.createOrReplaceTempView(rec.name)
+        shape(s.sql(recText))
+      }
+      // the empty closure is re-analyzed against the CURRENT bindings:
+      // a frame kept from batch 0 could read a helper copy that a later
+      // batch's re-materialization has freed
+      def closure: DataFrame =
+        if (fp.hasAcc) fp.acc else renamed(s.sql(anchorText)).limit(0)
+
+      (math.max(1, startBatch) until batches.size).foreach { k =>
+        // ---- phase A: deletes (applied before this batch's inserts) --
+        val delSpec = deletesAt.getOrElse(k, Map.empty)
+        if (delSpec.nonEmpty && fp.hasAcc) {
+          val preDel = stateMap(k - 1, k - 1)
+          val postDel = stateMap(k - 1, k)
+          // deleted rows per relation: present before, matched now
+          def deletedRows(t: String): DataFrame =
+            stateOf(t, k - 1, k - 1).filter(delSpec(t))
+          // over-delete seed: derivations that USED a deleted row — the
+          // per-relation delta binding, deleted rows as the delta,
+          // everything else at the PRE-delete state, r at the closure
+          val seedParts =
+            delSpec.keys.toSeq.filter(recReads).map { t =>
+              evalTerm(preDel + (t -> deletedRows(t)), closure)
+            } ++
+            delSpec.keys.toSeq.filter(anchorReads).map { t =>
+              bind(preDel + (t -> deletedRows(t)))
+              renamed(s.sql(anchorText))
+            }
+          if (seedParts.nonEmpty) {
+            // propagate marks over the POST-delete base: rows derivable
+            // from marked rows through surviving edges join the set
+            // (every step intersects the old closure — marks can only
+            // name rows that exist). The mark set runs on its OWN
+            // Fixpoint: each round checkpoints only its delta
+            // (O(|new marks|)), the accumulator stays a lazy union
+            // compacted every compactEvery legs — same delta-only
+            // discipline as the main fixpoint; a deep delete cascade
+            // pays O(|marks|) checkpoint I/O, not O(rounds·|marks|).
+            val marks = new Fixpoint(unionAll = false, ledger)
+            var frontierOpt =
+              marks.push(seedParts.reduce(_ unionAll _).distinct())
+            // the seeds' delta-bound plans are captured above (s.sql
+            // resolves at call time), so the loop can bind the
+            // post-delete state ONCE, materialized — term-read helpers
+            // checkpoint here instead of recomputing per round
+            bind(postDel, materialize = frontierOpt.isDefined)
+            var rounds = 0
+            while (frontierOpt.isDefined) {
+              if (rounds >= maxIters)
+                fail(s"over-delete propagation still growing after $maxIters " +
+                  "rounds — raise maxIters")
+              frontierOpt.get.createOrReplaceTempView(rec.name)
+              // distinct() BEFORE the intersect for the same map-side
+              // combine reason as dedupNew: intersect dedups too, but
+              // only after shuffling the raw step into its join
+              val step = shape(s.sql(recText)).distinct()
+              frontierOpt = marks.push(marks.dedupNew(step.intersect(fp.acc)))
+              // count productive mark rounds on the marks Fixpoint itself
+              // (push() alone never bumps rounds — only loop() does), so
+              // absorb() folds the DRed rounds into the run's Stats as
+              // the scaladoc promises
+              if (frontierOpt.isDefined) marks.rounds += 1
+              rounds += 1
+            }
+            // an empty seed marks nothing: the closure is untouched, so
+            // skip the reset (it would re-checkpoint the whole
+            // accumulator) and the re-derive (it would add nothing)
+            if (marks.hasAcc) {
+              // survivors replace the accumulator; then RE-DERIVE: one
+              // support probe over the survivors + the anchor re-seeds
+              // every marked row that still has a derivation, and the
+              // ordinary loop does the rest
+              val survivors = fp.acc.except(marks.acc)
+              fp.absorb(marks)
+              fp.reset(survivors)
+              bind(postDel)
+              val reSeed = fp.dedupNew(
+                evalTerm(postDel, fp.acc).unionAll {
+                  bind(postDel)
+                  renamed(s.sql(anchorText))
+                })
+              // materialize term-read helpers only when the loop will
+              // actually run — an empty re-seed (nothing to re-derive)
+              // must not pay a helper checkpoint job
+              fp.push(reSeed).foreach { f =>
+                bind(postDel, materialize = true)
+                fp.loop(s, rec.name, recText, shape, f, maxIters)
+              }
             }
           }
         }
-      }
-      // ---- phase B: inserts ---------------------------------------
-      val cum = stateMap(k, k)
-      val changed = changing.filter(t => batches(k).contains(t))
-      // passes for relations the term never reads would re-derive
-      // exactly acc (their delta binding is invisible to the plan) —
-      // skip the jobs, the except() would discard the rows anyway
-      val readByTerm = changed.filter(recReads)
-      def insertedRows(t: String): DataFrame = {
-        val ins = base(t).filter(batches(k)(t))
-        delFilter(t, k).map(f => ins.filter(!f)).getOrElse(ins)
-      }
-      val recursiveParts: Seq[DataFrame] =
-        if (deltaLinear)
-          // one pass per changed relation, that relation at its DELTA:
-          // every derivation using ≥1 new tuple of it appears here
-          // (other relations at FULL new state)
-          readByTerm.map(t => evalTerm(cum + (t -> insertedRows(t)), closure))
-        else if (readByTerm.nonEmpty)
-          Seq(evalTerm(cum, closure)) // full-width delta round — always sound
-        else Nil
-      // anchor deltas: only when the anchor actually reads a changed
-      // relation (otherwise it re-derives the same seeds, which the
-      // except() would discard anyway — skip the job)
-      val anchorParts: Seq[DataFrame] =
-        if (changed.exists(anchorReads)) {
-          bind(cum)
-          Seq(renamed(s.sql(anchorText)))
-        } else Nil
-      val parts = recursiveParts ++ anchorParts
-      if (parts.nonEmpty) {
-        val seed = fp.dedupNew(parts.reduce(_ unionAll _))
-        // the continuing loop evaluates over the full new state;
-        // term-read helpers materialize only when the seed is
-        // non-empty — a quiet batch pays no helper checkpoint job
-        fp.push(seed).foreach { f =>
-          bind(cum, materialize = true)
-          fp.loop(s, rec.name, recText, shape, f, maxIters)
+        // ---- phase B: inserts ---------------------------------------
+        val cum = stateMap(k, k)
+        val changed = changing.filter(t => batches(k).contains(t))
+        // passes for relations the term never reads would re-derive
+        // exactly acc (their delta binding is invisible to the plan) —
+        // skip the jobs, the except() would discard the rows anyway
+        val readByTerm = changed.filter(recReads)
+        def insertedRows(t: String): DataFrame = {
+          val ins = base(t).filter(batches(k)(t))
+          delFilter(t, k).map(f => ins.filter(!f)).getOrElse(ins)
+        }
+        val recursiveParts: Seq[DataFrame] =
+          if (deltaLinear)
+            // one pass per changed relation, that relation at its DELTA:
+            // every derivation using ≥1 new tuple of it appears here
+            // (other relations at FULL new state)
+            readByTerm.map(t => evalTerm(cum + (t -> insertedRows(t)), closure))
+          else if (readByTerm.nonEmpty)
+            Seq(evalTerm(cum, closure)) // full-width delta round — always sound
+          else Nil
+        // anchor deltas: only when the anchor actually reads a changed
+        // relation (otherwise it re-derives the same seeds, which the
+        // except() would discard anyway — skip the job)
+        val anchorParts: Seq[DataFrame] =
+          if (changed.exists(anchorReads)) {
+            bind(cum)
+            Seq(renamed(s.sql(anchorText)))
+          } else Nil
+        val parts = recursiveParts ++ anchorParts
+        if (parts.nonEmpty) {
+          val seed = fp.dedupNew(parts.reduce(_ unionAll _))
+          // the continuing loop evaluates over the full new state;
+          // term-read helpers materialize only when the seed is
+          // non-empty — a quiet batch pays no helper checkpoint job
+          fp.push(seed).foreach { f =>
+            bind(cum, materialize = true)
+            fp.loop(s, rec.name, recText, shape, f, maxIters)
+          }
         }
       }
+      () => {
+        bind(stateMap(batches.size - 1, batches.size - 1))
+        val result =
+          if (!fp.hasAcc) renamed(s.sql(anchorText)).limit(0)
+          else fp.acc
+        result.createOrReplaceTempView(rec.name)
+        // post-fixpoint helpers (they read r) bind last, for the outer query
+        helpersAfter.foreach(bindHelper(s, ledger, _, materialize = false))
+        s.sql(outerText)
+      }
     }
-    bind(stateMap(batches.size - 1, batches.size - 1))
-    val result =
-      if (!fp.hasAcc) renamed(s.sql(anchorText)).limit(0)
-      else fp.acc
-    result.createOrReplaceTempView(rec.name)
-    // post-fixpoint helpers (they read r) bind last, for the outer query
-    helpersAfter.foreach(bindHelper(s, _, materialize = false))
-    (s.sql(outerText), fp.stats)
+    (df, fp.stats)
   }
 }

@@ -103,6 +103,16 @@ object GraftBridge {
   def localCheckpointStats(df: DataFrame): DataFrame =
     localCheckpointCounted(df)._1
 
+  /** The RDDs behind every `LogicalRDD` leaf of `df`'s analyzed plan,
+    * subqueries and resolved temp views included: the RDDs executing
+    * `df` reads directly. A caller that frees checkpoints it created
+    * must keep these — a local checkpoint's blocks are never
+    * recomputed, so freeing one that a live plan still reads fails
+    * that plan's next job. */
+  def rddsRead(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+      .collectWithSubqueries { case l: LogicalRDD => l.rdd }
+
   /** Register a function builder into an EXISTING session's registry
     * (`sessionState` is `private[sql]`; new sessions should prefer
     * `spark.sql.extensions=graft.GraftExtensions`). */

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.streaming.RecursiveSql
 
@@ -393,5 +395,150 @@ class RecursiveSqlSpec extends AnyFunSuite {
       """WITH RECURSIVE r AS (
         | SELECT 1 AS n UNION ALL SELECT 2 AS n
         |) SELECT n FROM r""".stripMargin).contains("plain WITH"))
+  }
+
+  // ---- what one call leaves behind --------------------------------
+  // Suites share one SparkContext and run in parallel, so these tests
+  // look only at their own call's frames, views and RDDs — never at
+  // global storage totals.
+
+  private val edgeSql =
+    """WITH RECURSIVE r(x) AS (
+      | SELECT 1
+      | UNION
+      | SELECT e.dst FROM edges e JOIN r ON r.x = e.src
+      |), edges(src, dst) AS (
+      | SELECT 1, 2 UNION ALL SELECT 2, 3 UNION ALL SELECT 3, 1
+      | UNION ALL SELECT 7, 8
+      |)
+      |""".stripMargin
+
+  private def temporaryViews(df: DataFrame): Seq[String] =
+    df.sparkSession.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSeq
+
+  /** Whether RDD `id` is still persisted (its blocks not yet freed). */
+  private def persisted(id: Int): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(id)
+
+  private def ints(df: DataFrame): Seq[Int] = df.collect().map(_.getInt(0)).sorted.toSeq
+
+  test("a call leaves no temporary view in its session") {
+    val (df, _) = RecursiveSql.runWithStats(spark, d,
+      edgeSql + "SELECT x FROM r")
+    assert(temporaryViews(df).isEmpty)
+    assert(ints(df) == Seq(1, 2, 3))
+    val (inc, _) = RecursiveSql.runIncrementalWithStats(spark, d, reachSql,
+      Seq(Map("orders" -> (col("o_orderkey") % 2 === 0)),
+        Map("orders" -> (col("o_orderkey") % 2 === 1))), deltaLinear = true)
+    assert(temporaryViews(inc).isEmpty)
+    assert(inc.collect().nonEmpty)
+  }
+
+  test("only the tables the statement reads are loaded") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rec_supplier")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(d, "supplier.parquet"),
+      dir.resolve("supplier.parquet"))
+    val sql =
+      """WITH RECURSIVE r AS (
+        | SELECT s_suppkey AS k FROM supplier WHERE s_suppkey <= 3
+        | UNION
+        | SELECT s.s_suppkey AS k FROM supplier s JOIN r ON s.s_suppkey = r.k + 1
+        |)
+        |SELECT k FROM r""".stripMargin
+    val want = Tables.supplier(spark, d).select("s_suppkey").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    def keys(df: DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+    assert(keys(RecursiveSql.run(spark, dir.toString, sql)) == want)
+    assert(keys(RecursiveSql.runIncremental(spark, dir.toString, sql,
+      Seq(Map("supplier" -> (col("s_suppkey") % 2 === 0)),
+        Map("supplier" -> (col("s_suppkey") % 2 === 1))))) == want)
+  }
+
+  test("a materialized helper the result does not read is freed on return") {
+    val (df, _, ledger) = RecursiveSql.runWithLedger(spark, d,
+      edgeSql + "SELECT x FROM r", maxIters = 100)
+    val edges = ledger.helpers("edges").id
+    assert(!persisted(edges), s"helper checkpoint rdd $edges still holds blocks")
+    // the accumulator legs the result reads stay, and it still runs
+    val legs = GraftBridge.rddsRead(df).map(_.id)
+    assert(legs.nonEmpty && legs.forall(persisted), legs)
+    assert(ints(df) == Seq(1, 2, 3))
+  }
+
+  // guards against freeing too much: each result runs twice after the
+  // call returns and must give the right rows both times
+  test("guard: an outer query reading a materialized helper keeps it") {
+    val (df, _, ledger) = RecursiveSql.runWithLedger(spark, d,
+      edgeSql + "SELECT r.x, e.dst FROM r JOIN edges e ON e.src = r.x",
+      maxIters = 100)
+    assert(persisted(ledger.helpers("edges").id))
+    val want = Seq((1, 2), (2, 3), (3, 1))
+    (1 to 2).foreach { _ =>
+      assert(df.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq == want)
+    }
+  }
+
+  test("guard: an empty recursion whose anchor reads a materialized helper") {
+    val df = RecursiveSql.run(spark, d,
+      """WITH RECURSIVE r(x) AS (
+        | SELECT src FROM edges WHERE src > 100
+        | UNION
+        | SELECT e.dst FROM edges e JOIN r ON r.x = e.src
+        |), edges(src, dst) AS (
+        | SELECT 1, 2 UNION ALL SELECT 2, 3
+        |)
+        |SELECT x FROM r""".stripMargin)
+    (1 to 2).foreach(_ => assert(df.collect().isEmpty))
+  }
+
+  test("guard: a resumed run whose initial closure is an earlier call's result") {
+    val batches = Seq(
+      Map("orders" -> (col("o_orderkey") % 3 === 0),
+        "lineitem" -> (col("l_orderkey") % 3 === 0)),
+      Map("orders" -> (col("o_orderkey") % 3 === 1),
+        "lineitem" -> (col("l_orderkey") % 3 === 1)),
+      Map("orders" -> (col("o_orderkey") % 3 === 2),
+        "lineitem" -> (col("l_orderkey") % 3 === 2)))
+    def nodes(df: DataFrame) = df.collect().map(_.getString(0)).sorted.toSeq
+    // the closure itself is the result, so the resumed call's
+    // initialClosure reads the earlier call's accumulator legs
+    val sql = helperReachSql.replace("SELECT kind, n FROM reached", "SELECT node FROM r")
+    val want = nodes(RecursiveSql.runIncremental(spark, d, sql, batches,
+      deltaLinear = true))
+    val partial = RecursiveSql.runIncremental(spark, d, sql, batches.take(2),
+      deltaLinear = true)
+    val resumed = RecursiveSql.runIncremental(spark, d, sql, batches,
+      deltaLinear = true, initialClosure = Some(partial), startBatch = 2)
+    assert(want.nonEmpty)
+    (1 to 2).foreach { _ =>
+      assert(nodes(resumed) == want)
+      assert(nodes(partial).toSet.subsetOf(want.toSet))
+    }
+  }
+
+  test("the result plans under the caller's AQE setting, on or off") {
+    val key = "spark.sql.adaptive.enabled"
+    val outer = "SELECT x, COUNT(*) AS n FROM r GROUP BY x"
+    Seq("true", "false").foreach { aqe =>
+      val caller = spark.newSession()
+      caller.conf.set(key, aqe)
+      val results = Seq(
+        RecursiveSql.run(caller, d, edgeSql + outer),
+        RecursiveSql.runIncremental(caller, d,
+          """WITH RECURSIVE r(x) AS (
+            | SELECT CAST(1 AS BIGINT)
+            | UNION
+            | SELECT c.c_custkey + 1 FROM customer c
+            | JOIN r ON r.x = c.c_custkey WHERE c.c_custkey < 3
+            |)
+            |""".stripMargin + outer,
+          Seq(Map.empty[String, Column])))
+      results.foreach { df =>
+        assert(df.sparkSession.conf.get(key) == aqe)
+        assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec] ==
+          (aqe == "true"), df.queryExecution.executedPlan)
+        assert(df.collect().map(_.getLong(1)).toSeq == Seq(1L, 1L, 1L))
+      }
+    }
   }
 }
