@@ -31,10 +31,7 @@ object ProfIQ10 {
       val tree = IncrementalQueries.q10Tree
       for (k <- 1 to tree.size) {
         time(s"tree depth $k (${tree(k - 1).relation})") {
-          // sourceFiltered like the real query — otherwise the typed
-          // predicate re-filter charges the prefixes with work the
-          // production path doesn't do
-          DeltaEngine.runBatch(tree.take(k), logs, sourceFiltered = true)
+          DeltaEngine.runBatch(tree.take(k), logs)
             .queryExecution.toRdd.count()
         }
       }

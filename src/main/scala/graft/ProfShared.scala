@@ -32,8 +32,7 @@ object ProfShared {
       for (k <- 1 to stages.size) {
         val stats = scala.collection.mutable.Buffer[DeltaEngine.NodeStats]()
         val n = time(s"depth $k (${stages(k - 1).name})") {
-          DeltaEngine.runTree(stages.take(k), logs, sourceFiltered = true,
-              stats = Some(stats))
+          DeltaEngine.runTree(stages.take(k), logs, stats = Some(stats))
             .queryExecution.toRdd.count()
         }
         println(s"      rows out: $n; " + stats.map(s =>

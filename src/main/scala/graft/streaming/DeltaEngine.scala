@@ -14,9 +14,18 @@ import org.apache.spark.sql.Column
   * deltas propagate root→leaf; the leaf emits signed deltas of the
   * full join result which a signed-sum aggregate folds incrementally.
   *
+  * Changelogs arrive FILTERED: a local predicate reads only its own
+  * tuple, so it is applied once, at the changelog source — the `where`
+  * Column pushed into the parquet scan (`IncrementalQueries.changelog`)
+  * or `SqlCompiler.Compiled.eventFilter` on a raw event stream — and
+  * the engine folds every own event it receives. That equals the
+  * reference's per-operator check (Q10OrdersProcessFunction.java:41-45)
+  * because the predicate treats inserts and deletes alike.
+  *
   * The reference's quirks are deliberately FIXED here (SURVEY.md
   * "Reference quirks" Q1–Q6): content-equality dedup (Q1/Q2), matched
-  * retraction tags (Q3), predicate orthogonal to insert/delete (Q4),
+  * retraction tags (Q3), a predicate orthogonal to insert/delete (Q4 —
+  * the source filter drops a failing tuple's insert AND its delete),
   * `aliveParents > 0` rather than `== 1` (Q6), and the aggregate
   * grouped by the query's GROUP BY columns rather than the leaf
   * routing key (Q5).
@@ -73,8 +82,6 @@ object DeltaEngine {
     *                    (also the node's routing key)
     * @param nextKeyCol  column of the MERGED row to key the next hop by
     *                    (reference: setKey re-keying, Payload.java:35-37)
-    * @param predicate   local filter, applied orthogonally to the
-    *                    action (fix of quirk Q4)
     * @param isRoot      true for the tree root (no parent input)
     * @param setSemantics root-node dedup: emit only on 0→1 / 1→0
     *                    transitions (reference J0)
@@ -88,16 +95,10 @@ object DeltaEngine {
     *                    flag (liveness gating is already semi-join
     *                    semantics when the parent is a 0/1 key set).
     */
-  /** Shared no-op predicate; [[predicatePushdown]] recognizes it by
-    * reference and skips the per-event deserialize+uncanon filter a
-    * fresh `_ => true` lambda would silently cost. */
-  val NoPredicate: Map[String, String] => Boolean = _ => true
-
   final case class NodeSpec(
       relation: String,
       childKeyCol: String,
       nextKeyCol: String,
-      predicate: Map[String, String] => Boolean = NoPredicate,
       isRoot: Boolean = false,
       setSemantics: Boolean = false,
       antiParent: Boolean = false,
@@ -232,7 +233,7 @@ object DeltaEngine {
     * from / exports to the immutable [[NState]] at the state-store
     * boundary. Mutable internally because this is the engine's hot
     * loop (hundreds of thousands of events per replay). */
-  private final class NodeFold(spec: NodeSpec, init: NState, preFiltered: Boolean) {
+  private final class NodeFold(spec: NodeSpec, init: NState) {
     private val children = new java.util.HashMap[String, Int]()
     init.children.foreach { case (k, v) => children.put(k, v) }
     private var aliveParents: Int = init.aliveParents
@@ -282,11 +283,7 @@ object DeltaEngine {
         }
         aliveParents = newAlive
         if (ev.tag > 0) parentCanon = ev.row
-      } else if (preFiltered || spec.predicate(uncanon(ev.row))) {
-        // `preFiltered` short-circuits the predicate: the run drivers
-        // already applied it map-side (predicatePushdown), and the
-        // uncanon here would otherwise allocate a Map per event in the
-        // engine's hottest loop.
+      } else {
         val c = ev.row
         val before = children.getOrDefault(c, 0)
         val after = before + ev.tag * ev.mult
@@ -350,23 +347,19 @@ object DeltaEngine {
   }
 
   private def foldKey(spec: NodeSpec, events: Iterator[Evt], init: NState,
-                      exportState: Boolean, preFiltered: Boolean,
+                      exportState: Boolean,
                       preSorted: Boolean = false): (Iterator[Evt], Option[NState]) = {
-    val fold = new NodeFold(spec, init, preFiltered)
+    val fold = new NodeFold(spec, init)
     val out = foldEvents(spec.nextKeyCol, events, preSorted, fold.feed)
     (out, if (exportState) Some(fold.exportState) else None)
   }
 
   /** Fold a whole per-key event sequence (sorted deterministically)
     * from empty state; emissions become parent deltas for the next
-    * node, re-keyed by `nextKeyCol`. `preFiltered = true` asserts
-    * own-changelog events already passed `spec.predicate` (the run
-    * drivers guarantee it via [[predicatePushdown]]) so the fold skips
-    * the per-event re-evaluation. */
-  def processKeyBatch(spec: NodeSpec, preFiltered: Boolean = false,
-                      preSorted: Boolean = false)(
+    * node, re-keyed by `nextKeyCol`. */
+  def processKeyBatch(spec: NodeSpec, preSorted: Boolean = false)(
       key: String, events: Iterator[Evt]): Iterator[Evt] =
-    foldKey(spec, events, emptyState, exportState = false, preFiltered, preSorted)._1
+    foldKey(spec, events, emptyState, exportState = false, preSorted)._1
 
   // ---- pair (shared-dimension product) stages ----------------------
 
@@ -389,11 +382,10 @@ object DeltaEngine {
     * order-independent.
     *
     * Sides ride the [[Evt.fromParent]] flag: own/left events are
-    * `false` (and, when the left input is a base changelog, pass the
-    * spec predicate), paired/right events are `true` — the same wire
+    * `false`, paired/right events are `true` — the same wire
     * format as liveness stages, so pair stages compose freely with
     * them in one tree. */
-  private final class PairFold(spec: NodeSpec, init: PairNState, preFiltered: Boolean) {
+  private final class PairFold(spec: NodeSpec, init: PairNState) {
     // TreeMaps: the cross-merge enumerates the OTHER side per delta in
     // deterministic order, and a sorted map gives that for free —
     // re-sorting a key array per event would pay O(|other|·log) on
@@ -406,7 +398,6 @@ object DeltaEngine {
 
     def feed(ev: Evt, out: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
       val isRight = ev.fromParent
-      if (!isRight && !preFiltered && !spec.predicate(uncanon(ev.row))) return
       val d = ev.tag * ev.mult
       val mine = if (isRight) right else left
       val other = if (isRight) left else right
@@ -442,22 +433,20 @@ object DeltaEngine {
   }
 
   private def foldPairKey(spec: NodeSpec, events: Iterator[Evt], init: PairNState,
-                          exportState: Boolean, preFiltered: Boolean,
+                          exportState: Boolean,
                           preSorted: Boolean = false): (Iterator[Evt], Option[PairNState]) = {
-    val fold = new PairFold(spec, init, preFiltered)
+    val fold = new PairFold(spec, init)
     val out = foldEvents(spec.nextKeyCol, events, preSorted, fold.feed)
     (out, if (exportState) Some(fold.exportState) else None)
   }
 
-  def processPairKeyBatch(spec: NodeSpec, preFiltered: Boolean = false,
-                          preSorted: Boolean = false)(
+  def processPairKeyBatch(spec: NodeSpec, preSorted: Boolean = false)(
       key: String, events: Iterator[Evt]): Iterator[Evt] =
-    foldPairKey(spec, events, emptyPairState, exportState = false, preFiltered, preSorted)._1
+    foldPairKey(spec, events, emptyPairState, exportState = false, preSorted)._1
 
   /** Streaming flavor — state carried across micro-batches; TTL
     * eviction identical to [[processKeyStream]]. */
-  def processPairKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None,
-      preFiltered: Boolean = false)(
+  def processPairKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None)(
       key: String, events: Iterator[Evt],
       state: org.apache.spark.sql.streaming.GroupState[PairNState]): Iterator[Evt] = {
     if (state.hasTimedOut) {
@@ -465,7 +454,7 @@ object DeltaEngine {
       Iterator.empty
     } else {
       val (out, st) = foldPairKey(spec, events,
-        state.getOption.getOrElse(emptyPairState), exportState = true, preFiltered)
+        state.getOption.getOrElse(emptyPairState), exportState = true)
       state.update(st.get)
       ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
       out
@@ -549,25 +538,23 @@ object DeltaEngine {
   }
 
   /** [[processKeyStream]] under an EVENT-TIME TTL (see [[EventTimeTtl]]). */
-  def processKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl,
-      preFiltered: Boolean = false)(
+  def processKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl)(
       key: String, events: Iterator[EvtWithTs],
       state: org.apache.spark.sql.streaming.GroupState[NState]): Iterator[Evt] =
     withEventTtl(ttl, events, state, { live =>
       val (out, st) = foldKey(spec, live,
-        state.getOption.getOrElse(emptyState), exportState = true, preFiltered)
+        state.getOption.getOrElse(emptyState), exportState = true)
       state.update(st.get)
       out
     })
 
   /** [[processPairKeyStream]] under an EVENT-TIME TTL. */
-  def processPairKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl,
-      preFiltered: Boolean = false)(
+  def processPairKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl)(
       key: String, events: Iterator[EvtWithTs],
       state: org.apache.spark.sql.streaming.GroupState[PairNState]): Iterator[Evt] =
     withEventTtl(ttl, events, state, { live =>
       val (out, st) = foldPairKey(spec, live,
-        state.getOption.getOrElse(emptyPairState), exportState = true, preFiltered)
+        state.getOption.getOrElse(emptyPairState), exportState = true)
       state.update(st.get)
       out
     })
@@ -733,35 +720,11 @@ object DeltaEngine {
       .as[Evt]
   }
 
-  /** Run the tree in batch-simulation mode: each node is a
-    * `groupByKey(joinKey).flatMapGroups` over the union of the
-    * parent's deltas and the node's own changelog — the exact
-    * micro-batch the streaming engine would process, replayed in one
-    * batch. Returns the leaf's signed join-result deltas.
-    */
-  /** Own-changelog events failing the node's local predicate never
-    * change state and never emit (step() drops them), so they are
-    * filtered BEFORE the shuffle — the reference's pre-state
-    * `validTuple` gate (Q10OrdersProcessFunction.java:102), applied
-    * map-side. For a selective leaf predicate this removes most of the
-    * largest relation's events from the exchange.
-    *
-    * This is a typed filter (deserialize + uncanon per event), so it
-    * is skipped when the predicate is [[NoPredicate]] — and callers
-    * whose changelogs are ALREADY predicate-filtered at the source
-    * (a `Column` filter pushed into the parquet scan, see
-    * `IncrementalQueries.changelog`) skip it wholesale via
-    * `sourceFiltered = true`: codegen'd scan-side filtering beats a
-    * post-hoc object filter at any scale. */
-  private def predicatePushdown(spec: NodeSpec, own: Dataset[Evt]): Dataset[Evt] =
-    if (spec.predicate eq NoPredicate) own
-    else own.filter((e: Evt) => spec.predicate(uncanon(e.row)))
-
   /** Per-node volume counters from one [[runBatch]] execution —
-    * `events` is what entered the node's fold (own + parent deltas,
-    * post-pushdown), `emitted` what it sent downstream. The
-    * events/emitted ratio per hop is the first thing to read when a
-    * tree is slow or skewed at scale.
+    * `events` is what entered the node's fold (own + parent deltas),
+    * `emitted` what it sent downstream. The events/emitted ratio per
+    * hop is the first thing to read when a tree is slow or skewed at
+    * scale.
     *
     * CAVEAT: these are Spark accumulators incremented inside a
     * TRANSFORMATION, so task retries and speculative duplicates
@@ -772,31 +735,31 @@ object DeltaEngine {
                              events: org.apache.spark.util.LongAccumulator,
                              emitted: org.apache.spark.util.LongAccumulator)
 
+  /** Run the tree in batch-simulation mode: each node is a
+    * `groupByKey(joinKey).flatMapGroups` over the union of the
+    * parent's deltas and the node's own changelog — the exact
+    * micro-batch the streaming engine would process, replayed in one
+    * batch. Returns the leaf's signed join-result deltas.
+    */
   def runBatch(specs: Seq[NodeSpec], changelogs: Map[String, Dataset[Evt]],
-               sourceFiltered: Boolean = false,
                stats: Option[scala.collection.mutable.Buffer[NodeStats]] = None): Dataset[Evt] =
-    runTree(chainStages(specs), changelogs, sourceFiltered, stats)
+    runTree(chainStages(specs), changelogs, stats)
 
-  /** [[runBatch]] generalized to BRANCHING trees (see [[Stage]]): the
-    * stages run in order, each one a `groupByKey` on its own FK; the
-    * last stage's emissions are the full join-result deltas. A stage
-    * output referenced by several consumers (a shared dimension) is
-    * recomputed per consumer up to Spark's exchange reuse — persist it
-    * upstream if that ever matters. */
   /** Assemble one stage's input event stream: its own changelog (base
     * relation or upstream emissions re-flagged), salted if configured,
-    * unioned with the parent/pair deltas. Shared by [[runTree]],
-    * [[runStreamTree]] and [[stateMetrics]] — the wiring IS the tree's
-    * semantics, so there must be exactly one copy of it. */
+    * unioned with the parent/pair deltas. Shared by every stage loop
+    * ([[runTree]], [[runTreeShared]], [[stateMetrics]],
+    * [[runStreamTree]], [[runStreamTreeTws]]) — the wiring IS the
+    * tree's semantics, so there must be exactly one copy of it. Base
+    * changelogs are taken as given: local predicates were applied at
+    * their source. */
   private def stageInput(st: Stage, changelogs: Map[String, Dataset[Evt]],
-      sourceFiltered: Boolean,
       outputs: scala.collection.Map[String, Dataset[Evt]]): Dataset[Evt] = {
     val spec = st.spec
     val own = st.ownStage match {
       case None =>
-        val base = changelogs.getOrElse(spec.relation, throw new IllegalArgumentException(
+        changelogs.getOrElse(spec.relation, throw new IllegalArgumentException(
           s"stage '${st.name}': no changelog for relation '${spec.relation}'"))
-        if (sourceFiltered) base else predicatePushdown(spec, base)
       case Some(ref) =>
         // the upstream stage's emissions become this stage's OWN
         // changelog (the next conjunct of a multi-parent node): they
@@ -830,67 +793,64 @@ object DeltaEngine {
     }.getOrElse(ownS)
   }
 
+  /** THE batch fold of one stage, shared by [[runTree]],
+    * [[runTreeShared]] and [[stateMetrics]]: group the stage input by
+    * key and fold each group with the stage's liveness or pair fold,
+    * counting events in and emissions out when `stats` is given.
+    *
+    * Intra-group evtOrder rides the shuffle's Tungsten sort (binary,
+    * spill-safe) instead of a per-key toArray + JVM comparator sort
+    * in the fold — `fromParent DESC` puts parent deltas first,
+    * matching evtOrder's parent-before-own rule. Grouping is BY THE
+    * `key` COLUMN (groupBy(col).as[K, T]), not groupByKey(_.key):
+    * the lambda form appends its key via a per-event object
+    * deserialization pass BEFORE the exchange, while the column form
+    * groups the serialized rows directly — each stage then
+    * deserializes every event exactly once, at the fold. */
+  private def foldStage(st: Stage, events: Dataset[Evt],
+      stats: Option[NodeStats]): Dataset[Evt] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val fold: (String, Iterator[Evt]) => Iterator[Evt] =
+      if (st.pairStage.isDefined) processPairKeyBatch(st.spec, preSorted = true)
+      else processKeyBatch(st.spec, preSorted = true)
+    events.toDF()
+      .groupBy(col("key")).as[String, Evt]
+      .flatMapSortedGroups(col("seq"), col("fromParent").desc, col("row"))(
+        (k: String, it: Iterator[Evt]) => stats match {
+          case None => fold(k, it)
+          case Some(s) =>
+            fold(k, it.map { e => s.events.add(1); e }).map { e => s.emitted.add(1); e }
+        })
+  }
+
+  /** [[runBatch]] generalized to BRANCHING trees (see [[Stage]]): the
+    * stages run in order, each one a `groupByKey` on its own FK; the
+    * last stage's emissions are the full join-result deltas. A stage
+    * output referenced by several consumers (a shared dimension) is
+    * recomputed per consumer up to Spark's exchange reuse — persist it
+    * upstream if that ever matters. */
   def runTree(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
-              sourceFiltered: Boolean = false,
               stats: Option[scala.collection.mutable.Buffer[NodeStats]] = None): Dataset[Evt] = {
     checkStages(stages)
-    val spark = changelogs.head._2.sparkSession
-    import spark.implicits._
+    val sc = changelogs.head._2.sparkSession.sparkContext
     val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
     stages.foreach { st =>
-      val spec = st.spec
-      val events = stageInput(st, changelogs, sourceFiltered, outputs)
       val nodeStats = stats.map { buf =>
         val s = NodeStats(st.name,
-          spark.sparkContext.longAccumulator(s"graft.${st.name}.events"),
-          spark.sparkContext.longAccumulator(s"graft.${st.name}.emitted"))
+          sc.longAccumulator(s"graft.${st.name}.events"),
+          sc.longAccumulator(s"graft.${st.name}.emitted"))
         buf += s
         s
       }
-      // intra-group evtOrder rides the shuffle's Tungsten sort (binary,
-      // spill-safe) instead of a per-key toArray + JVM comparator sort
-      // in the fold — `fromParent DESC` puts parent deltas first,
-      // matching evtOrder's parent-before-own rule. Grouping is BY THE
-      // `key` COLUMN (groupBy(col).as[K, T]), not groupByKey(_.key):
-      // the lambda form appends its key via a per-event object
-      // deserialization pass BEFORE the exchange, while the column form
-      // groups the serialized rows directly — each stage then
-      // deserializes every event exactly once, at the fold.
-      val fold: (String, Iterator[Evt]) => Iterator[Evt] =
-        if (st.pairStage.isDefined) processPairKeyBatch(spec, preFiltered = true, preSorted = true)
-        else processKeyBatch(spec, preFiltered = true, preSorted = true)
-      outputs(st.name) = events.toDF()
-        .groupBy(col("key")).as[String, Evt]
-        .flatMapSortedGroups(col("seq"), col("fromParent").desc, col("row"))(
-          (k: String, it: Iterator[Evt]) => {
-            val out = fold(
-              k, nodeStats.map(s => it.map { e => s.events.add(1); e }).getOrElse(it))
-            nodeStats.map(s => out.map { e => s.emitted.add(1); e }).getOrElse(out)
-          })
+      outputs(st.name) = foldStage(st, stageInput(st, changelogs, outputs), nodeStats)
     }
     outputs(stages.last.name)
   }
 
-  /** One stage's batch fold (no stats instrumentation) — the body of
-    * [[runTree]]'s loop, shared with [[runTreeShared]]. */
-  private def runStage(st: Stage, changelogs: Map[String, Dataset[Evt]],
-      sourceFiltered: Boolean,
-      outputs: scala.collection.Map[String, Dataset[Evt]]): Dataset[Evt] = {
-    val spark = changelogs.head._2.sparkSession
-    import spark.implicits._
-    val events = stageInput(st, changelogs, sourceFiltered, outputs)
-    val fold: (String, Iterator[Evt]) => Iterator[Evt] =
-      if (st.pairStage.isDefined)
-        processPairKeyBatch(st.spec, preFiltered = true, preSorted = true)
-      else processKeyBatch(st.spec, preFiltered = true, preSorted = true)
-    // column grouping, not groupByKey(_.key) — see [[runTree]]
-    events.toDF().groupBy(col("key")).as[String, Evt]
-      .flatMapSortedGroups(col("seq"), col("fromParent").desc, col("row"))(
-        (k: String, it: Iterator[Evt]) => fold(k, it))
-  }
-
   /** Several stage-plans over (mostly) shared changelogs in ONE batch
-    * evaluation, building each REFERENCE-SHARED stage's Dataset once:
+    * evaluation, building each REFERENCE-SHARED stage's Dataset once
+    * (each stage through the same [[foldStage]] as [[runTree]]):
     * the SQL compiler's outer-join plans reuse the main tree's prefix
     * stages by object identity (the anti plan keeps the pre-parent
     * prefix; the orphan plan, when it exists at all — the leaf-fusion
@@ -907,8 +867,7 @@ object DeltaEngine {
     * same upstream stage outputs) — a plan that rekeys a relation's
     * changelog (the anti plan's boundary parent) never reuses a stage
     * reading it. Returns the union of every plan's leaf deltas. */
-  def runTreeShared(plans: Seq[(Seq[Stage], Map[String, Dataset[Evt]])],
-                    sourceFiltered: Boolean = false): Dataset[Evt] = {
+  def runTreeShared(plans: Seq[(Seq[Stage], Map[String, Dataset[Evt]])]): Dataset[Evt] = {
     require(plans.nonEmpty, "runTreeShared needs at least one plan")
     // per shared stage: (output, own-changelog object, upstream outputs)
     val cache =
@@ -928,7 +887,7 @@ object DeltaEngine {
         outputs(st.name) = hit match {
           case Some((out, _, _)) => out
           case None =>
-            val out = runStage(st, logs, sourceFiltered, outputs)
+            val out = foldStage(st, stageInput(st, logs, outputs), None)
             cache.put(st, (out, ownLog, refs))
             out
         }
@@ -956,15 +915,16 @@ object DeltaEngine {
     *                 bytes, not JVM/RocksDB overhead.
     *
     * Each stage's input is re-derived through the same [[stageInput]]
-    * wiring as [[runTree]] and folded once more with state export, so
-    * the snapshot costs one extra pass per node — fine for a batch
-    * replay/debug loop. The STREAMING twin is free: every stage
+    * wiring and its emissions through the same [[foldStage]] as
+    * [[runTree]]; the input is then folded once more with state
+    * export, so the snapshot costs one extra pass per node — fine for
+    * a batch replay/debug loop. The STREAMING twin is free: every stage
     * already surfaces `numRowsTotal`/`numRowsUpdated` per node in
     * `StreamingQueryProgress.stateOperators` (see [[runStreamTree]]);
     * this frame adds the BYTES/multiplicity detail and a batch-mode
     * answer. */
-  def stateMetrics(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
-                   sourceFiltered: Boolean = false): org.apache.spark.sql.DataFrame = {
+  def stateMetrics(stages: Seq[Stage],
+                   changelogs: Map[String, Dataset[Evt]]): org.apache.spark.sql.DataFrame = {
     checkStages(stages)
     val spark = changelogs.head._2.sparkSession
     import spark.implicits._
@@ -975,29 +935,22 @@ object DeltaEngine {
     val perStage = stages.map { st =>
       val spec = st.spec
       val isPair = st.pairStage.isDefined
-      val events = stageInput(st, changelogs, sourceFiltered, outputs)
+      val events = stageInput(st, changelogs, outputs)
       // emissions feed downstream exactly as runTree's would
-      val fold: (String, Iterator[Evt]) => Iterator[Evt] =
-        if (isPair) processPairKeyBatch(spec, preFiltered = true, preSorted = true)
-        else processKeyBatch(spec, preFiltered = true, preSorted = true)
-      outputs(st.name) = events.toDF()
-        .groupBy(col("key")).as[String, Evt]
-        .flatMapSortedGroups(col("seq"), col("fromParent").desc, col("row"))(fold)
+      outputs(st.name) = foldStage(st, events, None)
       // the metrics pass: fold again with state export (foldKey sorts
       // per key itself when not pre-sorted)
       val perKey: Dataset[(Long, Long)] = events.toDF()
         .groupBy(col("key")).as[String, Evt].mapGroups { (_, it) =>
         if (isPair) {
-          val s2 = foldPairKey(spec, it, emptyPairState,
-            exportState = true, preFiltered = true)._2.get
+          val s2 = foldPairKey(spec, it, emptyPairState, exportState = true)._2.get
           val rows = (s2.left.valuesIterator ++ s2.right.valuesIterator)
             .map(c => math.abs(c).toLong).sum
           val bytes = (s2.left.keysIterator ++ s2.right.keysIterator)
             .map(r => utf8Len(r) + 4L).sum
           (rows, bytes)
         } else {
-          val s2 = foldKey(spec, it, emptyState,
-            exportState = true, preFiltered = true)._2.get
+          val s2 = foldKey(spec, it, emptyState, exportState = true)._2.get
           val rows = s2.children.valuesIterator.map(c => math.abs(c).toLong).sum
           val bytes = s2.children.keysIterator.map(r => utf8Len(r) + 4L).sum +
             utf8Len(s2.parentCanon) + 4L
@@ -1018,8 +971,7 @@ object DeltaEngine {
     * — the unbounded-child-set mitigation SURVEY.md §7 flags; events
     * for an evicted key thereafter see empty state (an explicit
     * correctness-for-boundedness trade the caller opts into). */
-  def processKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None,
-      preFiltered: Boolean = false)(
+  def processKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None)(
       key: String, events: Iterator[Evt],
       state: org.apache.spark.sql.streaming.GroupState[NState]): Iterator[Evt] = {
     if (state.hasTimedOut) {
@@ -1027,7 +979,7 @@ object DeltaEngine {
       Iterator.empty
     } else {
       val (out, st) = foldKey(spec, events,
-        state.getOption.getOrElse(emptyState), exportState = true, preFiltered)
+        state.getOption.getOrElse(emptyState), exportState = true)
       state.update(st.get)
       ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
       out
@@ -1066,9 +1018,8 @@ object DeltaEngine {
     */
   def runStream(specs: Seq[NodeSpec], changelogs: Map[String, Dataset[Evt]],
                 stateTtl: Option[java.time.Duration] = None,
-                sourceFiltered: Boolean = false,
                 eventTtl: Option[EventTimeTtl] = None): Dataset[Evt] =
-    runStreamTree(chainStages(specs), changelogs, stateTtl, sourceFiltered, eventTtl)
+    runStreamTree(chainStages(specs), changelogs, stateTtl, eventTtl)
 
   /** [[Evt]] plus its parsed event time — the wire shape of a stage
     * input under an EVENT-TIME TTL: the analyzer requires the
@@ -1104,7 +1055,6 @@ object DeltaEngine {
     * both. */
   def runStreamTree(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
                     stateTtl: Option[java.time.Duration] = None,
-                    sourceFiltered: Boolean = false,
                     eventTtl: Option[EventTimeTtl] = None): Dataset[Evt] = {
     checkStages(stages)
     require(stateTtl.isEmpty || eventTtl.isEmpty,
@@ -1120,30 +1070,30 @@ object DeltaEngine {
     val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
     stages.foreach { st =>
       val spec = st.spec
-      val events = stageInput(st, changelogs, sourceFiltered, outputs)
+      val events = stageInput(st, changelogs, outputs)
       outputs(st.name) =
         (st.pairStage.isDefined, eventTtl) match {
           case (true, Some(t)) =>
-            // column grouping, not groupByKey(_.key) — see [[runTree]]:
+            // column grouping, not groupByKey(_.key) — see [[foldStage]]:
             // the lambda form re-deserializes every event per
             // micro-batch just to re-extract the key column
             withEventTime(events, t).toDF().groupBy(col("key")).as[String, EvtWithTs]
               .flatMapGroupsWithState[PairNState, Evt](OutputMode.Append, timeout)(
                 (k, it, s) =>
-                  processPairKeyStreamEventTtl(spec, t, preFiltered = true)(k, it, s))
+                  processPairKeyStreamEventTtl(spec, t)(k, it, s))
           case (true, None) =>
             events.toDF().groupBy(col("key")).as[String, Evt]
               .flatMapGroupsWithState[PairNState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) => processPairKeyStream(spec, stateTtl, preFiltered = true)(k, it, s))
+                (k, it, s) => processPairKeyStream(spec, stateTtl)(k, it, s))
           case (false, Some(t)) =>
             withEventTime(events, t).toDF().groupBy(col("key")).as[String, EvtWithTs]
               .flatMapGroupsWithState[NState, Evt](OutputMode.Append, timeout)(
                 (k, it, s) =>
-                  processKeyStreamEventTtl(spec, t, preFiltered = true)(k, it, s))
+                  processKeyStreamEventTtl(spec, t)(k, it, s))
           case (false, None) =>
             events.toDF().groupBy(col("key")).as[String, Evt]
               .flatMapGroupsWithState[NState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) => processKeyStream(spec, stateTtl, preFiltered = true)(k, it, s))
+                (k, it, s) => processKeyStream(spec, stateTtl)(k, it, s))
         }
     }
     outputs(stages.last.name)
@@ -1179,8 +1129,7 @@ object DeltaEngine {
     * by the same natural key order. Requires the RocksDB state store
     * provider on the session (transformWithState's documented
     * requirement). */
-  final class TreeNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration],
-      preFiltered: Boolean)
+  final class TreeNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration])
       extends org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode => OM, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -1238,7 +1187,7 @@ object DeltaEngine {
           }
           aliveParents = newAlive
           if (ev.tag > 0) parentCanon = ev.row
-        } else if (preFiltered || spec.predicate(uncanon(ev.row))) {
+        } else {
           val c = ev.row
           val before = if (children.containsKey(c)) children.getValue(c) else 0
           val after = before + ev.tag * ev.mult
@@ -1288,8 +1237,7 @@ object DeltaEngine {
     * CHANGED entries point-write back to the store, instead of
     * re-serializing both whole multisets as one blob. TTL = per-key
     * timer, as in [[TreeNodeProcessor]]. */
-  final class PairNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration],
-      preFiltered: Boolean)
+  final class PairNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration])
       extends org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode => OM, TTLConfig, TimeMode, TimerValues}
 
@@ -1326,7 +1274,7 @@ object DeltaEngine {
       java.util.Arrays.sort(arr, evtOrder)
       val before = PairNState(load(left), load(right))
       val (out, st) = foldPairKey(spec, arr.iterator, before,
-        exportState = true, preFiltered, preSorted = true)
+        exportState = true, preSorted = true)
       sync(left, before.left, st.get.left)
       sync(right, before.right, st.get.right)
       stateTtl.foreach { d =>
@@ -1348,13 +1296,12 @@ object DeltaEngine {
 
   /** [[runStreamTree]] on `transformWithState` — chained
     * [[TreeNodeProcessor]] / [[PairNodeProcessor]] stages in Append
-    * mode over the same [[stageInput]] wiring (predicate pushdown,
-    * branch routing, parent-delta unions all identical; only the
-    * per-node state API changes). Session must use the RocksDB state
+    * mode over the same [[stageInput]] wiring (branch routing, salting
+    * and parent-delta unions all identical; only the per-node state
+    * API changes). Session must use the RocksDB state
     * store provider. */
   def runStreamTreeTws(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
-                       stateTtl: Option[java.time.Duration] = None,
-                       sourceFiltered: Boolean = false): Dataset[Evt] = {
+                       stateTtl: Option[java.time.Duration] = None): Dataset[Evt] = {
     checkStages(stages)
     val spark = changelogs.head._2.sparkSession
     LocalCheckpointFs.install(spark)
@@ -1364,11 +1311,11 @@ object DeltaEngine {
       if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
     val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
     stages.foreach { st =>
-      val events = stageInput(st, changelogs, sourceFiltered, outputs)
+      val events = stageInput(st, changelogs, outputs)
       val processor: org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] =
-        if (st.pairStage.isDefined) new PairNodeProcessor(st.spec, stateTtl, preFiltered = true)
-        else new TreeNodeProcessor(st.spec, stateTtl, preFiltered = true)
-      // column grouping, not groupByKey(_.key) — see [[runTree]]
+        if (st.pairStage.isDefined) new PairNodeProcessor(st.spec, stateTtl)
+        else new TreeNodeProcessor(st.spec, stateTtl)
+      // column grouping, not groupByKey(_.key) — see [[foldStage]]
       outputs(st.name) = events.toDF().groupBy(col("key")).as[String, Evt]
         .transformWithState(processor, timeMode, OutputMode.Append())
     }

@@ -99,13 +99,12 @@ object IncrementalQueries {
     * string is assembled by codegen'd `concat_ws` at ingest — events
     * shuffle as one UTF8String, never as map<string,string>.
     *
-    * `where` is the node's local predicate as a `Column`: applying it
-    * HERE (before canon-building) pushes it into the parquet scan
+    * `where` is the relation's local predicate as a `Column` — its
+    * ONLY spelling: the engine never re-checks it, since it reads only
+    * the row it filters (inserts and deletes alike). Applying it HERE
+    * (before canon-building) pushes it into the parquet scan
     * (`PushedFilters`), so rows failing it are never materialized,
-    * canon-encoded, or shuffled — the Spark-native form of the
-    * engine's predicate pushdown. The caller must keep it equivalent
-    * to the matching NodeSpec.predicate and run the tree with
-    * `sourceFiltered = true`. */
+    * canon-encoded, or shuffled. */
   private[streaming] def changelog(df0: DataFrame, keyCol: String, cols: Seq[String],
                         deleteWhen: Option[org.apache.spark.sql.Column],
                         where: Option[org.apache.spark.sql.Column] = None): Dataset[Evt] = {
@@ -143,20 +142,15 @@ object IncrementalQueries {
   val q10Tree: Seq[NodeSpec] = Seq(
     NodeSpec("nation", "n_nationkey", "n_nationkey", isRoot = true, setSemantics = true),
     NodeSpec("customer", "c_nationkey", "c_custkey"),
-    NodeSpec("orders", "o_custkey", "o_orderkey",
-      predicate = r => {
-        val d = r.getOrElse("o_orderdate", "")
-        d >= dateLo && d < dateHi  // ISO strings compare lexicographically
-      }),
-    NodeSpec("lineitem", "l_orderkey", "l_orderkey",
-      predicate = _.getOrElse("l_returnflag", "") == "R"))
+    NodeSpec("orders", "o_custkey", "o_orderkey"),
+    NodeSpec("lineitem", "l_orderkey", "l_orderkey"))
 
   /** The synthetic Q10 changelog set: insert every row, then delete
     * every lineitem with linenumber 3 and every order with
     * orderkey % 50 == 0 (child retraction AND parent-death fan-out).
-    * Node predicates ride along as scan-pushed `where` filters
-    * (mirroring q10Tree's functional predicates), so the engine runs
-    * with `sourceFiltered = true`. */
+    * Q10's local predicates (the order-date window, return flag 'R')
+    * are the scan-pushed `where` filters of the orders and lineitem
+    * changelogs. */
   def q10Changelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
     "nation" -> changelog(Tables.nation(s, dir), "n_nationkey",
       Seq("n_nationkey", "n_name"), None),
@@ -174,7 +168,7 @@ object IncrementalQueries {
   /** Run the engine over the synthetic changelog and fold the leaf
     * deltas into the Q10 aggregate. */
   def incrementalQ10(s: SparkSession, dir: String): DataFrame =
-    q10Aggregate(runBatch(q10Tree, q10Changelogs(s, dir), sourceFiltered = true))
+    q10Aggregate(runBatch(q10Tree, q10Changelogs(s, dir)))
 
   /** OPT-IN bloom semi-join reduction for the incremental engine: with
     * [[BloomPrefilterConf]] set, drop child-changelog events whose
@@ -237,7 +231,7 @@ object IncrementalQueries {
     val logs = bloomPrefilterChild(q10Changelogs(ss, dir),
       parentRel = "orders", parentChildKey = "o_orderkey", childRel = "lineitem",
       expectedItems = 200000L, fpp = 0.01)
-    q10Aggregate(runBatch(q10Tree, logs, sourceFiltered = true))
+    q10Aggregate(runBatch(q10Tree, logs))
   }
 
   /** The Q10 signed-delta fold (shared by the parquet-changelog and
@@ -266,12 +260,10 @@ object IncrementalQueries {
     * numeric leaf predicate, supplier deletes (parent-death fan-out
     * over that supplier's lineitems) and lineitem deletes. */
   val supplierTree: Seq[NodeSpec] = Seq(
-    NodeSpec("region", "r_regionkey", "r_regionkey", isRoot = true, setSemantics = true,
-      predicate = r => { val n = r.getOrElse("r_name", ""); n == "ASIA" || n == "EUROPE" }),
+    NodeSpec("region", "r_regionkey", "r_regionkey", isRoot = true, setSemantics = true),
     NodeSpec("nation", "n_regionkey", "n_nationkey"),
     NodeSpec("supplier", "s_nationkey", "s_suppkey"),
-    NodeSpec("lineitem", "l_suppkey", "l_suppkey",
-      predicate = r => r.getOrElse("l_quantity", "0").toDouble >= 25.0))
+    NodeSpec("lineitem", "l_suppkey", "l_suppkey"))
 
   def supplierChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
     "region" -> changelog(Tables.region(s, dir), "r_regionkey",
@@ -288,7 +280,7 @@ object IncrementalQueries {
       where = Some(col("l_quantity") >= 25.0)))
 
   def incrementalSupplierRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runBatch(supplierTree, supplierChangelogs(s, dir), sourceFiltered = true)
+    val leaf = runBatch(supplierTree, supplierChangelogs(s, dir))
     val df = leaf.toDF()
     df.select(
         (col("tag") * col("mult")).as("sign"),
@@ -310,10 +302,7 @@ object IncrementalQueries {
     * don't have. */
   def orderRevenueTree(s: SparkSession, dir: String): Seq[NodeSpec] = {
     val rels = TreeCompiler.fromParquet(s, dir, Seq("region", "nation", "customer", "orders"))
-    TreeCompiler.compile(rels, Seq("region", "nation", "customer", "orders"),
-      predicates = Map(
-        "region" -> (r => r.getOrElse("r_name", "") != "AFRICA"),
-        "orders" -> (r => r.getOrElse("o_orderstatus", "") == "F")))
+    TreeCompiler.compile(rels, Seq("region", "nation", "customer", "orders"))
   }
 
   def orderRevenueChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
@@ -331,8 +320,7 @@ object IncrementalQueries {
       where = Some(col("o_orderstatus") === "F")))
 
   def incrementalOrderRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runBatch(orderRevenueTree(s, dir), orderRevenueChangelogs(s, dir),
-      sourceFiltered = true)
+    val leaf = runBatch(orderRevenueTree(s, dir), orderRevenueChangelogs(s, dir))
     val df = leaf.toDF()
     df.select(
         (col("tag") * col("mult")).as("sign"),
@@ -372,7 +360,7 @@ object IncrementalQueries {
   }
 
   def incrementalMonthlyRevenue(s: SparkSession, dir: String): DataFrame =
-    monthlyAggregate(runBatch(q10Tree, q10Changelogs(s, dir), sourceFiltered = true))
+    monthlyAggregate(runBatch(q10Tree, q10Changelogs(s, dir)))
 
   /** The monthly fold over the CONTINUOUS engine's streamed leaf —
     * same oracle as the batch entry, so a per-bucket stream/batch
@@ -428,12 +416,10 @@ object IncrementalQueries {
   }
 
   def incrementalExistsSemi(s: SparkSession, dir: String): DataFrame =
-    existsAggregate(runTree(existsStages(anti = false), existsChangelogs(s, dir),
-      sourceFiltered = true))
+    existsAggregate(runTree(existsStages(anti = false), existsChangelogs(s, dir)))
 
   def incrementalNotExistsAnti(s: SparkSession, dir: String): DataFrame =
-    existsAggregate(runTree(existsStages(anti = true), existsChangelogs(s, dir),
-      sourceFiltered = true))
+    existsAggregate(runTree(existsStages(anti = true), existsChangelogs(s, dir)))
 
   /** A BRANCHING FK tree — the Q10 chain joined with a SECOND
     * dimension branch: nation→customer→orders→lineitem←part. The
@@ -450,17 +436,12 @@ object IncrementalQueries {
       isRoot = true, setSemantics = true)),
     Stage("customer", NodeSpec("customer", "c_nationkey", "c_custkey"),
       parentStage = Some("nation")),
-    Stage("orders", NodeSpec("orders", "o_custkey", "o_orderkey",
-      predicate = r => {
-        val d = r.getOrElse("o_orderdate", "")
-        d >= dateLo && d < dateHi
-      }), parentStage = Some("customer")),
-    Stage("lineitem", NodeSpec("lineitem", "l_orderkey", "l_partkey",
-      predicate = _.getOrElse("l_returnflag", "") == "R"),
+    Stage("orders", NodeSpec("orders", "o_custkey", "o_orderkey"),
+      parentStage = Some("customer")),
+    Stage("lineitem", NodeSpec("lineitem", "l_orderkey", "l_partkey"),
       parentStage = Some("orders")),
     Stage("part", NodeSpec("part", "p_partkey", "p_partkey",
-      isRoot = true, setSemantics = true,
-      predicate = r => r.getOrElse("p_size", "99").toDouble <= 25)),
+      isRoot = true, setSemantics = true)),
     Stage("lineitem_part", NodeSpec("lineitem", "l_partkey", "l_partkey"),
       ownStage = Some("lineitem"), parentStage = Some("part")))
 
@@ -484,8 +465,7 @@ object IncrementalQueries {
       where = Some(col("p_size") <= 25)))
 
   def incrementalPartRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runTree(partRevenueStages, partRevenueChangelogs(s, dir),
-      sourceFiltered = true).toDF()
+    val leaf = runTree(partRevenueStages, partRevenueChangelogs(s, dir)).toDF()
     leaf.select(
         (col("tag") * col("mult")).as("sign"),
         canonCol("n_name").as("n_name"),
@@ -516,28 +496,19 @@ object IncrementalQueries {
     TreeCompiler.FkEdge("orders", "o_custkey", "customer", "c_custkey"),
     TreeCompiler.FkEdge("supplier", "s_nationkey", "nation", "n_nationkey"))
 
-  private val sharedDimPredicates: Map[String, Map[String, String] => Boolean] = Map(
-    "orders" -> (r => {
-      val d = r.getOrElse("o_orderdate", "")
-      d >= dateLo && d < dateHi
-    }),
-    "supplier" -> (r => r.getOrElse("s_acctbal", "-1").toDouble >= 0))
-
   /** The DEFAULT compiled plan — nation is a root dimension, so
     * [[TreeCompiler.PairOrientation.Auto]] emits the TRUNK-BUCKETED
     * glue (supplier passes through and replicates ×8; the big trunk
     * side buckets by row hash): the orientation whose parallelism is
     * not capped at 25 nation keys. */
   val sharedDimStages: Seq[Stage] = TreeCompiler.stagesFor(
-    sharedDimEdges, Seq("nation", "customer", "orders", "supplier"),
-    predicates = sharedDimPredicates)
+    sharedDimEdges, Seq("nation", "customer", "orders", "supplier"))
 
   /** The dimension-keyed plan (explicit opt-out — zero extra shuffle,
     * |dim|-capped): kept compiled as the base of the explicit-swap
     * twin below, so both orientations stay oracle-covered. */
   val sharedDimStagesDimKeyed: Seq[Stage] = TreeCompiler.stagesFor(
     sharedDimEdges, Seq("nation", "customer", "orders", "supplier"),
-    predicates = sharedDimPredicates,
     orientation = TreeCompiler.PairOrientation.DimensionKeyed)
 
   def sharedDimChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
@@ -555,8 +526,7 @@ object IncrementalQueries {
       where = Some(col("s_acctbal") >= 0)))
 
   def incrementalSharedRevenue(s: SparkSession, dir: String): DataFrame =
-    sharedAggregate(runTree(sharedDimStages, sharedDimChangelogs(s, dir),
-      sourceFiltered = true))
+    sharedAggregate(runTree(sharedDimStages, sharedDimChangelogs(s, dir)))
 
   private def sharedAggregate(leaf: Dataset[Evt]): DataFrame = {
     leaf.toDF().select(
@@ -580,7 +550,7 @@ object IncrementalQueries {
   def incrementalSharedRevenueSalted(s: SparkSession, dir: String): DataFrame =
     sharedAggregate(runTree(
       TreeCompiler.swapPairOrientation(sharedDimStagesDimKeyed, salts = 8),
-      sharedDimChangelogs(s, dir), sourceFiltered = true))
+      sharedDimChangelogs(s, dir)))
 
   /** The Q10 tree with its heaviest hop SALTED (S = 8): lineitem
     * events bucket by row hash while orders' liveness deltas replicate
@@ -591,7 +561,7 @@ object IncrementalQueries {
     val stages = chainStages(q10Tree) match {
       case init :+ last => init :+ last.copy(salts = 8)
     }
-    q10Aggregate(runTree(stages, q10Changelogs(s, dir), sourceFiltered = true))
+    q10Aggregate(runTree(stages, q10Changelogs(s, dir)))
   }
 
   /** A mergeable HISTOGRAM SKETCH over the MAINTAINED Q10 view — the
@@ -674,8 +644,8 @@ object IncrementalQueries {
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val streamIn = streams.map { case (r, ms) => r -> ms.toDS() }
     val leaf =
-      if (tws) DeltaEngine.runStreamTreeTws(stages, streamIn, sourceFiltered = true)
-      else runStreamTree(stages, streamIn, sourceFiltered = true, eventTtl = eventTtl)
+      if (tws) DeltaEngine.runStreamTreeTws(stages, streamIn)
+      else runStreamTree(stages, streamIn, eventTtl = eventTtl)
     val query = leaf.writeStream
       .format("memory").queryName(sinkName)
       .outputMode("append").start()
@@ -735,7 +705,7 @@ object IncrementalQueries {
       .toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val leaf = runStreamTree(chainStages(q10Tree),
-      streams.map { case (r, ms) => r -> ms.toDS() }, sourceFiltered = true)
+      streams.map { case (r, ms) => r -> ms.toDS() })
     val goldPayload = Seq("c_name", "c_acctbal", "n_name", "revenue_e4", "n_rows")
     val version = new java.util.concurrent.atomic.AtomicInteger(-1)
     def deltaAgg(batch: Dataset[Evt]): DataFrame = {
@@ -1646,8 +1616,8 @@ object IncrementalQueries {
 
   /** [[Evt]] changelog from a [[CdcParser.parseRelation]] frame:
     * tag/seq derive from the parsed `action` (Insert → +1 @ seq 0,
-    * Delete → −1 @ seq 1), `where` is the node predicate on the
-    * parsed typed columns. */
+    * Delete → −1 @ seq 1), `where` is the relation's local predicate
+    * on the parsed typed columns. */
   private def cdcChangelog(parsed: DataFrame, keyCol: String, cols: Seq[String],
                            where: Option[org.apache.spark.sql.Column]): Dataset[Evt] =
     signedChangelog(parsed, when(col("action") === "Insert", 1).otherwise(-1),
@@ -1741,7 +1711,7 @@ object IncrementalQueries {
           "l_extendedprice" -> Dbl, "l_discount" -> Dbl, "l_returnflag" -> Str)),
         "l_orderkey", liCols,
         Some(col("l_returnflag") === "R")))
-    val leaf = runBatch(q10Tree, logs, sourceFiltered = true)
+    val leaf = runBatch(q10Tree, logs)
     q10Aggregate(leaf)
   }
 
@@ -1749,7 +1719,7 @@ object IncrementalQueries {
     * own envelope TOPIC (Debezium's per-table topics — no demux
     * needed, unlike the reference's single interleaved line stream),
     * rendered via [[CdcParser.toJsonEnvelope]], parsed back into
-    * signed events by [[CdcParser.parseJsonEnvelope]], node predicates
+    * signed events by [[CdcParser.parseJsonEnvelope]], local predicates
     * applied to the parsed frames, and the same Q10 tree + aggregate.
     * Deletes arrive as 'd' envelopes carrying the before-image. */
   def incrementalQ10FromJson(s: SparkSession, dir: String): DataFrame = {
@@ -1790,7 +1760,7 @@ object IncrementalQueries {
         "l_orderkey",
         Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag"),
         Some(col("l_returnflag") === "R")))
-    q10Aggregate(runBatch(q10Tree, logs, sourceFiltered = true))
+    q10Aggregate(runBatch(q10Tree, logs))
   }
 
   /** The reference's TRUE production input shape end to end, gated:
@@ -1863,7 +1833,7 @@ object IncrementalQueries {
           "l_extendedprice" -> Dbl, "l_discount" -> Dbl, "l_returnflag" -> Str)),
         "l_orderkey", liCols,
         Some(col("l_returnflag") === "R")))
-    val leaf = runStreamTree(chainStages(q10Tree), logs, sourceFiltered = true)
+    val leaf = runStreamTree(chainStages(q10Tree), logs)
     // foreachBatch upsert: fold each micro-batch's leaf deltas to
     // per-group partials (distributed agg), then merge into the
     // maintained table keyed by the unique group key c_custkey
@@ -1929,7 +1899,7 @@ object IncrementalQueries {
     * so must the oracle). */
   def incrementalQ10Running(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val leaf = runBatch(q10Tree, q10Changelogs(s, dir), sourceFiltered = true).toDF()
+    val leaf = runBatch(q10Tree, q10Changelogs(s, dir)).toDF()
     // mult > 1 events (a parent flip replaying n identical buffered
     // children) EXPAND to n unit rows: the reference emits one Output
     // per base row, and the oracle counts per-row — a packed sign=±n
@@ -2437,7 +2407,7 @@ object IncrementalQueries {
     // The reference's FULL dataflow end to end (DataFlow.java:63-119):
     // the changelog rendered as its CDC text format (one line stream,
     // Add/Sub + 4-char relation codes), demuxed + parsed back by
-    // CdcParser, node predicates applied to the PARSED frames (the
+    // CdcParser, local predicates applied to the PARSED frames (the
     // pushdown now reaches the text scan), events canon-encoded, and
     // the same Q10 tree + aggregate. A reference user's actual input
     // files drive the engine; the oracle is incremental_q10's.
@@ -2524,7 +2494,7 @@ object IncrementalQueries {
          | (SELECT COUNT(*) FROM lineitem
          |  WHERE l_returnflag = 'R' AND l_linenumber <> 3)""".stripMargin) {
       (s, d) =>
-        stateMetrics(chainStages(q10Tree), q10Changelogs(s, d), sourceFiltered = true)
+        stateMetrics(chainStages(q10Tree), q10Changelogs(s, d))
           .select(col("node"), col("n_keys"), col("state_rows"))
     },
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, BaseGroupingSets, BinaryComparison, CaseWhen, Coalesce, EqualNullSafe, EqualTo, Expression, If, In, IsNotNull, IsNull, Like, Literal, NamedExpression, Not, NullsFirst, Or, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, BaseGroupingSets, BinaryComparison, CaseWhen, Cast, Coalesce, EqualNullSafe, EqualTo, Expression, If, In, IsNotNull, IsNull, Like, Literal, NamedExpression, Not, NullsFirst, Or, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
@@ -58,8 +58,11 @@ import graft.streaming.DeltaEngine.{Evt, NodeSpec, FS, KV}
   * one is re-emitted as a `Column` filter on its relation's changelog
   * source (via the expression's original SQL fragment, recovered from
   * Catalyst `Origin`), so it reaches the parquet scan as a pushed
-  * filter and the tree runs `sourceFiltered`. Only the columns the
-  * query references travel in the canonical rows.
+  * filter; raw event streams get the same predicate as a codegen'd
+  * row filter ([[Compiled.eventFilter]]). The changelog source is the
+  * only place a local predicate applies — the engine takes its
+  * changelogs as filtered. Only the columns the query references
+  * travel in the canonical rows.
   */
 object SqlCompiler {
 
@@ -399,7 +402,7 @@ object SqlCompiler {
       val l = projectOutput(left, left.leafDeltas(spark, dir, deletes))
       val r = projectOutput(right, right.leafDeltas(spark, dir, deletes))
       present(DeltaEngine.runTree(setStages,
-        Map("__setop_l" -> l, "__setop_r" -> r), sourceFiltered = true))
+        Map("__setop_l" -> l, "__setop_r" -> r)))
     }
 
     /** The continuous form: branch streams chain straight into the set
@@ -410,8 +413,8 @@ object SqlCompiler {
       val l = projectOutput(left, left.runStream(leftLogs, tws = tws))
       val r = projectOutput(right, right.runStream(rightLogs, tws = tws))
       val logs = Map("__setop_l" -> l, "__setop_r" -> r)
-      if (tws) DeltaEngine.runStreamTreeTws(setStages, logs, sourceFiltered = true)
-      else DeltaEngine.runStreamTree(setStages, logs, sourceFiltered = true)
+      if (tws) DeltaEngine.runStreamTreeTws(setStages, logs)
+      else DeltaEngine.runStreamTree(setStages, logs)
     }
   }
 
@@ -680,7 +683,7 @@ object SqlCompiler {
         .map(c => projectOutputRow(c, c.leafDeltas(spark, dir, deletes)))
         .reduce(_ union _)
       present(DeltaEngine.runTree(unionStages,
-        Map("__setop_u" -> deltas), sourceFiltered = true))
+        Map("__setop_u" -> deltas)))
     }
 
     /** The continuous form: every branch tree AND the netting node in
@@ -694,8 +697,8 @@ object SqlCompiler {
         .map { case (c, logs) => projectOutputRow(c, c.runStream(logs, tws = tws)) }
         .reduce(_ union _)
       val logs = Map("__setop_u" -> deltas)
-      if (tws) DeltaEngine.runStreamTreeTws(unionStages, logs, sourceFiltered = true)
-      else DeltaEngine.runStreamTree(unionStages, logs, sourceFiltered = true)
+      if (tws) DeltaEngine.runStreamTreeTws(unionStages, logs)
+      else DeltaEngine.runStreamTree(unionStages, logs)
     }
   }
 
@@ -944,25 +947,20 @@ object SqlCompiler {
       }
 
     /** This query's local predicate for `rel`, rewritten to apply to a
-      * RAW [[Evt]] stream: every column reference in the original SQL
-      * fragment is spliced (by Catalyst Origin offsets) into a typed
-      * lookup on the canonical row string, so the filter stays a
-      * codegen'd Column expression — callers feeding unfiltered
-      * event streams apply it and then run `sourceFiltered`. */
+      * RAW [[Evt]] stream: every column reference in the parsed SQL
+      * fragment becomes a typed `canon_get` lookup on the canonical
+      * row string, so the filter stays a codegen'd Column expression
+      * (one byte scan per referenced column, no per-event map build).
+      * Callers feeding unfiltered event streams apply it before the
+      * engine, which takes its changelogs as filtered. */
     def eventFilter(spark: SparkSession, rel: String): Option[Column] =
       wheres.get(rel).map { frag =>
-        val parsed = spark.sessionState.sqlParser.parseExpression(frag)
-        val attrs = parsed.collect { case a: UnresolvedAttribute => a }
-          .filter(a => a.origin.startIndex.isDefined)
-          .sortBy(-_.origin.startIndex.get)
-        val rewritten = attrs.foldLeft(frag) { (text, a) =>
-          val name = a.nameParts.last
-          val (from, to) = (a.origin.startIndex.get, a.origin.stopIndex.get)
-          text.substring(0, from) +
-            s"CAST(str_to_map(row, '$FS', '$KV')['$name'] AS ${colType(name).sql})" +
-            text.substring(to + 1)
+        val typed = spark.sessionState.sqlParser.parseExpression(frag).transformUp {
+          case a: UnresolvedAttribute =>
+            val name = a.nameParts.last
+            Cast(graft.functions.CanonGet(UnresolvedAttribute(Seq("row")), name), colType(name))
         }
-        expr(rewritten)
+        org.apache.spark.sql.GraftBridge.toColumn(typed)
       }
 
     /** Fold the engine's leaf deltas into the query's aggregate —
@@ -1371,7 +1369,7 @@ object SqlCompiler {
       // two-plan ancestor_del at sf0.1, vs −0.6 s on the six-plan
       // star); from three consumers on, materialization wins.
       val leaf =
-        if (outerPlans.isEmpty) DeltaEngine.runTree(stages, logs, sourceFiltered = true)
+        if (outerPlans.isEmpty) DeltaEngine.runTree(stages, logs)
         else {
           val consumers: Map[String, Int] = path.map { rel =>
             rel -> ((if (suppressMainLeaf) 0 else 1) +
@@ -1390,8 +1388,7 @@ object SqlCompiler {
                   })
                 }.toMap
                 (p.stages, planLogs)
-              },
-            sourceFiltered = true)
+              })
         }
       leaf
     }
@@ -1439,9 +1436,8 @@ object SqlCompiler {
         rel -> eventFilter(spark, rel).map(ds.filter).getOrElse(ds)
       }
       def runner(sts: Seq[DeltaEngine.Stage], lgs: Map[String, Dataset]): Dataset =
-        if (tws) DeltaEngine.runStreamTreeTws(sts, lgs, stateTtl, sourceFiltered = true)
-        else DeltaEngine.runStreamTree(sts, lgs, stateTtl, sourceFiltered = true,
-          eventTtl = eventTtl)
+        if (tws) DeltaEngine.runStreamTreeTws(sts, lgs, stateTtl)
+        else DeltaEngine.runStreamTree(sts, lgs, stateTtl, eventTtl = eventTtl)
       withOuterLeaves(filtered, runner(stages, filtered), runner)
     }
 

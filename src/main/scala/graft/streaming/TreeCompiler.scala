@@ -114,16 +114,16 @@ object TreeCompiler {
     } yield FkEdge(child.name, fk, parent.name, pk)
 
   /** Compile an EXPLICIT relation path (root first) into a NodeSpec
-    * chain; key columns come from the FK edges, predicates attach by
-    * relation name. The root gets set-semantics dedup (the reference's
-    * J0 behavior).
+    * chain; key columns come from the FK edges. The root gets
+    * set-semantics dedup (the reference's J0 behavior). Local
+    * predicates are not part of the tree: they filter each relation's
+    * changelog at its source.
     *
     * `explicitEdges` supplies the FK graph directly — the API for any
     * schema NOT named by the TPC-H convention (the caller's catalog,
     * information_schema constraints, a config file); omitted, the
     * convention-based [[fkEdges]] derivation is the fallback. */
   def compile(rels: Seq[RelationSchema], path: Seq[String],
-              predicates: Map[String, Map[String, String] => Boolean] = Map.empty,
               explicitEdges: Option[Seq[FkEdge]] = None)
       : Seq[NodeSpec] = {
     require(path.size >= 2, s"a join chain needs >= 2 relations, got $path")
@@ -139,14 +139,12 @@ object TreeCompiler {
           s"no FK edge $child → $parent derivable from the schemas " +
             s"(edges: ${edges.map(e => s"${e.child}.${e.fkCol}→${e.parent}.${e.parentCol}").mkString(", ")})"))
     }.toSeq
-    def pred(name: String) = predicates.getOrElse(name, DeltaEngine.NoPredicate)
     val root = NodeSpec(path.head,
       childKeyCol = chain.head.parentCol, nextKeyCol = chain.head.parentCol,
-      predicate = pred(path.head), isRoot = true, setSemantics = true)
+      isRoot = true, setSemantics = true)
     val rest = chain.zipWithIndex.map { case (e, i) =>
       val nextKey = if (i + 1 < chain.size) chain(i + 1).parentCol else e.fkCol
-      NodeSpec(e.child, childKeyCol = e.fkCol, nextKeyCol = nextKey,
-        predicate = pred(e.child))
+      NodeSpec(e.child, childKeyCol = e.fkCol, nextKeyCol = nextKey)
     }
     root +: rest
   }
@@ -181,14 +179,11 @@ object TreeCompiler {
     *                   FROM-clause order) — fixes parent processing
     *                   order for multi-parent nodes and which branch
     *                   stays on the trunk at a shared dimension
-    * @param predicates local predicates, attached to a relation's
-    *                   FIRST stage (later stages see pre-filtered rows)
     * @param orientation how pair glues route (see [[PairOrientation]];
     *                   the default picks the scale-safe plan for
     *                   root-dimension glues automatically)
     */
   def stagesFor(edges: Seq[FkEdge], order: Seq[String],
-                predicates: Map[String, Map[String, String] => Boolean] = Map.empty,
                 orientation: PairOrientation = PairOrientation.Auto())
       : Seq[DeltaEngine.Stage] = {
     import DeltaEngine.Stage
@@ -211,7 +206,7 @@ object TreeCompiler {
     val sharedDims = byParent.filter(_._2.size > 1).keySet
     order.find(sharedDims) match {
       case Some(sharedDim) =>
-        return sharedDimStages(edges, order, predicates, sharedDim, orientation)
+        return sharedDimStages(edges, order, sharedDim, orientation)
       case None =>
     }
 
@@ -225,7 +220,6 @@ object TreeCompiler {
     // below, which fails naming the stuck relations)
     val parentsOf: Map[String, Seq[FkEdge]] = edges.groupBy(_.child).view
       .mapValues(_.sortBy(e => order.indexOf(e.parent))).toMap
-    def pred(name: String) = predicates.getOrElse(name, DeltaEngine.NoPredicate)
     def finalStageName(r: String): String = parentsOf.get(r) match {
       case Some(ps) if ps.size > 1 => s"${r}__${ps.last.parent}"
       case _ => r
@@ -243,17 +237,14 @@ object TreeCompiler {
       parentsOf.get(r) match {
         case None => // branch root: keyed + emitting by its consumer-facing PK
           val pk = consumer(r).parentCol
-          Seq(Stage(r, DeltaEngine.NodeSpec(r, pk, pk,
-            predicate = pred(r), isRoot = true, setSemantics = true)))
+          Seq(Stage(r, DeltaEngine.NodeSpec(r, pk, pk, isRoot = true, setSemantics = true)))
         case Some(ps) =>
           ps.zipWithIndex.map { case (e, i) =>
             val name = if (i == 0) r else s"${r}__${e.parent}"
             val nextKey =
               if (i + 1 < ps.size) ps(i + 1).fkCol
               else consumer.get(r).map(_.parentCol).getOrElse(e.fkCol)
-            Stage(name,
-              DeltaEngine.NodeSpec(r, e.fkCol, nextKey,
-                predicate = if (i == 0) pred(r) else DeltaEngine.NoPredicate),
+            Stage(name, DeltaEngine.NodeSpec(r, e.fkCol, nextKey),
               ownStage = if (i == 0) None else Some(if (i == 1) r else s"${r}__${ps(i - 1).parent}"),
               parentStage = Some(finalStageName(e.parent)))
           }
@@ -288,12 +279,10 @@ object TreeCompiler {
     * exactly (spec-asserted answer-invariance), so both orientations
     * are oracle-equal. */
   private def sharedDimStages(edges: Seq[FkEdge], order: Seq[String],
-                              predicates: Map[String, Map[String, String] => Boolean],
                               dim: String,
                               orientation: PairOrientation): Seq[DeltaEngine.Stage] = {
     import DeltaEngine.Stage
     def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
-    def pred(name: String) = predicates.getOrElse(name, DeltaEngine.NoPredicate)
     val rels = order.distinct
     val childEdges = edges.filter(_.parent == dim).sortBy(e => order.indexOf(e.child))
     // relations reachable from `start` without crossing the cut edge
@@ -323,7 +312,7 @@ object TreeCompiler {
     // sub-plan's full join row)
     def subPlan(subRels: Set[String], keyCol: String): Seq[Stage] = {
       val subEdges = edges.filter(e => subRels(e.child) && subRels(e.parent))
-      val stages = stagesFor(subEdges, order.filter(subRels), predicates, orientation)
+      val stages = stagesFor(subEdges, order.filter(subRels), orientation)
       stages.init :+ stages.last.copy(
         spec = stages.last.spec.copy(nextKeyCol = keyCol))
     }
@@ -351,7 +340,7 @@ object TreeCompiler {
             // single-relation branch: pair straight off its changelog —
             // no pass-through stage, no extra shuffle
             out += Stage(pairName,
-              DeltaEngine.NodeSpec(e.child, e.fkCol, e.fkCol, predicate = pred(e.child)),
+              DeltaEngine.NodeSpec(e.child, e.fkCol, e.fkCol),
               pairStage = Some(leftRef))
           } else {
             val branch = subPlan(comp, e.fkCol)
@@ -368,8 +357,8 @@ object TreeCompiler {
           // builds — kept in lockstep with it)
           val passName = s"${pairName}__pass"
           if (comp.size == 1) {
-            out += Stage(passName, DeltaEngine.NodeSpec(
-              e.child, e.fkCol, e.fkCol, predicate = pred(e.child), isRoot = true))
+            out += Stage(passName,
+              DeltaEngine.NodeSpec(e.child, e.fkCol, e.fkCol, isRoot = true))
           } else {
             val branch = subPlan(comp, e.fkCol)
             out ++= branch
@@ -392,8 +381,8 @@ object TreeCompiler {
     * and the planner's default orientation (branch on own — zero extra
     * shuffle) replicates the trunk, which is usually the BIG side.
     * The swap runs the branch input through a pass-through stage (one
-    * extra shuffle, predicate and key columns preserved from the
-    * original glue spec) and makes the trunk the own side, so trunk
+    * extra shuffle, key columns preserved from the original glue
+    * spec) and makes the trunk the own side, so trunk
     * join deltas bucket while the small branch replicates.
     *
     * Derives everything from the plan itself (no caller-restated key
@@ -423,7 +412,6 @@ object TreeCompiler {
   /** Find the UNIQUE FK path root→leaf and compile it; throws listing
     * the alternatives when the FK graph offers more than one. */
   def compileUnique(rels: Seq[RelationSchema], root: String, leaf: String,
-                    predicates: Map[String, Map[String, String] => Boolean] = Map.empty,
                     explicitEdges: Option[Seq[FkEdge]] = None)
       : Seq[NodeSpec] = {
     val edges = explicitEdges.getOrElse(fkEdges(rels))
@@ -433,7 +421,7 @@ object TreeCompiler {
         .flatMap(e => paths(e.parent, seen + e.parent).map(p => p :+ from))
     val found = paths(leaf, Set(leaf))
     found match {
-      case Seq(p) => compile(rels, p, predicates, explicitEdges)
+      case Seq(p) => compile(rels, p, explicitEdges)
       case Seq() => throw new IllegalArgumentException(
         s"no FK path $root → $leaf in the derived graph")
       case many => throw new IllegalArgumentException(

@@ -27,8 +27,12 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
 
   // -- tiny 2-level tree: parent P(pk) → child C(fk, val>=threshold) --
   private val parentSpec = NodeSpec("P", "pk", "pk", isRoot = true, setSemantics = true)
-  private val childSpec = NodeSpec("C", "fk", "fk",
-    predicate = _.getOrElse("v", "").toInt >= 10)
+  private val childSpec = NodeSpec("C", "fk", "fk")
+
+  /** The child relations' local predicate `v >= 10`, applied at the
+    * changelog source (inserts and deletes alike) as the engine
+    * expects. */
+  private def passes(e: Evt): Boolean = e.cols("v").toInt >= 10
 
   private def parentRow(k: Int) = Map("pk" -> k.toString, "pname" -> s"p$k")
   private def childRow(k: Int, id: Int, v: Int) =
@@ -40,7 +44,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val p1 = parentEvts.groupBy(_.key).toSeq.flatMap { case (k, evs) =>
       processKeyBatch(parentSpec)(k, evs.iterator).toSeq
     }
-    val all = childEvts ++ p1
+    val all = childEvts.filter(passes) ++ p1
     all.groupBy(_.key).toSeq.flatMap { case (k, evs) =>
       processKeyBatch(childSpec)(k, evs.iterator).toSeq
         .map(e => (e.tag, e.mult, e.cols))
@@ -188,7 +192,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val d = SparkTestSession.sfTiny
     val buf = scala.collection.mutable.Buffer.empty[DeltaEngine.NodeStats]
     val leaf = DeltaEngine.runBatch(IncrementalQueries.q10Tree,
-      IncrementalQueries.q10Changelogs(s, d), sourceFiltered = true, stats = Some(buf))
+      IncrementalQueries.q10Changelogs(s, d), stats = Some(buf))
     val leafCount = leaf.count()
     assert(buf.map(_.relation) == Seq("nation", "customer", "orders", "lineitem"))
     // the leaf node's emissions ARE the result deltas
@@ -210,8 +214,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   // re-keyed by fk2 and fed as OWN events into fold-wrt-P2.
   private val p1Spec = NodeSpec("P1", "pk1", "pk1", isRoot = true, setSemantics = true)
   private val p2Spec = NodeSpec("P2", "pk2", "pk2", isRoot = true, setSemantics = true)
-  private val c1Spec = NodeSpec("C", "fk1", "fk2",
-    predicate = _.getOrElse("v", "").toInt >= 10)
+  private val c1Spec = NodeSpec("C", "fk1", "fk2")
   private val c2Spec = NodeSpec("C2", "fk2", "fk2")
 
   private def p1Row(k: Int) = Map("pk1" -> k.toString, "pname" -> s"p$k")
@@ -227,7 +230,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       evs.groupBy(_.key).toSeq.flatMap { case (k, g) =>
         processKeyBatch(spec)(k, g.iterator).toSeq
       }
-    val s1Out = fold(c1Spec, c ++ fold(p1Spec, p1))
+    val s1Out = fold(c1Spec, c.filter(passes) ++ fold(p1Spec, p1))
     val s2In = s1Out.map(e => e.copy(fromParent = false)) ++ fold(p2Spec, p2)
     fold(c2Spec, s2In).map(e => (e.tag, e.mult, e.cols))
   }
@@ -663,9 +666,9 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
           TreeCompiler.FkEdge(s"R$other", s"r${other}fk$i", s"R$i", s"r${i}pk")
       }
       // ~half the relations carry a random LOCAL PREDICATE (drops the
-      // rows whose payload index is ≡ m mod 3) — the planner must
-      // attach each to the relation's first stage, including branch
-      // pass-throughs and pair glue own-inputs
+      // rows whose payload index is ≡ m mod 3), applied where the
+      // engine expects it: at each relation's changelog source, to
+      // inserts and deletes alike
       val predMod: Map[String, Int] = names.flatMap { rel =>
         if (rnd.nextBoolean()) Some(rel -> rnd.nextInt(3)) else None
       }.toMap
@@ -676,13 +679,11 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
             row(s"r${i}v").split("-").last.toInt % 3 != m
           case None => true
         }
-      val predicates: Map[String, Map[String, String] => Boolean] =
-        predMod.keys.map(rel => rel -> ((r: Map[String, String]) => keep(rel, r))).toMap
       // a random NON-ROOT stage gets a random salt factor — bucketed
       // sub-keys must be answer-invariant on every graph shape
       // (root stages take no parent/pair input, so salting them would
       // only fragment their own fold)
-      val stages0 = TreeCompiler.stagesFor(edges, names, predicates)
+      val stages0 = TreeCompiler.stagesFor(edges, names)
       val saltable = stages0.zipWithIndex.collect {
         case (st, i) if st.parentStage.isDefined || st.pairStage.isDefined => i
       }
@@ -720,8 +721,8 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       val logs = fixed.map { case (rel, rs) =>
         val kc = keyColOf(rel)
         rel -> s.createDataset(
-          rs.map(r => Evt(0, false, 1, 1, r(kc), r)) ++
-            deleted(rel).toSeq.map(r => Evt(1, false, -1, 1, r(kc), r)))
+          rs.filter(keep(rel, _)).map(r => Evt(0, false, 1, 1, r(kc), r)) ++
+            deleted(rel).toSeq.filter(keep(rel, _)).map(r => Evt(1, false, -1, 1, r(kc), r)))
       }
       val got = netRows(DeltaEngine.runTree(stages, logs).collect().toSeq)
       // oracle: survivors (deletes AND local predicates), then
@@ -789,13 +790,13 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       case st => st
     }
     val e1 = intercept[IllegalArgumentException] {
-      DeltaEngine.runTree(misKeyed, logs, sourceFiltered = true)
+      DeltaEngine.runTree(misKeyed, logs)
     }
     assert(e1.getMessage.contains("mis-keyed"))
     // a stage referencing one that comes after it
     val reordered = IncrementalQueries.partRevenueStages.sortBy(_.name)
     intercept[IllegalArgumentException] {
-      DeltaEngine.runTree(reordered, logs, sourceFiltered = true)
+      DeltaEngine.runTree(reordered, logs)
     }
   }
 
@@ -803,16 +804,13 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
 
   import graft.streaming.TreeCompiler
 
-  private def keyFields(t: Seq[NodeSpec]) =
-    t.map(n => (n.relation, n.childKeyCol, n.nextKeyCol, n.isRoot, n.setSemantics))
-
   test("TreeCompiler derives the hand-built q10 and supplier trees from schemas") {
     val rels = TreeCompiler.fromParquet(SparkTestSession.spark, SparkTestSession.sfTiny,
       Seq("region", "nation", "customer", "supplier", "orders", "lineitem", "part"))
     val q10 = TreeCompiler.compile(rels, Seq("nation", "customer", "orders", "lineitem"))
-    assert(keyFields(q10) == keyFields(IncrementalQueries.q10Tree))
+    assert(q10 == IncrementalQueries.q10Tree)
     val sup = TreeCompiler.compile(rels, Seq("region", "nation", "supplier", "lineitem"))
-    assert(keyFields(sup) == keyFields(IncrementalQueries.supplierTree))
+    assert(sup == IncrementalQueries.supplierTree)
   }
 
   test("TreeCompiler finds unique paths and refuses ambiguous ones loudly") {
@@ -850,9 +848,9 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val edges = Seq(TreeCompiler.FkEdge("member", "squad_ref", "squad", "squad_id"))
     val tree = TreeCompiler.compile(rels, Seq("squad", "member"),
       explicitEdges = Some(edges))
-    assert(keyFields(tree) == Seq(
-      ("squad", "squad_id", "squad_id", true, true),
-      ("member", "squad_ref", "squad_ref", false, false)))
+    assert(tree == Seq(
+      NodeSpec("squad", "squad_id", "squad_id", isRoot = true, setSemantics = true),
+      NodeSpec("member", "squad_ref", "squad_ref")))
     // SqlCompiler takes the same catalog and compiles the text unchanged
     val sqlText =
       """SELECT squad_name, COUNT(*) AS n,

@@ -205,13 +205,13 @@ class RelationalSpec extends AnyFunSuite with org.scalatest.ParallelTestExecutio
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
   }
 
-  test("PLAN AUDIT: incremental changelog predicates are scan-pushed (sourceFiltered)") {
+  test("PLAN AUDIT: incremental changelog predicates are scan-pushed") {
     import org.apache.spark.sql.execution.FormattedMode
     val plan = SparkEntry.queries("incremental_q10")(spark, sfTiny)
       .queryExecution.explainString(FormattedMode)
-    // the engine's node predicates ride the changelog's parquet scan
-    // (the Spark-native validTuple gate) — rows failing them are never
-    // canon-encoded or shuffled
+    // the tree's local predicates ride the changelog's parquet scan
+    // (the Spark-native validTuple gate, and their only spelling) —
+    // rows failing them are never canon-encoded or shuffled
     assert(plan.contains("EqualTo(l_returnflag,R)"), plan.take(800))
     assert(plan.contains("GreaterThanOrEqual(o_orderdate"), plan.take(800))
   }

@@ -14,8 +14,10 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
   import SparkTestSession.spark
 
   private val parentSpec = NodeSpec("P", "pk", "pk", isRoot = true, setSemantics = true)
-  private val childSpec = NodeSpec("C", "fk", "fk",
-    predicate = _.getOrElse("v", "").toInt >= 10)
+  private val childSpec = NodeSpec("C", "fk", "fk")
+  /** The child's local predicate `v >= 10`, applied to its stream
+    * before the engine (which takes its changelogs as filtered). */
+  private val childPasses: Evt => Boolean = _.cols("v").toInt >= 10
 
   test("chained flatMapGroupsWithState maintains the join across micro-batches") {
     implicit val sq = spark.sqlContext
@@ -23,7 +25,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     val pStream = MemoryStream[Evt]
     val cStream = MemoryStream[Evt]
     val leaf = runStream(Seq(parentSpec, childSpec),
-      Map("P" -> pStream.toDS(), "C" -> cStream.toDS()))
+      Map("P" -> pStream.toDS(), "C" -> cStream.toDS().filter(childPasses)))
     val query = leaf.writeStream
       .format("memory").queryName("aju_leaf").outputMode("append").start()
     try {
@@ -505,7 +507,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       .view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val out = runStreamTree(IncrementalQueries.partRevenueStages,
-      streams.map { case (r, ms) => r -> ms.toDS() }, sourceFiltered = true)
+      streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("part_rev_leaf").outputMode("append").start()
     try {
@@ -530,8 +532,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       val streamed = fold(spark.table("part_rev_leaf").as[Evt].collect().toSeq)
       val batched = fold(
         runTree(IncrementalQueries.partRevenueStages,
-          IncrementalQueries.partRevenueChangelogs(spark, dir),
-          sourceFiltered = true).collect().toSeq)
+          IncrementalQueries.partRevenueChangelogs(spark, dir)).collect().toSeq)
       assert(batched.nonEmpty && streamed == batched)
     } finally query.stop()
   }
@@ -545,7 +546,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       .view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val out = runStreamTree(IncrementalQueries.sharedDimStages,
-      streams.map { case (r, ms) => r -> ms.toDS() }, sourceFiltered = true)
+      streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("shared_dim_leaf").outputMode("append").start()
     try {
@@ -572,8 +573,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       val streamed = fold(spark.table("shared_dim_leaf").as[Evt].collect().toSeq)
       val batched = fold(
         runTree(IncrementalQueries.sharedDimStages,
-          IncrementalQueries.sharedDimChangelogs(spark, dir),
-          sourceFiltered = true).collect().toSeq)
+          IncrementalQueries.sharedDimChangelogs(spark, dir)).collect().toSeq)
       assert(batched.nonEmpty && streamed == batched)
     } finally query.stop()
   }
@@ -594,7 +594,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     // the TTL-semantics spec above uses the TestGroupState harness
     val out = runStream(IncrementalQueries.q10Tree,
       streams.map { case (r, ms) => r -> ms.toDS() },
-      stateTtl = Some(java.time.Duration.ofSeconds(8)), sourceFiltered = true)
+      stateTtl = Some(java.time.Duration.ofSeconds(8)))
     val query = out.writeStream
       .format("memory").queryName("ttl_obs_leaf").outputMode("append").start()
     try {
@@ -649,7 +649,8 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     val cStream = MemoryStream[Evt]
     val ttl = EventTimeTtl("ets", java.time.Duration.ofSeconds(60))
     val leaf = runStream(Seq(parentSpec, childSpec),
-      Map("P" -> pStream.toDS(), "C" -> cStream.toDS()), eventTtl = Some(ttl))
+      Map("P" -> pStream.toDS(), "C" -> cStream.toDS().filter(childPasses)),
+      eventTtl = Some(ttl))
     val query = leaf.writeStream.format("memory").queryName("evt_ttl_leaf")
       .outputMode("append").start()
     try {
@@ -886,7 +887,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       .view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val out = runStreamTreeTws(chainStages(IncrementalQueries.q10Tree),
-      streams.map { case (r, ms) => r -> ms.toDS() }, sourceFiltered = true)
+      streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("q10_tws_leaf").outputMode("append").start()
     try {
@@ -931,7 +932,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       .view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val out = runStreamTreeTws(IncrementalQueries.sharedDimStages,
-      streams.map { case (r, ms) => r -> ms.toDS() }, sourceFiltered = true)
+      streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("shared_tws_leaf").outputMode("append").start()
     try {
@@ -972,7 +973,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     val out = runStreamTreeTws(chainStages(IncrementalQueries.q10Tree),
       streams.map { case (r, ms) => r -> ms.toDS() },
-      stateTtl = Some(java.time.Duration.ofSeconds(8)), sourceFiltered = true)
+      stateTtl = Some(java.time.Duration.ofSeconds(8)))
     val query = out.writeStream
       .format("memory").queryName("q10_tws_ttl_leaf").outputMode("append").start()
     try {
