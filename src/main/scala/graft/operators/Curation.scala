@@ -249,7 +249,7 @@ object Curation {
     * proves every [[Bm25Index]] handle rebuilds from the log roots
     * alone. Memoized per fixture — the replay runs once per JVM. */
   private def bm25Persist(s0: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    graft.operators.FixtureMemo(s"$d#bm25_persist", "text_bm25_persist", s0) {
+    graft.operators.FixtureMemo(s"$d#bm25_persist", Seq("text_bm25_persist"), s0) {
       val ix = new Bm25Index
       val docsA = Tables.documents(s0, d).select(col("doc_id"), col("text"))
       val ghostsA = docsA.filter(col("doc_id") % 50 === 0)
@@ -963,7 +963,7 @@ object Curation {
       // maintained full-vocab df serving AD-HOC query-term sets chosen
       // after the replay.
       (s, d) =>
-        graft.operators.FixtureMemo(s"$d#bm25_maintained_vocab", "text_bm25_maintained_vocab", s) {
+        graft.operators.FixtureMemo(s"$d#bm25_maintained_vocab", Seq("text_bm25_maintained_vocab"), s) {
           val ix = new Bm25Index
           val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
           val ghosts = docs.filter(col("doc_id") % 50 === 0)

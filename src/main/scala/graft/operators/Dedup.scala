@@ -500,7 +500,8 @@ object Dedup {
     * replays once per JVM; the labels entry, the maintained keepers,
     * and the maintained split all re-read the materialized labels. */
   private def ccMaintainedLabels(s: SparkSession, d: String): DataFrame =
-    FixtureMemo(s"$d#cc_maintained", "dedup_cc_maintained", s)(ccMaintained(s, d))
+    FixtureMemo(s"$d#cc_maintained", Seq("dedup_cc_maintained", "dedup_keepers_maintained",
+      "split_leakage_safe_maintained"), s)(ccMaintained(s, d))
 
   /** [[MaintainedCc]] with its state PERSISTED to the snapshot log —
     * cluster RESOLUTION that survives a JVM: the undirected edge set
@@ -633,7 +634,7 @@ object Dedup {
     * committed logs alone. Memoized per fixture ([[FixtureMemo]]) —
     * the labels entry and the persisted split share one replay. */
   private def ccPersistLabels(s0: SparkSession, d: String): DataFrame =
-    FixtureMemo(s"$d#cc_persist", "dedup_cc_persist", s0) {
+    FixtureMemo(s"$d#cc_persist", Seq("dedup_cc_persist", "split_leakage_safe_persist"), s0) {
       val mh = new PersistedMinhash
       val cc = new PersistedCc
       def ins(s: SparkSession, dd: DataFrame): Unit =
@@ -1240,14 +1241,14 @@ object Dedup {
     // identical pair set — inserts probe existing LSH buckets
     // (changelog-proportional), deletes retract by anti-join.
     sql("dedup_minhash_maintained", minhashPairsSql)(
-      (s, d) => FixtureMemo(s"$d#minhash_maintained", "dedup_minhash_maintained", s)(minhashPairsMaintained(s, d))),
+      (s, d) => FixtureMemo(s"$d#minhash_maintained", Seq("dedup_minhash_maintained"), s)(minhashPairsMaintained(s, d))),
 
     // … with the state PERSISTED to the snapshot log, proven by a
     // mid-changelog session restart: steps 3-4 reopen from the
     // committed versions alone and the final pair table still lands
     // hash-equal to the one-shot batch oracle.
     sql("dedup_minhash_persist", minhashPairsSql)(
-      (s, d) => FixtureMemo(s"$d#minhash_persist", "dedup_minhash_persist", s)(minhashPairsPersist(s, d))),
+      (s, d) => FixtureMemo(s"$d#minhash_persist", Seq("dedup_minhash_persist"), s)(minhashPairsPersist(s, d))),
 
     // GDPR ERASURE THROUGH THE PERSISTED PIPELINES — a data subject's
     // forget-request chained across EVERY persisted maintained state
@@ -1276,7 +1277,7 @@ object Dedup {
          | UNION ALL
          | SELECT 2 AS qid, doc_id, score FROM (
          |${Curation.bm25OracleSqlFor(Curation.bm25QueryTerms2)}) q2) b""".stripMargin) {
-      (s, d) => FixtureMemo(s"$d#gdpr_forget", "gdpr_forget_persisted", s) {
+      (s, d) => FixtureMemo(s"$d#gdpr_forget", Seq("gdpr_forget_persisted"), s) {
         import graft.sources.SnapshotLog
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
         val ghosts = docs.filter(col("doc_id") % 50 === 0)
@@ -1842,14 +1843,14 @@ object Dedup {
     // the one-shot batch entry; ghost embeddings injected then deleted
     // must leave the pair set identical.
     sql("dedup_embedding_lsh_maintained", embeddingLshOracle)(
-      (s, d) => FixtureMemo(s"$d#emb_lsh_maintained", "dedup_embedding_lsh_maintained", s)(embeddingLshMaintained(s, d))),
+      (s, d) => FixtureMemo(s"$d#emb_lsh_maintained", Seq("dedup_embedding_lsh_maintained"), s)(embeddingLshMaintained(s, d))),
 
     // … with the vector store + pair set PERSISTED to the snapshot
     // log (bands recomputed from the persisted vectors — 64 integer
     // ops each), proven by a mid-changelog session restart on the
     // same one-shot batch oracle.
     sql("dedup_embedding_lsh_persist", embeddingLshOracle)(
-      (s, d) => FixtureMemo(s"$d#emb_lsh_persist", "dedup_embedding_lsh_persist", s)(embeddingLshPersist(s, d))),
+      (s, d) => FixtureMemo(s"$d#emb_lsh_persist", Seq("dedup_embedding_lsh_persist"), s)(embeddingLshPersist(s, d))),
 
     // --- semantic dedup (SemDeDup shape): k-means, then in-cluster -------
     // Lloyd's algorithm made cross-engine deterministic: seed centroids

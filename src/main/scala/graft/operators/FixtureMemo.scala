@@ -33,8 +33,8 @@ private[graft] object FixtureMemo {
   /** BENCH GUARD: this memo is only non-gaming while no memoized
     * entry is a bench headliner — a headliner reading memoized rows
     * would time a cache hit instead of the computation. Call sites
-    * declare the registry entry they serve ([[apply]]'s `entry`);
-    * the guard fails LOUDLY the day such an entry joins
+    * declare EVERY registry entry they serve ([[apply]]'s `entries`);
+    * the guard fails LOUDLY the day any of them joins
     * `SparkEntry.benchNames`, in every context (Bench, Verify, tests)
     * rather than silently flattering the bench record. */
   private[graft] def assertNotBenchHeadliner(entry: String): Unit =
@@ -49,10 +49,12 @@ private[graft] object FixtureMemo {
     * build leaves the key absent, so the next caller retries instead
     * of caching the failure); readers load the parquet in their own
     * session. An empty result repartitions to one task so the write
-    * still carries a schema footer to reopen. `entry` is the registry
-    * entry this memo serves — see the bench guard above. */
-  def apply(key: String, entry: String, s: SparkSession)(build: => DataFrame): DataFrame = {
-    assertNotBenchHeadliner(entry)
+    * still carries a schema footer to reopen. `entries` are all the
+    * registry entries this memo serves — see the bench guard above;
+    * each is checked before `build` can run. */
+  def apply(key: String, entries: Seq[String], s: SparkSession)(build: => DataFrame): DataFrame = {
+    require(entries.nonEmpty, s"FixtureMemo '$key' must declare the registry entries it serves")
+    entries.foreach(assertNotBenchHeadliner)
     val dir = dirs.computeIfAbsent(key, _ => {
       val out = java.nio.file.Files.createTempDirectory("graft_memo_").toString
       val df = build

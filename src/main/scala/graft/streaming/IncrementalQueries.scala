@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
 import graft.{GraftQuery, Tables}
@@ -9,22 +9,34 @@ import graft.sources.CdcParser
 import graft.streaming.DeltaEngine._
 
 /** The incremental (changelog) query surface, registered against the
-  * driver's correctness gate:
+  * correctness gate. An entry maintains a view under a
+  * synthetic changelog (insert everything, then retract a delete set)
+  * and is checked against a DuckDB oracle: plain SQL over the rows the
+  * changelog leaves alive (the format round trips check their parsed
+  * rows against the parquet columns instead). Incremental-equals-batch is exactly the AJU
+  * correctness property (SURVEY.md §5.2).
   *
-  *  - `cdc_roundtrip_lineitem`: parquet rows → reference CDC text
-  *    lines → [[CdcParser]] → typed rows; the oracle reads the same
-  *    columns straight from parquet, so any parse/cast drift fails the
-  *    value hash.
+  * How a maintained view is declared:
   *
-  *  - `incremental_q10`: TPC-H Q10 maintained by the [[DeltaEngine]]
-  *    join tree over a synthetic changelog (insert everything, then
-  *    delete every lineitem with linenumber 3 and every order with
-  *    orderkey % 50 == 0 — exercising child retraction AND parent
-  *    death fan-out). The oracle is plain SQL over the net surviving
-  *    tuples: incremental-equals-batch is exactly the AJU correctness
-  *    property (SURVEY.md §5.2).
+  *  - A SQL view compiled by [[SqlCompiler]] is declared ONCE through
+  *    [[maintained]] (name, oracle, statement, deletes, twins). That
+  *    registers the batch entry (`SqlCompiler.run`, or `runCte` for a
+  *    WITH statement) and, per declared twin, a `_stream` entry (the
+  *    same statement and deletes replayed as micro-batches through the
+  *    continuous engine) and a `_tws` entry (the same replay on
+  *    transformWithState). Every twin shares its base's oracle value,
+  *    so stream-equals-batch holds by construction;
+  *    `TwinMatrixSpec` checks the twin matrix and
+  *    `RegistryContractSpec` pins every name and oracle.
+  *  - An entry is written out by hand when it differs on purpose: a
+  *    twin with its own oracle, statement or deletes (an extended
+  *    select list, an extra delete), or a runner the declaration does
+  *    not cover — set operations, ASOF, OVER branches, recursion
+  *    ([[RecursiveSql]]), hand-built [[DeltaEngine]] trees such as
+  *    `incremental_q10`, CDC/JSON/file sources, and the format round
+  *    trips such as `cdc_roundtrip_lineitem`.
   *
-  * Revenue folds in integer 1e-4 units (`revenue_e4`) so incremental
+  * Money folds in integer units (`revenue_e4` = 1e-4) so incremental
   * double-summation order can never drift from the decimal oracle.
   */
 object IncrementalQueries {
@@ -94,6 +106,51 @@ object IncrementalQueries {
 
   private val dateLo = "1996-01-01"
   private val dateHi = "1996-04-01"
+
+  /** Q10's survivors oracle: the plain-SQL answer over the rows the
+    * Q10 changelog set leaves alive — one value shared by every entry
+    * that maintains Q10 under those deletes, whatever its runner. */
+  private val q10Oracle =
+    s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+       | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM customer, orders, lineitem, nation
+       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+       | AND c_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R'
+       | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
+       |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin
+
+  /** Q10 as [[SqlCompiler]] reads it — the deletes are changelog data
+    * ([[q10Deletes]]), not WHERE conjuncts. */
+  private val q10Sql =
+    s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+       | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM nation, customer, orders, lineitem
+       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+       | AND c_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R'
+       |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin
+
+  private val q10Deletes = Map(
+    "lineitem" -> (col("l_linenumber") === 3),
+    "orders" -> (col("o_orderkey") % 50 === 0))
+
+  /** The shared-dimension (nation pair) revenue oracle, shared by the
+    * tree-API and compiled entries over the same deletes. */
+  private val sharedDimOracle =
+    s"""SELECT n_name,
+       | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
+       | COUNT(*) AS n_pairs
+       |FROM nation, customer, orders, supplier
+       |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+       | AND s_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
+       |GROUP BY n_name""".stripMargin
 
   /** Build one relation's changelog as Dataset[Evt]. The canonical row
     * string is assembled by codegen'd `concat_ws` at ingest — events
@@ -805,34 +862,6 @@ object IncrementalQueries {
     sharedAggregate(replayStream(s, sharedDimStages, sharedDimChangelogs(s, dir),
       "incremental_shared_tws_leaf", tws = true))
 
-  /** SQL TEXT driving the CONTINUOUS engine behind the correctness
-    * gate — the full round trip in one entry: Catalyst-parsed query →
-    * compiled stage graph → [[SqlCompiler]]'s `runStream` over RAW
-    * event streams (its per-stream `eventFilter` re-applies the local
-    * predicates — the streaming twin of scan pushdown) → micro-batch
-    * replay with state across batches → the compiled signed-fold
-    * aggregate. Same survivors oracle as incremental_q10, so any
-    * compile-or-stream divergence fails the hash. Child session sized
-    * like [[replayStream]] (state-store commits dominate a two-batch
-    * replay). */
-  def incrementalSqlQ10Stream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val c = SqlCompiler.compile(s, dir,
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)
-    runSqlStreamed(s, c, dir, Map(
-        "lineitem" -> (col("l_linenumber") === 3),
-        "orders" -> (col("o_orderkey") % 50 === 0)),
-      "incremental_sql_q10_stream_leaf")
-  }
-
   /** LEFT OUTER JOIN from SQL TEXT: the compiler plans the inner tree
     * PLUS an anti plan per LEFT boundary (NOT EXISTS wiring — see
     * [[SqlCompiler.OuterPlan]]); their unioned leaf deltas feed the
@@ -857,9 +886,6 @@ object IncrementalQueries {
     "orders" -> (col("o_orderkey") % 50 === 0),
     "lineitem" -> (col("l_linenumber") === 3))
 
-  def incrementalSqlQ10Outer(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10OuterSql).run(s, dir, q10OuterDeletes)
-
   /** FULL OUTER from SQL text: the LEFT OUTER machinery preserves
     * orders with no surviving lineitem, and the compiler's ORPHAN plan
     * preserves lineitems with no surviving order — those fold under
@@ -883,47 +909,6 @@ object IncrementalQueries {
     "orders" -> (col("o_orderkey") % 50 === 0),
     "lineitem" -> (col("l_partkey") % 3 === 0))
 
-  def incrementalSqlQ10FullOuter(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterSql)
-      .run(s, dir, q10FullOuterDeletes)
-
-  /** The SAME maintained view written as a RIGHT JOIN (preserved side
-    * on the right): the compiler canonicalizes RightOuter by swapping
-    * children onto the LEFT OUTER machinery, so a user's RIGHT JOIN
-    * text compiles instead of bouncing with a rewrite hint. */
-  def incrementalSqlQ10Right(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir,
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM lineitem
-         |RIGHT JOIN (nation
-         | JOIN customer ON c_nationkey = n_nationkey
-         | JOIN orders ON o_custkey = c_custkey)
-         | ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)
-      .run(s, dir, q10OuterDeletes)
-
-  /** [[incrementalSqlQ10Outer]] through the CONTINUOUS engine: both
-    * the inner and the anti plan replay over the same raw event
-    * streams as real micro-batches (inserts then deletes), so the
-    * NULL-extension asserts/retracts ACROSS batches through held
-    * state. */
-  def incrementalSqlQ10OuterStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10OuterSql), dir,
-      q10OuterDeletes, "incremental_sql_q10_outer_stream_leaf")
-
-  /** The compiled FULL OUTER through the CONTINUOUS engine: inner
-    * tree, anti plan AND orphan plan replay the same raw streams as
-    * real micro-batches — batch 1's inserts assert orphans only for
-    * orders never seen; batch 2's order deletes must then CREATE
-    * orphans (their lines' preservation flips on) while lineitem
-    * deletes retract NULL-extensions, all through held state. */
-  def incrementalSqlQ10FullOuterStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterSql), dir,
-      q10FullOuterDeletes, "incremental_sql_q10_fullouter_stream_leaf")
-
   /** FULL OUTER **with a WHERE on the preserved (orders) side** — the
     * r8 fence lifted: SQL's WHERE runs after the join, so the date
     * predicate NULL-rejects every orphan (right-preserved) row, and
@@ -944,14 +929,6 @@ object IncrementalQueries {
        |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
        |GROUP BY c_custkey, n_name""".stripMargin
 
-  def incrementalSqlQ10FullOuterFiltered(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterFilteredSql)
-      .run(s, dir, q10FullOuterDeletes)
-
-  def incrementalSqlQ10FullOuterFilteredStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterFilteredSql), dir,
-      q10FullOuterDeletes, "incremental_sql_q10_fullouter_filtered_leaf")
-
   /** The mirror case — WHERE on the BOUNDARY CHILD: SQL NULL-rejects
     * every NULL-extension row instead, so the compile drops the anti
     * plan, keeps the orphan plan (lineitems with no surviving order,
@@ -967,14 +944,6 @@ object IncrementalQueries {
       |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
       |WHERE l_linenumber <> 3
       |GROUP BY c_custkey, n_name""".stripMargin
-
-  def incrementalSqlQ10FullOuterChildFiltered(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterChildFilteredSql)
-      .run(s, dir, q10FullOuterDeletes)
-
-  def incrementalSqlQ10FullOuterChildFilteredStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterChildFilteredSql), dir,
-      q10FullOuterDeletes, "incremental_sql_q10_fullouter_cf_leaf")
 
   /** FULL OUTER × [NOT] EXISTS gate on an INNER relation — the
     * join-then-filter corner: SQL evaluates the gate on the JOINED
@@ -997,15 +966,6 @@ object IncrementalQueries {
        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
        |GROUP BY c_custkey, n_name""".stripMargin
 
-  def incrementalSqlQ10FullOuterGated(s: SparkSession, dir: String, anti: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterGatedSql(anti))
-      .run(s, dir, q10FullOuterDeletes)
-
-  def incrementalSqlQ10FullOuterGatedStream(s: SparkSession, dir: String,
-                                            anti: String, leaf: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterGatedSql(anti)), dir,
-      q10FullOuterDeletes, leaf)
-
   /** The FIND-THE-ORPHANS idiom — FULL OUTER with `WHERE o_orderkey
     * IS NULL` (the r9 fence lifted): the parent boundary key is NULL
     * exactly on the right-preserved rows (the engine-wide non-null
@@ -1026,14 +986,6 @@ object IncrementalQueries {
       |WHERE o_orderkey IS NULL
       |GROUP BY c_custkey, n_name""".stripMargin
 
-  def incrementalSqlQ10FullOuterIsNull(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterIsNullSql)
-      .run(s, dir, q10FullOuterAncestorDeletes)
-
-  def incrementalSqlQ10FullOuterIsNullStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterIsNullSql), dir,
-      q10FullOuterAncestorDeletes, "incremental_sql_q10_fullouter_isnull_leaf")
-
   /** FULL OUTER with **deletes on an ANCESTOR of the boundary pair**
     * (customer) — the other r8 fence lifted: the chain-shaped orphan
     * plan now keys on the TREE PREFIX's merged emissions (orders
@@ -1045,14 +997,6 @@ object IncrementalQueries {
     "customer" -> (col("c_custkey") % 30 === 0),
     "orders" -> (col("o_orderkey") % 50 === 0),
     "lineitem" -> (col("l_partkey") % 3 === 0))
-
-  def incrementalSqlQ10FullOuterAncestorDel(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compile(s, dir, q10FullOuterSql)
-      .run(s, dir, q10FullOuterAncestorDeletes)
-
-  def incrementalSqlQ10FullOuterAncestorDelStream(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, SqlCompiler.compile(s, dir, q10FullOuterSql), dir,
-      q10FullOuterAncestorDeletes, "incremental_sql_q10_fullouter_adel_leaf")
 
   /** The compiled FULL OUTER — fused fullOuterLeaf + the anti plan —
     * through the TWS driver under ancestor deletes: the compiler's
@@ -1481,33 +1425,6 @@ object IncrementalQueries {
         runSqlStreamed(s, c, dir, unionDeletes, s"incremental_sql_union_leaf_$i")
       }.reduce(_ unionAll _)
 
-  /** Conf-wired SKEW SALTING through the compiler (the bloom
-    * pattern, [[SaltRelationConf]]): the session conf names lineitem
-    * as the skewed relation and the compiler widens its liveness
-    * stage to 8 salted sub-keys. Same SQL text and survivors oracle
-    * as incremental_sql_q10 — the de-skew must be answer-invariant
-    * through the compiled path, not just the tree API
-    * (incremental_q10_salted). Child session, caller's conf never
-    * mutated. */
-  def incrementalSqlQ10Salted(s: SparkSession, dir: String): DataFrame = {
-    val ss = s.newSession()
-    ss.conf.set(SaltRelationConf, "lineitem")
-    ss.conf.set(SaltWidthConf, "8")
-    SqlCompiler.compile(ss, dir,
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)
-      .run(ss, dir, Map(
-        "lineitem" -> (col("l_linenumber") === 3),
-        "orders" -> (col("o_orderkey") % 50 === 0)))
-  }
-
   /** VIEW MODE through the CONTINUOUS engine: the compiled
     * non-aggregate SELECT replays over raw event streams and the bag
     * view (net-count explode) folds the streamed leaf — same oracle
@@ -1522,6 +1439,56 @@ object IncrementalQueries {
         "orders" -> (col("o_orderkey") % 10 === 0),
         "customer" -> (col("c_custkey") % 13 === 0)),
       "incremental_sql_view_stream_leaf")
+
+  /** Twin suffixes a [[maintained]] declaration generates: `_stream`
+    * replays the changelog through the continuous engine
+    * (flatMapGroupsWithState stages), `_tws` the same replay on
+    * transformWithState. */
+  private val Stream = "_stream"
+  private val Tws = "_tws"
+
+  /** Declare a maintained view ONCE. The batch entry `name` runs
+    * `sqlText` under `deletes` through [[SqlCompiler.run]] (or
+    * [[SqlCompiler.runCte]] when `cte`); every suffix in `twins` adds
+    * `name + suffix`, which replays the SAME statement and deletes as
+    * a changelog through [[runSqlStreamed]] (or [[runCteStreamed]])
+    * into the memory sink `<twin>_leaf` (the CTE runner prefixes its
+    * per-view sinks with the twin name); scalar-subquery gates resolve
+    * over the survivor inputs first, a no-op for a view without them,
+    * since `runStream` fences them. All of them are gated against
+    * the one `oracle` value, so a twin cannot drift from its base.
+    * `overrides` are relation loaders for [[SqlCompiler.compileOver]]'s
+    * seam; `confs` are set on a child session every form runs in.
+    * A twin whose oracle, statement or deletes differ on purpose, or
+    * that needs another runner (set operations, ASOF, OVER, recursion,
+    * hand-built trees), is written out by hand instead. */
+  private def maintained(name: String, oracle: String, sqlText: String,
+      deletes: Map[String, Column] = Map.empty, twins: Seq[String] = Seq(Stream),
+      cte: Boolean = false,
+      overrides: Map[String, (SparkSession, String) => DataFrame] = Map.empty,
+      confs: Map[String, String] = Map.empty): Seq[GraftQuery] = {
+    require(!(cte && overrides.nonEmpty), s"$name: relation overrides need a plain statement")
+    def session(s: SparkSession): SparkSession =
+      if (confs.isEmpty) s
+      else { val ss = s.newSession(); confs.foreach { case (k, v) => ss.conf.set(k, v) }; ss }
+    def compiled(s: SparkSession, dir: String): SqlCompiler.Compiled =
+      if (overrides.isEmpty) SqlCompiler.compile(s, dir, sqlText)
+      else SqlCompiler.compileOver(s, dir, sqlText, overrides)
+    sql(name, oracle) { (s0, dir) =>
+      val s = session(s0)
+      if (cte) SqlCompiler.runCte(s, dir, sqlText, deletes)
+      else compiled(s, dir).run(s, dir, deletes)
+    } +: twins.map { suffix =>
+      require(suffix == Stream || suffix == Tws, s"$name: unknown twin suffix $suffix")
+      val twin = name + suffix
+      sql(twin, oracle) { (s0, dir) =>
+        val s = session(s0)
+        if (cte) runCteStreamed(s, sqlText, dir, deletes, twin, tws = suffix == Tws)
+        else runSqlStreamed(s, compiled(s, dir).withScalarGatesResolved(s, dir, deletes),
+          dir, deletes, twin + "_leaf", tws = suffix == Tws)
+      }
+    }
+  }
 
   /** Compiled query → RAW (unfiltered) event streams — runStream's
     * eventFilter applies the compiled predicates per stream — →
@@ -1963,6 +1930,45 @@ object IncrementalQueries {
     Map("orders" -> (col("o_orderkey") % 3 === 2),
       "lineitem" -> (col("l_orderkey") % 3 === 2)))
 
+  /** The DRed entries' mixed changelog: batch 2 deletes every %10==0
+    * order inserted so far before adding its own slice. */
+  private def recursivePathsDredDeletes =
+    Map(2 -> Map("orders" -> (col("o_orderkey") % 10 === 0)))
+
+  /** The recursive_paths closure maintained ACROSS A SESSION RESTART:
+    * batches 0-1 run in one session, the closure persists to a
+    * snapshot table (keyed by a node hash), and a FRESH session
+    * reopens it from the log and processes batch 2 via the resume hook
+    * (initialClosure + startBatch) — per-batch semi-naive work
+    * continues exactly where the dead JVM stopped, never a
+    * from-scratch re-run. `deletesAt` is the changelog's delete
+    * schedule (batch 2 is the only one it may name: the resumed run
+    * reconstructs every pre/post-delete base state from pure filter
+    * expressions, without re-running prior batches). */
+  private def recursivePathsResumed(s: SparkSession, d: String,
+      deletesAt: Map[Int, Map[String, Column]] = Map.empty): DataFrame = {
+    import graft.sources.SnapshotLog
+    val partial = RecursiveSql.runIncremental(s, d, recursivePathsSql("STRING"),
+      batches = recursivePathsBatches.take(2), deltaLinear = true)
+    val s2 = s.newSession()
+    // an EMPTY partial closure (the tiny fixture has no nation-1
+    // suppliers) has nothing to persist — an empty partitioned parquet
+    // write carries no schema to reopen; resume with the empty frame
+    // directly (the seeding handles it: no accumulator leg, batch 2
+    // re-derives from its own anchor deltas)
+    val c0 =
+      if (partial.isEmpty) partial
+      else {
+        val root = java.nio.file.Files.createTempDirectory("graft_rec_resume").toString
+        SnapshotLog.commitInitial(
+          partial.select(xxhash64(col("node")).as("k"), col("node")), root, "k")
+        SnapshotLog.readVersion(s2, root, 0).select("node")
+      }
+    RecursiveSql.runIncremental(s2, d, recursivePathsSql("STRING"),
+      batches = recursivePathsBatches, deletesAt = deletesAt, deltaLinear = true,
+      initialClosure = Some(c0), startBatch = 2)
+  }
+
   val defs: Seq[GraftQuery] = Seq(
 
     // WITH RECURSIVE — linear recursion compiled onto the checkpointed
@@ -2019,39 +2025,11 @@ object IncrementalQueries {
         batches = recursivePathsBatches, deltaLinear = true)
     },
 
-    // … RESUMED ACROSS A SESSION RESTART: batches 0-1 run in one
-    // session, the closure persists to a snapshot table (keyed by a
-    // node hash), and a FRESH session reopens it from the log and
-    // processes batch 2 via the resume hook (initialClosure +
-    // startBatch) — per-batch semi-naive work continues exactly where
-    // the dead JVM stopped, never a from-scratch re-run. Same oracle
-    // as the uninterrupted twin: the restart must be invisible.
-    sql("incremental_sql_recursive_paths_resume",
-      recursivePathsSql("VARCHAR")) {
-      (s, d) =>
-        import graft.sources.SnapshotLog
-        val partial = RecursiveSql.runIncremental(s, d,
-          recursivePathsSql("STRING"),
-          batches = recursivePathsBatches.take(2), deltaLinear = true)
-        val s2 = s.newSession()
-        // an EMPTY partial closure (the tiny fixture has no nation-1
-        // suppliers) has nothing to persist — an empty partitioned
-        // parquet write carries no schema to reopen; resume with the
-        // empty frame directly (the seeding handles it: no accumulator
-        // leg, batch 2 re-derives from its own anchor deltas)
-        val c0 =
-          if (partial.isEmpty) partial
-          else {
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_rec_resume").toString
-            SnapshotLog.commitInitial(
-              partial.select(xxhash64(col("node")).as("k"), col("node")),
-              root, "k")
-            SnapshotLog.readVersion(s2, root, 0).select("node")
-          }
-        RecursiveSql.runIncremental(s2, d, recursivePathsSql("STRING"),
-          batches = recursivePathsBatches, deltaLinear = true,
-          initialClosure = Some(c0), startBatch = 2)
+    // … RESUMED ACROSS A SESSION RESTART ([[recursivePathsResumed]]):
+    // batch 2 runs in a fresh session from the persisted closure. Same
+    // oracle as the uninterrupted twin: the restart must be invisible.
+    sql("incremental_sql_recursive_paths_resume", recursivePathsSql("VARCHAR")) {
+      (s, d) => recursivePathsResumed(s, d)
     },
 
     // … and under a MIXED changelog (DRed-lite): batch 2 DELETES every
@@ -2066,8 +2044,7 @@ object IncrementalQueries {
         "(SELECT * FROM orders WHERE o_orderkey % 10 <> 0) odel")) {
       (s, d) => RecursiveSql.runIncremental(s, d, recursivePathsSql("STRING"),
         batches = recursivePathsBatches,
-        deletesAt = Map(2 -> Map("orders" -> (col("o_orderkey") % 10 === 0))),
-        deltaLinear = true)
+        deletesAt = recursivePathsDredDeletes, deltaLinear = true)
     },
 
     // … RESUME × DRed — the two maintenance disciplines COMPOSED:
@@ -2085,28 +2062,7 @@ object IncrementalQueries {
     sql("incremental_sql_recursive_paths_dred_resume",
       recursivePathsSql("VARCHAR",
         "(SELECT * FROM orders WHERE o_orderkey % 10 <> 0) odel")) {
-      (s, d) =>
-        import graft.sources.SnapshotLog
-        val partial = RecursiveSql.runIncremental(s, d,
-          recursivePathsSql("STRING"),
-          batches = recursivePathsBatches.take(2), deltaLinear = true)
-        val s2 = s.newSession()
-        // empty-partial guard as in the insert-only resume twin: an
-        // empty partitioned parquet write has no schema to reopen
-        val c0 =
-          if (partial.isEmpty) partial
-          else {
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_rec_dred_resume").toString
-            SnapshotLog.commitInitial(
-              partial.select(xxhash64(col("node")).as("k"), col("node")),
-              root, "k")
-            SnapshotLog.readVersion(s2, root, 0).select("node")
-          }
-        RecursiveSql.runIncremental(s2, d, recursivePathsSql("STRING"),
-          batches = recursivePathsBatches,
-          deletesAt = Map(2 -> Map("orders" -> (col("o_orderkey") % 10 === 0))),
-          deltaLinear = true, initialClosure = Some(c0), startBatch = 2)
+      (s, d) => recursivePathsResumed(s, d, recursivePathsDredDeletes)
     },
 
     // WITH RECURSIVE alongside HELPER CTEs: `edges` (no r reference)
@@ -2283,17 +2239,7 @@ object IncrementalQueries {
         CdcParser.parseJsonEnvelope(lines, rowSchema, jsonOpts)
     },
 
-    sql("incremental_q10",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10),
+    sql("incremental_q10", q10Oracle)(incrementalQ10),
 
     // The SAME maintained tree folded into (nation, order month)
     // buckets — see [[incrementalMonthlyRevenue]]: derived time-bucket
@@ -2357,17 +2303,7 @@ object IncrementalQueries {
     // a reduction bug (over-dropping a probe event that WOULD have
     // joined alive at some replay point) fails the hash against the
     // unreduced truth.
-    sql("incremental_q10_bloom",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10Bloom),
+    sql("incremental_q10_bloom", q10Oracle)(incrementalQ10Bloom),
 
     sql("incremental_order_revenue",
       """SELECT n_name,
@@ -2411,49 +2347,19 @@ object IncrementalQueries {
     // pushdown now reaches the text scan), events canon-encoded, and
     // the same Q10 tree + aggregate. A reference user's actual input
     // files drive the engine; the oracle is incremental_q10's.
-    sql("incremental_q10_from_cdc",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10FromCdc),
+    sql("incremental_q10_from_cdc", q10Oracle)(incrementalQ10FromCdc),
 
     // The JSON-envelope wire format driving the SAME tree (per-topic
     // streams, 'd' envelopes as deletes) — same oracle as
     // incremental_q10, so a format/demux/sign asymmetry fails the hash.
-    sql("incremental_q10_from_json",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10FromJson),
+    sql("incremental_q10_from_json", q10Oracle)(incrementalQ10FromJson),
 
     // The file-STREAM deployment shape gated end to end: CDC text
     // files dropped into a watched dir → readStream.text → CdcParser
     // demux → streaming tree (state carried across TWO file
     // micro-batches) → foreachBatch upsert into the result table.
     // Same oracle as incremental_q10.
-    sql("incremental_q10_filestream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10FileStream),
+    sql("incremental_q10_filestream", q10Oracle)(incrementalQ10FileStream),
 
     // STATE OBSERVABILITY gated: each Q10-tree node's end-of-replay
     // keyed-state footprint ([[DeltaEngine.stateMetrics]]) on the
@@ -2498,116 +2404,50 @@ object IncrementalQueries {
           .select(col("node"), col("n_keys"), col("state_rows"))
     },
 
-    // The SAME query as incremental_q10, but compiled FROM SQL TEXT by
-    // [[SqlCompiler]] (Catalyst parser → FK-graph validation → NodeSpec
-    // chain): the reference's "continuous sql query" pitch as an
-    // actual API. Deletes mirror the q10 changelog set; the oracle is
-    // the plain-SQL survivors query.
-    sql("incremental_sql_q10",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-           | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-           | COUNT(*) AS n_rows
-           |FROM nation, customer, orders, lineitem
-           |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-           | AND c_nationkey = n_nationkey
-           | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-           | AND l_returnflag = 'R'
-           |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
-        deletes = Map(
-          "lineitem" -> (col("l_linenumber") === 3),
-          "orders" -> (col("o_orderkey") % 50 === 0)))
-    },
-
     // Same compiled query, same oracle — but the COMPILER applies the
     // bloom semi-join reduction (leaf changelog pre-filtered by the
     // parent's key bloom) because the session opts in, exercising the
     // SqlCompiler.run wiring rather than the explicit tree API.
-    sql("incremental_sql_q10_bloom",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin) {
+    sql("incremental_sql_q10_bloom", q10Oracle) {
       (s, dir) =>
         val ss = s.newSession()
         ss.conf.set(BloomPrefilterConf, "true")
         ss.conf.set(BloomPrefilterItemsConf, "200000")
         ss.conf.set(BloomPrefilterFppConf, "0.01")
-        SqlCompiler.run(ss, dir,
-          s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-             | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-             | COUNT(*) AS n_rows
-             |FROM nation, customer, orders, lineitem
-             |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-             | AND c_nationkey = n_nationkey
-             | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-             | AND l_returnflag = 'R'
-             |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
-          deletes = Map(
-            "lineitem" -> (col("l_linenumber") === 3),
-            "orders" -> (col("o_orderkey") % 50 === 0)))
+        SqlCompiler.run(ss, dir, q10Sql, deletes = q10Deletes)
+    },
+
+    // The BLOOM-REDUCED compiled tree streamed: the leaf changelog is
+    // pre-filtered by a STATIC bloom built from the parent's key
+    // universe before entering the stream — the standard deployment
+    // shape for a pre-built reduction filter — and the reduction must
+    // be answer-invariant through the replay (same oracle as
+    // incremental_sql_q10).
+    sql("incremental_sql_q10_bloom_stream", q10Oracle) {
+      (s, dir) =>
+        val ss = s.newSession()
+        ss.conf.set(BloomPrefilterConf, "true")
+        runSqlStreamed(ss, SqlCompiler.compile(ss, dir, q10Sql), dir, q10Deletes,
+          "incremental_sql_q10_bloom_stream_leaf",
+          transformLogs = logs => bloomPrefilterChild(logs,
+            parentRel = "orders", parentChildKey = "o_orderkey",
+            childRel = "lineitem", expectedItems = 200000L, fpp = 0.01))
     },
 
     // The skew mitigation behind the hash gate — q10 with the
     // lineitem hop salted; same oracle as incremental_q10.
-    sql("incremental_q10_salted",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10Salted),
+    sql("incremental_q10_salted", q10Oracle)(incrementalQ10Salted),
 
     // The streaming engine (runStream), not its batch simulation,
     // behind the hash gate — same oracle as incremental_q10.
-    sql("incremental_q10_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10Stream),
+    sql("incremental_q10_stream", q10Oracle)(incrementalQ10Stream),
 
     // The flagship tree on transformWithState (Spark 4's supported
     // arbitrary-state API): per-node typed MapState child multisets
     // (point reads/writes in RocksDB instead of per-batch blob
     // rewrites), ValueState liveness counters, real per-key timers
     // for TTL — same replay, same oracle as incremental_q10_stream.
-    sql("incremental_q10_tws",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10Tws),
+    sql("incremental_q10_tws", q10Oracle)(incrementalQ10Tws),
 
     // The maintained view MAINTAINED INTO THE LAKEHOUSE TABLE — the
     // reference's text-file sink upgraded: per-batch signed deltas
@@ -2615,33 +2455,13 @@ object IncrementalQueries {
     // update / retract-to-zero DELETE), final snapshot vs the same
     // survivors oracle. Every intermediate version stays
     // time-travelable.
-    sql("incremental_q10_snapshot_sink",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10SnapshotSink),
+    sql("incremental_q10_snapshot_sink", q10Oracle)(incrementalQ10SnapshotSink),
 
     // The same continuous tree with EVENT-TIME TTL enabled (watermark
     // + EventTimeTimeout on every stage; delay past the fixture span,
     // so bounded state leaves the answer untouched — the production
     // contract). Same survivors oracle.
-    sql("incremental_q10_stream_ttl",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalQ10StreamTtl),
+    sql("incremental_q10_stream_ttl", q10Oracle)(incrementalQ10StreamTtl),
 
     // LEFT OUTER over the MAINTAINED view — the enrichment shape a
     // reference user actually consumes: every customer (dimension
@@ -2678,38 +2498,6 @@ object IncrementalQueries {
           .select(col("c_custkey"), col("n_name"), col("revenue_e4"),
             coalesce(col("__n"), lit(0L)).as("n_rows"))
     },
-
-    // SQL text → compiled plan → the CONTINUOUS engine (runStream over
-    // raw streams, eventFilter pushdown) — same oracle as
-    // incremental_q10.
-    sql("incremental_sql_q10_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalSqlQ10Stream),
-
-    // LEFT OUTER JOIN from SQL text — inner tree + anti plan unioned
-    // into one fold; NULL-extended orders (no R-lineitem) keep
-    // COUNT(*) alive while SUM skips them. Oracle: the same LEFT JOIN
-    // over the survivors.
-    sql("incremental_sql_q10_outer",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalSqlQ10Outer),
 
     // TOP-LEVEL UNION ALL from SQL text — two maintained trees, one
     // result: customer-side and supplier-side nation revenue, each
@@ -3083,458 +2871,8 @@ object IncrementalQueries {
         |JOIN s ON s_nationkey = n_nationkey
         |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlExceptStream),
 
-    // FULL OUTER JOIN from SQL text — both preservation directions
-    // maintained: the anti plan NULL-extends orders that lost every
-    // lineitem, the orphan plan preserves lineitems whose order was
-    // deleted (they fold under NULL customer/nation keys — SQL's
-    // right-preserved row). Oracle: DuckDB FULL JOIN over
-    // delete-filtered derived tables (deletes must live in the
-    // subqueries, not WHERE, which would NULL-reject the orphans).
-    sql("incremental_sql_q10_fullouter",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuter),
-
-    // FULL OUTER × EXISTS gate on an inner relation: the gate is FALSE
-    // on every right-preserved row (structural NULL correlation), so
-    // the orphan class is not built; children of gate-failing nations
-    // were MATCHED rows at join time and are WHERE-dropped — the
-    // ungated-prefix orphan plan must not resurrect them. Oracle is
-    // the literal FULL JOIN + WHERE EXISTS over the post-delete state,
-    // so DuckDB performs the same join-then-filter independently.
-    sql("incremental_sql_q10_fullouter_gated",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE EXISTS (SELECT 1 FROM region
-        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => incrementalSqlQ10FullOuterGated(s, dir, "")
-    },
-    sql("incremental_sql_q10_fullouter_gated_stream",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE EXISTS (SELECT 1 FROM region
-        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => incrementalSqlQ10FullOuterGatedStream(s, dir, "",
-        "incremental_sql_q10_fullouter_gated_leaf")
-    },
-
-    // … and the NOT EXISTS mirror: trivially TRUE on the structural
-    // NULLs, so the orphan group (lineitems whose order died, under
-    // the delete set) IS emitted while every ASIA-matched row drops.
-    sql("incremental_sql_q10_fullouter_gated_anti",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE NOT EXISTS (SELECT 1 FROM region
-        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => incrementalSqlQ10FullOuterGated(s, dir, "NOT ")
-    },
-    sql("incremental_sql_q10_fullouter_gated_anti_stream",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE NOT EXISTS (SELECT 1 FROM region
-        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => incrementalSqlQ10FullOuterGatedStream(s, dir, "NOT ",
-        "incremental_sql_q10_fullouter_gated_anti_leaf")
-    },
-    // … through the TRANSFORMWITHSTATE driver — the ungated-prefix
-    // orphan plan + the gate key node on the supported state API.
-    sql("incremental_sql_q10_fullouter_gated_anti_tws",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE NOT EXISTS (SELECT 1 FROM region
-        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compile(s, dir, q10FullOuterGatedSql("NOT ")), dir,
-        q10FullOuterDeletes, "incremental_sql_q10_fullouter_gated_anti_tws_leaf",
-        tws = true)
-    },
-    // the IN spelling of the same gate (IN ≡ EXISTS on the matched
-    // side; on structural NULLs both are not-TRUE, so the orphan class
-    // drops identically — the oracle says so in the IN spelling).
-    sql("incremental_sql_q10_fullouter_gated_in",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.compile(s, dir,
-        """SELECT c_custkey, n_name,
-          | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-          | COUNT(*) AS n_rows
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
-          |GROUP BY c_custkey, n_name""".stripMargin)
-        .run(s, dir, q10FullOuterDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_gated_in_stream",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
-        |GROUP BY c_custkey, n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_custkey, n_name,
-            | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-            | COUNT(*) AS n_rows
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
-            |GROUP BY c_custkey, n_name""".stripMargin),
-        dir, q10FullOuterDeletes, "incremental_sql_q10_fullouter_gated_in_leaf")
-    },
-
-    // FULL OUTER + WHERE on the preserved side (r8's loud rejection,
-    // now planned): the date conjunct NULL-rejects every orphan row
-    // in SQL, so the compile drops the orphan plan and keeps the
-    // NULL-extension side — gated against DuckDB running the LITERAL
-    // FULL JOIN + WHERE, which performs the same NULL-rejection
-    // independently.
-    sql("incremental_sql_q10_fullouter_filtered",
-      s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-         |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-         |SELECT c_custkey, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation JOIN customer ON c_nationkey = n_nationkey
-         | JOIN o ON o_custkey = c_custkey
-         | FULL JOIN l ON l_orderkey = o_orderkey
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterFiltered),
-
-    // … and through the CONTINUOUS engine.
-    sql("incremental_sql_q10_fullouter_filtered_stream",
-      s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-         |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-         |SELECT c_custkey, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation JOIN customer ON c_nationkey = n_nationkey
-         | JOIN o ON o_custkey = c_custkey
-         | FULL JOIN l ON l_orderkey = o_orderkey
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterFilteredStream),
-
-    // FULL OUTER + WHERE on the boundary CHILD — the mirror
-    // NULL-rejection: extensions die, orphans survive the filter
-    // (effectively the RIGHT-preserved reading), gated against the
-    // literal FULL JOIN + WHERE which DuckDB NULL-rejects itself.
-    sql("incremental_sql_q10_fullouter_child_filtered",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE l_linenumber <> 3
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterChildFiltered),
-
-    // … and through the CONTINUOUS engine (orphans assert/retract
-    // across micro-batches under the child filter).
-    sql("incremental_sql_q10_fullouter_child_filtered_stream",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE l_linenumber <> 3
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterChildFilteredStream),
-
-    // FULL OUTER + WHERE o_orderkey IS NULL — the find-the-orphans
-    // idiom (r9's loud fence, now planned): the view is EXACTLY the
-    // orphan plan's output, every left grouping key NULL. Gated
-    // against DuckDB running the literal FULL JOIN + IS NULL, which
-    // selects the right-preserved rows independently; ancestor
-    // deletes make orphan creation flow through the tree prefix.
-    sql("incremental_sql_q10_fullouter_isnull",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE o_orderkey IS NULL
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterIsNull),
-
-    // … and through the CONTINUOUS engine: batch 2's customer/order
-    // deletes must CREATE orphan rows through held state in a view
-    // that has no inner tree at all.
-    sql("incremental_sql_q10_fullouter_isnull_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE o_orderkey IS NULL
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterIsNullStream),
-
-    // FULL OUTER with ANCESTOR deletes (r8's other fence): deleting a
-    // customer must orphan its orders' lineitems — the tree-prefix
-    // orphan key node sees the flip through the customer hop. Oracle:
-    // all three delete sets as derived tables, orphans via FULL JOIN.
-    sql("incremental_sql_q10_fullouter_ancestor_del",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterAncestorDel),
-
-    // TWO NESTED FULL OUTER boundaries × WHERE — the r10 verdict's
-    // last compile fence, lifted. SQL's double FULL OUTER decomposes
-    // into six row classes (see SqlCompiler's NESTED TWO-BOUNDARY
-    // section); the WHERE on the leaf kills the three classes whose
-    // lineitem side is NULL, so this maintains the main tree PLUS the
-    // two genuinely new plans: orphan-orders ⋈ their lineitems
-    // (a customer delete moves whole order subtrees into it) and
-    // orphan-lineitems keyed off orders' RAW changelog (an orders
-    // delete moves rows into it). Deletes on all three levels.
-    sql("incremental_sql_q10_fullouter_two_boundary",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-          | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE l_returnflag = 'R'
-          |GROUP BY n_name, o_orderpriority""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)))
-    },
-
-    // … and WITHOUT a WHERE: all SIX classes maintained at once,
-    // including orphan-orders-with-no-lineitems (the NOT EXISTS wiring
-    // over the orphan hop's emissions — the one class the filtered
-    // entry's WHERE kills). Same triple-level deletes.
-    sql("incremental_sql_q10_fullouter_two_boundary_all",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-          | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |GROUP BY n_name, o_orderpriority""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)))
-    },
-
-    // … the filtered two-boundary view through the CONTINUOUS engine,
-    // same oracle: six plans' state across micro-batches, deletes
-    // retracting in later batches than their inserts.
-    sql("incremental_sql_q10_fullouter_two_boundary_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE l_returnflag = 'R'
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_two_boundary_stream_leaf")
-    },
-
-    // … and the same six-plan compile on the TRANSFORMWITHSTATE
-    // drivers, same oracle — the orphan-subtree chains (stages
-    // consuming other stages' emissions) on the supported state API.
-    sql("incremental_sql_q10_fullouter_two_boundary_tws",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE l_returnflag = 'R'
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_two_boundary_tws_leaf", tws = true)
-    },
-
-    // … and the UNFILTERED six-class view through the CONTINUOUS
-    // engine — all five preservation plans' state across micro-batches
-    // at once, same oracle as the batch _all entry.
-    sql("incremental_sql_q10_fullouter_two_boundary_all_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_two_boundary_all_stream_leaf")
-    },
-
-    // … and the FIND-THE-ORPHANS reading across both boundaries:
-    // `c_custkey IS NULL` selects exactly the classes whose customer
-    // side is nulled (orphan-orders ⋈ lineitems + orphan-lineitems;
-    // the main tree never runs — suppressMainLeaf), composed with the
-    // null-rejecting lineitem conjunct that drops the no-C class.
-    sql("incremental_sql_q10_fullouter_two_boundary_isnull",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE c_custkey IS NULL AND l_returnflag = 'R'
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT o_orderpriority, COUNT(*) AS n_rows,
-          | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE c_custkey IS NULL AND l_returnflag = 'R'
-          |GROUP BY o_orderpriority""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)))
-    },
-
     // … the same compiled FULL OUTER (fused leaf + anti plan, ancestor
-    // deletes) through the TRANSFORMWITHSTATE driver — the compiler's
+    // deletes) through the TRANSFORMWITHSTATE runner — the compiler's
     // hardest maintained shape on the supported state API, same
     // oracle: three state implementations, one truth.
     sql("incremental_sql_q10_fullouter_tws",
@@ -3548,80 +2886,6 @@ object IncrementalQueries {
         | JOIN o ON o_custkey = c_custkey
         | FULL JOIN l ON l_orderkey = o_orderkey
         |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterTws),
-
-    // … and through the CONTINUOUS engine — the customer delete
-    // arrives in batch 2 and must CREATE orphans through held state.
-    sql("incremental_sql_q10_fullouter_ancestor_del_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterAncestorDelStream),
-
-    // The same FULL OUTER through the CONTINUOUS engine — orphan
-    // preservation flips ON mid-stream when batch 2 deletes orders.
-    sql("incremental_sql_q10_fullouter_stream",
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterStream),
-
-    // RIGHT OUTER JOIN from SQL text — canonicalized by the compiler
-    // onto the LEFT OUTER machinery (children swapped, preserved side
-    // unchanged); same oracle as the LEFT form because the two
-    // spellings denote the same view.
-    sql("incremental_sql_q10_right",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalSqlQ10Right),
-
-    // The same compiled LEFT JOIN through the CONTINUOUS engine —
-    // NULL-extensions assert/retract across real micro-batches.
-    sql("incremental_sql_q10_outer_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalSqlQ10OuterStream),
-
-    // Conf-wired skew salting through the COMPILER (the bloom conf
-    // pattern) — lineitem's stage folds over 8 salted sub-keys; same
-    // survivors oracle as incremental_sql_q10.
-    sql("incremental_sql_q10_salted",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin)(incrementalSqlQ10Salted),
 
     sql("incremental_q10_rev_quantile",
       s"""WITH v AS (
@@ -3676,150 +2940,6 @@ object IncrementalQueries {
         | AND l_quantity >= 25 AND l_linenumber <> 2 AND s_suppkey % 20 <> 0
         |GROUP BY n_name""".stripMargin)(incrementalSupplierRevenue),
 
-    // AVG maintained incrementally — compiled by SqlCompiler to the
-    // retractable SUM/COUNT pair (exact integral folds, one double
-    // division per group; FP arguments are rejected at compile time).
-    // The oracle mirrors the same exact-sum-then-divide so the double
-    // is bit-identical.
-    sql("incremental_sql_avg",
-      """SELECT n_name,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
-        |   / COUNT(*) AS avg_price_e2,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name,
-          | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS avg_price_e2,
-          | COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // VAR_SAMP / STDDEV_SAMP maintained incrementally — the compiler
-    // folds the retractable moments (n, Σx, Σx²) exactly (Σ in
-    // DECIMAL(38,0); INTEGRAL argument enforced at compile time) and
-    // evaluates (n·Σx² − (Σx)²)/(n·(n−1)) once per group in double.
-    // The oracle mirrors that formula literally over the same exact
-    // integer moments (HUGEINT sums), so the doubles — and sqrt, IEEE
-    // correctly rounded — are bit-identical across engines.
-    // POPULATION variance/stddev — same retractable (n, Σx, Σx²)
-    // moments as the _SAMP forms, denominator n² (defined from one
-    // row, so single-row groups emit 0 instead of NULL).
-    sql("incremental_sql_stddev_pop",
-      """WITH t AS (
-        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-        | FROM region, nation, customer, orders
-        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        |  AND o_custkey = c_custkey
-        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
-        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
-        |      FROM t GROUP BY n_name)
-        |SELECT n_name,
-        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * n, 0) AS DOUBLE) AS var_pop_e2,
-        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * n, 0) AS DOUBLE)) AS std_pop_e2,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name,
-          | VAR_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_pop_e2,
-          | STDDEV_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_pop_e2,
-          | COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // The population-moments fold over the CONTINUOUS engine's
-    // streamed leaf — same oracle as incremental_sql_stddev_pop
-    // (stream/batch parity: the exact (n, Σx, Σx²) state must survive
-    // micro-batch replay with deletes retracting in later batches).
-    sql("incremental_sql_stddev_pop_stream",
-      """WITH t AS (
-        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-        | FROM region, nation, customer, orders
-        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        |  AND o_custkey = c_custkey
-        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
-        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
-        |      FROM t GROUP BY n_name)
-        |SELECT n_name,
-        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * n, 0) AS DOUBLE) AS var_pop_e2,
-        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * n, 0) AS DOUBLE)) AS std_pop_e2,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name,
-            | VAR_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_pop_e2,
-            | STDDEV_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_pop_e2,
-            | COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_stddev_pop_stream_leaf")
-    },
-
-    sql("incremental_sql_stddev",
-      """WITH t AS (
-        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-        | FROM region, nation, customer, orders
-        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        |  AND o_custkey = c_custkey
-        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
-        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
-        |      FROM t GROUP BY n_name)
-        |SELECT n_name,
-        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE) AS var_price_e2,
-        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE)) AS std_price_e2,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name,
-          | VAR_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_price_e2,
-          | STDDEV_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_price_e2,
-          | COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
     // Pearson CORRELATION maintained incrementally — the compiler
     // folds retractable CO-MOMENTS (n, Σx, Σy, Σx², Σy², Σxy) exactly
     // (DECIMAL(38,0); INTEGRAL arguments enforced) and evaluates
@@ -3865,82 +2985,6 @@ object IncrementalQueries {
         deletes = Map(
           "customer" -> (col("c_custkey") % 11 === 0),
           "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // CORR composed with ROLLUP — the co-moment folds run per grouping
-    // set through the same delta-side Expand as every other aggregate
-    // family, so subtotal and grand-total correlations maintain
-    // incrementally too; DuckDB's native ROLLUP + its own moment
-    // mirror per set is the oracle.
-    sql("incremental_sql_corr_rollup",
-      """WITH t AS (
-        | SELECT n_name, o_orderstatus,
-        |  CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x, o_custkey AS y
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |m AS (SELECT n_name, o_orderstatus,
-        |  COUNT(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN 1 END) AS n,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) END) AS sx,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) END) AS sy,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * x END) AS sxx,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) * y END) AS syy,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * y END) AS sxy,
-        |  COUNT(*) AS n_rows
-        | FROM t GROUP BY ROLLUP (n_name, o_orderstatus))
-        |SELECT n_name, o_orderstatus,
-        | (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / NULLIF(sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))
-        |    * sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE), 0.0)), 0.0) AS r,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderstatus,
-          | CORR(CAST(round(o_totalprice * 100, 0) AS BIGINT), o_custkey) AS r,
-          | COUNT(*) AS n_rows
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-    // CORR × ROLLUP on the CONTINUOUS engine — same oracle as
-    // incremental_sql_corr_rollup: the per-grouping-set co-moment
-    // folds (delta-side Expand) under micro-batch replay.
-    sql("incremental_sql_corr_rollup_stream",
-      """WITH t AS (
-        | SELECT n_name, o_orderstatus,
-        |  CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x, o_custkey AS y
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |m AS (SELECT n_name, o_orderstatus,
-        |  COUNT(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN 1 END) AS n,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) END) AS sx,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) END) AS sy,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * x END) AS sxx,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) * y END) AS syy,
-        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * y END) AS sxy,
-        |  COUNT(*) AS n_rows
-        | FROM t GROUP BY ROLLUP (n_name, o_orderstatus))
-        |SELECT n_name, o_orderstatus,
-        | (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / NULLIF(sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))
-        |    * sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE), 0.0)), 0.0) AS r,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderstatus,
-            | CORR(CAST(round(o_totalprice * 100, 0) AS BIGINT), o_custkey) AS r,
-            | COUNT(*) AS n_rows
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_corr_rollup_stream_leaf")
     },
 
     // CORR + COVAR_SAMP over the CONTINUOUS engine's streamed leaf —
@@ -3989,369 +3033,6 @@ object IncrementalQueries {
           "customer" -> (col("c_custkey") % 11 === 0),
           "orders" -> (col("o_orderkey") % 7 === 0)),
         "incremental_sql_corr_stream_leaf")
-    },
-
-    // The integer-moments fold over the CONTINUOUS engine's streamed
-    // leaf — same oracle as incremental_sql_stddev, so the exactness
-    // of (n, Σx, Σx²) must survive micro-batch replay: partial state
-    // across batches, deletes arriving as retractions in a LATER
-    // batch than their inserts. A drifting float fold would diverge
-    // here even when the batch entry passes.
-    sql("incremental_sql_stddev_stream",
-      """WITH t AS (
-        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-        | FROM region, nation, customer, orders
-        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        |  AND o_custkey = c_custkey
-        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
-        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
-        |      FROM t GROUP BY n_name)
-        |SELECT n_name,
-        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE) AS var_price_e2,
-        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE)) AS std_price_e2,
-        | n_rows
-        |FROM m""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name,
-            | VAR_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_price_e2,
-            | STDDEV_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_price_e2,
-            | COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_stddev_stream_leaf")
-    },
-
-    // COUNT(DISTINCT) maintained incrementally — no extra engine
-    // state: the leaf delta multiset nets per (group, value), so the
-    // compiler derives it with a per-value rollup joined back on the
-    // group keys.
-    sql("incremental_sql_count_distinct",
-      """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
-        | CAST(SUM(DISTINCT o_custkey) AS BIGINT) AS sum_cust, COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
-          | SUM(DISTINCT o_custkey) AS sum_cust, COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // AVG(DISTINCT) — the remaining distinct-aggregate form: same
-    // per-(group, value) netting rollup as SUM/COUNT DISTINCT, exact
-    // integer Σ and n over the surviving value set, ONE correctly-
-    // rounded IEEE division — so retraction-exact and bit-identical
-    // cross-engine.
-    sql("incremental_sql_avg_distinct",
-      """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
-        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
-          | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // The per-(group, value) netting rollup over the CONTINUOUS
-    // engine's streamed leaf — same oracle as
-    // incremental_sql_count_distinct: a value's net count crossing
-    // zero in a LATER micro-batch must remove it from the distinct set.
-    sql("incremental_sql_count_distinct_stream",
-      """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
-        | CAST(SUM(DISTINCT o_custkey) AS BIGINT) AS sum_cust, COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
-            | SUM(DISTINCT o_custkey) AS sum_cust, COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_count_distinct_stream_leaf")
-    },
-
-    // AVG(DISTINCT) on the same streamed rollup — same oracle as
-    // incremental_sql_avg_distinct (exact integer Σ and n over the
-    // surviving value set, one IEEE division at presentation).
-    sql("incremental_sql_avg_distinct_stream",
-      """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
-        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
-            | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_avg_distinct_stream_leaf")
-    },
-
-    // Aggregate FILTER clauses — everyday SQL the compiler turns into
-    // sign-weighted CASE folds (rows failing the predicate contribute
-    // NULL, which every retractable aggregate handles exactly; COUNT
-    // FILTER becomes a 0/1 SUM). One entry carries a FILTER on every
-    // supported kind; the oracle uses DuckDB's native FILTER (CASE for
-    // the DISTINCT one) so the rewrite itself is what's gated.
-    sql("incremental_sql_filter",
-      """SELECT n_name,
-        | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |   FILTER (WHERE o_totalprice > 150000) AS BIGINT) AS big_rev_e2,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |   FILTER (WHERE o_orderkey % 2 = 0) AS DOUBLE)
-        |   / COUNT(*) FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
-        | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
-        | COUNT(DISTINCT CASE WHEN o_totalprice > 100000 THEN o_orderpriority END) AS n_prio_big,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name,
-          | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-          | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-          |   FILTER (WHERE o_totalprice > 150000) AS big_rev_e2,
-          | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-          |   FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
-          | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
-          | COUNT(DISTINCT o_orderpriority) FILTER (WHERE o_totalprice > 100000) AS n_prio_big,
-          | COUNT(*) AS n_rows
-          |FROM region, nation, customer, orders
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND o_custkey = c_custkey
-          | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)))
-    },
-
-    // EXISTS from SQL text — the correlated subquery compiles to a
-    // set-semantics key node over orders(o_custkey) gating customer's
-    // changelog through an extra liveness hop (SqlCompiler gate
-    // surgery); the subquery's local predicate is pushed to the orders
-    // scan. Same changelog/delete schedule as the hand-built
-    // incremental_exists_semi, proving text and tree agree.
-    sql("incremental_sql_exists",
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM customer
-        |WHERE c_custkey % 30 <> 0
-        | AND EXISTS (SELECT 1 FROM orders
-        |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |               AND o_orderkey % 40 <> 0)
-        |GROUP BY c_nationkey""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_nationkey, COUNT(*) AS n_cust,
-          | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
-          |FROM customer
-          |WHERE EXISTS (SELECT 1 FROM orders
-          |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-          |GROUP BY c_nationkey""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 30 === 0),
-          "orders" -> (col("o_orderkey") % 40 === 0)))
-    },
-
-    // NOT EXISTS from SQL text, composed WITH an outer FK tree: the
-    // anti gate splices in front of customer's tree stage (base
-    // changelog routes by the correlation key c_custkey, the gate
-    // re-keys survivors by c_nationkey into the nation join).
-    sql("incremental_sql_not_exists",
-      """SELECT n_name, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM nation, customer
-        |WHERE c_nationkey = n_nationkey
-        | AND c_custkey % 30 <> 0
-        | AND NOT EXISTS (SELECT 1 FROM orders
-        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |                   AND o_orderkey % 40 <> 0)
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, COUNT(*) AS n_cust,
-          | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
-          |FROM nation, customer
-          |WHERE c_nationkey = n_nationkey
-          | AND NOT EXISTS (SELECT 1 FROM orders
-          |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 30 === 0),
-          "orders" -> (col("o_orderkey") % 40 === 0)))
-    },
-
-    // IN (subquery) from SQL text — the projected column is the
-    // matching key, the equality implicit; compiles to the same semi
-    // gate. Deletes shrink the matching set (a customer leaving
-    // retracts every order it admitted) and the outer side.
-    sql("incremental_sql_in",
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderkey % 6 <> 0
-        | AND o_custkey IN (SELECT c_custkey FROM customer
-        |                   WHERE c_acctbal > 1000 AND c_custkey % 30 <> 0)
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT o_orderpriority, COUNT(*) AS n_orders
-          |FROM orders
-          |WHERE o_custkey IN (SELECT c_custkey FROM customer
-          |                    WHERE c_acctbal > 1000)
-          |GROUP BY o_orderpriority""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 30 === 0)))
-    },
-
-    // SELF-JOIN from SQL text — one relation under two FROM aliases,
-    // compiled via SqlCompiler's alias expansion (each instance becomes
-    // its own virtual relation o1/o2 with prefixed columns): urgent
-    // orders paired with low-priority orders of the same customer, the
-    // hierarchy/pair shape a real user writes first. Plans as customer
-    // (a root dimension) shared by the two instances — the
-    // trunk-bucketed pair glue — with instance-independent deletes
-    // retracting across the product in both directions. DuckDB runs
-    // the self-join natively as the oracle.
-    sql("incremental_sql_self_join",
-      """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
-        |FROM customer, orders o1, orders o2
-        |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-        | AND o1.o_orderkey % 7 <> 0 AND o2.o_orderkey % 5 <> 0
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-          | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-          |FROM customer, orders o1, orders o2
-          |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-          | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-          |GROUP BY c_mktsegment""".stripMargin,
-        deletes = Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "o2" -> (col("o2_o_orderkey") % 5 === 0)))
-    },
-
-    // TWO pair stages in ONE graph — the next shape after one shared
-    // dimension: nation shared by customer AND supplier (outer glue,
-    // trunk-bucketed — root dim), customer shared by two orders
-    // instances via self-join expansion (inner glue, customer-keyed —
-    // c_custkey cardinality grows with the data, so PairOrientation
-    // .Auto correctly keeps the zero-extra-shuffle routing there).
-    // Deletes hit a branch of EACH glue, so retractions cross both
-    // products. Five relations, six stages, DuckDB runs the quad join
-    // natively as the oracle.
-    sql("incremental_sql_two_pairs",
-      """SELECT n_name, COUNT(*) AS n_quads,
-        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
-        |FROM nation, customer, supplier, orders o1, orders o2
-        |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
-        | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-        | AND s_acctbal >= 0
-        | AND o1.o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, COUNT(*) AS n_quads,
-          | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-          |FROM nation, customer, supplier, orders o1, orders o2
-          |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
-          | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-          | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-          | AND s_acctbal >= 0
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-
-    // The reference's FULL flagship shape — grouped aggregate + HAVING
-    // + ORDER BY + LIMIT — compiled from one SQL text: the wrappers
-    // are presentation over the maintained view (deterministic via the
-    // c_custkey tie-break), the fold underneath is the same q10 tree.
-    sql("incremental_sql_q10_full",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-         |HAVING COUNT(*) >= 2
-         |ORDER BY revenue_e4 DESC, c_custkey
-         |LIMIT 20""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-           | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-           | COUNT(*) AS n_rows
-           |FROM nation, customer, orders, lineitem
-           |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-           | AND c_nationkey = n_nationkey
-           | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-           | AND l_returnflag = 'R'
-           |GROUP BY c_custkey, c_name, c_acctbal, n_name
-           |HAVING n_rows >= 2
-           |ORDER BY revenue_e4 DESC, c_custkey
-           |LIMIT 20""".stripMargin,
-        deletes = Map(
-          "lineitem" -> (col("l_linenumber") === 3),
-          "orders" -> (col("o_orderkey") % 50 === 0)))
     },
 
     // MIN/MAX maintained via the same per-value netting — deleting
@@ -4406,610 +3087,6 @@ object IncrementalQueries {
         "incremental_sql_minmax_stream_leaf")
     },
 
-    // INCREMENTAL ROLLUP — every expanded grouping set maintained
-    // independently (exact for every aggregate kind) and unioned with
-    // null-padded inactive keys, against DuckDB's native ROLLUP.
-    // Perf note (r10, the r9 verdict's one >40% bench move): the
-    // r8→r9 1.55→2.29 s median was machine contention (the r9 bench
-    // JVM also ran 3×32 scale-check passes), not a plan change —
-    // profiled warm steady state at sf0.1 is ~1.4 s on unchanged
-    // machinery.
-    sql("incremental_sql_rollup",
-      """SELECT n_name, o_orderpriority,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0 AND c_custkey % 9 <> 0
-        |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority,
-          | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-          | COUNT(*) AS n_orders
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 9 === 0)))
-    },
-
-    // The ROLLUP fold over the CONTINUOUS engine's streamed leaf —
-    // same oracle as incremental_sql_rollup, so a stream/batch
-    // grouping-set divergence fails the hash.
-    sql("incremental_sql_rollup_stream",
-      """SELECT n_name, o_orderpriority,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0 AND c_custkey % 9 <> 0
-        |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority,
-            | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-            | COUNT(*) AS n_orders
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 9 === 0)),
-        "incremental_sql_rollup_stream_leaf")
-    },
-
-    // ROLLUP with GROUPING() disambiguation — the per-set constant
-    // that separates subtotal NULLs from null-valued keys, against
-    // DuckDB's native GROUPING().
-    sql("incremental_sql_rollup_grouping",
-      """SELECT n_name, o_orderstatus,
-        | CAST(GROUPING(n_name) AS BIGINT) AS g_nation,
-        | CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0
-        |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderstatus,
-          | GROUPING(n_name) AS g_nation, GROUPING(o_orderstatus) AS g_status,
-          | COUNT(*) AS n_orders
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // INCREMENTAL CUBE with COUNT(DISTINCT) — the per-value rollup
-    // runs inside EVERY grouping set including the grand total (the
-    // non-derivable aggregate case that re-aggregation shortcuts get
-    // wrong), against DuckDB's native CUBE.
-    sql("incremental_sql_cube",
-      """SELECT n_name, o_orderstatus,
-        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0
-        |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderstatus,
-          | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // The CUBE fold (with a DISTINCT aggregate riding along) over the
-    // CONTINUOUS engine's streamed leaf — same oracle as
-    // incremental_sql_cube, completing the grouping-set family's
-    // stream/batch parity next to incremental_sql_rollup_stream.
-    sql("incremental_sql_cube_stream",
-      """SELECT n_name, o_orderstatus,
-        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0
-        |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderstatus,
-            | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_cube_stream_leaf")
-    },
-
-    // DISCRETE MEDIAN under retraction — derives from the same
-    // per-(group, value) netting rollup as MIN/MAX (deleting the
-    // current median re-exposes the next value exactly); the oracle is
-    // DuckDB's quantile_disc(x, 0.5), the identical lower-median
-    // element selection, bit-exact even on the DOUBLE argument since
-    // both engines SELECT an existing value rather than folding.
-    sql("incremental_sql_median",
-      """SELECT n_name, quantile_disc(o_totalprice, 0.5) AS med_price,
-        | COUNT(*) AS n_rows
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 6 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, MEDIAN(o_totalprice) AS med_price,
-          | COUNT(*) AS n_rows
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          | AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // MEDIAN's element selection over the CONTINUOUS engine's
-    // streamed rollup — same oracle as incremental_sql_median.
-    sql("incremental_sql_median_stream",
-      """SELECT n_name, quantile_disc(o_totalprice, 0.5) AS med_price,
-        | COUNT(*) AS n_rows
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 6 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, MEDIAN(o_totalprice) AS med_price,
-            | COUNT(*) AS n_rows
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            | AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_median_stream_leaf")
-    },
-
-    // GENERAL DISCRETE QUANTILES under retraction — MEDIAN's element
-    // selection at arbitrary q: the inverted-CDF cut (smallest value
-    // whose cumulative net count reaches ceil(q·n)) evaluated in exact
-    // integer cross-products of the rational q, so Q1 and Q3 ride the
-    // SAME per-(group, value) rollup and cumulative frame as each
-    // other (one sort, two conditional MINs). Oracle = DuckDB's
-    // native quantile_disc at both q's.
-    sql("incremental_sql_quantile",
-      """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
-        | quantile_disc(o_totalprice, 0.75) AS q3_price,
-        | COUNT(*) AS n_rows
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F' AND o_orderkey % 6 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
-          | quantile_disc(o_totalprice, 0.75) AS q3_price,
-          | COUNT(*) AS n_rows
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          | AND o_orderstatus = 'F'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // The quantile fold over the CONTINUOUS engine's streamed leaf —
-    // same oracle as incremental_sql_quantile (stream/batch parity for
-    // the new aggregate family).
-    sql("incremental_sql_quantile_stream",
-      """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
-        | quantile_disc(o_totalprice, 0.75) AS q3_price,
-        | COUNT(*) AS n_rows
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F' AND o_orderkey % 6 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
-            | quantile_disc(o_totalprice, 0.75) AS q3_price,
-            | COUNT(*) AS n_rows
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            | AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_quantile_stream_leaf")
-    },
-
-    // MODE under retraction with a DETERMINISTIC tie rule (largest net
-    // count, then smallest value): rank-1 selection over the netting
-    // rollup's frequency table. DuckDB's mode() leaves ties
-    // unspecified, so the oracle spells the identical window instead —
-    // the tie rule is part of the operator's contract, not an
-    // implementation accident.
-    sql("incremental_sql_mode",
-      """WITH base AS (
-        | SELECT n_name, o_orderpriority
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |pv AS (SELECT n_name, o_orderpriority AS v, COUNT(*) AS n
-        |       FROM base GROUP BY n_name, v),
-        |md AS (SELECT n_name, v FROM (
-        |        SELECT n_name, v,
-        |         ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY n DESC, v) AS rk
-        |        FROM pv) WHERE rk = 1),
-        |cnt AS (SELECT n_name, COUNT(*) AS n_rows FROM base GROUP BY n_name)
-        |SELECT cnt.n_name, md.v AS mode_prio, n_rows
-        |FROM cnt JOIN md USING (n_name)""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, mode(o_orderpriority) AS mode_prio,
-          | COUNT(*) AS n_rows
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // The mode fold over the CONTINUOUS engine's streamed leaf — same
-    // oracle as incremental_sql_mode (stream/batch parity across the
-    // whole new aggregate family, next to the quantile twin).
-    sql("incremental_sql_mode_stream",
-      """WITH base AS (
-        | SELECT n_name, o_orderpriority
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |pv AS (SELECT n_name, o_orderpriority AS v, COUNT(*) AS n
-        |       FROM base GROUP BY n_name, v),
-        |md AS (SELECT n_name, v FROM (
-        |        SELECT n_name, v,
-        |         ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY n DESC, v) AS rk
-        |        FROM pv) WHERE rk = 1),
-        |cnt AS (SELECT n_name, COUNT(*) AS n_rows FROM base GROUP BY n_name)
-        |SELECT cnt.n_name, md.v AS mode_prio, n_rows
-        |FROM cnt JOIN md USING (n_name)""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, mode(o_orderpriority) AS mode_prio,
-            | COUNT(*) AS n_rows
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY n_name""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_mode_stream_leaf")
-    },
-
-    // MAX_BY / MIN_BY under retraction — "which order was the
-    // extreme": state is the netting rollup over the (price, orderkey)
-    // PAIR, and the answer is a struct extreme, so ties on the price
-    // break deterministically toward the extreme key. The oracle
-    // spells the same rule as join-back-on-extreme + MAX/MIN over the
-    // tied keys.
-    sql("incremental_sql_argmax",
-      """WITH base AS (
-        | SELECT n_name, o_orderkey, o_totalprice
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |mx AS (SELECT n_name, MAX(o_totalprice) AS mp, MIN(o_totalprice) AS mn
-        |       FROM base GROUP BY n_name)
-        |SELECT base.n_name,
-        | MAX(CASE WHEN o_totalprice = mp THEN o_orderkey END) AS top_order,
-        | MIN(CASE WHEN o_totalprice = mn THEN o_orderkey END) AS bottom_order,
-        | COUNT(*) AS n_rows
-        |FROM base JOIN mx USING (n_name)
-        |GROUP BY base.n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, max_by(o_orderkey, o_totalprice) AS top_order,
-          | min_by(o_orderkey, o_totalprice) AS bottom_order,
-          | COUNT(*) AS n_rows
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // SCALAR-SUBQUERY GATE — the above-global-average idiom as a
-    // maintained view: the scalar is NONLINEAR (one input row moves
-    // the average and can flip every other row's predicate), so the
-    // compiler resolves it per refresh over the SURVIVOR inputs and
-    // splices the literal into the orders scan filter
-    // (Compiled.withScalarGatesResolved); the streaming path fences
-    // it loudly. Exact-money determinism: AVG over e2 BIGINTs is an
-    // exact integer sum + ONE IEEE division in both engines, and the
-    // row-side comparand is an exact BIGINT below 2^53.
-    sql("incremental_sql_scalar_gate",
-      """WITH srv AS (SELECT * FROM orders WHERE o_orderkey % 6 <> 0),
-        |a AS (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS ap FROM srv)
-        |SELECT n_name, COUNT(*) AS n_big,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS big_rev_e2
-        |FROM nation, customer, srv, a
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) > ap
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, COUNT(*) AS n_big,
-          | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS big_rev_e2
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) >
-          |     (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) FROM orders)
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // The scalar gate on the CONTINUOUS engine: the gate is NONLINEAR,
-    // so the streamed form resolves it ONCE against the survivor
-    // inputs (Compiled.withScalarGatesResolved — the deployment
-    // pattern: a periodically recomputed threshold broadcast into the
-    // stream as a scan-filter literal) and then streams the gate-free
-    // view. Same oracle as incremental_sql_scalar_gate: the maintained
-    // state after full replay equals the batch refresh.
-    sql("incremental_sql_scalar_gate_stream",
-      """WITH srv AS (SELECT * FROM orders WHERE o_orderkey % 6 <> 0),
-        |a AS (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS ap FROM srv)
-        |SELECT n_name, COUNT(*) AS n_big,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS big_rev_e2
-        |FROM nation, customer, srv, a
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) > ap
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => {
-        val deletes = Map("orders" -> (col("o_orderkey") % 6 === 0))
-        runSqlStreamed(s, SqlCompiler.compile(s, dir,
-            """SELECT n_name, COUNT(*) AS n_big,
-              | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS big_rev_e2
-              |FROM nation, customer, orders
-              |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-              | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) >
-              |     (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) FROM orders)
-              |GROUP BY n_name""".stripMargin)
-            .withScalarGatesResolved(s, dir, deletes),
-          dir, deletes, "incremental_sql_scalar_gate_stream_leaf")
-      }
-    },
-
-    // ANALYTIC PRESENTATION over a maintained view — window functions
-    // in the SELECT list compile as a post-view decoration
-    // (Compiled.windowItems): the incrementally maintained aggregate
-    // is the window's input frame, so each refresh ranks the
-    // group-cardinality view, never the input. RANK within nation plus
-    // a nation-total window aggregate, both referencing the maintained
-    // alias; deterministic ties (price DESC, then priority). The
-    // oracle spells the same windows over a subquery (standard SQL has
-    // no lateral alias in OVER; the engine's dialect defines windows
-    // over the view's output columns).
-    sql("incremental_sql_window_rank",
-      """WITH v AS (
-        | SELECT n_name, o_orderpriority,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0
-        | GROUP BY n_name, o_orderpriority)
-        |SELECT n_name, o_orderpriority, price_e2,
-        | RANK() OVER (PARTITION BY n_name
-        |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
-        | CAST(SUM(price_e2) OVER (PARTITION BY n_name) AS BIGINT) AS nation_total_e2
-        |FROM v""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority,
-          | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-          | RANK() OVER (PARTITION BY n_name
-          |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
-          | SUM(price_e2) OVER (PARTITION BY n_name) AS nation_total_e2
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY n_name, o_orderpriority""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // HAVING × WINDOW in SQL evaluation order over the maintained
-    // view: the HAVING prefix filters groups FIRST, then the rank
-    // decorates the survivors (a rank counting filtered-out groups
-    // would be off by the number of dropped rows above the cut — the
-    // bug the ordering machinery exists to prevent). Partitioned rank
-    // (per priority), deterministic ties.
-    sql("incremental_sql_having_window",
-      """WITH v AS (
-        | SELECT o_orderpriority, n_name, COUNT(*) AS n_orders
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 5 <> 0
-        | GROUP BY o_orderpriority, n_name
-        | HAVING COUNT(*) > 100)
-        |SELECT o_orderpriority, n_name, n_orders,
-        | RANK() OVER (PARTITION BY o_orderpriority
-        |   ORDER BY n_orders DESC, n_name) AS nation_rank
-        |FROM v""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT o_orderpriority, n_name, COUNT(*) AS n_orders,
-          | RANK() OVER (PARTITION BY o_orderpriority
-          |   ORDER BY n_orders DESC, n_name) AS nation_rank
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY o_orderpriority, n_name HAVING n_orders > 100""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 5 === 0)))
-    },
-
-    // HAVING × WINDOW on the CONTINUOUS engine — same oracle as
-    // incremental_sql_having_window: the presentation chain (HAVING
-    // prefix, then the rank decoration) recomputes per refresh over
-    // the streamed maintained view, so group survival under
-    // retraction must land BEFORE the rank counts them.
-    sql("incremental_sql_having_window_stream",
-      """WITH v AS (
-        | SELECT o_orderpriority, n_name, COUNT(*) AS n_orders
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 5 <> 0
-        | GROUP BY o_orderpriority, n_name
-        | HAVING COUNT(*) > 100)
-        |SELECT o_orderpriority, n_name, n_orders,
-        | RANK() OVER (PARTITION BY o_orderpriority
-        |   ORDER BY n_orders DESC, n_name) AS nation_rank
-        |FROM v""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT o_orderpriority, n_name, COUNT(*) AS n_orders,
-            | RANK() OVER (PARTITION BY o_orderpriority
-            |   ORDER BY n_orders DESC, n_name) AS nation_rank
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY o_orderpriority, n_name HAVING n_orders > 100""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 5 === 0)),
-        "incremental_sql_having_window_stream_leaf")
-    },
-
-    // The windowed view over the CONTINUOUS engine's streamed leaf —
-    // same oracle as incremental_sql_window_rank (the decoration
-    // recomputes per micro-batch over the maintained view).
-    sql("incremental_sql_window_rank_stream",
-      """WITH v AS (
-        | SELECT n_name, o_orderpriority,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0
-        | GROUP BY n_name, o_orderpriority)
-        |SELECT n_name, o_orderpriority, price_e2,
-        | RANK() OVER (PARTITION BY n_name
-        |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
-        | CAST(SUM(price_e2) OVER (PARTITION BY n_name) AS BIGINT) AS nation_total_e2
-        |FROM v""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority,
-            | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-            | RANK() OVER (PARTITION BY n_name
-            |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
-            | SUM(price_e2) OVER (PARTITION BY n_name) AS nation_total_e2
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_window_rank_stream_leaf")
-    },
-
-    // The pair-rollup fold over the CONTINUOUS engine's streamed
-    // leaf — same oracle as incremental_sql_argmax, closing the
-    // stream/batch parity for the whole new aggregate family
-    // (quantile, mode, max_by/min_by).
-    sql("incremental_sql_argmax_stream",
-      """WITH base AS (
-        | SELECT n_name, o_orderkey, o_totalprice
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderkey % 6 <> 0),
-        |mx AS (SELECT n_name, MAX(o_totalprice) AS mp, MIN(o_totalprice) AS mn
-        |       FROM base GROUP BY n_name)
-        |SELECT base.n_name,
-        | MAX(CASE WHEN o_totalprice = mp THEN o_orderkey END) AS top_order,
-        | MIN(CASE WHEN o_totalprice = mn THEN o_orderkey END) AS bottom_order,
-        | COUNT(*) AS n_rows
-        |FROM base JOIN mx USING (n_name)
-        |GROUP BY base.n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, max_by(o_orderkey, o_totalprice) AS top_order,
-            | min_by(o_orderkey, o_totalprice) AS bottom_order,
-            | COUNT(*) AS n_rows
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY n_name""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_argmax_stream_leaf")
-    },
-
-    // GROUP BY expressions compiled from text: a COMPUTED grouping key
-    // (calendar year) evaluates over the typed leaf deltas — grouping
-    // is no longer limited to stored columns. The oracle wraps the SUM
-    // in CAST(... AS BIGINT) (DuckDB SUM(BIGINT) returns HUGEINT);
-    // Spark's sum(BIGINT) is already BIGINT, so the compiled text keeps
-    // the bare SUM.
-    sql("incremental_sql_group_expr",
-      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 4 <> 0
-        |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-          | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-          | COUNT(*) AS n_orders
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 4 === 0)))
-    },
-
-    // VIEW MODE (bag): a SELECT with no aggregate maintains the JOIN
-    // ITSELF — the leaf deltas net per selected tuple and the view
-    // restores SQL bag multiplicity by net-count explode. The selected
-    // pair (n_name, o_orderpriority) is deliberately low-cardinality so
-    // most net counts are way above 1: the multiplicity machinery, not
-    // just survivorship, is what the row-count+hash compare checks.
-    sql("incremental_sql_join_view",
-      """SELECT n_name, o_orderpriority
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          | AND o_orderstatus = 'F'""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 10 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0)))
-    },
-
-    // SELECT * — the first query a real user types: the star expands
-    // to the FROM relations' columns (schema order, FROM order; the
-    // FK graph's bare-name uniqueness makes it unambiguous) and the
-    // FULL-WIDTH join view is maintained. Every column type rides the
-    // canonical row's string codec (BIGINT, VARCHAR and the DOUBLE
-    // c_acctbal — Java's toString/parse roundtrip is exact).
-    sql("incremental_sql_select_star",
-      """SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey
-        |WHERE c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        "SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey",
-        deletes = Map("customer" -> (col("c_custkey") % 13 === 0)))
-    },
-
-    // … through the CONTINUOUS engine, same oracle.
-    sql("incremental_sql_select_star_stream",
-      """SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey
-        |WHERE c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          "SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey"),
-        dir, Map("customer" -> (col("c_custkey") % 13 === 0)),
-        "incremental_sql_select_star_stream_leaf")
-    },
-
-    // QUALIFIED star (n.*) resolving through a table alias, mixed with
-    // an explicit column — DuckDB runs the identical spelling.
-    sql("incremental_sql_select_star_qualified",
-      """SELECT c_mktsegment, n.*
-        |FROM nation n JOIN customer c ON c_nationkey = n_nationkey
-        |WHERE c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_mktsegment, n.*
-          |FROM nation n JOIN customer c ON c_nationkey = n_nationkey""".stripMargin,
-        deletes = Map("customer" -> (col("c_custkey") % 13 === 0)))
-    },
-
-    // … through the CONTINUOUS engine, same oracle.
-    sql("incremental_sql_select_star_qualified_stream",
-      """SELECT c_mktsegment, n.*
-        |FROM nation n JOIN customer c ON c_nationkey = n_nationkey
-        |WHERE c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_mktsegment, n.*
-            |FROM nation n JOIN customer c ON c_nationkey = n_nationkey""".stripMargin),
-        dir, Map("customer" -> (col("c_custkey") % 13 === 0)),
-        "incremental_sql_select_star_qualified_stream_leaf")
-    },
-
     // VIEW MODE through the CONTINUOUS engine — same oracle as
     // incremental_sql_join_view, so stream/batch view divergence
     // fails the hash.
@@ -5020,22 +3097,6 @@ object IncrementalQueries {
         | AND o_orderstatus = 'F'
         | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin)(
       incrementalSqlViewStream),
-
-    // VIEW MODE (set): SELECT DISTINCT over the same tree — the
-    // maintained set view (net > 0 = present), no multiplicity.
-    sql("incremental_sql_distinct_view",
-      """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
-          |FROM nation, customer, orders
-          |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 10 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0)))
-    },
 
     // BRANCHING tree (multi-parent lineitem: orders-chain AND part) —
     // the AJU capability beyond a chain. The oracle is the plain-SQL
@@ -5058,683 +3119,24 @@ object IncrementalQueries {
     // aggregate folds signed PAIR deltas — every (order, supplier)
     // pair of a nation — against the plain-SQL survivors oracle, with
     // deletes on both sides of the product.
-    sql("incremental_shared_dim",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin)(incrementalSharedRevenue),
+    sql("incremental_shared_dim", sharedDimOracle)(incrementalSharedRevenue),
 
     // The dimension-keyed plan trunk-bucketed by the EXPLICIT
     // swapPairOrientation API (S = 8) behind the SAME oracle — both
     // construction paths to the bucketed product must be
     // answer-invariant. (The default incremental_shared_dim plan is
     // already trunk-bucketed via PairOrientation.Auto.)
-    sql("incremental_shared_dim_salted",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin)(incrementalSharedRevenueSalted),
+    sql("incremental_shared_dim_salted", sharedDimOracle)(incrementalSharedRevenueSalted),
 
     // The CONTINUOUS pair stage itself (runStreamTree micro-batches,
     // state across batches) behind the same survivors oracle.
-    sql("incremental_shared_dim_stream",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin)(incrementalSharedStream),
+    sql("incremental_shared_dim_stream", sharedDimOracle)(incrementalSharedStream),
 
     // The pair stage on transformWithState — same replay, same
     // survivors oracle; with incremental_q10_tws this puts the whole
     // stage vocabulary (liveness AND pair) on the supported
     // arbitrary-state API.
-    sql("incremental_shared_dim_tws",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin)(incrementalSharedTws),
-
-    // The SAME shared-dimension query compiled FROM SQL TEXT.
-    sql("incremental_sql_shared_dim",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        s"""SELECT n_name,
-           | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS revenue_e2,
-           | COUNT(*) AS n_pairs
-           |FROM nation, customer, orders, supplier
-           |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-           | AND s_nationkey = n_nationkey
-           | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-           | AND s_acctbal >= 0
-           |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 7 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-
-    // Shared dimension WITH a parent above it: region's liveness
-    // threads through the trunk (region→nation→customer) before the
-    // supplier product — five relations, one pair glue, compiled from
-    // text.
-    sql("incremental_sql_shared_parent",
-      """SELECT n_name,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2,
-        | COUNT(*) AS n_pairs
-        |FROM region, nation, customer, supplier
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND s_nationkey = n_nationkey
-        | AND r_name <> 'ASIA' AND c_custkey % 6 <> 0 AND s_suppkey % 5 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2,
-          | COUNT(*) AS n_pairs
-          |FROM region, nation, customer, supplier
-          |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-          | AND s_nationkey = n_nationkey AND r_name <> 'ASIA'
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 6 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-
-    // The SAME branching query compiled FROM SQL TEXT: SqlCompiler
-    // linearizes the multi-parent lineitem into per-FK stages.
-    sql("incremental_sql_part_revenue",
-      s"""SELECT n_name, p_brand,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem, part
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R' AND p_size <= 25
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
-         |GROUP BY n_name, p_brand""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        s"""SELECT n_name, p_brand,
-           | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-           | COUNT(*) AS n_rows
-           |FROM nation, customer, orders, lineitem, part
-           |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-           | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-           | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-           | AND l_returnflag = 'R' AND p_size <= 25
-           |GROUP BY n_name, p_brand""".stripMargin,
-        deletes = Map(
-          "lineitem" -> (col("l_linenumber") === 3),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "part" -> (col("p_partkey") % 10 === 0)))
-    }) ++ streamTwinDefs
-
-  // ROUND 12: the stream-twin completion — every remaining batch-only
-  // compiled view gains a CONTINUOUS sibling on the generic
-  // [[runSqlStreamed]] machinery, gated against the SAME oracle as its
-  // batch twin (shared SQL text), so any stream/batch divergence fails
-  // the hash. The changelog surface is this engine's identity: a view
-  // that can only batch-refresh is half a view.
-  private def streamTwinDefs: Seq[GraftQuery] = Seq(
-
-    // The FULL flagship decoration chain (HAVING + ORDER BY + LIMIT)
-    // over the CONTINUOUS engine's streamed leaf — the presentation
-    // wrappers run per refresh over the group-cardinality view, the
-    // fold underneath replays as micro-batches.
-    sql("incremental_sql_q10_full_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-         |HAVING COUNT(*) >= 2
-         |ORDER BY revenue_e4 DESC, c_custkey
-         |LIMIT 20""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-             | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-             | COUNT(*) AS n_rows
-             |FROM nation, customer, orders, lineitem
-             |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-             | AND c_nationkey = n_nationkey
-             | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-             | AND l_returnflag = 'R'
-             |GROUP BY c_custkey, c_name, c_acctbal, n_name
-             |HAVING n_rows >= 2
-             |ORDER BY revenue_e4 DESC, c_custkey
-             |LIMIT 20""".stripMargin),
-        dir, Map(
-          "lineitem" -> (col("l_linenumber") === 3),
-          "orders" -> (col("o_orderkey") % 50 === 0)),
-        "incremental_sql_q10_full_stream_leaf")
-    },
-
-    // The BRANCHING (multi-parent lineitem) compiled tree streamed —
-    // both parents' liveness flips propagate to the same leaf state
-    // across micro-batches.
-    sql("incremental_sql_part_revenue_stream",
-      s"""SELECT n_name, p_brand,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem, part
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R' AND p_size <= 25
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
-         |GROUP BY n_name, p_brand""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          s"""SELECT n_name, p_brand,
-             | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-             | COUNT(*) AS n_rows
-             |FROM nation, customer, orders, lineitem, part
-             |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-             | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-             | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-             | AND l_returnflag = 'R' AND p_size <= 25
-             |GROUP BY n_name, p_brand""".stripMargin),
-        dir, Map(
-          "lineitem" -> (col("l_linenumber") === 3),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "part" -> (col("p_partkey") % 10 === 0)),
-        "incremental_sql_part_revenue_stream_leaf")
-    },
-
-    // The compiled PAIR-GLUE (shared dimension) streamed through the
-    // SQL path — the tree-API twin (incremental_shared_dim_stream)
-    // already exists; this one proves the COMPILER's stage layout
-    // streams too.
-    sql("incremental_sql_shared_dim_stream",
-      s"""SELECT n_name,
-         | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          s"""SELECT n_name,
-             | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS revenue_e2,
-             | COUNT(*) AS n_pairs
-             |FROM nation, customer, orders, supplier
-             |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-             | AND s_nationkey = n_nationkey
-             | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-             | AND s_acctbal >= 0
-             |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 7 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_shared_dim_stream_leaf")
-    },
-
-    // Shared dimension WITH an ancestor above the trunk, streamed —
-    // region's liveness threads through the pair glue across
-    // micro-batches.
-    sql("incremental_sql_shared_parent_stream",
-      """SELECT n_name,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2,
-        | COUNT(*) AS n_pairs
-        |FROM region, nation, customer, supplier
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND s_nationkey = n_nationkey
-        | AND r_name <> 'ASIA' AND c_custkey % 6 <> 0 AND s_suppkey % 5 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2,
-            | COUNT(*) AS n_pairs
-            |FROM region, nation, customer, supplier
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND s_nationkey = n_nationkey AND r_name <> 'ASIA'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 6 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_shared_parent_stream_leaf")
-    },
-
-    // BOTH glue kinds in one streamed graph: the nation pair stage and
-    // the self-join customer pair, with deletes crossing each product.
-    sql("incremental_sql_two_pairs_stream",
-      """SELECT n_name, COUNT(*) AS n_quads,
-        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
-        |FROM nation, customer, supplier, orders o1, orders o2
-        |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
-        | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-        | AND s_acctbal >= 0
-        | AND o1.o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, COUNT(*) AS n_quads,
-            | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-            |FROM nation, customer, supplier, orders o1, orders o2
-            |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
-            | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-            | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-            | AND s_acctbal >= 0
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_two_pairs_stream_leaf")
-    },
-
-    // The SQL-text self-join streamed — each aliased instance is its
-    // own changelog identity; instance-independent deletes retract
-    // across the pair product through held state.
-    sql("incremental_sql_self_join_stream",
-      """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
-        |FROM customer, orders o1, orders o2
-        |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-        | AND o1.o_orderkey % 7 <> 0 AND o2.o_orderkey % 5 <> 0
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-            | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-            |FROM customer, orders o1, orders o2
-            |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
-            | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-            |GROUP BY c_mktsegment""".stripMargin),
-        dir, Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "o2" -> (col("o2_o_orderkey") % 5 === 0)),
-        "incremental_sql_self_join_stream_leaf")
-    },
-
-    // The maintained BAG VIEW streamed under the batch entry's own
-    // name family (incremental_sql_view_stream predates the twin
-    // naming convention; this sibling closes the name-matched matrix).
-    sql("incremental_sql_join_view_stream",
-      """SELECT n_name, o_orderpriority
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            | AND o_orderstatus = 'F'""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 10 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0)),
-        "incremental_sql_join_view_stream_leaf")
-    },
-
-    // The maintained SET VIEW (SELECT DISTINCT) streamed — presence
-    // flips (net > 0) assert and retract across micro-batches.
-    sql("incremental_sql_distinct_view_stream",
-      """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 10 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0)),
-        "incremental_sql_distinct_view_stream_leaf")
-    },
-
-    // RIGHT JOIN (parsed as the mirrored LEFT) streamed — the
-    // NULL-extension anti plan holds state across micro-batches.
-    sql("incremental_sql_q10_right_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-             | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-             | COUNT(*) AS n_rows
-             |FROM lineitem
-             |RIGHT JOIN (nation
-             | JOIN customer ON c_nationkey = n_nationkey
-             | JOIN orders ON o_custkey = c_custkey)
-             | ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-             |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-             |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin),
-        dir, q10OuterDeletes, "incremental_sql_q10_right_stream_leaf")
-    },
-
-    // The BLOOM-REDUCED compiled tree streamed: the leaf changelog is
-    // pre-filtered by a STATIC bloom built from the parent's key
-    // universe before entering the stream — the standard deployment
-    // shape for a pre-built reduction filter — and the reduction must
-    // be answer-invariant through the replay (same oracle as
-    // incremental_sql_q10).
-    sql("incremental_sql_q10_bloom_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin) {
-      (s, dir) =>
-        val ss = s.newSession()
-        ss.conf.set(BloomPrefilterConf, "true")
-        runSqlStreamed(ss, SqlCompiler.compile(ss, dir,
-            s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-               | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-               | COUNT(*) AS n_rows
-               |FROM nation, customer, orders, lineitem
-               |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-               | AND c_nationkey = n_nationkey
-               | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-               | AND l_returnflag = 'R'
-               |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin),
-          dir, Map(
-            "lineitem" -> (col("l_linenumber") === 3),
-            "orders" -> (col("o_orderkey") % 50 === 0)),
-          "incremental_sql_q10_bloom_stream_leaf",
-          transformLogs = logs => bloomPrefilterChild(logs,
-            parentRel = "orders", parentChildKey = "o_orderkey",
-            childRel = "lineitem", expectedItems = 200000L, fpp = 0.01))
-    },
-
-    // The SALTED compiled tree streamed: the salt widening is baked
-    // into the stages at COMPILE time (own events bucket by row hash,
-    // liveness deltas replicate ×8), so the identical stage list runs
-    // on the streaming tree runner — de-skew must be answer-invariant
-    // through micro-batch replay too.
-    sql("incremental_sql_q10_salted_stream",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin) {
-      (s, dir) =>
-        val ss = s.newSession()
-        ss.conf.set(SaltRelationConf, "lineitem")
-        ss.conf.set(SaltWidthConf, "8")
-        runSqlStreamed(ss, SqlCompiler.compile(ss, dir,
-            s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-               | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-               | COUNT(*) AS n_rows
-               |FROM nation, customer, orders, lineitem
-               |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-               | AND c_nationkey = n_nationkey
-               | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-               | AND l_returnflag = 'R'
-               |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin),
-          dir, Map(
-            "lineitem" -> (col("l_linenumber") === 3),
-            "orders" -> (col("o_orderkey") % 50 === 0)),
-          "incremental_sql_q10_salted_stream_leaf")
-    },
-
-    // The aggregate FILTER clause family streamed — per-clause signed
-    // folds (conditional sums, the distinct-value rollup) across
-    // micro-batches.
-    sql("incremental_sql_filter_stream",
-      """SELECT n_name,
-        | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |   FILTER (WHERE o_totalprice > 150000) AS BIGINT) AS big_rev_e2,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |   FILTER (WHERE o_orderkey % 2 = 0) AS DOUBLE)
-        |   / COUNT(*) FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
-        | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
-        | COUNT(DISTINCT CASE WHEN o_totalprice > 100000 THEN o_orderpriority END) AS n_prio_big,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name,
-            | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-            | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-            |   FILTER (WHERE o_totalprice > 150000) AS big_rev_e2,
-            | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-            |   FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
-            | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
-            | COUNT(DISTINCT o_orderpriority) FILTER (WHERE o_totalprice > 100000) AS n_prio_big,
-            | COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_filter_stream_leaf")
-    },
-
-    // AVG's retractable SUM/COUNT pair streamed — exact integral folds
-    // across micro-batches, one double division per group at read.
-    sql("incremental_sql_avg_stream",
-      """SELECT n_name,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
-        |   / COUNT(*) AS avg_price_e2,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-        | AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name,
-            | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS avg_price_e2,
-            | COUNT(*) AS n_rows
-            |FROM region, nation, customer, orders
-            |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
-            | AND o_custkey = c_custkey
-            | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 11 === 0),
-          "orders" -> (col("o_orderkey") % 7 === 0)),
-        "incremental_sql_avg_stream_leaf")
-    },
-
-    // COMPUTED grouping keys streamed — the year() expression
-    // evaluates over the typed leaf deltas per micro-batch.
-    sql("incremental_sql_group_expr_stream",
-      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 4 <> 0
-        |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-            | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
-            | COUNT(*) AS n_orders
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 4 === 0)),
-        "incremental_sql_group_expr_stream_leaf")
-    },
-
-    // The EXISTS semi gate streamed — the subquery's set-semantics key
-    // node and the liveness hop hold state across micro-batches, so a
-    // late order insert must re-admit its customer (and a delete
-    // re-evict it).
-    sql("incremental_sql_exists_stream",
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM customer
-        |WHERE c_custkey % 30 <> 0
-        | AND EXISTS (SELECT 1 FROM orders
-        |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |               AND o_orderkey % 40 <> 0)
-        |GROUP BY c_nationkey""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_nationkey, COUNT(*) AS n_cust,
-            | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
-            |FROM customer
-            |WHERE EXISTS (SELECT 1 FROM orders
-            |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-            |GROUP BY c_nationkey""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 30 === 0),
-          "orders" -> (col("o_orderkey") % 40 === 0)),
-        "incremental_sql_exists_stream_leaf")
-    },
-
-    // The NOT EXISTS anti gate composed with an outer FK tree,
-    // streamed — an order insert must EVICT its customer from the
-    // view (and the order's later delete re-admit it) through held
-    // state.
-    sql("incremental_sql_not_exists_stream",
-      """SELECT n_name, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM nation, customer
-        |WHERE c_nationkey = n_nationkey
-        | AND c_custkey % 30 <> 0
-        | AND NOT EXISTS (SELECT 1 FROM orders
-        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |                   AND o_orderkey % 40 <> 0)
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, COUNT(*) AS n_cust,
-            | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
-            |FROM nation, customer
-            |WHERE c_nationkey = n_nationkey
-            | AND NOT EXISTS (SELECT 1 FROM orders
-            |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-            |GROUP BY n_name""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 30 === 0),
-          "orders" -> (col("o_orderkey") % 40 === 0)),
-        "incremental_sql_not_exists_stream_leaf")
-    },
-
-    // IN (subquery) streamed — the matching-set gate's admissions and
-    // evictions replay as micro-batches (a customer delete retracts
-    // every order it admitted).
-    sql("incremental_sql_in_stream",
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderkey % 6 <> 0
-        | AND o_custkey IN (SELECT c_custkey FROM customer
-        |                   WHERE c_acctbal > 1000 AND c_custkey % 30 <> 0)
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT o_orderpriority, COUNT(*) AS n_orders
-            |FROM orders
-            |WHERE o_custkey IN (SELECT c_custkey FROM customer
-            |                    WHERE c_acctbal > 1000)
-            |GROUP BY o_orderpriority""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 30 === 0)),
-        "incremental_sql_in_stream_leaf")
-    },
-
-    // ROLLUP with GROUPING() flags streamed — the per-set constants
-    // decorate the streamed grouping-set fold.
-    sql("incremental_sql_rollup_grouping_stream",
-      """SELECT n_name, o_orderstatus,
-        | CAST(GROUPING(n_name) AS BIGINT) AS g_nation,
-        | CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-        | COUNT(*) AS n_orders
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderkey % 6 <> 0
-        |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderstatus,
-            | GROUPING(n_name) AS g_nation, GROUPING(o_orderstatus) AS g_status,
-            | COUNT(*) AS n_orders
-            |FROM nation, customer, orders
-            |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-            |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin),
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_rollup_grouping_stream_leaf")
-    },
-
-    // The two-boundary FIND-THE-ORPHANS reading streamed: only the
-    // three selected orphan-class plans run (suppressMainLeaf — the
-    // inner tree is never built), their state holding across
-    // micro-batches; same oracle as the batch _isnull entry.
-    sql("incremental_sql_q10_fullouter_two_boundary_isnull_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
-        |WHERE c_custkey IS NULL AND l_returnflag = 'R'
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE c_custkey IS NULL AND l_returnflag = 'R'
-            |GROUP BY o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_two_boundary_isnull_stream_leaf")
-    }) ++ round12Defs
+    sql("incremental_shared_dim_tws", sharedDimOracle)(incrementalSharedTws)) ++ maintainedViews
 
   private def starFullOuterSql =
     """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
@@ -5926,8 +3328,1101 @@ object IncrementalQueries {
       |WHERE l_returnflag = 'R'
       |GROUP BY n_name, o_orderpriority, l_returnflag""".stripMargin
 
-  // Further round-12 compiler-scope entries.
-  private def round12Defs: Seq[GraftQuery] = Seq(
+  /** Every maintained view whose twins replay its batch statement
+    * unchanged, declared once through [[maintained]]. */
+  private def maintainedViews: Seq[GraftQuery] = Seq(
+
+    // The SAME query as incremental_q10, but compiled FROM SQL TEXT by
+    // [[SqlCompiler]] (Catalyst parser → FK-graph validation → NodeSpec
+    // chain): the reference's "continuous sql query" pitch as an
+    // actual API. Deletes mirror the q10 changelog set; the oracle is
+    // the plain-SQL survivors query.
+    maintained("incremental_sql_q10", q10Oracle, q10Sql, q10Deletes),
+
+    // Conf-wired skew salting through the COMPILER (the bloom conf
+    // pattern) — lineitem's stage folds over 8 salted sub-keys; the
+    // salt widening is baked into the stages at compile time (own
+    // events bucket by row hash, liveness deltas replicate ×8), so the
+    // streamed twin runs the identical stage list and de-skew must be
+    // answer-invariant through micro-batch replay too.
+    maintained("incremental_sql_q10_salted", q10Oracle, q10Sql, q10Deletes,
+      confs = Map(SaltRelationConf -> "lineitem", SaltWidthConf -> "8")),
+
+    // LEFT OUTER JOIN from SQL text — inner tree + anti plan unioned
+    // into one fold; NULL-extended orders (no R-lineitem) keep
+    // COUNT(*) alive while SUM skips them. Oracle: the same LEFT JOIN
+    // over the survivors.
+    maintained("incremental_sql_q10_outer",
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation
+         |JOIN customer ON c_nationkey = n_nationkey
+         |JOIN orders ON o_custkey = c_custkey
+         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
+         | AND l_linenumber <> 3
+         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND o_orderkey % 50 <> 0
+         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
+      q10OuterSql, q10OuterDeletes),
+
+    // FULL OUTER JOIN from SQL text — both preservation directions
+    // maintained: the anti plan NULL-extends orders that lost every
+    // lineitem, the orphan plan preserves lineitems whose order was
+    // deleted (they fold under NULL customer/nation keys — SQL's
+    // right-preserved row). Oracle: DuckDB FULL JOIN over
+    // delete-filtered derived tables (deletes must live in the
+    // subqueries, not WHERE, which would NULL-reject the orphans).
+    maintained("incremental_sql_q10_fullouter",
+      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterSql, q10FullOuterDeletes),
+
+    // FULL OUTER × EXISTS gate on an inner relation: the gate is FALSE
+    // on every right-preserved row (structural NULL correlation), so
+    // the orphan class is not built; children of gate-failing nations
+    // were MATCHED rows at join time and are WHERE-dropped — the
+    // ungated-prefix orphan plan must not resurrect them. Oracle is
+    // the literal FULL JOIN + WHERE EXISTS over the post-delete state,
+    // so DuckDB performs the same join-then-filter independently.
+    maintained("incremental_sql_q10_fullouter_gated",
+      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE EXISTS (SELECT 1 FROM region
+        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterGatedSql(""), q10FullOuterDeletes),
+
+    // … and the NOT EXISTS mirror: trivially TRUE on the structural
+    // NULLs, so the orphan group (lineitems whose order died, under
+    // the delete set) IS emitted while every ASIA-matched row drops.
+    maintained("incremental_sql_q10_fullouter_gated_anti",
+      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE NOT EXISTS (SELECT 1 FROM region
+        |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterGatedSql("NOT "), q10FullOuterDeletes, twins = Seq(Stream, Tws)),
+
+    // the IN spelling of the same gate (IN ≡ EXISTS on the matched
+    // side; on structural NULLs both are not-TRUE, so the orphan class
+    // drops identically — the oracle says so in the IN spelling).
+    maintained("incremental_sql_q10_fullouter_gated_in",
+      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      """SELECT c_custkey, n_name,
+        | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterDeletes),
+
+    // FULL OUTER + WHERE on the preserved side (r8's loud rejection,
+    // now planned): the date conjunct NULL-rejects every orphan row
+    // in SQL, so the compile drops the orphan plan and keeps the
+    // NULL-extension side — gated against DuckDB running the LITERAL
+    // FULL JOIN + WHERE, which performs the same NULL-rejection
+    // independently.
+    maintained("incremental_sql_q10_fullouter_filtered",
+      s"""WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+         |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+         |SELECT c_custkey, n_name,
+         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation JOIN customer ON c_nationkey = n_nationkey
+         | JOIN o ON o_custkey = c_custkey
+         | FULL JOIN l ON l_orderkey = o_orderkey
+         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterFilteredSql, q10FullOuterDeletes),
+
+    // FULL OUTER + WHERE on the boundary CHILD — the mirror
+    // NULL-rejection: extensions die, orphans survive the filter
+    // (effectively the RIGHT-preserved reading), gated against the
+    // literal FULL JOIN + WHERE which DuckDB NULL-rejects itself.
+    maintained("incremental_sql_q10_fullouter_child_filtered",
+      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE l_linenumber <> 3
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterChildFilteredSql, q10FullOuterDeletes),
+
+    // FULL OUTER + WHERE o_orderkey IS NULL — the find-the-orphans
+    // idiom (r9's loud fence, now planned): the view is EXACTLY the
+    // orphan plan's output, every left grouping key NULL. Gated
+    // against DuckDB running the literal FULL JOIN + IS NULL, which
+    // selects the right-preserved rows independently; ancestor
+    // deletes make orphan creation flow through the tree prefix.
+    maintained("incremental_sql_q10_fullouter_isnull",
+      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
+        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN c ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE o_orderkey IS NULL
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterIsNullSql, q10FullOuterAncestorDeletes),
+
+    // FULL OUTER with ANCESTOR deletes (r8's other fence): deleting a
+    // customer must orphan its orders' lineitems — the tree-prefix
+    // orphan key node sees the flip through the customer hop. Oracle:
+    // all three delete sets as derived tables, orphans via FULL JOIN.
+    maintained("incremental_sql_q10_fullouter_ancestor_del",
+      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
+        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+        |SELECT c_custkey, n_name,
+        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM nation JOIN c ON c_nationkey = n_nationkey
+        | JOIN o ON o_custkey = c_custkey
+        | FULL JOIN l ON l_orderkey = o_orderkey
+        |GROUP BY c_custkey, n_name""".stripMargin,
+      q10FullOuterSql, q10FullOuterAncestorDeletes),
+
+    // TWO NESTED FULL OUTER boundaries × WHERE — the r10 verdict's
+    // last compile fence, lifted. SQL's double FULL OUTER decomposes
+    // into six row classes (see SqlCompiler's NESTED TWO-BOUNDARY
+    // section); the WHERE on the leaf kills the three classes whose
+    // lineitem side is NULL, so this maintains the main tree PLUS the
+    // two genuinely new plans: orphan-orders ⋈ their lineitems
+    // (a customer delete moves whole order subtrees into it) and
+    // orphan-lineitems keyed off orders' RAW changelog (an orders
+    // delete moves rows into it). Deletes on all three levels.
+    maintained("incremental_sql_q10_fullouter_two_boundary",
+      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
+        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+        |FROM nation JOIN c ON c_nationkey = n_nationkey
+        |FULL JOIN o ON o_custkey = c_custkey
+        |FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE l_returnflag = 'R'
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE l_returnflag = 'R'
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "lineitem" -> (col("l_linenumber") === 3)),
+      twins = Seq(Stream, Tws)),
+
+    // … and WITHOUT a WHERE: all SIX classes maintained at once,
+    // including orphan-orders-with-no-lineitems (the NOT EXISTS wiring
+    // over the orphan hop's emissions — the one class the filtered
+    // entry's WHERE kills). Same triple-level deletes.
+    maintained("incremental_sql_q10_fullouter_two_boundary_all",
+      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
+        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+        |FROM nation JOIN c ON c_nationkey = n_nationkey
+        |FULL JOIN o ON o_custkey = c_custkey
+        |FULL JOIN l ON l_orderkey = o_orderkey
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "lineitem" -> (col("l_linenumber") === 3))),
+
+    // … and the FIND-THE-ORPHANS reading across both boundaries:
+    // `c_custkey IS NULL` selects exactly the classes whose customer
+    // side is nulled (orphan-orders ⋈ lineitems + orphan-lineitems;
+    // the main tree never runs — suppressMainLeaf), composed with the
+    // null-rejecting lineitem conjunct that drops the no-C class.
+    maintained("incremental_sql_q10_fullouter_two_boundary_isnull",
+      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
+        |SELECT o_orderpriority, COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+        |FROM nation JOIN c ON c_nationkey = n_nationkey
+        |FULL JOIN o ON o_custkey = c_custkey
+        |FULL JOIN l ON l_orderkey = o_orderkey
+        |WHERE c_custkey IS NULL AND l_returnflag = 'R'
+        |GROUP BY o_orderpriority""".stripMargin,
+      """SELECT o_orderpriority, COUNT(*) AS n_rows,
+        | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE c_custkey IS NULL AND l_returnflag = 'R'
+        |GROUP BY o_orderpriority""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "lineitem" -> (col("l_linenumber") === 3))),
+
+    // RIGHT OUTER JOIN from SQL text — canonicalized by the compiler
+    // onto the LEFT OUTER machinery (children swapped, preserved side
+    // unchanged); same oracle as the LEFT form because the two
+    // spellings denote the same view.
+    maintained("incremental_sql_q10_right",
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation
+         |JOIN customer ON c_nationkey = n_nationkey
+         |JOIN orders ON o_custkey = c_custkey
+         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
+         | AND l_linenumber <> 3
+         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND o_orderkey % 50 <> 0
+         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM lineitem
+         |RIGHT JOIN (nation
+         | JOIN customer ON c_nationkey = n_nationkey
+         | JOIN orders ON o_custkey = c_custkey)
+         | ON l_orderkey = o_orderkey AND l_returnflag = 'R'
+         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
+      q10OuterDeletes),
+
+    // AVG maintained incrementally — compiled by SqlCompiler to the
+    // retractable SUM/COUNT pair (exact integral folds, one double
+    // division per group; FP arguments are rejected at compile time).
+    // The oracle mirrors the same exact-sum-then-divide so the double
+    // is bit-identical.
+    maintained("incremental_sql_avg",
+      """SELECT n_name,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
+        |   / COUNT(*) AS avg_price_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name,
+        | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS avg_price_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // POPULATION variance/stddev — same retractable (n, Σx, Σx²)
+    // moments as the _SAMP forms, denominator n² (defined from one
+    // row, so single-row groups emit 0 instead of NULL).
+    maintained("incremental_sql_stddev_pop",
+      """WITH t AS (
+        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
+        | FROM region, nation, customer, orders
+        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        |  AND o_custkey = c_custkey
+        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
+        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
+        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
+        |      FROM t GROUP BY n_name)
+        |SELECT n_name,
+        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+        |   / CAST(NULLIF(n * n, 0) AS DOUBLE) AS var_pop_e2,
+        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+        |   / CAST(NULLIF(n * n, 0) AS DOUBLE)) AS std_pop_e2,
+        | n_rows
+        |FROM m""".stripMargin,
+      """SELECT n_name,
+        | VAR_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_pop_e2,
+        | STDDEV_POP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_pop_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // VAR_SAMP / STDDEV_SAMP maintained incrementally — the compiler
+    // folds the retractable moments (n, Σx, Σx²) exactly (Σ in
+    // DECIMAL(38,0); INTEGRAL argument enforced at compile time) and
+    // evaluates (n·Σx² − (Σx)²)/(n·(n−1)) once per group in double.
+    // The oracle mirrors that formula literally over the same exact
+    // integer moments (HUGEINT sums), so the doubles — and sqrt, IEEE
+    // correctly rounded — are bit-identical across engines.
+    maintained("incremental_sql_stddev",
+      """WITH t AS (
+        | SELECT n_name, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
+        | FROM region, nation, customer, orders
+        | WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        |  AND o_custkey = c_custkey
+        |  AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |  AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0),
+        |m AS (SELECT n_name, COUNT(v) AS n, SUM(CAST(v AS HUGEINT)) AS s,
+        |             SUM(CAST(v AS HUGEINT) * v) AS ss, COUNT(*) AS n_rows
+        |      FROM t GROUP BY n_name)
+        |SELECT n_name,
+        | (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE) AS var_price_e2,
+        | sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+        |   / CAST(NULLIF(n * (n - 1), 0) AS DOUBLE)) AS std_price_e2,
+        | n_rows
+        |FROM m""".stripMargin,
+      """SELECT n_name,
+        | VAR_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS var_price_e2,
+        | STDDEV_SAMP(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS std_price_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // CORR composed with ROLLUP — the co-moment folds run per grouping
+    // set through the same delta-side Expand as every other aggregate
+    // family, so subtotal and grand-total correlations maintain
+    // incrementally too; DuckDB's native ROLLUP + its own moment
+    // mirror per set is the oracle.
+    maintained("incremental_sql_corr_rollup",
+      """WITH t AS (
+        | SELECT n_name, o_orderstatus,
+        |  CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x, o_custkey AS y
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderkey % 6 <> 0),
+        |m AS (SELECT n_name, o_orderstatus,
+        |  COUNT(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN 1 END) AS n,
+        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) END) AS sx,
+        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) END) AS sy,
+        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * x END) AS sxx,
+        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(y AS HUGEINT) * y END) AS syy,
+        |  SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN CAST(x AS HUGEINT) * y END) AS sxy,
+        |  COUNT(*) AS n_rows
+        | FROM t GROUP BY ROLLUP (n_name, o_orderstatus))
+        |SELECT n_name, o_orderstatus,
+        | (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |  / NULLIF(sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))
+        |    * sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE), 0.0)), 0.0) AS r,
+        | n_rows
+        |FROM m""".stripMargin,
+      """SELECT n_name, o_orderstatus,
+        | CORR(CAST(round(o_totalprice * 100, 0) AS BIGINT), o_custkey) AS r,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // COUNT(DISTINCT) maintained incrementally — no extra engine
+    // state: the leaf delta multiset nets per (group, value), so the
+    // compiler derives it with a per-value rollup joined back on the
+    // group keys.
+    maintained("incremental_sql_count_distinct",
+      """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
+        | CAST(SUM(DISTINCT o_custkey) AS BIGINT) AS sum_cust, COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, COUNT(DISTINCT o_orderpriority) AS n_prio,
+        | SUM(DISTINCT o_custkey) AS sum_cust, COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // AVG(DISTINCT) — the remaining distinct-aggregate form: same
+    // per-(group, value) netting rollup as SUM/COUNT DISTINCT, exact
+    // integer Σ and n over the surviving value set, ONE correctly-
+    // rounded IEEE division — so retraction-exact and bit-identical
+    // cross-engine.
+    maintained("incremental_sql_avg_distinct",
+      """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
+        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, AVG(DISTINCT o_custkey) AS avg_cust,
+        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // Aggregate FILTER clauses — everyday SQL the compiler turns into
+    // sign-weighted CASE folds (rows failing the predicate contribute
+    // NULL, which every retractable aggregate handles exactly; COUNT
+    // FILTER becomes a 0/1 SUM). One entry carries a FILTER on every
+    // supported kind; the oracle uses DuckDB's native FILTER (CASE for
+    // the DISTINCT one) so the rewrite itself is what's gated.
+    maintained("incremental_sql_filter",
+      """SELECT n_name,
+        | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |   FILTER (WHERE o_totalprice > 150000) AS BIGINT) AS big_rev_e2,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |   FILTER (WHERE o_orderkey % 2 = 0) AS DOUBLE)
+        |   / COUNT(*) FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
+        | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
+        | COUNT(DISTINCT CASE WHEN o_totalprice > 100000 THEN o_orderpriority END) AS n_prio_big,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name,
+        | COUNT(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |   FILTER (WHERE o_totalprice > 150000) AS big_rev_e2,
+        | AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |   FILTER (WHERE o_orderkey % 2 = 0) AS avg_even_e2,
+        | MAX(o_orderkey) FILTER (WHERE o_orderkey % 2 = 1) AS max_odd,
+        | COUNT(DISTINCT o_orderpriority) FILTER (WHERE o_totalprice > 100000) AS n_prio_big,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0))),
+
+    // EXISTS from SQL text — the correlated subquery compiles to a
+    // set-semantics key node over orders(o_custkey) gating customer's
+    // changelog through an extra liveness hop (SqlCompiler gate
+    // surgery); the subquery's local predicate is pushed to the orders
+    // scan. Same changelog/delete schedule as the hand-built
+    // incremental_exists_semi, proving text and tree agree.
+    maintained("incremental_sql_exists",
+      """SELECT c_nationkey, COUNT(*) AS n_cust,
+        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
+        |FROM customer
+        |WHERE c_custkey % 30 <> 0
+        | AND EXISTS (SELECT 1 FROM orders
+        |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
+        |               AND o_orderkey % 40 <> 0)
+        |GROUP BY c_nationkey""".stripMargin,
+      """SELECT c_nationkey, COUNT(*) AS n_cust,
+        | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
+        |FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+        |GROUP BY c_nationkey""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 30 === 0),
+        "orders" -> (col("o_orderkey") % 40 === 0))),
+
+    // NOT EXISTS from SQL text, composed WITH an outer FK tree: the
+    // anti gate splices in front of customer's tree stage (base
+    // changelog routes by the correlation key c_custkey, the gate
+    // re-keys survivors by c_nationkey into the nation join).
+    maintained("incremental_sql_not_exists",
+      """SELECT n_name, COUNT(*) AS n_cust,
+        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
+        |FROM nation, customer
+        |WHERE c_nationkey = n_nationkey
+        | AND c_custkey % 30 <> 0
+        | AND NOT EXISTS (SELECT 1 FROM orders
+        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
+        |                   AND o_orderkey % 40 <> 0)
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, COUNT(*) AS n_cust,
+        | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
+        |FROM nation, customer
+        |WHERE c_nationkey = n_nationkey
+        | AND NOT EXISTS (SELECT 1 FROM orders
+        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 30 === 0),
+        "orders" -> (col("o_orderkey") % 40 === 0))),
+
+    // IN (subquery) from SQL text — the projected column is the
+    // matching key, the equality implicit; compiles to the same semi
+    // gate. Deletes shrink the matching set (a customer leaving
+    // retracts every order it admitted) and the outer side.
+    maintained("incremental_sql_in",
+      """SELECT o_orderpriority, COUNT(*) AS n_orders
+        |FROM orders
+        |WHERE o_orderkey % 6 <> 0
+        | AND o_custkey IN (SELECT c_custkey FROM customer
+        |                   WHERE c_acctbal > 1000 AND c_custkey % 30 <> 0)
+        |GROUP BY o_orderpriority""".stripMargin,
+      """SELECT o_orderpriority, COUNT(*) AS n_orders
+        |FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        |                    WHERE c_acctbal > 1000)
+        |GROUP BY o_orderpriority""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 6 === 0),
+        "customer" -> (col("c_custkey") % 30 === 0))),
+
+    // SELF-JOIN from SQL text — one relation under two FROM aliases,
+    // compiled via SqlCompiler's alias expansion (each instance becomes
+    // its own virtual relation o1/o2 with prefixed columns): urgent
+    // orders paired with low-priority orders of the same customer, the
+    // hierarchy/pair shape a real user writes first. Plans as customer
+    // (a root dimension) shared by the two instances — the
+    // trunk-bucketed pair glue — with instance-independent deletes
+    // retracting across the product in both directions. DuckDB runs
+    // the self-join natively as the oracle.
+    maintained("incremental_sql_self_join",
+      """SELECT c_mktsegment, COUNT(*) AS n_pairs,
+        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
+        |FROM customer, orders o1, orders o2
+        |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
+        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
+        | AND o1.o_orderkey % 7 <> 0 AND o2.o_orderkey % 5 <> 0
+        |GROUP BY c_mktsegment""".stripMargin,
+      """SELECT c_mktsegment, COUNT(*) AS n_pairs,
+        | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
+        |FROM customer, orders o1, orders o2
+        |WHERE o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
+        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
+        |GROUP BY c_mktsegment""".stripMargin,
+      Map(
+        "o1" -> (col("o1_o_orderkey") % 7 === 0),
+        "o2" -> (col("o2_o_orderkey") % 5 === 0))),
+
+    // TWO pair stages in ONE graph — the next shape after one shared
+    // dimension: nation shared by customer AND supplier (outer glue,
+    // trunk-bucketed — root dim), customer shared by two orders
+    // instances via self-join expansion (inner glue, customer-keyed —
+    // c_custkey cardinality grows with the data, so PairOrientation
+    // .Auto correctly keeps the zero-extra-shuffle routing there).
+    // Deletes hit a branch of EACH glue, so retractions cross both
+    // products. Five relations, six stages, DuckDB runs the quad join
+    // natively as the oracle.
+    maintained("incremental_sql_two_pairs",
+      """SELECT n_name, COUNT(*) AS n_quads,
+        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
+        |FROM nation, customer, supplier, orders o1, orders o2
+        |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
+        | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
+        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
+        | AND s_acctbal >= 0
+        | AND o1.o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, COUNT(*) AS n_quads,
+        | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
+        |FROM nation, customer, supplier, orders o1, orders o2
+        |WHERE c_nationkey = n_nationkey AND s_nationkey = n_nationkey
+        | AND o1.o_custkey = c_custkey AND o2.o_custkey = c_custkey
+        | AND o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
+        | AND s_acctbal >= 0
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "o1" -> (col("o1_o_orderkey") % 7 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
+
+    // The reference's FULL flagship shape — grouped aggregate + HAVING
+    // + ORDER BY + LIMIT — compiled from one SQL text: the wrappers
+    // are presentation over the maintained view (deterministic via the
+    // c_custkey tie-break), the fold underneath is the same q10 tree.
+    maintained("incremental_sql_q10_full",
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM customer, orders, lineitem, nation
+         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+         | AND c_nationkey = n_nationkey
+         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND l_returnflag = 'R'
+         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
+         |GROUP BY c_custkey, c_name, c_acctbal, n_name
+         |HAVING COUNT(*) >= 2
+         |ORDER BY revenue_e4 DESC, c_custkey
+         |LIMIT 20""".stripMargin,
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation, customer, orders, lineitem
+         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+         | AND c_nationkey = n_nationkey
+         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND l_returnflag = 'R'
+         |GROUP BY c_custkey, c_name, c_acctbal, n_name
+         |HAVING n_rows >= 2
+         |ORDER BY revenue_e4 DESC, c_custkey
+         |LIMIT 20""".stripMargin,
+      q10Deletes),
+
+    // INCREMENTAL ROLLUP — every expanded grouping set maintained
+    // independently (exact for every aggregate kind) and unioned with
+    // null-padded inactive keys, against DuckDB's native ROLLUP.
+    // Perf note (r10, the r9 verdict's one >40% bench move): the
+    // r8→r9 1.55→2.29 s median was machine contention (the r9 bench
+    // JVM also ran 3×32 scale-check passes), not a plan change —
+    // profiled warm steady state at sf0.1 is ~1.4 s on unchanged
+    // machinery.
+    maintained("incremental_sql_rollup",
+      """SELECT n_name, o_orderpriority,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderkey % 6 <> 0 AND c_custkey % 9 <> 0
+        |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin,
+      """SELECT n_name, o_orderpriority,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY ROLLUP (n_name, o_orderpriority)""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 6 === 0),
+        "customer" -> (col("c_custkey") % 9 === 0))),
+
+    // ROLLUP with GROUPING() disambiguation — the per-set constant
+    // that separates subtotal NULLs from null-valued keys, against
+    // DuckDB's native GROUPING().
+    maintained("incremental_sql_rollup_grouping",
+      """SELECT n_name, o_orderstatus,
+        | CAST(GROUPING(n_name) AS BIGINT) AS g_nation,
+        | CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderkey % 6 <> 0
+        |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin,
+      """SELECT n_name, o_orderstatus,
+        | GROUPING(n_name) AS g_nation, GROUPING(o_orderstatus) AS g_status,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY ROLLUP (n_name, o_orderstatus)""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // INCREMENTAL CUBE with COUNT(DISTINCT) — the per-value rollup
+    // runs inside EVERY grouping set including the grand total (the
+    // non-derivable aggregate case that re-aggregation shortcuts get
+    // wrong), against DuckDB's native CUBE.
+    maintained("incremental_sql_cube",
+      """SELECT n_name, o_orderstatus,
+        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderkey % 6 <> 0
+        |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin,
+      """SELECT n_name, o_orderstatus,
+        | COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY CUBE (n_name, o_orderstatus)""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // DISCRETE MEDIAN under retraction — derives from the same
+    // per-(group, value) netting rollup as MIN/MAX (deleting the
+    // current median re-exposes the next value exactly); the oracle is
+    // DuckDB's quantile_disc(x, 0.5), the identical lower-median
+    // element selection, bit-exact even on the DOUBLE argument since
+    // both engines SELECT an existing value rather than folding.
+    maintained("incremental_sql_median",
+      """SELECT n_name, quantile_disc(o_totalprice, 0.5) AS med_price,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 6 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, MEDIAN(o_totalprice) AS med_price,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // GENERAL DISCRETE QUANTILES under retraction — MEDIAN's element
+    // selection at arbitrary q: the inverted-CDF cut (smallest value
+    // whose cumulative net count reaches ceil(q·n)) evaluated in exact
+    // integer cross-products of the rational q, so Q1 and Q3 ride the
+    // SAME per-(group, value) rollup and cumulative frame as each
+    // other (one sort, two conditional MINs). Oracle = DuckDB's
+    // native quantile_disc at both q's.
+    maintained("incremental_sql_quantile",
+      """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
+        | quantile_disc(o_totalprice, 0.75) AS q3_price,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F' AND o_orderkey % 6 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, quantile_disc(o_totalprice, 0.25) AS q1_price,
+        | quantile_disc(o_totalprice, 0.75) AS q3_price,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // MODE under retraction with a DETERMINISTIC tie rule (largest net
+    // count, then smallest value): rank-1 selection over the netting
+    // rollup's frequency table. DuckDB's mode() leaves ties
+    // unspecified, so the oracle spells the identical window instead —
+    // the tie rule is part of the operator's contract, not an
+    // implementation accident.
+    maintained("incremental_sql_mode",
+      """WITH base AS (
+        | SELECT n_name, o_orderpriority
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderkey % 6 <> 0),
+        |pv AS (SELECT n_name, o_orderpriority AS v, COUNT(*) AS n
+        |       FROM base GROUP BY n_name, v),
+        |md AS (SELECT n_name, v FROM (
+        |        SELECT n_name, v,
+        |         ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY n DESC, v) AS rk
+        |        FROM pv) WHERE rk = 1),
+        |cnt AS (SELECT n_name, COUNT(*) AS n_rows FROM base GROUP BY n_name)
+        |SELECT cnt.n_name, md.v AS mode_prio, n_rows
+        |FROM cnt JOIN md USING (n_name)""".stripMargin,
+      """SELECT n_name, mode(o_orderpriority) AS mode_prio,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY n_name""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // MAX_BY / MIN_BY under retraction — "which order was the
+    // extreme": state is the netting rollup over the (price, orderkey)
+    // PAIR, and the answer is a struct extreme, so ties on the price
+    // break deterministically toward the extreme key. The oracle
+    // spells the same rule as join-back-on-extreme + MAX/MIN over the
+    // tied keys.
+    maintained("incremental_sql_argmax",
+      """WITH base AS (
+        | SELECT n_name, o_orderkey, o_totalprice
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderkey % 6 <> 0),
+        |mx AS (SELECT n_name, MAX(o_totalprice) AS mp, MIN(o_totalprice) AS mn
+        |       FROM base GROUP BY n_name)
+        |SELECT base.n_name,
+        | MAX(CASE WHEN o_totalprice = mp THEN o_orderkey END) AS top_order,
+        | MIN(CASE WHEN o_totalprice = mn THEN o_orderkey END) AS bottom_order,
+        | COUNT(*) AS n_rows
+        |FROM base JOIN mx USING (n_name)
+        |GROUP BY base.n_name""".stripMargin,
+      """SELECT n_name, max_by(o_orderkey, o_totalprice) AS top_order,
+        | min_by(o_orderkey, o_totalprice) AS bottom_order,
+        | COUNT(*) AS n_rows
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY n_name""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // SCALAR-SUBQUERY GATE — the above-global-average idiom as a
+    // maintained view: the scalar is NONLINEAR (one input row moves
+    // the average and can flip every other row's predicate), so the
+    // compiler resolves it per refresh over the SURVIVOR inputs and
+    // splices the literal into the orders scan filter
+    // (Compiled.withScalarGatesResolved); runStream fences an
+    // unresolved gate loudly, so the streamed twin resolves it over
+    // the survivor inputs before its replay. Exact-money determinism: AVG over e2 BIGINTs is an
+    // exact integer sum + ONE IEEE division in both engines, and the
+    // row-side comparand is an exact BIGINT below 2^53.
+    maintained("incremental_sql_scalar_gate",
+      """WITH srv AS (SELECT * FROM orders WHERE o_orderkey % 6 <> 0),
+        |a AS (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS ap FROM srv)
+        |SELECT n_name, COUNT(*) AS n_big,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS big_rev_e2
+        |FROM nation, customer, srv, a
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) > ap
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name, COUNT(*) AS n_big,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS big_rev_e2
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND CAST(round(o_totalprice * 100, 0) AS BIGINT) >
+        |     (SELECT AVG(CAST(round(o_totalprice * 100, 0) AS BIGINT)) FROM orders)
+        |GROUP BY n_name""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // ANALYTIC PRESENTATION over a maintained view — window functions
+    // in the SELECT list compile as a post-view decoration
+    // (Compiled.windowItems): the incrementally maintained aggregate
+    // is the window's input frame, so each refresh ranks the
+    // group-cardinality view, never the input. RANK within nation plus
+    // a nation-total window aggregate, both referencing the maintained
+    // alias; deterministic ties (price DESC, then priority). The
+    // oracle spells the same windows over a subquery (standard SQL has
+    // no lateral alias in OVER; the engine's dialect defines windows
+    // over the view's output columns).
+    maintained("incremental_sql_window_rank",
+      """WITH v AS (
+        | SELECT n_name, o_orderpriority,
+        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderkey % 6 <> 0
+        | GROUP BY n_name, o_orderpriority)
+        |SELECT n_name, o_orderpriority, price_e2,
+        | RANK() OVER (PARTITION BY n_name
+        |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
+        | CAST(SUM(price_e2) OVER (PARTITION BY n_name) AS BIGINT) AS nation_total_e2
+        |FROM v""".stripMargin,
+      """SELECT n_name, o_orderpriority,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
+        | RANK() OVER (PARTITION BY n_name
+        |   ORDER BY price_e2 DESC, o_orderpriority) AS prio_rank,
+        | SUM(price_e2) OVER (PARTITION BY n_name) AS nation_total_e2
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
+
+    // HAVING × WINDOW in SQL evaluation order over the maintained
+    // view: the HAVING prefix filters groups FIRST, then the rank
+    // decorates the survivors (a rank counting filtered-out groups
+    // would be off by the number of dropped rows above the cut — the
+    // bug the ordering machinery exists to prevent). Partitioned rank
+    // (per priority), deterministic ties.
+    maintained("incremental_sql_having_window",
+      """WITH v AS (
+        | SELECT o_orderpriority, n_name, COUNT(*) AS n_orders
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderkey % 5 <> 0
+        | GROUP BY o_orderpriority, n_name
+        | HAVING COUNT(*) > 100)
+        |SELECT o_orderpriority, n_name, n_orders,
+        | RANK() OVER (PARTITION BY o_orderpriority
+        |   ORDER BY n_orders DESC, n_name) AS nation_rank
+        |FROM v""".stripMargin,
+      """SELECT o_orderpriority, n_name, COUNT(*) AS n_orders,
+        | RANK() OVER (PARTITION BY o_orderpriority
+        |   ORDER BY n_orders DESC, n_name) AS nation_rank
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY o_orderpriority, n_name HAVING n_orders > 100""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 5 === 0))),
+
+    // GROUP BY expressions compiled from text: a COMPUTED grouping key
+    // (calendar year) evaluates over the typed leaf deltas — grouping
+    // is no longer limited to stored columns. The oracle wraps the SUM
+    // in CAST(... AS BIGINT) (DuckDB SUM(BIGINT) returns HUGEINT);
+    // Spark's sum(BIGINT) is already BIGINT, so the compiled text keeps
+    // the bare SUM.
+    maintained("incremental_sql_group_expr",
+      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_e2,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderkey % 4 <> 0
+        |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin,
+      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
+        | COUNT(*) AS n_orders
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |GROUP BY n_name, CAST(year(o_orderdate) AS BIGINT)""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 4 === 0))),
+
+    // VIEW MODE (bag): a SELECT with no aggregate maintains the JOIN
+    // ITSELF — the leaf deltas net per selected tuple and the view
+    // restores SQL bag multiplicity by net-count explode. The selected
+    // pair (n_name, o_orderpriority) is deliberately low-cardinality so
+    // most net counts are way above 1: the multiplicity machinery, not
+    // just survivorship, is what the row-count+hash compare checks.
+    maintained("incremental_sql_join_view",
+      """SELECT n_name, o_orderpriority
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F'
+        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin,
+      """SELECT n_name, o_orderpriority
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderstatus = 'F'""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 10 === 0),
+        "customer" -> (col("c_custkey") % 13 === 0))),
+
+    // SELECT * — the first query a real user types: the star expands
+    // to the FROM relations' columns (schema order, FROM order; the
+    // FK graph's bare-name uniqueness makes it unambiguous) and the
+    // FULL-WIDTH join view is maintained. Every column type rides the
+    // canonical row's string codec (BIGINT, VARCHAR and the DOUBLE
+    // c_acctbal — Java's toString/parse roundtrip is exact).
+    maintained("incremental_sql_select_star",
+      """SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey
+        |WHERE c_custkey % 13 <> 0""".stripMargin,
+      "SELECT * FROM nation JOIN customer ON c_nationkey = n_nationkey",
+      Map("customer" -> (col("c_custkey") % 13 === 0))),
+
+    // QUALIFIED star (n.*) resolving through a table alias, mixed with
+    // an explicit column — DuckDB runs the identical spelling.
+    maintained("incremental_sql_select_star_qualified",
+      """SELECT c_mktsegment, n.*
+        |FROM nation n JOIN customer c ON c_nationkey = n_nationkey
+        |WHERE c_custkey % 13 <> 0""".stripMargin,
+      """SELECT c_mktsegment, n.*
+        |FROM nation n JOIN customer c ON c_nationkey = n_nationkey""".stripMargin,
+      Map("customer" -> (col("c_custkey") % 13 === 0))),
+
+    // VIEW MODE (set): SELECT DISTINCT over the same tree — the
+    // maintained set view (net > 0 = present), no multiplicity.
+    maintained("incremental_sql_distinct_view",
+      """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin,
+      """SELECT DISTINCT n_name, o_orderpriority, o_orderstatus
+        |FROM nation, customer, orders
+        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 10 === 0),
+        "customer" -> (col("c_custkey") % 13 === 0))),
+
+    // The SAME shared-dimension query compiled FROM SQL TEXT.
+    maintained("incremental_sql_shared_dim", sharedDimOracle,
+      s"""SELECT n_name,
+         | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS revenue_e2,
+         | COUNT(*) AS n_pairs
+         |FROM nation, customer, orders, supplier
+         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+         | AND s_nationkey = n_nationkey
+         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND s_acctbal >= 0
+         |GROUP BY n_name""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 7 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
+
+    // Shared dimension WITH a parent above it: region's liveness
+    // threads through the trunk (region→nation→customer) before the
+    // supplier product — five relations, one pair glue, compiled from
+    // text.
+    maintained("incremental_sql_shared_parent",
+      """SELECT n_name,
+        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2,
+        | COUNT(*) AS n_pairs
+        |FROM region, nation, customer, supplier
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND s_nationkey = n_nationkey
+        | AND r_name <> 'ASIA' AND c_custkey % 6 <> 0 AND s_suppkey % 5 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2,
+        | COUNT(*) AS n_pairs
+        |FROM region, nation, customer, supplier
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey
+        | AND s_nationkey = n_nationkey AND r_name <> 'ASIA'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 6 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
+
+    // The SAME branching query compiled FROM SQL TEXT: SqlCompiler
+    // linearizes the multi-parent lineitem into per-FK stages.
+    maintained("incremental_sql_part_revenue",
+      s"""SELECT n_name, p_brand,
+         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation, customer, orders, lineitem, part
+         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
+         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND l_returnflag = 'R' AND p_size <= 25
+         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
+         |GROUP BY n_name, p_brand""".stripMargin,
+      s"""SELECT n_name, p_brand,
+         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+         | COUNT(*) AS n_rows
+         |FROM nation, customer, orders, lineitem, part
+         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
+         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+         | AND l_returnflag = 'R' AND p_size <= 25
+         |GROUP BY n_name, p_brand""".stripMargin,
+      Map(
+        "lineitem" -> (col("l_linenumber") === 3),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "part" -> (col("p_partkey") % 10 === 0))),
 
     // INDEPENDENT (star) double FULL OUTER — two boundaries hanging
     // off the SAME inner parent factorize into the per-boundary
@@ -5936,30 +4431,8 @@ object IncrementalQueries {
     // Nation deletes orphan BOTH boundary sides at once — the class
     // the nested shape cannot produce. DuckDB runs the literal double
     // FULL JOIN natively as the oracle.
-    sql("incremental_sql_q10_fullouter_star", starFullOuterOracle) {
-      (s, dir) => SqlCompiler.run(s, dir, starFullOuterSql,
-        deletes = starFullOuterDeletes)
-    },
-
-    // … and through the CONTINUOUS engine: all six preservation plans
-    // hold state across micro-batches; a nation delete in batch 2 must
-    // retract its pair products AND assert both orphan directions.
-    sql("incremental_sql_q10_fullouter_star_stream", starFullOuterOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compile(s, dir, starFullOuterSql),
-        dir, starFullOuterDeletes,
-        "incremental_sql_q10_fullouter_star_stream_leaf")
-    },
-
-    // … and the star view on the TRANSFORMWITHSTATE drivers — all six
-    // preservation plans' state on the supported arbitrary-state API,
-    // same oracle: three state implementations, one truth.
-    sql("incremental_sql_q10_fullouter_star_tws", starFullOuterOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compile(s, dir, starFullOuterSql),
-        dir, starFullOuterDeletes,
-        "incremental_sql_q10_fullouter_star_tws_leaf", tws = true)
-    },
+    maintained("incremental_sql_q10_fullouter_star", starFullOuterOracle, starFullOuterSql,
+      starFullOuterDeletes, twins = Seq(Stream, Tws)),
 
     // PAIR-STAR double FULL OUTER — the two boundaries hang off
     // DIFFERENT relations of a dimension-bridged core (orders off
@@ -5979,21 +4452,8 @@ object IncrementalQueries {
     // any shared-dimension product, so it is correctness-gated at
     // sf0.01 and deliberately NOT a bench headliner. DuckDB runs the
     // literal nested double FULL JOIN natively.
-    sql("incremental_sql_q10_fullouter_star_pair", pairStarOracle) {
-      (s, dir) => SqlCompiler.compileOver(s, dir, pairStarSql, pairStarOverrides)
-        .run(s, dir, pairStarDeletes)
-    },
-
-    // … and through the CONTINUOUS engine: the pair product AND all
-    // five factorized plans hold state across micro-batches — batch-2
-    // deletes must retract pair products and flip both orphan
-    // directions through held state.
-    sql("incremental_sql_q10_fullouter_star_pair_stream", pairStarOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarSql, pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair", pairStarOracle, pairStarSql,
+      pairStarDeletes, twins = Seq(Stream, Tws), overrides = pairStarOverrides),
 
     // WHERE × pair-star: the boundary predicate NULL-rejects every
     // class whose lineitem side is NULL, so only the pair product,
@@ -6001,25 +4461,8 @@ object IncrementalQueries {
     // the matrix — the same per-boundary-product class selection as
     // the same-parent star, now on the pair shape). The predicate
     // also lands as a lineitem scan filter.
-    sql("incremental_sql_q10_fullouter_star_pair_filtered",
-      pairStarFilteredOracle) {
-      (s, dir) => SqlCompiler.compileOver(s, dir, pairStarFilteredSql,
-        pairStarOverrides)
-        .run(s, dir, pairStarDeletes)
-    },
-
-    // … and through the CONTINUOUS engine: the three surviving classes
-    // ({1, 3, 6} — the WHERE NULL-rejects every lineitem-NULL class)
-    // hold state across micro-batches; batch-2 deletes must retract
-    // pair products and flip the lineitem-orphan direction through
-    // held state, under the same class selection.
-    sql("incremental_sql_q10_fullouter_star_pair_filtered_stream",
-      pairStarFilteredOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarFilteredSql, pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_filtered_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_filtered", pairStarFilteredOracle,
+      pairStarFilteredSql, pairStarDeletes, overrides = pairStarOverrides),
 
     // GATES × PAIR-STAR: a NOT EXISTS gate on the bridging dimension
     // keeps all six classes (trivially TRUE on the orphans' structural
@@ -6027,58 +4470,15 @@ object IncrementalQueries {
     // a region flip must retract/assert its nations' pair products
     // through the spliced gate hops, while orphan-ness stays join-time
     // (the orphan key nodes ride the UNGATED core).
-    sql("incremental_sql_q10_fullouter_star_pair_gated",
-      pairStarGatedOracle("NOT ")) {
-      (s, dir) => SqlCompiler.compileOver(s, dir, pairStarGatedSql("NOT "),
-        pairStarOverrides)
-        .run(s, dir, pairStarDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_gated_stream",
-      pairStarGatedOracle("NOT ")) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarGatedSql("NOT "), pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_gated_stream_leaf")
-    },
-
-    // … and on the TRANSFORMWITHSTATE drivers — the gate key nodes,
-    // the gated replanned cores, and the ungated orphan plans all on
-    // the supported arbitrary-state API: three state implementations,
-    // one truth, now for the gated pair-star too.
-    sql("incremental_sql_q10_fullouter_star_pair_gated_tws",
-      pairStarGatedOracle("NOT ")) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarGatedSql("NOT "), pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_gated_tws_leaf", tws = true)
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_gated", pairStarGatedOracle("NOT "),
+      pairStarGatedSql("NOT "), pairStarDeletes, twins = Seq(Stream, Tws),
+      overrides = pairStarOverrides),
 
     // … and the EXISTS direction: never TRUE on structural NULLs, so
     // classes 5/6 are DROPPED statically (starDrop) and only the live
     // classes build — the other half of the static/dynamic split.
-    sql("incremental_sql_q10_fullouter_star_pair_gated_exists",
-      pairStarGatedOracle("")) {
-      (s, dir) => SqlCompiler.compileOver(s, dir, pairStarGatedSql(""),
-        pairStarOverrides)
-        .run(s, dir, pairStarDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_gated_exists_stream",
-      pairStarGatedOracle("")) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarGatedSql(""), pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_gated_exists_stream_leaf")
-    },
-
-    // … and on the TRANSFORMWITHSTATE drivers — the pair product plus
-    // all five factorized plans' state on the supported arbitrary-
-    // state API, same oracle: three state implementations, one truth.
-    sql("incremental_sql_q10_fullouter_star_pair_tws", pairStarOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarSql, pairStarOverrides),
-        dir, pairStarDeletes,
-        "incremental_sql_q10_fullouter_star_pair_tws_leaf", tws = true)
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_gated_exists", pairStarGatedOracle(""),
+      pairStarGatedSql(""), pairStarDeletes, overrides = pairStarOverrides),
 
     // PAIR-star under an inner CHAIN PREFIX (region→nation→{customer,
     // supplier}): the six-class factorization carries over with the
@@ -6088,18 +4488,8 @@ object IncrementalQueries {
     // merged pair emissions, which already fold the prefix — the same
     // move that closed ancestor deletes in r9). Spec-asserted against
     // stock SQL; this is the gated DuckDB entry.
-    sql("incremental_sql_q10_fullouter_star_pair_chain",
-      pairStarChainOracle) {
-      (s, dir) => SqlCompiler.compileOver(s, dir, pairStarChainSql,
-        pairStarOverrides).run(s, dir, pairStarChainDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_chain_stream",
-      pairStarChainOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarChainSql, pairStarOverrides),
-        dir, pairStarChainDeletes,
-        "incremental_sql_q10_fullouter_star_pair_chain_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_chain", pairStarChainOracle,
+      pairStarChainSql, pairStarChainDeletes, overrides = pairStarOverrides),
 
     // CHAIN × GATE (NOT EXISTS): region feeds BOTH the folded prefix
     // and the spliced gate hop — a batch-2 region delete retracts its
@@ -6107,66 +4497,33 @@ object IncrementalQueries {
     // any nation whose ASIA witness died, in one changelog. All six
     // classes survive (NOT EXISTS is TRUE on the orphans' structural
     // NULLs); the orphan key nodes ride the UNGATED prefix-folded core.
-    sql("incremental_sql_q10_fullouter_star_pair_chain_gated",
-      pairStarChainGatedOracle("NOT ")) {
-      (s, dir) => SqlCompiler.compileOver(s, dir,
-        pairStarChainGatedSql("NOT "), pairStarOverrides)
-        .run(s, dir, pairStarChainDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_chain_gated_stream",
-      pairStarChainGatedOracle("NOT ")) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarChainGatedSql("NOT "),
-          pairStarOverrides),
-        dir, pairStarChainDeletes,
-        "incremental_sql_q10_fullouter_star_pair_chain_gated_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_chain_gated",
+      pairStarChainGatedOracle("NOT "), pairStarChainGatedSql("NOT "), pairStarChainDeletes,
+      overrides = pairStarOverrides),
 
     // … and the EXISTS direction on the chain: never TRUE on
     // structural NULLs, so the orphan classes drop statically and only
     // the live prefix-folded classes build — the static/dynamic split,
     // now composed under the chain prefix.
-    sql("incremental_sql_q10_fullouter_star_pair_chain_gated_exists",
-      pairStarChainGatedOracle("")) {
-      (s, dir) => SqlCompiler.compileOver(s, dir,
-        pairStarChainGatedSql(""), pairStarOverrides)
-        .run(s, dir, pairStarChainDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_chain_gated_exists_stream",
-      pairStarChainGatedOracle("")) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarChainGatedSql(""),
-          pairStarOverrides),
-        dir, pairStarChainDeletes,
-        "incremental_sql_q10_fullouter_star_pair_chain_gated_exists_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_chain_gated_exists",
+      pairStarChainGatedOracle(""), pairStarChainGatedSql(""), pairStarChainDeletes,
+      overrides = pairStarOverrides),
 
     // CHAIN × WHERE (boundary predicate): the lineitem-side conjunct
     // NULL-rejects every lineitem-NULL class — the {1, 3, 6} selection
     // of the r12 matrix — on the chain-prefixed shape, so a region
     // delete retracts transitively through the surviving filtered
     // plans and the lineitem-orphan direction still flips dynamically.
-    sql("incremental_sql_q10_fullouter_star_pair_chain_filtered",
-      pairStarChainFilteredOracle) {
-      (s, dir) => SqlCompiler.compileOver(s, dir,
-        pairStarChainFilteredSql, pairStarOverrides)
-        .run(s, dir, pairStarChainDeletes)
-    },
-    sql("incremental_sql_q10_fullouter_star_pair_chain_filtered_stream",
-      pairStarChainFilteredOracle) {
-      (s, dir) => runSqlStreamed(s,
-        SqlCompiler.compileOver(s, dir, pairStarChainFilteredSql,
-          pairStarOverrides),
-        dir, pairStarChainDeletes,
-        "incremental_sql_q10_fullouter_star_pair_chain_filtered_stream_leaf")
-    },
+    maintained("incremental_sql_q10_fullouter_star_pair_chain_filtered",
+      pairStarChainFilteredOracle, pairStarChainFilteredSql, pairStarChainDeletes,
+      overrides = pairStarOverrides),
 
     // Star boundaries under an inner CHAIN (region→nation): the five
     // factorized plans build on the chain prefix — a REGION delete
     // must retract its nations' pair products and orphan their
     // customers AND suppliers transitively (the orphan key nodes ride
     // the prefix's merged emissions, not the parent's raw changelog).
-    sql("incremental_sql_q10_fullouter_star_chain",
+    maintained("incremental_sql_q10_fullouter_star_chain",
       """WITH r AS (SELECT * FROM region WHERE r_regionkey % 2 <> 0),
         |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
@@ -6175,53 +4532,24 @@ object IncrementalQueries {
         |FROM r JOIN nation ON n_regionkey = r_regionkey
         |FULL JOIN c ON c_nationkey = n_nationkey
         |FULL JOIN s ON s_nationkey = n_nationkey
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-          |FROM region
-          |JOIN nation ON n_regionkey = r_regionkey
-          |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-          |GROUP BY n_name, c_mktsegment""".stripMargin,
-        deletes = Map(
-          "region" -> (col("r_regionkey") % 2 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-
-    // … and streamed: batch 2's region deletes flip orphanhood on BOTH
-    // boundary sides through the prefix-fed key-node state.
-    sql("incremental_sql_q10_fullouter_star_chain_stream",
-      """WITH r AS (SELECT * FROM region WHERE r_regionkey % 2 <> 0),
-        |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
-        |SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2
-        |FROM r JOIN nation ON n_regionkey = r_regionkey
-        |FULL JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN s ON s_nationkey = n_nationkey
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-            |FROM region
-            |JOIN nation ON n_regionkey = r_regionkey
-            |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-            |GROUP BY n_name, c_mktsegment""".stripMargin),
-        dir, Map(
-          "region" -> (col("r_regionkey") % 2 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_q10_fullouter_star_chain_stream_leaf")
-    },
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
+        |FROM region
+        |JOIN nation ON n_regionkey = r_regionkey
+        |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      Map(
+        "region" -> (col("r_regionkey") % 2 === 0),
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
 
     // Star × WHERE class selection: the parent-side conjunct kills
     // exactly the two orphan classes; the three gated-extension plans
     // and the pair-product main tree maintain the rest. DuckDB runs
     // the literal double FULL JOIN + WHERE as the oracle.
-    sql("incremental_sql_q10_fullouter_star_filtered",
+    maintained("incremental_sql_q10_fullouter_star_filtered",
       """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
         |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
@@ -6230,23 +4558,21 @@ object IncrementalQueries {
         |FROM n FULL JOIN c ON c_nationkey = n_nationkey
         |FULL JOIN s ON s_nationkey = n_nationkey
         |WHERE n_name <> 'KENYA'
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-          |FROM nation
-          |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE n_name <> 'KENYA'
-          |GROUP BY n_name, c_mktsegment""".stripMargin,
-        deletes = starFullOuterDeletes)
-    },
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
+        |FROM nation
+        |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
+        |WHERE n_name <> 'KENYA'
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      starFullOuterDeletes),
 
     // Star × parent-key IS NULL — the find-the-orphans reading across
     // BOTH boundaries at once: only the two orphan plans run (main
     // suppressed, extension classes dropped); nation deletes must
     // assert orphans on BOTH sides.
-    sql("incremental_sql_q10_fullouter_star_isnull",
+    maintained("incremental_sql_q10_fullouter_star_isnull",
       """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
         |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
@@ -6255,69 +4581,22 @@ object IncrementalQueries {
         |FROM n FULL JOIN c ON c_nationkey = n_nationkey
         |FULL JOIN s ON s_nationkey = n_nationkey
         |WHERE n_nationkey IS NULL
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_mktsegment, COUNT(*) AS n_rows,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-          |FROM nation
-          |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE n_nationkey IS NULL
-          |GROUP BY c_mktsegment""".stripMargin,
-        deletes = starFullOuterDeletes)
-    },
-
-    // … and both through the CONTINUOUS engine, same oracles.
-    sql("incremental_sql_q10_fullouter_star_filtered_stream",
-      """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
-        |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
-        |SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2
-        |FROM n FULL JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN s ON s_nationkey = n_nationkey
-        |WHERE n_name <> 'KENYA'
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-            |FROM nation
-            |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-            |WHERE n_name <> 'KENYA'
-            |GROUP BY n_name, c_mktsegment""".stripMargin),
-        dir, starFullOuterDeletes,
-        "incremental_sql_q10_fullouter_star_filtered_stream_leaf")
-    },
-
-    sql("incremental_sql_q10_fullouter_star_isnull_stream",
-      """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
-        |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
-        |SELECT c_mktsegment, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2
-        |FROM n FULL JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN s ON s_nationkey = n_nationkey
+        |GROUP BY c_mktsegment""".stripMargin,
+      """SELECT c_mktsegment, COUNT(*) AS n_rows,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
+        |FROM nation
+        |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
         |WHERE n_nationkey IS NULL
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_mktsegment, COUNT(*) AS n_rows,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-            |FROM nation
-            |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-            |WHERE n_nationkey IS NULL
-            |GROUP BY c_mktsegment""".stripMargin),
-        dir, starFullOuterDeletes,
-        "incremental_sql_q10_fullouter_star_isnull_stream_leaf")
-    },
+        |GROUP BY c_mktsegment""".stripMargin,
+      starFullOuterDeletes),
 
     // GATES × NESTED two-boundary: EXISTS on a prefix relation drops
     // the prefix-NULL classes 3/4/6 statically (structural NULL
     // correlation is never TRUE) while classes 1/2/5 gate dynamically
     // through the gated stage list — DuckDB runs the literal
     // join-then-filter as the oracle.
-    sql("incremental_sql_q10_fullouter_two_boundary_gated",
+    maintained("incremental_sql_q10_fullouter_two_boundary_gated",
       """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
         |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
@@ -6328,58 +4607,27 @@ object IncrementalQueries {
         |FULL JOIN l ON l_orderkey = o_orderkey
         |WHERE EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-          | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE EXISTS (SELECT 1 FROM region
-          |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-          |GROUP BY n_name, o_orderpriority""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)))
-    },
-
-    sql("incremental_sql_q10_fullouter_two_boundary_gated_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE EXISTS (SELECT 1 FROM region
-            |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_2b_gated_leaf")
-    },
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "lineitem" -> (col("l_linenumber") === 3))),
 
     // … NOT EXISTS keeps classes 3/4/6 — and they must key off the
     // JOIN-TIME prefix: an ASIA customer is gate-dead but join-alive,
     // so its orders must NOT resurrect as orphan-order classes. The
     // customer deletes make real orphans; the gate makes gate-dead
     // non-orphans; DuckDB distinguishes them independently.
-    sql("incremental_sql_q10_fullouter_two_boundary_gated_anti",
+    maintained("incremental_sql_q10_fullouter_two_boundary_gated_anti",
       """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
         |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
@@ -6390,50 +4638,20 @@ object IncrementalQueries {
         |FULL JOIN l ON l_orderkey = o_orderkey
         |WHERE NOT EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-          | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-          |FROM nation
-          |JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN orders ON o_custkey = c_custkey
-          |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE NOT EXISTS (SELECT 1 FROM region
-          |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-          |GROUP BY n_name, o_orderpriority""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)))
-    },
-    sql("incremental_sql_q10_fullouter_two_boundary_gated_anti_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_linenumber <> 3)
-        |SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN o ON o_custkey = c_custkey
-        |FULL JOIN l ON l_orderkey = o_orderkey
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
+        | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
+        |FROM nation
+        |JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN orders ON o_custkey = c_custkey
+        |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE NOT EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, o_orderpriority, COUNT(*) AS n_rows,
-            | SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS rev_e2
-            |FROM nation
-            |JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN orders ON o_custkey = c_custkey
-            |FULL OUTER JOIN lineitem ON l_orderkey = o_orderkey
-            |WHERE NOT EXISTS (SELECT 1 FROM region
-            |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-            |GROUP BY n_name, o_orderpriority""".stripMargin),
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 50 === 0),
-          "lineitem" -> (col("l_linenumber") === 3)),
-        "incremental_sql_q10_fullouter_2b_gated_anti_leaf")
-    },
+        |GROUP BY n_name, o_orderpriority""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 50 === 0),
+        "lineitem" -> (col("l_linenumber") === 3))),
 
     // GATES × STAR: the gate correlates to the SHARED PARENT itself —
     // the absence hops chain onto the gate hop (classes 2-4 consume
@@ -6441,7 +4659,7 @@ object IncrementalQueries {
     // 5/6 decide statically: EXISTS drops them, NOT EXISTS keeps them
     // riding the UNGATED parent liveness (a gate-dead nation's
     // customers are join-matched, not orphans).
-    sql("incremental_sql_q10_fullouter_star_gated",
+    maintained("incremental_sql_q10_fullouter_star_gated",
       """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
         |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
@@ -6451,48 +4669,21 @@ object IncrementalQueries {
         |FULL JOIN s ON s_nationkey = n_nationkey
         |WHERE EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-          |FROM nation
-          |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE EXISTS (SELECT 1 FROM region
-          |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-          |GROUP BY n_name, c_mktsegment""".stripMargin,
-        deletes = Map(
-          "nation" -> (col("n_nationkey") % 7 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-    sql("incremental_sql_q10_fullouter_star_gated_stream",
-      """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
-        |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
-        |SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2
-        |FROM n FULL JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN s ON s_nationkey = n_nationkey
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
+        |FROM nation
+        |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
         |WHERE EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-            |FROM nation
-            |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-            |WHERE EXISTS (SELECT 1 FROM region
-            |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-            |GROUP BY n_name, c_mktsegment""".stripMargin),
-        dir, Map(
-          "nation" -> (col("n_nationkey") % 7 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_q10_fullouter_star_gated_leaf")
-    },
-    sql("incremental_sql_q10_fullouter_star_gated_anti",
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      Map(
+        "nation" -> (col("n_nationkey") % 7 === 0),
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
+
+    maintained("incremental_sql_q10_fullouter_star_gated_anti",
       """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
         |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
@@ -6502,47 +4693,19 @@ object IncrementalQueries {
         |FULL JOIN s ON s_nationkey = n_nationkey
         |WHERE NOT EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-          | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-          |FROM nation
-          |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-          |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE NOT EXISTS (SELECT 1 FROM region
-          |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-          |GROUP BY n_name, c_mktsegment""".stripMargin,
-        deletes = Map(
-          "nation" -> (col("n_nationkey") % 7 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)))
-    },
-    sql("incremental_sql_q10_fullouter_star_gated_anti_stream",
-      """WITH n AS (SELECT * FROM nation WHERE n_nationkey % 7 <> 0),
-        |     c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 5 <> 0)
-        |SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sbal_e2
-        |FROM n FULL JOIN c ON c_nationkey = n_nationkey
-        |FULL JOIN s ON s_nationkey = n_nationkey
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
+        | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
+        |FROM nation
+        |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
+        |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
         |WHERE NOT EXISTS (SELECT 1 FROM region
         |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-        |GROUP BY n_name, c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
-            | SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS sbal_e2
-            |FROM nation
-            |FULL OUTER JOIN customer ON c_nationkey = n_nationkey
-            |FULL OUTER JOIN supplier ON s_nationkey = n_nationkey
-            |WHERE NOT EXISTS (SELECT 1 FROM region
-            |  WHERE r_regionkey = n_regionkey AND r_name = 'ASIA')
-            |GROUP BY n_name, c_mktsegment""".stripMargin),
-        dir, Map(
-          "nation" -> (col("n_nationkey") % 7 === 0),
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 5 === 0)),
-        "incremental_sql_q10_fullouter_star_gated_anti_leaf")
-    },
+        |GROUP BY n_name, c_mktsegment""".stripMargin,
+      Map(
+        "nation" -> (col("n_nationkey") % 7 === 0),
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 5 === 0))),
 
     // NOT IN (subquery) — the null-free-provable case: both columns
     // are FK-graph key columns (NOT NULL by the engine's key
@@ -6550,50 +4713,26 @@ object IncrementalQueries {
     // on either side keeps the loud three-valued fence
     // (SqlCompilerSpec exercises the rejection). A customer delete
     // must ADMIT every order it was excluding.
-    sql("incremental_sql_not_in",
+    maintained("incremental_sql_not_in",
       """SELECT o_orderpriority, COUNT(*) AS n_orders
         |FROM orders
         |WHERE o_orderkey % 6 <> 0
         | AND o_custkey NOT IN (SELECT c_custkey FROM customer
         |                       WHERE c_acctbal > 1000 AND c_custkey % 30 <> 0)
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT o_orderpriority, COUNT(*) AS n_orders
-          |FROM orders
-          |WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
-          |                        WHERE c_acctbal > 1000)
-          |GROUP BY o_orderpriority""".stripMargin,
-        deletes = Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 30 === 0)))
-    },
-
-    // … and through the CONTINUOUS engine: exclusion-set admissions
-    // and evictions replay as micro-batches through the anti gate's
-    // held state.
-    sql("incremental_sql_not_in_stream",
+        |GROUP BY o_orderpriority""".stripMargin,
       """SELECT o_orderpriority, COUNT(*) AS n_orders
         |FROM orders
-        |WHERE o_orderkey % 6 <> 0
-        | AND o_custkey NOT IN (SELECT c_custkey FROM customer
-        |                       WHERE c_acctbal > 1000 AND c_custkey % 30 <> 0)
-        |GROUP BY o_orderpriority""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT o_orderpriority, COUNT(*) AS n_orders
-            |FROM orders
-            |WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
-            |                        WHERE c_acctbal > 1000)
-            |GROUP BY o_orderpriority""".stripMargin),
-        dir, Map(
-          "orders" -> (col("o_orderkey") % 6 === 0),
-          "customer" -> (col("c_custkey") % 30 === 0)),
-        "incremental_sql_not_in_stream_leaf")
-    },
+        |WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
+        |                        WHERE c_acctbal > 1000)
+        |GROUP BY o_orderpriority""".stripMargin,
+      Map(
+        "orders" -> (col("o_orderkey") % 6 === 0),
+        "customer" -> (col("c_custkey") % 30 === 0))),
 
     // The self-join written in EXPLICIT `JOIN t alias ON …` syntax —
     // the spelling a real user writes first; same alias expansion,
     // same oracle family as the comma-form incremental_sql_self_join.
-    sql("incremental_sql_self_alias",
+    maintained("incremental_sql_self_alias",
       """SELECT c_mktsegment, COUNT(*) AS n_pairs,
         | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
         |FROM customer
@@ -6601,44 +4740,17 @@ object IncrementalQueries {
         |JOIN orders o2 ON o2.o_custkey = c_custkey
         |WHERE o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
         | AND o1.o_orderkey % 7 <> 0 AND o2.o_orderkey % 5 <> 0
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-          | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-          |FROM customer
-          |JOIN orders o1 ON o1.o_custkey = c_custkey
-          |JOIN orders o2 ON o2.o_custkey = c_custkey
-          |WHERE o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-          |GROUP BY c_mktsegment""".stripMargin,
-        deletes = Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "o2" -> (col("o2_o_orderkey") % 5 === 0)))
-    },
-
-    // … and streamed: the aliased instances replay as independent
-    // event streams through the pair product's held state.
-    sql("incremental_sql_self_alias_stream",
+        |GROUP BY c_mktsegment""".stripMargin,
       """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-        | CAST(SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS low_rev_e2
+        | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
         |FROM customer
         |JOIN orders o1 ON o1.o_custkey = c_custkey
         |JOIN orders o2 ON o2.o_custkey = c_custkey
         |WHERE o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-        | AND o1.o_orderkey % 7 <> 0 AND o2.o_orderkey % 5 <> 0
-        |GROUP BY c_mktsegment""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_mktsegment, COUNT(*) AS n_pairs,
-            | SUM(CAST(round(o2.o_totalprice * 100, 0) AS BIGINT)) AS low_rev_e2
-            |FROM customer
-            |JOIN orders o1 ON o1.o_custkey = c_custkey
-            |JOIN orders o2 ON o2.o_custkey = c_custkey
-            |WHERE o1.o_orderpriority = '1-URGENT' AND o2.o_orderpriority = '5-LOW'
-            |GROUP BY c_mktsegment""".stripMargin),
-        dir, Map(
-          "o1" -> (col("o1_o_orderkey") % 7 === 0),
-          "o2" -> (col("o2_o_orderkey") % 5 === 0)),
-        "incremental_sql_self_alias_stream_leaf")
-    },
+        |GROUP BY c_mktsegment""".stripMargin,
+      Map(
+        "o1" -> (col("o1_o_orderkey") % 7 === 0),
+        "o2" -> (col("o2_o_orderkey") % 5 === 0))),
 
     // ---- WITH (CTE): maintained views composed under an outer query --
     // SqlCompiler.compileCte splits the WITH prefix textually
@@ -6656,7 +4768,7 @@ object IncrementalQueries {
     // presentation outer: threshold + ORDER BY/LIMIT over a maintained
     // per-(nation, customer) revenue view — the "top-N over a view"
     // idiom with the top-N OUTSIDE the maintained fold
-    sql("incremental_sql_cte_topn",
+    maintained("incremental_sql_cte_topn",
       """WITH rev AS (
         | SELECT n_name, c_custkey,
         |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
@@ -6667,28 +4779,27 @@ object IncrementalQueries {
         | GROUP BY n_name, c_custkey)
         |SELECT n_name, c_custkey, rev_e2 FROM rev
         |WHERE rev_e2 > 20000000
-        |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH rev AS (
-          | SELECT n_name, c_custkey,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM nation, customer, orders
-          | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderstatus = 'F'
-          | GROUP BY n_name, c_custkey)
-          |SELECT n_name, c_custkey, rev_e2 FROM rev
-          |WHERE rev_e2 > 20000000
-          |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 10 === 0)))
-    },
+        |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin,
+      """WITH rev AS (
+        | SELECT n_name, c_custkey,
+        |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
+        | FROM nation, customer, orders
+        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+        |  AND o_orderstatus = 'F'
+        | GROUP BY n_name, c_custkey)
+        |SELECT n_name, c_custkey, rev_e2 FROM rev
+        |WHERE rev_e2 > 20000000
+        |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "orders" -> (col("o_orderkey") % 10 === 0)),
+      cte = true),
 
     // re-aggregation outer: a histogram OVER the maintained per-customer
     // order-count view — the second aggregate's input is the view's
     // output (group cardinality), so re-running it per refresh is
     // presentation-class work, not input-class
-    sql("incremental_sql_cte_reagg",
+    maintained("incremental_sql_cte_reagg",
       """WITH per_cust AS (
         | SELECT c_custkey, COUNT(*) AS n_orders
         | FROM customer, orders
@@ -6696,22 +4807,20 @@ object IncrementalQueries {
         |  AND o_orderkey % 10 <> 0
         | GROUP BY c_custkey)
         |SELECT n_orders, COUNT(*) AS n_customers
-        |FROM per_cust GROUP BY n_orders""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH per_cust AS (
-          | SELECT c_custkey, COUNT(*) AS n_orders
-          | FROM customer, orders
-          | WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-          | GROUP BY c_custkey)
-          |SELECT n_orders, COUNT(*) AS n_customers
-          |FROM per_cust GROUP BY n_orders""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 10 === 0)))
-    },
+        |FROM per_cust GROUP BY n_orders""".stripMargin,
+      """WITH per_cust AS (
+        | SELECT c_custkey, COUNT(*) AS n_orders
+        | FROM customer, orders
+        | WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
+        | GROUP BY c_custkey)
+        |SELECT n_orders, COUNT(*) AS n_customers
+        |FROM per_cust GROUP BY n_orders""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 10 === 0)), cte = true),
 
     // view ⋈ view outer: two independently maintained per-nation views
     // (customer balances, supplier balances) joined in the outer — the
     // dashboard idiom; each side refreshes from its own changelogs
-    sql("incremental_sql_cte_join",
+    maintained("incremental_sql_cte_join",
       """WITH cust AS (
         | SELECT n_nationkey AS nk, n_name,
         |  CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS cust_bal_e2,
@@ -6728,35 +4837,34 @@ object IncrementalQueries {
         | GROUP BY n_nationkey)
         |SELECT c.n_name, c.n_cust, s.n_supp,
         | c.cust_bal_e2 + s.supp_bal_e2 AS total_bal_e2
-        |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH cust AS (
-          | SELECT n_nationkey AS nk, n_name,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS cust_bal_e2,
-          |  COUNT(*) AS n_cust
-          | FROM nation, customer
-          | WHERE c_nationkey = n_nationkey
-          | GROUP BY n_nationkey, n_name),
-          |supp AS (
-          | SELECT n_nationkey AS nk,
-          |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS supp_bal_e2,
-          |  COUNT(*) AS n_supp
-          | FROM nation, supplier
-          | WHERE s_nationkey = n_nationkey
-          | GROUP BY n_nationkey)
-          |SELECT c.n_name, c.n_cust, s.n_supp,
-          | c.cust_bal_e2 + s.supp_bal_e2 AS total_bal_e2
-          |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)))
-    },
+        |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin,
+      """WITH cust AS (
+        | SELECT n_nationkey AS nk, n_name,
+        |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS cust_bal_e2,
+        |  COUNT(*) AS n_cust
+        | FROM nation, customer
+        | WHERE c_nationkey = n_nationkey
+        | GROUP BY n_nationkey, n_name),
+        |supp AS (
+        | SELECT n_nationkey AS nk,
+        |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS supp_bal_e2,
+        |  COUNT(*) AS n_supp
+        | FROM nation, supplier
+        | WHERE s_nationkey = n_nationkey
+        | GROUP BY n_nationkey)
+        |SELECT c.n_name, c.n_cust, s.n_supp,
+        | c.cust_bal_e2 + s.supp_bal_e2 AS total_bal_e2
+        |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 7 === 0)),
+      cte = true),
 
     // dimension-decorated outer: the maintained per-nation revenue view
     // joined to the nation/region dims with a window RANK — base
     // relations in the outer see the same deletes-applied state as the
     // views' changelogs
-    sql("incremental_sql_cte_dim",
+    maintained("incremental_sql_cte_dim",
       """WITH rev AS (
         | SELECT c_nationkey AS nk,
         |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
@@ -6766,147 +4874,24 @@ object IncrementalQueries {
         |SELECT r_name, n_name, rev_e2,
         | CAST(RANK() OVER (PARTITION BY r_name ORDER BY rev_e2 DESC, n_name) AS BIGINT) AS rnk
         |FROM rev JOIN nation ON n_nationkey = nk
-        |JOIN region ON r_regionkey = n_regionkey""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH rev AS (
-          | SELECT c_nationkey AS nk,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM customer, orders
-          | WHERE o_custkey = c_custkey
-          | GROUP BY c_nationkey)
-          |SELECT r_name, n_name, rev_e2,
-          | CAST(RANK() OVER (PARTITION BY r_name ORDER BY rev_e2 DESC, n_name) AS BIGINT) AS rnk
-          |FROM rev JOIN nation ON n_nationkey = nk
-          |JOIN region ON r_regionkey = n_regionkey""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
-    },
-
-    // … and each CTE shape through the CONTINUOUS engine: every view
-    // replays as its own streaming query, the outer evaluates over the
-    // final maintained states. Same oracles.
-    sql("incremental_sql_cte_topn_stream",
-      """WITH rev AS (
-        | SELECT n_name, c_custkey,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderstatus = 'F'
-        |  AND c_custkey % 13 <> 0 AND o_orderkey % 10 <> 0
-        | GROUP BY n_name, c_custkey)
-        |SELECT n_name, c_custkey, rev_e2 FROM rev
-        |WHERE rev_e2 > 20000000
-        |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH rev AS (
-          | SELECT n_name, c_custkey,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM nation, customer, orders
-          | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderstatus = 'F'
-          | GROUP BY n_name, c_custkey)
-          |SELECT n_name, c_custkey, rev_e2 FROM rev
-          |WHERE rev_e2 > 20000000
-          |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin,
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "orders" -> (col("o_orderkey") % 10 === 0)),
-        "incremental_sql_cte_topn_stream")
-    },
-
-    sql("incremental_sql_cte_reagg_stream",
-      """WITH per_cust AS (
-        | SELECT c_custkey, COUNT(*) AS n_orders
-        | FROM customer, orders
-        | WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-        |  AND o_orderkey % 10 <> 0
-        | GROUP BY c_custkey)
-        |SELECT n_orders, COUNT(*) AS n_customers
-        |FROM per_cust GROUP BY n_orders""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH per_cust AS (
-          | SELECT c_custkey, COUNT(*) AS n_orders
-          | FROM customer, orders
-          | WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-          | GROUP BY c_custkey)
-          |SELECT n_orders, COUNT(*) AS n_customers
-          |FROM per_cust GROUP BY n_orders""".stripMargin,
-        dir, Map("orders" -> (col("o_orderkey") % 10 === 0)),
-        "incremental_sql_cte_reagg_stream")
-    },
-
-    sql("incremental_sql_cte_join_stream",
-      """WITH cust AS (
-        | SELECT n_nationkey AS nk, n_name,
-        |  CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS cust_bal_e2,
-        |  COUNT(*) AS n_cust
-        | FROM nation, customer
-        | WHERE c_nationkey = n_nationkey AND c_custkey % 13 <> 0
-        | GROUP BY n_nationkey, n_name),
-        |supp AS (
-        | SELECT n_nationkey AS nk,
-        |  CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS supp_bal_e2,
-        |  COUNT(*) AS n_supp
-        | FROM nation, supplier
-        | WHERE s_nationkey = n_nationkey AND s_suppkey % 7 <> 0
-        | GROUP BY n_nationkey)
-        |SELECT c.n_name, c.n_cust, s.n_supp,
-        | c.cust_bal_e2 + s.supp_bal_e2 AS total_bal_e2
-        |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH cust AS (
-          | SELECT n_nationkey AS nk, n_name,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS cust_bal_e2,
-          |  COUNT(*) AS n_cust
-          | FROM nation, customer
-          | WHERE c_nationkey = n_nationkey
-          | GROUP BY n_nationkey, n_name),
-          |supp AS (
-          | SELECT n_nationkey AS nk,
-          |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS supp_bal_e2,
-          |  COUNT(*) AS n_supp
-          | FROM nation, supplier
-          | WHERE s_nationkey = n_nationkey
-          | GROUP BY n_nationkey)
-          |SELECT c.n_name, c.n_cust, s.n_supp,
-          | c.cust_bal_e2 + s.supp_bal_e2 AS total_bal_e2
-          |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin,
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)),
-        "incremental_sql_cte_join_stream")
-    },
-
-    sql("incremental_sql_cte_dim_stream",
+        |JOIN region ON r_regionkey = n_regionkey""".stripMargin,
       """WITH rev AS (
         | SELECT c_nationkey AS nk,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+        |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
         | FROM customer, orders
-        | WHERE o_custkey = c_custkey AND o_orderkey % 6 <> 0
+        | WHERE o_custkey = c_custkey
         | GROUP BY c_nationkey)
         |SELECT r_name, n_name, rev_e2,
         | CAST(RANK() OVER (PARTITION BY r_name ORDER BY rev_e2 DESC, n_name) AS BIGINT) AS rnk
         |FROM rev JOIN nation ON n_nationkey = nk
-        |JOIN region ON r_regionkey = n_regionkey""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH rev AS (
-          | SELECT c_nationkey AS nk,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM customer, orders
-          | WHERE o_custkey = c_custkey
-          | GROUP BY c_nationkey)
-          |SELECT r_name, n_name, rev_e2,
-          | CAST(RANK() OVER (PARTITION BY r_name ORDER BY rev_e2 DESC, n_name) AS BIGINT) AS rnk
-          |FROM rev JOIN nation ON n_nationkey = nk
-          |JOIN region ON r_regionkey = n_regionkey""".stripMargin,
-        dir, Map("orders" -> (col("o_orderkey") % 6 === 0)),
-        "incremental_sql_cte_dim_stream")
-    },
+        |JOIN region ON r_regionkey = n_regionkey""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 6 === 0)), cte = true),
 
     // CTE COLUMN-ALIAS LIST — `WITH bal(a, b, c) AS (...)`: the alias
     // list renames the maintained view's output POSITIONALLY (ANSI),
     // and the outer query reads the aliased names. The inner SELECT's
     // own names differ on purpose: what's gated is the rename.
-    sql("incremental_sql_cte_alias",
+    maintained("incremental_sql_cte_alias",
       """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |bal(nation_name, total_bal_e2, n_cust) AS (
         | SELECT n_name, CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT),
@@ -6915,50 +4900,24 @@ object IncrementalQueries {
         | WHERE c_acctbal > 0
         | GROUP BY n_name)
         |SELECT nation_name, total_bal_e2, n_cust FROM bal
-        |WHERE n_cust > 5""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH bal(nation_name, total_bal_e2, n_cust) AS (
-          | SELECT n_name AS x1,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS x2,
-          |  COUNT(*) AS x3
-          | FROM nation JOIN customer ON c_nationkey = n_nationkey
-          | WHERE c_acctbal > 0
-          | GROUP BY n_name)
-          |SELECT nation_name, total_bal_e2, n_cust FROM bal
-          |WHERE n_cust > 5""".stripMargin,
-        deletes = Map("customer" -> (col("c_custkey") % 13 === 0)))
-    },
-
-    sql("incremental_sql_cte_alias_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |bal(nation_name, total_bal_e2, n_cust) AS (
-        | SELECT n_name, CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT),
-        |  COUNT(*)
-        | FROM nation JOIN c ON c_nationkey = n_nationkey
+        |WHERE n_cust > 5""".stripMargin,
+      """WITH bal(nation_name, total_bal_e2, n_cust) AS (
+        | SELECT n_name AS x1,
+        |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS x2,
+        |  COUNT(*) AS x3
+        | FROM nation JOIN customer ON c_nationkey = n_nationkey
         | WHERE c_acctbal > 0
         | GROUP BY n_name)
         |SELECT nation_name, total_bal_e2, n_cust FROM bal
-        |WHERE n_cust > 5""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH bal(nation_name, total_bal_e2, n_cust) AS (
-          | SELECT n_name AS x1,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS x2,
-          |  COUNT(*) AS x3
-          | FROM nation JOIN customer ON c_nationkey = n_nationkey
-          | WHERE c_acctbal > 0
-          | GROUP BY n_name)
-          |SELECT nation_name, total_bal_e2, n_cust FROM bal
-          |WHERE n_cust > 5""".stripMargin,
-        dir, Map("customer" -> (col("c_custkey") % 13 === 0)),
-        "incremental_sql_cte_alias_stream")
-    },
+        |WHERE n_cust > 5""".stripMargin,
+      Map("customer" -> (col("c_custkey") % 13 === 0)), cte = true),
 
     // SET-SEMANTICS UNION CTE BODY — the UNION (not ALL) body
     // maintains through the CompiledUnionDistinct netting node (a
     // nation leaves the view only when NO branch still produces it),
     // and the outer query re-aggregates over the set. Deletes flip
     // tuples in both branches.
-    sql("incremental_sql_cte_union_distinct",
+    maintained("incremental_sql_cte_union_distinct",
       """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
         |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0),
         |nat AS (
@@ -6967,69 +4926,18 @@ object IncrementalQueries {
         | UNION
         | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
         | WHERE s_acctbal > 5000)
-        |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH nat AS (
-          | SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
-          | WHERE c_acctbal > 8000
-          | UNION
-          | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          | WHERE s_acctbal > 5000)
-          |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)))
-    },
-
-    sql("incremental_sql_cte_union_distinct_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0),
-        |nat AS (
-        | SELECT n_name FROM nation JOIN c ON c_nationkey = n_nationkey
+        |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin,
+      """WITH nat AS (
+        | SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
         | WHERE c_acctbal > 8000
         | UNION
-        | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
+        | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
         | WHERE s_acctbal > 5000)
-        |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH nat AS (
-          | SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
-          | WHERE c_acctbal > 8000
-          | UNION
-          | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          | WHERE s_acctbal > 5000)
-          |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin,
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)),
-        "incremental_sql_cte_union_distinct_stream")
-    },
-
-    // … and on the TWS drivers: the set-CTE's branch trees + netting
-    // node replay through transformWithState, same oracle.
-    sql("incremental_sql_cte_union_distinct_tws",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0),
-        |nat AS (
-        | SELECT n_name FROM nation JOIN c ON c_nationkey = n_nationkey
-        | WHERE c_acctbal > 8000
-        | UNION
-        | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
-        | WHERE s_acctbal > 5000)
-        |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH nat AS (
-          | SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
-          | WHERE c_acctbal > 8000
-          | UNION
-          | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          | WHERE s_acctbal > 5000)
-          |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin,
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)),
-        "incremental_sql_cte_union_distinct_tws", tws = true)
-    },
+        |SELECT COUNT(*) AS n_nations FROM nat""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 7 === 0)),
+      twins = Seq(Stream, Tws), cte = true),
 
     // DERIVED TABLE spelling of the same composition: an aliased
     // FROM (SELECT ...) t lifts to an anonymous CTE named by its
@@ -7037,7 +4945,7 @@ object IncrementalQueries {
     // maintained view, the outer re-aggregates it against a dim.
     // Subquery PREDICATES (IN/EXISTS/scalar) are untouched by the
     // lift and stay on the gate compilers.
-    sql("incremental_sql_from_subquery",
+    maintained("incremental_sql_from_subquery",
       """SELECT n_name, COUNT(*) AS n_customers,
         | CAST(SUM(t.n_orders) AS BIGINT) AS sum_orders
         |FROM (SELECT c_custkey, c_nationkey, COUNT(*) AS n_orders
@@ -7046,48 +4954,23 @@ object IncrementalQueries {
         |       AND o_orderkey % 8 <> 0
         |      GROUP BY c_custkey, c_nationkey) t
         |JOIN nation ON n_nationkey = t.c_nationkey
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """SELECT n_name, COUNT(*) AS n_customers,
-          | SUM(t.n_orders) AS sum_orders
-          |FROM (SELECT c_custkey, c_nationkey, COUNT(*) AS n_orders
-          |      FROM customer, orders
-          |      WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-          |      GROUP BY c_custkey, c_nationkey) t
-          |JOIN nation ON n_nationkey = t.c_nationkey
-          |GROUP BY n_name""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 8 === 0)))
-    },
-
-    sql("incremental_sql_from_subquery_stream",
+        |GROUP BY n_name""".stripMargin,
       """SELECT n_name, COUNT(*) AS n_customers,
-        | CAST(SUM(t.n_orders) AS BIGINT) AS sum_orders
+        | SUM(t.n_orders) AS sum_orders
         |FROM (SELECT c_custkey, c_nationkey, COUNT(*) AS n_orders
         |      FROM customer, orders
         |      WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-        |       AND o_orderkey % 8 <> 0
         |      GROUP BY c_custkey, c_nationkey) t
         |JOIN nation ON n_nationkey = t.c_nationkey
-        |GROUP BY n_name""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """SELECT n_name, COUNT(*) AS n_customers,
-          | SUM(t.n_orders) AS sum_orders
-          |FROM (SELECT c_custkey, c_nationkey, COUNT(*) AS n_orders
-          |      FROM customer, orders
-          |      WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-          |      GROUP BY c_custkey, c_nationkey) t
-          |JOIN nation ON n_nationkey = t.c_nationkey
-          |GROUP BY n_name""".stripMargin,
-        dir, Map("orders" -> (col("o_orderkey") % 8 === 0)),
-        "incremental_sql_from_subquery_stream")
-    },
+        |GROUP BY n_name""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 8 === 0)), cte = true),
 
     // CHAINED CTEs — the staged-SQL idiom: stage 1 (rev) reads base
     // relations, so it is the MAINTAINED view; stage 2 (ranked) reads
     // stage 1, so it classifies as a PRESENTATION CTE and evaluates as
     // stock SQL over the refreshed view (group-cardinality input) —
     // only the stage touching base data is input-proportional.
-    sql("incremental_sql_cte_chain",
+    maintained("incremental_sql_cte_chain",
       """WITH rev AS (
         | SELECT n_name, c_custkey,
         |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
@@ -7101,32 +4984,13 @@ object IncrementalQueries {
         |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
         | FROM rev)
         |SELECT n_name, c_custkey, rev_e2, rk
-        |FROM ranked WHERE rk <= 3""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH rev AS (
-          | SELECT n_name, c_custkey,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM nation, customer, orders
-          | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderstatus = 'F'
-          | GROUP BY n_name, c_custkey),
-          |ranked AS (
-          | SELECT n_name, c_custkey, rev_e2,
-          |  CAST(RANK() OVER (PARTITION BY n_name
-          |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
-          | FROM rev)
-          |SELECT n_name, c_custkey, rev_e2, rk
-          |FROM ranked WHERE rk <= 3""".stripMargin,
-        deletes = Map("orders" -> (col("o_orderkey") % 9 === 0)))
-    },
-
-    sql("incremental_sql_cte_chain_stream",
+        |FROM ranked WHERE rk <= 3""".stripMargin,
       """WITH rev AS (
         | SELECT n_name, c_custkey,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+        |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
         | FROM nation, customer, orders
         | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderstatus = 'F' AND o_orderkey % 9 <> 0
+        |  AND o_orderstatus = 'F'
         | GROUP BY n_name, c_custkey),
         |ranked AS (
         | SELECT n_name, c_custkey, rev_e2,
@@ -7134,69 +4998,15 @@ object IncrementalQueries {
         |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
         | FROM rev)
         |SELECT n_name, c_custkey, rev_e2, rk
-        |FROM ranked WHERE rk <= 3""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH rev AS (
-          | SELECT n_name, c_custkey,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM nation, customer, orders
-          | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderstatus = 'F'
-          | GROUP BY n_name, c_custkey),
-          |ranked AS (
-          | SELECT n_name, c_custkey, rev_e2,
-          |  CAST(RANK() OVER (PARTITION BY n_name
-          |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
-          | FROM rev)
-          |SELECT n_name, c_custkey, rev_e2, rk
-          |FROM ranked WHERE rk <= 3""".stripMargin,
-        dir, Map("orders" -> (col("o_orderkey") % 9 === 0)),
-        "incremental_sql_cte_chain_stream")
-    },
-
-    // … and the chained view's maintained stage on the
-    // TRANSFORMWITHSTATE drivers (the supported arbitrary-state API),
-    // presentation stage over the final state — same oracle.
-    sql("incremental_sql_cte_chain_tws",
-      """WITH rev AS (
-        | SELECT n_name, c_custkey,
-        |  CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        | FROM nation, customer, orders
-        | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        |  AND o_orderstatus = 'F' AND o_orderkey % 9 <> 0
-        | GROUP BY n_name, c_custkey),
-        |ranked AS (
-        | SELECT n_name, c_custkey, rev_e2,
-        |  CAST(RANK() OVER (PARTITION BY n_name
-        |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
-        | FROM rev)
-        |SELECT n_name, c_custkey, rev_e2, rk
-        |FROM ranked WHERE rk <= 3""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH rev AS (
-          | SELECT n_name, c_custkey,
-          |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_e2
-          | FROM nation, customer, orders
-          | WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderstatus = 'F'
-          | GROUP BY n_name, c_custkey),
-          |ranked AS (
-          | SELECT n_name, c_custkey, rev_e2,
-          |  CAST(RANK() OVER (PARTITION BY n_name
-          |    ORDER BY rev_e2 DESC, c_custkey) AS BIGINT) AS rk
-          | FROM rev)
-          |SELECT n_name, c_custkey, rev_e2, rk
-          |FROM ranked WHERE rk <= 3""".stripMargin,
-        dir, Map("orders" -> (col("o_orderkey") % 9 === 0)),
-        "incremental_sql_cte_chain_tws", tws = true)
-    },
+        |FROM ranked WHERE rk <= 3""".stripMargin,
+      Map("orders" -> (col("o_orderkey") % 9 === 0)), twins = Seq(Stream, Tws), cte = true),
 
     // UNION ALL as a CTE body: each arm is its own maintained tree
     // (customer balances / supplier balances per nation), unioned at
     // refresh under the CTE's name; the outer re-aggregates the two
     // sides into one per-nation report — per-branch deletes flow to
     // whichever arm owns the relation.
-    sql("incremental_sql_cte_union",
+    maintained("incremental_sql_cte_union",
       """WITH bal AS (
         | SELECT n_name,
         |  CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_e2,
@@ -7213,69 +5023,27 @@ object IncrementalQueries {
         | GROUP BY n_name)
         |SELECT n_name, CAST(SUM(bal_e2) AS BIGINT) AS total_bal_e2,
         | CAST(SUM(n) AS BIGINT) AS n_parties
-        |FROM bal GROUP BY n_name""".stripMargin) {
-      (s, dir) => SqlCompiler.runCte(s, dir,
-        """WITH bal AS (
-          | SELECT n_name,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
-          |  COUNT(*) AS n
-          | FROM nation, customer
-          | WHERE c_nationkey = n_nationkey
-          | GROUP BY n_name
-          | UNION ALL
-          | SELECT n_name,
-          |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
-          |  COUNT(*) AS n
-          | FROM nation, supplier
-          | WHERE s_nationkey = n_nationkey
-          | GROUP BY n_name)
-          |SELECT n_name, SUM(bal_e2) AS total_bal_e2, SUM(n) AS n_parties
-          |FROM bal GROUP BY n_name""".stripMargin,
-        deletes = Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)))
-    },
-
-    sql("incremental_sql_cte_union_stream",
+        |FROM bal GROUP BY n_name""".stripMargin,
       """WITH bal AS (
         | SELECT n_name,
-        |  CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_e2,
+        |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
         |  COUNT(*) AS n
         | FROM nation, customer
-        | WHERE c_nationkey = n_nationkey AND c_custkey % 13 <> 0
+        | WHERE c_nationkey = n_nationkey
         | GROUP BY n_name
         | UNION ALL
         | SELECT n_name,
-        |  CAST(SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_e2,
+        |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
         |  COUNT(*) AS n
         | FROM nation, supplier
-        | WHERE s_nationkey = n_nationkey AND s_suppkey % 7 <> 0
+        | WHERE s_nationkey = n_nationkey
         | GROUP BY n_name)
-        |SELECT n_name, CAST(SUM(bal_e2) AS BIGINT) AS total_bal_e2,
-        | CAST(SUM(n) AS BIGINT) AS n_parties
-        |FROM bal GROUP BY n_name""".stripMargin) {
-      (s, dir) => runCteStreamed(s,
-        """WITH bal AS (
-          | SELECT n_name,
-          |  SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
-          |  COUNT(*) AS n
-          | FROM nation, customer
-          | WHERE c_nationkey = n_nationkey
-          | GROUP BY n_name
-          | UNION ALL
-          | SELECT n_name,
-          |  SUM(CAST(round(s_acctbal * 100, 0) AS BIGINT)) AS bal_e2,
-          |  COUNT(*) AS n
-          | FROM nation, supplier
-          | WHERE s_nationkey = n_nationkey
-          | GROUP BY n_name)
-          |SELECT n_name, SUM(bal_e2) AS total_bal_e2, SUM(n) AS n_parties
-          |FROM bal GROUP BY n_name""".stripMargin,
-        dir, Map(
-          "customer" -> (col("c_custkey") % 13 === 0),
-          "supplier" -> (col("s_suppkey") % 7 === 0)),
-        "incremental_sql_cte_union_stream")
-    },
+        |SELECT n_name, SUM(bal_e2) AS total_bal_e2, SUM(n) AS n_parties
+        |FROM bal GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 13 === 0),
+        "supplier" -> (col("s_suppkey") % 7 === 0)),
+      cte = true),
 
     // UNALIASED aggregates in HAVING — the common SQL spelling: each
     // distinct aggregate fragment joins the incremental fold under a
@@ -7283,38 +5051,18 @@ object IncrementalQueries {
     // SELECT), the condition rewrites to the alias, and the hidden
     // columns drop after the filter. One aggregate here (the SUM) is
     // in no SELECT item at all — the case the old fence rejected.
-    sql("incremental_sql_having_agg",
+    maintained("incremental_sql_having_agg",
       """SELECT c_nationkey, COUNT(*) AS n_cust
         |FROM nation, customer
         |WHERE c_nationkey = n_nationkey AND c_custkey % 12 <> 0
         |GROUP BY c_nationkey
         |HAVING COUNT(*) > 20
-        | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin) {
-      (s, dir) => SqlCompiler.run(s, dir,
-        """SELECT c_nationkey, COUNT(*) AS n_cust
-          |FROM nation, customer
-          |WHERE c_nationkey = n_nationkey
-          |GROUP BY c_nationkey
-          |HAVING COUNT(*) > 20
-          | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin,
-        deletes = Map("customer" -> (col("c_custkey") % 12 === 0)))
-    },
-
-    sql("incremental_sql_having_agg_stream",
+        | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin,
       """SELECT c_nationkey, COUNT(*) AS n_cust
         |FROM nation, customer
-        |WHERE c_nationkey = n_nationkey AND c_custkey % 12 <> 0
+        |WHERE c_nationkey = n_nationkey
         |GROUP BY c_nationkey
         |HAVING COUNT(*) > 20
-        | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin) {
-      (s, dir) => runSqlStreamed(s, SqlCompiler.compile(s, dir,
-          """SELECT c_nationkey, COUNT(*) AS n_cust
-            |FROM nation, customer
-            |WHERE c_nationkey = n_nationkey
-            |GROUP BY c_nationkey
-            |HAVING COUNT(*) > 20
-            | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin),
-        dir, Map("customer" -> (col("c_custkey") % 12 === 0)),
-        "incremental_sql_having_agg_stream_leaf")
-    })
+        | AND SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0""".stripMargin,
+      Map("customer" -> (col("c_custkey") % 12 === 0)))).flatten
 }

@@ -81,5 +81,14 @@ class GraftBridgeSpec extends AnyFunSuite {
     // every CURRENT memo user passes the guard
     operators.FixtureMemo.assertNotBenchHeadliner("dedup_cc_persist")
     operators.FixtureMemo.assertNotBenchHeadliner("text_bm25_persist")
+    // a memo is refused when ANY entry it declares is a headliner (here
+    // the second one), and before its build can run
+    var built = false
+    val e2 = intercept[IllegalArgumentException] {
+      operators.FixtureMemo("graft_bridge_spec#headliner", Seq("dedup_cc_persist", headliner),
+          spark) { built = true; spark.range(1).toDF() }
+    }
+    assert(e2.getMessage.contains(headliner))
+    assert(!built, "the bench guard must fire before the memo builds")
   }
 }

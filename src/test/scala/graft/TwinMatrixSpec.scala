@@ -47,5 +47,29 @@ class TwinMatrixSpec extends AnyFunSuite {
     }
     orphanExempt.foreach(e =>
       assert(names.contains(e), s"stale orphan exemption: $e"))
+    // every _stream/_tws twin is gated against its batch base's own
+    // oracle, so a twin's answer is the base's answer by construction;
+    // exemptions: twin -> why its oracle differs on purpose
+    val oracleExempt = Map(
+      "incremental_sql_corr_stream" ->
+        ("extends the select list with COVAR_SAMP next to CORR: the " +
+          "streamed co-moment fold is checked for both closed forms"),
+      "incremental_sql_minmax_stream" ->
+        ("extends the select list with MEDIAN: value nets must survive " +
+          "micro-batch boundaries for the runner-up extreme AND the median"),
+      "incremental_sql_q10_fullouter_tws" ->
+        ("adds the customer (ancestor) delete to the FULL OUTER view: its " +
+          "oracle is incremental_sql_q10_fullouter_ancestor_del's"))
+    val all = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql
+    val diverged = all.toSeq.sorted.flatMap { t =>
+      Seq("_stream", "_tws").find(t.endsWith).map(t.stripSuffix).filter(all)
+        .filter(b => oracles.get(b) != oracles.get(t)).map(_ => t)
+    }
+    assert(diverged.filterNot(oracleExempt.contains).isEmpty,
+      s"twins whose oracle differs from their batch base's: " +
+        diverged.filterNot(oracleExempt.contains).mkString(", "))
+    oracleExempt.keys.foreach(e =>
+      assert(diverged.contains(e), s"stale oracle exemption: $e"))
   }
 }
