@@ -41,9 +41,10 @@ import org.apache.spark.sql.Column
   * deterministic (events sorted by (seq, parent-first, row) inside
   * each key).
   *
-  * Scale notes: each node is one `groupByKey` shuffle on its join key
-  * — the same 4 exchanges as the reference's `keyBy` chain (SURVEY.md
-  * §3.3). State lives per key in the state store (streaming) or the
+  * Scale notes: each node is one shuffle grouped by the `key` column
+  * (its join key; see `foldStage` for why the column and not a
+  * `groupByKey` lambda) — the same 4 exchanges as the reference's
+  * `keyBy` chain (SURVEY.md §3.3). State lives per key in the state store (streaming) or the
   * group iterator (batch simulation); fan-out on a parent flip is
   * O(buffered children of that key), exactly the reference's cost
   * model, but distributed over all executors holding that key range.
@@ -227,26 +228,69 @@ object DeltaEngine {
     }
   }
 
-  /** The per-key node state machine — ONE mutable fold shared verbatim
-    * by the batch (flatMapGroups) and streaming
-    * (flatMapGroupsWithState) drivers; the streaming driver imports
-    * from / exports to the immutable [[NState]] at the state-store
-    * boundary. Mutable internally because this is the engine's hot
-    * loop (hundreds of thousands of events per replay). */
-  private final class NodeFold(spec: NodeSpec, init: NState) {
-    private val children = new java.util.HashMap[String, Int]()
-    init.children.foreach { case (k, v) => children.put(k, v) }
-    private var aliveParents: Int = init.aliveParents
-    private var parentCanon: String = init.parentCanon
+  /** Where a [[NodeFold]] keeps its signed child multiset (canonical
+    * row → count; a zero count is no entry) — the keyed-state handle the
+    * one fold is written against: a heap map for the batch and
+    * flatMapGroupsWithState drivers, the processor's MapState under
+    * transformWithState ([[TreeNodeProcessor]]), where an own event
+    * then costs one point read and one point write and only a liveness
+    * flip scans the whole map. */
+  private trait Children {
+    def count(row: String): Int
+    def set(row: String, n: Int): Unit
+    /** Every buffered row in natural String order — the flip-replay
+      * order, so emission order is identical on every store. */
+    def sortedRows: Array[String]
+  }
 
-    /** Fold one event; append (tag, mult, mergedCanonicalRow)
-      * emissions to `out`. */
+  private def sortedInPlace(rows: Array[String]): Array[String] = {
+    java.util.Arrays.sort(rows.asInstanceOf[Array[AnyRef]])
+    rows
+  }
+
+  private def toScalaMap(m: java.util.Map[String, Int]): Map[String, Int] = {
+    val b = Map.newBuilder[String, Int]
+    val it = m.entrySet().iterator()
+    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
+    b.result()
+  }
+
+  private final class HeapChildren(init: Map[String, Int]) extends Children {
+    private val m = new java.util.HashMap[String, Int]()
+    init.foreach { case (k, v) => m.put(k, v) }
+    def count(row: String): Int = m.getOrDefault(row, 0)
+    def set(row: String, n: Int): Unit = if (n == 0) m.remove(row) else m.put(row, n)
+    def sortedRows: Array[String] = sortedInPlace(m.keySet().toArray(new Array[String](0)))
+    def toMap: Map[String, Int] = toScalaMap(m)
+  }
+
+  private final class MapStateChildren(
+      ms: org.apache.spark.sql.streaming.MapState[String, Int]) extends Children {
+    // a missing key reads as null, which unboxes to 0: ONE point read
+    def count(row: String): Int = ms.getValue(row)
+    def set(row: String, n: Int): Unit =
+      if (n == 0) ms.removeKey(row) else ms.updateValue(row, n)
+    def sortedRows: Array[String] = sortedInPlace(ms.keys().toArray)
+  }
+
+  private type Emissions = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]
+
+  /** The per-key node state machine — the ONE liveness fold, run by
+    * every driver (batch flatMapGroups, flatMapGroupsWithState and
+    * transformWithState) against the [[Children]] store it is handed,
+    * with the key's (aliveParents, parentCanon) pair seeded from and
+    * read back to the driver's state. Mutable because this is the
+    * engine's hot loop (hundreds of thousands of events per replay). */
+  private final class NodeFold(spec: NodeSpec, children: Children,
+      var aliveParents: Int, var parentCanon: String) {
     // anti nodes are alive while NO parent is present (net count <= 0);
     // the symmetric >0 / <=0 split keeps the ghost-count (out-of-order
     // delete-first) telescoping intact in both modes
     private def aliveAt(n: Int): Boolean = if (spec.antiParent) n <= 0 else n > 0
 
-    def feed(ev: Evt, out: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
+    /** Fold one event; append (tag, mult, mergedCanonicalRow)
+      * emissions to `out`. */
+    def feed(ev: Evt, out: Emissions): Unit = {
       if (ev.fromParent) {
         val newAlive = aliveParents + ev.tag * ev.mult
         val wasAlive = aliveAt(aliveParents)
@@ -263,13 +307,8 @@ object DeltaEngine {
           // sorted for deterministic emission order. A negative
           // (ghost) count contributes with inverted sign so the NET
           // stays order-independent.
-          val keys = new Array[String](children.size())
-          var i = 0
-          val it = children.keySet().iterator()
-          while (it.hasNext) { keys(i) = it.next(); i += 1 }
-          java.util.Arrays.sort(keys.asInstanceOf[Array[AnyRef]])
-          keys.foreach { c =>
-            val cnt = children.get(c)
+          children.sortedRows.foreach { c =>
+            val cnt = children.count(c)
             if (cnt != 0) {
               val signed = (if (isAlive) 1 else -1) * cnt
               out += ((if (signed > 0) 1 else -1, signed.abs, mergeCanon(c, parentRow)))
@@ -285,9 +324,9 @@ object DeltaEngine {
         if (ev.tag > 0) parentCanon = ev.row
       } else {
         val c = ev.row
-        val before = children.getOrDefault(c, 0)
+        val before = children.count(c)
         val after = before + ev.tag * ev.mult
-        if (after == 0) children.remove(c) else children.put(c, after)
+        children.set(c, after)
         val emitCount =
           if (spec.setSemantics) {
             // root dedup: only 0→1 / 1→0 transitions emit (reference J0,
@@ -307,25 +346,17 @@ object DeltaEngine {
         }
       }
     }
-
-    def exportState: NState = {
-      val b = Map.newBuilder[String, Int]
-      val it = children.entrySet().iterator()
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      NState(b.result(), aliveParents, parentCanon)
-    }
   }
 
   /** The shared per-key fold driver: order events (the batch driver
     * delivers each group already in evtOrder via flatMapSortedGroups —
-    * the ordering rides the Tungsten shuffle sort; the streaming
-    * driver's state-store groups arrive unordered and sort here), feed
-    * them to the fold, and re-key emissions by `nextKeyCol` for the
-    * next hop. One loop for both fold kinds — liveness [[NodeFold]]
-    * and pair [[PairFold]] share the `feed(ev, out)` shape. */
+    * the ordering rides the Tungsten shuffle sort; the state-store
+    * drivers' groups arrive unordered and sort here), feed them to the
+    * fold, and re-key emissions by `nextKeyCol` for the next hop. One
+    * loop for both fold kinds — liveness [[NodeFold]] and pair
+    * [[PairFold]] share the `feed(ev, out)` shape. */
   private def foldEvents(nextKeyCol: String, events: Iterator[Evt], preSorted: Boolean,
-      feed: (Evt, scala.collection.mutable.ArrayBuffer[(Int, Int, String)]) => Unit)
-      : Iterator[Evt] = {
+      feed: (Evt, Emissions) => Unit): Iterator[Evt] = {
     val ordered: Iterator[Evt] =
       if (preSorted) events
       else {
@@ -334,7 +365,7 @@ object DeltaEngine {
         arr.iterator
       }
     val out = Vector.newBuilder[Evt]
-    val emitted = new scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
+    val emitted = new Emissions()
     ordered.foreach { ev =>
       emitted.clear()
       feed(ev, emitted)
@@ -346,20 +377,88 @@ object DeltaEngine {
     out.result().iterator
   }
 
-  private def foldKey(spec: NodeSpec, events: Iterator[Evt], init: NState,
-                      exportState: Boolean,
-                      preSorted: Boolean = false): (Iterator[Evt], Option[NState]) = {
-    val fold = new NodeFold(spec, init)
-    val out = foldEvents(spec.nextKeyCol, events, preSorted, fold.feed)
-    (out, if (exportState) Some(fold.exportState) else None)
+  /** A per-key fold in progress over a heap store: `feed` folds one
+    * event, `state` is the key's state after the events fed so far. */
+  private trait Fold[S] {
+    def feed(ev: Evt, out: Emissions): Unit
+    def state: S
   }
+
+  /** A stage kind — liveness ([[NodeFold]]) or pair ([[PairFold]]):
+    * its per-key state and encoder (the flatMapGroupsWithState state
+    * format), how a fold starts from a stored state, the state's
+    * footprint for [[stateMetrics]], and its transformWithState
+    * processor. Every driver reaches a node's transitions only through
+    * this. */
+  private sealed abstract class Kind[S] extends Serializable {
+    def empty: S
+    def encoder: org.apache.spark.sql.Encoder[S]
+    def fold(spec: NodeSpec, init: S): Fold[S]
+    /** (Σ|count| over the multisets, payload-byte estimate) — the
+      * units [[stateMetrics]] documents. */
+    def footprint(s: S): (Long, Long)
+    def processor(spec: NodeSpec, ttl: Option[java.time.Duration]): NodeProcessor
+  }
+
+  private def utf8Len(s: String): Long =
+    if (s.isEmpty) 0L else s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
+
+  private def multisetFootprint(ms: Map[String, Int]*): (Long, Long) =
+    (ms.iterator.flatMap(_.valuesIterator).map(c => math.abs(c).toLong).sum,
+      ms.iterator.flatMap(_.keysIterator).map(r => utf8Len(r) + 4L).sum)
+
+  private object Liveness extends Kind[NState] {
+    def empty: NState = emptyState
+    def encoder: org.apache.spark.sql.Encoder[NState] =
+      org.apache.spark.sql.Encoders.product[NState]
+    def fold(spec: NodeSpec, init: NState): Fold[NState] = {
+      val children = new HeapChildren(init.children)
+      val f = new NodeFold(spec, children, init.aliveParents, init.parentCanon)
+      new Fold[NState] {
+        def feed(ev: Evt, out: Emissions): Unit = f.feed(ev, out)
+        def state: NState = NState(children.toMap, f.aliveParents, f.parentCanon)
+      }
+    }
+    def footprint(s: NState): (Long, Long) = {
+      val (rows, bytes) = multisetFootprint(s.children)
+      (rows, bytes + utf8Len(s.parentCanon) + 4L)
+    }
+    def processor(spec: NodeSpec, ttl: Option[java.time.Duration]): NodeProcessor =
+      new TreeNodeProcessor(spec, ttl)
+  }
+
+  private object Pair extends Kind[PairNState] {
+    def empty: PairNState = emptyPairState
+    def encoder: org.apache.spark.sql.Encoder[PairNState] =
+      org.apache.spark.sql.Encoders.product[PairNState]
+    def fold(spec: NodeSpec, init: PairNState): Fold[PairNState] = new PairFold(init)
+    def footprint(s: PairNState): (Long, Long) = multisetFootprint(s.left, s.right)
+    def processor(spec: NodeSpec, ttl: Option[java.time.Duration]): NodeProcessor =
+      new PairNodeProcessor(spec, ttl)
+  }
+
+  private def kindOf(st: Stage): Kind[_] = if (st.pairStage.isDefined) Pair else Liveness
+
+  /** THE per-key fold of either kind: start from `init`, fold the
+    * events (sorting them unless `preSorted`), re-key the emissions.
+    * Returns the emissions and the fold, whose `state` only the
+    * state-keeping callers read. */
+  private def foldKey[S](kind: Kind[S], spec: NodeSpec, init: S, events: Iterator[Evt],
+      preSorted: Boolean): (Iterator[Evt], Fold[S]) = {
+    val fold = kind.fold(spec, init)
+    (foldEvents(spec.nextKeyCol, events, preSorted, fold.feed), fold)
+  }
+
+  private def batchFold[S](kind: Kind[S], spec: NodeSpec, preSorted: Boolean)(
+      key: String, events: Iterator[Evt]): Iterator[Evt] =
+    foldKey(kind, spec, kind.empty, events, preSorted)._1
 
   /** Fold a whole per-key event sequence (sorted deterministically)
     * from empty state; emissions become parent deltas for the next
     * node, re-keyed by `nextKeyCol`. */
   def processKeyBatch(spec: NodeSpec, preSorted: Boolean = false)(
       key: String, events: Iterator[Evt]): Iterator[Evt] =
-    foldKey(spec, events, emptyState, exportState = false, preSorted)._1
+    batchFold(Liveness, spec, preSorted)(key, events)
 
   // ---- pair (shared-dimension product) stages ----------------------
 
@@ -385,7 +484,7 @@ object DeltaEngine {
     * `false`, paired/right events are `true` — the same wire
     * format as liveness stages, so pair stages compose freely with
     * them in one tree. */
-  private final class PairFold(spec: NodeSpec, init: PairNState) {
+  private final class PairFold(init: PairNState) extends Fold[PairNState] {
     // TreeMaps: the cross-merge enumerates the OTHER side per delta in
     // deterministic order, and a sorted map gives that for free —
     // re-sorting a key array per event would pay O(|other|·log) on
@@ -396,7 +495,7 @@ object DeltaEngine {
     init.left.foreach { case (k, v) => left.put(k, v) }
     init.right.foreach { case (k, v) => right.put(k, v) }
 
-    def feed(ev: Evt, out: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
+    def feed(ev: Evt, out: Emissions): Unit = {
       val isRight = ev.fromParent
       val d = ev.tag * ev.mult
       val mine = if (isRight) right else left
@@ -421,45 +520,12 @@ object DeltaEngine {
       if (after == 0) mine.remove(ev.row) else mine.put(ev.row, after)
     }
 
-    def exportState: PairNState = {
-      def toMap(m: java.util.TreeMap[String, Int]): Map[String, Int] = {
-        val b = Map.newBuilder[String, Int]
-        val it = m.entrySet().iterator()
-        while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-        b.result()
-      }
-      PairNState(toMap(left), toMap(right))
-    }
-  }
-
-  private def foldPairKey(spec: NodeSpec, events: Iterator[Evt], init: PairNState,
-                          exportState: Boolean,
-                          preSorted: Boolean = false): (Iterator[Evt], Option[PairNState]) = {
-    val fold = new PairFold(spec, init)
-    val out = foldEvents(spec.nextKeyCol, events, preSorted, fold.feed)
-    (out, if (exportState) Some(fold.exportState) else None)
+    def state: PairNState = PairNState(toScalaMap(left), toScalaMap(right))
   }
 
   def processPairKeyBatch(spec: NodeSpec, preSorted: Boolean = false)(
       key: String, events: Iterator[Evt]): Iterator[Evt] =
-    foldPairKey(spec, events, emptyPairState, exportState = false, preSorted)._1
-
-  /** Streaming flavor — state carried across micro-batches; TTL
-    * eviction identical to [[processKeyStream]]. */
-  def processPairKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None)(
-      key: String, events: Iterator[Evt],
-      state: org.apache.spark.sql.streaming.GroupState[PairNState]): Iterator[Evt] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val (out, st) = foldPairKey(spec, events,
-        state.getOption.getOrElse(emptyPairState), exportState = true)
-      state.update(st.get)
-      ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-      out
-    }
-  }
+    batchFold(Pair, spec, preSorted)(key, events)
 
   /** EVENT-TIME TTL for streaming tree state — the policy a production
     * deployment needs to bound state by DATA time, not wall time
@@ -502,64 +568,59 @@ object DeltaEngine {
     * just one stream. */
   final case class EventTimeTtl(tsCol: String, delay: java.time.Duration)
 
-  /** Shared event-time TTL wrapper for the two stream folds: fences
-    * late events, tracks the key's newest event time, folds, then
-    * re-arms the timeout at the key's horizon.
+  /** THE stream step of either fold kind: fold the key's events from
+    * its stored state and store the result. */
+  private def streamStep[S](kind: Kind[S], spec: NodeSpec, events: Iterator[Evt],
+      state: org.apache.spark.sql.streaming.GroupState[S]): Iterator[Evt] = {
+    val (out, fold) = foldKey(kind, spec, state.getOption.getOrElse(kind.empty), events,
+      preSorted = false)
+    state.update(fold.state)
+    out
+  }
+
+  /** The one TTL wrapper around a stream step: a timed-out key drops
+    * its state and emits nothing; otherwise `step` folds the key's
+    * events and the timeout re-arms — `stateTtl` of processing time
+    * after this batch, or under `eventTtl` (see [[EventTimeTtl]]) at
+    * the key's event-time horizon, after late events are fenced.
     *
-    * Event times come from the CARRIED `__evtts` column ([[EvtWithTs]]),
-    * which `to_timestamp` parsed under the SESSION timezone — the same
-    * basis as the watermark. Re-parsing the canonical-row string here
-    * (e.g. `Timestamp.valueOf`, which uses the JVM-default timezone)
-    * would skew fencing and eviction by the host's UTC offset whenever
-    * the JVM and session timezones differ. */
-  private def withEventTtl[S](ttl: EventTimeTtl,
-      events: Iterator[EvtWithTs],
-      state: org.apache.spark.sql.streaming.GroupState[S],
-      fold: Iterator[Evt] => Iterator[Evt]): Iterator[Evt] = {
+    * An input's event time is `time(in)`, null when it carries none.
+    * It comes from the CARRIED `__evtts` column ([[EvtWithTs]]), which
+    * `to_timestamp` parsed under the SESSION timezone — the same basis
+    * as the watermark. Re-parsing the canonical-row string here (e.g.
+    * `Timestamp.valueOf`, which uses the JVM-default timezone) would
+    * skew fencing and eviction by the host's UTC offset whenever the
+    * JVM and session timezones differ. */
+  private def withTtl[S, I](state: org.apache.spark.sql.streaming.GroupState[S],
+      events: Iterator[I], evt: I => Evt, time: I => java.sql.Timestamp,
+      stateTtl: Option[java.time.Duration], eventTtl: Option[EventTimeTtl])(
+      step: Iterator[Evt] => Iterator[Evt]): Iterator[Evt] =
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
-    } else {
-      val wm = state.getCurrentWatermarkMs()
-      var lastTs = Long.MinValue
-      val live = events.filter { e =>
-        Option(e.__evtts).map(_.getTime) match {
-          case Some(ts) =>
-            if (ts > lastTs) lastTs = ts
-            ts >= wm // fence: older than the watermark = late
-          case None => true
-        }
-      }.map(_.evt)
-      val out = fold(live) // eager (foldEvents consumes `live` fully)
-      val horizon = math.max(lastTs, wm) + ttl.delay.toMillis
-      state.setTimeoutTimestamp(math.max(horizon, wm + 1))
-      out
+    } else eventTtl match {
+      case None =>
+        val out = step(events.map(evt))
+        stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
+        out
+      case Some(t) =>
+        val wm = state.getCurrentWatermarkMs()
+        var lastTs = Long.MinValue
+        val live = events.filter { e =>
+          val ts = time(e)
+          ts == null || {
+            if (ts.getTime > lastTs) lastTs = ts.getTime
+            ts.getTime >= wm // fence: older than the watermark = late
+          }
+        }.map(evt)
+        val out = step(live) // eager (foldEvents consumes `live` fully)
+        val horizon = math.max(lastTs, wm) + t.delay.toMillis
+        state.setTimeoutTimestamp(math.max(horizon, wm + 1))
+        out
     }
-  }
 
-  /** [[processKeyStream]] under an EVENT-TIME TTL (see [[EventTimeTtl]]). */
-  def processKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl)(
-      key: String, events: Iterator[EvtWithTs],
-      state: org.apache.spark.sql.streaming.GroupState[NState]): Iterator[Evt] =
-    withEventTtl(ttl, events, state, { live =>
-      val (out, st) = foldKey(spec, live,
-        state.getOption.getOrElse(emptyState), exportState = true)
-      state.update(st.get)
-      out
-    })
-
-  /** [[processPairKeyStream]] under an EVENT-TIME TTL. */
-  def processPairKeyStreamEventTtl(spec: NodeSpec, ttl: EventTimeTtl)(
-      key: String, events: Iterator[EvtWithTs],
-      state: org.apache.spark.sql.streaming.GroupState[PairNState]): Iterator[Evt] =
-    withEventTtl(ttl, events, state, { live =>
-      val (out, st) = foldPairKey(spec, live,
-        state.getOption.getOrElse(emptyPairState), exportState = true)
-      state.update(st.get)
-      out
-    })
-
-  /** One liveness stage of a (possibly BRANCHING) FK join tree.
+  /** One stage of a (possibly BRANCHING) FK join tree: a liveness
+    * node, or a pair node when `pairStage` is set.
     *
     * The AJU model is defined over trees: a fact like lineitem may
     * reference orders AND part, and is alive iff ALL parents are
@@ -575,18 +636,7 @@ object DeltaEngine {
     * alive" semantics while giving each conjunct its own
     * co-partitioned shuffle — the shape this takes on a real cluster.
     *
-    * @param name        unique stage id (stats + upstream references)
-    * @param spec        the per-key fold config; `spec.relation` names
-    *                    the base changelog when `ownStage` is None
-    * @param ownStage    upstream stage whose emissions are this
-    *                    stage's OWN changelog (multi-parent chaining);
-    *                    None → `changelogs(spec.relation)`
-    * @param parentStage upstream stage providing parent deltas; None
-    *                    for branch roots
-    * @param salts       sub-key salting factor for a SKEWED hop
-    *                    (default 1 = off) — see the skew note below
-    */
-  /** SKEW: the AJU cost model's hot spot is a parent flip replaying
+    * SKEW: the AJU cost model's hot spot is a parent flip replaying
     * the ENTIRE buffered child set of that key inside one task — a
     * hot key (one customer with millions of orders) serializes its
     * whole replay no matter how many executors exist. `salts = S`
@@ -599,24 +649,49 @@ object DeltaEngine {
     * union of bucket emissions EQUALS the unsalted emissions
     * (mergeable liveness — spec-asserted on a hot-key fixture).
     * Cost: parent-delta volume ×S and S state rows per key; apply it
-    * to the skewed hop only, sized so hot-key-children/S fits a task. */
-  /** `pairStage`: when set, this stage is a PAIR (shared-dimension
-    * product) node instead of a liveness node — its own input (the
-    * LEFT side: `ownStage` emissions or the base changelog) is
-    * incrementally cross-merged with the named stage's emissions (the
-    * RIGHT side) per routing key, via [[PairFold]]. Pair stages take
-    * no `parentStage` (both inputs are full delta streams, not
-    * liveness toggles).
+    * to the skewed hop only, sized so hot-key-children/S fits a task.
     *
-    * Pair stages SALT like liveness stages, and need it more: the
-    * routing key is the shared DIMENSION's key, whose cardinality can
-    * be tiny (25 nations caps the stage at 25 tasks regardless of
-    * cluster size). With `salts = S` the own/left rows bucket by row
-    * hash while the paired side replicates to all S buckets — each
-    * bucket pairs a 1/S slice of the left multiset against a full
-    * right copy, so the bucket products partition the full product
-    * (spec-asserted). Put the BIGGER side on `ownStage` when salting:
-    * the replicated side's state is ×S. */
+    * PAIR stages: the stage's own input (the LEFT side: `ownStage`
+    * emissions or the base changelog) is incrementally cross-merged
+    * with the `pairStage` emissions (the RIGHT side) per routing key,
+    * via [[PairFold]]. Pair stages take no `parentStage` (both inputs
+    * are full delta streams, not liveness toggles). They SALT like
+    * liveness stages, and need it more: the routing key is the shared
+    * DIMENSION's key, whose cardinality can be tiny (25 nations caps
+    * the stage at 25 tasks regardless of cluster size). With
+    * `salts = S` the own/left rows bucket by row hash while the paired
+    * side replicates to all S buckets — each bucket pairs a 1/S slice
+    * of the left multiset against a full right copy, so the bucket
+    * products partition the full product (spec-asserted). Put the
+    * BIGGER side on `ownStage` when salting: the replicated side's
+    * state is ×S.
+    *
+    * @param name        unique stage id (stats + upstream references)
+    * @param spec        the per-key fold config; `spec.relation` names
+    *                    the base changelog when `ownStage` is None
+    * @param ownStage    upstream stage whose emissions are this
+    *                    stage's OWN changelog (multi-parent chaining);
+    *                    None → `changelogs(spec.relation)`
+    * @param parentStage upstream stage providing parent deltas; None
+    *                    for branch roots
+    * @param salts       sub-key salting factor for a skewed hop, in
+    *                    [1, 1,000,000) (default 1 = off)
+    * @param pairStage   upstream stage providing the paired (right)
+    *                    side; makes this a pair stage
+    * @param keyOnlyRows project this stage's OWN input rows down to
+    *                    just the routing key column before the
+    *                    shuffle. Sound ONLY when downstream never
+    *                    reads the stage's row content — the one shape
+    *                    that qualifies is a set-semantics KEY node
+    *                    feeding an antiParent hop (anti liveness
+    *                    carries no parent columns by construction),
+    *                    where it collapses the widest relation's canon
+    *                    rows to ~key-width on the wire. Liveness
+    *                    semantics are unchanged: rows sharing a key
+    *                    collapse into one multiset entry whose net
+    *                    count crosses zero exactly when the distinct
+    *                    full-row set does.
+    */
   final case class Stage(
       name: String,
       spec: NodeSpec,
@@ -624,16 +699,6 @@ object DeltaEngine {
       parentStage: Option[String] = None,
       salts: Int = 1,
       pairStage: Option[String] = None,
-      /** Project this stage's OWN input rows down to just the routing
-        * key column before the shuffle. Sound ONLY when downstream
-        * never reads the stage's row content — the one shape that
-        * qualifies is a set-semantics KEY node feeding an antiParent
-        * hop (anti liveness carries no parent columns by
-        * construction), where it collapses the widest relation's
-        * canon rows to ~key-width on the wire. Liveness semantics are
-        * unchanged: rows sharing a key collapse into one multiset
-        * entry whose net count crosses zero exactly when the distinct
-        * full-row set does. */
       keyOnlyRows: Boolean = false)
 
   /** A root→leaf chain as stages — the original [[runBatch]] shape. */
@@ -643,6 +708,10 @@ object DeltaEngine {
         parentStage = if (i == 0) None else Some(specs(i - 1).relation))
     }
 
+  /** The upstream stages a stage reads, by name. */
+  private def upstreamOf(st: Stage): Seq[String] =
+    st.ownStage.toSeq ++ st.parentStage.toSeq ++ st.pairStage.toSeq
+
   private def checkStages(stages: Seq[Stage]): Unit = {
     require(stages.nonEmpty)
     val names = stages.map(_.name)
@@ -650,7 +719,7 @@ object DeltaEngine {
     val byName = stages.map(s => s.name -> s).toMap
     val seen = scala.collection.mutable.Set[String]()
     stages.foreach { st =>
-      (st.ownStage.toSeq ++ st.parentStage.toSeq ++ st.pairStage.toSeq).foreach { ref =>
+      upstreamOf(st).foreach { ref =>
         require(seen(ref),
           s"stage '${st.name}' references '$ref', which must precede it")
       }
@@ -678,6 +747,8 @@ object DeltaEngine {
             "inputs are full delta streams; gate liveness upstream instead")
       }
       require(st.salts >= 1, s"stage '${st.name}': salts must be >= 1, got ${st.salts}")
+      require(st.salts < MaxSalts,
+        s"stage '${st.name}': salts must be < $MaxSalts, got ${st.salts}")
       seen += st.name
     }
   }
@@ -687,10 +758,11 @@ object DeltaEngine {
     * (key, bucket) pair can alias another — a variable-width
     * `key + "#" + bucket` would collide for keys that themselves
     * contain '#' ("x#1" bucket 0 vs "x" bucket 10), silently merging
-    * two distinct key groups into one fold. 6 digits bounds salts at
-    * 1,000,000 — far past useful (each salt replicates parent-delta
-    * volume). */
+    * two distinct key groups into one fold. 6 digits bound salts
+    * below 1,000,000 ([[checkStages]]) — far past useful (each salt
+    * replicates parent-delta volume). */
   private val SaltWidth = 6
+  private val MaxSalts = 1000000
   private def saltSuffix(bucket: Column): Column =
     concat(lit("#"), lpad(bucket.cast("string"), SaltWidth, "0"))
 
@@ -700,7 +772,6 @@ object DeltaEngine {
   private def saltOwn(own: Dataset[Evt], salts: Int): Dataset[Evt] = {
     val spark = own.sparkSession
     import spark.implicits._
-    require(salts < 1000000, s"salts must be < 1e6, got $salts")
     own.toDF()
       .withColumn("key", concat(col("key"),
         saltSuffix(pmod(hash(col("row")), lit(salts)))))
@@ -712,7 +783,6 @@ object DeltaEngine {
   private def saltParent(parent: Dataset[Evt], salts: Int): Dataset[Evt] = {
     val spark = parent.sparkSession
     import spark.implicits._
-    require(salts < 1000000, s"salts must be < 1e6, got $salts")
     parent.toDF()
       .withColumn("__salt", explode(array((0 until salts).map(lit): _*)))
       .withColumn("key", concat(col("key"), saltSuffix(col("__salt"))))
@@ -735,9 +805,9 @@ object DeltaEngine {
                              events: org.apache.spark.util.LongAccumulator,
                              emitted: org.apache.spark.util.LongAccumulator)
 
-  /** Run the tree in batch-simulation mode: each node is a
-    * `groupByKey(joinKey).flatMapGroups` over the union of the
-    * parent's deltas and the node's own changelog — the exact
+  /** Run the tree in batch-simulation mode: each node groups the union
+    * of the parent's deltas and the node's own changelog by the `key`
+    * column and folds each group ([[foldStage]]) — the exact
     * micro-batch the streaming engine would process, replayed in one
     * batch. Returns the leaf's signed join-result deltas.
     */
@@ -747,14 +817,13 @@ object DeltaEngine {
 
   /** Assemble one stage's input event stream: its own changelog (base
     * relation or upstream emissions re-flagged), salted if configured,
-    * unioned with the parent/pair deltas. Shared by every stage loop
-    * ([[runTree]], [[runTreeShared]], [[stateMetrics]],
-    * [[runStreamTree]], [[runStreamTreeTws]]) — the wiring IS the
-    * tree's semantics, so there must be exactly one copy of it. Base
-    * changelogs are taken as given: local predicates were applied at
-    * their source. */
+    * unioned with the parent/pair deltas. `upstream` holds the outputs
+    * of the stages it reads ([[upstreamOf]]). Called only by
+    * [[runStages]] — the wiring IS the tree's semantics, so there must
+    * be exactly one copy of it. Base changelogs are taken as given:
+    * local predicates were applied at their source. */
   private def stageInput(st: Stage, changelogs: Map[String, Dataset[Evt]],
-      outputs: scala.collection.Map[String, Dataset[Evt]]): Dataset[Evt] = {
+      upstream: Map[String, Dataset[Evt]]): Dataset[Evt] = {
     val spec = st.spec
     val own = st.ownStage match {
       case None =>
@@ -766,9 +835,9 @@ object DeltaEngine {
         // arrive already keyed by this stage's childKeyCol (checked
         // in [[checkStages]]), so only fromParent flips — a plain
         // codegen'd projection, no object deserialization
-        val spark = outputs(ref).sparkSession
+        val spark = upstream(ref).sparkSession
         import spark.implicits._
-        outputs(ref).toDF()
+        upstream(ref).toDF()
           .withColumn("fromParent", lit(false))
           .as[Evt]
     }
@@ -788,9 +857,28 @@ object DeltaEngine {
     // the paired side's join deltas (pair stage) — both arrive with
     // fromParent = true on the wire
     (st.parentStage orElse st.pairStage).map { r =>
-      val p = if (st.salts > 1) saltParent(outputs(r), st.salts) else outputs(r)
+      val p = if (st.salts > 1) saltParent(upstream(r), st.salts) else upstream(r)
       ownS.union(p)
     }.getOrElse(ownS)
+  }
+
+  /** THE stage loop of every driver ([[runTree]], [[runTreeShared]],
+    * [[stateMetrics]], [[runStreamTree]], [[runStreamTreeTws]]):
+    * validate the graph, then build each stage's output in order from
+    * its [[stageInput]]. `build` gets the stage, the upstream outputs
+    * it reads and its input, built on demand — so [[runTreeShared]]
+    * can reuse a stage without building its input. Returns the last
+    * stage's output. */
+  private def runStages(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]])(
+      build: (Stage, Map[String, Dataset[Evt]], () => Dataset[Evt]) => Dataset[Evt])
+      : Dataset[Evt] = {
+    checkStages(stages)
+    val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
+    stages.foreach { st =>
+      val upstream = upstreamOf(st).map(n => n -> outputs(n)).toMap
+      outputs(st.name) = build(st, upstream, () => stageInput(st, changelogs, upstream))
+    }
+    outputs(stages.last.name)
   }
 
   /** THE batch fold of one stage, shared by [[runTree]],
@@ -811,9 +899,7 @@ object DeltaEngine {
       stats: Option[NodeStats]): Dataset[Evt] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val fold: (String, Iterator[Evt]) => Iterator[Evt] =
-      if (st.pairStage.isDefined) processPairKeyBatch(st.spec, preSorted = true)
-      else processKeyBatch(st.spec, preSorted = true)
+    val fold = batchFold(kindOf(st), st.spec, preSorted = true) _
     events.toDF()
       .groupBy(col("key")).as[String, Evt]
       .flatMapSortedGroups(col("seq"), col("fromParent").desc, col("row"))(
@@ -825,28 +911,26 @@ object DeltaEngine {
   }
 
   /** [[runBatch]] generalized to BRANCHING trees (see [[Stage]]): the
-    * stages run in order, each one a `groupByKey` on its own FK; the
-    * last stage's emissions are the full join-result deltas. A stage
-    * output referenced by several consumers (a shared dimension) is
-    * recomputed per consumer up to Spark's exchange reuse — persist it
-    * upstream if that ever matters. */
+    * stages run in order, each one grouped by its own FK (the `key`
+    * column — see [[foldStage]]); the last stage's emissions are the
+    * full join-result deltas. A stage output referenced by several
+    * consumers (a shared dimension) is recomputed per consumer up to
+    * Spark's exchange reuse — persist it upstream if that ever
+    * matters. */
   def runTree(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
-              stats: Option[scala.collection.mutable.Buffer[NodeStats]] = None): Dataset[Evt] = {
-    checkStages(stages)
-    val sc = changelogs.head._2.sparkSession.sparkContext
-    val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
-    stages.foreach { st =>
+              stats: Option[scala.collection.mutable.Buffer[NodeStats]] = None): Dataset[Evt] =
+    runStages(stages, changelogs) { (st, _, input) =>
+      val events = input()
       val nodeStats = stats.map { buf =>
+        val sc = events.sparkSession.sparkContext
         val s = NodeStats(st.name,
           sc.longAccumulator(s"graft.${st.name}.events"),
           sc.longAccumulator(s"graft.${st.name}.emitted"))
         buf += s
         s
       }
-      outputs(st.name) = foldStage(st, stageInput(st, changelogs, outputs), nodeStats)
+      foldStage(st, events, nodeStats)
     }
-    outputs(stages.last.name)
-  }
 
   /** Several stage-plans over (mostly) shared changelogs in ONE batch
     * evaluation, building each REFERENCE-SHARED stage's Dataset once
@@ -872,29 +956,20 @@ object DeltaEngine {
     // per shared stage: (output, own-changelog object, upstream outputs)
     val cache =
       new java.util.IdentityHashMap[Stage, (Dataset[Evt], AnyRef, Map[String, Dataset[Evt]])]()
-    val leaves = plans.map { case (stages, logs) =>
-      checkStages(stages)
-      val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
-      stages.foreach { st =>
-        val refs = (st.ownStage.toSeq ++ st.parentStage.toSeq ++ st.pairStage.toSeq)
-          .map(n => n -> outputs(n)).toMap
+    plans.map { case (stages, logs) =>
+      runStages(stages, logs) { (st, upstream, input) =>
         val ownLog: AnyRef =
           if (st.ownStage.isEmpty) logs.getOrElse(st.spec.relation, null) else null
-        val hit = Option(cache.get(st)).filter { case (_, cLog, cRefs) =>
-          (cLog eq ownLog) && cRefs.size == refs.size &&
-            cRefs.forall { case (n, ds) => refs.get(n).exists(_ eq ds) }
-        }
-        outputs(st.name) = hit match {
-          case Some((out, _, _)) => out
-          case None =>
-            val out = foldStage(st, stageInput(st, logs, outputs), None)
-            cache.put(st, (out, ownLog, refs))
-            out
+        Option(cache.get(st)).collect {
+          case (out, cLog, cUp) if (cLog eq ownLog) && cUp.size == upstream.size &&
+              cUp.forall { case (n, ds) => upstream.get(n).exists(_ eq ds) } => out
+        }.getOrElse {
+          val out = foldStage(st, input(), None)
+          cache.put(st, (out, ownLog, upstream))
+          out
         }
       }
-      outputs(stages.last.name)
-    }
-    leaves.reduce(_ union _)
+    }.reduce(_ union _)
   }
 
   /** STATE OBSERVABILITY — the answer surface for "which node's state
@@ -925,66 +1000,45 @@ object DeltaEngine {
     * answer. */
   def stateMetrics(stages: Seq[Stage],
                    changelogs: Map[String, Dataset[Evt]]): org.apache.spark.sql.DataFrame = {
-    checkStages(stages)
-    val spark = changelogs.head._2.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{count => fcount, sum => fsum}
-    def utf8Len(s: String): Long =
-      if (s.isEmpty) 0L else s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
-    val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
-    val perStage = stages.map { st =>
-      val spec = st.spec
-      val isPair = st.pairStage.isDefined
-      val events = stageInput(st, changelogs, outputs)
+    val perStage = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+    runStages(stages, changelogs) { (st, _, input) =>
+      val events = input()
+      perStage += stageFootprint(kindOf(st), st, events)
       // emissions feed downstream exactly as runTree's would
-      outputs(st.name) = foldStage(st, events, None)
-      // the metrics pass: fold again with state export (foldKey sorts
-      // per key itself when not pre-sorted)
-      val perKey: Dataset[(Long, Long)] = events.toDF()
-        .groupBy(col("key")).as[String, Evt].mapGroups { (_, it) =>
-        if (isPair) {
-          val s2 = foldPairKey(spec, it, emptyPairState, exportState = true)._2.get
-          val rows = (s2.left.valuesIterator ++ s2.right.valuesIterator)
-            .map(c => math.abs(c).toLong).sum
-          val bytes = (s2.left.keysIterator ++ s2.right.keysIterator)
-            .map(r => utf8Len(r) + 4L).sum
-          (rows, bytes)
-        } else {
-          val s2 = foldKey(spec, it, emptyState, exportState = true)._2.get
-          val rows = s2.children.valuesIterator.map(c => math.abs(c).toLong).sum
-          val bytes = s2.children.keysIterator.map(r => utf8Len(r) + 4L).sum +
-            utf8Len(s2.parentCanon) + 4L
-          (rows, bytes)
-        }
-      }
-      perKey.toDF("rows", "bytes")
-        .agg(fcount(lit(1)).cast("long").as("n_keys"),
-          fsum(col("rows")).as("state_rows"), fsum(col("bytes")).as("state_bytes"))
-        .select(lit(st.name).as("node"), col("n_keys"), col("state_rows"), col("state_bytes"))
+      foldStage(st, events, None)
     }
-    perStage.reduce(_.unionByName(_))
+    perStage.result().reduce(_.unionByName(_))
   }
 
-  /** Streaming flavor of [[processKeyBatch]]: same fold, with state
-    * carried across micro-batches in the state store. With a TTL the
-    * key's state is dropped after `ttl` of processing-time inactivity
-    * — the unbounded-child-set mitigation SURVEY.md §7 flags; events
-    * for an evicted key thereafter see empty state (an explicit
-    * correctness-for-boundedness trade the caller opts into). */
+  /** One [[stateMetrics]] row: fold the stage input per key once more
+    * and sum the exported states' footprints. */
+  private def stageFootprint[S](kind: Kind[S], st: Stage,
+      events: Dataset[Evt]): org.apache.spark.sql.DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count => fcount, sum => fsum}
+    events.toDF().groupBy(col("key")).as[String, Evt]
+      .mapGroups((_, it) =>
+        kind.footprint(foldKey(kind, st.spec, kind.empty, it, preSorted = false)._2.state))
+      .toDF("rows", "bytes")
+      .agg(fcount(lit(1)).cast("long").as("n_keys"),
+        fsum(col("rows")).as("state_rows"), fsum(col("bytes")).as("state_bytes"))
+      .select(lit(st.name).as("node"), col("n_keys"), col("state_rows"), col("state_bytes"))
+  }
+
+  /** The liveness stream step under an optional processing-time TTL,
+    * as [[runStreamTree]] runs it: same fold as [[processKeyBatch]],
+    * with state carried across micro-batches in the state store. With
+    * a TTL the key's state is dropped after `ttl` of processing-time
+    * inactivity — the unbounded-child-set mitigation SURVEY.md §7
+    * flags; events for an evicted key thereafter see empty state (an
+    * explicit correctness-for-boundedness trade the caller opts
+    * into). */
   def processKeyStream(spec: NodeSpec, ttl: Option[java.time.Duration] = None)(
       key: String, events: Iterator[Evt],
-      state: org.apache.spark.sql.streaming.GroupState[NState]): Iterator[Evt] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val (out, st) = foldKey(spec, events,
-        state.getOption.getOrElse(emptyState), exportState = true)
-      state.update(st.get)
-      ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-      out
-    }
-  }
+      state: org.apache.spark.sql.streaming.GroupState[NState]): Iterator[Evt] =
+    withTtl(state, events, identity[Evt], (_: Evt) => null, ttl, None)(
+      streamStep(Liveness, spec, _, state))
 
   /** Run the tree in Structured Streaming: a chain of
     * `flatMapGroupsWithState` stages in Append mode (Spark supports
@@ -1056,55 +1110,92 @@ object DeltaEngine {
   def runStreamTree(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
                     stateTtl: Option[java.time.Duration] = None,
                     eventTtl: Option[EventTimeTtl] = None): Dataset[Evt] = {
-    checkStages(stages)
     require(stateTtl.isEmpty || eventTtl.isEmpty,
       "choose ONE state-bounding policy: processing-time stateTtl or event-time eventTtl")
-    val spark = changelogs.head._2.sparkSession
-    LocalCheckpointFs.install(spark)
+    LocalCheckpointFs.install(changelogs.head._2.sparkSession)
+    runStages(stages, changelogs) { (st, _, input) =>
+      streamStage(kindOf(st), st.spec, input(), stateTtl, eventTtl)
+    }
+  }
+
+  /** One `flatMapGroupsWithState` stage of either kind: the stream step
+    * in the TTL wrapper, with the event time riding along as a column
+    * under an event-time TTL. Grouped by the `key` column, not
+    * groupByKey(_.key) — see [[foldStage]]: the lambda form
+    * re-deserializes every event per micro-batch just to re-extract
+    * the key column. */
+  private def streamStage[S](kind: Kind[S], spec: NodeSpec, events: Dataset[Evt],
+      stateTtl: Option[java.time.Duration], eventTtl: Option[EventTimeTtl]): Dataset[Evt] = {
+    val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    implicit val stateEncoder: org.apache.spark.sql.Encoder[S] = kind.encoder
     val timeout =
       if (eventTtl.isDefined) GroupStateTimeout.EventTimeTimeout
       else if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
-    stages.foreach { st =>
-      val spec = st.spec
-      val events = stageInput(st, changelogs, outputs)
-      outputs(st.name) =
-        (st.pairStage.isDefined, eventTtl) match {
-          case (true, Some(t)) =>
-            // column grouping, not groupByKey(_.key) — see [[foldStage]]:
-            // the lambda form re-deserializes every event per
-            // micro-batch just to re-extract the key column
-            withEventTime(events, t).toDF().groupBy(col("key")).as[String, EvtWithTs]
-              .flatMapGroupsWithState[PairNState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) =>
-                  processPairKeyStreamEventTtl(spec, t)(k, it, s))
-          case (true, None) =>
-            events.toDF().groupBy(col("key")).as[String, Evt]
-              .flatMapGroupsWithState[PairNState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) => processPairKeyStream(spec, stateTtl)(k, it, s))
-          case (false, Some(t)) =>
-            withEventTime(events, t).toDF().groupBy(col("key")).as[String, EvtWithTs]
-              .flatMapGroupsWithState[NState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) =>
-                  processKeyStreamEventTtl(spec, t)(k, it, s))
-          case (false, None) =>
-            events.toDF().groupBy(col("key")).as[String, Evt]
-              .flatMapGroupsWithState[NState, Evt](OutputMode.Append, timeout)(
-                (k, it, s) => processKeyStream(spec, stateTtl)(k, it, s))
-        }
+    eventTtl match {
+      case Some(t) =>
+        withEventTime(events, t).toDF().groupBy(col("key")).as[String, EvtWithTs]
+          .flatMapGroupsWithState[S, Evt](OutputMode.Append, timeout)((_, it, s) =>
+            withTtl(s, it, (_: EvtWithTs).evt, (_: EvtWithTs).__evtts, None, eventTtl)(
+              streamStep(kind, spec, _, s)))
+      case None =>
+        events.toDF().groupBy(col("key")).as[String, Evt]
+          .flatMapGroupsWithState[S, Evt](OutputMode.Append, timeout)((_, it, s) =>
+            withTtl(s, it, identity[Evt], (_: Evt) => null, stateTtl, None)(
+              streamStep(kind, spec, _, s)))
     }
-    outputs(stages.last.name)
   }
 
   // ---- the SAME tree on Spark 4's transformWithState ----------------
 
-  /** One tree node as a Spark 4 `StatefulProcessor` — the engine's
-    * core AJU fold ported off legacy flatMapGroupsWithState onto the
-    * supported arbitrary-state API, with state DECOMPOSED into typed
-    * columns instead of one per-key blob:
+  /** A tree node as a Spark 4 `StatefulProcessor` — the engine's folds
+    * on the supported arbitrary-state API, with state DECOMPOSED into
+    * typed columns instead of one per-key blob. What both kinds share
+    * lives here: rows sort by the SAME [[evtOrder]] as the flatMap
+    * drivers (state-store groups arrive unordered), the subclass folds
+    * them against its typed state, and the optional processing-time
+    * TTL is a REAL per-key timer (`registerTimer`/`handleExpiredTimer`,
+    * re-armed on activity, at most one per key) whose expiry clears
+    * the key's state. Requires the RocksDB state store provider on the
+    * session (transformWithState's documented requirement). */
+  sealed abstract class NodeProcessor(stateTtl: Option[java.time.Duration])
+      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] {
+    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues}
+
+    /** Fold one key's rows, already in [[evtOrder]], against the typed
+      * state. */
+    protected def fold(rows: Array[Evt]): Iterator[Evt]
+
+    /** Drop every state variable of the key. */
+    protected def clear(): Unit
+
+    override def handleInputRows(key: String, rows: Iterator[Evt],
+        timerValues: TimerValues): Iterator[Evt] = {
+      val arr = rows.toArray
+      java.util.Arrays.sort(arr, evtOrder)
+      val out = fold(arr)
+      stateTtl.foreach { d =>
+        // at most ONE live timer per key: re-arm on activity
+        val want = timerValues.getCurrentProcessingTimeInMs() + d.toMillis
+        // materialize first: deleting while iterating the state-store-backed
+        // timer iterator is mutation-during-iteration with no documented contract
+        getHandle.listTimers().toArray.foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(want)
+      }
+      out
+    }
+
+    override def handleExpiredTimer(key: String, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[Evt] = {
+      clear()
+      Iterator.empty
+    }
+  }
+
+  /** The liveness node on transformWithState: [[NodeFold]] run against
+    * typed state.
     *
     *  - `children` is a [[org.apache.spark.sql.streaming.MapState]]
     *    (canonical child row → signed count): an own-changelog event
@@ -1116,22 +1207,10 @@ object DeltaEngine {
     *    batch. The full map is read ONLY on a parent liveness flip
     *    (the replay the semantics requires anyway);
     *  - `parent` is a ValueState of (aliveParents, latest parent
-    *    canon) — a few bytes, read/written once per batch;
-    *  - the optional processing-time TTL is a REAL per-key timer
-    *    (`registerTimer`/`handleExpiredTimer`, re-armed on activity,
-    *    at most one per key), replacing GroupState's single timeout
-    *    slot.
-    *
-    * The fold logic mirrors [[NodeFold]] transition-for-transition
-    * (ghost counts, set-semantics roots, anti liveness, merge order —
-    * the spec gates TWS leaf output byte-identical to the flatMap
-    * driver's); events sort by the SAME [[evtOrder]] and flip replays
-    * by the same natural key order. Requires the RocksDB state store
-    * provider on the session (transformWithState's documented
-    * requirement). */
+    *    canon) — a few bytes, read/written once per batch. */
   final class TreeNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode => OM, TTLConfig, TimeMode, TimerValues, ValueState}
+      extends NodeProcessor(stateTtl) {
+    import org.apache.spark.sql.streaming.{MapState, OutputMode => OM, TTLConfig, TimeMode, ValueState}
 
     @transient private var children: MapState[String, Int] = _
     @transient private var parent: ValueState[(Int, String)] = _
@@ -1144,102 +1223,29 @@ object DeltaEngine {
         org.apache.spark.sql.Encoders.product[(Int, String)], TTLConfig.NONE)
     }
 
-    private def aliveAt(n: Int): Boolean = if (spec.antiParent) n <= 0 else n > 0
-
-    override def handleInputRows(key: String, rows: Iterator[Evt],
-        timerValues: TimerValues): Iterator[Evt] = {
-      // state-store groups arrive unordered — restore the engine's
-      // deterministic order (same comparator as the flatMap drivers)
-      val arr = rows.toArray
-      java.util.Arrays.sort(arr, evtOrder)
-      var (aliveParents, parentCanon) =
-        if (parent.exists()) parent.get() else (0, "")
-      val out = Vector.newBuilder[Evt]
-      def emit(seq: Long, tag: Int, mult: Int, row: String): Unit =
-        out += new Evt(seq, fromParent = true, tag, mult,
-          canonGet(row, spec.nextKeyCol), row)
-      arr.foreach { ev =>
-        if (ev.fromParent) {
-          val newAlive = aliveParents + ev.tag * ev.mult
-          val wasAlive = aliveAt(aliveParents)
-          val isAlive = aliveAt(newAlive)
-          val parentRow =
-            if (spec.antiParent) ""
-            else if (ev.tag > 0) ev.row else parentCanon
-          if (wasAlive != isAlive) {
-            // liveness flip replays the buffered child multiset — the
-            // ONLY full-map scan; sorted like NodeFold's replay so
-            // emission order is byte-identical across drivers
-            val keys = children.keys().toArray
-            java.util.Arrays.sort(keys.asInstanceOf[Array[AnyRef]])
-            keys.foreach { c =>
-              val cnt = children.getValue(c)
-              if (cnt != 0) {
-                val signed = (if (isAlive) 1 else -1) * cnt
-                emit(ev.seq, if (signed > 0) 1 else -1, signed.abs,
-                  mergeCanon(c, parentRow))
-                if (spec.fullOuterLeaf)
-                  // orphan reading flips OPPOSITE the inner one (see
-                  // NodeFold — the folds must stay transition-identical)
-                  emit(ev.seq, if (signed > 0) -1 else 1, signed.abs, c)
-              }
-            }
-          }
-          aliveParents = newAlive
-          if (ev.tag > 0) parentCanon = ev.row
-        } else {
-          val c = ev.row
-          val before = if (children.containsKey(c)) children.getValue(c) else 0
-          val after = before + ev.tag * ev.mult
-          if (after == 0) children.removeKey(c) else children.updateValue(c, after)
-          val emitCount =
-            if (spec.setSemantics) {
-              if (before <= 0 && after > 0) 1
-              else if (before > 0 && after <= 0) -1
-              else 0
-            } else ev.tag * ev.mult
-          if (emitCount != 0 && (spec.isRoot || aliveAt(aliveParents)))
-            emit(ev.seq, if (emitCount > 0) 1 else -1, emitCount.abs,
-              if (spec.isRoot) ev.row
-              else mergeCanon(ev.row, if (spec.antiParent) "" else parentCanon))
-          else if (emitCount != 0 && spec.fullOuterLeaf)
-            // parent dead: the child row IS output — the orphan
-            // (right-preserved) reading, bare child columns only
-            emit(ev.seq, if (emitCount > 0) 1 else -1, emitCount.abs, ev.row)
-        }
-      }
-      parent.update((aliveParents, parentCanon))
-      stateTtl.foreach { d =>
-        // at most ONE live timer per key: re-arm on activity
-        val want = timerValues.getCurrentProcessingTimeInMs() + d.toMillis
-        // materialize first: deleting while iterating the state-store-backed
-        // timer iterator is mutation-during-iteration with no documented contract
-        getHandle.listTimers().toArray.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(want)
-      }
-      out.result().iterator
+    protected def fold(rows: Array[Evt]): Iterator[Evt] = {
+      val (aliveParents, parentCanon) = if (parent.exists()) parent.get() else (0, "")
+      val node = new NodeFold(spec, new MapStateChildren(children), aliveParents, parentCanon)
+      val out = foldEvents(spec.nextKeyCol, rows.iterator, preSorted = true, node.feed)
+      parent.update((node.aliveParents, node.parentCanon))
+      out
     }
 
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Evt] = {
-      children.clear(); parent.clear()
-      Iterator.empty
-    }
+    protected def clear(): Unit = { children.clear(); parent.clear() }
   }
 
-  /** The PAIR (shared-dimension product) stage as a Spark 4
-    * `StatefulProcessor`: both sides' signed multisets live as typed
-    * MapStates. A pair delta's cross-merge enumerates the ENTIRE
-    * other side by definition (Δ(L⋈R) = ΔL⋈R + L'⋈ΔR), so an active
-    * batch reads O(state) regardless of API — the TWS win here is the
-    * WRITE path: after the batch folds through the same [[PairFold]]
-    * the flatMap driver uses (bit-identical transitions), only the
-    * CHANGED entries point-write back to the store, instead of
-    * re-serializing both whole multisets as one blob. TTL = per-key
-    * timer, as in [[TreeNodeProcessor]]. */
+  /** The PAIR (shared-dimension product) stage on transformWithState:
+    * both sides' signed multisets live as typed MapStates. A pair
+    * delta's cross-merge enumerates the ENTIRE other side by
+    * definition (Δ(L⋈R) = ΔL⋈R + L'⋈ΔR), so an active batch reads
+    * O(state) regardless of API — the TWS win here is the WRITE path:
+    * after the batch folds through the same [[PairFold]] the flatMap
+    * driver uses (bit-identical transitions), only the CHANGED entries
+    * point-write back to the store, instead of re-serializing both
+    * whole multisets as one blob. */
   final class PairNodeProcessor(spec: NodeSpec, stateTtl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode => OM, TTLConfig, TimeMode, TimerValues}
+      extends NodeProcessor(stateTtl) {
+    import org.apache.spark.sql.streaming.{MapState, OutputMode => OM, TTLConfig, TimeMode}
 
     @transient private var left: MapState[String, Int] = _
     @transient private var right: MapState[String, Int] = _
@@ -1268,30 +1274,16 @@ object DeltaEngine {
       before.keysIterator.filterNot(after.contains).foreach(ms.removeKey)
     }
 
-    override def handleInputRows(key: String, rows: Iterator[Evt],
-        timerValues: TimerValues): Iterator[Evt] = {
-      val arr = rows.toArray
-      java.util.Arrays.sort(arr, evtOrder)
+    protected def fold(rows: Array[Evt]): Iterator[Evt] = {
       val before = PairNState(load(left), load(right))
-      val (out, st) = foldPairKey(spec, arr.iterator, before,
-        exportState = true, preSorted = true)
-      sync(left, before.left, st.get.left)
-      sync(right, before.right, st.get.right)
-      stateTtl.foreach { d =>
-        val want = timerValues.getCurrentProcessingTimeInMs() + d.toMillis
-        // materialize first: deleting while iterating the state-store-backed
-        // timer iterator is mutation-during-iteration with no documented contract
-        getHandle.listTimers().toArray.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(want)
-      }
+      val (out, fold) = foldKey(Pair, spec, before, rows.iterator, preSorted = true)
+      val after = fold.state
+      sync(left, before.left, after.left)
+      sync(right, before.right, after.right)
       out
     }
 
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Evt] = {
-      left.clear(); right.clear()
-      Iterator.empty
-    }
+    protected def clear(): Unit = { left.clear(); right.clear() }
   }
 
   /** [[runStreamTree]] on `transformWithState` — chained
@@ -1302,23 +1294,17 @@ object DeltaEngine {
     * store provider. */
   def runStreamTreeTws(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
                        stateTtl: Option[java.time.Duration] = None): Dataset[Evt] = {
-    checkStages(stages)
     val spark = changelogs.head._2.sparkSession
     LocalCheckpointFs.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val timeMode =
       if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    val outputs = scala.collection.mutable.Map[String, Dataset[Evt]]()
-    stages.foreach { st =>
-      val events = stageInput(st, changelogs, outputs)
-      val processor: org.apache.spark.sql.streaming.StatefulProcessor[String, Evt, Evt] =
-        if (st.pairStage.isDefined) new PairNodeProcessor(st.spec, stateTtl)
-        else new TreeNodeProcessor(st.spec, stateTtl)
+    runStages(stages, changelogs) { (st, _, input) =>
       // column grouping, not groupByKey(_.key) — see [[foldStage]]
-      outputs(st.name) = events.toDF().groupBy(col("key")).as[String, Evt]
-        .transformWithState(processor, timeMode, OutputMode.Append())
+      input().toDF().groupBy(col("key")).as[String, Evt]
+        .transformWithState(kindOf(st).processor(st.spec, stateTtl), timeMode,
+          OutputMode.Append())
     }
-    outputs(stages.last.name)
   }
 }

@@ -798,6 +798,18 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     intercept[IllegalArgumentException] {
       DeltaEngine.runTree(reordered, logs)
     }
+    // a salting factor outside [1, 1e6) names the stage, before any plan
+    for (salts <- Seq(0, 1000000)) {
+      val badSalts = IncrementalQueries.partRevenueStages.map {
+        case st if st.name == "orders" => st.copy(salts = salts)
+        case st => st
+      }
+      val e = intercept[IllegalArgumentException] {
+        DeltaEngine.runTree(badSalts, logs)
+      }
+      assert(e.getMessage.contains("stage 'orders'") && e.getMessage.contains("salts"),
+        e.getMessage)
+    }
   }
 
   // ---- TreeCompiler: FK-metadata-derived chains ----------------------

@@ -871,48 +871,77 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
   }
 
   test("TWS tree driver: transformWithState leaf deltas net to the flatMap/batch view") {
-    // the Q10 chain on Spark 4 StatefulProcessors (MapState children,
-    // ValueState liveness) must fold byte-identical state transitions:
-    // net leaf view == the batch runner's, across the same adversarial
-    // batch plan (split inserts, then deletes fanning to children
-    // inserted in EARLIER batches)
+    // every liveness transition on Spark 4 StatefulProcessors (MapState
+    // children, ValueState liveness) must fold exactly as the
+    // flatMapGroupsWithState driver does: per micro-batch the two emit
+    // the same (tag, mult, row) multiset, and the net leaf view equals
+    // the batch runner's, across the same adversarial batch plan (split
+    // inserts, then deletes fanning to children inserted in EARLIER
+    // batches). Trees: the Q10 chain; a set-semantics key root gating
+    // an antiParent node (the NOT EXISTS wiring); the Q10 chain with a
+    // fullOuterLeaf leaf (orphaned lineitems emit bare).
     import graft.streaming.IncrementalQueries
     val ss = spark.newSession()
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sq = ss.sqlContext
     import ss.implicits._
-    val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.q10Changelogs(ss, dir)
+    val q10Logs = IncrementalQueries.q10Changelogs(ss, SparkTestSession.sfTiny)
       .view.mapValues(_.collect().toSeq).toMap
-    val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStreamTreeTws(chainStages(IncrementalQueries.q10Tree),
-      streams.map { case (r, ms) => r -> ms.toDS() })
-    val query = out.writeStream
-      .format("memory").queryName("q10_tws_leaf").outputMode("append").start()
-    try {
-      def half(evs: Seq[Evt], first: Boolean): Seq[Evt] =
-        evs.filter(e => (e.key.hashCode & 1) == (if (first) 0 else 1))
-      for (step <- Seq[Seq[Evt] => Seq[Evt]](
-        evs => half(evs.filter(_.seq == 0L), first = true),
-        evs => half(evs.filter(_.seq == 0L), first = false),
-        evs => evs.filter(_.seq == 1L))) {
-        streams.foreach { case (rel, ms) =>
-          val batch = step(logs(rel))
-          if (batch.nonEmpty) ms.addData(batch)
+    // customers with no order in the Q10 date window: the orders key
+    // set feeds an anti customer node keyed by c_custkey; every 30th
+    // customer is deleted too, so retractions hit both sides
+    val customers = q10Logs("customer").map(e => e.copy(key = canonGet(e.row, "c_custkey")))
+    val antiLogs = Map("orders" -> q10Logs("orders"), "customer" -> (customers ++
+      customers.filter(_.key.toLong % 30 == 0).map(_.copy(seq = 1L, tag = -1))))
+    val antiStages = Seq(
+      Stage("orders_keys", NodeSpec("orders", "o_custkey", "o_custkey",
+        isRoot = true, setSemantics = true), keyOnlyRows = true),
+      Stage("customer", NodeSpec("customer", "c_custkey", "c_custkey", antiParent = true),
+        parentStage = Some("orders_keys")))
+    val fullOuterStages = chainStages(IncrementalQueries.q10Tree.map { sp =>
+      if (sp.relation == "lineitem") sp.copy(fullOuterLeaf = true) else sp
+    })
+    def half(evs: Seq[Evt], first: Boolean): Seq[Evt] =
+      evs.filter(e => (e.key.hashCode & 1) == (if (first) 0 else 1))
+    val steps = Seq[Seq[Evt] => Seq[Evt]](
+      evs => half(evs.filter(_.seq == 0L), first = true),
+      evs => half(evs.filter(_.seq == 0L), first = false),
+      evs => evs.filter(_.seq == 1L))
+    def multiset(evts: Seq[Evt]): Seq[(Int, Int, String)] =
+      evts.map(e => (e.tag, e.mult, e.row)).sorted
+    def net(evts: Seq[Evt]): Map[String, Int] =
+      evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
+        .filter(_._2 != 0).toMap
+    for ((tree, stages, logs) <- Seq(
+        ("q10", chainStages(IncrementalQueries.q10Tree), q10Logs),
+        ("anti", antiStages, antiLogs),
+        ("full_outer", fullOuterStages, q10Logs))) {
+      // ONE source carrying every relation, so each step is exactly one
+      // micro-batch in both queries and their batches line up
+      val src = MemoryStream[(String, Evt)]
+      val streams = logs.keys.map(rel => rel -> src.toDS().filter(_._1 == rel).map(_._2)).toMap
+      val tws = runStreamTreeTws(stages, streams).writeStream
+        .format("memory").queryName(s"tws_${tree}_leaf").outputMode("append").start()
+      val fmg = runStreamTree(stages, streams).writeStream
+        .format("memory").queryName(s"fmg_${tree}_leaf").outputMode("append").start()
+      try {
+        steps.foreach { step =>
+          src.addData(logs.toSeq.flatMap { case (rel, evs) => step(evs).map(rel -> _) })
+          tws.processAllAvailable(); fmg.processAllAvailable()
+          assert(tws.lastProgress.batchId == fmg.lastProgress.batchId, tree)
+          val twsSoFar = ss.table(s"tws_${tree}_leaf").as[Evt].collect().toSeq
+          val fmgSoFar = ss.table(s"fmg_${tree}_leaf").as[Evt].collect().toSeq
+          assert(multiset(twsSoFar) == multiset(fmgSoFar),
+            s"$tree: TWS and flatMapGroupsWithState emissions differ by batch ${tws.lastProgress.batchId}")
         }
-        query.processAllAvailable()
-      }
-      def fold(evts: Seq[Evt]): Map[String, Int] =
-        evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
-          .filter(_._2 != 0).toMap
-      val streamed = fold(ss.table("q10_tws_leaf").as[Evt].collect().toSeq)
-      val batched = fold(
-        runBatch(IncrementalQueries.q10Tree,
-          IncrementalQueries.q10Changelogs(ss, dir)).collect().toSeq)
-      assert(batched.nonEmpty, "batch leaf view must be non-trivial")
-      assert(streamed == batched)
-    } finally query.stop()
+        val streamed = net(ss.table(s"tws_${tree}_leaf").as[Evt].collect().toSeq)
+        val batched = net(runTree(stages, logs.map { case (r, evs) => r -> evs.toDS() })
+          .collect().toSeq)
+        assert(batched.nonEmpty, s"$tree: batch leaf view must be non-trivial")
+        assert(streamed == batched, tree)
+      } finally { tws.stop(); fmg.stop() }
+    }
   }
 
   test("TWS pair stage: transformWithState product deltas net to the batch view") {
