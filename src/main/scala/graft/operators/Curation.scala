@@ -1329,13 +1329,10 @@ object Curation {
     * is the one corpus scan and the maintenance is per-group state. */
   def funnelStream(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import graft.functions.WordShingles.word_shingles
-    import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-    val ss = replaySession(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import ss.implicits._
+    import graft.streaming.IncrementalQueries.{boundedReplayCollect, replay, MemorySink}
+    import s.implicits._
     val toks = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
     val d0 = Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text"))
     val qual = d0.select(col("doc_id"), explode(toks).as("w"))
@@ -1370,45 +1367,38 @@ object Curation {
     // is a fixed benchmark, not corpus churn
     val churn = base.filter(r => !r._2 && r._1 % 5 == 0)
     val batches = Seq(base.map(evt(0, 1, _)),
-      churn.map(evt(1, -1, _)), churn.map(evt(2, 1, _)))
-    val src = MemoryStream[FunnelDoc]
-    val out = src.toDS().groupByKey(_.pfx)
-      .flatMapGroupsWithState[FunnelState, FunnelDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it, state) =>
-          val in = it.toList
-          def cnt(p: FunnelDoc => Boolean): Long =
-            in.collect { case e if p(e) => e.sign.toLong }.sum
-          val beforeMap = state.getOption.map(_.live.toMap)
-            .getOrElse(Map.empty[Long, Boolean])
-          val afterMap = in.filter(_.quality)
-            .groupBy(_.docId).view
-            .mapValues(es => (es.map(_.sign).sum, es.head.contam))
-            .foldLeft(beforeMap) { case (m, (id, (net, c))) =>
-              if (net > 0) m + (id -> c)
-              else if (net < 0) m - id
-              else m
-            }
-          def keeper(m: Map[Long, Boolean]): Option[(Long, Boolean)] =
-            if (m.isEmpty) None else Some(m.minBy(_._1))
-          val (kb, ka) = (keeper(beforeMap), keeper(afterMap))
-          if (afterMap.isEmpty) state.remove()
-          else state.update(FunnelState(afterMap.toList))
-          Iterator.single(FunnelDelta(
-            cnt(_ => true), cnt(!_.held), cnt(e => !e.held && e.en),
-            cnt(_.quality),
-            ka.size.toLong - kb.size.toLong,
-            (if (ka.exists(!_._2)) 1L else 0L) - (if (kb.exists(!_._2)) 1L else 0L)))
-      }
-    val sinkName = "curation_funnel_stream_sink"
-    val query = out.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b =>
-        if (b.nonEmpty) { src.addData(b); query.processAllAvailable() }
-      }
-    } finally query.stop()
-    val sums = ss.table(sinkName).agg(
+      churn.map(evt(1, -1, _)), churn.map(evt(2, 1, _))).map(Seq(_))
+    val sink = replay(s, MemorySink("curation_funnel_stream_sink"), batches) {
+      (_, streams) => streams.head.groupByKey(_.pfx)
+        .flatMapGroupsWithState[FunnelState, FunnelDelta](
+          OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (_, it, state) =>
+            val in = it.toList
+            def cnt(p: FunnelDoc => Boolean): Long =
+              in.collect { case e if p(e) => e.sign.toLong }.sum
+            val beforeMap = state.getOption.map(_.live.toMap)
+              .getOrElse(Map.empty[Long, Boolean])
+            val afterMap = in.filter(_.quality)
+              .groupBy(_.docId).view
+              .mapValues(es => (es.map(_.sign).sum, es.head.contam))
+              .foldLeft(beforeMap) { case (m, (id, (net, c))) =>
+                if (net > 0) m + (id -> c)
+                else if (net < 0) m - id
+                else m
+              }
+            def keeper(m: Map[Long, Boolean]): Option[(Long, Boolean)] =
+              if (m.isEmpty) None else Some(m.minBy(_._1))
+            val (kb, ka) = (keeper(beforeMap), keeper(afterMap))
+            if (afterMap.isEmpty) state.remove()
+            else state.update(FunnelState(afterMap.toList))
+            Iterator.single(FunnelDelta(
+              cnt(_ => true), cnt(!_.held), cnt(e => !e.held && e.en),
+              cnt(_.quality),
+              ka.size.toLong - kb.size.toLong,
+              (if (ka.exists(!_._2)) 1L else 0L) - (if (kb.exists(!_._2)) 1L else 0L)))
+        }
+    }
+    val sums = sink.agg(
       sum("s1").as("s1"), sum("s2").as("s2"), sum("s3").as("s3"),
       sum("s4").as("s4"), sum("s5").as("s5"), sum("s6").as("s6"))
     Seq((1, "total", "s1"), (2, "not_heldout", "s2"), (3, "lang_en", "s3"),

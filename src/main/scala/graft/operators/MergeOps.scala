@@ -181,11 +181,9 @@ object MergeOps {
         |FROM orders o ASOF LEFT JOIN dim d
         | ON o.o_custkey = d.c_custkey AND o.o_orderdate >= d.ts""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{streamAsOfJoin, AsOfIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val c = graft.Tables.customer(s, d)
         // right side: version events, id = tier (1/2/3 per key — the
@@ -204,24 +202,11 @@ object MergeOps {
           dims.unionByName(facts)
             .as[(Long, java.sql.Timestamp, Boolean, Long)])
         val ev = collected.map(r => AsOfIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[AsOfIn]
-        val out = streamAsOfJoin(src.toDS(), delay = "1 second")
-        val query = out.writeStream
-          .format("memory").queryName("orders_temporal_dim_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData(AsOfIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            isRight = false, id = -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("orders_temporal_dim_stream_sink")
-          .filter(col("key") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        replay(s, MemorySink("orders_temporal_dim_stream_sink"),
+            halves(ev, AsOfIn(-1L, FlushTs, isRight = false, id = -1L))) {
+          (_, in) => streamAsOfJoin(in.head, delay = "1 second")
+        }.filter(col("key") >= 0)
           .select(col("left_id").as("o_orderkey"), col("key").as("c_custkey"),
             col("left_ts").as("ts"), col("asof_id").as("asof_tier"),
             col("asof_ts"))

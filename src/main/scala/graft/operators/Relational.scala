@@ -123,6 +123,46 @@ object Relational {
        |GROUP BY c_custkey, c_name, c_acctbal, n_name
        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin
 
+  /** Purchases ⋈ clicks of the same user within the preceding hour as
+    * a native stream-stream interval join of type `joinType`, both
+    * sides watermarked: the click and purchase events replay ts-sorted
+    * in two micro-batches, and an outer join gets two more, each with
+    * a far-future row on an unused key per side. The first moves both
+    * watermarks past all real data; outer null-extensions emit on the
+    * FOLLOWING trigger, which the second forces. Returns the memory
+    * sink `sink`. */
+  private def streamStreamJoin(s: SparkSession, d: String, entry: String, sink: String,
+      joinType: String): DataFrame = {
+    import graft.streaming.IncrementalQueries.{boundedReplayCollect, replay, MemorySink}
+    import s.implicits._
+    val collected = boundedReplayCollect(entry,
+      Tables.events(s, d)
+        .filter(col("event_type").isin("click", "purchase"))
+        .select(col("user_id"), col("ts"), (col("event_type") === "click").as("isClick"),
+          col("event_id"))
+        .as[(Long, java.sql.Timestamp, Boolean, Long)])
+      .sortBy(e => (e._2.getTime, e._4)).toSeq
+    val (first, second) = collected.splitAt(collected.length / 2)
+    val flush = if (joinType == "inner") Nil else (0 until 2).map { i =>
+      val far = java.sql.Timestamp.valueOf(s"203$i-01-01 00:00:00")
+      Seq(Seq((-1L, far, -1L)), Seq((-1L, far, -1L)))
+    }
+    val batches = Seq(first, second).map { b =>
+      Seq(b.filter(_._3), b.filterNot(_._3)).map(_.map(e => (e._1, e._2, e._4)))
+    } ++ flush
+    replay(s, MemorySink(sink), batches) { (_, in) =>
+      val clicks = in(0).toDF("c_user", "click_ts", "click_id")
+        .withWatermark("click_ts", "2 hours")
+      val purchases = in(1).toDF("user_id", "purchase_ts", "purchase_id")
+        .withWatermark("purchase_ts", "2 hours")
+      purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
+          col("click_ts") <= col("purchase_ts"),
+        joinType)
+    }
+  }
+
   val defs: Seq[GraftQuery] = Seq(
     sql("q10_flagship", q10Oracle)(q10),
 
@@ -648,34 +688,19 @@ object Relational {
         | FROM events)
         |GROUP BY 1, 2""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_sliding_stream",
           Tables.events(s, d)
             .select(col("ts"), col("event_type"), col("value"))
             .as[(java.sql.Timestamp, String, Double)])
-        val ev = collected.sortBy(_._1.getTime)
-        val src = MemoryStream[(java.sql.Timestamp, String, Double)]
-        val agg = graft.streaming.StreamingAnalytics.slidingAgg(
-          src.toDF().toDF("ts", "event_type", "value"), delay = "1 second")
-        val query = agg.writeStream
-          .format("memory").queryName("events_sliding_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData((java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "__sentinel", 0.0))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_sliding_stream_sink")
-          .filter(col("event_type") =!= "__sentinel")
+        val ev = collected.sortBy(_._1.getTime).toSeq
+        replay(s, MemorySink("events_sliding_stream_sink"),
+            halves(ev, (FlushTs, "__sentinel", 0.0))) { (_, in) =>
+          graft.streaming.StreamingAnalytics.slidingAgg(
+            in.head.toDF("ts", "event_type", "value"), delay = "1 second")
+        }.filter(col("event_type") =!= "__sentinel")
     },
 
     // The CONTINUOUS tumbling window behind the hash gate: the same
@@ -691,34 +716,19 @@ object Relational {
         | CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_tumbling_stream",
           Tables.events(s, d)
             .select(col("ts"), col("event_type"), col("value"))
             .as[(java.sql.Timestamp, String, Double)])
-        val ev = collected.sortBy(_._1.getTime)
-        val src = MemoryStream[(java.sql.Timestamp, String, Double)]
-        val agg = graft.streaming.StreamingAnalytics.tumblingAgg(
-          src.toDF().toDF("ts", "event_type", "value"), delay = "1 second")
-        val query = agg.writeStream
-          .format("memory").queryName("events_tumbling_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData((java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "__sentinel", 0.0))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_tumbling_stream_sink")
-          .filter(col("event_type") =!= "__sentinel")
+        val ev = collected.sortBy(_._1.getTime).toSeq
+        replay(s, MemorySink("events_tumbling_stream_sink"),
+            halves(ev, (FlushTs, "__sentinel", 0.0))) { (_, in) =>
+          graft.streaming.StreamingAnalytics.tumblingAgg(
+            in.head.toDF("ts", "event_type", "value"), delay = "1 second")
+        }.filter(col("event_type") =!= "__sentinel")
     },
 
     // GROUPING SETS — the explicit form of rollup/cube (one Expand +
@@ -1063,11 +1073,9 @@ object Relational {
         |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id, c.ts AS asof_click_ts
         |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{streamAsOfJoin, AsOfIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         // Unlike the other stream-gated entries (which collect small
         // CHANGELOGS), this one replays a TABLE — boundedReplayCollect
@@ -1081,25 +1089,12 @@ object Relational {
               col("event_id"))
             .as[(Long, java.sql.Timestamp, Boolean, Long)])
         val ev = collected.map(r => AsOfIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[AsOfIn]
-        val out = streamAsOfJoin(src.toDS(), delay = "1 second")
-        val query = out.writeStream
-          .format("memory").queryName("events_asof_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          // sentinel: unused key far past every event, flushes the tail
-          src.addData(AsOfIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            isRight = false, id = -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_asof_stream_sink")
-          .filter(col("key") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        // sentinel: unused key far past every event, flushes the tail
+        replay(s, MemorySink("events_asof_stream_sink"),
+            halves(ev, AsOfIn(-1L, FlushTs, isRight = false, id = -1L))) {
+          (_, in) => streamAsOfJoin(in.head, delay = "1 second")
+        }.filter(col("key") >= 0)
           .select(col("left_id").as("event_id"), col("key").as("user_id"),
             col("left_ts").as("ts"), col("asof_id").as("asof_click_id"),
             col("asof_ts").as("asof_click_ts"))
@@ -1125,41 +1120,7 @@ object Relational {
         | AND p.user_id = c.user_id
         | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        import ss.implicits._
-        val collected = boundedReplayCollect("events_stream_stream_join",
-          Tables.events(s, d)
-            .filter(col("event_type").isin("click", "purchase"))
-            .select(col("user_id"), col("ts"), (col("event_type") === "click").as("isClick"),
-              col("event_id"))
-            .as[(Long, java.sql.Timestamp, Boolean, Long)](
-              org.apache.spark.sql.Encoders.product[(Long, java.sql.Timestamp, Boolean, Long)]))
-          .sortBy(e => (e._2.getTime, e._4))
-        val clickSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val purchSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val clicks = clickSrc.toDF().toDF("c_user", "click_ts", "click_id")
-          .withWatermark("click_ts", "2 hours")
-        val purchases = purchSrc.toDF().toDF("user_id", "purchase_ts", "purchase_id")
-          .withWatermark("purchase_ts", "2 hours")
-        val joined = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-            col("click_ts") <= col("purchase_ts"))
-        val query = joined.writeStream
-          .format("memory").queryName("events_ss_join_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          for (batch <- Seq(first, second)) {
-            clickSrc.addData(batch.filter(_._3).map(e => (e._1, e._2, e._4)))
-            purchSrc.addData(batch.filterNot(_._3).map(e => (e._1, e._2, e._4)))
-            query.processAllAvailable()
-          }
-        } finally query.stop()
-        ss.table("events_ss_join_sink")
+        streamStreamJoin(s, d, "events_stream_stream_join", "events_ss_join_sink", "inner")
           .select(col("purchase_id"), col("user_id"),
             col("purchase_ts"), col("click_id"), col("click_ts"))
     },
@@ -1180,48 +1141,7 @@ object Relational {
         | ON p.user_id = c.user_id
         | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        import ss.implicits._
-        val collected = boundedReplayCollect("events_stream_stream_left",
-          Tables.events(s, d)
-            .filter(col("event_type").isin("click", "purchase"))
-            .select(col("user_id"), col("ts"), (col("event_type") === "click").as("isClick"),
-              col("event_id"))
-            .as[(Long, java.sql.Timestamp, Boolean, Long)](
-              org.apache.spark.sql.Encoders.product[(Long, java.sql.Timestamp, Boolean, Long)]))
-          .sortBy(e => (e._2.getTime, e._4))
-        val clickSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val purchSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val clicks = clickSrc.toDF().toDF("c_user", "click_ts", "click_id")
-          .withWatermark("click_ts", "2 hours")
-        val purchases = purchSrc.toDF().toDF("user_id", "purchase_ts", "purchase_id")
-          .withWatermark("purchase_ts", "2 hours")
-        val joined = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-            col("click_ts") <= col("purchase_ts"),
-          "leftOuter")
-        val query = joined.writeStream
-          .format("memory").queryName("events_ss_left_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          for (batch <- Seq(first, second)) {
-            clickSrc.addData(batch.filter(_._3).map(e => (e._1, e._2, e._4)))
-            purchSrc.addData(batch.filterNot(_._3).map(e => (e._1, e._2, e._4)))
-            query.processAllAvailable()
-          }
-          for (i <- 0 until 2) {
-            val far = java.sql.Timestamp.valueOf(s"203$i-01-01 00:00:00")
-            clickSrc.addData((-1L, far, -1L))
-            purchSrc.addData((-1L, far, -1L))
-            query.processAllAvailable()
-          }
-        } finally query.stop()
-        ss.table("events_ss_left_sink")
+        streamStreamJoin(s, d, "events_stream_stream_left", "events_ss_left_sink", "leftOuter")
           .filter(col("user_id") >= 0)
           .select(col("purchase_id"), col("user_id"),
             col("purchase_ts"), col("click_id"), col("click_ts"))
@@ -1241,48 +1161,7 @@ object Relational {
         | ON p.user_id = c.user_id
         | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        import ss.implicits._
-        val collected = boundedReplayCollect("events_stream_stream_full",
-          Tables.events(s, d)
-            .filter(col("event_type").isin("click", "purchase"))
-            .select(col("user_id"), col("ts"), (col("event_type") === "click").as("isClick"),
-              col("event_id"))
-            .as[(Long, java.sql.Timestamp, Boolean, Long)](
-              org.apache.spark.sql.Encoders.product[(Long, java.sql.Timestamp, Boolean, Long)]))
-          .sortBy(e => (e._2.getTime, e._4))
-        val clickSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val purchSrc = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val clicks = clickSrc.toDF().toDF("c_user", "click_ts", "click_id")
-          .withWatermark("click_ts", "2 hours")
-        val purchases = purchSrc.toDF().toDF("user_id", "purchase_ts", "purchase_id")
-          .withWatermark("purchase_ts", "2 hours")
-        val joined = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-            col("click_ts") <= col("purchase_ts"),
-          "fullOuter")
-        val query = joined.writeStream
-          .format("memory").queryName("events_ss_full_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          for (batch <- Seq(first, second)) {
-            clickSrc.addData(batch.filter(_._3).map(e => (e._1, e._2, e._4)))
-            purchSrc.addData(batch.filterNot(_._3).map(e => (e._1, e._2, e._4)))
-            query.processAllAvailable()
-          }
-          for (i <- 0 until 2) {
-            val far = java.sql.Timestamp.valueOf(s"203$i-01-01 00:00:00")
-            clickSrc.addData((-1L, far, -1L))
-            purchSrc.addData((-1L, far, -1L))
-            query.processAllAvailable()
-          }
-        } finally query.stop()
-        ss.table("events_ss_full_sink")
+        streamStreamJoin(s, d, "events_stream_stream_full", "events_ss_full_sink", "fullOuter")
           .filter(coalesce(col("user_id"), col("c_user")) >= 0)
           .select(col("purchase_id"),
             coalesce(col("user_id"), col("c_user")).as("user_id"),
@@ -1320,36 +1199,22 @@ object Relational {
         | count(*) AS n_events
         |FROM s GROUP BY user_id, session_id""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_session_window_stream",
           Tables.events(s, d)
             .select(col("user_id"), col("ts"))
             .as[(Long, java.sql.Timestamp)])
-        val ev = collected.sortBy(r => (r._2.getTime, r._1))
-        val src = MemoryStream[(Long, java.sql.Timestamp)]
-        val sessions = src.toDF().toDF("user_id", "ts")
-          .withWatermark("ts", "1 second")
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"), col("session_window.start").as("session_start"),
-            col("session_window.end").as("session_end"), col("n_events"))
-        val query = sessions.writeStream
-          .format("memory").queryName("events_session_window_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_session_window_sink").filter(col("user_id") >= 0)
+        val ev = collected.sortBy(r => (r._2.getTime, r._1)).toSeq
+        replay(s, MemorySink("events_session_window_sink"), halves(ev, (-1L, FlushTs))) {
+          (_, in) => in.head.toDF("user_id", "ts")
+            .withWatermark("ts", "1 second")
+            .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("user_id"), col("session_window.start").as("session_start"),
+              col("session_window.end").as("session_end"), col("n_events"))
+        }.filter(col("user_id") >= 0)
     },
 
     // STREAMING exact dedup behind the hash gate: the continuous twin
@@ -1363,29 +1228,17 @@ object Relational {
     sql("events_stream_dedup",
       "SELECT DISTINCT user_id, event_type FROM events") {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_stream_dedup",
           Tables.events(s, d)
             .select(col("user_id"), col("event_type"))
             .as[(Long, String)])
-        val src = MemoryStream[(Long, String)]
-        val out = src.toDF().toDF("user_id", "event_type")
-          .dropDuplicates("user_id", "event_type")
-        val query = out.writeStream
-          .format("memory").queryName("events_stream_dedup_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_stream_dedup_sink")
+        replay(s, MemorySink("events_stream_dedup_sink"), halves(collected.toSeq)) {
+          (_, in) => in.head.toDF("user_id", "event_type")
+            .dropDuplicates("user_id", "event_type")
+        }
     },
 
     // STREAMING CEP behind the hash gate: the strict-contiguity
@@ -1402,34 +1255,20 @@ object Relational {
     // machine and the batch window semantics fails the hash.
     sql("events_pattern_stream", TimeSeries.patternMatchOracle) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{streamPatternMatch, PatIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_pattern_stream",
           Tables.events(s, d)
             .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
             .as[(Long, java.sql.Timestamp, String, Long)])
         val ev = collected.map(r => PatIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[PatIn]
-        val out = streamPatternMatch(src.toDS(), delay = "1 second", windowUs = 86400000000L)
-        val query = out.writeStream
-          .format("memory").queryName("events_pattern_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData(PatIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "view", -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_pattern_stream_sink").filter(col("user_id") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        replay(s, MemorySink("events_pattern_stream_sink"), halves(ev, PatIn(-1L, FlushTs, "view", -1L)),
+            tws = false) {
+          (_, in) => streamPatternMatch(in.head, delay = "1 second", windowUs = 86400000000L)
+        }.filter(col("user_id") >= 0)
     },
 
     // The SAME CEP view through Spark 4's transformWithState —
@@ -1439,36 +1278,20 @@ object Relational {
     // StatefulProcessor), one two-LEAD oracle.
     sql("events_pattern_tws", TimeSeries.patternMatchOracle) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{twsPatternMatch, PatIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_pattern_tws",
           Tables.events(s, d)
             .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
             .as[(Long, java.sql.Timestamp, String, Long)])
         val ev = collected.map(r => PatIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[PatIn]
-        val out = twsPatternMatch(src.toDS(), delay = "1 second", windowUs = 86400000000L)
-        val query = out.writeStream
-          .format("memory").queryName("events_pattern_tws_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData(PatIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "view", -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_pattern_tws_sink").filter(col("user_id") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        replay(s, MemorySink("events_pattern_tws_sink"), halves(ev, PatIn(-1L, FlushTs, "view", -1L)),
+            tws = true) {
+          (_, in) => twsPatternMatch(in.head, delay = "1 second", windowUs = 86400000000L)
+        }.filter(col("user_id") >= 0)
     },
 
     // STREAM-STATIC enrichment join — the most common production
@@ -1486,34 +1309,22 @@ object Relational {
         |FROM events e JOIN customer c ON c.c_custkey = e.user_id
         |WHERE e.event_type IN ('purchase', 'signup')""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_stream_static_join",
           Tables.events(s, d)
             .filter(col("event_type").isin("purchase", "signup"))
             .select(col("event_id"), col("user_id"), col("event_type"))
             .as[(Long, Long, String)])
-          .sortBy(_._1)
-        val static = Tables.customer(ss, d)
-          .select(col("c_custkey"), col("c_mktsegment").as("segment"))
-        val src = MemoryStream[(Long, Long, String)]
-        val out = src.toDF().toDF("event_id", "user_id", "event_type")
-          .join(broadcast(static), col("c_custkey") === col("user_id"))
-          .select("event_id", "user_id", "event_type", "segment")
-        val query = out.writeStream
-          .format("memory").queryName("events_stream_static_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_stream_static_sink")
+          .sortBy(_._1).toSeq
+        replay(s, MemorySink("events_stream_static_sink"), halves(collected)) { (ss, in) =>
+          val static = Tables.customer(ss, d)
+            .select(col("c_custkey"), col("c_mktsegment").as("segment"))
+          in.head.toDF("event_id", "user_id", "event_type")
+            .join(broadcast(static), col("c_custkey") === col("user_id"))
+            .select("event_id", "user_id", "event_type", "segment")
+        }
     },
 
     // ABSENCE as a batch anti interval join — clicks with NO purchase
@@ -1550,11 +1361,9 @@ object Relational {
     // early, late, or twice fails the hash.
     sql("events_absence_stream", absenceOracle) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{streamAbsenceAlerts, PatIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_absence_stream",
           Tables.events(s, d)
@@ -1562,24 +1371,11 @@ object Relational {
             .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
             .as[(Long, java.sql.Timestamp, String, Long)])
         val ev = collected.map(r => PatIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[PatIn]
-        val out = streamAbsenceAlerts(src.toDS(), delay = "1 second",
-          windowUs = 86400000000L)
-        val query = out.writeStream
-          .format("memory").queryName("events_absence_stream_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData(PatIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "click", -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_absence_stream_sink").filter(col("user_id") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        replay(s, MemorySink("events_absence_stream_sink"), halves(ev, PatIn(-1L, FlushTs, "click", -1L)),
+            tws = false) {
+          (_, in) => streamAbsenceAlerts(in.head, delay = "1 second", windowUs = 86400000000L)
+        }.filter(col("user_id") >= 0)
     },
 
     // The SAME absence view through Spark 4's transformWithState —
@@ -1590,13 +1386,9 @@ object Relational {
     // StatefulProcessor, or the hash fails.
     sql("events_absence_tws", absenceOracle) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.StreamingAnalytics.{twsAbsenceAlerts, PatIn}
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          FlushTs, MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_absence_tws",
           Tables.events(s, d)
@@ -1604,24 +1396,11 @@ object Relational {
             .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
             .as[(Long, java.sql.Timestamp, String, Long)])
         val ev = collected.map(r => PatIn(r._1, r._2, r._3, r._4))
-          .sortBy(e => (e.ts.getTime, e.id))
-        val src = MemoryStream[PatIn]
-        val out = twsAbsenceAlerts(src.toDS(), delay = "1 second",
-          windowUs = 86400000000L)
-        val query = out.writeStream
-          .format("memory").queryName("events_absence_tws_sink")
-          .outputMode("append").start()
-        try {
-          val (first, second) = ev.splitAt(ev.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-          src.addData(PatIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-            "click", -1L))
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_absence_tws_sink").filter(col("user_id") >= 0)
+          .sortBy(e => (e.ts.getTime, e.id)).toSeq
+        replay(s, MemorySink("events_absence_tws_sink"), halves(ev, PatIn(-1L, FlushTs, "click", -1L)),
+            tws = true) {
+          (_, in) => twsAbsenceAlerts(in.head, delay = "1 second", windowUs = 86400000000L)
+        }.filter(col("user_id") >= 0)
     },
 
     // RFM SEGMENTATION — the classic customer-value matrix (recency /

@@ -346,32 +346,20 @@ object TimeSeries {
         hashSql = "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT",
         k = 64, estAlias = "approx_users")) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replaySession}
-        val ss = replaySession(s)
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          MemorySink}
         import s.implicits._
         val collected = boundedReplayCollect("events_kmv_stream",
           Tables.events(s, d)
             .select(expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"))
             .as[(Long, Long)])
-        val src = MemoryStream[(Long, Long)]
-        val out = src.toDF().toDF("day", "user_id")
-          .groupBy(col("day"))
-          .agg(graft.functions.KmvDistinctAgg.kmv_distinct(
-            conv(substring(md5(to_binary(col("user_id").cast("string"), lit("utf-8"))), 1, 15),
-              16, 10).cast("long"), 64).as("approx_users"))
-        val query = out.writeStream
-          .format("memory").queryName("events_kmv_stream_sink")
-          .outputMode("complete").start()
-        try {
-          val (first, second) = collected.splitAt(collected.length / 2)
-          src.addData(first)
-          query.processAllAvailable()
-          src.addData(second)
-          query.processAllAvailable()
-        } finally query.stop()
-        ss.table("events_kmv_stream_sink")
+        replay(s, MemorySink("events_kmv_stream_sink", "complete"), halves(collected.toSeq)) {
+          (_, in) => in.head.toDF("day", "user_id")
+            .groupBy(col("day"))
+            .agg(graft.functions.KmvDistinctAgg.kmv_distinct(
+              conv(substring(md5(to_binary(col("user_id").cast("string"), lit("utf-8"))), 1, 15),
+                16, 10).cast("long"), 64).as("approx_users"))
+        }
     },
 
     // SKETCH ROLLUP — partial aggregation as DATA: daily KMV sketches

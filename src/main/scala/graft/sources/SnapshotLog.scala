@@ -1612,36 +1612,23 @@ object SnapshotLog {
     // once — batch boundaries cannot leak into table state.
     sql("snapshot_stream_ingest", appliedChangesSql) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val ss = s.newSession()
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, replay, BatchSink}
+        import s.implicits._
         val root = java.nio.file.Files.createTempDirectory("graft_snap_stream").toString
-        val orders = Tables.orders(ss, d).select(("o_orderkey" +: payload).map(col): _*)
+        val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
-        val batch1 = updateBatch(orders)
-        val batch2 = deleteInsertBatch(orders)
-        import ss.implicits._
-        val enc = org.apache.spark.sql.Encoders
-          .product[(Long, String, Long, String, Double)]
-        val ms = MemoryStream[(Long, String, Long, String, Double)]
-        val query = ms.toDS()
-          .toDF("o_orderkey", "op", "o_custkey", "o_orderstatus", "o_totalprice")
-          .writeStream
-          .foreachBatch { (changes: DataFrame, batchId: Long) =>
-            commitMerge(ss, root, batchId.toInt + 1, "o_orderkey", payload, changes)
-          }
-          .start()
-        try {
-          import graft.streaming.IncrementalQueries.boundedReplayCollect
-          for (b <- Seq(batch1, batch2)) {
-            ms.addData(boundedReplayCollect("snapshot_stream_ingest",
-              b.as[(Long, String, Long, String, Double)](enc)))
-            query.processAllAvailable()
-          }
-        } finally query.stop()
-        readVersion(ss, root, 2)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-            snap2(col("o_totalprice")).as("o_totalprice"))
+        val batches = Seq(updateBatch(orders), deleteInsertBatch(orders)).map { b =>
+          Seq(boundedReplayCollect("snapshot_stream_ingest",
+            b.as[(Long, String, Long, String, Double)]).toSeq)
+        }
+        replay(s, BatchSink("append",
+            (ss, changes, batchId) =>
+              commitMerge(ss, root, batchId.toInt + 1, "o_orderkey", payload, changes),
+            readVersion(_, root, 2)), batches) {
+          (_, in) => in.head.toDF("o_orderkey", "op", "o_custkey", "o_orderstatus",
+            "o_totalprice")
+        }.select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          snap2(col("o_totalprice")).as("o_totalprice"))
     },
 
     // TIME TRAVEL BY TIMESTAMP — `FOR TIMESTAMP AS OF` between the
@@ -1719,41 +1706,26 @@ object SnapshotLog {
         | CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_e2
         |FROM orders GROUP BY o_custkey""".stripMargin) {
       (s, d) =>
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val ss = s.newSession()
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+        import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
+          BatchSink}
+        import s.implicits._
         val root = java.nio.file.Files.createTempDirectory("graft_snap_gold").toString
         val goldPayload = Seq("n_orders", "total_e2")
-        import ss.implicits._
-        val enc = org.apache.spark.sql.Encoders.product[(Long, Long, Double)]
-        val rows = graft.streaming.IncrementalQueries.boundedReplayCollect(
-          "snapshot_stream_gold",
-          Tables.orders(ss, d).select(col("o_orderkey"), col("o_custkey"),
-            col("o_totalprice")).as[(Long, Long, Double)](enc))
-          .sortBy(_._1)
-        val ms = MemoryStream[(Long, Long, Double)]
-        val agg = ms.toDS().toDF("o_orderkey", "o_custkey", "o_totalprice")
-          .groupBy(col("o_custkey"))
-          .agg(count(lit(1)).as("n_orders"),
-            sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")).as("total_e2"))
-        val query = agg.writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (batchId == 0L) commitInitial(batch, root, "o_custkey")
-            else commitMerge(ss, root, batchId.toInt, "o_custkey", goldPayload,
-              batch.withColumn("op", lit("U"))
-                .select(("o_custkey" +: "op" +: goldPayload).map(col): _*))
-          }
-          .start()
-        try {
-          val (first, second) = rows.splitAt(rows.length / 2)
-          ms.addData(first)
-          query.processAllAvailable()
-          ms.addData(second)
-          query.processAllAvailable()
-        } finally query.stop()
-        readVersion(ss, root, 1)
-          .select(col("o_custkey"), col("n_orders"), col("total_e2"))
+        val rows = boundedReplayCollect("snapshot_stream_gold",
+          Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+            col("o_totalprice")).as[(Long, Long, Double)])
+          .sortBy(_._1).toSeq
+        def commit(ss: SparkSession, batch: DataFrame, batchId: Long): Unit =
+          if (batchId == 0L) commitInitial(batch, root, "o_custkey")
+          else commitMerge(ss, root, batchId.toInt, "o_custkey", goldPayload,
+            batch.withColumn("op", lit("U"))
+              .select(("o_custkey" +: "op" +: goldPayload).map(col): _*))
+        replay(s, BatchSink("update", commit, readVersion(_, root, 1)), halves(rows)) {
+          (_, in) => in.head.toDF("o_orderkey", "o_custkey", "o_totalprice")
+            .groupBy(col("o_custkey"))
+            .agg(count(lit(1)).as("n_orders"),
+              sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")).as("total_e2"))
+        }.select(col("o_custkey"), col("n_orders"), col("total_e2"))
     },
 
     // COMPACTION (OPTIMIZE) — rewrite a version's live file set into a

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
 import graft.{GraftQuery, Tables}
@@ -35,6 +35,14 @@ import graft.streaming.DeltaEngine._
   *    ([[RecursiveSql]]), hand-built [[DeltaEngine]] trees such as
   *    `incremental_q10`, CDC/JSON/file sources, and the format round
   *    trips such as `cdc_roundtrip_lineitem`.
+  *
+  * How a continuous entry replays: every stream-gated entry, here and
+  * in the operator and source registries, feeds its micro-batches
+  * through [[replay]] (child session, fork-free checkpoints, one memory
+  * stream per source, a memory or `foreachBatch` sink); the changelog
+  * entries go through its [[Evt]] form, one micro-batch per changelog
+  * seq value. [[replay]]'s scaladoc names the two entries that replay
+  * by hand.
   *
   * Money folds in integer units (`revenue_e4` = 1e-4) so incremental
   * double-summation order can never drift from the decimal oracle.
@@ -102,6 +110,111 @@ object IncrementalQueries {
       s"$entry is a fixture-scale replay harness (<= $max rows); for production " +
         "data run the operator over a readStream source instead of a MemoryStream replay")
     collected
+  }
+
+  /** Where a [[replay]] writes its query's output. */
+  private[graft] sealed trait ReplaySink
+  /** The memory table `name`, written in `mode`; the replay returns the
+    * table as the child session reads it. */
+  private[graft] final case class MemorySink(name: String, mode: String = "append")
+      extends ReplaySink
+  /** `foreachBatch` in `mode`: each micro-batch goes to
+    * `write(child, batch, batchId)`; the replay returns `read(child)`. */
+  private[graft] final case class BatchSink(mode: String,
+      write: (SparkSession, DataFrame, Long) => Unit,
+      read: SparkSession => DataFrame) extends ReplaySink
+
+  /** The micro-batch replay harness every stream-gated entry runs
+    * through:
+    *  - opens a [[replaySession]] child and installs
+    *    [[LocalCheckpointFs]] on it, so no checkpoint write forks a
+    *    process; `tws` selects the RocksDB state store that
+    *    transformWithState requires, and `confs` are set after that;
+    *  - makes one memory stream per source (the width of a batch)
+    *    and hands their streams to `query`, with the child session;
+    *  - starts the query into `sink`, then feeds `batches` in order:
+    *    every non-empty source of a batch gets its rows, then the
+    *    batch is processed to completion (an all-empty batch is
+    *    skipped);
+    *  - stops the query, even on failure, and returns the sink's frame.
+    *
+    * Two entries replay by hand because their feed is not a list of
+    * batches: `snapshot_ingest_compact_ingest` compacts the table
+    * between its two batches, and `incremental_q10_filestream` reads a
+    * file source. */
+  private[graft] def replay[T: Encoder](s: SparkSession, sink: ReplaySink,
+      batches: Seq[Seq[Seq[T]]], tws: Boolean = false, confs: Map[String, String] = Map.empty)
+      (query: (SparkSession, Seq[Dataset[T]]) => Dataset[_]): DataFrame = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val ss = replaySession(s)
+    LocalCheckpointFs.install(ss)
+    if (tws) ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    confs.foreach { case (k, v) => ss.conf.set(k, v) }
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val sources = Seq.fill(batches.headOption.fold(0)(_.size))(MemoryStream[T])
+    require(batches.forall(_.size == sources.size), "every batch names each source once")
+    val writer = query(ss, sources.map(_.toDS())).toDF().writeStream
+    val running = sink match {
+      case MemorySink(name, mode) =>
+        writer.format("memory").queryName(name).outputMode(mode).start()
+      case BatchSink(mode, write, _) =>
+        writer.outputMode(mode)
+          .foreachBatch((batch: DataFrame, id: Long) => write(ss, batch, id)).start()
+    }
+    try batches.filter(_.exists(_.nonEmpty)).foreach { batch =>
+      sources.zip(batch).foreach { case (src, rows) => if (rows.nonEmpty) src.addData(rows) }
+      running.processAllAvailable()
+    } finally running.stop()
+    sink match {
+      case MemorySink(name, _) => ss.table(name)
+      case BatchSink(_, _, read) => read(ss)
+    }
+  }
+
+  /** The event time of a flush row: past every fixture event. */
+  private[graft] val FlushTs: java.sql.Timestamp = java.sql.Timestamp.valueOf("2030-01-01 00:00:00")
+
+  /** The batches of a one-source replay of time-ordered `rows`: the
+    * first half, the second half, then one batch per `flush` row (a
+    * far-future sentinel that moves the watermark past every real
+    * row, so append-mode state emits its tail). */
+  private[graft] def halves[T](rows: Seq[T], flush: T*): Seq[Seq[Seq[T]]] = {
+    val (first, second) = rows.splitAt(rows.length / 2)
+    (Seq(first, second) ++ flush.map(Seq(_))).map(Seq(_))
+  }
+
+  /** [[replay]] of [[Evt]] changelogs for `entry` into `sink`. Each
+    * side is a map of relation changelogs, and each changelog is one
+    * source; every distinct `seq` value, in order, is one micro-batch,
+    * fed to every source that has events at it. `run` builds the leaf
+    * deltas from the sides' streams. */
+  private def replayChangelogs(s: SparkSession, entry: String, sink: ReplaySink,
+      sides: Seq[Map[String, Dataset[Evt]]], tws: Boolean = false,
+      confs: Map[String, String] = Map.empty)
+      (run: Seq[Map[String, Dataset[Evt]]] => Dataset[Evt]): DataFrame = {
+    import s.implicits._
+    val rels = sides.map(_.keys.toSeq)
+    val logs = for ((side, i) <- sides.zipWithIndex; rel <- rels(i)) yield {
+      val tag = if (sides.size == 1) rel else s"$i.$rel"
+      boundedReplayCollect(s"$entry($tag)", side(rel)).toSeq
+    }
+    val seqs = logs.flatten.map(_.seq).distinct.sorted
+    replay(s, sink, seqs.map(q => logs.map(_.filter(_.seq == q))), tws, confs) {
+      (_, streams) =>
+        val next = streams.iterator
+        run(rels.map(_.map(_ -> next.next()).toMap))
+    }
+  }
+
+  /** [[replayChangelogs]] into the memory sink `sinkName`, read back as
+    * leaf deltas. */
+  private def replayLeaf(s: SparkSession, sinkName: String,
+      sides: Seq[Map[String, Dataset[Evt]]], tws: Boolean = false,
+      confs: Map[String, String] = Map.empty)
+      (run: Seq[Map[String, Dataset[Evt]]] => Dataset[Evt]): Dataset[Evt] = {
+    import s.implicits._
+    replayChangelogs(s, sinkName, MemorySink(sinkName), sides, tws, confs)(run).as[Evt]
   }
 
   private val dateLo = "1996-01-01"
@@ -291,12 +404,14 @@ object IncrementalQueries {
     q10Aggregate(runBatch(q10Tree, logs))
   }
 
-  /** The Q10 signed-delta fold (shared by the parquet-changelog and
-    * CDC-text paths): rev_e4 = round(extprice * (1-disc) * 1e4),
-    * exact because the true product has 4 decimals (2dp × 2dp). */
-  private def q10Aggregate(leaf: Dataset[Evt]): DataFrame = {
-    val df = leaf.toDF()
-    df.select(
+  /** The Q10 signed-delta fold, one row per group with its net
+    * `revenue_e4` and `n_rows`: rev_e4 = round(extprice * (1-disc) *
+    * 1e4), exact because the true product has 4 decimals (2dp × 2dp).
+    * Over a whole changelog the survivors are the groups with
+    * `n_rows > 0` ([[q10Aggregate]]); over one micro-batch a group's
+    * net may be zero or negative, and a sink must still see it. */
+  private def q10Fold(leaf: DataFrame): DataFrame =
+    leaf.select(
         (col("tag") * col("mult")).as("sign"),
         canonCol("c_custkey").cast(LongType).as("c_custkey"),
         canonCol("c_name").as("c_name"),
@@ -308,8 +423,10 @@ object IncrementalQueries {
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
       .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
         sum(col("sign")).cast(LongType).as("n_rows"))
-      .filter(col("n_rows") > 0)
-  }
+
+  /** The maintained Q10 view: the [[q10Fold]] groups that survive. */
+  private def q10Aggregate(leaf: Dataset[Evt]): DataFrame =
+    q10Fold(leaf.toDF()).filter(col("n_rows") > 0)
 
   /** A SECOND join tree — region→nation→supplier→lineitem — through
     * the same engine: the AJU capability is generic over NodeSpec
@@ -650,76 +767,40 @@ object IncrementalQueries {
         max(col("total")).as("n_cust"))
   }
 
+  /** [[replayLeaf]] of one changelog map through
+    * [[DeltaEngine.runStreamTree]] (or, with `tws`,
+    * [[DeltaEngine.runStreamTreeTws]]): each changelog seq value is its
+    * own micro-batch, node state carries across batches in the state
+    * store, and the result is the streamed leaf deltas. `eventTtl`
+    * adds the session confs [[DeltaEngine.EventTimeTtl]] requires:
+    * per-stage re-derived event times trip the blanket chained-stateful
+    * check, and only some changelogs carry the ts column, so the
+    * combined watermark takes the max. */
+  private def replayStream(s: SparkSession, stages: Seq[Stage],
+      logs: Map[String, Dataset[Evt]], sinkName: String,
+      eventTtl: Option[DeltaEngine.EventTimeTtl] = None,
+      tws: Boolean = false): Dataset[Evt] = {
+    val ttlConfs = if (eventTtl.isEmpty) Map.empty[String, String] else Map(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
+    replayLeaf(s, sinkName, Seq(logs), tws, ttlConfs) { in =>
+      if (tws) DeltaEngine.runStreamTreeTws(stages, in.head)
+      else runStreamTree(stages, in.head, eventTtl = eventTtl)
+    }
+  }
+
   /** The CONTINUOUS engine itself behind the correctness gate — not
     * its batch simulation: the q10 changelog replays through
-    * [[DeltaEngine.runStream]] as real Structured Streaming
+    * [[DeltaEngine.runStreamTree]] as real Structured Streaming
     * micro-batches (inserts in batch 1, deletes in batch 2, node state
     * carried across batches in the state store), the leaf deltas land
     * in a memory sink, and the same signed fold produces the
     * maintained aggregate. The oracle is incremental_q10's plain-SQL
     * survivors query, so a streaming-vs-batch divergence fails the
-    * hash. MemoryStream is the replay harness (the production shape is
+    * hash. [[replay]] is the harness (the production shape is
     * readStream + foreachBatch upsert, StreamingSpec covers recovery);
-    * the collect() here materializes the fixture changelog for
-    * addData, not an engine step. */
-  /** Shared micro-batch replay harness for the gated stream entries:
-    * runs `stages` through [[DeltaEngine.runStreamTree]] in a CHILD
-    * session, replaying each changelog seq value as its own
-    * micro-batch (state carries across batches in the state store),
-    * and returns the collected leaf deltas.
-    *
-    * The child session is sized to the micro-batch volume: chained
-    * stateful operators pin ONE state-store instance per shuffle
-    * partition per operator per micro-batch — at replay scale (two
-    * small batches) those state commits dominate the wall clock
-    * (8 partitions: measured 16.4 s → 8.3 s at sf0.1) without
-    * touching the outer session's batch-sized setting. Production
-    * guidance is unchanged: size state partitions to the data. */
-  private def replayStream(s: SparkSession, stages: Seq[Stage],
-      logs0: Map[String, Dataset[Evt]], sinkName: String,
-      eventTtl: Option[DeltaEngine.EventTimeTtl] = None,
-      tws: Boolean = false): Dataset[Evt] = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(s)
-    if (tws) // transformWithState's documented store requirement
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (eventTtl.isDefined) {
-      // the EventTimeTtl session requirements (see its scaladoc):
-      // per-stage re-derived event times trip the blanket chained-
-      // stateful heuristic, and only some changelogs carry the ts
-      // column, so the combined watermark must take the max
-      ss.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-      ss.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-    }
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
-    val logs = logs0.view
-      .map { case (rel, ds) =>
-        rel -> boundedReplayCollect(s"$sinkName($rel)", ds).toSeq }
-      .toMap
-    val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val streamIn = streams.map { case (r, ms) => r -> ms.toDS() }
-    val leaf =
-      if (tws) DeltaEngine.runStreamTreeTws(stages, streamIn)
-      else runStreamTree(stages, streamIn, eventTtl = eventTtl)
-    val query = leaf.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      // replay the changelogs' actual seq values in order, one
-      // micro-batch per seq, instead of assuming {0, 1}
-      logs.values.flatten.map(_.seq).toSeq.distinct.sorted.foreach { seq =>
-        streams.foreach { case (rel, ms) =>
-          val evs = logs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    ss.table(sinkName).as[Evt](implicitly)
-  }
-
+    * its collect materializes the fixture changelog, not an engine
+    * step. */
   def incrementalQ10Stream(s: SparkSession, dir: String): DataFrame =
     q10Aggregate(replayStream(s, chainStages(q10Tree), q10Changelogs(s, dir),
       "incremental_q10_stream_leaf"))
@@ -751,82 +832,47 @@ object IncrementalQueries {
     * snapshot's readers use); the fixture reads the small table
     * whole. */
   def incrementalQ10SnapshotSink(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.sources.SnapshotLog
-    val ss = replaySession(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_q10_snapsink").toString
-    val logs = q10Changelogs(ss, dir).view.map { case (rel, ds) =>
-      rel -> boundedReplayCollect(s"incremental_q10_snapshot_sink($rel)", ds).toSeq }
-      .toMap
-    val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val leaf = runStreamTree(chainStages(q10Tree),
-      streams.map { case (r, ms) => r -> ms.toDS() })
     val goldPayload = Seq("c_name", "c_acctbal", "n_name", "revenue_e4", "n_rows")
     val version = new java.util.concurrent.atomic.AtomicInteger(-1)
-    def deltaAgg(batch: Dataset[Evt]): DataFrame = {
-      batch.toDF().select(
-          (col("tag") * col("mult")).as("sign"),
-          canonCol("c_custkey").cast("long").as("c_custkey"),
-          canonCol("c_name").as("c_name"),
-          canonCol("c_acctbal").cast("double").as("c_acctbal"),
-          canonCol("n_name").as("n_name"),
-          round(canonCol("l_extendedprice").cast("double") *
-            (lit(1.0) - canonCol("l_discount").cast("double")) * 10000, 0)
-            .cast("long").as("rev_e4"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(sum(col("sign") * col("rev_e4")).as("d_rev"),
-          sum(col("sign")).cast("long").as("d_n"))
+    def commit(ss: SparkSession, batch: DataFrame, batchId: Long): Unit = {
+      val deltas = q10Fold(batch).localCheckpoint(true)
+      if (!deltas.isEmpty) {
+        if (version.get < 0) {
+          require(deltas.filter(col("n_rows") <= 0).isEmpty,
+            "first batch must be pure assertion")
+          SnapshotLog.commitInitial(deltas, root, "c_custkey")
+          version.set(0)
+        } else {
+          val cur = SnapshotLog.readVersion(ss, root, version.get)
+            .select(col("c_custkey"), col("revenue_e4").as("cur_rev"),
+              col("n_rows").as("cur_n"))
+          val combined = deltas.join(cur, Seq("c_custkey"), "left")
+            .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
+              (coalesce(col("cur_rev"), lit(0L)) + col("revenue_e4")).as("revenue_e4"),
+              (coalesce(col("cur_n"), lit(0L)) + col("n_rows")).as("n_rows"))
+          require(combined.filter(col("n_rows") < 0).isEmpty,
+            "a group retracted below zero — delta fold diverged")
+          val changes = combined.select(
+            col("c_custkey"),
+            when(col("n_rows") === 0, "D").otherwise("U").as("op"),
+            col("c_name"), col("c_acctbal"), col("n_name"),
+            col("revenue_e4"), col("n_rows"))
+          SnapshotLog.commitMerge(ss, root, version.get + 1, "c_custkey",
+            goldPayload, changes)
+          version.incrementAndGet()
+        }
+      }
     }
-    val query = leaf.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Evt], _: Long) =>
-        val deltas = deltaAgg(batch).localCheckpoint(true)
-        if (!deltas.isEmpty) {
-          if (version.get < 0) {
-            require(deltas.filter(col("d_n") <= 0).isEmpty,
-              "first batch must be pure assertion")
-            SnapshotLog.commitInitial(
-              deltas.select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-                col("n_name"), col("d_rev").as("revenue_e4"), col("d_n").as("n_rows")),
-              root, "c_custkey")
-            version.set(0); ()
-          } else {
-            val cur = SnapshotLog.readVersion(ss, root, version.get)
-              .select(col("c_custkey"), col("revenue_e4").as("cur_rev"),
-                col("n_rows").as("cur_n"))
-            val combined = deltas.join(cur, Seq("c_custkey"), "left")
-              .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
-                (coalesce(col("cur_rev"), lit(0L)) + col("d_rev")).as("revenue_e4"),
-                (coalesce(col("cur_n"), lit(0L)) + col("d_n")).as("n_rows"))
-            require(combined.filter(col("n_rows") < 0).isEmpty,
-              "a group retracted below zero — delta fold diverged")
-            val changes = combined.select(
-              col("c_custkey"),
-              when(col("n_rows") === 0, "D").otherwise("U").as("op"),
-              col("c_name"), col("c_acctbal"), col("n_name"),
-              col("revenue_e4"), col("n_rows"))
-            SnapshotLog.commitMerge(ss, root, version.get + 1, "c_custkey",
-              goldPayload, changes)
-            version.incrementAndGet(); ()
-          }
-        }
-      }
-      .start()
-    try {
-      logs.values.flatten.map(_.seq).toSeq.distinct.sorted.foreach { seq =>
-        streams.foreach { case (rel, ms) =>
-          val evs = logs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    require(version.get >= 1, s"expected at least two commits, got v${version.get}")
-    SnapshotLog.readVersion(ss, root, version.get)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
-        col("revenue_e4"), col("n_rows"))
+    def latest(ss: SparkSession): DataFrame = {
+      require(version.get >= 1, s"expected at least two commits, got v${version.get}")
+      SnapshotLog.readVersion(ss, root, version.get)
+        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
+          col("revenue_e4"), col("n_rows"))
+    }
+    replayChangelogs(s, "incremental_q10_snapshot_sink", BatchSink("append", commit, latest),
+      Seq(q10Changelogs(s, dir)))(in => runStreamTree(chainStages(q10Tree), in.head))
   }
 
   /** [[incrementalQ10Stream]] with EVENT-TIME TTL enabled — the
@@ -1103,36 +1149,11 @@ object IncrementalQueries {
   private def streamUnionDistinct(s: SparkSession,
       c: SqlCompiler.CompiledUnionDistinct, dir: String,
       deletes: Map[String, org.apache.spark.sql.Column], sinkName: String,
-      tws: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(s)
-    if (tws) ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
-    val sides = c.branches.zipWithIndex.map { case (cc, i) =>
-      val logs = cc.sourceChangelogs(s, dir, deletes, filtered = false)
-        .view.map { case (rel, ds) =>
-          rel -> boundedReplayCollect(s"$sinkName(b$i.$rel)", ds).toSeq }.toMap
-      (logs, logs.map { case (rel, _) => rel -> MemoryStream[Evt] })
-    }
-    val leaf = c.runStream(sides.map(_._2.view.mapValues(_.toDS()).toMap), tws = tws)
-    val query = leaf.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      val seqs = sides.flatMap(_._1.values.flatten.map(_.seq)).distinct.sorted
-      seqs.foreach { seq =>
-        sides.foreach { case (logs, streams) =>
-          streams.foreach { case (rel, ms) =>
-            val evs = logs(rel).filter(_.seq == seq)
-            if (evs.nonEmpty) ms.addData(evs)
-          }
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    c.present(ss.table(sinkName).as[Evt])
-  }
+      tws: Boolean = false): DataFrame =
+    c.present(replayLeaf(s, sinkName,
+        c.branches.map(_.sourceChangelogs(s, dir, deletes, filtered = false)), tws) {
+      c.runStream(_, tws = tws)
+    })
 
   /** Bag branches (no DISTINCT): n_name once per qualifying customer
     * vs once per qualifying supplier — INTERSECT ALL keeps min of the
@@ -1158,40 +1179,11 @@ object IncrementalQueries {
     * one sink; the bag formula evaluates at presentation. */
   private def runBagSetOpStreamed(s: SparkSession, dir: String, opSql: String,
                                   sinkName: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
     val c = SqlCompiler.compileBagSetOp(s, dir, opSql)
-    def side(cc: SqlCompiler.Compiled, tag: String)
-        : (Map[String, Seq[Evt]], Map[String, MemoryStream[Evt]]) = {
-      val logs = cc.sourceChangelogs(s, dir, setOpDeletes, filtered = false)
-        .view.map { case (rel, ds) =>
-          rel -> boundedReplayCollect(s"$sinkName($tag.$rel)", ds).toSeq }.toMap
-      (logs, logs.map { case (rel, _) => rel -> MemoryStream[Evt] })
-    }
-    val (lLogs, lStreams) = side(c.left, "l")
-    val (rLogs, rStreams) = side(c.right, "r")
-    val leaf = c.runStream(lStreams.view.mapValues(_.toDS()).toMap,
-      rStreams.view.mapValues(_.toDS()).toMap)
-    val query = leaf.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      val seqs = (lLogs.values.flatten ++ rLogs.values.flatten)
-        .map(_.seq).toSeq.distinct.sorted
-      seqs.foreach { seq =>
-        lStreams.foreach { case (rel, ms) =>
-          val evs = lLogs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        rStreams.foreach { case (rel, ms) =>
-          val evs = rLogs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    c.present(ss.table(sinkName).as[Evt])
+    c.present(replayLeaf(s, sinkName, Seq(c.left, c.right)
+        .map(_.sourceChangelogs(s, dir, setOpDeletes, filtered = false))) { in =>
+      c.runStream(in(0), in(1))
+    })
   }
 
   def incrementalSqlIntersectAllStream(s: SparkSession, dir: String): DataFrame =
@@ -1263,7 +1255,6 @@ object IncrementalQueries {
   def incrementalSqlAsOfStream(s: SparkSession, dir: String,
       sqlText: String = asofSql,
       sinkName: String = "incremental_sql_asof_stream"): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import StreamingAnalytics.{streamAsOfJoin, AsOfIn}
     val c = SqlCompiler.compileAsOf(s, sqlText)
     require(c.keyPairs.size == 1 && c.leftOuter,
@@ -1276,8 +1267,6 @@ object IncrementalQueries {
       case (true, src, _) if src != rKey && src != c.rightTs => src
     }.getOrElse(sys.error("no right value column in the select list"))
     val rels = asofInputs(s, dir)
-    val ss = replaySession(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     import s.implicits._
     val feed = rels(c.leftRel)
         .select(col(lKey).cast("long"), col(c.leftTs),
@@ -1289,25 +1278,12 @@ object IncrementalQueries {
     val collected = boundedReplayCollect(sinkName, feed)
     val ev = collected.map(r => AsOfIn(r._1, r._2, r._3, r._4))
       .sortBy(e => (e.ts.getTime, e.id))
-    val src = MemoryStream[AsOfIn]
-    val out = streamAsOfJoin(src.toDS(), delay = "1 second",
-      toleranceMicros = c.toleranceMicros)
-    val query = out.writeStream
-      .format("memory").queryName(sinkName + "_sink")
-      .outputMode("append").start()
-    try {
-      val (first, second) = ev.splitAt(ev.length / 2)
-      src.addData(first)
-      query.processAllAvailable()
-      src.addData(second)
-      query.processAllAvailable()
-      // sentinel: unused key far past every event, flushes the tail
-      src.addData(AsOfIn(-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        isRight = false, id = -1L))
-      query.processAllAvailable()
-    } finally query.stop()
-    ss.table(sinkName + "_sink")
-      .filter(col("key") >= 0)
+    // sentinel: unused key far past every event, flushes the tail
+    val sentinel = AsOfIn(-1L, FlushTs, isRight = false, id = -1L)
+    val joined = replay(s, MemorySink(sinkName + "_sink"), halves(ev.toSeq, sentinel)) {
+      (_, in) => streamAsOfJoin(in.head, delay = "1 second", toleranceMicros = c.toleranceMicros)
+    }
+    joined.filter(col("key") >= 0)
       .select(c.items.map {
         case (false, src, out0) if src == lKey => col("key").as(out0)
         case (false, src, out0) if src == c.leftTs => col("left_ts").as(out0)
@@ -1365,43 +1341,11 @@ object IncrementalQueries {
     * EXCEPT result (and out of an INTERSECT) through held state. */
   private def runSetOpStreamed(s: SparkSession, dir: String, opSql: String,
                                sinkName: String, tws: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(s)
-    if (tws) // transformWithState's documented store requirement
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
     val c = SqlCompiler.compileSetOp(s, dir, opSql)
-    def side(cc: SqlCompiler.Compiled, tag: String)
-        : (Map[String, Seq[Evt]], Map[String, MemoryStream[Evt]]) = {
-      val logs = cc.sourceChangelogs(s, dir, setOpDeletes, filtered = false)
-        .view.map { case (rel, ds) =>
-          rel -> boundedReplayCollect(s"$sinkName($tag.$rel)", ds).toSeq }.toMap
-      (logs, logs.map { case (rel, _) => rel -> MemoryStream[Evt] })
-    }
-    val (lLogs, lStreams) = side(c.left, "l")
-    val (rLogs, rStreams) = side(c.right, "r")
-    val leaf = c.runStream(lStreams.view.mapValues(_.toDS()).toMap,
-      rStreams.view.mapValues(_.toDS()).toMap, tws = tws)
-    val query = leaf.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      val seqs = (lLogs.values.flatten ++ rLogs.values.flatten)
-        .map(_.seq).toSeq.distinct.sorted
-      seqs.foreach { seq =>
-        lStreams.foreach { case (rel, ms) =>
-          val evs = lLogs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        rStreams.foreach { case (rel, ms) =>
-          val evs = rLogs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    c.present(ss.table(sinkName).as[Evt])
+    c.present(replayLeaf(s, sinkName, Seq(c.left, c.right)
+        .map(_.sourceChangelogs(s, dir, setOpDeletes, filtered = false)), tws) { in =>
+      c.runStream(in(0), in(1), tws = tws)
+    })
   }
 
   def incrementalSqlIntersectStream(s: SparkSession, dir: String): DataFrame =
@@ -1499,35 +1443,11 @@ object IncrementalQueries {
       deletes: Map[String, org.apache.spark.sql.Column], sinkName: String,
       tws: Boolean = false,
       transformLogs: Map[String, Dataset[Evt]] => Map[String, Dataset[Evt]] = identity)
-      : DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(s)
-    if (tws) // transformWithState's documented store requirement
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import s.implicits._
-    val logs = transformLogs(c.sourceChangelogs(s, dir, deletes, filtered = false))
-      .view
-      .map { case (rel, ds) =>
-        rel -> boundedReplayCollect(s"$sinkName($rel)", ds).toSeq }
-      .toMap
-    val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val leaf = c.runStream(streams.map { case (r, ms) => r -> ms.toDS() }, tws = tws)
-    val query = leaf.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      logs.values.flatten.map(_.seq).toSeq.distinct.sorted.foreach { seq =>
-        streams.foreach { case (rel, ms) =>
-          val evs = logs(rel).filter(_.seq == seq)
-          if (evs.nonEmpty) ms.addData(evs)
-        }
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    c.aggregate(ss.table(sinkName).toDF())
-  }
+      : DataFrame =
+    c.aggregate(replayLeaf(s, sinkName,
+        Seq(transformLogs(c.sourceChangelogs(s, dir, deletes, filtered = false))), tws) { in =>
+      c.runStream(in.head, tws = tws)
+    }.toDF())
 
   /** WITH (CTE) query through the CONTINUOUS engine: every CTE's
     * maintained view replays as its own streaming query
@@ -1809,7 +1729,7 @@ object IncrementalQueries {
     val query = leaf.writeStream
       .foreachBatch { (batch: Dataset[Evt], batchId: Long) =>
         val partial = boundedReplayCollect(s"incremental_q10_filestream(batch $batchId)",
-          q10BatchPartial(batch))
+          q10Fold(batch.toDF()))
         partial.foreach { r =>
           val key = r.getLong(0)
           val (dRev, dCnt) = (r.getLong(4), r.getLong(5))
@@ -1829,24 +1749,6 @@ object IncrementalQueries {
     import ss.implicits._
     table.toSeq.map { case (k, (nm, ab, nn, rev, cnt)) => (k, nm, ab, nn, rev, cnt) }
       .toDF("c_custkey", "c_name", "c_acctbal", "n_name", "revenue_e4", "n_rows")
-  }
-
-  /** One micro-batch's per-group signed partial of the Q10 fold (no
-    * survivor filter — a group at net zero must still reach the upsert
-    * to delete its row). */
-  private def q10BatchPartial(leaf: Dataset[Evt]): DataFrame = {
-    leaf.toDF().select(
-        (col("tag") * col("mult")).cast(LongType).as("sign"),
-        canonCol("c_custkey").cast(LongType).as("c_custkey"),
-        canonCol("c_name").as("c_name"),
-        canonCol("c_acctbal").cast(DoubleType).as("c_acctbal"),
-        canonCol("n_name").as("n_name"),
-        round(canonCol("l_extendedprice").cast(DoubleType) *
-          (lit(1.0) - canonCol("l_discount").cast(DoubleType)) * 10000, 0)
-          .cast(LongType).as("rev_e4"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
-        sum(col("sign")).as("n_rows"))
   }
 
   /** Per-event running-output parity with the reference's A1 (one
