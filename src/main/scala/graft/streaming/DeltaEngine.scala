@@ -701,7 +701,7 @@ object DeltaEngine {
       pairStage: Option[String] = None,
       keyOnlyRows: Boolean = false)
 
-  /** A root→leaf chain as stages — the original [[runBatch]] shape. */
+  /** A root→leaf chain of node specs as stages, each the parent of the next. */
   def chainStages(specs: Seq[NodeSpec]): Seq[Stage] =
     specs.zipWithIndex.map { case (sp, i) =>
       Stage(sp.relation, sp,
@@ -790,7 +790,7 @@ object DeltaEngine {
       .as[Evt]
   }
 
-  /** Per-node volume counters from one [[runBatch]] execution —
+  /** Per-node volume counters from one [[runTree]] execution —
     * `events` is what entered the node's fold (own + parent deltas),
     * `emitted` what it sent downstream. The events/emitted ratio per
     * hop is the first thing to read when a tree is slow or skewed at
@@ -804,16 +804,6 @@ object DeltaEngine {
   final case class NodeStats(relation: String,
                              events: org.apache.spark.util.LongAccumulator,
                              emitted: org.apache.spark.util.LongAccumulator)
-
-  /** Run the tree in batch-simulation mode: each node groups the union
-    * of the parent's deltas and the node's own changelog by the `key`
-    * column and folds each group ([[foldStage]]) — the exact
-    * micro-batch the streaming engine would process, replayed in one
-    * batch. Returns the leaf's signed join-result deltas.
-    */
-  def runBatch(specs: Seq[NodeSpec], changelogs: Map[String, Dataset[Evt]],
-               stats: Option[scala.collection.mutable.Buffer[NodeStats]] = None): Dataset[Evt] =
-    runTree(chainStages(specs), changelogs, stats)
 
   /** Assemble one stage's input event stream: its own changelog (base
     * relation or upstream emissions re-flagged), salted if configured,
@@ -910,9 +900,11 @@ object DeltaEngine {
         })
   }
 
-  /** [[runBatch]] generalized to BRANCHING trees (see [[Stage]]): the
-    * stages run in order, each one grouped by its own FK (the `key`
-    * column — see [[foldStage]]); the last stage's emissions are the
+  /** Run the tree in batch-simulation mode: the stages run in order,
+    * each grouping the union of its parent's deltas and its own
+    * changelog by its FK (the `key` column) and folding each group
+    * ([[foldStage]]) — the exact micro-batch the streaming engine would
+    * process, replayed in one batch. The last stage's emissions are the
     * full join-result deltas. A stage output referenced by several
     * consumers (a shared dimension) is recomputed per consumer up to
     * Spark's exchange reuse — persist it upstream if that ever
@@ -1040,41 +1032,6 @@ object DeltaEngine {
     withTtl(state, events, identity[Evt], (_: Evt) => null, ttl, None)(
       streamStep(Liveness, spec, _, state))
 
-  /** Run the tree in Structured Streaming: a chain of
-    * `flatMapGroupsWithState` stages in Append mode (Spark supports
-    * chained stateful operators in append since 3.4). Emissions stay
-    * in the signed-delta domain end to end; sinks consume them via
-    * `foreachBatch` upsert (Spark's native sinks take no retractions —
-    * SURVEY.md §7 phase 3).
-    *
-    * Observability: each stage surfaces its keyed-state volume in
-    * `StreamingQueryProgress.stateOperators` (one entry per node,
-    * `numRowsTotal`/`numRowsUpdated`) — watch those to see a hop's
-    * state grow or a TTL hold it flat (spec-asserted in
-    * StreamingSpec). Cluster deployments should also set
-    * {{{
-    * spark.sql.streaming.stateStore.providerClass =
-    *   org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    * spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled = true
-    * }}}
-    * so per-key tree state spills to executor-local RocksDB instead of
-    * the JVM heap and checkpoints upload changelogs rather than full
-    * snapshots — at 100 TB the buffered-children state is far larger
-    * than any executor heap.
-    *
-    * Session setting: [[runStreamTree]] and [[runStreamTreeTws]] set
-    * `spark.sql.streaming.checkpointFileManagerClass` on the
-    * Dataset's session to [[LocalCheckpointFileManager]] (same files,
-    * `.crc`s and checksums, but `file:` checkpoints commit without
-    * launching `chmod`/`readlink` processes — see
-    * [[LocalCheckpointFs]]). A manager the caller has already set on
-    * the session wins and is left as set.
-    */
-  def runStream(specs: Seq[NodeSpec], changelogs: Map[String, Dataset[Evt]],
-                stateTtl: Option[java.time.Duration] = None,
-                eventTtl: Option[EventTimeTtl] = None): Dataset[Evt] =
-    runStreamTree(chainStages(specs), changelogs, stateTtl, eventTtl)
-
   /** [[Evt]] plus its parsed event time — the wire shape of a stage
     * input under an EVENT-TIME TTL: the analyzer requires the
     * watermarked column to be PRESENT at each flatMapGroupsWithState
@@ -1101,12 +1058,38 @@ object DeltaEngine {
       .as[EvtWithTs]
   }
 
-  /** [[runStream]] generalized to branching trees — the streaming twin
-    * of [[runTree]] (chained `flatMapGroupsWithState` stages in Append
-    * mode; Spark supports chained stateful operators in append since
+  /** Run the tree in Structured Streaming — the streaming twin of
+    * [[runTree]]: a chain of `flatMapGroupsWithState` stages in Append
+    * mode (Spark supports chained stateful operators in append since
     * 3.4). State is bounded by `stateTtl` (processing-time inactivity)
     * OR `eventTtl` (event-time horizon — see [[EventTimeTtl]]), not
-    * both. */
+    * both. Emissions stay in the signed-delta domain end to end; sinks
+    * consume them via `foreachBatch` upsert (Spark's native sinks take
+    * no retractions — SURVEY.md §7 phase 3).
+    *
+    * Observability: each stage surfaces its keyed-state volume in
+    * `StreamingQueryProgress.stateOperators` (one entry per node,
+    * `numRowsTotal`/`numRowsUpdated`) — watch those to see a hop's
+    * state grow or a TTL hold it flat (spec-asserted in
+    * StreamingSpec). Cluster deployments should also set
+    * {{{
+    * spark.sql.streaming.stateStore.providerClass =
+    *   org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
+    * spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled = true
+    * }}}
+    * so per-key tree state spills to executor-local RocksDB instead of
+    * the JVM heap and checkpoints upload changelogs rather than full
+    * snapshots — at 100 TB the buffered-children state is far larger
+    * than any executor heap.
+    *
+    * Session setting: [[runStreamTree]] and [[runStreamTreeTws]] set
+    * `spark.sql.streaming.checkpointFileManagerClass` on the
+    * Dataset's session to [[LocalCheckpointFileManager]] (same files,
+    * `.crc`s and checksums, but `file:` checkpoints commit without
+    * launching `chmod`/`readlink` processes — see
+    * [[LocalCheckpointFs]]). A manager the caller has already set on
+    * the session wins and is left as set.
+    */
   def runStreamTree(stages: Seq[Stage], changelogs: Map[String, Dataset[Evt]],
                     stateTtl: Option[java.time.Duration] = None,
                     eventTtl: Option[EventTimeTtl] = None): Dataset[Evt] = {

@@ -32,9 +32,14 @@ import graft.streaming.DeltaEngine._
   *    twin with its own oracle, statement or deletes (an extended
   *    select list, an extra delete), or a runner the declaration does
   *    not cover — set operations, ASOF, OVER branches, recursion
-  *    ([[RecursiveSql]]), hand-built [[DeltaEngine]] trees such as
-  *    `incremental_q10`, CDC/JSON/file sources, and the format round
-  *    trips such as `cdc_roundtrip_lineitem`.
+  *    ([[RecursiveSql]]), CDC/JSON/file sources, `foreachBatch`
+  *    sinks, and the format round trips such as
+  *    `cdc_roundtrip_lineitem`.
+  *  - Every maintained join tree comes from a statement [[SqlCompiler]]
+  *    compiles: a runner of its own (a CDC source, a sink, a TTL, a
+  *    salted or re-oriented stage) reads the stages, routing keys,
+  *    changelog columns, local predicates and fold from the compiled
+  *    statement, never from a hand-written tree.
   *
   * How a continuous entry replays: every stream-gated entry, here and
   * in the operator and source registries, feeds its micro-batches
@@ -236,8 +241,10 @@ object IncrementalQueries {
        |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin
 
   /** Q10 as [[SqlCompiler]] reads it — the deletes are changelog data
-    * ([[q10Deletes]]), not WHERE conjuncts. */
-  private val q10Sql =
+    * ([[q10Deletes]]), not WHERE conjuncts. The compiled tree is the
+    * reference's one (DataFlow.java:45-56, quirks fixed):
+    * nation → customer → orders → lineitem. */
+  private[graft] val q10Sql =
     s"""SELECT c_custkey, c_name, c_acctbal, n_name,
        | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
        | COUNT(*) AS n_rows
@@ -248,12 +255,25 @@ object IncrementalQueries {
        | AND l_returnflag = 'R'
        |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin
 
-  private val q10Deletes = Map(
+  /** The synthetic Q10 changelog set: insert every row, then delete
+    * every lineitem with linenumber 3 and every order with
+    * orderkey % 50 == 0 (child retraction AND parent-death fan-out). */
+  private[graft] val q10Deletes = Map(
     "lineitem" -> (col("l_linenumber") === 3),
     "orders" -> (col("o_orderkey") % 50 === 0))
 
+  /** [[q10Sql]] compiled: the stages, changelog columns and fold every
+    * Q10 runner below reads (memoized per session by the compiler). */
+  private def q10(s: SparkSession, dir: String): SqlCompiler.Compiled =
+    SqlCompiler.compile(s, dir, q10Sql)
+
+  /** The maintained Q10 view — the input of the presentations over it
+    * (top-k, outer enrichment, revenue quantile). */
+  private def q10View(s: SparkSession, dir: String): DataFrame =
+    q10(s, dir).run(s, dir, q10Deletes)
+
   /** The shared-dimension (nation pair) revenue oracle, shared by the
-    * tree-API and compiled entries over the same deletes. */
+    * incremental_shared_dim and incremental_sql_shared_dim entries. */
   private val sharedDimOracle =
     s"""SELECT n_name,
        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_e2,
@@ -264,6 +284,143 @@ object IncrementalQueries {
        | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
        | AND o_orderkey % 7 <> 0 AND s_suppkey % 5 <> 0 AND s_acctbal >= 0
        |GROUP BY n_name""".stripMargin
+
+  /** A SHARED-DIMENSION join graph — nation referenced by BOTH the
+    * customer→orders trunk and the supplier branch. The join is
+    * many-to-many per nation key (every surviving order pairs with
+    * every surviving supplier of that nation), the class an in-tree
+    * liveness fold cannot express: [[TreeCompiler.stagesFor]] plans
+    * trunk liveness stages nation→customer→orders re-keyed onto
+    * `c_nationkey`, plus one PAIR stage incrementally cross-merging the
+    * trunk's join deltas with supplier's changelog per nation key
+    * ([[DeltaEngine.PairFold]]). nation is a root dimension, so the
+    * default [[TreeCompiler.PairOrientation.Auto]] glue is
+    * trunk-bucketed (supplier passes through and replicates ×8; the
+    * big trunk side buckets by row hash), whose parallelism is not
+    * capped at 25 nation keys. Deletes hit both sides of the product,
+    * so pair retractions propagate in both directions. */
+  private[graft] val sharedDimSql =
+    s"""SELECT n_name,
+       | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS revenue_e2,
+       | COUNT(*) AS n_pairs
+       |FROM nation, customer, orders, supplier
+       |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+       | AND s_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND s_acctbal >= 0
+       |GROUP BY n_name""".stripMargin
+
+  private[graft] val sharedDimDeletes = Map(
+    "orders" -> (col("o_orderkey") % 7 === 0),
+    "supplier" -> (col("s_suppkey") % 5 === 0))
+
+  /** The branching (multi-parent lineitem) revenue oracle, shared by
+    * incremental_part_revenue and incremental_sql_part_revenue entries. */
+  private val partRevenueOracle =
+    s"""SELECT n_name, p_brand,
+       | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM nation, customer, orders, lineitem, part
+       |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+       | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R' AND p_size <= 25
+       | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
+       |GROUP BY n_name, p_brand""".stripMargin
+
+  /** A BRANCHING FK tree — the Q10 chain joined with a SECOND
+    * dimension branch: nation→customer→orders→lineitem←part. The
+    * multi-parent lineitem node (alive iff its orders-chain parent AND
+    * its part parent are both alive) compiles into two liveness
+    * stages ([[DeltaEngine.Stage]]): ⋈orders keyed `l_orderkey`
+    * emitting re-keyed by `l_partkey`, then ⋈part keyed `l_partkey`.
+    * Deletes hit BOTH branches — orders (%50: parent-death fan-out
+    * into stage 1) and part (%10: parent-death fan-out into stage 2) —
+    * plus the fact itself (linenumber 3), so retractions cross the
+    * stage boundary in both directions. */
+  private[graft] val partRevenueSql =
+    s"""SELECT n_name, p_brand,
+       | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM nation, customer, orders, lineitem, part
+       |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+       | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R' AND p_size <= 25
+       |GROUP BY n_name, p_brand""".stripMargin
+
+  private[graft] val partRevenueDeletes = Map(
+    "lineitem" -> (col("l_linenumber") === 3),
+    "orders" -> (col("o_orderkey") % 50 === 0),
+    "part" -> (col("p_partkey") % 10 === 0))
+
+  /** Incremental EXISTS — a semi-join as engine nodes. The compiler
+    * plans the correlated subquery as a set-semantics KEY node over
+    * the subquery side (orders filtered to status 'O', projected to
+    * JUST `o_custkey`) maintaining the distinct matching-key set;
+    * feeding its 0→1/1→0 deltas as the PARENT of the outer relation's
+    * liveness node IS semi-join semantics (each outer row emits
+    * exactly once while >= 1 match exists, with full retraction on
+    * last-match death). NOT EXISTS is the same wiring under
+    * [[DeltaEngine.NodeSpec.antiParent]]. Both shapes shuffle once per
+    * hop on the correlation key; no per-row subquery re-execution
+    * exists anywhere. The oracle is the literal correlated EXISTS over
+    * the changelog's surviving rows. */
+  private val existsOracle =
+    """SELECT c_nationkey, COUNT(*) AS n_cust,
+      | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
+      |FROM customer
+      |WHERE c_custkey % 30 <> 0
+      | AND EXISTS (SELECT 1 FROM orders
+      |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
+      |               AND o_orderkey % 40 <> 0)
+      |GROUP BY c_nationkey""".stripMargin
+
+  private def existsSql(not: String) =
+    s"""SELECT c_nationkey, COUNT(*) AS n_cust,
+       | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
+       |FROM customer
+       |WHERE ${not}EXISTS (SELECT 1 FROM orders
+       |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+       |GROUP BY c_nationkey""".stripMargin
+
+  /** Deletes hit BOTH sides: orders %40 (matching-set shrink — a
+    * customer whose LAST open order dies flips semi→out / anti→in and
+    * the flip replays its buffered row) and customer %30 (plain outer
+    * retraction while gated in or out). */
+  private val existsDeletes = Map(
+    "customer" -> (col("c_custkey") % 30 === 0),
+    "orders" -> (col("o_orderkey") % 40 === 0))
+
+  /** TIME-BUCKETED incremental aggregation — the metrics-pipeline
+    * shape: the SAME maintained Q10 join tree, grouped by (nation,
+    * order month), a DERIVED time bucket of a joined column. The
+    * bucket is a group-key expression over a carried column, so the
+    * engine needs NO new state or operator. Retraction-correct per
+    * bucket because deltas carry their own date — a deleted order
+    * retracts from ITS month, never a neighboring one. */
+  private val monthlyOracle =
+    s"""SELECT n_name, substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS order_month,
+       | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM customer, orders, lineitem, nation
+       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+       | AND c_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R'
+       | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
+       |GROUP BY n_name, order_month""".stripMargin
+
+  private val monthlySql =
+    s"""SELECT n_name, substr(CAST(o_orderdate AS STRING), 1, 7) AS order_month,
+       | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+       | COUNT(*) AS n_rows
+       |FROM nation, customer, orders, lineitem
+       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+       | AND c_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R'
+       |GROUP BY n_name, substr(CAST(o_orderdate AS STRING), 1, 7)""".stripMargin
 
   /** Build one relation's changelog as Dataset[Evt]. The canonical row
     * string is assembled by codegen'd `concat_ws` at ingest — events
@@ -307,38 +464,6 @@ object IncrementalQueries {
         inserts.union(deletes)
     }
   }
-
-  /** The Q10 FK tree (reference DataFlow.java:45-56), quirks fixed. */
-  val q10Tree: Seq[NodeSpec] = Seq(
-    NodeSpec("nation", "n_nationkey", "n_nationkey", isRoot = true, setSemantics = true),
-    NodeSpec("customer", "c_nationkey", "c_custkey"),
-    NodeSpec("orders", "o_custkey", "o_orderkey"),
-    NodeSpec("lineitem", "l_orderkey", "l_orderkey"))
-
-  /** The synthetic Q10 changelog set: insert every row, then delete
-    * every lineitem with linenumber 3 and every order with
-    * orderkey % 50 == 0 (child retraction AND parent-death fan-out).
-    * Q10's local predicates (the order-date window, return flag 'R')
-    * are the scan-pushed `where` filters of the orders and lineitem
-    * changelogs. */
-  def q10Changelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "nation" -> changelog(Tables.nation(s, dir), "n_nationkey",
-      Seq("n_nationkey", "n_name"), None),
-    "customer" -> changelog(Tables.customer(s, dir), "c_nationkey",
-      Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal"), None),
-    "orders" -> changelog(Tables.orders(s, dir), "o_custkey",
-      Seq("o_orderkey", "o_custkey", "o_orderdate"),
-      Some(col("o_orderkey") % 50 === 0),
-      where = Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-    "lineitem" -> changelog(Tables.lineitem(s, dir), "l_orderkey",
-      Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag"),
-      Some(col("l_linenumber") === 3),
-      where = Some(col("l_returnflag") === "R")))
-
-  /** Run the engine over the synthetic changelog and fold the leaf
-    * deltas into the Q10 aggregate. */
-  def incrementalQ10(s: SparkSession, dir: String): DataFrame =
-    q10Aggregate(runBatch(q10Tree, q10Changelogs(s, dir)))
 
   /** OPT-IN bloom semi-join reduction for the incremental engine: with
     * [[BloomPrefilterConf]] set, drop child-changelog events whose
@@ -391,25 +516,27 @@ object IncrementalQueries {
     }
   }
 
-  /** [[incrementalQ10]] with the bloom reduction switched on in a
-    * child session (the conf is opt-in; the caller's session is never
-    * mutated): lineitem deltas are pre-filtered by the bloom of the
+  /** [[q10]] with the bloom reduction switched on in a child session
+    * (the conf is opt-in; the caller's session is never mutated):
+    * lineitem deltas are pre-filtered by the bloom of the
     * date-windowed orders changelog's o_orderkey set. */
   def incrementalQ10Bloom(s: SparkSession, dir: String): DataFrame = {
+    val c = q10(s, dir)
     val ss = s.newSession()
     ss.conf.set(BloomPrefilterConf, "true")
-    val logs = bloomPrefilterChild(q10Changelogs(ss, dir),
+    val logs = bloomPrefilterChild(c.sourceChangelogs(ss, dir, q10Deletes),
       parentRel = "orders", parentChildKey = "o_orderkey", childRel = "lineitem",
       expectedItems = 200000L, fpp = 0.01)
-    q10Aggregate(runBatch(q10Tree, logs))
+    c.aggregate(runTree(c.stages, logs).toDF())
   }
 
   /** The Q10 signed-delta fold, one row per group with its net
     * `revenue_e4` and `n_rows`: rev_e4 = round(extprice * (1-disc) *
     * 1e4), exact because the true product has 4 decimals (2dp × 2dp).
-    * Over a whole changelog the survivors are the groups with
-    * `n_rows > 0` ([[q10Aggregate]]); over one micro-batch a group's
-    * net may be zero or negative, and a sink must still see it. */
+    * Unlike the compiled fold, which keeps the groups with
+    * `n_rows > 0`, it keeps every group: over one micro-batch a
+    * group's net may be zero or negative, and the two sinks that merge
+    * per-batch partials into a table must still see it. */
   private def q10Fold(leaf: DataFrame): DataFrame =
     leaf.select(
         (col("tag") * col("mult")).as("sign"),
@@ -424,307 +551,22 @@ object IncrementalQueries {
       .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
         sum(col("sign")).cast(LongType).as("n_rows"))
 
-  /** The maintained Q10 view: the [[q10Fold]] groups that survive. */
-  private def q10Aggregate(leaf: Dataset[Evt]): DataFrame =
-    q10Fold(leaf.toDF()).filter(col("n_rows") > 0)
-
-  /** A SECOND join tree — region→nation→supplier→lineitem — through
-    * the same engine: the AJU capability is generic over NodeSpec
-    * trees, not Q10-specific. Root predicate (region filter), a
-    * numeric leaf predicate, supplier deletes (parent-death fan-out
-    * over that supplier's lineitems) and lineitem deletes. */
-  val supplierTree: Seq[NodeSpec] = Seq(
-    NodeSpec("region", "r_regionkey", "r_regionkey", isRoot = true, setSemantics = true),
-    NodeSpec("nation", "n_regionkey", "n_nationkey"),
-    NodeSpec("supplier", "s_nationkey", "s_suppkey"),
-    NodeSpec("lineitem", "l_suppkey", "l_suppkey"))
-
-  def supplierChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "region" -> changelog(Tables.region(s, dir), "r_regionkey",
-      Seq("r_regionkey", "r_name"), None,
-      where = Some(col("r_name").isin("ASIA", "EUROPE"))),
-    "nation" -> changelog(Tables.nation(s, dir), "n_regionkey",
-      Seq("n_nationkey", "n_name", "n_regionkey"), None),
-    "supplier" -> changelog(Tables.supplier(s, dir), "s_nationkey",
-      Seq("s_suppkey", "s_nationkey"),
-      Some(col("s_suppkey") % 20 === 0)),
-    "lineitem" -> changelog(Tables.lineitem(s, dir), "l_suppkey",
-      Seq("l_suppkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount"),
-      Some(col("l_linenumber") === 2),
-      where = Some(col("l_quantity") >= 25.0)))
-
-  def incrementalSupplierRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runBatch(supplierTree, supplierChangelogs(s, dir))
-    val df = leaf.toDF()
-    df.select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("n_name").as("n_name"),
-        round(canonCol("l_extendedprice").cast(DoubleType) *
-          (lit(1.0) - canonCol("l_discount").cast(DoubleType)) * 10000, 0)
-          .cast(LongType).as("rev_e4"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
-        sum(col("sign")).cast(LongType).as("n_rows"))
-      .filter(col("n_rows") > 0)
+  /** The explicit-API route to the trunk-bucketed shared-dimension
+    * plan: the compiled plan's glue is rebuilt in its DIMENSION-KEYED
+    * form (the branch pairs straight off its changelog on the
+    * dimension key — zero extra shuffle, |dim|-capped) and swapped back
+    * by [[TreeCompiler.swapPairOrientation]] (S = 8), behind the SAME
+    * survivors oracle as incremental_shared_dim: the bucketed product
+    * must be answer-invariant through BOTH construction paths, not
+    * just spec-asserted. */
+  def incrementalSharedRevenueSalted(s: SparkSession, dir: String): DataFrame = {
+    val c = SqlCompiler.compile(s, dir, sharedDimSql)
+    val trunk :+ pass :+ glue = c.stages
+    val dimKeyed = trunk :+ pass.copy(name = glue.name,
+      spec = pass.spec.copy(isRoot = false), pairStage = glue.ownStage)
+    c.copy(stages = TreeCompiler.swapPairOrientation(dimKeyed, salts = 8))
+      .run(s, dir, sharedDimDeletes)
   }
-
-  /** A THIRD tree — and this one is COMPILED from parquet FK metadata
-    * ([[TreeCompiler]]) rather than hand-built: the key/routing
-    * columns of region→nation→customer→orders are all derived from the
-    * schemas. Deletes hit customer (a MID-CHAIN node: death fans out
-    * through its orders) and orders — coverage the other two trees
-    * don't have. */
-  def orderRevenueTree(s: SparkSession, dir: String): Seq[NodeSpec] = {
-    val rels = TreeCompiler.fromParquet(s, dir, Seq("region", "nation", "customer", "orders"))
-    TreeCompiler.compile(rels, Seq("region", "nation", "customer", "orders"))
-  }
-
-  def orderRevenueChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "region" -> changelog(Tables.region(s, dir), "r_regionkey",
-      Seq("r_regionkey", "r_name"), None,
-      where = Some(col("r_name") =!= "AFRICA")),
-    "nation" -> changelog(Tables.nation(s, dir), "n_regionkey",
-      Seq("n_nationkey", "n_name", "n_regionkey"), None),
-    "customer" -> changelog(Tables.customer(s, dir), "c_nationkey",
-      Seq("c_custkey", "c_nationkey"),
-      Some(col("c_custkey") % 11 === 0)),
-    "orders" -> changelog(Tables.orders(s, dir), "o_custkey",
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-      Some(col("o_orderkey") % 7 === 0),
-      where = Some(col("o_orderstatus") === "F")))
-
-  def incrementalOrderRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runBatch(orderRevenueTree(s, dir), orderRevenueChangelogs(s, dir))
-    val df = leaf.toDF()
-    df.select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("n_name").as("n_name"),
-        round(canonCol("o_totalprice").cast(DoubleType) * 100, 0)
-          .cast(LongType).as("price_e2"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("sign") * col("price_e2")).as("totalprice_e2"),
-        sum(col("sign")).cast(LongType).as("n_rows"))
-      .filter(col("n_rows") > 0)
-  }
-
-  /** TIME-BUCKETED incremental aggregation — the metrics-pipeline
-    * shape: the SAME maintained Q10 join tree, but the fold groups by
-    * (nation, order month), i.e. a DERIVED time bucket of a joined
-    * column. The bucket is computed from the leaf delta's canon at
-    * fold time (`substr(o_orderdate, 1, 7)` — ISO date strings make
-    * month truncation a string slice), so the engine needs NO new
-    * state or operator: any bucketing expression over carried columns
-    * is a fold-side choice, exactly like the reference's projection.
-    * Retraction-correct per bucket because deltas carry their own
-    * date — a deleted order retracts from ITS month, never a
-    * neighboring one. */
-  private def monthlyAggregate(leaf: Dataset[Evt]): DataFrame = {
-    val df = leaf.toDF()
-    df.select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("n_name").as("n_name"),
-        substring(canonCol("o_orderdate"), 1, 7).as("order_month"),
-        round(canonCol("l_extendedprice").cast(DoubleType) *
-          (lit(1.0) - canonCol("l_discount").cast(DoubleType)) * 10000, 0)
-          .cast(LongType).as("rev_e4"))
-      .groupBy(col("n_name"), col("order_month"))
-      .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
-        sum(col("sign")).cast(LongType).as("n_rows"))
-      .filter(col("n_rows") > 0)
-  }
-
-  def incrementalMonthlyRevenue(s: SparkSession, dir: String): DataFrame =
-    monthlyAggregate(runBatch(q10Tree, q10Changelogs(s, dir)))
-
-  /** The monthly fold over the CONTINUOUS engine's streamed leaf —
-    * same oracle as the batch entry, so a per-bucket stream/batch
-    * divergence (a retraction landing in the wrong month across
-    * micro-batch boundaries) fails the hash. */
-  def incrementalMonthlyRevenueStream(s: SparkSession, dir: String): DataFrame =
-    monthlyAggregate(replayStream(s, chainStages(q10Tree), q10Changelogs(s, dir),
-      "incremental_monthly_stream_leaf"))
-
-  /** Incremental EXISTS / NOT EXISTS — semi- and anti-join as engine
-    * nodes. A set-semantics KEY node over the subquery side (orders
-    * filtered to status 'O', projected to JUST `o_custkey`) maintains
-    * the distinct matching-key set; feeding its 0→1/1→0 deltas as the
-    * PARENT of the outer relation's liveness node IS semi-join
-    * semantics (each outer row emits exactly once while >= 1 match
-    * exists, with full retraction on last-match death). The anti twin
-    * is the same wiring under [[NodeSpec.antiParent]]: liveness
-    * inverted, emissions carry no subquery columns. Both shapes
-    * shuffle once per hop on the correlation key — the co-partitioned
-    * plan a 1000-executor cluster needs; no per-row subquery
-    * re-execution exists anywhere.
-    *
-    * Deletes hit BOTH sides: orders %40 (matching-set shrink — a
-    * customer whose LAST open order dies flips semi→out / anti→in and
-    * the flip replays its buffered row) and customer %30 (plain outer
-    * retraction while gated in or out). */
-  private def existsChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "orders" -> changelog(Tables.orders(s, dir), "o_custkey",
-      Seq("o_custkey"),
-      Some(col("o_orderkey") % 40 === 0),
-      where = Some(col("o_orderstatus") === "O")),
-    "customer" -> changelog(Tables.customer(s, dir), "c_custkey",
-      Seq("c_custkey", "c_nationkey", "c_acctbal"),
-      Some(col("c_custkey") % 30 === 0)))
-
-  private def existsStages(anti: Boolean): Seq[Stage] = Seq(
-    Stage("orders_keys", NodeSpec("orders", "o_custkey", "o_custkey",
-      isRoot = true, setSemantics = true)),
-    Stage("customer", NodeSpec("customer", "c_custkey", "c_custkey",
-      antiParent = anti), parentStage = Some("orders_keys")))
-
-  private def existsAggregate(leaf: Dataset[Evt]): DataFrame = {
-    val df = leaf.toDF()
-    df.select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("c_nationkey").cast(LongType).as("c_nationkey"),
-        round(canonCol("c_acctbal").cast(DoubleType) * 100, 0)
-          .cast(LongType).as("bal_e2"))
-      .groupBy(col("c_nationkey"))
-      .agg(sum(col("sign")).cast(LongType).as("n_cust"),
-        sum(col("sign") * col("bal_e2")).as("acctbal_e2"))
-      .filter(col("n_cust") > 0)
-  }
-
-  def incrementalExistsSemi(s: SparkSession, dir: String): DataFrame =
-    existsAggregate(runTree(existsStages(anti = false), existsChangelogs(s, dir)))
-
-  def incrementalNotExistsAnti(s: SparkSession, dir: String): DataFrame =
-    existsAggregate(runTree(existsStages(anti = true), existsChangelogs(s, dir)))
-
-  /** A BRANCHING FK tree — the Q10 chain joined with a SECOND
-    * dimension branch: nation→customer→orders→lineitem←part. The
-    * multi-parent lineitem node (alive iff its orders-chain parent AND
-    * its part parent are both alive) decomposes into two liveness
-    * stages ([[DeltaEngine.Stage]]): ⋈orders keyed `l_orderkey`
-    * emitting re-keyed by `l_partkey`, then ⋈part keyed `l_partkey`.
-    * Deletes hit BOTH branches — orders (%50: parent-death fan-out
-    * into stage 1) and part (%10: parent-death fan-out into stage 2) —
-    * plus the fact itself (linenumber 3), so retractions cross the
-    * stage boundary in both directions. */
-  val partRevenueStages: Seq[Stage] = Seq(
-    Stage("nation", NodeSpec("nation", "n_nationkey", "n_nationkey",
-      isRoot = true, setSemantics = true)),
-    Stage("customer", NodeSpec("customer", "c_nationkey", "c_custkey"),
-      parentStage = Some("nation")),
-    Stage("orders", NodeSpec("orders", "o_custkey", "o_orderkey"),
-      parentStage = Some("customer")),
-    Stage("lineitem", NodeSpec("lineitem", "l_orderkey", "l_partkey"),
-      parentStage = Some("orders")),
-    Stage("part", NodeSpec("part", "p_partkey", "p_partkey",
-      isRoot = true, setSemantics = true)),
-    Stage("lineitem_part", NodeSpec("lineitem", "l_partkey", "l_partkey"),
-      ownStage = Some("lineitem"), parentStage = Some("part")))
-
-  def partRevenueChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "nation" -> changelog(Tables.nation(s, dir), "n_nationkey",
-      Seq("n_nationkey", "n_name"), None),
-    "customer" -> changelog(Tables.customer(s, dir), "c_nationkey",
-      Seq("c_custkey", "c_nationkey"), None),
-    "orders" -> changelog(Tables.orders(s, dir), "o_custkey",
-      Seq("o_orderkey", "o_custkey", "o_orderdate"),
-      Some(col("o_orderkey") % 50 === 0),
-      where = Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-    "lineitem" -> changelog(Tables.lineitem(s, dir), "l_orderkey",
-      Seq("l_orderkey", "l_partkey", "l_linenumber", "l_extendedprice",
-        "l_discount", "l_returnflag"),
-      Some(col("l_linenumber") === 3),
-      where = Some(col("l_returnflag") === "R")),
-    "part" -> changelog(Tables.part(s, dir), "p_partkey",
-      Seq("p_partkey", "p_brand", "p_size"),
-      Some(col("p_partkey") % 10 === 0),
-      where = Some(col("p_size") <= 25)))
-
-  def incrementalPartRevenue(s: SparkSession, dir: String): DataFrame = {
-    val leaf = runTree(partRevenueStages, partRevenueChangelogs(s, dir)).toDF()
-    leaf.select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("n_name").as("n_name"),
-        canonCol("p_brand").as("p_brand"),
-        round(canonCol("l_extendedprice").cast(DoubleType) *
-          (lit(1.0) - canonCol("l_discount").cast(DoubleType)) * 10000, 0)
-          .cast(LongType).as("rev_e4"))
-      .groupBy(col("n_name"), col("p_brand"))
-      .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
-        sum(col("sign")).cast(LongType).as("n_rows"))
-      .filter(col("n_rows") > 0)
-  }
-
-  /** A SHARED-DIMENSION join graph — nation referenced by BOTH the
-    * customer→orders trunk and the supplier branch
-    * (`c_nationkey = n_nationkey AND s_nationkey = n_nationkey`). The
-    * join is genuinely many-to-many per nation key (every surviving
-    * order pairs with every surviving supplier of that nation) — the
-    * class an in-tree liveness fold cannot express and round 3's
-    * planner rejected loudly. [[TreeCompiler.stagesFor]] now plans it:
-    * trunk liveness stages nation→customer→orders re-keyed onto
-    * `c_nationkey`, plus one PAIR stage incrementally cross-merging
-    * the trunk's join deltas with supplier's changelog per nation key
-    * ([[DeltaEngine.PairFold]]). Deletes hit both sides of the
-    * product, so pair retractions propagate in both directions. */
-  val sharedDimEdges: Seq[TreeCompiler.FkEdge] = Seq(
-    TreeCompiler.FkEdge("customer", "c_nationkey", "nation", "n_nationkey"),
-    TreeCompiler.FkEdge("orders", "o_custkey", "customer", "c_custkey"),
-    TreeCompiler.FkEdge("supplier", "s_nationkey", "nation", "n_nationkey"))
-
-  /** The DEFAULT compiled plan — nation is a root dimension, so
-    * [[TreeCompiler.PairOrientation.Auto]] emits the TRUNK-BUCKETED
-    * glue (supplier passes through and replicates ×8; the big trunk
-    * side buckets by row hash): the orientation whose parallelism is
-    * not capped at 25 nation keys. */
-  val sharedDimStages: Seq[Stage] = TreeCompiler.stagesFor(
-    sharedDimEdges, Seq("nation", "customer", "orders", "supplier"))
-
-  /** The dimension-keyed plan (explicit opt-out — zero extra shuffle,
-    * |dim|-capped): kept compiled as the base of the explicit-swap
-    * twin below, so both orientations stay oracle-covered. */
-  val sharedDimStagesDimKeyed: Seq[Stage] = TreeCompiler.stagesFor(
-    sharedDimEdges, Seq("nation", "customer", "orders", "supplier"),
-    orientation = TreeCompiler.PairOrientation.DimensionKeyed)
-
-  def sharedDimChangelogs(s: SparkSession, dir: String): Map[String, Dataset[Evt]] = Map(
-    "nation" -> changelog(Tables.nation(s, dir), "n_nationkey",
-      Seq("n_nationkey", "n_name"), None),
-    "customer" -> changelog(Tables.customer(s, dir), "c_nationkey",
-      Seq("c_custkey", "c_nationkey"), None),
-    "orders" -> changelog(Tables.orders(s, dir), "o_custkey",
-      Seq("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
-      Some(col("o_orderkey") % 7 === 0),
-      where = Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-    "supplier" -> changelog(Tables.supplier(s, dir), "s_nationkey",
-      Seq("s_suppkey", "s_nationkey", "s_acctbal"),
-      Some(col("s_suppkey") % 5 === 0),
-      where = Some(col("s_acctbal") >= 0)))
-
-  def incrementalSharedRevenue(s: SparkSession, dir: String): DataFrame =
-    sharedAggregate(runTree(sharedDimStages, sharedDimChangelogs(s, dir)))
-
-  private def sharedAggregate(leaf: Dataset[Evt]): DataFrame = {
-    leaf.toDF().select(
-        (col("tag") * col("mult")).as("sign"),
-        canonCol("n_name").as("n_name"),
-        round(canonCol("o_totalprice").cast(DoubleType) * 100, 0)
-          .cast(LongType).as("price_e2"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("sign") * col("price_e2")).as("revenue_e2"),
-        sum(col("sign")).cast(LongType).as("n_pairs"))
-      .filter(col("n_pairs") > 0)
-  }
-
-  /** The DIMENSION-KEYED plan swapped by hand via
-    * [[TreeCompiler.swapPairOrientation]] (S = 8) — the explicit-API
-    * route to the same trunk-bucketed shape `stagesFor` now emits by
-    * default, behind the SAME survivors oracle as
-    * incremental_shared_dim: the bucketed product must be
-    * answer-invariant through BOTH construction paths, not just
-    * spec-asserted. */
-  def incrementalSharedRevenueSalted(s: SparkSession, dir: String): DataFrame =
-    sharedAggregate(runTree(
-      TreeCompiler.swapPairOrientation(sharedDimStagesDimKeyed, salts = 8),
-      sharedDimChangelogs(s, dir)))
 
   /** The Q10 tree with its heaviest hop SALTED (S = 8): lineitem
     * events bucket by row hash while orders' liveness deltas replicate
@@ -732,10 +574,8 @@ object IncrementalQueries {
     * same survivors oracle as incremental_q10 — the de-skew must be
     * answer-invariant, not just spec-asserted. */
   def incrementalQ10Salted(s: SparkSession, dir: String): DataFrame = {
-    val stages = chainStages(q10Tree) match {
-      case init :+ last => init :+ last.copy(salts = 8)
-    }
-    q10Aggregate(runTree(stages, q10Changelogs(s, dir)))
+    val c = q10(s, dir)
+    c.copy(stages = c.stages.init :+ c.stages.last.copy(salts = 8)).run(s, dir, q10Deletes)
   }
 
   /** A mergeable HISTOGRAM SKETCH over the MAINTAINED Q10 view — the
@@ -751,7 +591,7 @@ object IncrementalQueries {
   private val RevBinE4 = 200000000L // $20,000 in 1e-4 units
   def incrementalQ10RevQuantile(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val view = incrementalQ10(s, dir)
+    val view = q10View(s, dir)
     val hist = view.groupBy(col("n_name"),
         expr(s"revenue_e4 div $RevBinE4").as("bin"))
       .agg(count(lit(1)).as("n"))
@@ -766,54 +606,6 @@ object IncrementalQueries {
           .as("p50_rev_est"),
         max(col("total")).as("n_cust"))
   }
-
-  /** [[replayLeaf]] of one changelog map through
-    * [[DeltaEngine.runStreamTree]] (or, with `tws`,
-    * [[DeltaEngine.runStreamTreeTws]]): each changelog seq value is its
-    * own micro-batch, node state carries across batches in the state
-    * store, and the result is the streamed leaf deltas. `eventTtl`
-    * adds the session confs [[DeltaEngine.EventTimeTtl]] requires:
-    * per-stage re-derived event times trip the blanket chained-stateful
-    * check, and only some changelogs carry the ts column, so the
-    * combined watermark takes the max. */
-  private def replayStream(s: SparkSession, stages: Seq[Stage],
-      logs: Map[String, Dataset[Evt]], sinkName: String,
-      eventTtl: Option[DeltaEngine.EventTimeTtl] = None,
-      tws: Boolean = false): Dataset[Evt] = {
-    val ttlConfs = if (eventTtl.isEmpty) Map.empty[String, String] else Map(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
-      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
-    replayLeaf(s, sinkName, Seq(logs), tws, ttlConfs) { in =>
-      if (tws) DeltaEngine.runStreamTreeTws(stages, in.head)
-      else runStreamTree(stages, in.head, eventTtl = eventTtl)
-    }
-  }
-
-  /** The CONTINUOUS engine itself behind the correctness gate — not
-    * its batch simulation: the q10 changelog replays through
-    * [[DeltaEngine.runStreamTree]] as real Structured Streaming
-    * micro-batches (inserts in batch 1, deletes in batch 2, node state
-    * carried across batches in the state store), the leaf deltas land
-    * in a memory sink, and the same signed fold produces the
-    * maintained aggregate. The oracle is incremental_q10's plain-SQL
-    * survivors query, so a streaming-vs-batch divergence fails the
-    * hash. [[replay]] is the harness (the production shape is
-    * readStream + foreachBatch upsert, StreamingSpec covers recovery);
-    * its collect materializes the fixture changelog, not an engine
-    * step. */
-  def incrementalQ10Stream(s: SparkSession, dir: String): DataFrame =
-    q10Aggregate(replayStream(s, chainStages(q10Tree), q10Changelogs(s, dir),
-      "incremental_q10_stream_leaf"))
-
-  /** The flagship maintained tree on Spark 4's `transformWithState` —
-    * the engine's core capability moved onto the SUPPORTED
-    * arbitrary-state API ([[DeltaEngine.TreeNodeProcessor]]: per-node
-    * MapState child multisets with point updates, ValueState liveness,
-    * per-key timers for TTL), gated against the SAME oracle as
-    * [[incrementalQ10Stream]] — two streaming state APIs, one truth. */
-  def incrementalQ10Tws(s: SparkSession, dir: String): DataFrame =
-    q10Aggregate(replayStream(s, chainStages(q10Tree), q10Changelogs(s, dir),
-      "incremental_q10_tws_leaf", tws = true))
 
   /** The incremental engine's SINK upgraded to a LAKEHOUSE TABLE —
     * the reference's K1 (a text file of per-delta updates) replaced
@@ -833,7 +625,7 @@ object IncrementalQueries {
     * whole. */
   def incrementalQ10SnapshotSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.SnapshotLog
-    val root = java.nio.file.Files.createTempDirectory("graft_q10_snapsink").toString
+    val root = tempDir("graft_q10_snapsink").toString
     val goldPayload = Seq("c_name", "c_acctbal", "n_name", "revenue_e4", "n_rows")
     val version = new java.util.concurrent.atomic.AtomicInteger(-1)
     def commit(ss: SparkSession, batch: DataFrame, batchId: Long): Unit = {
@@ -871,42 +663,25 @@ object IncrementalQueries {
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
           col("revenue_e4"), col("n_rows"))
     }
+    val c = q10(s, dir)
     replayChangelogs(s, "incremental_q10_snapshot_sink", BatchSink("append", commit, latest),
-      Seq(q10Changelogs(s, dir)))(in => runStreamTree(chainStages(q10Tree), in.head))
+      Seq(c.sourceChangelogs(s, dir, q10Deletes, filtered = false)))(in => c.runStream(in.head))
   }
 
-  /** [[incrementalQ10Stream]] with EVENT-TIME TTL enabled — the
+  /** The maintained Q10 stream with EVENT-TIME TTL enabled — the
     * watermark/timeout machinery (EventTimeTimeout plan, per-stage
     * watermark nodes, horizon arithmetic) runs on every stage, with
     * `delay` sized past the fixture's whole date span so no key's
     * horizon passes during the two-batch replay: state is bounded by
     * data time WITHOUT changing the maintained answer, which is the
     * production contract (the eviction path itself is spec-asserted
-    * with a controlled timeline in StreamingSpec). Same survivors
-    * oracle as incremental_q10. */
+    * with a controlled timeline in StreamingSpec). The event time is
+    * `o_orderdate`, which the statement's date window names, so the
+    * raw orders changelog carries it. Same survivors oracle as
+    * incremental_q10. */
   def incrementalQ10StreamTtl(s: SparkSession, dir: String): DataFrame =
-    q10Aggregate(replayStream(s, chainStages(q10Tree), q10Changelogs(s, dir),
-      "incremental_q10_stream_ttl_leaf",
-      eventTtl = Some(DeltaEngine.EventTimeTtl(
-        "o_orderdate", java.time.Duration.ofDays(3650)))))
-
-  /** The CONTINUOUS pair stage behind the correctness gate — the
-    * shared-dim changelog replays through [[DeltaEngine.runStreamTree]]
-    * as real micro-batches (inserts then deletes, pair state carried
-    * across batches in the state store), against the same survivors
-    * oracle as incremental_shared_dim. */
-  def incrementalSharedStream(s: SparkSession, dir: String): DataFrame =
-    sharedAggregate(replayStream(s, sharedDimStages, sharedDimChangelogs(s, dir),
-      "incremental_shared_stream_leaf"))
-
-  /** The shared-dimension PAIR stage on `transformWithState`
-    * ([[DeltaEngine.PairNodeProcessor]]: both product sides as typed
-    * MapStates, changed entries point-written back) — the TWS driver
-    * covers the whole stage vocabulary, liveness AND pair, each gated
-    * on the same oracle as its flatMap twin. */
-  def incrementalSharedTws(s: SparkSession, dir: String): DataFrame =
-    sharedAggregate(replayStream(s, sharedDimStages, sharedDimChangelogs(s, dir),
-      "incremental_shared_tws_leaf", tws = true))
+    runSqlStreamed(s, q10(s, dir), dir, q10Deletes, "incremental_q10_stream_ttl_leaf",
+      eventTtl = Some(DeltaEngine.EventTimeTtl("o_orderdate", java.time.Duration.ofDays(3650))))
 
   /** LEFT OUTER JOIN from SQL TEXT: the compiler plans the inner tree
     * PLUS an anti plan per LEFT boundary (NOT EXISTS wiring — see
@@ -1405,7 +1180,7 @@ object IncrementalQueries {
     * seam; `confs` are set on a child session every form runs in.
     * A twin whose oracle, statement or deletes differ on purpose, or
     * that needs another runner (set operations, ASOF, OVER, recursion,
-    * hand-built trees), is written out by hand instead. */
+    * its own source or sink), is written out by hand instead. */
   private def maintained(name: String, oracle: String, sqlText: String,
       deletes: Map[String, Column] = Map.empty, twins: Seq[String] = Seq(Stream),
       cte: Boolean = false,
@@ -1438,16 +1213,25 @@ object IncrementalQueries {
     * eventFilter applies the compiled predicates per stream — →
     * micro-batch replay (one batch per changelog seq, state across
     * batches) → the compiled fold. Shared by the SQL-stream gated
-    * entries. */
+    * entries. `eventTtl` adds the session confs
+    * [[DeltaEngine.EventTimeTtl]] requires: per-stage re-derived event
+    * times trip the blanket chained-stateful check, and only some
+    * changelogs carry the ts column, so the combined watermark takes
+    * the max. */
   private def runSqlStreamed(s: SparkSession, c: SqlCompiler.Compiled, dir: String,
       deletes: Map[String, org.apache.spark.sql.Column], sinkName: String,
       tws: Boolean = false,
-      transformLogs: Map[String, Dataset[Evt]] => Map[String, Dataset[Evt]] = identity)
-      : DataFrame =
+      transformLogs: Map[String, Dataset[Evt]] => Map[String, Dataset[Evt]] = identity,
+      eventTtl: Option[DeltaEngine.EventTimeTtl] = None): DataFrame = {
+    val ttlConfs = if (eventTtl.isEmpty) Map.empty[String, String] else Map(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
     c.aggregate(replayLeaf(s, sinkName,
-        Seq(transformLogs(c.sourceChangelogs(s, dir, deletes, filtered = false))), tws) { in =>
-      c.runStream(in.head, tws = tws)
+        Seq(transformLogs(c.sourceChangelogs(s, dir, deletes, filtered = false))), tws,
+        ttlConfs) { in =>
+      c.runStream(in.head, eventTtl = eventTtl, tws = tws)
     }.toDF())
+  }
 
   /** WITH (CTE) query through the CONTINUOUS engine: every CTE's
     * maintained view replays as its own streaming query
@@ -1501,15 +1285,6 @@ object IncrementalQueries {
     ss.sql(cc.outerSql)
   }
 
-  /** [[Evt]] changelog from a [[CdcParser.parseRelation]] frame:
-    * tag/seq derive from the parsed `action` (Insert → +1 @ seq 0,
-    * Delete → −1 @ seq 1), `where` is the relation's local predicate
-    * on the parsed typed columns. */
-  private def cdcChangelog(parsed: DataFrame, keyCol: String, cols: Seq[String],
-                           where: Option[org.apache.spark.sql.Column]): Dataset[Evt] =
-    signedChangelog(parsed, when(col("action") === "Insert", 1).otherwise(-1),
-      keyCol, cols, where)
-
   /** Typed rows + a ±1 sign expression → the engine's [[Evt]]
     * changelog (inserts replay at seq 0, deletes at seq 1, the same
     * two-batch convention as every parquet-backed changelog). */
@@ -1531,20 +1306,45 @@ object IncrementalQueries {
       rowCanon.as("row")).as[Evt]
   }
 
-  def incrementalQ10FromCdc(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType => Dbl, LongType => Lng,
-      StringType => Str, TimestampType => Tst}
-    val nationCols = Seq("n_nationkey", "n_name")
-    val custCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    val ordCols = Seq("o_orderkey", "o_custkey", "o_orderdate")
-    val liCols = Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag")
-    def render(df: DataFrame, code: String, cols: Seq[String],
-               deleteWhen: Option[org.apache.spark.sql.Column]): DataFrame = {
-      val ins = CdcParser.toCdcLines(df, add = true, code, cols)
-      deleteWhen.map(cond =>
-        ins.unionAll(CdcParser.toCdcLines(df.filter(cond), add = false, code, cols)))
-        .getOrElse(ins)
+  /** `c`'s relation changelogs from typed frames with a ±1 `sign`:
+    * `typed(rel)` carries the relation's raw needed columns; each
+    * changelog routes by its compiled key, carries the relation's
+    * needed columns, and has the statement's local predicate applied
+    * to the typed frame (the fragment the parquet path pushes into its
+    * scan). */
+  private def typedChangelogs(c: SqlCompiler.Compiled, sign: Column)(
+      typed: String => DataFrame): Map[String, Dataset[Evt]] =
+    c.path.map { rel =>
+      rel -> signedChangelog(typed(rel), sign, c.keyCol(rel), c.needed(rel),
+        c.wheres.get(rel).map(expr))
+    }.toMap
+
+  /** The relation code of `rel` in the reference's CDC text header
+    * (DataFlow.java:74-81): NATI, CUST, ORDE, LINE. */
+  private def cdcCode(rel: String): String = rel.take(4).toUpperCase
+
+  /** `c`'s relations as one stream of CDC text lines over each
+    * relation's raw needed columns: with `add`, every row as an `Add`
+    * line; otherwise the rows `deletes` names, as `Sub` lines. */
+  private def cdcLines(s: SparkSession, dir: String, c: SqlCompiler.Compiled, add: Boolean,
+      deletes: Map[String, Column] = Map.empty): DataFrame =
+    c.path.flatMap { rel =>
+      val df = Tables.load(s, dir, rel)
+      (if (add) Some(df) else deletes.get(rel).map(df.filter))
+        .map(CdcParser.toCdcLines(_, add, cdcCode(rel), c.neededRaw(rel)))
+    }.reduce(_ unionAll _)
+
+  /** `c`'s relation changelogs from one CDC line stream: each
+    * relation's lines demuxed and parsed by [[CdcParser]] into its
+    * compiled column types (`Add` → +1 at seq 0, `Sub` → −1 at seq 1). */
+  private def cdcChangelogs(c: SqlCompiler.Compiled,
+      lines: DataFrame): Map[String, Dataset[Evt]] =
+    typedChangelogs(c, when(col("action") === "Insert", 1).otherwise(-1)) { rel =>
+      CdcParser.parseRelation(lines, cdcCode(rel), c.neededRaw(rel).map(n => n -> c.colType(n)))
     }
+
+  def incrementalQ10FromCdc(s: SparkSession, dir: String): DataFrame = {
+    val c = q10(s, dir)
     // ONE interleaved line stream, like the reference's single source —
     // MATERIALIZED TO A TEMP TEXT FILE and read back, so this query
     // exercises the reference's true input shape (spark.read.text) and
@@ -1553,53 +1353,18 @@ object IncrementalQueries {
     // scans + 4 full line passes — measured 5.4 s vs 2.6 s at sf0.1);
     // a .cache() would do too, but it pins executor storage memory for
     // the rest of the session with no unpersist point.
-    val rendered =
-      render(Tables.nation(s, dir), "NATI", nationCols, None)
-        .unionAll(render(Tables.customer(s, dir), "CUST", custCols, None))
-        .unionAll(render(Tables.orders(s, dir), "ORDE", ordCols,
-          Some(col("o_orderkey") % 50 === 0)))
-        .unionAll(render(Tables.lineitem(s, dir), "LINE", liCols,
-          Some(col("l_linenumber") === 3)))
     // ONE rendered copy per (JVM, fixture): the render is deterministic,
     // so repeat callers (Bench warm-ups, Profile sweeps, Verify) reuse
     // the first write instead of leaking a fresh temp directory each —
-    // and the directory is process-unique (createTempDirectory), so
-    // concurrent JVMs on the same fixture never overwrite each other's
-    // files mid-scan. A shutdown hook deletes it recursively
-    // (deleteOnExit alone only removes empty directories).
+    // and the directory is process-unique, so concurrent JVMs on the
+    // same fixture never overwrite each other's files mid-scan.
     val path = cdcLineDirs.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cdc_lines")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(p => p.toFile.delete())
-      }))
-      val p = tmp.resolve("lines").toString
-      rendered.write.mode("overwrite").text(p)
+      val p = tempDir("graft_cdc_lines").resolve("lines").toString
+      cdcLines(s, dir, c, add = true).unionAll(cdcLines(s, dir, c, add = false, q10Deletes))
+        .write.mode("overwrite").text(p)
       p
     })
-    val lines = s.read.text(path)
-    def parse(code: String, schema: Seq[(String, org.apache.spark.sql.types.DataType)]) =
-      CdcParser.parseRelation(lines, code, schema)
-    val logs: Map[String, Dataset[Evt]] = Map(
-      "nation" -> cdcChangelog(
-        parse("NATI", Seq("n_nationkey" -> Lng, "n_name" -> Str)),
-        "n_nationkey", nationCols, None),
-      "customer" -> cdcChangelog(
-        parse("CUST", Seq("c_custkey" -> Lng, "c_name" -> Str,
-          "c_nationkey" -> Lng, "c_acctbal" -> Dbl)),
-        "c_nationkey", custCols, None),
-      "orders" -> cdcChangelog(
-        parse("ORDE", Seq("o_orderkey" -> Lng, "o_custkey" -> Lng, "o_orderdate" -> Tst)),
-        "o_custkey", ordCols,
-        Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-      "lineitem" -> cdcChangelog(
-        parse("LINE", Seq("l_orderkey" -> Lng, "l_linenumber" -> Lng,
-          "l_extendedprice" -> Dbl, "l_discount" -> Dbl, "l_returnflag" -> Str)),
-        "l_orderkey", liCols,
-        Some(col("l_returnflag") === "R")))
-    val leaf = runBatch(q10Tree, logs)
-    q10Aggregate(leaf)
+    c.aggregate(runTree(c.stages, cdcChangelogs(c, s.read.text(path))).toDF())
   }
 
   /** The JSON-CDC deployment shape end to end: each relation is its
@@ -1611,43 +1376,23 @@ object IncrementalQueries {
     * Deletes arrive as 'd' envelopes carrying the before-image. */
   def incrementalQ10FromJson(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.StructType
+    val c = q10(s, dir)
     val jsonOpts = Map("timestampFormat" -> "yyyy-MM-dd HH:mm:ss.SSSSSS")
-    def topic(df: DataFrame, cols: Seq[String],
-              deleteWhen: Option[org.apache.spark.sql.Column])
-        : (DataFrame, StructType) = {
+    val logs = typedChangelogs(c, col("sign")) { rel =>
+      val df = Tables.load(s, dir, rel)
+      val cols = c.neededRaw(rel)
       val rowSchema = StructType(cols.map(df.schema(_)))
       val row = struct(cols.map(col): _*)
       val nullRow = lit(null).cast(rowSchema)
       val creates = df.select(lit("c").as("op"), nullRow.as("before"),
         row.as("after"), lit(0L).as("ts_ms"))
-      val all = deleteWhen.map(cond => creates.unionByName(
+      val all = q10Deletes.get(rel).map(cond => creates.unionByName(
           df.filter(cond).select(lit("d").as("op"), row.as("before"),
             nullRow.as("after"), lit(1L).as("ts_ms"))))
         .getOrElse(creates)
-      (CdcParser.toJsonEnvelope(all, jsonOpts), rowSchema)
+      CdcParser.parseJsonEnvelope(CdcParser.toJsonEnvelope(all, jsonOpts), rowSchema, jsonOpts)
     }
-    def log(t: (DataFrame, StructType), keyCol: String, cols: Seq[String],
-            where: Option[org.apache.spark.sql.Column]): Dataset[Evt] =
-      signedChangelog(CdcParser.parseJsonEnvelope(t._1, t._2, jsonOpts),
-        col("sign"), keyCol, cols, where)
-    val logs: Map[String, Dataset[Evt]] = Map(
-      "nation" -> log(topic(Tables.nation(s, dir), Seq("n_nationkey", "n_name"), None),
-        "n_nationkey", Seq("n_nationkey", "n_name"), None),
-      "customer" -> log(topic(Tables.customer(s, dir),
-          Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal"), None),
-        "c_nationkey", Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal"), None),
-      "orders" -> log(topic(Tables.orders(s, dir),
-          Seq("o_orderkey", "o_custkey", "o_orderdate"),
-          Some(col("o_orderkey") % 50 === 0)),
-        "o_custkey", Seq("o_orderkey", "o_custkey", "o_orderdate"),
-        Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-      "lineitem" -> log(topic(Tables.lineitem(s, dir),
-          Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag"),
-          Some(col("l_linenumber") === 3)),
-        "l_orderkey",
-        Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag"),
-        Some(col("l_returnflag") === "R")))
-    q10Aggregate(runBatch(q10Tree, logs))
+    c.aggregate(runTree(c.stages, logs).toDF())
   }
 
   /** The reference's TRUE production input shape end to end, gated:
@@ -1672,55 +1417,13 @@ object IncrementalQueries {
     * carries), not engine state; all join/retraction state lives in
     * the state store. */
   def incrementalQ10FileStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType => Dbl, LongType => Lng,
-      StringType => Str, TimestampType => Tst}
-    val nationCols = Seq("n_nationkey", "n_name")
-    val custCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    val ordCols = Seq("o_orderkey", "o_custkey", "o_orderdate")
-    val liCols = Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag")
+    val c = q10(s, dir)
     // one interleaved line stream, inserts and deletes rendered
     // separately so they can arrive as two distinct file drops
-    val insertLines =
-      CdcParser.toCdcLines(Tables.nation(s, dir), add = true, "NATI", nationCols)
-        .unionAll(CdcParser.toCdcLines(Tables.customer(s, dir), add = true, "CUST", custCols))
-        .unionAll(CdcParser.toCdcLines(Tables.orders(s, dir), add = true, "ORDE", ordCols))
-        .unionAll(CdcParser.toCdcLines(Tables.lineitem(s, dir), add = true, "LINE", liCols))
-    val deleteLines =
-      CdcParser.toCdcLines(Tables.orders(s, dir).filter(col("o_orderkey") % 50 === 0),
-          add = false, "ORDE", ordCols)
-        .unionAll(CdcParser.toCdcLines(
-          Tables.lineitem(s, dir).filter(col("l_linenumber") === 3),
-          add = false, "LINE", liCols))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdc_filestream")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(p => p.toFile.delete())
-    }))
-    val watch = tmp.resolve("lines").toString
-    insertLines.write.mode("append").text(watch)
+    val watch = tempDir("graft_cdc_filestream").resolve("lines").toString
+    cdcLines(s, dir, c, add = true).write.mode("append").text(watch)
     val ss = replaySession(s)
-    val lines = ss.readStream.text(watch)
-    def parse(code: String, schema: Seq[(String, org.apache.spark.sql.types.DataType)]) =
-      CdcParser.parseRelation(lines, code, schema)
-    val logs: Map[String, Dataset[Evt]] = Map(
-      "nation" -> cdcChangelog(
-        parse("NATI", Seq("n_nationkey" -> Lng, "n_name" -> Str)),
-        "n_nationkey", nationCols, None),
-      "customer" -> cdcChangelog(
-        parse("CUST", Seq("c_custkey" -> Lng, "c_name" -> Str,
-          "c_nationkey" -> Lng, "c_acctbal" -> Dbl)),
-        "c_nationkey", custCols, None),
-      "orders" -> cdcChangelog(
-        parse("ORDE", Seq("o_orderkey" -> Lng, "o_custkey" -> Lng, "o_orderdate" -> Tst)),
-        "o_custkey", ordCols,
-        Some(col("o_orderdate") >= dateLo && col("o_orderdate") < dateHi)),
-      "lineitem" -> cdcChangelog(
-        parse("LINE", Seq("l_orderkey" -> Lng, "l_linenumber" -> Lng,
-          "l_extendedprice" -> Dbl, "l_discount" -> Dbl, "l_returnflag" -> Str)),
-        "l_orderkey", liCols,
-        Some(col("l_returnflag") === "R")))
-    val leaf = runStreamTree(chainStages(q10Tree), logs)
+    val leaf = runStreamTree(c.stages, cdcChangelogs(c, ss.readStream.text(watch)))
     // foreachBatch upsert: fold each micro-batch's leaf deltas to
     // per-group partials (distributed agg), then merge into the
     // maintained table keyed by the unique group key c_custkey
@@ -1743,13 +1446,25 @@ object IncrementalQueries {
       .outputMode("append").start()
     try {
       query.processAllAvailable()   // micro-batch 1: inserts build state
-      deleteLines.write.mode("append").text(watch)
+      cdcLines(s, dir, c, add = false, q10Deletes).write.mode("append").text(watch)
       query.processAllAvailable()   // micro-batch 2: deletes retract it
     } finally query.stop()
     import ss.implicits._
     table.toSeq.map { case (k, (nm, ab, nn, rev, cnt)) => (k, nm, ab, nn, rev, cnt) }
       .toDF("c_custkey", "c_name", "c_acctbal", "n_name", "revenue_e4", "n_rows")
   }
+
+  /** The Q10 tree as the per-row projection [[incrementalQ10Running]]
+    * reads: a maintained bag view, so every leaf delta carries the
+    * lineitem's `l_orderkey` and `l_linenumber` besides its revenue
+    * inputs. */
+  private val q10RunningSql =
+    s"""SELECT c_custkey, l_orderkey, l_linenumber, l_extendedprice, l_discount
+       |FROM nation, customer, orders, lineitem
+       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+       | AND c_nationkey = n_nationkey
+       | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+       | AND l_returnflag = 'R'""".stripMargin
 
   /** Per-event running-output parity with the reference's A1 (one
     * `Output` row per delta, Q10AggregateProcessFunction.java:75-80):
@@ -1768,7 +1483,7 @@ object IncrementalQueries {
     * so must the oracle). */
   def incrementalQ10Running(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val leaf = runBatch(q10Tree, q10Changelogs(s, dir)).toDF()
+    val leaf = SqlCompiler.compile(s, dir, q10RunningSql).leafDeltas(s, dir, q10Deletes).toDF()
     // mult > 1 events (a parent flip replaying n identical buffered
     // children) EXPAND to n unit rows: the reference emits one Output
     // per base row, and the oracle counts per-row — a packed sign=±n
@@ -1798,6 +1513,32 @@ object IncrementalQueries {
   /** Rendered-CDC-lines directory per fixture dir, for this JVM. */
   private val cdcLineDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Directories [[tempDir]] made, deleted at JVM exit. */
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => exitDirs.forEach(d => deleteTree(d))))
+
+  /** A fresh temp directory named `prefix…`, deleted with everything
+    * under it when the JVM exits (`deleteOnExit` would only remove it
+    * empty): the one way an entry here makes a scratch table or line
+    * drop. */
+  private[graft] def tempDir(prefix: String): java.nio.file.Path = {
+    exitHook
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    exitDirs.add(dir)
+    dir
+  }
+
+  /** Delete `root` and everything under it, deepest paths first; a
+    * missing `root` is a no-op. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      import scala.jdk.CollectionConverters._
+      val paths = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+        _.iterator().asScala.toVector)
+      paths.sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists)
+    }
+
   private val lineitemCdcCols =
     Seq("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
 
@@ -1823,6 +1564,27 @@ object IncrementalQueries {
        | ) e JOIN r ON r.node = e.src
        |)
        |SELECT node FROM r""".stripMargin
+
+  // Reachability again, with HELPER CTEs around the recursion: the
+  // statement shared by the batch and maintained cte-mix entries.
+  private def recursiveCteMixSql(cast: String) =
+    s"""WITH RECURSIVE r AS (
+     | SELECT 's' || CAST(s_suppkey AS $cast) AS node
+     | FROM supplier WHERE s_nationkey = 1
+     | UNION
+     | SELECT e.dst AS node FROM edges e JOIN r ON r.node = e.src
+     |), edges AS (
+     | SELECT 'c' || CAST(o_custkey AS $cast) AS src,
+     |        's' || CAST(l_suppkey AS $cast) AS dst
+     | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+     | UNION ALL
+     | SELECT 's' || CAST(l_suppkey AS $cast) AS src,
+     |        'c' || CAST(o_custkey AS $cast) AS dst
+     | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+     |), reached AS (
+     | SELECT substr(node, 1, 1) AS kind, COUNT(*) AS n FROM r GROUP BY 1
+     |)
+     |SELECT kind, n FROM reached""".stripMargin
 
   private def recursivePathsBatches = Seq(
     Map("orders" -> (col("o_orderkey") % 3 === 0),
@@ -1861,7 +1623,7 @@ object IncrementalQueries {
     val c0 =
       if (partial.isEmpty) partial
       else {
-        val root = java.nio.file.Files.createTempDirectory("graft_rec_resume").toString
+        val root = tempDir("graft_rec_resume").toString
         SnapshotLog.commitInitial(
           partial.select(xxhash64(col("node")).as("k"), col("node")), root, "k")
         SnapshotLog.readVersion(s2, root, 0).select("node")
@@ -1870,6 +1632,171 @@ object IncrementalQueries {
       batches = recursivePathsBatches, deletesAt = deletesAt, deltaLinear = true,
       initialClosure = Some(c0), startBatch = 2)
   }
+
+  // Statements and oracles that two or more entries below share,
+  // each declared once.
+  private val unionAllOracle =
+    """WITH l AS (SELECT * FROM lineitem
+      |           WHERE l_returnflag = 'R' AND l_partkey % 3 <> 0)
+      |SELECT n_name,
+      | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+      | COUNT(*) AS n_rows
+      |FROM nation JOIN customer ON c_nationkey = n_nationkey
+      | JOIN orders ON o_custkey = c_custkey
+      | JOIN l ON l_orderkey = o_orderkey
+      |GROUP BY n_name
+      |UNION ALL
+      |SELECT n_name,
+      | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+      | COUNT(*) AS n_rows
+      |FROM nation JOIN supplier ON s_nationkey = n_nationkey
+      | JOIN l ON l_suppkey = s_suppkey
+      |GROUP BY n_name""".stripMargin
+
+  private val intersectOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT DISTINCT n_name FROM nation
+      |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
+      |INTERSECT
+      |SELECT DISTINCT n_name FROM nation
+      |JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 5000""".stripMargin
+
+  private val exceptOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT DISTINCT n_name FROM nation
+      |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
+      |EXCEPT
+      |SELECT DISTINCT n_name FROM nation
+      |JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 5000""".stripMargin
+
+  private val unionDistinctOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT n_name FROM nation
+      |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
+      |UNION
+      |SELECT n_name FROM nation
+      |JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 5000""".stripMargin
+
+  private val unionMixedOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT n_name FROM (
+      | SELECT n_name FROM nation JOIN c ON c_nationkey = n_nationkey
+      |  WHERE c_acctbal > 8000
+      | UNION ALL
+      | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
+      |  WHERE s_acctbal > 5000) u
+      |UNION
+      |SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 9000""".stripMargin
+
+  private val unionMixedSql =
+    """(SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
+      |  WHERE c_acctbal > 8000
+      | UNION ALL
+      | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
+      |  WHERE s_acctbal > 5000)
+      |UNION
+      |SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 9000""".stripMargin
+
+  private val intersectAllOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT n_name FROM nation
+      |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
+      |INTERSECT ALL
+      |SELECT n_name FROM nation
+      |JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 5000""".stripMargin
+
+  private val exceptAllOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
+      |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
+      |SELECT n_name FROM nation
+      |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
+      |EXCEPT ALL
+      |SELECT n_name FROM nation
+      |JOIN s ON s_nationkey = n_nationkey
+      |WHERE s_acctbal > 5000""".stripMargin
+
+  private val asofOracle =
+    """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
+      |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
+      |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id, c.ts AS asof_click_ts
+      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+
+  private val asofToleranceOracle =
+    """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
+      |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
+      |SELECT p.event_id, p.user_id, p.ts,
+      | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.click_id END AS asof_click_id,
+      | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.ts END AS asof_click_ts
+      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+
+  private val asofRightKeyOracle =
+    """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
+      |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
+      |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id,
+      | c.user_id AS asof_click_user, c.ts AS asof_click_ts
+      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+
+  private val overBranchOracle =
+    """WITH o AS (
+      | SELECT o_orderkey, o_custkey,
+      |  CASE WHEN o_orderkey % 160 = 1 THEN o_totalprice + 1000
+      |       ELSE o_totalprice END AS o_totalprice
+      | FROM orders WHERE o_orderkey % 160 <> 0
+      | UNION ALL
+      | SELECT o_orderkey + 10000000, o_custkey, o_totalprice
+      | FROM orders WHERE o_orderkey % 160 = 2),
+      |c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0)
+      |SELECT n_name, COUNT(*) AS n_orders,
+      | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
+      |FROM nation JOIN c ON c_nationkey = n_nationkey
+      |JOIN o ON o_custkey = c_custkey
+      |GROUP BY n_name""".stripMargin
+
+  private val q10FullOuterAncestorOracle =
+    """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
+      |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
+      |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
+      |SELECT c_custkey, n_name,
+      | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+      | COUNT(*) AS n_rows
+      |FROM nation JOIN c ON c_nationkey = n_nationkey
+      | JOIN o ON o_custkey = c_custkey
+      | FULL JOIN l ON l_orderkey = o_orderkey
+      |GROUP BY c_custkey, n_name""".stripMargin
+
+  private val joinViewOracle =
+    """SELECT n_name, o_orderpriority
+      |FROM nation, customer, orders
+      |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
+      | AND o_orderstatus = 'F'
+      | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin
+
+  private val q10OuterOracle =
+    s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+      | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
+      | COUNT(*) AS n_rows
+      |FROM nation
+      |JOIN customer ON c_nationkey = n_nationkey
+      |JOIN orders ON o_custkey = c_custkey
+      |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
+      | AND l_linenumber <> 3
+      |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
+      | AND o_orderkey % 50 <> 0
+      |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin
 
   val defs: Seq[GraftQuery] = Seq(
 
@@ -1971,42 +1898,8 @@ object IncrementalQueries {
     // binds before the loop and the recursive term reads it; `reached`
     // reads r, so it binds after the fixpoint for the outer query.
     // DuckDB runs the same mixed WITH natively.
-    sql("incremental_sql_recursive_cte_mix",
-      """WITH RECURSIVE r AS (
-        | SELECT 's' || CAST(s_suppkey AS VARCHAR) AS node
-        | FROM supplier WHERE s_nationkey = 1
-        | UNION
-        | SELECT e.dst AS node FROM edges e JOIN r ON r.node = e.src
-        |), edges AS (
-        | SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |        's' || CAST(l_suppkey AS VARCHAR) AS dst
-        | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        | UNION ALL
-        | SELECT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |        'c' || CAST(o_custkey AS VARCHAR) AS dst
-        | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |), reached AS (
-        | SELECT substr(node, 1, 1) AS kind, COUNT(*) AS n FROM r GROUP BY 1
-        |)
-        |SELECT kind, n FROM reached""".stripMargin) {
-      (s, d) => RecursiveSql.run(s, d,
-        """WITH RECURSIVE r AS (
-          | SELECT 's' || CAST(s_suppkey AS STRING) AS node
-          | FROM supplier WHERE s_nationkey = 1
-          | UNION
-          | SELECT e.dst AS node FROM edges e JOIN r ON r.node = e.src
-          |), edges AS (
-          | SELECT 'c' || CAST(o_custkey AS STRING) AS src,
-          |        's' || CAST(l_suppkey AS STRING) AS dst
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          | UNION ALL
-          | SELECT 's' || CAST(l_suppkey AS STRING) AS src,
-          |        'c' || CAST(o_custkey AS STRING) AS dst
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |), reached AS (
-          | SELECT substr(node, 1, 1) AS kind, COUNT(*) AS n FROM r GROUP BY 1
-          |)
-          |SELECT kind, n FROM reached""".stripMargin)
+    sql("incremental_sql_recursive_cte_mix", recursiveCteMixSql("VARCHAR")) {
+      (s, d) => RecursiveSql.run(s, d, recursiveCteMixSql("STRING"))
     },
 
     // … the CTE-mix MAINTAINED under the same insert-only changelog as
@@ -2018,42 +1911,9 @@ object IncrementalQueries {
     // per-relation delta seeds), and the post-fixpoint `reached` helper
     // binds after the final closure for the outer query. Oracle:
     // DuckDB's native mixed WITH over the full tables.
-    sql("incremental_sql_recursive_cte_mix_stream",
-      """WITH RECURSIVE r AS (
-        | SELECT 's' || CAST(s_suppkey AS VARCHAR) AS node
-        | FROM supplier WHERE s_nationkey = 1
-        | UNION
-        | SELECT e.dst AS node FROM edges e JOIN r ON r.node = e.src
-        |), edges AS (
-        | SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |        's' || CAST(l_suppkey AS VARCHAR) AS dst
-        | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        | UNION ALL
-        | SELECT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |        'c' || CAST(o_custkey AS VARCHAR) AS dst
-        | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |), reached AS (
-        | SELECT substr(node, 1, 1) AS kind, COUNT(*) AS n FROM r GROUP BY 1
-        |)
-        |SELECT kind, n FROM reached""".stripMargin) {
+    sql("incremental_sql_recursive_cte_mix_stream", recursiveCteMixSql("VARCHAR")) {
       (s, d) => RecursiveSql.runIncremental(s, d,
-        """WITH RECURSIVE r AS (
-          | SELECT 's' || CAST(s_suppkey AS STRING) AS node
-          | FROM supplier WHERE s_nationkey = 1
-          | UNION
-          | SELECT e.dst AS node FROM edges e JOIN r ON r.node = e.src
-          |), edges AS (
-          | SELECT 'c' || CAST(o_custkey AS STRING) AS src,
-          |        's' || CAST(l_suppkey AS STRING) AS dst
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          | UNION ALL
-          | SELECT 's' || CAST(l_suppkey AS STRING) AS src,
-          |        'c' || CAST(o_custkey AS STRING) AS dst
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |), reached AS (
-          | SELECT substr(node, 1, 1) AS kind, COUNT(*) AS n FROM r GROUP BY 1
-          |)
-          |SELECT kind, n FROM reached""".stripMargin,
+        recursiveCteMixSql("STRING"),
         batches = recursivePathsBatches, deltaLinear = true)
     },
 
@@ -2141,36 +2001,6 @@ object IncrementalQueries {
         CdcParser.parseJsonEnvelope(lines, rowSchema, jsonOpts)
     },
 
-    sql("incremental_q10", q10Oracle)(incrementalQ10),
-
-    // The SAME maintained tree folded into (nation, order month)
-    // buckets — see [[incrementalMonthlyRevenue]]: derived time-bucket
-    // group keys are a fold-side expression over carried columns, no
-    // new engine state.
-    sql("incremental_monthly_revenue",
-      s"""SELECT n_name, substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS order_month,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY n_name, order_month""".stripMargin)(incrementalMonthlyRevenue),
-
-    sql("incremental_monthly_revenue_stream",
-      s"""SELECT n_name, substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS order_month,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM customer, orders, lineitem, nation
-         |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-         | AND c_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R'
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
-         |GROUP BY n_name, order_month""".stripMargin)(incrementalMonthlyRevenueStream),
-
     // TOP-K over the MAINTAINED view — the presentation clause the
     // reference never implemented (SURVEY §2: sorts/limits ABSENT,
     // "even Q10's ORDER BY revenue DESC LIMIT 20"). The engine
@@ -2193,7 +2023,7 @@ object IncrementalQueries {
          |  AND l_linenumber <> 3 AND o_orderkey % 50 <> 0
          | GROUP BY c_custkey, c_name, c_acctbal, n_name) v
          |ORDER BY revenue_e4 DESC, c_custkey LIMIT 20""".stripMargin) {
-      (s, dir) => incrementalQ10(s, dir)
+      (s, dir) => q10View(s, dir)
         .orderBy(col("revenue_e4").desc, col("c_custkey"))
         .limit(20)
     },
@@ -2206,41 +2036,6 @@ object IncrementalQueries {
     // joined alive at some replay point) fails the hash against the
     // unreduced truth.
     sql("incremental_q10_bloom", q10Oracle)(incrementalQ10Bloom),
-
-    sql("incremental_order_revenue",
-      """SELECT n_name,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS totalprice_e2,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, customer, orders
-        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
-        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY n_name""".stripMargin)(incrementalOrderRevenue),
-
-    // Incremental semi-join: EXISTS compiled as set-semantics key node
-    // → liveness gate (see existsStages). The oracle is the literal
-    // correlated EXISTS over the changelogs' surviving rows.
-    sql("incremental_exists_semi",
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM customer
-        |WHERE c_custkey % 30 <> 0
-        | AND EXISTS (SELECT 1 FROM orders
-        |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |               AND o_orderkey % 40 <> 0)
-        |GROUP BY c_nationkey""".stripMargin)(incrementalExistsSemi),
-
-    // Incremental anti-join: NOT EXISTS via the inverted-liveness
-    // (antiParent) node over the SAME wiring and delete schedule.
-    sql("incremental_not_exists_anti",
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM customer
-        |WHERE c_custkey % 30 <> 0
-        | AND NOT EXISTS (SELECT 1 FROM orders
-        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |                   AND o_orderkey % 40 <> 0)
-        |GROUP BY c_nationkey""".stripMargin)(incrementalNotExistsAnti),
 
     // The reference's FULL dataflow end to end (DataFlow.java:63-119):
     // the changelog rendered as its CDC text format (one line stream,
@@ -2302,7 +2097,8 @@ object IncrementalQueries {
          | (SELECT COUNT(*) FROM lineitem
          |  WHERE l_returnflag = 'R' AND l_linenumber <> 3)""".stripMargin) {
       (s, d) =>
-        stateMetrics(chainStages(q10Tree), q10Changelogs(s, d))
+        val c = q10(s, d)
+        stateMetrics(c.stages, c.sourceChangelogs(s, d, q10Deletes))
           .select(col("node"), col("n_keys"), col("state_rows"))
     },
 
@@ -2339,17 +2135,6 @@ object IncrementalQueries {
     // The skew mitigation behind the hash gate — q10 with the
     // lineitem hop salted; same oracle as incremental_q10.
     sql("incremental_q10_salted", q10Oracle)(incrementalQ10Salted),
-
-    // The streaming engine (runStream), not its batch simulation,
-    // behind the hash gate — same oracle as incremental_q10.
-    sql("incremental_q10_stream", q10Oracle)(incrementalQ10Stream),
-
-    // The flagship tree on transformWithState (Spark 4's supported
-    // arbitrary-state API): per-node typed MapState child multisets
-    // (point reads/writes in RocksDB instead of per-batch blob
-    // rewrites), ValueState liveness counters, real per-key timers
-    // for TTL — same replay, same oracle as incremental_q10_stream.
-    sql("incremental_q10_tws", q10Oracle)(incrementalQ10Tws),
 
     // The maintained view MAINTAINED INTO THE LAKEHOUSE TABLE — the
     // reference's text-file sink upgraded: per-batch signed deltas
@@ -2391,7 +2176,7 @@ object IncrementalQueries {
          |FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
          |LEFT JOIN v ON v.c_custkey = c.c_custkey""".stripMargin) {
       (s, dir) =>
-        val view = incrementalQ10(s, dir)
+        val view = q10View(s, dir)
           .select(col("c_custkey"), col("revenue_e4"), col("n_rows").as("__n"))
         Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
           .join(broadcast(Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))),
@@ -2407,110 +2192,38 @@ object IncrementalQueries {
     // by l_orderkey in one and l_suppkey in the other), bag-unioned
     // as presentation. Oracle: the literal UNION ALL over the
     // delete-filtered fact.
-    sql("incremental_sql_union",
-      """WITH l AS (SELECT * FROM lineitem
-        |           WHERE l_returnflag = 'R' AND l_partkey % 3 <> 0)
-        |SELECT n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN orders ON o_custkey = c_custkey
-        | JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY n_name
-        |UNION ALL
-        |SELECT n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN supplier ON s_nationkey = n_nationkey
-        | JOIN l ON l_suppkey = s_suppkey
-        |GROUP BY n_name""".stripMargin)(incrementalSqlUnion),
+    sql("incremental_sql_union", unionAllOracle)(incrementalSqlUnion),
 
     // … and through the CONTINUOUS engine: each branch replays its own
     // micro-batched tree, the union happens on the maintained outputs.
-    sql("incremental_sql_union_stream",
-      """WITH l AS (SELECT * FROM lineitem
-        |           WHERE l_returnflag = 'R' AND l_partkey % 3 <> 0)
-        |SELECT n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey
-        | JOIN orders ON o_custkey = c_custkey
-        | JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY n_name
-        |UNION ALL
-        |SELECT n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN supplier ON s_nationkey = n_nationkey
-        | JOIN l ON l_suppkey = s_suppkey
-        |GROUP BY n_name""".stripMargin)(incrementalSqlUnionStream),
+    sql("incremental_sql_union_stream", unionAllOracle)(incrementalSqlUnionStream),
 
     // Maintained INTERSECT — the cross-branch netting UNION ALL never
     // needed: the right branch's distinct tuples gate the left's
     // through a set-semantics key node + liveness hop keyed by the
     // OUTPUT ROW itself; deletes on either side flip tuples in/out.
     // Oracle: DuckDB's native INTERSECT over the survivor CTEs.
-    sql("incremental_sql_intersect",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |INTERSECT
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlIntersect),
+    sql("incremental_sql_intersect", intersectOracle)(incrementalSqlIntersect),
 
     // Maintained EXCEPT — the same wiring with the hop inverted
     // (antiParent): tuples survive while ABSENT from the right, so a
     // right-side delete must flip tuples INTO the result.
-    sql("incremental_sql_except",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |EXCEPT
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlExcept),
+    sql("incremental_sql_except", exceptOracle)(incrementalSqlExcept),
 
     // Maintained bare UNION (SET semantics) — multiplicity collapse
     // across bag branches through one netting node: a nation with 3
     // qualifying customers and 2 qualifying suppliers is ONE row, and
     // stays present until the LAST qualifying row on either side is
     // deleted. Oracle: DuckDB's native UNION over the survivor CTEs.
-    sql("incremental_sql_union_distinct",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |UNION
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlUnionDistinct),
+    sql("incremental_sql_union_distinct", unionDistinctOracle)(incrementalSqlUnionDistinct),
 
     // … and through the CONTINUOUS engine: branch trees and the
     // netting node in ONE streaming query, same oracle.
-    sql("incremental_sql_union_distinct_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |UNION
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)((s, d) => incrementalSqlUnionDistinctStream(s, d)),
+    sql("incremental_sql_union_distinct_stream", unionDistinctOracle)((s, d) => incrementalSqlUnionDistinctStream(s, d)),
 
     // … and on the TRANSFORMWITHSTATE driver — the cross-branch
     // netting node as a StatefulProcessor, same oracle.
-    sql("incremental_sql_union_distinct_tws",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |UNION
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(
+    sql("incremental_sql_union_distinct_tws", unionDistinctOracle)(
       (s, d) => incrementalSqlUnionDistinctStream(s, d, tws = true)),
 
     // MIXED union ASSOCIATION under set semantics: a parenthesized
@@ -2520,151 +2233,54 @@ object IncrementalQueries {
     // "parenthesize to fix the association" fence, now a plan. The
     // converse (a set group under UNION ALL) stays fenced: it does
     // not collapse.
-    sql("incremental_sql_union_mixed",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM (
-        | SELECT n_name FROM nation JOIN c ON c_nationkey = n_nationkey
-        |  WHERE c_acctbal > 8000
-        | UNION ALL
-        | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
-        |  WHERE s_acctbal > 5000) u
-        |UNION
-        |SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 9000""".stripMargin) {
-      (s, dir) => SqlCompiler.compileUnionDistinct(s, dir,
-        """(SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
-          |  WHERE c_acctbal > 8000
-          | UNION ALL
-          | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          |  WHERE s_acctbal > 5000)
-          |UNION
-          |SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE s_acctbal > 9000""".stripMargin)
+    sql("incremental_sql_union_mixed", unionMixedOracle) {
+      (s, dir) => SqlCompiler.compileUnionDistinct(s, dir, unionMixedSql)
         .run(s, dir, setOpDeletes)
     },
 
-    sql("incremental_sql_union_mixed_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM (
-        | SELECT n_name FROM nation JOIN c ON c_nationkey = n_nationkey
-        |  WHERE c_acctbal > 8000
-        | UNION ALL
-        | SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
-        |  WHERE s_acctbal > 5000) u
-        |UNION
-        |SELECT n_name FROM nation JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 9000""".stripMargin) {
-      (s, dir) => streamUnionDistinct(s, SqlCompiler.compileUnionDistinct(s, dir,
-        """(SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
-          |  WHERE c_acctbal > 8000
-          | UNION ALL
-          | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          |  WHERE s_acctbal > 5000)
-          |UNION
-          |SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
-          |WHERE s_acctbal > 9000""".stripMargin),
+    sql("incremental_sql_union_mixed_stream", unionMixedOracle) {
+      (s, dir) => streamUnionDistinct(s, SqlCompiler.compileUnionDistinct(s, dir, unionMixedSql),
         dir, setOpDeletes, "incremental_sql_union_mixed_stream_leaf")
     },
 
     // INTERSECT's liveness-gated hop on the TWS drivers, same oracle
     // as incremental_sql_intersect.
-    sql("incremental_sql_intersect_tws",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |INTERSECT
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlIntersectTws),
+    sql("incremental_sql_intersect_tws", intersectOracle)(incrementalSqlIntersectTws),
 
     // INTERSECT ALL — bag multiplicities via counts-based netting:
     // per nation, min(#qualifying customers, #qualifying suppliers)
     // copies survive; deletes move either count and the multiplicity
     // follows. Oracle: DuckDB's native INTERSECT ALL over survivors.
-    sql("incremental_sql_intersect_all",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |INTERSECT ALL
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlIntersectAll),
+    sql("incremental_sql_intersect_all", intersectAllOracle)(incrementalSqlIntersectAll),
 
     // EXCEPT ALL — the surplus max(nl − nr, 0) per tuple.
-    sql("incremental_sql_except_all",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |EXCEPT ALL
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlExceptAll),
+    sql("incremental_sql_except_all", exceptAllOracle)(incrementalSqlExceptAll),
 
     // … and their CONTINUOUS twins: both branch trees in one streaming
     // query, side-tagged deltas, bag formula at presentation.
-    sql("incremental_sql_intersect_all_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |INTERSECT ALL
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlIntersectAllStream),
+    sql("incremental_sql_intersect_all_stream", intersectAllOracle)(incrementalSqlIntersectAllStream),
 
-    sql("incremental_sql_except_all_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |EXCEPT ALL
-        |SELECT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlExceptAllStream),
+    sql("incremental_sql_except_all_stream", exceptAllOracle)(incrementalSqlExceptAllStream),
 
     // ASOF JOIN from SQL TEXT — the as-of machinery green via the API
     // since r8, now reachable from a query string: compileAsOf parses
     // the DuckDB spelling (inequality in ON; Snowflake MATCH_CONDITION
     // accepted) and lowers onto the union-window operator. Same oracle
     // as events_asof_join.
-    sql("incremental_sql_asof",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id, c.ts AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof", asofOracle)(
       incrementalSqlAsOf),
 
     // … with a TOLERANCE bound in the ON clause (kdb aj / pandas
     // merge_asof): `p.ts - c.ts <= INTERVAL 1 HOUR` compiles onto the
     // operator's staleness conditional. Same oracle as
     // events_asof_tolerance.
-    sql("incremental_sql_asof_tolerance",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts,
-        | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.click_id END AS asof_click_id,
-        | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.ts END AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof_tolerance", asofToleranceOracle)(
       incrementalSqlAsOfTolerance),
 
     // … and the tolerance bound through the CONTINUOUS operator: the
     // compiled spec's toleranceMicros drives streamAsOfJoin's
     // staleness conditional, same oracle as the batch tolerance form.
-    sql("incremental_sql_asof_tolerance_stream",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts,
-        | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.click_id END AS asof_click_id,
-        | CASE WHEN p.ts - c.ts <= INTERVAL 1 HOUR THEN c.ts END AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof_tolerance_stream", asofToleranceOracle)(
       (s, d) => incrementalSqlAsOfStream(s, d,
         sqlText = """SELECT p.event_id, p.user_id, p.ts,
           | c.click_id AS asof_click_id, c.ts AS asof_click_ts
@@ -2676,12 +2292,7 @@ object IncrementalQueries {
     // … and the same compiled spec lowered onto the CONTINUOUS
     // operator (streamAsOfJoin micro-batch replay), same oracle — the
     // SQL surface drives the stream, not a hand-wired twin.
-    sql("incremental_sql_asof_stream",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id, c.ts AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof_stream", asofOracle)(
       (s, d) => incrementalSqlAsOfStream(s, d)),
 
     // … with the RIGHT KEY in the select list: under LEFT the null
@@ -2689,25 +2300,13 @@ object IncrementalQueries {
     // the key) — the lowering gates the left-key substitution on the
     // match witness instead of substituting unconditionally. 143 of
     // the 1981 sf0.01 purchases take the NULL path.
-    sql("incremental_sql_asof_rightkey",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id,
-        | c.user_id AS asof_click_user, c.ts AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof_rightkey", asofRightKeyOracle)(
       incrementalSqlAsOfRightKey),
 
     // … and the same right-key select through the CONTINUOUS
     // operator — the stream lowering's final projection carries the
     // identical match-witness gate. Same oracle.
-    sql("incremental_sql_asof_rightkey_stream",
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts, c.click_id AS asof_click_id,
-        | c.user_id AS asof_click_user, c.ts AS asof_click_ts
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin)(
+    sql("incremental_sql_asof_rightkey_stream", asofRightKeyOracle)(
       (s, d) => incrementalSqlAsOfStream(s, d, sqlText = asofRightKeySql,
         sinkName = "incremental_sql_asof_rightkey_stream")),
 
@@ -2717,77 +2316,23 @@ object IncrementalQueries {
     // changelogs and deletes all flow through the override. Oracle:
     // the branch head reconstructed in SQL (v1 = update + delete +
     // shifted-insert batches applied to the parquet base).
-    sql("incremental_sql_over_branch",
-      """WITH o AS (
-        | SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 160 = 1 THEN o_totalprice + 1000
-        |       ELSE o_totalprice END AS o_totalprice
-        | FROM orders WHERE o_orderkey % 160 <> 0
-        | UNION ALL
-        | SELECT o_orderkey + 10000000, o_custkey, o_totalprice
-        | FROM orders WHERE o_orderkey % 160 = 2),
-        |c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0)
-        |SELECT n_name, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |JOIN o ON o_custkey = c_custkey
-        |GROUP BY n_name""".stripMargin)(incrementalSqlOverBranch),
+    sql("incremental_sql_over_branch", overBranchOracle)(incrementalSqlOverBranch),
 
     // … and the branch-sourced maintained view through the CONTINUOUS
     // engine, same oracle.
-    sql("incremental_sql_over_branch_stream",
-      """WITH o AS (
-        | SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 160 = 1 THEN o_totalprice + 1000
-        |       ELSE o_totalprice END AS o_totalprice
-        | FROM orders WHERE o_orderkey % 160 <> 0
-        | UNION ALL
-        | SELECT o_orderkey + 10000000, o_custkey, o_totalprice
-        | FROM orders WHERE o_orderkey % 160 = 2),
-        |c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0)
-        |SELECT n_name, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_e2
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        |JOIN o ON o_custkey = c_custkey
-        |GROUP BY n_name""".stripMargin)(incrementalSqlOverBranchStream),
+    sql("incremental_sql_over_branch_stream", overBranchOracle)(incrementalSqlOverBranchStream),
 
     // … both through the CONTINUOUS engine: branch trees AND set
     // stages in one streaming query, flips crossing micro-batches.
-    sql("incremental_sql_intersect_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |INTERSECT
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlIntersectStream),
+    sql("incremental_sql_intersect_stream", intersectOracle)(incrementalSqlIntersectStream),
 
-    sql("incremental_sql_except_stream",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 13 <> 0),
-        |     s AS (SELECT * FROM supplier WHERE s_suppkey % 7 <> 0)
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN c ON c_nationkey = n_nationkey WHERE c_acctbal > 8000
-        |EXCEPT
-        |SELECT DISTINCT n_name FROM nation
-        |JOIN s ON s_nationkey = n_nationkey
-        |WHERE s_acctbal > 5000""".stripMargin)(incrementalSqlExceptStream),
+    sql("incremental_sql_except_stream", exceptOracle)(incrementalSqlExceptStream),
 
     // … the same compiled FULL OUTER (fused leaf + anti plan, ancestor
     // deletes) through the TRANSFORMWITHSTATE runner — the compiler's
     // hardest maintained shape on the supported state API, same
     // oracle: three state implementations, one truth.
-    sql("incremental_sql_q10_fullouter_tws",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin)(incrementalSqlQ10FullOuterTws),
+    sql("incremental_sql_q10_fullouter_tws", q10FullOuterAncestorOracle)(incrementalSqlQ10FullOuterTws),
 
     sql("incremental_q10_rev_quantile",
       s"""WITH v AS (
@@ -2831,16 +2376,6 @@ object IncrementalQueries {
          |   ORDER BY seq, l_orderkey, l_linenumber, sign, rev_e4
          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_revenue_e4
          |FROM ev""".stripMargin)(incrementalQ10Running),
-
-    sql("incremental_supplier_rev",
-      """SELECT n_name,
-        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM region, nation, supplier, lineitem
-        |WHERE n_regionkey = r_regionkey AND s_nationkey = n_nationkey
-        | AND l_suppkey = s_suppkey AND r_name IN ('ASIA', 'EUROPE')
-        | AND l_quantity >= 25 AND l_linenumber <> 2 AND s_suppkey % 20 <> 0
-        |GROUP BY n_name""".stripMargin)(incrementalSupplierRevenue),
 
     // Pearson CORRELATION maintained incrementally — the compiler
     // folds retractable CO-MOMENTS (n, Σx, Σy, Σx², Σy², Σxy) exactly
@@ -2992,53 +2527,15 @@ object IncrementalQueries {
     // VIEW MODE through the CONTINUOUS engine — same oracle as
     // incremental_sql_join_view, so stream/batch view divergence
     // fails the hash.
-    sql("incremental_sql_view_stream",
-      """SELECT n_name, o_orderpriority
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin)(
+    sql("incremental_sql_view_stream", joinViewOracle)(
       incrementalSqlViewStream),
-
-    // BRANCHING tree (multi-parent lineitem: orders-chain AND part) —
-    // the AJU capability beyond a chain. The oracle is the plain-SQL
-    // survivors query over the five-way join with deletes excluded on
-    // both branches.
-    sql("incremental_part_revenue",
-      s"""SELECT n_name, p_brand,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem, part
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R' AND p_size <= 25
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
-         |GROUP BY n_name, p_brand""".stripMargin)(incrementalPartRevenue),
-
-    // SHARED DIMENSION (many-to-many): nation referenced by both the
-    // customer→orders trunk and the supplier branch. The maintained
-    // aggregate folds signed PAIR deltas — every (order, supplier)
-    // pair of a nation — against the plain-SQL survivors oracle, with
-    // deletes on both sides of the product.
-    sql("incremental_shared_dim", sharedDimOracle)(incrementalSharedRevenue),
 
     // The dimension-keyed plan trunk-bucketed by the EXPLICIT
     // swapPairOrientation API (S = 8) behind the SAME oracle — both
     // construction paths to the bucketed product must be
     // answer-invariant. (The default incremental_shared_dim plan is
     // already trunk-bucketed via PairOrientation.Auto.)
-    sql("incremental_shared_dim_salted", sharedDimOracle)(incrementalSharedRevenueSalted),
-
-    // The CONTINUOUS pair stage itself (runStreamTree micro-batches,
-    // state across batches) behind the same survivors oracle.
-    sql("incremental_shared_dim_stream", sharedDimOracle)(incrementalSharedStream),
-
-    // The pair stage on transformWithState — same replay, same
-    // survivors oracle; with incremental_q10_tws this puts the whole
-    // stage vocabulary (liveness AND pair) on the supported
-    // arbitrary-state API.
-    sql("incremental_shared_dim_tws", sharedDimOracle)(incrementalSharedTws)) ++ maintainedViews
+    sql("incremental_shared_dim_salted", sharedDimOracle)(incrementalSharedRevenueSalted)) ++ maintainedViews
 
   private def starFullOuterSql =
     """SELECT n_name, c_mktsegment, COUNT(*) AS n_rows,
@@ -3234,12 +2731,100 @@ object IncrementalQueries {
     * unchanged, declared once through [[maintained]]. */
   private def maintainedViews: Seq[GraftQuery] = Seq(
 
-    // The SAME query as incremental_q10, but compiled FROM SQL TEXT by
-    // [[SqlCompiler]] (Catalyst parser → FK-graph validation → NodeSpec
-    // chain): the reference's "continuous sql query" pitch as an
-    // actual API. Deletes mirror the q10 changelog set; the oracle is
-    // the plain-SQL survivors query.
+    // The flagship maintained view: Q10 over the synthetic changelog,
+    // its continuous twin (runStreamTree micro-batches, node state
+    // carried across batches in the state store) and its
+    // transformWithState twin (per-node typed MapState child
+    // multisets, ValueState liveness) — three runners, one oracle.
+    maintained("incremental_q10", q10Oracle, q10Sql, q10Deletes, twins = Seq(Stream, Tws)),
+
+    // The SAME query under the incremental_sql_ name — the reference's
+    // "continuous sql query" pitch as an actual API, each entry
+    // gated on its own name.
     maintained("incremental_sql_q10", q10Oracle, q10Sql, q10Deletes),
+
+    // The SAME maintained tree grouped into (nation, order month)
+    // buckets (see [[monthlyOracle]]); the stream twin catches a
+    // retraction landing in the wrong month across micro-batch
+    // boundaries.
+    maintained("incremental_monthly_revenue", monthlyOracle, monthlySql, q10Deletes),
+
+    // A region→nation→customer→orders chain with deletes on a
+    // MID-CHAIN node (customer: death fans out through its orders) and
+    // on orders.
+    maintained("incremental_order_revenue",
+      """SELECT n_name,
+        | CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS totalprice_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        | AND c_custkey % 11 <> 0 AND o_orderkey % 7 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name,
+        | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS totalprice_e2,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, customer, orders
+        |WHERE n_regionkey = r_regionkey AND c_nationkey = n_nationkey AND o_custkey = c_custkey
+        | AND r_name <> 'AFRICA' AND o_orderstatus = 'F'
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "customer" -> (col("c_custkey") % 11 === 0),
+        "orders" -> (col("o_orderkey") % 7 === 0)),
+      twins = Nil),
+
+    // A region→nation→supplier→lineitem tree: a root predicate (region
+    // filter), a numeric leaf predicate, supplier deletes (parent-death
+    // fan-out over that supplier's lineitems) and lineitem deletes.
+    maintained("incremental_supplier_rev",
+      """SELECT n_name,
+        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, supplier, lineitem
+        |WHERE n_regionkey = r_regionkey AND s_nationkey = n_nationkey
+        | AND l_suppkey = s_suppkey AND r_name IN ('ASIA', 'EUROPE')
+        | AND l_quantity >= 25 AND l_linenumber <> 2 AND s_suppkey % 20 <> 0
+        |GROUP BY n_name""".stripMargin,
+      """SELECT n_name,
+        | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
+        | COUNT(*) AS n_rows
+        |FROM region, nation, supplier, lineitem
+        |WHERE n_regionkey = r_regionkey AND s_nationkey = n_nationkey
+        | AND l_suppkey = s_suppkey AND r_name IN ('ASIA', 'EUROPE')
+        | AND l_quantity >= 25
+        |GROUP BY n_name""".stripMargin,
+      Map(
+        "supplier" -> (col("s_suppkey") % 20 === 0),
+        "lineitem" -> (col("l_linenumber") === 2)),
+      twins = Nil),
+
+    // Incremental semi- and anti-join (see [[existsOracle]]): EXISTS
+    // and NOT EXISTS over the same changelog and delete schedule.
+    maintained("incremental_exists_semi", existsOracle, existsSql(""), existsDeletes,
+      twins = Nil),
+    maintained("incremental_not_exists_anti",
+      """SELECT c_nationkey, COUNT(*) AS n_cust,
+        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
+        |FROM customer
+        |WHERE c_custkey % 30 <> 0
+        | AND NOT EXISTS (SELECT 1 FROM orders
+        |                 WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
+        |                   AND o_orderkey % 40 <> 0)
+        |GROUP BY c_nationkey""".stripMargin,
+      existsSql("NOT "), existsDeletes, twins = Nil),
+
+    // BRANCHING tree (multi-parent lineitem: orders-chain AND part) —
+    // the AJU capability beyond a chain (see [[partRevenueSql]]).
+    maintained("incremental_part_revenue", partRevenueOracle, partRevenueSql,
+      partRevenueDeletes, twins = Nil),
+
+    // SHARED DIMENSION (many-to-many, see [[sharedDimSql]]): the
+    // maintained aggregate folds signed PAIR deltas — every (order,
+    // supplier) pair of a nation — with deletes on both sides of the
+    // product; the stream and transformWithState twins put the whole
+    // stage vocabulary (liveness AND pair) behind the same oracle.
+    maintained("incremental_shared_dim", sharedDimOracle, sharedDimSql, sharedDimDeletes,
+      twins = Seq(Stream, Tws)),
 
     // Conf-wired skew salting through the COMPILER (the bloom conf
     // pattern) — lineitem's stage folds over 8 salted sub-keys; the
@@ -3254,18 +2839,7 @@ object IncrementalQueries {
     // into one fold; NULL-extended orders (no R-lineitem) keep
     // COUNT(*) alive while SUM skips them. Oracle: the same LEFT JOIN
     // over the survivors.
-    maintained("incremental_sql_q10_outer",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
+    maintained("incremental_sql_q10_outer", q10OuterOracle,
       q10OuterSql, q10OuterDeletes),
 
     // FULL OUTER JOIN from SQL text — both preservation directions
@@ -3410,17 +2984,7 @@ object IncrementalQueries {
     // customer must orphan its orders' lineitems — the tree-prefix
     // orphan key node sees the flip through the customer hop. Oracle:
     // all three delete sets as derived tables, orphans via FULL JOIN.
-    maintained("incremental_sql_q10_fullouter_ancestor_del",
-      """WITH c AS (SELECT * FROM customer WHERE c_custkey % 30 <> 0),
-        |     o AS (SELECT * FROM orders WHERE o_orderkey % 50 <> 0),
-        |     l AS (SELECT * FROM lineitem WHERE l_partkey % 3 <> 0)
-        |SELECT c_custkey, n_name,
-        | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-        | COUNT(*) AS n_rows
-        |FROM nation JOIN c ON c_nationkey = n_nationkey
-        | JOIN o ON o_custkey = c_custkey
-        | FULL JOIN l ON l_orderkey = o_orderkey
-        |GROUP BY c_custkey, n_name""".stripMargin,
+    maintained("incremental_sql_q10_fullouter_ancestor_del", q10FullOuterAncestorOracle,
       q10FullOuterSql, q10FullOuterAncestorDeletes),
 
     // TWO NESTED FULL OUTER boundaries × WHERE — the r10 verdict's
@@ -3516,18 +3080,7 @@ object IncrementalQueries {
     // onto the LEFT OUTER machinery (children swapped, preserved side
     // unchanged); same oracle as the LEFT form because the two
     // spellings denote the same view.
-    maintained("incremental_sql_q10_right",
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         | CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation
-         |JOIN customer ON c_nationkey = n_nationkey
-         |JOIN orders ON o_custkey = c_custkey
-         |LEFT JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-         | AND l_linenumber <> 3
-         |WHERE o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND o_orderkey % 50 <> 0
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name""".stripMargin,
+    maintained("incremental_sql_q10_right", q10OuterOracle,
       s"""SELECT c_custkey, c_name, c_acctbal, n_name,
          | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
          | COUNT(*) AS n_rows
@@ -3771,26 +3324,9 @@ object IncrementalQueries {
     // set-semantics key node over orders(o_custkey) gating customer's
     // changelog through an extra liveness hop (SqlCompiler gate
     // surgery); the subquery's local predicate is pushed to the orders
-    // scan. Same changelog/delete schedule as the hand-built
-    // incremental_exists_semi, proving text and tree agree.
-    maintained("incremental_sql_exists",
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS acctbal_e2
-        |FROM customer
-        |WHERE c_custkey % 30 <> 0
-        | AND EXISTS (SELECT 1 FROM orders
-        |             WHERE o_custkey = c_custkey AND o_orderstatus = 'O'
-        |               AND o_orderkey % 40 <> 0)
-        |GROUP BY c_nationkey""".stripMargin,
-      """SELECT c_nationkey, COUNT(*) AS n_cust,
-        | SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS acctbal_e2
-        |FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-        |GROUP BY c_nationkey""".stripMargin,
-      Map(
-        "customer" -> (col("c_custkey") % 30 === 0),
-        "orders" -> (col("o_orderkey") % 40 === 0))),
+    // scan. The same declaration as incremental_exists_semi, with a
+    // stream twin.
+    maintained("incremental_sql_exists", existsOracle, existsSql(""), existsDeletes),
 
     // NOT EXISTS from SQL text, composed WITH an outer FK tree: the
     // anti gate splices in front of customer's tree stage (base
@@ -4210,12 +3746,7 @@ object IncrementalQueries {
     // pair (n_name, o_orderpriority) is deliberately low-cardinality so
     // most net counts are way above 1: the multiplicity machinery, not
     // just survivorship, is what the row-count+hash compare checks.
-    maintained("incremental_sql_join_view",
-      """SELECT n_name, o_orderpriority
-        |FROM nation, customer, orders
-        |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-        | AND o_orderstatus = 'F'
-        | AND o_orderkey % 10 <> 0 AND c_custkey % 13 <> 0""".stripMargin,
+    maintained("incremental_sql_join_view", joinViewOracle,
       """SELECT n_name, o_orderpriority
         |FROM nation, customer, orders
         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
@@ -4260,20 +3791,8 @@ object IncrementalQueries {
         "orders" -> (col("o_orderkey") % 10 === 0),
         "customer" -> (col("c_custkey") % 13 === 0))),
 
-    // The SAME shared-dimension query compiled FROM SQL TEXT.
-    maintained("incremental_sql_shared_dim", sharedDimOracle,
-      s"""SELECT n_name,
-         | SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS revenue_e2,
-         | COUNT(*) AS n_pairs
-         |FROM nation, customer, orders, supplier
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND s_nationkey = n_nationkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND s_acctbal >= 0
-         |GROUP BY n_name""".stripMargin,
-      Map(
-        "orders" -> (col("o_orderkey") % 7 === 0),
-        "supplier" -> (col("s_suppkey") % 5 === 0))),
+    // The SAME shared-dimension query under the incremental_sql_ name.
+    maintained("incremental_sql_shared_dim", sharedDimOracle, sharedDimSql, sharedDimDeletes),
 
     // Shared dimension WITH a parent above it: region's liveness
     // threads through the trunk (region→nation→customer) before the
@@ -4299,32 +3818,10 @@ object IncrementalQueries {
         "customer" -> (col("c_custkey") % 6 === 0),
         "supplier" -> (col("s_suppkey") % 5 === 0))),
 
-    // The SAME branching query compiled FROM SQL TEXT: SqlCompiler
-    // linearizes the multi-parent lineitem into per-FK stages.
-    maintained("incremental_sql_part_revenue",
-      s"""SELECT n_name, p_brand,
-         | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem, part
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R' AND p_size <= 25
-         | AND l_linenumber <> 3 AND o_orderkey % 50 <> 0 AND p_partkey % 10 <> 0
-         |GROUP BY n_name, p_brand""".stripMargin,
-      s"""SELECT n_name, p_brand,
-         | SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT)) AS revenue_e4,
-         | COUNT(*) AS n_rows
-         |FROM nation, customer, orders, lineitem, part
-         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
-         | AND l_orderkey = o_orderkey AND l_partkey = p_partkey
-         | AND o_orderdate >= TIMESTAMP '$dateLo' AND o_orderdate < TIMESTAMP '$dateHi'
-         | AND l_returnflag = 'R' AND p_size <= 25
-         |GROUP BY n_name, p_brand""".stripMargin,
-      Map(
-        "lineitem" -> (col("l_linenumber") === 3),
-        "orders" -> (col("o_orderkey") % 50 === 0),
-        "part" -> (col("p_partkey") % 10 === 0))),
+    // The SAME branching query under the incremental_sql_ name, with
+    // a stream twin.
+    maintained("incremental_sql_part_revenue", partRevenueOracle, partRevenueSql,
+      partRevenueDeletes),
 
     // INDEPENDENT (star) double FULL OUTER — two boundaries hanging
     // off the SAME inner parent factorize into the per-boundary

@@ -187,12 +187,12 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   }
 
   test("runBatch node stats count per-hop events and emissions") {
-    import graft.streaming.{DeltaEngine, IncrementalQueries}
+    import graft.streaming.DeltaEngine
     val s = SparkTestSession.spark
     val d = SparkTestSession.sfTiny
     val buf = scala.collection.mutable.Buffer.empty[DeltaEngine.NodeStats]
-    val leaf = DeltaEngine.runBatch(IncrementalQueries.q10Tree,
-      IncrementalQueries.q10Changelogs(s, d), stats = Some(buf))
+    val (stages, logs) = SparkTestSession.q10Tree(s, d)
+    val leaf = DeltaEngine.runTree(stages, logs, stats = Some(buf))
     val leafCount = leaf.count()
     assert(buf.map(_.relation) == Seq("nation", "customer", "orders", "lineitem"))
     // the leaf node's emissions ARE the result deltas
@@ -302,7 +302,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val s = SparkTestSession.spark
     val d = SparkTestSession.sfTiny
     import org.apache.spark.sql.functions._
-    val got = IncrementalQueries.incrementalPartRevenue(s, d)
+    val got = SparkEntry.queries("incremental_part_revenue")(s, d)
       .orderBy("n_name", "p_brand").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
     val expected = Tables.nation(s, d)
@@ -782,9 +782,10 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   test("stage validation fails loudly on mis-keyed or out-of-order graphs") {
     import graft.streaming.DeltaEngine
     val s = SparkTestSession.spark
-    val logs = IncrementalQueries.partRevenueChangelogs(s, SparkTestSession.sfTiny)
+    val (partRevenueStages, logs) = SparkTestSession.compiledTree(s, SparkTestSession.sfTiny,
+      IncrementalQueries.partRevenueSql, IncrementalQueries.partRevenueDeletes)
     // ownStage whose nextKeyCol doesn't match the consumer's childKeyCol
-    val misKeyed = IncrementalQueries.partRevenueStages.map {
+    val misKeyed = partRevenueStages.map {
       case st if st.name == "lineitem" =>
         st.copy(spec = st.spec.copy(nextKeyCol = "l_orderkey"))
       case st => st
@@ -794,13 +795,13 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     }
     assert(e1.getMessage.contains("mis-keyed"))
     // a stage referencing one that comes after it
-    val reordered = IncrementalQueries.partRevenueStages.sortBy(_.name)
+    val reordered = partRevenueStages.sortBy(_.name)
     intercept[IllegalArgumentException] {
       DeltaEngine.runTree(reordered, logs)
     }
     // a salting factor outside [1, 1e6) names the stage, before any plan
     for (salts <- Seq(0, 1000000)) {
-      val badSalts = IncrementalQueries.partRevenueStages.map {
+      val badSalts = partRevenueStages.map {
         case st if st.name == "orders" => st.copy(salts = salts)
         case st => st
       }
@@ -820,9 +821,17 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val rels = TreeCompiler.fromParquet(SparkTestSession.spark, SparkTestSession.sfTiny,
       Seq("region", "nation", "customer", "supplier", "orders", "lineitem", "part"))
     val q10 = TreeCompiler.compile(rels, Seq("nation", "customer", "orders", "lineitem"))
-    assert(q10 == IncrementalQueries.q10Tree)
+    assert(q10 == Seq(
+      NodeSpec("nation", "n_nationkey", "n_nationkey", isRoot = true, setSemantics = true),
+      NodeSpec("customer", "c_nationkey", "c_custkey"),
+      NodeSpec("orders", "o_custkey", "o_orderkey"),
+      NodeSpec("lineitem", "l_orderkey", "l_orderkey")))
     val sup = TreeCompiler.compile(rels, Seq("region", "nation", "supplier", "lineitem"))
-    assert(sup == IncrementalQueries.supplierTree)
+    assert(sup == Seq(
+      NodeSpec("region", "r_regionkey", "r_regionkey", isRoot = true, setSemantics = true),
+      NodeSpec("nation", "n_regionkey", "n_nationkey"),
+      NodeSpec("supplier", "s_nationkey", "s_suppkey"),
+      NodeSpec("lineitem", "l_suppkey", "l_suppkey")))
   }
 
   test("TreeCompiler finds unique paths and refuses ambiguous ones loudly") {
@@ -887,7 +896,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     val s = SparkTestSession.spark
     val d = SparkTestSession.sfTiny
     import org.apache.spark.sql.functions._
-    val got = IncrementalQueries.incrementalOrderRevenue(s, d)
+    val got = SparkEntry.queries("incremental_order_revenue")(s, d)
       .orderBy("n_name").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val expected = Tables.region(s, d).filter(col("r_name") =!= "AFRICA")
       .join(Tables.nation(s, d), col("n_regionkey") === col("r_regionkey"))
@@ -937,7 +946,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     // order date window vastly outnumber survivors)…
     val ss = s.newSession()
     ss.conf.set(IncrementalQueries.BloomPrefilterConf, "true")
-    val logs = IncrementalQueries.q10Changelogs(ss, d)
+    val (_, logs) = SparkTestSession.q10Tree(ss, d)
     val reduced = IncrementalQueries.bloomPrefilterChild(logs,
       "orders", "o_orderkey", "lineitem", expectedItems = 200000L, fpp = 0.01)
     val before = logs("lineitem").count()
@@ -953,8 +962,7 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       .exceptAll(orderKeys.join(keptKeys, "key")).count() == 0)
 
     // …and without the conf the changelog map passes through untouched
-    val off = IncrementalQueries.bloomPrefilterChild(
-      IncrementalQueries.q10Changelogs(s, d),
+    val off = IncrementalQueries.bloomPrefilterChild(SparkTestSession.q10Tree(s, d)._2,
       "orders", "o_orderkey", "lineitem", expectedItems = 200000L, fpp = 0.01)
     assert(off("lineitem").count() == before)
   }

@@ -83,12 +83,14 @@ class LocalCheckpointFsSpec extends AnyFunSuite {
     import session.implicits._
     val stock = classOf[FileContextBasedCheckpointFileManager].getName
     session.conf.set(LocalCheckpointFs.ManagerConf, stock)
-    DeltaEngine.runStream(Seq(DeltaEngine.NodeSpec("P", "pk", "pk", isRoot = true)),
+    DeltaEngine.runStreamTree(
+      DeltaEngine.chainStages(Seq(DeltaEngine.NodeSpec("P", "pk", "pk", isRoot = true))),
       Map("P" -> MemoryStream[DeltaEngine.Evt].toDS()))
     assert(session.conf.get(LocalCheckpointFs.ManagerConf) == stock)
     // and a session without a choice gets the engine's manager
     session.conf.unset(LocalCheckpointFs.ManagerConf)
-    DeltaEngine.runStream(Seq(DeltaEngine.NodeSpec("P", "pk", "pk", isRoot = true)),
+    DeltaEngine.runStreamTree(
+      DeltaEngine.chainStages(Seq(DeltaEngine.NodeSpec("P", "pk", "pk", isRoot = true))),
       Map("P" -> MemoryStream[DeltaEngine.Evt].toDS()))
     assert(session.conf.get(LocalCheckpointFs.ManagerConf) ==
       classOf[LocalCheckpointFileManager].getName)

@@ -4,13 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.{LocalCheckpointFileManager, LocalCheckpointFs}
+import graft.streaming.{IncrementalQueries, LocalCheckpointFileManager, LocalCheckpointFs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stream-gated entries replay through ONE harness,
   * `IncrementalQueries.replay`: it runs each replay in a child session
   * with the fork-free checkpoint manager installed, and no other code
-  * in `src/main` feeds a memory stream by hand. */
+  * in `src/main` feeds a memory stream by hand. The same scans keep
+  * two other things to one builder each: join trees to the engine and
+  * its compilers, and `IncrementalQueries`' temp directories to
+  * `tempDir`. */
 class ReplayHarnessSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfTiny}
 
@@ -54,13 +57,18 @@ class ReplayHarnessSpec extends AnyFunSuite {
     * (`sql("name"`): the unit a hit is attributed to. */
   private val unitHeader = """^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)|^\s*sql\("(\w+)"""".r
 
-  test("no memory-stream replay is written by hand outside the harness") {
-    val root = Paths.get("src/main/scala")
+  private val root = Paths.get("src/main/scala")
+
+  /** Every `src/main` source file, in path order. */
+  private def mainFiles: Seq[Path] = {
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val files = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+  }
+
+  test("no memory-stream replay is written by hand outside the harness") {
     val offenders = for {
-      file <- files
+      file <- mainFiles
       lines = Files.readAllLines(file).asScala.toIndexedSeq
       (line, i) <- lines.zipWithIndex
       (token, units) <- allowed
@@ -70,6 +78,37 @@ class ReplayHarnessSpec extends AnyFunSuite {
     } yield s"$token at ${root.relativize(file)}:${i + 1} (in $unit)"
     assert(offenders.isEmpty,
       "replay by hand; call IncrementalQueries.replay instead:\n" + offenders.mkString("\n"))
+  }
+
+  /** The files that may construct a join-tree node or stage: the
+    * engine and the two compilers. Every maintained view takes its
+    * tree from [[graft.streaming.SqlCompiler]]. */
+  private val treeBuilders = Set("DeltaEngine.scala", "TreeCompiler.scala", "SqlCompiler.scala")
+  private val treeConstruction = """\b(?:NodeSpec|Stage)\(""".r
+
+  test("no join tree or temp directory is built by hand outside its one builder") {
+    val offenders = for {
+      file <- mainFiles
+      name = file.getFileName.toString
+      lines = Files.readAllLines(file).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      if (!treeBuilders(name) && treeConstruction.findFirstIn(line).isDefined) ||
+        (name == "IncrementalQueries.scala" && line.contains("createTempDirectory(") &&
+          enclosing(file, lines, i) != "IncrementalQueries.tempDir")
+    } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "build the tree through SqlCompiler, and make the temp directory with " +
+        "IncrementalQueries.tempDir:\n" + offenders.mkString("\n"))
+  }
+
+  test("tempDir's tree delete removes a nested directory tree") {
+    val dir = IncrementalQueries.tempDir("graft_tree_delete")
+    val nested = Files.createDirectories(dir.resolve("a").resolve("b"))
+    Files.writeString(nested.resolve("f.txt"), "x")
+    Files.writeString(dir.resolve("g.txt"), "y")
+    IncrementalQueries.deleteTree(dir)
+    assert(!Files.exists(dir))
+    IncrementalQueries.deleteTree(dir) // a missing tree is a no-op
   }
 
   private def enclosing(file: Path, lines: IndexedSeq[String], at: Int): String = {

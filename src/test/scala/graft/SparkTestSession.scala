@@ -47,4 +47,21 @@ object SparkTestSession {
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     sweepFrames.computeIfAbsent((name, dir), _ => fn(spark.newSession(), dir))
+
+  /** A maintained view's compiled stages and its scan-filtered
+    * changelogs over `dir` under `deletes` — the engine fixtures the
+    * streaming and engine specs replay directly. */
+  def compiledTree(session: SparkSession, dir: String, sqlText: String,
+      deletes: Map[String, org.apache.spark.sql.Column])
+      : (Seq[graft.streaming.DeltaEngine.Stage],
+         Map[String, org.apache.spark.sql.Dataset[graft.streaming.DeltaEngine.Evt]]) = {
+    val c = graft.streaming.SqlCompiler.compile(session, dir, sqlText)
+    (c.stages, c.sourceChangelogs(session, dir, deletes))
+  }
+
+  /** [[compiledTree]] of the Q10 view under its registry deletes. */
+  def q10Tree(session: SparkSession, dir: String = sfTiny) = {
+    import graft.streaming.IncrementalQueries.{q10Sql, q10Deletes}
+    compiledTree(session, dir, q10Sql, q10Deletes)
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{IncrementalQueries, SqlCompiler}
+import graft.streaming.{DeltaEngine, IncrementalQueries, SqlCompiler}
 
 class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution {
   private def s = SparkTestSession.spark
@@ -32,13 +32,42 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     assert(c.needed("orders").contains("o_orderkey") && c.needed("orders").contains("o_custkey"))
   }
 
+  /** The tree-API form the compiler replaces: hand-built `stages` run
+    * over the statement's changelogs under `deletes`, and the leaf
+    * deltas folded by hand into `revenue_e4` and `n_rows` per
+    * `groups` (name, type). */
+  private def handRevenue(sqlText: String, deletes: Map[String, org.apache.spark.sql.Column],
+      stages: Seq[DeltaEngine.Stage],
+      groups: Seq[(String, org.apache.spark.sql.types.DataType)]) = {
+    def canon(c: String) = graft.functions.CanonGet.canon_get(col("row"), c)
+    val logs = SqlCompiler.compile(s, d, sqlText).sourceChangelogs(s, d, deletes)
+    DeltaEngine.runTree(stages, logs).toDF()
+      .select(((col("tag") * col("mult")).as("sign") +:
+        groups.map { case (g, t) => canon(g).cast(t).as(g) }) :+
+        round(canon("l_extendedprice").cast("double") *
+          (lit(1.0) - canon("l_discount").cast("double")) * 10000, 0).cast("long").as("rev_e4"): _*)
+      .groupBy(groups.map(g => col(g._1)): _*)
+      .agg(sum(col("sign") * col("rev_e4")).as("revenue_e4"),
+        sum(col("sign")).cast("long").as("n_rows"))
+      .filter(col("n_rows") > 0)
+  }
+
   test("compiled q10 SQL equals the hand-built incremental query under the same deletes") {
-    val got = SqlCompiler.run(s, d, q10Sql, deletes = Map(
-        "lineitem" -> (col("l_linenumber") === 3),
-        "orders" -> (col("o_orderkey") % 50 === 0)))
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    import DeltaEngine.{NodeSpec, chainStages}
+    val deletes = Map(
+      "lineitem" -> (col("l_linenumber") === 3),
+      "orders" -> (col("o_orderkey") % 50 === 0))
+    val got = SqlCompiler.run(s, d, q10Sql, deletes = deletes)
       .select("c_custkey", "c_name", "c_acctbal", "n_name", "revenue_e4")
       .orderBy("c_custkey").collect().toSeq
-    val want = IncrementalQueries.incrementalQ10(s, d)
+    val want = handRevenue(q10Sql, deletes, chainStages(Seq(
+        NodeSpec("nation", "n_nationkey", "n_nationkey", isRoot = true, setSemantics = true),
+        NodeSpec("customer", "c_nationkey", "c_custkey"),
+        NodeSpec("orders", "o_custkey", "o_orderkey"),
+        NodeSpec("lineitem", "l_orderkey", "l_orderkey"))),
+        Seq("c_custkey" -> LongType, "c_name" -> StringType, "c_acctbal" -> DoubleType,
+          "n_name" -> StringType))
       .select("c_custkey", "c_name", "c_acctbal", "n_name", "revenue_e4")
       .orderBy("c_custkey").collect().toSeq
     assert(got == want)
@@ -201,12 +230,28 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   }
 
   test("compiled branching SQL equals the hand-built branching tree under the same deletes") {
-    val got = SqlCompiler.run(s, d, partRevSql, deletes = Map(
-        "lineitem" -> (col("l_linenumber") === 3),
-        "orders" -> (col("o_orderkey") % 50 === 0),
-        "part" -> (col("p_partkey") % 10 === 0)))
+    import org.apache.spark.sql.types.StringType
+    import DeltaEngine.{NodeSpec, Stage}
+    val deletes = Map(
+      "lineitem" -> (col("l_linenumber") === 3),
+      "orders" -> (col("o_orderkey") % 50 === 0),
+      "part" -> (col("p_partkey") % 10 === 0))
+    val got = SqlCompiler.run(s, d, partRevSql, deletes = deletes)
       .orderBy("n_name", "p_brand").collect().toSeq
-    val want = IncrementalQueries.incrementalPartRevenue(s, d)
+    val want = handRevenue(partRevSql, deletes, Seq(
+        Stage("nation", NodeSpec("nation", "n_nationkey", "n_nationkey",
+          isRoot = true, setSemantics = true)),
+        Stage("customer", NodeSpec("customer", "c_nationkey", "c_custkey"),
+          parentStage = Some("nation")),
+        Stage("orders", NodeSpec("orders", "o_custkey", "o_orderkey"),
+          parentStage = Some("customer")),
+        Stage("lineitem", NodeSpec("lineitem", "l_orderkey", "l_partkey"),
+          parentStage = Some("orders")),
+        Stage("part", NodeSpec("part", "p_partkey", "p_partkey",
+          isRoot = true, setSemantics = true)),
+        Stage("lineitem_part", NodeSpec("lineitem", "l_partkey", "l_partkey"),
+          ownStage = Some("lineitem"), parentStage = Some("part"))),
+        Seq("n_name" -> StringType, "p_brand" -> StringType))
       .select("n_name", "p_brand", "revenue_e4", "n_rows")
       .orderBy("n_name", "p_brand").collect().toSeq
     assert(got == want && got.nonEmpty)

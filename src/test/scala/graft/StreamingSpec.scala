@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     import spark.implicits._
     val pStream = MemoryStream[Evt]
     val cStream = MemoryStream[Evt]
-    val leaf = runStream(Seq(parentSpec, childSpec),
+    val leaf = runStreamTree(chainStages(Seq(parentSpec, childSpec)),
       Map("P" -> pStream.toDS(), "C" -> cStream.toDS().filter(childPasses)))
     val query = leaf.writeStream
       .format("memory").queryName("aju_leaf").outputMode("append").start()
@@ -411,10 +411,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       beforeRestart: () => Unit = () => ()): (Map[String, Int], Map[String, Int]) = {
     implicit val sq = session.sqlContext
     import session.implicits._
-    import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.q10Changelogs(session, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.q10Tree(session, dir)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     // the memory sink can't recover from a checkpoint; foreachBatch
     // can — batches are stored by batchId, so a replayed batch after
@@ -422,8 +421,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     // pattern)
     val sunk = new scala.collection.concurrent.TrieMap[Long, Seq[Evt]]
     def startQuery() = {
-      val out = runStream(IncrementalQueries.q10Tree,
-        streams.map { case (r, ms) => r -> ms.toDS() })
+      val out = runStreamTree(stages, streams.map { case (r, ms) => r -> ms.toDS() })
       out.writeStream
         .foreachBatch((df: org.apache.spark.sql.Dataset[Evt], batchId: Long) =>
           sunk.put(batchId, df.collect().toSeq): Unit)
@@ -445,9 +443,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     def fold(evts: Seq[Evt]): Map[String, Int] =
       evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
         .filter(_._2 != 0).toMap
-    (fold(sunk.values.flatten.toSeq),
-      fold(runBatch(IncrementalQueries.q10Tree,
-        IncrementalQueries.q10Changelogs(session, dir)).collect().toSeq))
+    (fold(sunk.values.flatten.toSeq), fold(runTree(stages, changelogs).collect().toSeq))
   }
 
   test("tree stream recovers from a checkpoint restart with state intact") {
@@ -503,11 +499,11 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     import spark.implicits._
     import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.partRevenueChangelogs(spark, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.compiledTree(spark, dir,
+      IncrementalQueries.partRevenueSql, IncrementalQueries.partRevenueDeletes)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStreamTree(IncrementalQueries.partRevenueStages,
-      streams.map { case (r, ms) => r -> ms.toDS() })
+    val out = runStreamTree(stages, streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("part_rev_leaf").outputMode("append").start()
     try {
@@ -530,9 +526,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
         evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
           .filter(_._2 != 0).toMap
       val streamed = fold(spark.table("part_rev_leaf").as[Evt].collect().toSeq)
-      val batched = fold(
-        runTree(IncrementalQueries.partRevenueStages,
-          IncrementalQueries.partRevenueChangelogs(spark, dir)).collect().toSeq)
+      val batched = fold(runTree(stages, changelogs).collect().toSeq)
       assert(batched.nonEmpty && streamed == batched)
     } finally query.stop()
   }
@@ -542,11 +536,11 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     import spark.implicits._
     import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.sharedDimChangelogs(spark, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.compiledTree(spark, dir,
+      IncrementalQueries.sharedDimSql, IncrementalQueries.sharedDimDeletes)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStreamTree(IncrementalQueries.sharedDimStages,
-      streams.map { case (r, ms) => r -> ms.toDS() })
+    val out = runStreamTree(stages, streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("shared_dim_leaf").outputMode("append").start()
     try {
@@ -571,9 +565,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
         evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
           .filter(_._2 != 0).toMap
       val streamed = fold(spark.table("shared_dim_leaf").as[Evt].collect().toSeq)
-      val batched = fold(
-        runTree(IncrementalQueries.sharedDimStages,
-          IncrementalQueries.sharedDimChangelogs(spark, dir)).collect().toSeq)
+      val batched = fold(runTree(stages, changelogs).collect().toSeq)
       assert(batched.nonEmpty && streamed == batched)
     } finally query.stop()
   }
@@ -581,10 +573,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
   test("stateOperators expose per-node state rows; TTL eviction drains them") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.q10Changelogs(spark, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.q10Tree(spark, dir)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
     // a processing-time TTL makes the query SELF-TRIGGERING (Spark's
     // shouldRunAnotherBatch is unconditionally true for
@@ -592,8 +583,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     // means processAllAvailable() would never observe quiescence and
     // hang — this test polls lastProgress instead, and is the reason
     // the TTL-semantics spec above uses the TestGroupState harness
-    val out = runStream(IncrementalQueries.q10Tree,
-      streams.map { case (r, ms) => r -> ms.toDS() },
+    val out = runStreamTree(stages, streams.map { case (r, ms) => r -> ms.toDS() },
       stateTtl = Some(java.time.Duration.ofSeconds(8)))
     val query = out.writeStream
       .format("memory").queryName("ttl_obs_leaf").outputMode("append").start()
@@ -618,7 +608,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       // one stateful operator per tree node, each reporting its keyed
       // state volume — the first thing to watch on a long-running tree
       val populated = stateRows(60000)(_.sum > 0)
-      assert(populated.length == IncrementalQueries.q10Tree.size, populated.toString)
+      assert(populated.length == stages.size, populated.toString)
       assert(populated.sum > 0)
       // with no further input, every key idles past the TTL and the
       // self-triggered batches evict it: state must drain to EMPTY
@@ -648,7 +638,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     val pStream = MemoryStream[Evt]
     val cStream = MemoryStream[Evt]
     val ttl = EventTimeTtl("ets", java.time.Duration.ofSeconds(60))
-    val leaf = runStream(Seq(parentSpec, childSpec),
+    val leaf = runStreamTree(chainStages(Seq(parentSpec, childSpec)),
       Map("P" -> pStream.toDS(), "C" -> cStream.toDS().filter(childPasses)),
       eventTtl = Some(ttl))
     val query = leaf.writeStream.format("memory").queryName("evt_ttl_leaf")
@@ -692,17 +682,16 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
   test("streaming Q10 tree over micro-batches equals the batch run (sf0.001)") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.IncrementalQueries
     val dir = SparkTestSession.sfTiny
 
-    val logs = IncrementalQueries.q10Changelogs(spark, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.q10Tree(spark, dir)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     // micro-batch plan: 1 = first half of the inserts, 2 = the rest of
     // the inserts, 3 = all deletes (seq=1) — state must carry across
     // batches and parent deaths must fan out to children inserted in
     // EARLIER batches.
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStream(IncrementalQueries.q10Tree, streams.map { case (r, ms) => r -> ms.toDS() })
+    val out = runStreamTree(stages, streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("q10_leaf").outputMode("append").start()
     try {
@@ -729,9 +718,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
           .filter(_._2 != 0).toMap
 
       val streamed = fold(spark.table("q10_leaf").as[Evt].collect().toSeq)
-      val batched = fold(
-        runBatch(IncrementalQueries.q10Tree,
-          IncrementalQueries.q10Changelogs(spark, dir)).collect().toSeq)
+      val batched = fold(runTree(stages, changelogs).collect().toSeq)
       assert(batched.nonEmpty, "batch leaf view must be non-trivial")
       assert(streamed == batched)
     } finally query.stop()
@@ -880,14 +867,13 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     // batches). Trees: the Q10 chain; a set-semantics key root gating
     // an antiParent node (the NOT EXISTS wiring); the Q10 chain with a
     // fullOuterLeaf leaf (orphaned lineitems emit bare).
-    import graft.streaming.IncrementalQueries
     val ss = spark.newSession()
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sq = ss.sqlContext
     import ss.implicits._
-    val q10Logs = IncrementalQueries.q10Changelogs(ss, SparkTestSession.sfTiny)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (q10Stages, q10Changelogs) = SparkTestSession.q10Tree(ss)
+    val q10Logs = q10Changelogs.view.mapValues(_.collect().toSeq).toMap
     // customers with no order in the Q10 date window: the orders key
     // set feeds an anti customer node keyed by c_custkey; every 30th
     // customer is deleted too, so retractions hit both sides
@@ -899,9 +885,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
         isRoot = true, setSemantics = true), keyOnlyRows = true),
       Stage("customer", NodeSpec("customer", "c_custkey", "c_custkey", antiParent = true),
         parentStage = Some("orders_keys")))
-    val fullOuterStages = chainStages(IncrementalQueries.q10Tree.map { sp =>
-      if (sp.relation == "lineitem") sp.copy(fullOuterLeaf = true) else sp
-    })
+    val fullOuterStages = q10Stages.map { st =>
+      if (st.spec.relation == "lineitem") st.copy(spec = st.spec.copy(fullOuterLeaf = true)) else st
+    }
     def half(evs: Seq[Evt], first: Boolean): Seq[Evt] =
       evs.filter(e => (e.key.hashCode & 1) == (if (first) 0 else 1))
     val steps = Seq[Seq[Evt] => Seq[Evt]](
@@ -914,7 +900,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
       evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
         .filter(_._2 != 0).toMap
     for ((tree, stages, logs) <- Seq(
-        ("q10", chainStages(IncrementalQueries.q10Tree), q10Logs),
+        ("q10", q10Stages, q10Logs),
         ("anti", antiStages, antiLogs),
         ("full_outer", fullOuterStages, q10Logs))) {
       // ONE source carrying every relation, so each step is exactly one
@@ -957,11 +943,11 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
     implicit val sq = ss.sqlContext
     import ss.implicits._
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.sharedDimChangelogs(ss, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.compiledTree(ss, dir,
+      IncrementalQueries.sharedDimSql, IncrementalQueries.sharedDimDeletes)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStreamTreeTws(IncrementalQueries.sharedDimStages,
-      streams.map { case (r, ms) => r -> ms.toDS() })
+    val out = runStreamTreeTws(stages, streams.map { case (r, ms) => r -> ms.toDS() })
     val query = out.writeStream
       .format("memory").queryName("shared_tws_leaf").outputMode("append").start()
     try {
@@ -981,27 +967,23 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.ParallelTestExecution
         evts.groupBy(_.row).view.mapValues(_.map(e => e.tag * e.mult).sum)
           .filter(_._2 != 0).toMap
       val streamed = fold(ss.table("shared_tws_leaf").as[Evt].collect().toSeq)
-      val batched = fold(
-        runTree(IncrementalQueries.sharedDimStages,
-          IncrementalQueries.sharedDimChangelogs(ss, dir)).collect().toSeq)
+      val batched = fold(runTree(stages, changelogs).collect().toSeq)
       assert(batched.nonEmpty, "batch pair view must be non-trivial")
       assert(streamed == batched)
     } finally query.stop()
   }
 
   test("TWS tree driver: per-key timers drain idle state under the processing-time TTL") {
-    import graft.streaming.IncrementalQueries
     val ss = spark.newSession()
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sq = ss.sqlContext
     import ss.implicits._
     val dir = SparkTestSession.sfTiny
-    val logs = IncrementalQueries.q10Changelogs(ss, dir)
-      .view.mapValues(_.collect().toSeq).toMap
+    val (stages, changelogs) = SparkTestSession.q10Tree(ss, dir)
+    val logs = changelogs.view.mapValues(_.collect().toSeq).toMap
     val streams = logs.map { case (rel, _) => rel -> MemoryStream[Evt] }
-    val out = runStreamTreeTws(chainStages(IncrementalQueries.q10Tree),
-      streams.map { case (r, ms) => r -> ms.toDS() },
+    val out = runStreamTreeTws(stages, streams.map { case (r, ms) => r -> ms.toDS() },
       stateTtl = Some(java.time.Duration.ofSeconds(8)))
     val query = out.writeStream
       .format("memory").queryName("q10_tws_ttl_leaf").outputMode("append").start()
