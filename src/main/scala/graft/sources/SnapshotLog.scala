@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
+import graft.streaming.IncrementalQueries
 
 /** A minimal COPY-ON-WRITE versioned table — the lakehouse snapshot
   * contract (Delta/Iceberg time travel) in its essential form, built
@@ -886,7 +887,7 @@ object SnapshotLog {
   private val dvRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dvTableRoot(s: SparkSession, d: String): String =
     dvRoots.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_snap_dv").toString
+      val root = IncrementalQueries.tempDir("graft_snap_dv").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       commitDeleteVector(s, root, 1, "o_orderkey",
@@ -948,7 +949,7 @@ object SnapshotLog {
     * copy-on-write claim the entry asserts. */
   def ordersTableRoot(s: SparkSession, d: String): String =
     roots.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_snap_orders").toString
+      val root = IncrementalQueries.tempDir("graft_snap_orders").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       commitMerge(s, root, 1, "o_orderkey", payload,
@@ -964,7 +965,7 @@ object SnapshotLog {
   private val checkedRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def checkedTableRoot(s: SparkSession, d: String): String =
     checkedRoots.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_snap_checked").toString
+      val root = IncrementalQueries.tempDir("graft_snap_checked").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       setConstraints(root, Map(
@@ -1112,7 +1113,7 @@ object SnapshotLog {
     // entry: however the table got there, v1 must read the same.
     sql("snapshot_merge_into", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_msql").toString
+        val root = IncrementalQueries.tempDir("graft_snap_msql").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long) =
@@ -1145,7 +1146,7 @@ object SnapshotLog {
     // residual-failed rows touched nothing.
     sql("snapshot_merge_into_composite", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_mcomp").toString
+        val root = IncrementalQueries.tempDir("graft_snap_mcomp").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long, status: org.apache.spark.sql.Column) =
@@ -1182,7 +1183,7 @@ object SnapshotLog {
     // the table byte-identical to the canonical three-class outcome.
     sql("snapshot_merge_into_residual_range", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_mrange").toString
+        val root = IncrementalQueries.tempDir("graft_snap_mrange").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long, tsOff: Double) =
@@ -1218,7 +1219,7 @@ object SnapshotLog {
     sql("snapshot_merge_into_subquery", appliedChangesSql) {
       (s0, d) =>
         val s = s0.newSession()
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_msub").toString
+        val root = IncrementalQueries.tempDir("graft_snap_msub").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         orders.createOrReplaceTempView("msub_orders")
@@ -1256,7 +1257,7 @@ object SnapshotLog {
     sql("snapshot_sql_dml", appliedChangesSql) {
       (s0, d) =>
         val s = s0.newSession()
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_dml").toString
+        val root = IncrementalQueries.tempDir("graft_snap_dml").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         require(SqlDml.updateSql(s, root, 1, "o_orderkey", payload,
@@ -1292,7 +1293,7 @@ object SnapshotLog {
         |  AS o_totalprice
         |FROM orders""".stripMargin) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_updf").toString
+        val root = IncrementalQueries.tempDir("graft_snap_updf").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val src = orders.filter(col("o_orderkey") % 160 === 1)
@@ -1331,8 +1332,8 @@ object SnapshotLog {
         |  WHERE c.c_custkey = ch.o_custkey AND c.c_custkey % 160 <> 1)""".stripMargin) {
       (s, d) =>
         import s.implicits._
-        val parentRoot = java.nio.file.Files.createTempDirectory("graft_snap_fkp").toString
-        val childRoot = java.nio.file.Files.createTempDirectory("graft_snap_fkc").toString
+        val parentRoot = IncrementalQueries.tempDir("graft_snap_fkp").toString
+        val childRoot = IncrementalQueries.tempDir("graft_snap_fkc").toString
         val customer = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
@@ -1381,7 +1382,7 @@ object SnapshotLog {
         | (2, 2, 0, 1)) AS h(version, n_dirs, n_rewritten, n_tombstone_dirs)""".stripMargin) {
       (s, d) =>
         import s.implicits._
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_hist").toString
+        val root = IncrementalQueries.tempDir("graft_snap_hist").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1433,7 +1434,7 @@ object SnapshotLog {
         // against the LATEST version, and sibling entries (compaction)
         // mint further versions on the shared root — the relative
         // operand needs a root whose version count it controls
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_ttrel").toString
+        val root = IncrementalQueries.tempDir("graft_snap_ttrel").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1466,7 +1467,7 @@ object SnapshotLog {
         // OWN root (the relative entry's lesson): the subquery resolves
         // against this table's full history, which must not grow under
         // sibling entries' commits
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_ttsub").toString
+        val root = IncrementalQueries.tempDir("graft_snap_ttsub").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1499,7 +1500,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE)
         |FROM orders WHERE o_orderkey % 3 = 1""".stripMargin) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_msync").toString
+        val root = IncrementalQueries.tempDir("graft_snap_msync").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val src = orders.filter(col("o_orderkey") % 3 === 0)
@@ -1531,8 +1532,8 @@ object SnapshotLog {
     // back).
     sql("snapshot_branch_cow", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_bsrc").toString
-        val branch = java.nio.file.Files.createTempDirectory("graft_snap_bdst").toString
+        val root = IncrementalQueries.tempDir("graft_snap_bsrc").toString
+        val branch = IncrementalQueries.tempDir("graft_snap_bdst").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))
@@ -1563,8 +1564,8 @@ object SnapshotLog {
     // remains time-travelable to the pre-merge state (self-asserted).
     sql("snapshot_branch_merge_back", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_mbsrc").toString
-        val branch = java.nio.file.Files.createTempDirectory("graft_snap_mbdst").toString
+        val root = IncrementalQueries.tempDir("graft_snap_mbsrc").toString
+        val branch = IncrementalQueries.tempDir("graft_snap_mbdst").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))
@@ -1614,7 +1615,7 @@ object SnapshotLog {
       (s, d) =>
         import graft.streaming.IncrementalQueries.{boundedReplayCollect, replay, BatchSink}
         import s.implicits._
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_stream").toString
+        val root = IncrementalQueries.tempDir("graft_snap_stream").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val batches = Seq(updateBatch(orders), deleteInsertBatch(orders)).map { b =>
@@ -1646,7 +1647,7 @@ object SnapshotLog {
         // PRIVATE root: other entries extend the shared two-version
         // table (compaction adds v2), which would make the mid-gap
         // resolution below depend on entry execution order
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_asof").toString
+        val root = IncrementalQueries.tempDir("graft_snap_asof").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1709,7 +1710,7 @@ object SnapshotLog {
         import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
           BatchSink}
         import s.implicits._
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_gold").toString
+        val root = IncrementalQueries.tempDir("graft_snap_gold").toString
         val goldPayload = Seq("n_orders", "total_e2")
         val rows = boundedReplayCollect("snapshot_stream_gold",
           Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -1817,7 +1818,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
         |FROM orders WHERE o_orderkey % 160 NOT IN (0, 16, 32)""".stripMargin) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_dvpol").toString
+        val root = IncrementalQueries.tempDir("graft_snap_dvpol").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def del(v: Int, residue: Int): String =
@@ -1855,7 +1856,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
         |FROM orders WHERE o_custkey % 97 <> 0""".stripMargin) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_gdpr").toString
+        val root = IncrementalQueries.tempDir("graft_snap_gdpr").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val subjects = orders.filter(col("o_custkey") % 97 === 0)
@@ -1894,7 +1895,7 @@ object SnapshotLog {
         | END AS o_prio
         |FROM orders""".stripMargin) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_evo").toString
+        val root = IncrementalQueries.tempDir("graft_snap_evo").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val evolved = orders.filter(col("o_orderkey") % 160 === 1)
@@ -1921,7 +1922,7 @@ object SnapshotLog {
     // thing vacuum is allowed to break).
     sql("snapshot_vacuum", appliedChangesSql) {
       (s, d) =>
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_vac").toString
+        val root = IncrementalQueries.tempDir("graft_snap_vac").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1952,7 +1953,7 @@ object SnapshotLog {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         val ss = s.newSession()
         implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_ici").toString
+        val root = IncrementalQueries.tempDir("graft_snap_ici").toString
         val orders = Tables.orders(ss, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         import ss.implicits._
@@ -2006,8 +2007,8 @@ object SnapshotLog {
          |GROUP BY n_name""".stripMargin) {
       (s, d) =>
         import graft.streaming.SqlCompiler
-        val root = java.nio.file.Files.createTempDirectory("graft_snap_cdcloop").toString
-        val branch = java.nio.file.Files.createTempDirectory("graft_snap_cdcloop_b").toString + "/b"
+        val root = IncrementalQueries.tempDir("graft_snap_cdcloop").toString
+        val branch = IncrementalQueries.tempDir("graft_snap_cdcloop_b").toString + "/b"
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))

@@ -422,112 +422,13 @@ object IncrementalQueries {
        | AND l_returnflag = 'R'
        |GROUP BY n_name, substr(CAST(o_orderdate AS STRING), 1, 7)""".stripMargin
 
-  /** Build one relation's changelog as Dataset[Evt]. The canonical row
-    * string is assembled by codegen'd `concat_ws` at ingest — events
-    * shuffle as one UTF8String, never as map<string,string>.
-    *
-    * `where` is the relation's local predicate as a `Column` — its
-    * ONLY spelling: the engine never re-checks it, since it reads only
-    * the row it filters (inserts and deletes alike). Applying it HERE
-    * (before canon-building) pushes it into the parquet scan
-    * (`PushedFilters`), so rows failing it are never materialized,
-    * canon-encoded, or shuffled. */
-  private[streaming] def changelog(df0: DataFrame, keyCol: String, cols: Seq[String],
-                        deleteWhen: Option[org.apache.spark.sql.Column],
-                        where: Option[org.apache.spark.sql.Column] = None): Dataset[Evt] = {
-    val df = where.map(df0.filter).getOrElse(df0)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // coalesce to the literal "null": concat_ws would otherwise DROP a
-    // null column's whole pair, losing the name for mergeCanon's
-    // child-wins dedup and for canonGet routing
-    val rowCanon = concat_ws(FS.toString,
-      cols.sorted.map(c =>
-        concat(lit(c + KV.toString), coalesce(col(c).cast("string"), lit("null")))): _*)
-    // Two scans ON PURPOSE: a one-scan spelling (conditional
-    // explode(array(insert, delete)) per row) was tried this round and
-    // measured SLOWER at sf0.1 (+0.3 s on the compiled entries): the
-    // Generate + per-row struct/array build taxes EVERY row of the
-    // relation, while the second scan is an embarrassingly parallel
-    // re-read the OS page cache mostly absorbs — and it keeps the
-    // whole changelog a flat codegen'd projection over the vectorized
-    // reader.
-    val inserts = df.select(lit(0L).as("seq"), lit(false).as("fromParent"),
-      lit(1).as("tag"), lit(1).as("mult"),
-      col(keyCol).cast("string").as("key"), rowCanon.as("row")).as[Evt]
-    deleteWhen match {
-      case None => inserts
-      case Some(cond) =>
-        val deletes = df.filter(cond).select(lit(1L).as("seq"), lit(false).as("fromParent"),
-          lit(-1).as("tag"), lit(1).as("mult"),
-          col(keyCol).cast("string").as("key"), rowCanon.as("row")).as[Evt]
-        inserts.union(deletes)
-    }
-  }
-
-  /** OPT-IN bloom semi-join reduction for the incremental engine: with
-    * [[BloomPrefilterConf]] set, drop child-changelog events whose
-    * routing key cannot exist in the parent changelog BEFORE the
-    * engine canon-encodes and shuffles them — a bloom over the
-    * parent's child-facing key (extracted from its row canon)
-    * pre-filters the probe side at the scan. This is the J3 fan-out
-    * reducer at 100 TB: most R-flag lineitems belong to orders outside
-    * the date window, and without the bloom every one of them crosses
-    * the exchange into order-node state just to die unjoined.
-    *
-    * EXACT under replay semantics: the bloom covers the parent's FULL
-    * key multiset — inserts AND deletes — so a child event is dropped
-    * only if its parent key never appears at ANY point of the replay,
-    * i.e. it could never be joined alive in any micro-batch; bloom
-    * false positives merely survive to the engine and produce nothing,
-    * exactly as they did before. Both sides hash the STRING key form
-    * ([[BloomJoin.bloomBytesRaw]]) — child `Evt.key` and parent canon
-    * values are both built by `cast(string)` of the same column type,
-    * so equal keys hash equal. */
-  val BloomPrefilterConf = "spark.graft.incremental.bloomPrefilter"
-  val BloomPrefilterItemsConf = "spark.graft.incremental.bloomPrefilter.expectedItems"
-  val BloomPrefilterFppConf = "spark.graft.incremental.bloomPrefilter.fpp"
-
-  /** OPT-IN skew salting for the COMPILER, following the bloom conf
-    * pattern: name the skewed relation and the salt width, and
-    * [[SqlCompiler]] sets `salts = S` on that relation's liveness
-    * stage — its own events bucket into S sub-keys by row hash while
-    * the parent's liveness deltas replicate to every bucket
-    * ([[DeltaEngine.Stage]] skew note). Answer-invariant (the gated
-    * entry proves it); spend the ×S parent replication only where one
-    * hot key would otherwise pin a stage to a single task. */
-  val SaltRelationConf = "spark.graft.incremental.saltRelation"
-  val SaltWidthConf = "spark.graft.incremental.saltWidth"
-
-  def bloomPrefilterChild(logs: Map[String, Dataset[Evt]],
-      parentRel: String, parentChildKey: String, childRel: String,
-      expectedItems: Long, fpp: Double = 0.03): Map[String, Dataset[Evt]] = {
-    val child = logs(childRel)
-    if (!child.sparkSession.conf.getOption(BloomPrefilterConf).contains("true")) logs
-    else {
-      val parentKeys = logs(parentRel).toDF().select(
-        canonCol(parentChildKey).as("k"))
-      graft.operators.BloomJoin.bloomBytesRaw(parentKeys, col("k"),
-          expectedItems, fpp) match {
-        case None => logs.updated(childRel, child.filter(lit(false)))
-        case Some(bits) => logs.updated(childRel,
-          child.filter(graft.operators.BloomJoin.mightContainRaw(bits, col("key"))))
-      }
-    }
-  }
-
-  /** [[q10]] with the bloom reduction switched on in a child session
-    * (the conf is opt-in; the caller's session is never mutated):
+  /** [[q10]] with the bloom reduction ([[SqlCompiler.Compiled.bloomReduced]]):
     * lineitem deltas are pre-filtered by the bloom of the
     * date-windowed orders changelog's o_orderkey set. */
   def incrementalQ10Bloom(s: SparkSession, dir: String): DataFrame = {
     val c = q10(s, dir)
-    val ss = s.newSession()
-    ss.conf.set(BloomPrefilterConf, "true")
-    val logs = bloomPrefilterChild(c.sourceChangelogs(ss, dir, q10Deletes),
-      parentRel = "orders", parentChildKey = "o_orderkey", childRel = "lineitem",
-      expectedItems = 200000L, fpp = 0.01)
-    c.aggregate(runTree(c.stages, logs).toDF())
+    c.aggregate(runTree(c.stages,
+      c.bloomReduced(c.sourceChangelogs(s, dir, q10Deletes))).toDF())
   }
 
   /** The Q10 signed-delta fold, one row per group with its net
@@ -568,14 +469,16 @@ object IncrementalQueries {
       .run(s, dir, sharedDimDeletes)
   }
 
-  /** The Q10 tree with its heaviest hop SALTED (S = 8): lineitem
-    * events bucket by row hash while orders' liveness deltas replicate
-    * to every bucket ([[DeltaEngine.Stage]] skew note). Behind the
-    * same survivors oracle as incremental_q10 — the de-skew must be
-    * answer-invariant, not just spec-asserted. */
-  def incrementalQ10Salted(s: SparkSession, dir: String): DataFrame = {
+  /** [[q10]] with its heaviest hop SALTED (S = 8): lineitem events
+    * bucket by row hash while orders' liveness deltas replicate to
+    * every bucket ([[DeltaEngine.Stage]] skew note). Shared by the
+    * three salted entries, behind the same survivors oracle as
+    * incremental_q10 — the de-skew must be answer-invariant, not just
+    * spec-asserted. */
+  private def q10Salted(s: SparkSession, dir: String): SqlCompiler.Compiled = {
     val c = q10(s, dir)
-    c.copy(stages = c.stages.init :+ c.stages.last.copy(salts = 8)).run(s, dir, q10Deletes)
+    c.copy(stages = c.stages.map(st =>
+      if (st.spec.relation == "lineitem") st.copy(salts = 8) else st))
   }
 
   /** A mergeable HISTOGRAM SKETCH over the MAINTAINED Q10 view — the
@@ -1177,31 +1080,25 @@ object IncrementalQueries {
     * since `runStream` fences them. All of them are gated against
     * the one `oracle` value, so a twin cannot drift from its base.
     * `overrides` are relation loaders for [[SqlCompiler.compileOver]]'s
-    * seam; `confs` are set on a child session every form runs in.
+    * seam.
     * A twin whose oracle, statement or deletes differ on purpose, or
     * that needs another runner (set operations, ASOF, OVER, recursion,
     * its own source or sink), is written out by hand instead. */
   private def maintained(name: String, oracle: String, sqlText: String,
       deletes: Map[String, Column] = Map.empty, twins: Seq[String] = Seq(Stream),
       cte: Boolean = false,
-      overrides: Map[String, (SparkSession, String) => DataFrame] = Map.empty,
-      confs: Map[String, String] = Map.empty): Seq[GraftQuery] = {
+      overrides: Map[String, (SparkSession, String) => DataFrame] = Map.empty): Seq[GraftQuery] = {
     require(!(cte && overrides.nonEmpty), s"$name: relation overrides need a plain statement")
-    def session(s: SparkSession): SparkSession =
-      if (confs.isEmpty) s
-      else { val ss = s.newSession(); confs.foreach { case (k, v) => ss.conf.set(k, v) }; ss }
     def compiled(s: SparkSession, dir: String): SqlCompiler.Compiled =
       if (overrides.isEmpty) SqlCompiler.compile(s, dir, sqlText)
       else SqlCompiler.compileOver(s, dir, sqlText, overrides)
-    sql(name, oracle) { (s0, dir) =>
-      val s = session(s0)
+    sql(name, oracle) { (s, dir) =>
       if (cte) SqlCompiler.runCte(s, dir, sqlText, deletes)
       else compiled(s, dir).run(s, dir, deletes)
     } +: twins.map { suffix =>
       require(suffix == Stream || suffix == Tws, s"$name: unknown twin suffix $suffix")
       val twin = name + suffix
-      sql(twin, oracle) { (s0, dir) =>
-        val s = session(s0)
+      sql(twin, oracle) { (s, dir) =>
         if (cte) runCteStreamed(s, sqlText, dir, deletes, twin, tws = suffix == Tws)
         else runSqlStreamed(s, compiled(s, dir).withScalarGatesResolved(s, dir, deletes),
           dir, deletes, twin + "_leaf", tws = suffix == Tws)
@@ -1294,16 +1191,13 @@ object IncrementalQueries {
     val df = where.map(parsed.filter).getOrElse(parsed)
     val spark = df.sparkSession
     import spark.implicits._
-    val rowCanon = concat_ws(FS.toString,
-      cols.sorted.map(c =>
-        concat(lit(c + KV.toString), coalesce(col(c).cast("string"), lit("null")))): _*)
     df.select(
       when(sign > 0, 0L).otherwise(1L).as("seq"),
       lit(false).as("fromParent"),
       sign.cast("int").as("tag"),
       lit(1).as("mult"),
       col(keyCol).cast("string").as("key"),
-      rowCanon.as("row")).as[Evt]
+      canonColumn(cols).as("row")).as[Evt]
   }
 
   /** `c`'s relation changelogs from typed frames with a ±1 `sign`:
@@ -2030,8 +1924,8 @@ object IncrementalQueries {
 
     // Same query, same oracle, deltas on both sides (order deaths %50,
     // lineitem retractions linenumber 3) — but with the bloom
-    // semi-join reduction ([[bloomPrefilterChild]]) pre-filtering the
-    // lineitem changelog against the date-windowed orders key set, so
+    // semi-join reduction ([[SqlCompiler.Compiled.bloomReduced]])
+    // pre-filtering the lineitem changelog against the date-windowed orders key set, so
     // a reduction bug (over-dropping a probe event that WOULD have
     // joined alive at some replay point) fails the hash against the
     // unreduced truth.
@@ -2102,18 +1996,9 @@ object IncrementalQueries {
           .select(col("node"), col("n_keys"), col("state_rows"))
     },
 
-    // Same compiled query, same oracle — but the COMPILER applies the
-    // bloom semi-join reduction (leaf changelog pre-filtered by the
-    // parent's key bloom) because the session opts in, exercising the
-    // SqlCompiler.run wiring rather than the explicit tree API.
-    sql("incremental_sql_q10_bloom", q10Oracle) {
-      (s, dir) =>
-        val ss = s.newSession()
-        ss.conf.set(BloomPrefilterConf, "true")
-        ss.conf.set(BloomPrefilterItemsConf, "200000")
-        ss.conf.set(BloomPrefilterFppConf, "0.01")
-        SqlCompiler.run(ss, dir, q10Sql, deletes = q10Deletes)
-    },
+    // The bloom-reduced Q10 under its incremental_sql_ name; its
+    // _stream twin below runs the same reduction through the replay.
+    sql("incremental_sql_q10_bloom", q10Oracle)(incrementalQ10Bloom),
 
     // The BLOOM-REDUCED compiled tree streamed: the leaf changelog is
     // pre-filtered by a STATIC bloom built from the parent's key
@@ -2123,18 +2008,24 @@ object IncrementalQueries {
     // incremental_sql_q10).
     sql("incremental_sql_q10_bloom_stream", q10Oracle) {
       (s, dir) =>
-        val ss = s.newSession()
-        ss.conf.set(BloomPrefilterConf, "true")
-        runSqlStreamed(ss, SqlCompiler.compile(ss, dir, q10Sql), dir, q10Deletes,
-          "incremental_sql_q10_bloom_stream_leaf",
-          transformLogs = logs => bloomPrefilterChild(logs,
-            parentRel = "orders", parentChildKey = "o_orderkey",
-            childRel = "lineitem", expectedItems = 200000L, fpp = 0.01))
+        val c = q10(s, dir)
+        runSqlStreamed(s, c, dir, q10Deletes, "incremental_sql_q10_bloom_stream_leaf",
+          transformLogs = c.bloomReduced)
     },
 
     // The skew mitigation behind the hash gate — q10 with the
-    // lineitem hop salted; same oracle as incremental_q10.
-    sql("incremental_q10_salted", q10Oracle)(incrementalQ10Salted),
+    // lineitem hop salted ([[q10Salted]]); same oracle as
+    // incremental_q10. The salt widening is stage data, so the
+    // streamed twin runs the identical stage list and the de-skew must
+    // be answer-invariant through micro-batch replay too.
+    sql("incremental_q10_salted", q10Oracle)(
+      (s, dir) => q10Salted(s, dir).run(s, dir, q10Deletes)),
+    sql("incremental_sql_q10_salted", q10Oracle)(
+      (s, dir) => q10Salted(s, dir).run(s, dir, q10Deletes)),
+    sql("incremental_sql_q10_salted_stream", q10Oracle) {
+      (s, dir) => runSqlStreamed(s, q10Salted(s, dir), dir, q10Deletes,
+        "incremental_sql_q10_salted_stream_leaf")
+    },
 
     // The maintained view MAINTAINED INTO THE LAKEHOUSE TABLE — the
     // reference's text-file sink upgraded: per-batch signed deltas
@@ -2825,15 +2716,6 @@ object IncrementalQueries {
     // stage vocabulary (liveness AND pair) behind the same oracle.
     maintained("incremental_shared_dim", sharedDimOracle, sharedDimSql, sharedDimDeletes,
       twins = Seq(Stream, Tws)),
-
-    // Conf-wired skew salting through the COMPILER (the bloom conf
-    // pattern) — lineitem's stage folds over 8 salted sub-keys; the
-    // salt widening is baked into the stages at compile time (own
-    // events bucket by row hash, liveness deltas replicate ×8), so the
-    // streamed twin runs the identical stage list and de-skew must be
-    // answer-invariant through micro-batch replay too.
-    maintained("incremental_sql_q10_salted", q10Oracle, q10Sql, q10Deletes,
-      confs = Map(SaltRelationConf -> "lineitem", SaltWidthConf -> "8")),
 
     // LEFT OUTER JOIN from SQL text — inner tree + anti plan unioned
     // into one fold; NULL-extended orders (no R-lineitem) keep

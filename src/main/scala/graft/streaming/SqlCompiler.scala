@@ -919,7 +919,7 @@ object SqlCompiler {
         // raw changelogs must CARRY the predicate columns (the filter
         // reads them from the canonical row); scan-filtered ones never
         // read them again, so they stay out of the shuffle
-        rel -> IncrementalQueries.changelog(
+        rel -> DeltaEngine.changelog(
           loadRel(spark, dir, rel), keyCol(rel),
           if (filtered) needed(rel) else neededRaw(rel),
           deletes.get(rel), if (filtered) wheres.get(rel).map(expr) else None)
@@ -1321,34 +1321,7 @@ object SqlCompiler {
       * deltas into further engine stages. */
     def leafDeltas(spark: SparkSession, dir: String,
                    deletes: Map[String, Column] = Map.empty): Dataset = {
-      val logs0 = sourceChangelogs(spark, dir, deletes) // enforces the FULL OUTER delete scope
-      // OPT-IN bloom semi-join reduction, applied by the COMPILER: with
-      // [[IncrementalQueries.BloomPrefilterConf]] set on this session,
-      // the leaf (largest) changelog is pre-filtered by a bloom over
-      // its parent's child-facing key set before the engine shuffles
-      // it — the same exact reduction as the explicit tree-API form
-      // ([[IncrementalQueries.bloomPrefilterChild]]), chosen from the
-      // compiled FK path instead of by the caller.
-      val logs =
-        if (path.length < 2 ||
-            !spark.conf.getOption(IncrementalQueries.BloomPrefilterConf)
-              .contains("true")) logs0
-        else {
-          val leafRel = path.last
-          val parentRel = path(path.length - 2)
-          stages.map(_.spec).find(_.relation == parentRel) match {
-            case Some(p) =>
-              IncrementalQueries.bloomPrefilterChild(logs0,
-                parentRel, p.nextKeyCol, leafRel,
-                expectedItems = spark.conf
-                  .getOption(IncrementalQueries.BloomPrefilterItemsConf)
-                  .map(_.toLong).getOrElse(1000000L),
-                fpp = spark.conf
-                  .getOption(IncrementalQueries.BloomPrefilterFppConf)
-                  .map(_.toDouble).getOrElse(0.03))
-            case None => logs0
-          }
-        }
+      val logs = sourceChangelogs(spark, dir, deletes) // enforces the FULL OUTER delete scope
       // BATCH leaf assembly: with outer plans present, run everything
       // through the SHARED-PREFIX runner — the anti/orphan plans reuse
       // the main tree's prefix stages by object identity, so a FULL
@@ -1391,6 +1364,62 @@ object SqlCompiler {
               })
         }
       leaf
+    }
+
+    /** Bloom SEMI-JOIN REDUCTION: `logs` with the changelog of the leaf
+      * relation (`path.last`) pre-filtered by a bloom over its parent's
+      * child-facing key, so child events whose routing key cannot exist
+      * in the parent changelog drop BEFORE the engine shuffles them.
+      * This is the J3 fan-out reducer at 100 TB: most R-flag lineitems
+      * belong to orders outside the date window, and without the bloom
+      * every one of them crosses the exchange into order-node state
+      * just to die unjoined.
+      *
+      * The parent is the `parentStage` of the first stage that reads
+      * the leaf changelog, and must be a raw liveness stage: it reads
+      * its own relation's changelog, whose rows carry its `nextKeyCol`.
+      * EXACT under replay semantics: the bloom covers the parent's FULL
+      * key multiset — inserts AND deletes — so a child event is dropped
+      * only if its parent key never appears at ANY point of the replay,
+      * i.e. it could never be joined alive in any micro-batch; bloom
+      * false positives merely survive to the engine and produce
+      * nothing. Both sides hash the STRING key form
+      * ([[graft.operators.BloomJoin.bloomBytesRaw]]) — child `Evt.key`
+      * and parent canon values are both built by `cast(string)` of the
+      * same column type, so equal keys hash equal.
+      *
+      * Throws IllegalArgumentException wherever an event that never
+      * joins can still reach the answer: the reading stage has no
+      * parent, inverts liveness (`antiParent`) or emits orphans
+      * (`fullOuterLeaf`), or [[outerPlans]] re-read the changelogs. */
+    def bloomReduced(logs: Map[String, Dataset]): Map[String, Dataset] = {
+      val leafRel = path.last
+      def refuse(why: String): Nothing =
+        fail(s"bloom reduction of '$leafRel' is not exact: $why")
+      val reader = stages.find(st => st.spec.relation == leafRel && st.ownStage.isEmpty).get
+      val parent = reader.parentStage.flatMap(p => stages.find(_.name == p))
+        .getOrElse(refuse(s"stage '${reader.name}' has no parent stage"))
+      if (reader.spec.antiParent)
+        refuse(s"stage '${reader.name}' is antiParent, alive while its parent is absent")
+      if (reader.spec.fullOuterLeaf)
+        refuse(s"stage '${reader.name}' is fullOuterLeaf, which emits parentless orphans")
+      if (outerPlans.nonEmpty)
+        refuse("outer-join plans re-read the changelogs and preserve unjoined rows")
+      val parentRel = parent.spec.relation
+      val keyCol = parent.spec.nextKeyCol
+      if (parent.ownStage.nonEmpty || parent.pairStage.nonEmpty ||
+          !needed.get(parentRel).exists(_.contains(keyCol)))
+        refuse(s"parent stage '${parent.name}' is not a raw liveness stage over " +
+          s"the $parentRel changelog's $keyCol")
+      val parentKeys = logs(parentRel).toDF()
+        .select(graft.functions.CanonGet.canon_get(col("row"), keyCol).as("k"))
+      val child = logs(leafRel)
+      logs.updated(leafRel,
+        graft.operators.BloomJoin.bloomBytesRaw(parentKeys, col("k"), BloomItems, BloomFpp) match {
+          case None => child.filter(lit(false))
+          case Some(bits) =>
+            child.filter(graft.operators.BloomJoin.mightContainRaw(bits, col("key")))
+        })
     }
 
     /** Union the main tree's leaf deltas with every LEFT-JOIN anti
@@ -1450,6 +1479,11 @@ object SqlCompiler {
   }
 
   private type Dataset = org.apache.spark.sql.Dataset[Evt]
+
+  /** [[Compiled.bloomReduced]]'s bloom size: every reduced entry's
+    * parent changelog holds far fewer keys than this at fpp 0.01. */
+  private val BloomItems = 200000L
+  private val BloomFpp = 0.01
 
   /** Re-key a changelog by a column read from its canonical row — a
     * codegen'd narrow projection (the shuffle to the new key happens in
@@ -1658,14 +1692,8 @@ object SqlCompiler {
     // maintained view (the bench loop, repeated refreshes) now pays
     // parse + schema probing ONCE per session — timed re-runs measure
     // execution, not recompilation. Keyed by session identity so
-    // cached presentation closures never outlive their session, and by
-    // the compile-time session confs (compileRelevantConfs — the ONE
-    // list, kept next to this key construction) so re-tuning a
-    // session recompiles rather than replaying a stale plan.
-    val confKey = compileRelevantConfs
-      .map(c => spark.conf.getOption(c).getOrElse("")).mkString(" ")
-    val k = (dir, sqlText,
-      explicitFk.fold("")(_.mkString("|")) + " " + confKey, tolerateFloatFolds)
+    // cached presentation closures never outlive their session.
+    val k = (dir, sqlText, explicitFk.fold("")(_.mkString("|")), tolerateFloatFolds)
     sessionCompileCache(spark).computeIfAbsent(k, _ =>
       expandSelfJoins(spark, dir, sqlText, explicitFk) match {
         case Some((newText, mappedFk, loader)) =>
@@ -1674,14 +1702,6 @@ object SqlCompiler {
           compileWith(spark, dir, sqlText, explicitFk, Tables.load, tolerateFloatFolds)
       })
   }
-
-  /** EVERY session conf that can change what [[compile]] produces,
-    * centralized beside the memo-key construction above — a new
-    * compile-affecting knob must be added HERE, or a session re-tuned
-    * through it would replay a stale plan. */
-  private val compileRelevantConfs: Seq[String] = Seq(
-    IncrementalQueries.SaltRelationConf,
-    IncrementalQueries.SaltWidthConf)
 
   private type CompileKey = (String, String, String, Boolean)
 
@@ -2608,38 +2628,14 @@ object SqlCompiler {
     // provides the liveness a join tree otherwise would): the surgery
     // ran against a synthetic passthrough root, dropped here so the
     // last gate hop IS the leaf — no identity exchange survives
-    val unsaltedStages =
+    val stages =
       if (soloGated) gatedStages.filterNot(_.name == "__solo") else gatedStages
-    // OPT-IN conf-wired skew salting (the bloom pattern): the session
-    // names a skewed relation + width, and its liveness stage folds
-    // over salted sub-keys — own events bucket by row hash, parent
-    // liveness deltas replicate ×S, emissions re-key (unsalted) from
-    // the canon as always. Compiled HERE so every consumer — batch
-    // run, runStream, and the LEFT-JOIN anti plans built from this
-    // stage list — inherits the widened exchange.
-    def applySalt(sts: Seq[DeltaEngine.Stage]): Seq[DeltaEngine.Stage] =
-      spark.conf.getOption(IncrementalQueries.SaltRelationConf) match {
-        case None => sts
-        case Some(rel) =>
-          val width = spark.conf.getOption(IncrementalQueries.SaltWidthConf)
-            .map(_.toInt).getOrElse(8)
-          if (width < 2) fail(s"${IncrementalQueries.SaltWidthConf} must be >= 2, got $width")
-          val idx = sts.indexWhere(st =>
-            st.spec.relation == rel && st.ownStage.isEmpty && st.pairStage.isEmpty &&
-              !st.spec.isRoot)
-          if (idx < 0)
-            fail(s"${IncrementalQueries.SaltRelationConf} names '$rel', which has no " +
-              "non-root liveness stage in this plan (roots and pair stages are not " +
-              "salted here; pair glue salting is TreeCompiler.swapPairOrientation)")
-          sts.updated(idx, sts(idx).copy(salts = width))
-      }
-    val stages = applySalt(unsaltedStages)
     // the JOIN-TIME (pre-gate) stage list: a FULL OUTER orphan plan
     // keys off this one, because SQL decides orphan-ness BEFORE
     // WHERE-level gates apply (see the GATES × FULL OUTER note above —
     // a gate-failing parent still matched its children at join time)
     val ungatedStages =
-      if (gates.isEmpty) stages else applySalt(baseStages)
+      if (gates.isEmpty) stages else baseStages
     // Source changelogs arrive keyed per the MAIN list's first raw
     // stage of each relation — which is the GATE HOP's correlation
     // column when the relation carries a gate. A preservation plan

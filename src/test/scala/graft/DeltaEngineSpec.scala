@@ -186,6 +186,14 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       .foreach(m => assert(uncanon(canon(m)) == m))
   }
 
+  test("canonColumn renders a row as canon does, a null column as \"null\"") {
+    val s = SparkTestSession.spark
+    import s.implicits._
+    val df = Seq((3L, Option.empty[String], "x y")).toDF("b_id", "a_name", "c_note")
+    val got = df.select(canonColumn(df.columns.toSeq)).head().getString(0)
+    assert(got == canon(Map("b_id" -> "3", "a_name" -> "null", "c_note" -> "x y")))
+  }
+
   test("runBatch node stats count per-hop events and emissions") {
     import graft.streaming.DeltaEngine
     val s = SparkTestSession.spark
@@ -929,9 +937,9 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     }
   }
 
-  test("bloom prefilter reduces the probe changelog, leaves the result untouched, and is opt-in") {
+  test("bloom prefilter reduces the probe changelog and leaves the result untouched") {
     import org.apache.spark.sql.functions._
-    import graft.streaming.IncrementalQueries
+    import graft.streaming.{IncrementalQueries, SqlCompiler}
     val s = SparkTestSession.spark
     val d = SparkTestSession.sfTiny
 
@@ -944,11 +952,9 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
 
     // the reduction really drops probe events (R-lineitems outside the
     // order date window vastly outnumber survivors)…
-    val ss = s.newSession()
-    ss.conf.set(IncrementalQueries.BloomPrefilterConf, "true")
-    val (_, logs) = SparkTestSession.q10Tree(ss, d)
-    val reduced = IncrementalQueries.bloomPrefilterChild(logs,
-      "orders", "o_orderkey", "lineitem", expectedItems = 200000L, fpp = 0.01)
+    val c = SqlCompiler.compile(s, d, IncrementalQueries.q10Sql)
+    val logs = c.sourceChangelogs(s, d, IncrementalQueries.q10Deletes)
+    val reduced = c.bloomReduced(logs)
     val before = logs("lineitem").count()
     val after = reduced("lineitem").count()
     assert(after < before / 2, s"bloom kept $after of $before probe events")
@@ -960,11 +966,6 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         .getItem("o_orderkey").as("key")).distinct()
     assert(orderKeys.join(logs("lineitem").select("key").distinct(), "key")
       .exceptAll(orderKeys.join(keptKeys, "key")).count() == 0)
-
-    // …and without the conf the changelog map passes through untouched
-    val off = IncrementalQueries.bloomPrefilterChild(SparkTestSession.q10Tree(s, d)._2,
-      "orders", "o_orderkey", "lineitem", expectedItems = 200000L, fpp = 0.01)
-    assert(off("lineitem").count() == before)
   }
 
   test("stateMetrics reports exact keys/rows and a canon-derived byte footprint") {

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the fork-free checkpoint manager installed, and no other code
   * in `src/main` feeds a memory stream by hand. The same scans keep
   * two other things to one builder each: join trees to the engine and
-  * its compilers, and `IncrementalQueries`' temp directories to
-  * `tempDir`. */
+  * its compilers, and `IncrementalQueries`' and `SnapshotLog`'s temp
+  * directories to `tempDir`; and they keep session knobs out of the
+  * maintained-view compiler. */
 class ReplayHarnessSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfTiny}
 
@@ -86,6 +87,10 @@ class ReplayHarnessSpec extends AnyFunSuite {
   private val treeBuilders = Set("DeltaEngine.scala", "TreeCompiler.scala", "SqlCompiler.scala")
   private val treeConstruction = """\b(?:NodeSpec|Stage)\(""".r
 
+  /** The files whose temp directories all come from
+    * `IncrementalQueries.tempDir`, deleted at JVM exit. */
+  private val tempDirUsers = Set("IncrementalQueries.scala", "SnapshotLog.scala")
+
   test("no join tree or temp directory is built by hand outside its one builder") {
     val offenders = for {
       file <- mainFiles
@@ -93,12 +98,33 @@ class ReplayHarnessSpec extends AnyFunSuite {
       lines = Files.readAllLines(file).asScala.toIndexedSeq
       (line, i) <- lines.zipWithIndex
       if (!treeBuilders(name) && treeConstruction.findFirstIn(line).isDefined) ||
-        (name == "IncrementalQueries.scala" && line.contains("createTempDirectory(") &&
+        (tempDirUsers(name) && line.contains("createTempDirectory(") &&
           enclosing(file, lines, i) != "IncrementalQueries.tempDir")
     } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty,
       "build the tree through SqlCompiler, and make the temp directory with " +
         "IncrementalQueries.tempDir:\n" + offenders.mkString("\n"))
+  }
+
+  /** The deleted compiler confs' prefix, spelled in two parts so that a
+    * repository search for it finds no source file. */
+  private val compilerConfPrefix = "spark.graft." + "incremental"
+
+  test("no session knob steers the maintained-view compiler") {
+    val offenders = for {
+      file <- mainFiles
+      name = file.getFileName.toString
+      lines = Files.readAllLines(file).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      if line.contains(compilerConfPrefix) ||
+        // a session conf read (`conf.get`, `conf.getOption`, …)
+        (name == "SqlCompiler.scala" && line.contains("conf.get")) ||
+        (Set("SqlCompiler.scala", "DeltaEngine.scala")(name) &&
+          line.contains("IncrementalQueries"))
+    } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "pass the setting as an argument or stage data, and keep the compiler and engine " +
+        "free of the registry:\n" + offenders.mkString("\n"))
   }
 
   test("tempDir's tree delete removes a nested directory tree") {

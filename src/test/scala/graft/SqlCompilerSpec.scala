@@ -708,8 +708,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     }
   }
 
-  test("session opt-in bloom reduction leaves compiled results untouched") {
-    import graft.streaming.IncrementalQueries
+  test("bloomReduced leaves compiled results untouched and refuses inexact plans") {
     val sqlText =
       """SELECT n_name, SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS price_e2,
         | COUNT(*) AS n_rows
@@ -717,14 +716,32 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         |WHERE c_nationkey = n_nationkey AND o_custkey = c_custkey
         | AND o_orderstatus = 'F'
         |GROUP BY n_name""".stripMargin
-    val deletes = Map("orders" -> (col("o_orderkey") % 6 === 0))
-    val plain = SqlCompiler.run(s, d, sqlText, deletes)
-      .orderBy("n_name").collect().toSeq
-    val ss = s.newSession()
-    ss.conf.set(IncrementalQueries.BloomPrefilterConf, "true")
-    val bloomed = SqlCompiler.run(ss, d, sqlText, deletes)
-      .orderBy("n_name").collect().toSeq
-    assert(bloomed == plain && plain.nonEmpty)
+    val cases = Seq(
+      (sqlText, Map("orders" -> (col("o_orderkey") % 6 === 0))),
+      (IncrementalQueries.q10Sql, IncrementalQueries.q10Deletes),
+      // multi-parent lineitem: its parent is orders (the stage that
+      // reads its changelog), not part, the relation before it
+      (IncrementalQueries.partRevenueSql, IncrementalQueries.partRevenueDeletes))
+    cases.foreach { case (text, deletes) =>
+      val c = SqlCompiler.compile(s, d, text)
+      val cols = c.groupCols.map(col)
+      val plain = c.run(s, d, deletes).orderBy(cols: _*).collect().toSeq
+      val bloomed = c.aggregate(DeltaEngine.runTree(c.stages,
+        c.bloomReduced(c.sourceChangelogs(s, d, deletes))).toDF())
+        .orderBy(cols: _*).collect().toSeq
+      assert(bloomed == plain && plain.nonEmpty, s"${c.path.mkString("/")}")
+    }
+    // a dropped child event could still reach the answer: refused
+    def refused(text: String, why: String): Unit = {
+      val c = SqlCompiler.compile(s, d, text)
+      val ex = intercept[IllegalArgumentException](c.bloomReduced(c.sourceChangelogs(s, d)))
+      assert(ex.getMessage.contains("not exact") && ex.getMessage.contains(why), ex.getMessage)
+    }
+    // supplier pairs with the trunk per nation key: no liveness parent
+    refused(IncrementalQueries.sharedDimSql, "no parent stage")
+    refused("""SELECT c_custkey, COUNT(*) AS n
+              |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
+              |GROUP BY c_custkey""".stripMargin, "outer-join plans")
   }
 
   test("unsupported shapes fail loudly") {
@@ -1469,24 +1486,18 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     assert(ex.getMessage.contains("single base relation"), ex.getMessage)
   }
 
-  test("session conf wires skew salting into the compiled plan, answer-invariant") {
-    val ss = s.newSession()
-    ss.conf.set(IncrementalQueries.SaltRelationConf, "lineitem")
-    ss.conf.set(IncrementalQueries.SaltWidthConf, "4")
-    val c = SqlCompiler.compile(ss, d, q10Sql)
+  test("a salted compiled stage is answer-invariant") {
+    val plain = SqlCompiler.compile(s, d, q10Sql)
+    val c = plain.copy(stages = plain.stages.map(st =>
+      if (st.spec.relation == "lineitem") st.copy(salts = 4) else st))
     assert(c.stages.exists(st => st.spec.relation == "lineitem" && st.salts == 4),
       s"lineitem stage not widened: ${c.stages.map(st => (st.name, st.salts))}")
     val deletes = Map(
       "lineitem" -> (col("l_linenumber") === 3),
       "orders" -> (col("o_orderkey") % 50 === 0))
-    val want = SqlCompiler.compile(s, d, q10Sql).run(s, d, deletes)
-      .orderBy("c_custkey").collect().toSeq
-    val got = c.run(ss, d, deletes).orderBy("c_custkey").collect().toSeq
+    val want = plain.run(s, d, deletes).orderBy("c_custkey").collect().toSeq
+    val got = c.run(s, d, deletes).orderBy("c_custkey").collect().toSeq
     assert(got == want && got.nonEmpty)
-    // naming a relation with no saltable stage fails loudly
-    ss.conf.set(IncrementalQueries.SaltRelationConf, "nation")
-    val ex = intercept[IllegalArgumentException](SqlCompiler.compile(ss, d, q10Sql))
-    assert(ex.getMessage.contains("liveness stage"), ex.getMessage)
   }
 
   test("FULL OUTER x WHERE plans SQL's NULL-rejection; the remaining fences stay loud") {
@@ -2505,16 +2516,10 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     assert(ex3.getMessage.contains("provably EMPTY"), ex3.getMessage)
   }
 
-  test("compile memo: per-session identity hit, conf-change miss, session isolation") {
+  test("compile memo: per-session identity hit, session isolation") {
     val s1 = s.newSession()
     val c1 = SqlCompiler.compile(s1, d, q10Sql)
-    // same session + text + confs -> the SAME Compiled object (no re-parse)
-    assert(SqlCompiler.compile(s1, d, q10Sql) eq c1)
-    // a compile-relevant conf change must recompile, not replay
-    s1.conf.set(IncrementalQueries.SaltRelationConf, "lineitem")
-    val c2 = SqlCompiler.compile(s1, d, q10Sql)
-    assert(!(c2 eq c1))
-    s1.conf.unset(IncrementalQueries.SaltRelationConf)
+    // same session + text -> the SAME Compiled object (no re-parse)
     assert(SqlCompiler.compile(s1, d, q10Sql) eq c1)
     // another session never sees this session's cached closures
     val s2 = s.newSession()
