@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * and lets column pruning delete pure projections (a pure-`select`
   * query would then time only a parquet footer count). A warm-up first
   * so JIT/session init doesn't pollute q1. Full-inventory timings:
-  * `runMain graft.Profile`.
+  * `runMain graft.MiniBench` with no names.
   *
   * Every query runs SPARK_GRAFT_BENCH_RUNS times (default 5) and the
   * recorded value is the MEDIAN (per-query min and n ride along under

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.LongType
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
 import graft.functions.WordShingles.word_ngrams
+import graft.TempDirs.tempDir
 
 /** Data-curation operators — the filtering/sampling/packing layer a
   * training-data pipeline runs between raw text and the tokenizer:
@@ -95,9 +96,9 @@ object Curation {
     * the postings rows) instead of a parallel in-JVM tf/df state. */
   private[graft] final class Bm25Index {
     import graft.sources.SnapshotLog
-    val postRoot: String = java.nio.file.Files.createTempDirectory("graft_bm25_post").toString
-    val docsRoot: String = java.nio.file.Files.createTempDirectory("graft_bm25_docs").toString
-    val statsRoot: String = java.nio.file.Files.createTempDirectory("graft_bm25_stats").toString
+    val postRoot: String = tempDir("graft_bm25_post").toString
+    val docsRoot: String = tempDir("graft_bm25_docs").toString
+    val statsRoot: String = tempDir("graft_bm25_stats").toString
     private type S = org.apache.spark.sql.SparkSession
     def latest(root: String): Int =
       SnapshotLog.history(root).map(_._1).maxOption.getOrElse(-1)

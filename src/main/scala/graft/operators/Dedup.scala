@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
+import graft.TempDirs.tempDir
 
 /** Deduplication operators over `documents` / `embeddings` — the core
   * of a training-data pipeline. Five families, each with a DuckDB
@@ -529,9 +530,9 @@ object Dedup {
   private[graft] final class PersistedCc {
     import graft.sources.SnapshotLog
     val edgesRoot: String =
-      java.nio.file.Files.createTempDirectory("graft_cc_edges").toString
+      tempDir("graft_cc_edges").toString
     val labelsRoot: String =
-      java.nio.file.Files.createTempDirectory("graft_cc_labels").toString
+      tempDir("graft_cc_labels").toString
 
     private def latest(root: String): Int =
       SnapshotLog.history(root).map(_._1).maxOption.getOrElse(-1)
@@ -731,9 +732,9 @@ object Dedup {
   private[graft] final class PersistedMinhash {
     import graft.sources.SnapshotLog
     val docsRoot: String =
-      java.nio.file.Files.createTempDirectory("graft_mh_docs").toString
+      tempDir("graft_mh_docs").toString
     val pairsRoot: String =
-      java.nio.file.Files.createTempDirectory("graft_mh_pairs").toString
+      tempDir("graft_mh_pairs").toString
 
     private def latest(root: String): Int =
       SnapshotLog.history(root).map(_._1).maxOption.getOrElse(-1)
@@ -943,8 +944,8 @@ object Dedup {
   private def embeddingLshPersist(s0: SparkSession, d: String): DataFrame = {
     import graft.functions.VectorOps.{dot, floorRound6, normSq, toDoubleVec}
     import graft.sources.SnapshotLog
-    val vecsRoot = java.nio.file.Files.createTempDirectory("graft_lsh_vecs").toString
-    val pairsRoot = java.nio.file.Files.createTempDirectory("graft_lsh_pairs").toString
+    val vecsRoot = tempDir("graft_lsh_vecs").toString
+    val pairsRoot = tempDir("graft_lsh_pairs").toString
     def latest(root: String): Int =
       SnapshotLog.history(root).map(_._1).maxOption.getOrElse(-1)
     def vecState(s: SparkSession): Option[DataFrame] = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.TempDirs.tempDir
 
 /** Memoized MATERIALIZATION of expensive per-fixture pipeline results —
   * the maintained/persisted state replays whose multi-batch changelogs
@@ -21,14 +22,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fixture changelog dozens of times in one JVM. */
 private[graft] object FixtureMemo {
   private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  sys.addShutdownHook {
-    dirs.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   /** BENCH GUARD: this memo is only non-gaming while no memoized
     * entry is a bench headliner — a headliner reading memoized rows
@@ -56,7 +49,7 @@ private[graft] object FixtureMemo {
     require(entries.nonEmpty, s"FixtureMemo '$key' must declare the registry entries it serves")
     entries.foreach(assertNotBenchHeadliner)
     val dir = dirs.computeIfAbsent(key, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_memo_").toString
+      val out = tempDir("graft_memo_").toString
       val df = build
       (if (df.isEmpty) df.repartition(1) else df)
         .write.mode("overwrite").parquet(out)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
 import graft.plans.MaterializedViewRewrite
+import graft.TempDirs.tempDir
 
 /** The MATERIALIZED-VIEW surface: build a pre-aggregated summary once,
   * register it ([[MaterializedViewRewrite]]'s session confs), and have
@@ -59,16 +60,7 @@ object MatViews {
         min(col("l_extendedprice")).as("min_price"),
         max(col("l_extendedprice")).as("max_price"))
 
-  private def tempMvDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_li_rev")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }))
-    dir.toString
-  }
+  private def tempMvDir(): String = tempDir("graft_mv_li_rev").toString
 
   val defs: Seq[GraftQuery] = Seq(
     // Build → register → query raw → SELF-ASSERT the rewrite fired

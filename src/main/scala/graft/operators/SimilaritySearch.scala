@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
 import graft.functions.VectorOps._
+import graft.TempDirs.tempDir
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
@@ -35,14 +36,6 @@ object SimilaritySearch {
   /** Memoized per-fixture incremental-IVF index dirs (built once:
     * base build + two changelog upserts), removed on JVM exit. */
   private val ivfDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  sys.addShutdownHook {
-    ivfDirs.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   /** The maintained index for `ann_ivf_incremental`: build from the
     * base corpus (every 10th vector held out), then upsert batch 1 =
@@ -52,7 +45,7 @@ object SimilaritySearch {
     * `vec_id % 7 <> 3` under the BASE-frozen quantizer. */
   private def incrementalIvfDir(s: SparkSession, d: String): String =
     ivfDirs.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivf_inc_").toString
+      val out = tempDir("graft_ivf_inc_").toString
       val e = graft.Tables.embeddings(s, d)
         .select(col("vec_id"), quantVec7(col("embedding")).as("v"))
       graft.sources.IvfIndex.build(e.filter(col("vec_id") % 10 =!= 0), out, IvfCells)
@@ -74,7 +67,7 @@ object SimilaritySearch {
     * from-scratch oracle over the final corpus. */
   private def maintainedIvfDir(s: SparkSession, d: String): String =
     ivfDirs.computeIfAbsent(s"$d#maintained", _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivf_maint_").toString
+      val out = tempDir("graft_ivf_maint_").toString
       val e = graft.Tables.embeddings(s, d)
         .select(col("vec_id"), quantVec7(col("embedding")).as("v"))
       val ghosts = e.filter(col("vec_id") % 50 === 0)
@@ -104,7 +97,7 @@ object SimilaritySearch {
     * to fire at all breaks the hash. */
   private def maintainedResplitIvfDir(s: SparkSession, d: String): String =
     ivfDirs.computeIfAbsent(s"$d#maintresplit", _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivf_mres_").toString
+      val out = tempDir("graft_ivf_mres_").toString
       val e = graft.Tables.embeddings(s, d)
         .select(col("vec_id"), quantVec7(col("embedding")).as("v"))
       graft.sources.IvfIndex.build(e, out, IvfCells)
@@ -139,11 +132,10 @@ object SimilaritySearch {
   val ResplitSubCells = 2
 
   /** Memoized per-fixture resplit-index dirs (build coarse → resplit
-    * oversized cells once), removed on JVM exit via [[ivfDirs]]'s hook
-    * (same map). */
+    * oversized cells once), removed on JVM exit (same map). */
   private def resplitIvfDir(s: SparkSession, d: String): String =
     ivfDirs.computeIfAbsent(s"$d#resplit", _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivf_resplit_").toString
+      val out = tempDir("graft_ivf_resplit_").toString
       val e = graft.Tables.embeddings(s, d)
         .select(col("vec_id"), quantVec7(col("embedding")).as("v"))
       graft.sources.IvfIndex.build(e, out, ResplitCells)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
+import graft.TempDirs.tempDir
 
 /** Columnar format round trips beyond parquet — the engine's sink/
   * source surface includes ORC (Spark-native, predicate pushdown and
@@ -28,20 +29,9 @@ object Formats {
   private val cols =
     Seq("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_shipdate")
 
-  // remove the memoized copies on JVM exit — one partitioned lineitem
-  // copy per fixture dir would otherwise accumulate across runs
-  sys.addShutdownHook {
-    orcDirs.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
-
   def orcLineitemDir(s: SparkSession, d: String): String =
     orcDirs.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_orc_").toString
+      val out = tempDir("graft_orc_").toString
       Tables.lineitem(s, d)
         .select((cols.map(col) :+ col("l_returnflag")): _*)
         .write.mode("overwrite")
@@ -69,18 +59,10 @@ object Formats {
     * tables gain columns over their lifetime and old files stay as
     * written. */
   private val evoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  sys.addShutdownHook {
-    evoDirs.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   def evolvedDocsDir(s: SparkSession, d: String): String =
     evoDirs.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_evo_").toString
+      val out = tempDir("graft_evo_").toString
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "source")
         .write.mode("overwrite").parquet(s"$out/batch1")

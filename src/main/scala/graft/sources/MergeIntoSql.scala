@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.logical._
+import graft.SqlText
 import graft.streaming.SqlCompiler.fragment
 
 /** SQL-text `MERGE INTO` compiled onto the snapshot log's commit
@@ -60,32 +62,17 @@ object MergeIntoSql {
   }
 
   /** Extract the text of a `USING (...)` source subquery — the
-    * balanced-paren group after the USING keyword, honoring
-    * single-quoted strings (Catalyst's parsed plan does not carry the
-    * body text in a runnable form, but the statement text does). The
-    * scan runs on COMMENT-MASKED text (offset-preserving, so the
-    * extracted range maps back to the original) — a leading `--` or
-    * block comment containing `USING (` must not bind the match. */
+    * balanced-paren group after the top-level USING keyword, found
+    * over Spark's tokens (Catalyst's parsed plan does not carry the
+    * body text in a runnable form, but the statement text does), so a
+    * comment or literal containing `USING (` cannot bind the match. */
   private def usingSubqueryText(sqlText: String): Option[String] = {
-    val masked = SqlDml.maskComments(sqlText)
-    val m = java.util.regex.Pattern.compile("(?is)\\bUSING\\s*\\(").matcher(masked)
-    if (!m.find()) return None
-    var i = m.end()
-    var depth = 1
-    var inStr = false
-    val start = i
-    while (i < masked.length && depth > 0) {
-      val c = masked.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth != 0) None else Some(sqlText.substring(start, i - 1))
+    val toks = SqlText.tokens(sqlText)
+    val using = toks.indexWhere(t => t.depth == 0 && t.kind == SqlBaseLexer.USING)
+    val open = using + 1
+    if (using < 0 || !toks.lift(open).exists(_.kind == SqlBaseLexer.LEFT_PAREN)) None
+    else SqlText.closeParen(toks, open)
+      .map(close => sqlText.substring(toks(open).end, toks(close).start))
   }
 
   /** Resolve the statement's USING relation to (alias, DataFrame):

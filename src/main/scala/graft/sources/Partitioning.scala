@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
+import graft.TempDirs.tempDir
 
 /** PARTITIONED LAYOUT + PARTITION PRUNING — the other half of the scan
   * story beside bucketing (co-located joins) and Z-order (multi-dim
@@ -32,18 +33,10 @@ object Partitioning {
   /** One partitioned copy of lineitem per fixture dir per JVM:
     * `l_year=YYYY/` directories, plus the original columns. */
   private val roots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  sys.addShutdownHook {
-    roots.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   def lineitemByYearRoot(s: SparkSession, d: String): String =
     roots.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_part_lineitem").toString
+      val root = tempDir("graft_part_lineitem").toString
       Tables.lineitem(s, d)
         .withColumn("l_year", year(col("l_shipdate")))
         .write.mode("overwrite").partitionBy("l_year").parquet(root)

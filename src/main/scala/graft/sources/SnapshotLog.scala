@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
-import graft.streaming.IncrementalQueries
+import graft.TempDirs.tempDir
 
 /** A minimal COPY-ON-WRITE versioned table — the lakehouse snapshot
   * contract (Delta/Iceberg time travel) in its essential form, built
@@ -866,14 +866,6 @@ object SnapshotLog {
 
   /** One committed two-version table per (fixture dir) per JVM. */
   private val roots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  sys.addShutdownHook {
-    roots.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   private val payload = Seq("o_custkey", "o_orderstatus", "o_totalprice")
 
@@ -887,7 +879,7 @@ object SnapshotLog {
   private val dvRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dvTableRoot(s: SparkSession, d: String): String =
     dvRoots.computeIfAbsent(d, _ => {
-      val root = IncrementalQueries.tempDir("graft_snap_dv").toString
+      val root = tempDir("graft_snap_dv").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       commitDeleteVector(s, root, 1, "o_orderkey",
@@ -898,14 +890,6 @@ object SnapshotLog {
             col("o_custkey"), col("o_orderstatus"), col("o_totalprice")))
       root
     })
-  sys.addShutdownHook {
-    dvRoots.values().forEach { dir =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
 
   /** The canonical three-residue change set over `orders` (mod 160 —
     * and 160 ≡ 0 mod 16, so each residue pins one bucket), split in
@@ -949,7 +933,7 @@ object SnapshotLog {
     * copy-on-write claim the entry asserts. */
   def ordersTableRoot(s: SparkSession, d: String): String =
     roots.computeIfAbsent(d, _ => {
-      val root = IncrementalQueries.tempDir("graft_snap_orders").toString
+      val root = tempDir("graft_snap_orders").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       commitMerge(s, root, 1, "o_orderkey", payload,
@@ -965,7 +949,7 @@ object SnapshotLog {
   private val checkedRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def checkedTableRoot(s: SparkSession, d: String): String =
     checkedRoots.computeIfAbsent(d, _ => {
-      val root = IncrementalQueries.tempDir("graft_snap_checked").toString
+      val root = tempDir("graft_snap_checked").toString
       val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
       commitInitial(orders, root, "o_orderkey")
       setConstraints(root, Map(
@@ -1113,7 +1097,7 @@ object SnapshotLog {
     // entry: however the table got there, v1 must read the same.
     sql("snapshot_merge_into", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_msql").toString
+        val root = tempDir("graft_snap_msql").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long) =
@@ -1146,7 +1130,7 @@ object SnapshotLog {
     // residual-failed rows touched nothing.
     sql("snapshot_merge_into_composite", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_mcomp").toString
+        val root = tempDir("graft_snap_mcomp").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long, status: org.apache.spark.sql.Column) =
@@ -1183,7 +1167,7 @@ object SnapshotLog {
     // the table byte-identical to the canonical three-class outcome.
     sql("snapshot_merge_into_residual_range", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_mrange").toString
+        val root = tempDir("graft_snap_mrange").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def cls(residue: Int, kind: String, shift: Long, tsOff: Double) =
@@ -1219,7 +1203,7 @@ object SnapshotLog {
     sql("snapshot_merge_into_subquery", appliedChangesSql) {
       (s0, d) =>
         val s = s0.newSession()
-        val root = IncrementalQueries.tempDir("graft_snap_msub").toString
+        val root = tempDir("graft_snap_msub").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         orders.createOrReplaceTempView("msub_orders")
@@ -1257,7 +1241,7 @@ object SnapshotLog {
     sql("snapshot_sql_dml", appliedChangesSql) {
       (s0, d) =>
         val s = s0.newSession()
-        val root = IncrementalQueries.tempDir("graft_snap_dml").toString
+        val root = tempDir("graft_snap_dml").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         require(SqlDml.updateSql(s, root, 1, "o_orderkey", payload,
@@ -1293,7 +1277,7 @@ object SnapshotLog {
         |  AS o_totalprice
         |FROM orders""".stripMargin) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_updf").toString
+        val root = tempDir("graft_snap_updf").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val src = orders.filter(col("o_orderkey") % 160 === 1)
@@ -1332,8 +1316,8 @@ object SnapshotLog {
         |  WHERE c.c_custkey = ch.o_custkey AND c.c_custkey % 160 <> 1)""".stripMargin) {
       (s, d) =>
         import s.implicits._
-        val parentRoot = IncrementalQueries.tempDir("graft_snap_fkp").toString
-        val childRoot = IncrementalQueries.tempDir("graft_snap_fkc").toString
+        val parentRoot = tempDir("graft_snap_fkp").toString
+        val childRoot = tempDir("graft_snap_fkc").toString
         val customer = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
@@ -1382,7 +1366,7 @@ object SnapshotLog {
         | (2, 2, 0, 1)) AS h(version, n_dirs, n_rewritten, n_tombstone_dirs)""".stripMargin) {
       (s, d) =>
         import s.implicits._
-        val root = IncrementalQueries.tempDir("graft_snap_hist").toString
+        val root = tempDir("graft_snap_hist").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1434,7 +1418,7 @@ object SnapshotLog {
         // against the LATEST version, and sibling entries (compaction)
         // mint further versions on the shared root — the relative
         // operand needs a root whose version count it controls
-        val root = IncrementalQueries.tempDir("graft_snap_ttrel").toString
+        val root = tempDir("graft_snap_ttrel").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1467,7 +1451,7 @@ object SnapshotLog {
         // OWN root (the relative entry's lesson): the subquery resolves
         // against this table's full history, which must not grow under
         // sibling entries' commits
-        val root = IncrementalQueries.tempDir("graft_snap_ttsub").toString
+        val root = tempDir("graft_snap_ttsub").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1500,7 +1484,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE)
         |FROM orders WHERE o_orderkey % 3 = 1""".stripMargin) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_msync").toString
+        val root = tempDir("graft_snap_msync").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val src = orders.filter(col("o_orderkey") % 3 === 0)
@@ -1532,8 +1516,8 @@ object SnapshotLog {
     // back).
     sql("snapshot_branch_cow", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_bsrc").toString
-        val branch = IncrementalQueries.tempDir("graft_snap_bdst").toString
+        val root = tempDir("graft_snap_bsrc").toString
+        val branch = tempDir("graft_snap_bdst").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))
@@ -1564,8 +1548,8 @@ object SnapshotLog {
     // remains time-travelable to the pre-merge state (self-asserted).
     sql("snapshot_branch_merge_back", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_mbsrc").toString
-        val branch = IncrementalQueries.tempDir("graft_snap_mbdst").toString
+        val root = tempDir("graft_snap_mbsrc").toString
+        val branch = tempDir("graft_snap_mbdst").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))
@@ -1615,7 +1599,7 @@ object SnapshotLog {
       (s, d) =>
         import graft.streaming.IncrementalQueries.{boundedReplayCollect, replay, BatchSink}
         import s.implicits._
-        val root = IncrementalQueries.tempDir("graft_snap_stream").toString
+        val root = tempDir("graft_snap_stream").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val batches = Seq(updateBatch(orders), deleteInsertBatch(orders)).map { b =>
@@ -1647,7 +1631,7 @@ object SnapshotLog {
         // PRIVATE root: other entries extend the shared two-version
         // table (compaction adds v2), which would make the mid-gap
         // resolution below depend on entry execution order
-        val root = IncrementalQueries.tempDir("graft_snap_asof").toString
+        val root = tempDir("graft_snap_asof").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1710,7 +1694,7 @@ object SnapshotLog {
         import graft.streaming.IncrementalQueries.{boundedReplayCollect, halves, replay,
           BatchSink}
         import s.implicits._
-        val root = IncrementalQueries.tempDir("graft_snap_gold").toString
+        val root = tempDir("graft_snap_gold").toString
         val goldPayload = Seq("n_orders", "total_e2")
         val rows = boundedReplayCollect("snapshot_stream_gold",
           Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -1818,7 +1802,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
         |FROM orders WHERE o_orderkey % 160 NOT IN (0, 16, 32)""".stripMargin) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_dvpol").toString
+        val root = tempDir("graft_snap_dvpol").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         def del(v: Int, residue: Int): String =
@@ -1856,7 +1840,7 @@ object SnapshotLog {
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
         |FROM orders WHERE o_custkey % 97 <> 0""".stripMargin) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_gdpr").toString
+        val root = tempDir("graft_snap_gdpr").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val subjects = orders.filter(col("o_custkey") % 97 === 0)
@@ -1895,7 +1879,7 @@ object SnapshotLog {
         | END AS o_prio
         |FROM orders""".stripMargin) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_evo").toString
+        val root = tempDir("graft_snap_evo").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         val evolved = orders.filter(col("o_orderkey") % 160 === 1)
@@ -1922,7 +1906,7 @@ object SnapshotLog {
     // thing vacuum is allowed to break).
     sql("snapshot_vacuum", appliedChangesSql) {
       (s, d) =>
-        val root = IncrementalQueries.tempDir("graft_snap_vac").toString
+        val root = tempDir("graft_snap_vac").toString
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload,
@@ -1953,7 +1937,7 @@ object SnapshotLog {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         val ss = s.newSession()
         implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        val root = IncrementalQueries.tempDir("graft_snap_ici").toString
+        val root = tempDir("graft_snap_ici").toString
         val orders = Tables.orders(ss, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         import ss.implicits._
@@ -2007,8 +1991,8 @@ object SnapshotLog {
          |GROUP BY n_name""".stripMargin) {
       (s, d) =>
         import graft.streaming.SqlCompiler
-        val root = IncrementalQueries.tempDir("graft_snap_cdcloop").toString
-        val branch = IncrementalQueries.tempDir("graft_snap_cdcloop_b").toString + "/b"
+        val root = tempDir("graft_snap_cdcloop").toString
+        val branch = tempDir("graft_snap_cdcloop_b").toString + "/b"
         val orders = Tables.orders(s, d).select(("o_orderkey" +: payload).map(col): _*)
         commitInitial(orders, root, "o_orderkey")
         commitMerge(s, root, 1, "o_orderkey", payload, updateBatch(orders))

@@ -3,7 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.logical._
+import graft.SqlText
 import graft.streaming.SqlCompiler.fragment
 
 /** The remaining SQL DML statements — UPDATE, DELETE, INSERT INTO —
@@ -120,7 +122,7 @@ object SqlDml {
   def updateFromSql(spark: SparkSession, root: String, v: Int, key: String,
                     payloadCols: Seq[String], sqlText: String,
                     source: DataFrame): Boolean = {
-    val m = updateFromPattern.matcher(maskComments(sqlText))
+    val m = updateFromPattern.matcher(SqlText.maskComments(sqlText))
     if (!m.matches())
       fail("expected UPDATE <t> [alias] SET <assignments> FROM <s> [alias] " +
         "WHERE <cond> — for a sourceless update use updateSql")
@@ -195,27 +197,12 @@ object SqlDml {
     } finally { changes.unpersist(); () }
   }
 
-  /** Split on top-level commas — paren- and quote-aware. */
+  /** Split on top-level commas, over Spark's tokens. */
   private def splitTopLevel(text: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += text.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += text.substring(start)
-    out.toSeq
+    val commas = SqlText.tokens(text)
+      .filter(t => t.depth == 0 && t.kind == SqlBaseLexer.COMMA).map(_.start)
+    ((-1 +: commas) :+ text.length).sliding(2)
+      .map { case Seq(a, b) => text.substring(a + 1, b) }.toSeq
   }
 
   /** DELETE: lowers to a deletion-vector commit — O(|deleted keys|),
@@ -335,35 +322,6 @@ object SqlDml {
     vs.max
   }
 
-  /** Blank out `--` line comments and (non-nested) block comments with
-    * SPACES of the same length, honoring single-quoted strings — so
-    * offsets into the masked text remain valid in the original and an
-    * `AS OF` phrase inside a comment can never bind (or desync the
-    * arity guard against) a time-travel factor. Shared (`private[graft]`)
-    * with every other text-level SQL scanner in the engine —
-    * [[MergeIntoSql.usingSubqueryText]] and
-    * [[graft.streaming.RecursiveSql]] run the same pass before their
-    * regex / balanced-paren scans, so a comment mentioning `USING (`
-    * or a CTE name can never bind or desync them. */
-  private[graft] def maskComments(sql: String): String = {
-    val out = sql.toCharArray
-    var i = 0
-    var inStr = false
-    while (i < out.length) {
-      val c = out(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '-' && i + 1 < out.length && out(i + 1) == '-') {
-        while (i < out.length && out(i) != '\n') { out(i) = ' '; i += 1 }
-      } else if (c == '/' && i + 1 < out.length && out(i + 1) == '*') {
-        val end = sql.indexOf("*/", i + 2)
-        val stop = if (end < 0) out.length else end + 2
-        while (i < stop) { out(i) = ' '; i += 1 }
-      } else i += 1
-    }
-    new String(out)
-  }
-
   /** Per-call uniqueness for the rebound view names: two concurrent
     * timeTravelSql calls on one session must never read each other's
     * bindings (a fixed name raced createOrReplaceTempView vs sql and
@@ -391,7 +349,11 @@ object SqlDml {
                     tables: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
     val s = spark
-    val masked = maskComments(sqlText)
+    val masked = SqlText.maskComments(sqlText)
+    // matches inside string literals don't name relations
+    val literals = SqlText.tokens(sqlText).filter(t =>
+      t.kind == SqlBaseLexer.STRING_LITERAL || t.kind == SqlBaseLexer.DOUBLEQUOTED_STRING)
+    def inLiteral(at: Int): Boolean = literals.exists(t => t.start <= at && at < t.end)
     // Spark's own grammar accepts EXPRESSIONS but not SUBQUERIES as
     // AS OF operands — substitute a placeholder version for the
     // validation parse only (the real subquery folds at bind time
@@ -406,7 +368,7 @@ object SqlDml {
         if ((kindU == "VERSION" || kindU == "SYSTEM_VERSION") &&
             v.startsWith("(") &&
             v.substring(1).trim.toUpperCase.startsWith("SELECT") &&
-            masked.substring(0, mm.start()).count(_ == '\'') % 2 == 0) {
+            !inLiteral(mm.start())) {
           sb.append(sqlText.substring(l, mm.start(3))).append("0")
           l = mm.end(3)
         }
@@ -422,10 +384,7 @@ object SqlDml {
     var last = 0
     var n = 0
     while (m.find()) {
-      // matches inside string literals don't name relations: skip any
-      // hit preceded by an odd number of single quotes (counted on the
-      // masked text — quotes inside comments are gone)
-      if (masked.substring(0, m.start()).count(_ == '\'') % 2 == 1) {
+      if (inLiteral(m.start())) {
         out.append(sqlText.substring(last, m.end())); last = m.end()
       } else {
       val (name, kind, value) = (m.group(1), m.group(2).toUpperCase, m.group(3))

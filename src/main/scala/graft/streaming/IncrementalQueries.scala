@@ -7,6 +7,7 @@ import graft.{GraftQuery, Tables}
 import graft.GraftQuery.sql
 import graft.sources.CdcParser
 import graft.streaming.DeltaEngine._
+import graft.TempDirs.tempDir
 
 /** The incremental (changelog) query surface, registered against the
   * correctness gate. An entry maintains a view under a
@@ -1407,32 +1408,6 @@ object IncrementalQueries {
   /** Rendered-CDC-lines directory per fixture dir, for this JVM. */
   private val cdcLineDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Directories [[tempDir]] made, deleted at JVM exit. */
-  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => exitDirs.forEach(d => deleteTree(d))))
-
-  /** A fresh temp directory named `prefix…`, deleted with everything
-    * under it when the JVM exits (`deleteOnExit` would only remove it
-    * empty): the one way an entry here makes a scratch table or line
-    * drop. */
-  private[graft] def tempDir(prefix: String): java.nio.file.Path = {
-    exitHook
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    exitDirs.add(dir)
-    dir
-  }
-
-  /** Delete `root` and everything under it, deepest paths first; a
-    * missing `root` is a no-op. */
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val paths = scala.util.Using.resource(java.nio.file.Files.walk(root))(
-        _.iterator().asScala.toVector)
-      paths.sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists)
-    }
-
   private val lineitemCdcCols =
     Seq("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
 
@@ -2000,17 +1975,20 @@ object IncrementalQueries {
     // _stream twin below runs the same reduction through the replay.
     sql("incremental_sql_q10_bloom", q10Oracle)(incrementalQ10Bloom),
 
-    // The BLOOM-REDUCED compiled tree streamed: the leaf changelog is
-    // pre-filtered by a STATIC bloom built from the parent's key
-    // universe before entering the stream — the standard deployment
-    // shape for a pre-built reduction filter — and the reduction must
-    // be answer-invariant through the replay (same oracle as
-    // incremental_sql_q10).
+    // The BLOOM-REDUCED compiled tree streamed: the raw leaf changelog
+    // is pre-filtered by a STATIC bloom over the parent keys that pass
+    // the compiled predicates (the date-windowed orders) before entering
+    // the stream — the standard deployment shape for a pre-built
+    // reduction filter — and the reduction must be answer-invariant
+    // through the replay (same oracle as incremental_sql_q10).
     sql("incremental_sql_q10_bloom_stream", q10Oracle) {
       (s, dir) =>
         val c = q10(s, dir)
+        val leaf = c.path.last
+        val filtered = c.sourceChangelogs(s, dir, q10Deletes)
         runSqlStreamed(s, c, dir, q10Deletes, "incremental_sql_q10_bloom_stream_leaf",
-          transformLogs = c.bloomReduced)
+          transformLogs = raw =>
+            raw.updated(leaf, c.bloomReduced(filtered.updated(leaf, raw(leaf)))(leaf)))
     },
 
     // The skew mitigation behind the hash gate — q10 with the
@@ -4034,8 +4012,8 @@ object IncrementalQueries {
         "o2" -> (col("o2_o_orderkey") % 5 === 0))),
 
     // ---- WITH (CTE): maintained views composed under an outer query --
-    // SqlCompiler.compileCte splits the WITH prefix textually
-    // (paren/quote/comment-aware, like the set-op splitter), compiles
+    // SqlCompiler.compileCte splits the WITH prefix over Spark's SQL
+    // tokens (like the set-op splitter), compiles
     // every CTE body as its OWN incrementally maintained view, and
     // evaluates the outer query as stock Spark SQL over the refreshed
     // view outputs — so the input-proportional work stays inside the

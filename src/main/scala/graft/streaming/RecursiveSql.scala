@@ -3,8 +3,8 @@ package graft.streaming
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import graft.Tables
-import graft.sources.SqlDml
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+import graft.{SqlText, Tables}
 
 /** Bounded `WITH RECURSIVE` — SQL:1999 linear recursion compiled onto
   * the engine's checkpointed fixpoint loop (the same distributed shape
@@ -48,10 +48,9 @@ import graft.sources.SqlDml
   * backward, as in [[SqlCompiler.compileCte]].
   *
   * All text-level scanning (the CTE-list walk, balanced-paren body
-  * extraction, reference counting) runs on COMMENT-MASKED text
-  * (offset-preserving — [[SqlDml.maskComments]]), so a `--` comment
-  * mentioning the CTE name neither counts as a reference nor desyncs
-  * the paren scan.
+  * extraction, reference counting) walks Spark's own tokens
+  * ([[graft.SqlText]]), so a comment or string literal mentioning the
+  * CTE name neither counts as a reference nor desyncs the paren scan.
   *
   * Loud fences, never wrong answers:
   *  - NON-LINEAR recursion (the recursive term referencing r twice —
@@ -168,67 +167,26 @@ object RecursiveSql {
     } finally ledger.release(s, views, out)
   }
 
-  /** Base relations the statement names, by the same identifier scan
-    * as [[countRefs]] over the comment-masked text; a call binds only
-    * these. Over-counting (a column or CTE sharing a table's name) only
-    * binds one table more. */
-  private def tablesRead(sqlText: String): Seq[String] = {
-    val masked = SqlDml.maskComments(sqlText)
-    Tables.names.filter(t => countRefs(masked, t) > 0)
-  }
+  /** Base relations the statement names, by [[countRefs]]; a call
+    * binds only these. Over-counting (a column or CTE sharing a table's
+    * name) only binds one table more. */
+  private def tablesRead(sqlText: String): Seq[String] =
+    Tables.names.filter(t => countRefs(sqlText, t) > 0)
 
   private[graft] final case class Cte(name: String, aliases: Seq[String], body: String)
 
-  private val headPattern = java.util.regex.Pattern.compile(
-    "(?is)^\\s*WITH\\s+RECURSIVE\\b")
-  private val ctePattern = java.util.regex.Pattern.compile(
-    "(?is)^\\s*,?\\s*(\\w+)(?:\\s*\\(([^)]*)\\))?\\s+AS\\s*\\(")
-
   /** Split the statement into its CTE definitions (in order) and the
-    * outer query text. Scanning runs on the comment-masked text; the
-    * extracted substrings come from the ORIGINAL (masking preserves
-    * offsets), so comments inside bodies survive into Spark's parser,
-    * which handles them natively. */
-  private[graft] def parseAll(sqlText: String): (Seq[Cte], String) = {
-    val masked = SqlDml.maskComments(sqlText)
-    val h = headPattern.matcher(masked)
-    if (!h.find())
-      fail("expected WITH RECURSIVE <name>[(cols)] AS ( ... ) [, <helper> AS ( ... )]* <outer query>")
-    var pos = h.end()
-    val ctes = scala.collection.mutable.ArrayBuffer[Cte]()
-    var more = true
-    while (more) {
-      val m = ctePattern.matcher(masked.substring(pos))
-      if (!m.lookingAt())
-        fail(s"cannot parse CTE definition at: '${sqlText.substring(pos).take(60)}...'")
-      val name = m.group(1)
-      val aliases = Option(m.group(2)).map(_.split(",").map(_.trim).toSeq)
-        .getOrElse(Nil)
-      // balanced-paren body extraction on the masked text (string
-      // literals still present and honored; comment parens are gone)
-      var i = pos + m.end()
-      var depth = 1
-      var inStr = false
-      val start = i
-      while (i < masked.length && depth > 0) {
-        val c = masked.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else c match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      if (depth != 0) fail(s"unbalanced parentheses in the body of CTE '$name'")
-      ctes += Cte(name, aliases, sqlText.substring(start, i - 1))
-      pos = i
-      while (pos < masked.length && Character.isWhitespace(masked.charAt(pos))) pos += 1
-      more = pos < masked.length && masked.charAt(pos) == ','
+    * outer query text, through the WITH-clause walker
+    * [[SqlCompiler.withClause]]; the clause must be RECURSIVE. Bodies
+    * keep their comments for Spark's parser, which handles them
+    * natively. */
+  private[graft] def parseAll(sqlText: String): (Seq[Cte], String) =
+    SqlCompiler.withClause(sqlText) match {
+      case Some((true, ctes, outer)) =>
+        (ctes.map { case (name, aliases, body) => Cte(name, aliases, body) }, outer)
+      case _ =>
+        fail("expected WITH RECURSIVE <name>[(cols)] AS ( ... ) [, <helper> AS ( ... )]* <outer query>")
     }
-    (ctes.toSeq, sqlText.substring(pos))
-  }
 
   /** Split `sqlText` into (cteName, colAliases, anchorText,
     * recursiveText, unionAll, outerText) for the single-CTE form —
@@ -250,14 +208,14 @@ object RecursiveSql {
     * through a helper — fenced by name, never misread as "no
     * recursion". */
   private def soleRecursive(ctes: Seq[Cte]): Cte = {
-    val masked = ctes.map(c => c.name -> SqlDml.maskComments(c.body)).toMap
+    val bodies = ctes.map(c => c.name -> c.body).toMap
     val names = ctes.map(_.name)
-    val selfRef = ctes.filter(c => countRefs(masked(c.name), c.name) > 0)
+    val selfRef = ctes.filter(c => countRefs(c.body, c.name) > 0)
     if (selfRef.isEmpty) {
       // cycle detection over the CTE reference graph
       def reaches(from: String, to: String,
                   seen: Set[String] = Set.empty): Boolean =
-        !seen(from) && names.filter(n => countRefs(masked(from), n) > 0)
+        !seen(from) && names.filter(n => countRefs(bodies(from), n) > 0)
           .exists(n => n == to || reaches(n, to, seen + from))
       names.find(n => reaches(n, n)).foreach(n =>
         fail(s"CTE '$n' references itself only THROUGH other CTEs — " +
@@ -276,8 +234,8 @@ object RecursiveSql {
     if (parts.size != 2)
       fail(s"the recursive CTE body must be <anchor> UNION [ALL] <recursive " +
         s"term> — found ${parts.size} branch(es)")
-    val refs = countRefs(SqlDml.maskComments(parts(1)), rec.name)
-    if (countRefs(SqlDml.maskComments(parts(0)), rec.name) != 0)
+    val refs = countRefs(parts(1), rec.name)
+    if (countRefs(parts(0), rec.name) != 0)
       fail(s"the anchor term may not reference '${rec.name}' (it seeds the recursion)")
     if (refs == 0)
       fail(s"the recursive term does not reference '${rec.name}' — use a plain WITH")
@@ -288,14 +246,14 @@ object RecursiveSql {
     (parts(0), parts(1), kinds.head)
   }
 
-  /** Occurrences of `name` as a standalone TABLE identifier, outside
-    * string literals: a `name.` qualifier is a COLUMN reference to the
-    * same table factor (not a second reference), and `x.name` is a
-    * different qualified name entirely — both are skipped. Callers
-    * pass comment-MASKED text (a comment mentioning the name must not
-    * count).
+  /** Occurrences of `name` as a standalone TABLE identifier among
+    * Spark's tokens of `text` (backticks stripped, case ignored), so a
+    * comment or string literal never counts: a `name.` qualifier is a
+    * COLUMN reference to the same table factor (not a second
+    * reference), and `x.name` is a different qualified name entirely —
+    * both are skipped.
     *
-    * KNOWN LIMIT (textual, not a parse): an UNQUALIFIED column that
+    * KNOWN LIMIT (lexical, not a parse): an UNQUALIFIED column that
     * happens to share the CTE's name (`SELECT r FROM t` inside a
     * helper, with the recursion named `r`) counts as a reference —
     * the helper is then classified post-fixpoint (harmless: it binds
@@ -305,25 +263,10 @@ object RecursiveSql {
     * under-count, so no misclassification silently reads stale state.
     * Qualify the column (`t.r`) or rename the CTE to avoid it. */
   private def countRefs(text: String, name: String): Int = {
-    var i = 0
-    var inStr = false
-    var n = 0
-    val upper = text.toUpperCase
-    val target = name.toUpperCase
-    def identChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (upper.startsWith(target, i) &&
-        (i == 0 || (!identChar(text.charAt(i - 1)) && text.charAt(i - 1) != '.')) &&
-        (i + target.length == text.length ||
-          (!identChar(text.charAt(i + target.length)) &&
-            text.charAt(i + target.length) != '.'))) {
-        n += 1; i += target.length
-      } else i += 1
-    }
-    n
+    val toks = SqlText.tokens(text)
+    def dotAt(i: Int) = toks.lift(i).exists(_.kind == SqlBaseLexer.DOT)
+    toks.indices.count(i =>
+      toks(i).word.exists(_.equalsIgnoreCase(name)) && !dotAt(i - 1) && !dotAt(i + 1))
   }
 
   /** The lazy-union accumulator + per-round frontier bookkeeping:
@@ -530,10 +473,9 @@ object RecursiveSql {
     val helpers = ctes.filterNot(_.name == rec.name)
     val names = ctes.map(_.name)
     helpers.foreach { h =>
-      val hMasked = SqlDml.maskComments(h.body)
       val before = names.takeWhile(_ != h.name).toSet + rec.name
       names.filterNot(before).filterNot(_ == h.name).foreach { later =>
-        if (countRefs(hMasked, later) > 0)
+        if (countRefs(h.body, later) > 0)
           fail(s"CTE '${h.name}' reads CTE '$later' defined after it — " +
             "reorder the WITH clause (references flow backward)")
       }
@@ -548,9 +490,8 @@ object RecursiveSql {
       grew = false
       helpers.foreach { h =>
         if (!afterNames(h.name)) {
-          val m = SqlDml.maskComments(h.body)
-          if (countRefs(m, rec.name) > 0 ||
-              afterNames.exists(a => countRefs(m, a) > 0)) {
+          if (countRefs(h.body, rec.name) > 0 ||
+              afterNames.exists(a => countRefs(h.body, a) > 0)) {
             afterNames += h.name
             grew = true
           }
@@ -561,7 +502,7 @@ object RecursiveSql {
     helpersAfter.foreach { h =>
       Seq("anchor" -> anchorText, "recursive term" -> recText).foreach {
         case (what, text) =>
-          if (countRefs(SqlDml.maskComments(text), h.name) > 0)
+          if (countRefs(text, h.name) > 0)
             fail(s"the $what reads helper CTE '${h.name}', which reads " +
               s"'${rec.name}' — recursion through a helper is non-linear " +
               "and has no bounded fixpoint plan")
@@ -592,9 +533,8 @@ object RecursiveSql {
     val fp = new Fixpoint(unionAll, ledger)
     val df = inChildSession(spark, ledger, tables ++ ctes.map(_.name)) { s =>
       tables.foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
-      val recMasked0 = SqlDml.maskComments(recText)
       helpersBefore.foreach(h =>
-        bindHelper(s, ledger, h, materialize = countRefs(recMasked0, h.name) > 0))
+        bindHelper(s, ledger, h, materialize = countRefs(recText, h.name) > 0))
 
       var anchorCols: Seq[String] = Nil
       val (renamed, aligned) = shaperFor(rec, anchorCols)
@@ -768,20 +708,19 @@ object RecursiveSql {
       // instead of freezing the batch-0 state.
       val helperRels: Map[String, Set[String]] =
         helpersBefore.foldLeft(Map.empty[String, Set[String]]) { (acc, h) =>
-          val m = SqlDml.maskComments(h.body)
-          val direct = Tables.names.filter(t => countRefs(m, t) > 0).toSet
+          val direct = Tables.names.filter(t => countRefs(h.body, t) > 0).toSet
           val viaEarlier = acc.collect {
-            case (hn, rels) if countRefs(m, hn) > 0 => rels
+            case (hn, rels) if countRefs(h.body, hn) > 0 => rels
           }.flatten.toSet
           acc + (h.name -> (direct ++ viaEarlier))
         }
-      /** Base relations the (masked) text reads, directly or through a
+      /** Base relations the text reads, directly or through a
         * pre-fixpoint helper — the delta-binding and seed-skipping
         * decisions must see THROUGH helpers. */
-      def textReads(masked: String): Set[String] =
-        Tables.names.filter(t => countRefs(masked, t) > 0).toSet ++
+      def textReads(text: String): Set[String] =
+        Tables.names.filter(t => countRefs(text, t) > 0).toSet ++
           helperRels.collect {
-            case (hn, rels) if countRefs(masked, hn) > 0 => rels
+            case (hn, rels) if countRefs(text, hn) > 0 => rels
           }.flatten
       // bind each relation to a specific state for the next SQL evals,
       // then re-create the pre-fixpoint helper views over that state
@@ -790,12 +729,11 @@ object RecursiveSql {
       // state is loop-invariant WITHIN a batch's fixpoint loop, so the
       // loop reads checkpointed rows instead of recomputing the helper's
       // join every round (same reasoning as [[bindHelper]] in [[run]]).
-      val recMaskedForBind = SqlDml.maskComments(recText)
       def bind(state: Map[String, DataFrame],
                materialize: Boolean = false): Unit = {
         state.foreach { case (t, df) => df.createOrReplaceTempView(t) }
         helpersBefore.foreach(h => bindHelper(s, ledger, h,
-          materialize = materialize && countRefs(recMaskedForBind, h.name) > 0))
+          materialize = materialize && countRefs(recText, h.name) > 0))
       }
       def delFilter(t: String, throughK: Int): Option[Column] =
         (0 to throughK).flatMap(j => deletesAt.get(j).flatMap(_.get(t)))
@@ -817,12 +755,10 @@ object RecursiveSql {
       var anchorCols: Seq[String] = Nil
       val (renamed, aligned) = shaperFor(rec, anchorCols)
       val shape: DataFrame => DataFrame = df => aligned(renamed(df))
-      val anchorMasked = SqlDml.maskComments(anchorText)
-      val recMasked = SqlDml.maskComments(recText)
       // base relations the term/anchor read THROUGH helpers too — a term
       // reading `edges` (a helper over orders join lineitem) reads orders
-      val recReads = textReads(recMasked)
-      val anchorReads = textReads(anchorMasked)
+      val recReads = textReads(recText)
+      val anchorReads = textReads(anchorText)
 
       // batch 0: the ordinary fixpoint over the initial base state
       // (deletes at batch 0 simply never appear in the state) — or, on

@@ -3,11 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, BaseGroupingSets, BinaryComparison, CaseWhen, Cast, Coalesce, EqualNullSafe, EqualTo, Expression, If, In, IsNotNull, IsNull, Like, Literal, NamedExpression, Not, NullsFirst, Or, WindowExpression}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
-import graft.Tables
+import graft.{SqlText, Tables}
 import graft.streaming.DeltaEngine.{Evt, NodeSpec, FS, KV}
 
 /** SQL-text front end for the incremental engine — the capability the
@@ -113,7 +114,7 @@ object SqlCompiler {
     * branch is its own maintained tree/aggregate (they may join
     * entirely different relation trees); the union is presentation —
     * maintained bag-union of the branch views. Branch texts are
-    * recovered by a paren- and quote-aware scan for top-level
+    * recovered from Spark's tokens, split at top-level
     * `UNION ALL` tokens (the compiler's text-is-the-interface
     * convention: Origin offsets on a Union node do not delimit its
     * branches), then each compiles through the ordinary [[compile]].
@@ -220,28 +221,13 @@ object SqlCompiler {
       case None => Seq(p)
     }
 
-  /** The text without its single outer paren pair, when the trimmed
-    * text is exactly `( ... )` with that pair matching (string-aware);
-    * None otherwise. */
-  private def stripOuterParens(p0: String): Option[String] = {
-    val p = p0.trim
-    if (!p.startsWith("(")) return None
-    var i = 1
-    var depth = 1
-    var inStr = false
-    while (i < p.length && depth > 0) {
-      val c = p.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth == 0 && p.substring(i).trim.isEmpty) Some(p.substring(1, i - 1))
-    else None
+  /** The text inside its single outer paren pair, when the text is
+    * exactly `( ... )` with that pair matching; None otherwise. */
+  private def stripOuterParens(p: String): Option[String] = {
+    val toks = SqlText.tokens(p)
+    if (toks.isEmpty || toks.head.kind != SqlBaseLexer.LEFT_PAREN) None
+    else SqlText.closeParen(toks, 0).filter(_ == toks.length - 1)
+      .map(close => p.substring(toks.head.end, toks(close).start))
   }
 
   /** The cross-branch alignment every set-semantics composition
@@ -280,59 +266,25 @@ object SqlCompiler {
     }
   }
 
-  /** SQL identifier-continuation character: a keyword match abutting one
-    * of these is part of an identifier (e.g. `except_flag`), not syntax. */
-  @inline private def isIdentChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_' || c == '$'
-
   /** Find the single top-level INTERSECT/EXCEPT [ALL]; returns
     * (left, right, except, all) — [[compileSetOp]] takes the set
     * forms, [[compileBagSetOp]] the ALL forms. */
   private[graft] def splitTopLevelSetOp(sqlText: String): (String, String, Boolean, Boolean) = {
-    var depth = 0; var inStr = false; var i = 0
-    val upper = sqlText.toUpperCase
-    var found: Option[(Int, Int, Boolean, Boolean)] = None // (start, end, except, all)
-    while (i < sqlText.length) {
-      val ch = sqlText.charAt(i)
-      if (inStr) {
-        if (ch == '\'' && i + 1 < sqlText.length && sqlText.charAt(i + 1) == '\'') i += 2
-        else { if (ch == '\'') inStr = false; i += 1 }
-      } else ch match {
-        case '\'' => inStr = true; i += 1
-        case '-' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '-' =>
-          while (i < sqlText.length && sqlText.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '*' =>
-          val end = sqlText.indexOf("*/", i + 2)
-          i = if (end < 0) sqlText.length else end + 2
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if depth == 0 && (c == 'I' || c == 'i' || c == 'E' || c == 'e') &&
-            (i == 0 || !isIdentChar(sqlText.charAt(i - 1))) &&
-            (upper.startsWith("INTERSECT", i) || upper.startsWith("EXCEPT", i)) =>
-          val except = upper.startsWith("EXCEPT", i)
-          val kwLen = if (except) 6 else 9
-          if (i + kwLen < sqlText.length &&
-              isIdentChar(sqlText.charAt(i + kwLen))) { i += 1 }
-          else {
-            var j = i + kwLen
-            while (j < sqlText.length && Character.isWhitespace(sqlText.charAt(j))) j += 1
-            val all = upper.startsWith("ALL", j) &&
-              (j + 3 == sqlText.length || !isIdentChar(sqlText.charAt(j + 3)))
-            if (found.isDefined)
-              fail("more than one top-level INTERSECT/EXCEPT is not compiled — " +
-                "parenthesize to fix the association explicitly")
-            val end = if (all) j + 3 else i + kwLen
-            found = Some((i, end, except, all))
-            i = end
-          }
-        case _ => i += 1
-      }
+    val toks = SqlText.tokens(sqlText)
+    val ops = toks.indices.filter { i =>
+      toks(i).depth == 0 &&
+        (toks(i).kind == SqlBaseLexer.INTERSECT || toks(i).kind == SqlBaseLexer.EXCEPT)
     }
-    found match {
-      case Some((s, e, except, all)) =>
-        val (lq, rq) = (sqlText.substring(0, s).trim, sqlText.substring(e).trim)
+    if (ops.size > 1)
+      fail("more than one top-level INTERSECT/EXCEPT is not compiled — " +
+        "parenthesize to fix the association explicitly")
+    ops.headOption match {
+      case Some(i) =>
+        val all = toks.lift(i + 1).exists(_.kind == SqlBaseLexer.ALL)
+        val end = toks(if (all) i + 1 else i).end
+        val (lq, rq) = (sqlText.substring(0, toks(i).start).trim, sqlText.substring(end).trim)
         if (lq.isEmpty || rq.isEmpty) fail("INTERSECT/EXCEPT needs a query on each side")
-        (lq, rq, except, all)
+        (lq, rq, toks(i).kind == SqlBaseLexer.EXCEPT, all)
       case None => fail("compileSetOp expects a top-level INTERSECT or EXCEPT")
     }
   }
@@ -702,56 +654,26 @@ object SqlCompiler {
     }
   }
 
-  /** Split on top-level `UNION [ALL|DISTINCT]` at paren depth 0,
-    * outside string literals and comments (`--` to end-of-line,
-    * `/* */` blocks); a doubled quote inside a literal is the SQL
-    * escape, not a close. Returns the branch texts plus, per
+  /** Split on top-level `UNION [ALL|DISTINCT]` at paren depth 0, over
+    * Spark's tokens (a UNION inside a literal, a quoted name or a
+    * comment is not syntax). Returns the branch texts plus, per
     * separator, whether it was a bag union (`ALL`) — the
     * [[splitTopLevelUnionAll]] / [[splitTopLevelUnionDistinct]]
     * wrappers enforce a single kind per level (mixing associates
     * left in standard SQL; parenthesize to compile it). */
   private[graft] def splitTopLevelUnion(sqlText: String): (Seq[String], Seq[Boolean]) = {
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    val kinds = scala.collection.mutable.ArrayBuffer[Boolean]()
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    val upper = sqlText.toUpperCase
-    def kwAt(kw: String, j: Int): Boolean =
-      upper.startsWith(kw, j) &&
-        (j + kw.length == sqlText.length || !isIdentChar(sqlText.charAt(j + kw.length)))
-    while (i < sqlText.length) {
-      val ch = sqlText.charAt(i)
-      if (inStr) {
-        if (ch == '\'' && i + 1 < sqlText.length && sqlText.charAt(i + 1) == '\'')
-          i += 2 // '' escape: still inside the literal
-        else { if (ch == '\'') inStr = false; i += 1 }
-      }
-      else ch match {
-        case '\'' => inStr = true; i += 1
-        case '-' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '-' =>
-          // line comment: a 'UNION ALL' inside it is text, not syntax
-          while (i < sqlText.length && sqlText.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '*' =>
-          val end = sqlText.indexOf("*/", i + 2)
-          i = if (end < 0) sqlText.length else end + 2
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case 'U' | 'u' if depth == 0 && kwAt("UNION", i) &&
-            (i == 0 || !isIdentChar(sqlText.charAt(i - 1))) =>
-          var j = i + 5
-          while (j < sqlText.length && Character.isWhitespace(sqlText.charAt(j))) j += 1
-          parts += sqlText.substring(start, i)
-          if (kwAt("ALL", j)) { kinds += true; start = j + 3 }
-          else if (kwAt("DISTINCT", j)) { kinds += false; start = j + 8 }
-          else { kinds += false; start = j }
-          i = start
-        case _ => i += 1
+    val toks = SqlText.tokens(sqlText)
+    val unions = toks.indices.filter(i => toks(i).depth == 0 && toks(i).kind == SqlBaseLexer.UNION)
+    val seps = unions.map { i =>
+      toks.lift(i + 1).map(_.kind) match {
+        case Some(SqlBaseLexer.ALL) => (toks(i).start, toks(i + 1).end, true)
+        case Some(SqlBaseLexer.DISTINCT) => (toks(i).start, toks(i + 1).end, false)
+        case _ => (toks(i).start, toks(i).end, false)
       }
     }
-    parts += sqlText.substring(start)
-    (parts.map(_.trim).filter(_.nonEmpty).toSeq, kinds.toSeq)
+    val bounds = 0 +: seps.flatMap { case (s, e, _) => Seq(s, e) } :+ sqlText.length
+    val parts = bounds.grouped(2).map { case Seq(s, e) => sqlText.substring(s, e).trim }
+    (parts.filter(_.nonEmpty).toSeq, seps.map(_._3))
   }
 
   /** The bag-union split — every top-level separator must be
@@ -1373,7 +1295,9 @@ object SqlCompiler {
       * This is the J3 fan-out reducer at 100 TB: most R-flag lineitems
       * belong to orders outside the date window, and without the bloom
       * every one of them crosses the exchange into order-node state
-      * just to die unjoined.
+      * just to die unjoined. The bloom is only as tight as the parent
+      * changelog it is given: pass the scan-filtered one (a raw leaf
+      * changelog may ride beside it).
       *
       * The parent is the `parentStage` of the first stage that reads
       * the leaf changelog, and must be a raw liveness stage: it reads
@@ -3759,207 +3683,113 @@ object SqlCompiler {
   // WITH (CTE) queries: maintained views composed under an outer query
   // ------------------------------------------------------------------
 
-  /** Split a leading `WITH name AS (body) [, name2 AS (body2) ...]`
-    * prefix off `sqlText` — paren/quote/comment-aware like
-    * [[splitTopLevelUnion]]. Returns the (name, bodyText) list plus
-    * the outer query text, or None when the text does not start with
-    * WITH. Each CTE returns (name, columnAliases, bodyText) — the
-    * alias list (`name(c1, c2) AS ...`) renames the view's output.
-    * `WITH RECURSIVE` redirects to [[RecursiveSql]]. */
-  private[graft] def splitWith(sqlText: String)
-      : Option[(Seq[(String, Seq[String], String)], String)] = {
-    var i = 0
-    def skipWsAndComments(): Unit = {
-      var moved = true
-      while (moved) {
-        moved = false
-        while (i < sqlText.length && Character.isWhitespace(sqlText.charAt(i))) { i += 1; moved = true }
-        if (i + 1 < sqlText.length && sqlText.charAt(i) == '-' && sqlText.charAt(i + 1) == '-') {
-          while (i < sqlText.length && sqlText.charAt(i) != '\n') i += 1
-          moved = true
-        }
-        if (i + 1 < sqlText.length && sqlText.charAt(i) == '/' && sqlText.charAt(i + 1) == '*') {
-          val end = sqlText.indexOf("*/", i + 2)
-          i = if (end < 0) sqlText.length else end + 2
-          moved = true
-        }
-      }
-    }
-    def kwAt(kw: String): Boolean =
-      sqlText.regionMatches(true, i, kw, 0, kw.length) &&
-        (i + kw.length == sqlText.length || !isIdentChar(sqlText.charAt(i + kw.length)))
-    skipWsAndComments()
-    if (!kwAt("WITH")) return None
-    i += 4
-    skipWsAndComments()
-    if (kwAt("RECURSIVE"))
-      fail("WITH RECURSIVE compiles via RecursiveSql.run — the bounded " +
-        "checkpointed fixpoint loop; this front end maintains only " +
-        "non-recursive views")
+  /** A leading `WITH [RECURSIVE] name[(c1, c2)] AS (body) [, ...]`
+    * clause, walked over Spark's tokens: whether it is RECURSIVE, each
+    * CTE as (name as written, column aliases, body text) and the outer
+    * query text; None when the text does not start with WITH. Shared
+    * by [[splitWith]] and [[RecursiveSql.parseAll]]; the RECURSIVE
+    * token decides which of them accepts the clause. */
+  private[graft] def withClause(sqlText: String)
+      : Option[(Boolean, Seq[(String, Seq[String], String)], String)] = {
+    val toks = SqlText.tokens(sqlText)
+    def kindAt(i: Int): Int = toks.lift(i).fold(-1)(_.kind)
+    if (kindAt(0) != SqlBaseLexer.WITH) return None
+    val recursive = kindAt(1) == SqlBaseLexer.RECURSIVE
+    var i = if (recursive) 2 else 1
     val ctes = scala.collection.mutable.ArrayBuffer[(String, Seq[String], String)]()
     var more = true
     while (more) {
-      skipWsAndComments()
-      val nameStart = i
-      while (i < sqlText.length && isIdentChar(sqlText.charAt(i))) i += 1
-      val name = sqlText.substring(nameStart, i)
-      if (name.isEmpty) fail(s"WITH: expected a CTE name at offset $nameStart")
-      skipWsAndComments()
+      val name = toks.lift(i).flatMap(_.word).getOrElse(fail(
+        s"WITH: expected a CTE name at offset ${toks.lift(i).fold(sqlText.length)(_.start)}"))
+      i += 1
       // optional COLUMN-ALIAS LIST: `name(a, b) AS (...)` — plain
       // identifiers only; the aliases rename the view's output
       var aliases = Seq.empty[String]
-      if (i < sqlText.length && sqlText.charAt(i) == '(') {
-        val close = sqlText.indexOf(')', i + 1)
-        if (close < 0) fail(s"WITH $name(: unclosed column-alias list")
-        val inner = sqlText.substring(i + 1, close)
-        aliases = inner.split(",").map(_.trim).toSeq
-        if (aliases.isEmpty || aliases.exists(a => a.isEmpty || !a.forall(isIdentChar)))
+      if (kindAt(i) == SqlBaseLexer.LEFT_PAREN) {
+        val close = SqlText.closeParen(toks, i)
+          .getOrElse(fail(s"WITH $name(: unclosed column-alias list"))
+        val inner = toks.slice(i + 1, close)
+        aliases = inner.indices.collect { case k if k % 2 == 0 => inner(k).word.getOrElse("") }
+        val wellFormed = inner.length % 2 == 1 && !aliases.contains("") &&
+          inner.indices.forall(k => k % 2 == 0 || inner(k).kind == SqlBaseLexer.COMMA)
+        if (!wellFormed)
           fail(s"WITH $name(...): expected a comma-separated list of column " +
-            s"aliases, got '$inner'")
+            s"aliases, got '${sqlText.substring(toks(i).end, toks(close).start)}'")
         i = close + 1
-        skipWsAndComments()
       }
-      if (!kwAt("AS")) fail(s"WITH $name: expected AS")
-      i += 2
-      skipWsAndComments()
-      if (i >= sqlText.length || sqlText.charAt(i) != '(')
-        fail(s"WITH $name AS: expected a parenthesized subquery")
-      val bodyStart = i + 1
-      var depth = 1; var inStr = false
+      if (kindAt(i) != SqlBaseLexer.AS) fail(s"WITH $name: expected AS")
       i += 1
-      while (i < sqlText.length && depth > 0) {
-        val ch = sqlText.charAt(i)
-        if (inStr) {
-          if (ch == '\'' && i + 1 < sqlText.length && sqlText.charAt(i + 1) == '\'') i += 1
-          else if (ch == '\'') inStr = false
-        } else ch match {
-          case '\'' => inStr = true
-          case '-' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '-' =>
-            while (i < sqlText.length && sqlText.charAt(i) != '\n') i += 1
-          case '/' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '*' =>
-            val end = sqlText.indexOf("*/", i + 2)
-            i = if (end < 0) sqlText.length else end + 1
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (depth != 0) fail(s"WITH $name AS (: unbalanced parentheses")
-      ctes += ((name.toLowerCase, aliases, sqlText.substring(bodyStart, i - 1).trim))
-      skipWsAndComments()
-      more = i < sqlText.length && sqlText.charAt(i) == ','
+      if (kindAt(i) != SqlBaseLexer.LEFT_PAREN)
+        fail(s"WITH $name AS: expected a parenthesized subquery")
+      val close = SqlText.closeParen(toks, i)
+        .getOrElse(fail(s"WITH $name AS (: unbalanced parentheses"))
+      ctes += ((name, aliases, sqlText.substring(toks(i).end, toks(close).start).trim))
+      i = close + 1
+      more = kindAt(i) == SqlBaseLexer.COMMA
       if (more) i += 1
     }
-    Some((ctes.toSeq, sqlText.substring(i).trim))
+    Some((recursive, ctes.toSeq, toks.lift(i).fold("")(t => sqlText.substring(t.start).trim)))
   }
+
+  /** Split a leading `WITH name AS (body) [, name2 AS (body2) ...]`
+    * prefix off `sqlText` through [[withClause]]. Returns each CTE as
+    * (lower-cased name, columnAliases, bodyText) — the alias list
+    * (`name(c1, c2) AS ...`) renames the view's output — plus the
+    * outer query text, or None when the text does not start with
+    * WITH. `WITH RECURSIVE` redirects to [[RecursiveSql]]. */
+  private[graft] def splitWith(sqlText: String)
+      : Option[(Seq[(String, Seq[String], String)], String)] =
+    withClause(sqlText).map { case (recursive, ctes, outer) =>
+      if (recursive)
+        fail("WITH RECURSIVE compiles via RecursiveSql.run — the bounded " +
+          "checkpointed fixpoint loop; this front end maintains only " +
+          "non-recursive views")
+      (ctes.map { case (n, as, body) => (n.toLowerCase, as, body) }, outer)
+    }
 
   /** Lift aliased DERIVED TABLES — `FROM (SELECT ...) [AS] t` — out of
     * `sqlText`: each becomes an anonymous CTE named by its alias, and
     * the span is replaced by the bare alias, so the derived-table
     * spelling rides the same [[CompiledCte]] machinery as WITH.
-    * Detection is the same quote/comment-aware depth-0 scan as
-    * [[splitWith]]: a `(` whose first token is SELECT *and* whose
-    * close paren is followed by an identifier (optionally after AS)
-    * that is not a clause keyword. Subquery PREDICATES — `IN
-    * (SELECT ...)`, `EXISTS (...)`, scalar `(SELECT max ...)`
+    * Detection walks Spark's tokens: a `(` whose next token is SELECT
+    * *and* whose close paren is followed by an identifier (optionally
+    * after AS) that is not a clause keyword. Subquery PREDICATES —
+    * `IN (SELECT ...)`, `EXISTS (...)`, scalar `(SELECT max ...)`
     * comparisons — are never followed by an alias, so they stay
     * untouched for the gate/scalar compilers. Unaliased derived
     * tables and alias column lists (`t(a, b)`) fail loudly. */
   private[graft] def liftDerivedTables(sqlText: String): (Seq[(String, String)], String) = {
     val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val out = new StringBuilder
-    var i = 0
-    var inStr = false
     val clauseKw = Set("ON", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
       "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "USING",
       "UNION", "INTERSECT", "EXCEPT", "AND", "OR", "WINDOW", "QUALIFY")
-    def skipWs(j0: Int): Int = {
-      var j = j0
-      var moved = true
-      while (moved) {
-        moved = false
-        while (j < sqlText.length && Character.isWhitespace(sqlText.charAt(j))) { j += 1; moved = true }
-        if (j + 1 < sqlText.length && sqlText.charAt(j) == '-' && sqlText.charAt(j + 1) == '-') {
-          while (j < sqlText.length && sqlText.charAt(j) != '\n') j += 1; moved = true
+    val toks = SqlText.tokens(sqlText)
+    def kindAt(i: Int): Int = toks.lift(i).fold(-1)(_.kind)
+    var copied = 0 // sqlText before this offset is already in `out`
+    var i = 0
+    while (i < toks.length) {
+      if (toks(i).kind == SqlBaseLexer.LEFT_PAREN && kindAt(i + 1) == SqlBaseLexer.SELECT) {
+        val close = SqlText.closeParen(toks, i)
+          .getOrElse(fail("unbalanced parentheses in FROM subquery"))
+        // alias? [AS] ident not a clause keyword → derived table
+        val hadAs = kindAt(close + 1) == SqlBaseLexer.AS
+        val a = if (hadAs) close + 2 else close + 1
+        toks.lift(a).flatMap(_.word).filter(w => hadAs || !clauseKw(w.toUpperCase)) match {
+          case Some(alias) =>
+            if (kindAt(a + 1) == SqlBaseLexer.LEFT_PAREN)
+              fail(s"derived table ($alias): alias column lists are not " +
+                "compiled — alias the columns inside the subquery's SELECT")
+            defs += ((alias.toLowerCase,
+              sqlText.substring(toks(i).end, toks(close).start).trim))
+            out.append(sqlText.substring(copied, toks(i).start)).append(toks(a).text)
+            copied = toks(a).end
+            i = a + 1
+          case None => i = close + 1 // subquery predicate (IN/EXISTS/scalar) — left verbatim
         }
-        if (j + 1 < sqlText.length && sqlText.charAt(j) == '/' && sqlText.charAt(j + 1) == '*') {
-          val end = sqlText.indexOf("*/", j + 2)
-          j = if (end < 0) sqlText.length else end + 2; moved = true
-        }
-      }
-      j
+      } else i += 1
     }
-    def identAt(j0: Int): (String, Int) = {
-      var j = j0
-      while (j < sqlText.length && isIdentChar(sqlText.charAt(j))) j += 1
-      (sqlText.substring(j0, j), j)
-    }
-    while (i < sqlText.length) {
-      val ch = sqlText.charAt(i)
-      if (inStr) {
-        if (ch == '\'' && i + 1 < sqlText.length && sqlText.charAt(i + 1) == '\'') {
-          out.append("''"); i += 2
-        } else { if (ch == '\'') inStr = false; out.append(ch); i += 1 }
-      } else ch match {
-        case '\'' => inStr = true; out.append(ch); i += 1
-        case '-' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '-' =>
-          while (i < sqlText.length && sqlText.charAt(i) != '\n') { out.append(sqlText.charAt(i)); i += 1 }
-        case '/' if i + 1 < sqlText.length && sqlText.charAt(i + 1) == '*' =>
-          val end = sqlText.indexOf("*/", i + 2)
-          val stop = if (end < 0) sqlText.length else end + 2
-          out.append(sqlText.substring(i, stop)); i = stop
-        case '(' =>
-          val bodyStart = skipWs(i + 1)
-          val isSelect = sqlText.regionMatches(true, bodyStart, "SELECT", 0, 6) &&
-            (bodyStart + 6 == sqlText.length || !isIdentChar(sqlText.charAt(bodyStart + 6)))
-          if (!isSelect) { out.append(ch); i += 1 }
-          else {
-            // matching close paren, quote/comment aware
-            var depth = 1; var j = i + 1; var s = false
-            while (j < sqlText.length && depth > 0) {
-              val c = sqlText.charAt(j)
-              if (s) {
-                if (c == '\'' && j + 1 < sqlText.length && sqlText.charAt(j + 1) == '\'') j += 1
-                else if (c == '\'') s = false
-              } else c match {
-                case '\'' => s = true
-                case '-' if j + 1 < sqlText.length && sqlText.charAt(j + 1) == '-' =>
-                  while (j < sqlText.length && sqlText.charAt(j) != '\n') j += 1
-                case '/' if j + 1 < sqlText.length && sqlText.charAt(j + 1) == '*' =>
-                  val end = sqlText.indexOf("*/", j + 2)
-                  j = if (end < 0) sqlText.length else end + 1
-                case '(' => depth += 1
-                case ')' => depth -= 1
-                case _ =>
-              }
-              j += 1
-            }
-            if (depth != 0) fail("unbalanced parentheses in FROM subquery")
-            val body = sqlText.substring(i + 1, j - 1).trim
-            // alias? [AS] ident not a clause keyword → derived table
-            var k = skipWs(j)
-            val hadAs = sqlText.regionMatches(true, k, "AS", 0, 2) &&
-              (k + 2 == sqlText.length || !isIdentChar(sqlText.charAt(k + 2)))
-            if (hadAs) k = skipWs(k + 2)
-            val (alias, k2) = identAt(k)
-            if (alias.nonEmpty && (hadAs || !clauseKw(alias.toUpperCase))) {
-              val after = skipWs(k2)
-              if (after < sqlText.length && sqlText.charAt(after) == '(')
-                fail(s"derived table ($alias): alias column lists are not " +
-                  "compiled — alias the columns inside the subquery's SELECT")
-              defs += ((alias.toLowerCase, body))
-              out.append(alias)
-              i = k2
-            } else {
-              // subquery predicate (IN/EXISTS/scalar) — leave verbatim
-              out.append(sqlText.substring(i, j)); i = j
-            }
-          }
-        case _ => out.append(ch); i += 1
-      }
-    }
-    (defs.toSeq, out.toString)
+    (defs.toSeq, out.append(sqlText.substring(copied)).toString)
   }
 
   /** A compiled WITH query: each CTE body is an incrementally

@@ -279,6 +279,19 @@ class MergeIntoSqlSpec extends AnyFunSuite with org.scalatest.ParallelTestExecut
     assert(state(root, 1)(1L) == (30.0, "row1"))
   }
 
+  test("MERGE USING (subquery) holding an escaped quote and a nested comment") {
+    val root = freshRoot("graft_msql_lex")
+    SnapshotLog.commitInitial(base(), root, "k")
+    base().createOrReplaceTempView("msql_lex_base")
+    MergeIntoSql.commitMergeSql(spark, root, 1, "k", Seq("price", "tag"),
+      """MERGE INTO tgt t
+        |USING (SELECT k, price * 3 AS p, 'a\')' AS q
+        |       FROM msql_lex_base /* ( /* ) */ ( */ WHERE k = 1) s
+        |ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET price = s.p, tag = s.q""".stripMargin)
+    assert(state(root, 1)(1L) == (30.0, "a')"))
+  }
+
   test("NMBS with all-conditional clauses prunes the target scan") {
     val root = freshRoot("graft_msql_nmbsprune")
     SnapshotLog.commitInitial(base(), root, "k")

@@ -84,6 +84,30 @@ class RecursiveSqlSpec extends AnyFunSuite {
     assert(got == Seq(1, 2, 3))
   }
 
+  test("Spark-legal spellings: escaped quotes, double quotes, backticks and nested comments") {
+    // the anchor reads customer only inside the IN subquery, after an
+    // escaped-quote literal; a nested comment mentions r twice
+    val sql =
+      """WITH RECURSIVE r(k) AS (
+        | SELECT n_nationkey FROM nation
+        | WHERE n_name <> 'x\'' AND n_nationkey < 3 /* r /* ( */ r */
+        |   AND n_nationkey IN (SELECT c_nationkey FROM customer WHERE c_name <> "r)")
+        | UNION
+        | SELECT k + 1 FROM `r` WHERE k < 5 AND 'r\')' <> ''
+        |)
+        |SELECT k FROM r""".stripMargin
+    val (ctes, outer) = RecursiveSql.parseAll(sql)
+    assert(ctes.map(c => (c.name, c.aliases)) == Seq(("r", Seq("k"))))
+    assert(ctes.head.body.endsWith("""WHERE k < 5 AND 'r\')' <> ''"""))
+    assert(outer == "SELECT k FROM r")
+    val seeds = Tables.customer(spark, d).filter(col("c_nationkey") < 3)
+      .select(col("c_nationkey").cast("long")).distinct().collect().map(_.getLong(0))
+    assert(seeds.nonEmpty)
+    val got = RecursiveSql.run(spark, d, sql).select(col("k").cast("long"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == (seeds.min to 5L))
+  }
+
   test("checkpoint accounting: deep chain writes O(|result|), not O(depth·|result|)") {
     val depth = 40
     // stats are PER RUN (returned, not a JVM global) — parallel suites

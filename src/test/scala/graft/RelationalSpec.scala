@@ -200,7 +200,7 @@ class RelationalSpec extends AnyFunSuite with org.scalatest.ParallelTestExecutio
     assert(plan.contains("EqualTo(l_returnflag,R)"), plan.take(800))
     assert(plan.contains("GreaterThanOrEqual(o_orderdate"), plan.take(800))
     // the 25-row nation side must broadcast (codegen spans are not
-    // string-auditable under AQE's lazy finalization; `graft.Explain`
+    // string-auditable under AQE's lazy finalization; `graft.PlanDump`
     // shows them interactively)
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
   }

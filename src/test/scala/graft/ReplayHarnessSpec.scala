@@ -4,16 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.{IncrementalQueries, LocalCheckpointFileManager, LocalCheckpointFs}
+import graft.streaming.{LocalCheckpointFileManager, LocalCheckpointFs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stream-gated entries replay through ONE harness,
   * `IncrementalQueries.replay`: it runs each replay in a child session
   * with the fork-free checkpoint manager installed, and no other code
   * in `src/main` feeds a memory stream by hand. The same scans keep
-  * two other things to one builder each: join trees to the engine and
-  * its compilers, and `IncrementalQueries`' and `SnapshotLog`'s temp
-  * directories to `tempDir`; and they keep session knobs out of the
+  * three other things to one place each: join trees to the engine
+  * and its compilers, temp directories to `TempDirs.tempDir`, and SQL
+  * text lexing to `SqlText`; and they keep session knobs out of the
   * maintained-view compiler. */
 class ReplayHarnessSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfTiny}
@@ -87,10 +87,6 @@ class ReplayHarnessSpec extends AnyFunSuite {
   private val treeBuilders = Set("DeltaEngine.scala", "TreeCompiler.scala", "SqlCompiler.scala")
   private val treeConstruction = """\b(?:NodeSpec|Stage)\(""".r
 
-  /** The files whose temp directories all come from
-    * `IncrementalQueries.tempDir`, deleted at JVM exit. */
-  private val tempDirUsers = Set("IncrementalQueries.scala", "SnapshotLog.scala")
-
   test("no join tree or temp directory is built by hand outside its one builder") {
     val offenders = for {
       file <- mainFiles
@@ -98,12 +94,29 @@ class ReplayHarnessSpec extends AnyFunSuite {
       lines = Files.readAllLines(file).asScala.toIndexedSeq
       (line, i) <- lines.zipWithIndex
       if (!treeBuilders(name) && treeConstruction.findFirstIn(line).isDefined) ||
-        (tempDirUsers(name) && line.contains("createTempDirectory(") &&
-          enclosing(file, lines, i) != "IncrementalQueries.tempDir")
+        (line.contains("createTempDirectory(") && enclosing(file, lines, i) != "TempDirs.tempDir")
     } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty,
       "build the tree through SqlCompiler, and make the temp directory with " +
-        "IncrementalQueries.tempDir:\n" + offenders.mkString("\n"))
+        "TempDirs.tempDir (deleted at JVM exit):\n" + offenders.mkString("\n"))
+  }
+
+  /** A hand-written SQL scanning loop: a string-literal flag or a
+    * block-comment end search. Spark's lexer, through `SqlText`, is the
+    * one place SQL text is cut into literals, comments and parens. */
+  private val sqlScan = """\binStr\b|indexOf\("\*/"""".r
+
+  test("no SQL text is scanned by hand outside SqlText") {
+    val offenders = for {
+      file <- mainFiles
+      if file.getFileName.toString != "SqlText.scala"
+      lines = Files.readAllLines(file).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      if sqlScan.findFirstIn(line).isDefined
+    } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "walk graft.SqlText.tokens instead of scanning quotes, comments and parens " +
+        "by hand:\n" + offenders.mkString("\n"))
   }
 
   /** The deleted compiler confs' prefix, spelled in two parts so that a
@@ -128,13 +141,13 @@ class ReplayHarnessSpec extends AnyFunSuite {
   }
 
   test("tempDir's tree delete removes a nested directory tree") {
-    val dir = IncrementalQueries.tempDir("graft_tree_delete")
+    val dir = TempDirs.tempDir("graft_tree_delete")
     val nested = Files.createDirectories(dir.resolve("a").resolve("b"))
     Files.writeString(nested.resolve("f.txt"), "x")
     Files.writeString(dir.resolve("g.txt"), "y")
-    IncrementalQueries.deleteTree(dir)
+    TempDirs.deleteTree(dir)
     assert(!Files.exists(dir))
-    IncrementalQueries.deleteTree(dir) // a missing tree is a no-op
+    TempDirs.deleteTree(dir) // a missing tree is a no-op
   }
 
   private def enclosing(file: Path, lines: IndexedSeq[String], at: Int): String = {

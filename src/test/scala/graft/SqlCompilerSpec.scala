@@ -2045,6 +2045,57 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     assert(ex2.getMessage.contains("does not match"), ex2.getMessage)
   }
 
+  test("Spark-legal spellings split as Spark lexes them: escaped quotes, double quotes, backticks, nested comments") {
+    import SqlCompiler.{splitTopLevelSetOp, splitTopLevelUnionAll, splitTopLevelUnionDistinct}
+    // a backslash escapes the quote: 'x\'' is one literal, then UNION ALL
+    assert(splitTopLevelUnionAll(
+      """SELECT a FROM t WHERE s = 'x\'' UNION ALL SELECT a FROM u WHERE s = 'y'""").size == 2)
+    assert(splitTopLevelUnionDistinct("""SELECT 'x\'' AS s UNION SELECT 'y'""").size == 2)
+    // double-quoted literals are literals
+    assert(splitTopLevelUnionAll(
+      """SELECT ")" AS p FROM t UNION ALL SELECT "UNION ALL" FROM u""") ==
+      Seq("""SELECT ")" AS p FROM t""", """SELECT "UNION ALL" FROM u"""))
+    // backticked names are names
+    assert(splitTopLevelUnionAll("SELECT `union` FROM t UNION ALL SELECT `a)b` FROM u") ==
+      Seq("SELECT `union` FROM t", "SELECT `a)b` FROM u"))
+    // block comments nest
+    assert(splitTopLevelUnionAll("SELECT 1 /* a /* b */ UNION ALL */ FROM t").size == 1)
+    assert(splitTopLevelSetOp(
+      """SELECT "INTERSECT", `except` FROM t /* /* */ EXCEPT */ EXCEPT SELECT 'x\'', y FROM u""") ==
+      ("""SELECT "INTERSECT", `except` FROM t /* /* */ EXCEPT */""",
+        """SELECT 'x\'', y FROM u""", true, false))
+
+    val (ctes, outer) = SqlCompiler.splitWith(
+      """WITH a AS (SELECT 'x\')' AS s FROM t),
+        |b AS (SELECT ")" AS p FROM `a)b` /* ( /* ) */ ( */)
+        |SELECT * FROM a JOIN b""".stripMargin).get
+    assert(ctes == Seq(("a", Nil, """SELECT 'x\')' AS s FROM t"""),
+      ("b", Nil, """SELECT ")" AS p FROM `a)b` /* ( /* ) */ ( */""")))
+    assert(outer == "SELECT * FROM a JOIN b")
+
+    val (defs, rewritten) = SqlCompiler.liftDerivedTables(
+      """SELECT s FROM (SELECT 'x\')' AS s FROM t) d
+        |JOIN (SELECT `a)b` FROM u /* ( /* ) */ */) e ON TRUE""".stripMargin)
+    assert(defs == Seq(("d", """SELECT 'x\')' AS s FROM t"""),
+      ("e", "SELECT `a)b` FROM u /* ( /* ) */ */")))
+    assert(rewritten == "SELECT s FROM d\nJOIN e ON TRUE")
+
+    // end to end: the escaped-quote statement answers as Spark's own SQL
+    val text =
+      """SELECT n_name, COUNT(*) AS n FROM nation JOIN customer ON c_nationkey = n_nationkey
+        |WHERE c_mktsegment <> 'x\'' GROUP BY n_name
+        |UNION ALL
+        |SELECT n_name, COUNT(*) AS n FROM nation JOIN supplier ON s_nationkey = n_nationkey
+        |WHERE s_name <> 'y\'' GROUP BY n_name""".stripMargin
+    val got = SqlCompiler.compileUnionAll(s, d, text).map(_.run(s, d)).reduce(_ union _)
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    val sref = s.newSession()
+    Seq("nation", "customer", "supplier").foreach(t =>
+      Tables.load(sref, d, t).createOrReplaceTempView(t))
+    val want = sref.sql(text).collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    assert(got == want && got.nonEmpty)
+  }
+
   test("compileAsOf: ON and MATCH_CONDITION spellings agree, INNER drops nulls, fences are loud") {
     val ev = Tables.events(s, d)
     val rels = Map(

@@ -170,6 +170,20 @@ class SqlDmlSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$root/_manifest_v1.json").exists())
   }
 
+  test("Spark-legal spellings: an escaped quote in an UPDATE ... FROM assignment and before a time-travel factor") {
+    val root = freshRoot("graft_dml_lex")
+    SnapshotLog.commitInitial(base(), root, "k")
+    val src = Seq((1L, 100.0)).toDF("id", "delta")
+    assert(SqlDml.updateFromSql(spark, root, 1, "k", Seq("price", "tag"),
+      """UPDATE tgt t SET tag = concat(t.tag, 'x\', y'), price = t.price + s.delta
+        |FROM src s WHERE t.k = s.id""".stripMargin, src))
+    assert(state(root, 1)(1L) == (110.0, "row1x', y"))
+    val n = SqlDml.timeTravelSql(spark,
+      """SELECT COUNT(*) AS n, 'x\'' AS q FROM t VERSION AS OF 0""",
+      Map("t" -> root)).head().getLong(0)
+    assert(n == 10L)
+  }
+
   test("timeTravelSql: VERSION and TIMESTAMP factors, per-version aggregate, fences") {
     val root = freshRoot("graft_dml_tt")
     SnapshotLog.commitInitial(base(), root, "k")
