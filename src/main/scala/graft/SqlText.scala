@@ -68,6 +68,18 @@ object SqlText {
     }
   }
 
+  /** The trimmed texts of `sql` around the `[start, end)` spans
+    * `cuts`, which are in order and do not overlap. */
+  def between(sql: String, cuts: Seq[(Int, Int)]): Seq[String] = {
+    val bounds = 0 +: cuts.flatMap { case (s, e) => Seq(s, e) } :+ sql.length
+    bounds.grouped(2).map { case Seq(s, e) => sql.substring(s, e).trim }.toSeq
+  }
+
+  /** `sql` split at its depth-0 tokens of type `kind` (a COMMA for a
+    * list), each piece trimmed. */
+  def splitAt(sql: String, kind: Int): Seq[String] =
+    between(sql, tokens(sql).filter(t => t.depth == 0 && t.kind == kind).map(t => (t.start, t.end)))
+
   /** `sql` with every comment blanked to spaces (line breaks kept), so
     * offsets into the result are offsets into `sql`: for the callers
     * that match a regex over the text, where a phrase inside a comment

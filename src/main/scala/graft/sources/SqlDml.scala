@@ -136,7 +136,7 @@ object SqlDml {
     // assignments: split on top-level commas, LHS is a (possibly
     // alias-qualified) column name, RHS is any Spark expression over
     // the two aliases
-    val asg: Map[String, String] = splitTopLevel(setText).map { a =>
+    val asg: Map[String, String] = SqlText.splitAt(setText, SqlBaseLexer.COMMA).map { a =>
       val am = java.util.regex.Pattern
         .compile("(?s)^\\s*(?:(\\w+)\\s*\\.\\s*)?(\\w+)\\s*=(?!=)(.*)$").matcher(a)
       if (!am.matches()) fail(s"cannot parse assignment '$a'")
@@ -195,14 +195,6 @@ object SqlDml {
       if (changes.isEmpty) false
       else { SnapshotLog.commitMergeChecked(spark, root, v, key, payloadCols, changes); true }
     } finally { changes.unpersist(); () }
-  }
-
-  /** Split on top-level commas, over Spark's tokens. */
-  private def splitTopLevel(text: String): Seq[String] = {
-    val commas = SqlText.tokens(text)
-      .filter(t => t.depth == 0 && t.kind == SqlBaseLexer.COMMA).map(_.start)
-    ((-1 +: commas) :+ text.length).sliding(2)
-      .map { case Seq(a, b) => text.substring(a + 1, b) }.toSeq
   }
 
   /** DELETE: lowers to a deletion-vector commit — O(|deleted keys|),

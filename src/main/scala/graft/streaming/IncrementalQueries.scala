@@ -20,22 +20,22 @@ import graft.TempDirs.tempDir
   * How a maintained view is declared:
   *
   *  - A SQL view compiled by [[SqlCompiler]] is declared ONCE through
-  *    [[maintained]] (name, oracle, statement, deletes, twins). That
-  *    registers the batch entry (`SqlCompiler.run`, or `runCte` for a
-  *    WITH statement) and, per declared twin, a `_stream` entry (the
-  *    same statement and deletes replayed as micro-batches through the
-  *    continuous engine) and a `_tws` entry (the same replay on
-  *    transformWithState). Every twin shares its base's oracle value,
-  *    so stream-equals-batch holds by construction;
-  *    `TwinMatrixSpec` checks the twin matrix and
+  *    [[maintained]] (name, oracle, statement, deletes, twins). Any
+  *    statement [[SqlCompiler.statement]] compiles qualifies: a plain
+  *    SELECT, UNION ALL, UNION, INTERSECT/EXCEPT [ALL] or WITH. That
+  *    registers the batch entry (the statement's refresh) and, per
+  *    declared twin, a `_stream` entry (the same statement and deletes
+  *    replayed as micro-batches through the continuous engine) and a
+  *    `_tws` entry (the same replay on transformWithState). Every twin
+  *    shares its base's oracle value, so stream-equals-batch holds by
+  *    construction; `TwinMatrixSpec` checks the twin matrix and
   *    `RegistryContractSpec` pins every name and oracle.
   *  - An entry is written out by hand when it differs on purpose: a
   *    twin with its own oracle, statement or deletes (an extended
   *    select list, an extra delete), or a runner the declaration does
-  *    not cover — set operations, ASOF, OVER branches, recursion
-  *    ([[RecursiveSql]]), CDC/JSON/file sources, `foreachBatch`
-  *    sinks, and the format round trips such as
-  *    `cdc_roundtrip_lineitem`.
+  *    not cover — ASOF, OVER branches, recursion ([[RecursiveSql]]),
+  *    CDC/JSON/file sources, `foreachBatch` sinks, and the format
+  *    round trips such as `cdc_roundtrip_lineitem`.
   *  - Every maintained join tree comes from a statement [[SqlCompiler]]
   *    compiles: a runner of its own (a CDC source, a sink, a TTL, a
   *    salted or re-oriented stage) reads the stages, routing keys,
@@ -583,9 +583,20 @@ object IncrementalQueries {
     * `o_orderdate`, which the statement's date window names, so the
     * raw orders changelog carries it. Same survivors oracle as
     * incremental_q10. */
-  def incrementalQ10StreamTtl(s: SparkSession, dir: String): DataFrame =
-    runSqlStreamed(s, q10(s, dir), dir, q10Deletes, "incremental_q10_stream_ttl_leaf",
-      eventTtl = Some(DeltaEngine.EventTimeTtl("o_orderdate", java.time.Duration.ofDays(3650))))
+  def incrementalQ10StreamTtl(s: SparkSession, dir: String): DataFrame = {
+    val c = q10(s, dir)
+    val ttl = DeltaEngine.EventTimeTtl("o_orderdate", java.time.Duration.ofDays(3650))
+    // per-stage re-derived event times trip the blanket chained-stateful
+    // check, and only the orders changelog carries the ts column, so the
+    // combined watermark takes the max
+    val ttlConfs = Map(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
+    c.aggregate(replayLeaf(s, "incremental_q10_stream_ttl_leaf",
+        Seq(c.sourceChangelogs(s, dir, q10Deletes, filtered = false)), confs = ttlConfs) { in =>
+      c.runStream(in.head, eventTtl = Some(ttl))
+    }.toDF())
+  }
 
   /** LEFT OUTER JOIN from SQL TEXT: the compiler plans the inner tree
     * PLUS an anti plan per LEFT boundary (NOT EXISTS wiring — see
@@ -760,13 +771,10 @@ object IncrementalQueries {
       |GROUP BY n_name""".stripMargin
   private val unionDeletes = Map("lineitem" -> (col("l_partkey") % 3 === 0))
 
-  // Building lineitem's changelog once for both branches measured
+  // Building lineitem's changelog once for both arms measured
   // SLOWER at sf0.1 (min 2.65 -> 2.89 s, control faster): the shared
-  // canon's checkpoint barrier costs more than each branch's lazy
+  // canon's checkpoint barrier costs more than each arm's lazy
   // re-scan, which pipelines into its first shuffle map stage.
-  def incrementalSqlUnion(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileUnionAll(s, dir, unionSql)
-      .map(_.run(s, dir, unionDeletes)).reduce(_ unionAll _)
 
   // ---- maintained INTERSECT / EXCEPT --------------------------------
 
@@ -785,14 +793,6 @@ object IncrementalQueries {
     "customer" -> (col("c_custkey") % 13 === 0),
     "supplier" -> (col("s_suppkey") % 7 === 0))
 
-  def incrementalSqlIntersect(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileSetOp(s, dir, setOpLhs + "\nINTERSECT\n" + setOpRhs)
-      .run(s, dir, setOpDeletes)
-
-  def incrementalSqlExcept(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileSetOp(s, dir, setOpLhs + "\nEXCEPT\n" + setOpRhs)
-      .run(s, dir, setOpDeletes)
-
   /** Bare UNION (set semantics) across BAG branches — multiplicity
     * collapses across and within branches through one set-semantics
     * netting node; a delete removes a tuple only when NO branch still
@@ -807,33 +807,6 @@ object IncrementalQueries {
       |JOIN supplier ON s_nationkey = n_nationkey
       |WHERE s_acctbal > 5000""".stripMargin
 
-  def incrementalSqlUnionDistinct(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileUnionDistinct(s, dir, unionDistinctSql)
-      .run(s, dir, setOpDeletes)
-
-  /** The continuous form of the set-semantics UNION: every branch
-    * tree and the netting node in one streaming query. */
-  def incrementalSqlUnionDistinctStream(s: SparkSession, dir: String,
-      tws: Boolean = false): DataFrame = {
-    val sinkName =
-      if (tws) "incremental_sql_union_distinct_tws_leaf"
-      else "incremental_sql_union_distinct_leaf"
-    streamUnionDistinct(s, SqlCompiler.compileUnionDistinct(s, dir, unionDistinctSql),
-      dir, setOpDeletes, sinkName, tws)
-  }
-
-  /** Replay a [[SqlCompiler.CompiledUnionDistinct]] continuously:
-    * every branch tree plus the shared netting node in ONE streaming
-    * query, micro-batches interleaved across branches in seq order. */
-  private def streamUnionDistinct(s: SparkSession,
-      c: SqlCompiler.CompiledUnionDistinct, dir: String,
-      deletes: Map[String, org.apache.spark.sql.Column], sinkName: String,
-      tws: Boolean = false): DataFrame =
-    c.present(replayLeaf(s, sinkName,
-        c.branches.map(_.sourceChangelogs(s, dir, deletes, filtered = false)), tws) {
-      c.runStream(_, tws = tws)
-    })
-
   /** Bag branches (no DISTINCT): n_name once per qualifying customer
     * vs once per qualifying supplier — INTERSECT ALL keeps min of the
     * two multiplicities, EXCEPT ALL the surplus. */
@@ -845,33 +818,6 @@ object IncrementalQueries {
     """SELECT n_name FROM nation
       |JOIN supplier ON s_nationkey = n_nationkey
       |WHERE s_acctbal > 5000""".stripMargin
-
-  def incrementalSqlIntersectAll(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileBagSetOp(s, dir, bagSetOpLhs + "\nINTERSECT ALL\n" + bagSetOpRhs)
-      .run(s, dir, setOpDeletes)
-
-  def incrementalSqlExceptAll(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileBagSetOp(s, dir, bagSetOpLhs + "\nEXCEPT ALL\n" + bagSetOpRhs)
-      .run(s, dir, setOpDeletes)
-
-  /** Continuous bag set ops: both branch trees replay side-tagged into
-    * one sink; the bag formula evaluates at presentation. */
-  private def runBagSetOpStreamed(s: SparkSession, dir: String, opSql: String,
-                                  sinkName: String): DataFrame = {
-    val c = SqlCompiler.compileBagSetOp(s, dir, opSql)
-    c.present(replayLeaf(s, sinkName, Seq(c.left, c.right)
-        .map(_.sourceChangelogs(s, dir, setOpDeletes, filtered = false))) { in =>
-      c.runStream(in(0), in(1))
-    })
-  }
-
-  def incrementalSqlIntersectAllStream(s: SparkSession, dir: String): DataFrame =
-    runBagSetOpStreamed(s, dir, bagSetOpLhs + "\nINTERSECT ALL\n" + bagSetOpRhs,
-      "incremental_sql_intersect_all_leaf")
-
-  def incrementalSqlExceptAllStream(s: SparkSession, dir: String): DataFrame =
-    runBagSetOpStreamed(s, dir, bagSetOpLhs + "\nEXCEPT ALL\n" + bagSetOpRhs,
-      "incremental_sql_except_all_leaf")
 
   // ---- ASOF JOIN from SQL text ---------------------------------------
 
@@ -1015,39 +961,6 @@ object IncrementalQueries {
       Map("customer" -> (col("c_custkey") % 13 === 0)),
       "incremental_sql_over_branch_stream_leaf")
 
-  /** The continuous form: both branch trees AND the set stages in one
-    * streaming query — right-side deletes must flip tuples INTO an
-    * EXCEPT result (and out of an INTERSECT) through held state. */
-  private def runSetOpStreamed(s: SparkSession, dir: String, opSql: String,
-                               sinkName: String, tws: Boolean = false): DataFrame = {
-    val c = SqlCompiler.compileSetOp(s, dir, opSql)
-    c.present(replayLeaf(s, sinkName, Seq(c.left, c.right)
-        .map(_.sourceChangelogs(s, dir, setOpDeletes, filtered = false)), tws) { in =>
-      c.runStream(in(0), in(1), tws = tws)
-    })
-  }
-
-  def incrementalSqlIntersectStream(s: SparkSession, dir: String): DataFrame =
-    runSetOpStreamed(s, dir, setOpLhs + "\nINTERSECT\n" + setOpRhs,
-      "incremental_sql_intersect_leaf")
-
-  def incrementalSqlExceptStream(s: SparkSession, dir: String): DataFrame =
-    runSetOpStreamed(s, dir, setOpLhs + "\nEXCEPT\n" + setOpRhs,
-      "incremental_sql_except_leaf")
-
-  /** The set-op wiring on the TRANSFORMWITHSTATE drivers — same oracle
-    * as the batch/flatMap forms: three state implementations, one
-    * truth, now for cross-branch netting too. */
-  def incrementalSqlIntersectTws(s: SparkSession, dir: String): DataFrame =
-    runSetOpStreamed(s, dir, setOpLhs + "\nINTERSECT\n" + setOpRhs,
-      "incremental_sql_intersect_tws_leaf", tws = true)
-
-  def incrementalSqlUnionStream(s: SparkSession, dir: String): DataFrame =
-    SqlCompiler.compileUnionAll(s, dir, unionSql).zipWithIndex
-      .map { case (c, i) =>
-        runSqlStreamed(s, c, dir, unionDeletes, s"incremental_sql_union_leaf_$i")
-      }.reduce(_ unionAll _)
-
   /** VIEW MODE through the CONTINUOUS engine: the compiled
     * non-aggregate SELECT replays over raw event streams and the bag
     * view (net-count explode) folds the streamed leaf — same oracle
@@ -1071,117 +984,46 @@ object IncrementalQueries {
   private val Tws = "_tws"
 
   /** Declare a maintained view ONCE. The batch entry `name` runs
-    * `sqlText` under `deletes` through [[SqlCompiler.run]] (or
-    * [[SqlCompiler.runCte]] when `cte`); every suffix in `twins` adds
-    * `name + suffix`, which replays the SAME statement and deletes as
-    * a changelog through [[runSqlStreamed]] (or [[runCteStreamed]])
-    * into the memory sink `<twin>_leaf` (the CTE runner prefixes its
-    * per-view sinks with the twin name); scalar-subquery gates resolve
-    * over the survivor inputs first, a no-op for a view without them,
-    * since `runStream` fences them. All of them are gated against
-    * the one `oracle` value, so a twin cannot drift from its base.
-    * `overrides` are relation loaders for [[SqlCompiler.compileOver]]'s
-    * seam.
-    * A twin whose oracle, statement or deletes differ on purpose, or
-    * that needs another runner (set operations, ASOF, OVER, recursion,
-    * its own source or sink), is written out by hand instead. */
+    * `sqlText` under `deletes` through [[SqlCompiler.statement]]'s
+    * refresh; every suffix in `twins` adds `name + suffix`, which
+    * replays the SAME statement and deletes as changelogs through
+    * [[runSqlStreamed]] into the memory sink `<twin>_leaf` (suffixed
+    * per arm of a UNION ALL and per view of a WITH query). All of them
+    * are gated against the one `oracle` value, so a twin cannot drift
+    * from its base. `overrides` are relation loaders for
+    * [[SqlCompiler.compileOver]]'s seam. A twin whose oracle, statement
+    * or deletes differ on purpose, or that needs another runner (ASOF,
+    * OVER, recursion, its own source or sink), is written out by hand
+    * instead. */
   private def maintained(name: String, oracle: String, sqlText: String,
       deletes: Map[String, Column] = Map.empty, twins: Seq[String] = Seq(Stream),
-      cte: Boolean = false,
       overrides: Map[String, (SparkSession, String) => DataFrame] = Map.empty): Seq[GraftQuery] = {
-    require(!(cte && overrides.nonEmpty), s"$name: relation overrides need a plain statement")
-    def compiled(s: SparkSession, dir: String): SqlCompiler.Compiled =
-      if (overrides.isEmpty) SqlCompiler.compile(s, dir, sqlText)
-      else SqlCompiler.compileOver(s, dir, sqlText, overrides)
-    sql(name, oracle) { (s, dir) =>
-      if (cte) SqlCompiler.runCte(s, dir, sqlText, deletes)
-      else compiled(s, dir).run(s, dir, deletes)
-    } +: twins.map { suffix =>
-      require(suffix == Stream || suffix == Tws, s"$name: unknown twin suffix $suffix")
-      val twin = name + suffix
-      sql(twin, oracle) { (s, dir) =>
-        if (cte) runCteStreamed(s, sqlText, dir, deletes, twin, tws = suffix == Tws)
-        else runSqlStreamed(s, compiled(s, dir).withScalarGatesResolved(s, dir, deletes),
-          dir, deletes, twin + "_leaf", tws = suffix == Tws)
+    def compiled(s: SparkSession, dir: String) = SqlCompiler.statement(s, dir, sqlText, overrides)
+    sql(name, oracle)((s, dir) => compiled(s, dir).run(s, dir, deletes)) +:
+      twins.map { suffix =>
+        require(suffix == Stream || suffix == Tws, s"$name: unknown twin suffix $suffix")
+        val twin = name + suffix
+        sql(twin, oracle)((s, dir) =>
+          runSqlStreamed(s, compiled(s, dir), dir, deletes, twin + "_leaf", tws = suffix == Tws))
       }
-    }
   }
 
-  /** Compiled query → RAW (unfiltered) event streams — runStream's
-    * eventFilter applies the compiled predicates per stream — →
-    * micro-batch replay (one batch per changelog seq, state across
-    * batches) → the compiled fold. Shared by the SQL-stream gated
-    * entries. `eventTtl` adds the session confs
-    * [[DeltaEngine.EventTimeTtl]] requires: per-stage re-derived event
-    * times trip the blanket chained-stateful check, and only some
-    * changelogs carry the ts column, so the combined watermark takes
-    * the max. */
-  private def runSqlStreamed(s: SparkSession, c: SqlCompiler.Compiled, dir: String,
+  /** A compiled statement's continuous form through the micro-batch
+    * replay: each of its streaming queries replays the RAW (unfiltered)
+    * changelogs of its branches — runStream's eventFilter applies the
+    * compiled predicates per stream — one batch per changelog seq, with
+    * state across batches, into the memory sink `sinkName` plus the
+    * query's part suffix, and presents the streamed leaf.
+    * `transformLogs` rewrites each branch's changelogs before the
+    * replay. */
+  private def runSqlStreamed(s: SparkSession, st: SqlCompiler.Statement, dir: String,
       deletes: Map[String, org.apache.spark.sql.Column], sinkName: String,
       tws: Boolean = false,
-      transformLogs: Map[String, Dataset[Evt]] => Map[String, Dataset[Evt]] = identity,
-      eventTtl: Option[DeltaEngine.EventTimeTtl] = None): DataFrame = {
-    val ttlConfs = if (eventTtl.isEmpty) Map.empty[String, String] else Map(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
-      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
-    c.aggregate(replayLeaf(s, sinkName,
-        Seq(transformLogs(c.sourceChangelogs(s, dir, deletes, filtered = false))), tws,
-        ttlConfs) { in =>
-      c.runStream(in.head, eventTtl = eventTtl, tws = tws)
-    }.toDF())
-  }
-
-  /** WITH (CTE) query through the CONTINUOUS engine: every CTE's
-    * maintained view replays as its own streaming query
-    * ([[runSqlStreamed]]), the refreshed outputs re-home into one
-    * session under the CTE names (group-cardinality rows, bounded by
-    * the same replay guard as the inputs), and the outer query
-    * evaluates over them exactly as [[SqlCompiler.CompiledCte.run]]
-    * does. Production form: each view is a foreachBatch upsert into a
-    * table the outer query reads — the collect here is the fixture
-    * harness's stand-in for that sink. */
-  private def runCteStreamed(s: SparkSession, sqlText: String, dir: String,
-      deletes: Map[String, org.apache.spark.sql.Column], sinkPrefix: String,
-      tws: Boolean = false): DataFrame = {
-    val cc = SqlCompiler.compileCte(s, dir, sqlText)
-    val ss = replaySession(s)
-    cc.ctes.foreach { case (name, branches) =>
-      // each branch (one for a plain body, one per UNION ALL arm)
-      // replays as its own streaming query; the collected final states
-      // concatenate under the CTE's name
-      val views = branches.zipWithIndex.map { case (c, i) =>
-        val d = deletes.filter { case (rel, _) => c.path.contains(rel) }
-        val suffix = if (branches.size == 1) "" else s"_b$i"
-        runSqlStreamed(s, c, dir, d, s"${sinkPrefix}_$name$suffix", tws = tws)
-      }
-      val rows = views.flatMap(v => boundedReplayCollect(s"$sinkPrefix($name)", v))
-      cc.applyAliases(name,
-          ss.createDataFrame(ss.sparkContext.parallelize(rows), views.head.schema))
-        .createOrReplaceTempView(name)
-    }
-    // set-semantics UNION CTEs: branch trees + netting node in one
-    // streaming query each, final state registered under the CTE name
-    cc.setCtes.foreach { case (name, c) =>
-      val d = deletes.filter { case (rel, _) =>
-        c.branches.exists(_.path.contains(rel)) }
-      val v = streamUnionDistinct(s, c, dir, d, s"${sinkPrefix}_$name", tws = tws)
-      val rows = boundedReplayCollect(s"$sinkPrefix($name)", v)
-      cc.applyAliases(name,
-          ss.createDataFrame(ss.sparkContext.parallelize(rows), v.schema))
-        .createOrReplaceTempView(name)
-    }
-    cc.outerBaseRels.foreach { rel =>
-      val base = Tables.load(ss, dir, rel)
-      deletes.get(rel).map(cond => base.filter(!cond)).getOrElse(base)
-        .createOrReplaceTempView(rel)
-    }
-    // presentation CTEs evaluate over the final maintained states, in
-    // definition order (view output in, view output out — stock SQL)
-    cc.presentation.foreach { case (name, body) =>
-      cc.applyAliases(name, ss.sql(body)).createOrReplaceTempView(name)
-    }
-    ss.sql(cc.outerSql)
-  }
+      transformLogs: Map[String, Dataset[Evt]] => Map[String, Dataset[Evt]] = identity): DataFrame =
+    st.runStreamed(s, dir, deletes, (part, q, d) =>
+      q.present(replayLeaf(s, sinkName + part,
+          q.branches.map(c => transformLogs(c.sourceChangelogs(s, dir, d, filtered = false))),
+          tws)(q.leaf(_, tws))))
 
   /** Typed rows + a ±1 sign expression → the engine's [[Evt]]
     * changelog (inserts replay at seq 0, deletes at seq 1, the same
@@ -2055,82 +1897,6 @@ object IncrementalQueries {
             coalesce(col("__n"), lit(0L)).as("n_rows"))
     },
 
-    // TOP-LEVEL UNION ALL from SQL text — two maintained trees, one
-    // result: customer-side and supplier-side nation revenue, each
-    // branch compiled and maintained independently (lineitem routes
-    // by l_orderkey in one and l_suppkey in the other), bag-unioned
-    // as presentation. Oracle: the literal UNION ALL over the
-    // delete-filtered fact.
-    sql("incremental_sql_union", unionAllOracle)(incrementalSqlUnion),
-
-    // … and through the CONTINUOUS engine: each branch replays its own
-    // micro-batched tree, the union happens on the maintained outputs.
-    sql("incremental_sql_union_stream", unionAllOracle)(incrementalSqlUnionStream),
-
-    // Maintained INTERSECT — the cross-branch netting UNION ALL never
-    // needed: the right branch's distinct tuples gate the left's
-    // through a set-semantics key node + liveness hop keyed by the
-    // OUTPUT ROW itself; deletes on either side flip tuples in/out.
-    // Oracle: DuckDB's native INTERSECT over the survivor CTEs.
-    sql("incremental_sql_intersect", intersectOracle)(incrementalSqlIntersect),
-
-    // Maintained EXCEPT — the same wiring with the hop inverted
-    // (antiParent): tuples survive while ABSENT from the right, so a
-    // right-side delete must flip tuples INTO the result.
-    sql("incremental_sql_except", exceptOracle)(incrementalSqlExcept),
-
-    // Maintained bare UNION (SET semantics) — multiplicity collapse
-    // across bag branches through one netting node: a nation with 3
-    // qualifying customers and 2 qualifying suppliers is ONE row, and
-    // stays present until the LAST qualifying row on either side is
-    // deleted. Oracle: DuckDB's native UNION over the survivor CTEs.
-    sql("incremental_sql_union_distinct", unionDistinctOracle)(incrementalSqlUnionDistinct),
-
-    // … and through the CONTINUOUS engine: branch trees and the
-    // netting node in ONE streaming query, same oracle.
-    sql("incremental_sql_union_distinct_stream", unionDistinctOracle)((s, d) => incrementalSqlUnionDistinctStream(s, d)),
-
-    // … and on the TRANSFORMWITHSTATE driver — the cross-branch
-    // netting node as a StatefulProcessor, same oracle.
-    sql("incremental_sql_union_distinct_tws", unionDistinctOracle)(
-      (s, d) => incrementalSqlUnionDistinctStream(s, d, tws = true)),
-
-    // MIXED union ASSOCIATION under set semantics: a parenthesized
-    // UNION ALL group beneath a set UNION flattens exactly under the
-    // netting node (DISTINCT of any ⊎/DISTINCT tree = DISTINCT of its
-    // leaves), so `(A UNION ALL B) UNION C` compiles — the r12
-    // "parenthesize to fix the association" fence, now a plan. The
-    // converse (a set group under UNION ALL) stays fenced: it does
-    // not collapse.
-    sql("incremental_sql_union_mixed", unionMixedOracle) {
-      (s, dir) => SqlCompiler.compileUnionDistinct(s, dir, unionMixedSql)
-        .run(s, dir, setOpDeletes)
-    },
-
-    sql("incremental_sql_union_mixed_stream", unionMixedOracle) {
-      (s, dir) => streamUnionDistinct(s, SqlCompiler.compileUnionDistinct(s, dir, unionMixedSql),
-        dir, setOpDeletes, "incremental_sql_union_mixed_stream_leaf")
-    },
-
-    // INTERSECT's liveness-gated hop on the TWS drivers, same oracle
-    // as incremental_sql_intersect.
-    sql("incremental_sql_intersect_tws", intersectOracle)(incrementalSqlIntersectTws),
-
-    // INTERSECT ALL — bag multiplicities via counts-based netting:
-    // per nation, min(#qualifying customers, #qualifying suppliers)
-    // copies survive; deletes move either count and the multiplicity
-    // follows. Oracle: DuckDB's native INTERSECT ALL over survivors.
-    sql("incremental_sql_intersect_all", intersectAllOracle)(incrementalSqlIntersectAll),
-
-    // EXCEPT ALL — the surplus max(nl − nr, 0) per tuple.
-    sql("incremental_sql_except_all", exceptAllOracle)(incrementalSqlExceptAll),
-
-    // … and their CONTINUOUS twins: both branch trees in one streaming
-    // query, side-tagged deltas, bag formula at presentation.
-    sql("incremental_sql_intersect_all_stream", intersectAllOracle)(incrementalSqlIntersectAllStream),
-
-    sql("incremental_sql_except_all_stream", exceptAllOracle)(incrementalSqlExceptAllStream),
-
     // ASOF JOIN from SQL TEXT — the as-of machinery green via the API
     // since r8, now reachable from a query string: compileAsOf parses
     // the DuckDB spelling (inequality in ON; Snowflake MATCH_CONDITION
@@ -2190,12 +1956,6 @@ object IncrementalQueries {
     // … and the branch-sourced maintained view through the CONTINUOUS
     // engine, same oracle.
     sql("incremental_sql_over_branch_stream", overBranchOracle)(incrementalSqlOverBranchStream),
-
-    // … both through the CONTINUOUS engine: branch trees AND set
-    // stages in one streaming query, flips crossing micro-batches.
-    sql("incremental_sql_intersect_stream", intersectOracle)(incrementalSqlIntersectStream),
-
-    sql("incremental_sql_except_stream", exceptOracle)(incrementalSqlExceptStream),
 
     // … the same compiled FULL OUTER (fused leaf + anti plan, ancestor
     // deletes) through the TRANSFORMWITHSTATE runner — the compiler's
@@ -4011,8 +3771,64 @@ object IncrementalQueries {
         "o1" -> (col("o1_o_orderkey") % 7 === 0),
         "o2" -> (col("o2_o_orderkey") % 5 === 0))),
 
+    // TOP-LEVEL UNION ALL from SQL text — two maintained trees, one
+    // result: customer-side and supplier-side nation revenue, each arm
+    // compiled and maintained independently (lineitem routes by
+    // l_orderkey in one and l_suppkey in the other), bag-unioned as
+    // presentation; its twin replays each arm as its own streaming
+    // query. Oracle: the literal UNION ALL over the delete-filtered
+    // fact.
+    maintained("incremental_sql_union", unionAllOracle, unionSql, unionDeletes),
+
+    // Maintained INTERSECT — the cross-branch netting UNION ALL never
+    // needed: the right branch's distinct tuples gate the left's
+    // through a set-semantics key node + liveness hop keyed by the
+    // OUTPUT ROW itself; deletes on either side flip tuples in/out.
+    // The twins run both branch trees AND the set stages in one
+    // streaming query, flips crossing micro-batches, on the flatMap and
+    // TWS drivers. Oracle: DuckDB's native INTERSECT over the survivor
+    // CTEs.
+    maintained("incremental_sql_intersect", intersectOracle,
+      setOpLhs + "\nINTERSECT\n" + setOpRhs, setOpDeletes, twins = Seq(Stream, Tws)),
+
+    // Maintained EXCEPT — the same wiring with the hop inverted
+    // (antiParent): tuples survive while ABSENT from the right, so a
+    // right-side delete must flip tuples INTO the result.
+    maintained("incremental_sql_except", exceptOracle,
+      setOpLhs + "\nEXCEPT\n" + setOpRhs, setOpDeletes),
+
+    // Maintained bare UNION (SET semantics) — multiplicity collapse
+    // across bag branches through one netting node: a nation with 3
+    // qualifying customers and 2 qualifying suppliers is ONE row, and
+    // stays present until the LAST qualifying row on either side is
+    // deleted; the twins run the branch trees and the netting node in
+    // ONE streaming query. Oracle: DuckDB's native UNION over the
+    // survivor CTEs.
+    maintained("incremental_sql_union_distinct", unionDistinctOracle,
+      unionDistinctSql, setOpDeletes, twins = Seq(Stream, Tws)),
+
+    // MIXED union ASSOCIATION under set semantics: a parenthesized
+    // UNION ALL group beneath a set UNION flattens exactly under the
+    // netting node (DISTINCT of any ⊎/DISTINCT tree = DISTINCT of its
+    // leaves), so `(A UNION ALL B) UNION C` compiles. The converse (a
+    // set group under UNION ALL) stays fenced: it does not collapse.
+    maintained("incremental_sql_union_mixed", unionMixedOracle, unionMixedSql, setOpDeletes),
+
+    // INTERSECT ALL — bag multiplicities via counts-based netting:
+    // per nation, min(#qualifying customers, #qualifying suppliers)
+    // copies survive; deletes move either count and the multiplicity
+    // follows. The twin runs both branch trees in one streaming
+    // query, side-tagged deltas, bag formula at presentation. Oracle:
+    // DuckDB's native INTERSECT ALL over survivors.
+    maintained("incremental_sql_intersect_all", intersectAllOracle,
+      bagSetOpLhs + "\nINTERSECT ALL\n" + bagSetOpRhs, setOpDeletes),
+
+    // EXCEPT ALL — the surplus max(nl − nr, 0) per tuple.
+    maintained("incremental_sql_except_all", exceptAllOracle,
+      bagSetOpLhs + "\nEXCEPT ALL\n" + bagSetOpRhs, setOpDeletes),
+
     // ---- WITH (CTE): maintained views composed under an outer query --
-    // SqlCompiler.compileCte splits the WITH prefix over Spark's SQL
+    // SqlCompiler.statement splits the WITH prefix over Spark's SQL
     // tokens (like the set-op splitter), compiles
     // every CTE body as its OWN incrementally maintained view, and
     // evaluates the outer query as stock Spark SQL over the refreshed
@@ -4051,8 +3867,7 @@ object IncrementalQueries {
         |ORDER BY rev_e2 DESC, c_custkey LIMIT 10""".stripMargin,
       Map(
         "customer" -> (col("c_custkey") % 13 === 0),
-        "orders" -> (col("o_orderkey") % 10 === 0)),
-      cte = true),
+        "orders" -> (col("o_orderkey") % 10 === 0))),
 
     // re-aggregation outer: a histogram OVER the maintained per-customer
     // order-count view — the second aggregate's input is the view's
@@ -4074,7 +3889,7 @@ object IncrementalQueries {
         | GROUP BY c_custkey)
         |SELECT n_orders, COUNT(*) AS n_customers
         |FROM per_cust GROUP BY n_orders""".stripMargin,
-      Map("orders" -> (col("o_orderkey") % 10 === 0)), cte = true),
+      Map("orders" -> (col("o_orderkey") % 10 === 0))),
 
     // view ⋈ view outer: two independently maintained per-nation views
     // (customer balances, supplier balances) joined in the outer — the
@@ -4116,8 +3931,7 @@ object IncrementalQueries {
         |FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin,
       Map(
         "customer" -> (col("c_custkey") % 13 === 0),
-        "supplier" -> (col("s_suppkey") % 7 === 0)),
-      cte = true),
+        "supplier" -> (col("s_suppkey") % 7 === 0))),
 
     // dimension-decorated outer: the maintained per-nation revenue view
     // joined to the nation/region dims with a window RANK — base
@@ -4144,7 +3958,7 @@ object IncrementalQueries {
         | CAST(RANK() OVER (PARTITION BY r_name ORDER BY rev_e2 DESC, n_name) AS BIGINT) AS rnk
         |FROM rev JOIN nation ON n_nationkey = nk
         |JOIN region ON r_regionkey = n_regionkey""".stripMargin,
-      Map("orders" -> (col("o_orderkey") % 6 === 0)), cte = true),
+      Map("orders" -> (col("o_orderkey") % 6 === 0))),
 
     // CTE COLUMN-ALIAS LIST — `WITH bal(a, b, c) AS (...)`: the alias
     // list renames the maintained view's output POSITIONALLY (ANSI),
@@ -4169,7 +3983,7 @@ object IncrementalQueries {
         | GROUP BY n_name)
         |SELECT nation_name, total_bal_e2, n_cust FROM bal
         |WHERE n_cust > 5""".stripMargin,
-      Map("customer" -> (col("c_custkey") % 13 === 0)), cte = true),
+      Map("customer" -> (col("c_custkey") % 13 === 0))),
 
     // SET-SEMANTICS UNION CTE BODY — the UNION (not ALL) body
     // maintains through the CompiledUnionDistinct netting node (a
@@ -4196,7 +4010,7 @@ object IncrementalQueries {
       Map(
         "customer" -> (col("c_custkey") % 13 === 0),
         "supplier" -> (col("s_suppkey") % 7 === 0)),
-      twins = Seq(Stream, Tws), cte = true),
+      twins = Seq(Stream, Tws)),
 
     // DERIVED TABLE spelling of the same composition: an aliased
     // FROM (SELECT ...) t lifts to an anonymous CTE named by its
@@ -4222,7 +4036,7 @@ object IncrementalQueries {
         |      GROUP BY c_custkey, c_nationkey) t
         |JOIN nation ON n_nationkey = t.c_nationkey
         |GROUP BY n_name""".stripMargin,
-      Map("orders" -> (col("o_orderkey") % 8 === 0)), cte = true),
+      Map("orders" -> (col("o_orderkey") % 8 === 0))),
 
     // CHAINED CTEs — the staged-SQL idiom: stage 1 (rev) reads base
     // relations, so it is the MAINTAINED view; stage 2 (ranked) reads
@@ -4258,7 +4072,7 @@ object IncrementalQueries {
         | FROM rev)
         |SELECT n_name, c_custkey, rev_e2, rk
         |FROM ranked WHERE rk <= 3""".stripMargin,
-      Map("orders" -> (col("o_orderkey") % 9 === 0)), twins = Seq(Stream, Tws), cte = true),
+      Map("orders" -> (col("o_orderkey") % 9 === 0)), twins = Seq(Stream, Tws)),
 
     // UNION ALL as a CTE body: each arm is its own maintained tree
     // (customer balances / supplier balances per nation), unioned at
@@ -4301,8 +4115,7 @@ object IncrementalQueries {
         |FROM bal GROUP BY n_name""".stripMargin,
       Map(
         "customer" -> (col("c_custkey") % 13 === 0),
-        "supplier" -> (col("s_suppkey") % 7 === 0)),
-      cte = true),
+        "supplier" -> (col("s_suppkey") % 7 === 0))),
 
     // UNALIASED aggregates in HAVING — the common SQL spelling: each
     // distinct aggregate fragment joins the incremental fold under a

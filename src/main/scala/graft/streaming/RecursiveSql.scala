@@ -45,7 +45,7 @@ import graft.{SqlText, Tables}
   * it); one referencing the recursive CTE binds AFTER the fixpoint
   * (only the outer query may read it — the loop reading it would be
   * recursion through a helper, fenced as non-linear). References flow
-  * backward, as in [[SqlCompiler.compileCte]].
+  * backward, as in a WITH query [[SqlCompiler.statement]] compiles.
   *
   * All text-level scanning (the CTE-list walk, balanced-paren body
   * extraction, reference counting) walks Spark's own tokens
@@ -230,10 +230,10 @@ object RecursiveSql {
   }
 
   private def splitRecursiveBody(rec: Cte): (String, String, Boolean) = {
-    val (parts, kinds) = SqlCompiler.splitTopLevelUnion(rec.body)
-    if (parts.size != 2)
+    val (parts, ops) = SqlCompiler.splitSetOps(rec.body)
+    if (parts.size != 2 || !ops.head.startsWith("UNION"))
       fail(s"the recursive CTE body must be <anchor> UNION [ALL] <recursive " +
-        s"term> — found ${parts.size} branch(es)")
+        s"term> — found ${parts.size} branch(es)${ops.headOption.fold("")(" joined by " + _)}")
     val refs = countRefs(parts(1), rec.name)
     if (countRefs(parts(0), rec.name) != 0)
       fail(s"the anchor term may not reference '${rec.name}' (it seeds the recursion)")
@@ -243,7 +243,7 @@ object RecursiveSql {
       fail(s"non-linear recursion: the recursive term references '${rec.name}' $refs " +
         "times; SQL's working-table semantics admit exactly one reference " +
         "(a self-join of the working table has no bounded fixpoint plan)")
-    (parts(0), parts(1), kinds.head)
+    (parts(0), parts(1), ops.head == "UNION ALL")
   }
 
   /** Occurrences of `name` as a standalone TABLE identifier among
@@ -466,8 +466,9 @@ object RecursiveSql {
 
   /** Classify helper CTEs around the fixpoint — (pre, post) in
     * definition order; enforce backward reference flow among CTEs (as
-    * compileCte does) and fence recursion THROUGH a helper — the loop
-    * reading a helper that (transitively) reads r is non-linear. */
+    * SqlCompiler.statement does) and fence recursion THROUGH a
+    * helper — the loop reading a helper that (transitively) reads r is
+    * non-linear. */
   private def classifyHelpers(ctes: Seq[Cte], rec: Cte, anchorText: String,
                               recText: String): (Seq[Cte], Seq[Cte]) = {
     val helpers = ctes.filterNot(_.name == rec.name)

@@ -108,116 +108,155 @@ object SqlCompiler {
   final case class OuterPlan(
       stages: Seq[DeltaEngine.Stage],
       path: Seq[String],
-      rekey: Seq[(String, String)])
+      rekey: Seq[(String, String)]) {
 
-  /** Top-level `UNION ALL` of independently compilable queries: each
-    * branch is its own maintained tree/aggregate (they may join
-    * entirely different relation trees); the union is presentation —
-    * maintained bag-union of the branch views. Branch texts are
-    * recovered from Spark's tokens, split at top-level
-    * `UNION ALL` tokens (the compiler's text-is-the-interface
-    * convention: Origin offsets on a Union node do not delimit its
-    * branches), then each compiles through the ordinary [[compile]].
-    * Output schemas must agree by NAME AND ORDER — SQL's positional
-    * union is not papered over silently. `UNION` (set semantics) is
-    * the cross-branch netting composition — [[compileUnionDistinct]]. */
-  def compileUnionAll(spark: SparkSession, dir: String, sqlText: String): Seq[Compiled] = {
-    val parts = splitTopLevelUnionAll(sqlText)
-    if (parts.size < 2)
-      fail("compileUnionAll expects a top-level UNION ALL of two or more queries")
-    val cs = parts.map(p => compile(spark, dir, p))
-    val cols = cs.head.outputCols
-    cs.zipWithIndex.drop(1).foreach { case (c, i) =>
-      if (c.outputCols != cols)
-        fail(s"UNION ALL branch ${i + 1} output ${c.outputCols.mkString("(", ",", ")")} " +
-          s"does not match branch 1's ${cols.mkString("(", ",", ")")} — align the " +
-          "SELECT lists (names and order) explicitly")
+    /** The plan's changelogs out of the main tree's: each relation on
+      * its path, re-keyed where [[rekey]] names it. */
+    private[SqlCompiler] def changelogs(logs: Map[String, Dataset]): Map[String, Dataset] =
+      path.map { rel =>
+        rel -> rekey.collectFirst { case (`rel`, rc) => rekeyByCanon(logs(rel), rc) }
+          .getOrElse(logs(rel))
+      }.toMap
+  }
+
+  /** A statement as [[statement]] compiles it, by its top-level shape:
+    * a plain SELECT ([[Compiled]]), the arms of a `UNION ALL`
+    * ([[CompiledUnionAll]]), a set-semantics `UNION`
+    * ([[CompiledUnionDistinct]]), `INTERSECT` / `EXCEPT`
+    * ([[CompiledSetOp]]), their `ALL` forms ([[CompiledBagSetOp]]), or a
+    * `WITH` query or derived tables ([[CompiledCte]]). */
+  sealed trait Statement {
+
+    /** Every maintained tree the statement runs, in branch order. */
+    def branches: Seq[Compiled]
+
+    /** Refresh over insert-everything changelogs plus the given
+      * per-relation delete conditions. */
+    def run(spark: SparkSession, dir: String, deletes: Map[String, Column]): DataFrame
+
+    /** The continuous form. `stream(part, query, deletes)` runs one
+      * streaming query: it replays the raw changelogs of the query's
+      * branches under `deletes` as micro-batches into a sink suffixed
+      * `part` and returns the presented view. The statement decides
+      * which branches share a query and how the outputs combine: a plain
+      * SELECT and every set operation run one query, whose branches net
+      * in shared stages; a UNION ALL runs one query per arm and
+      * concatenates them; a WITH query runs its views' queries and
+      * evaluates the outer query over their outputs. */
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame
+  }
+
+  /** One streaming query of a [[Statement]]'s continuous form: the
+    * changelogs of `branches` replay into it together (one map per
+    * branch), `leaf` builds its signed leaf deltas from their streams
+    * (`tws` picks the transformWithState drivers), and `present` folds
+    * the streamed leaf into the view. */
+  final case class StreamQuery(branches: Seq[Compiled],
+                               leaf: (Seq[Map[String, Dataset]], Boolean) => Dataset,
+                               present: Dataset => DataFrame)
+
+  /** Compile any maintained statement. Its top-level shape, read from
+    * Spark's tokens by [[splitSetOps]], picks the [[Statement]]:
+    *
+    *  - no set operator: a plain SELECT compiles through [[compile]]
+    *    (through [[compileOver]] when `overrides` name relation
+    *    loaders); a `WITH` clause or an aliased `FROM (SELECT ...) t`
+    *    derived table makes a [[CompiledCte]];
+    *  - `UNION ALL`: each arm is its own maintained tree and the union
+    *    is presentation ([[CompiledUnionAll]]);
+    *  - `UNION` (or `UNION DISTINCT`): the branches net through one
+    *    set-semantics node ([[CompiledUnionDistinct]]);
+    *  - `INTERSECT` / `EXCEPT` [`DISTINCT`]: [[CompiledSetOp]];
+    *  - `INTERSECT ALL` / `EXCEPT ALL`: [[CompiledBagSetOp]].
+    *
+    * One operator per level: mixing operators at one level, or more
+    * than one top-level INTERSECT/EXCEPT, fails loudly (standard SQL
+    * associates them; parenthesize to fix the association). */
+  def statement(spark: SparkSession, dir: String, sqlText: String,
+                overrides: Map[String, (SparkSession, String) => DataFrame]): Statement = {
+    def branch(text: String): Compiled =
+      if (overrides.isEmpty) compile(spark, dir, text)
+      else compileOver(spark, dir, text, overrides)
+    val (parts, ops) = splitSetOps(sqlText)
+    ops.distinct match {
+      case Seq() =>
+        val (withDefs, outer) = splitWith(sqlText).getOrElse((Nil, sqlText))
+        val (derived, outerSql) = liftDerivedTables(outer)
+        if (withDefs.isEmpty && derived.isEmpty) branch(sqlText)
+        else if (overrides.nonEmpty)
+          fail("relation overrides need a statement without WITH or derived tables")
+        else cteStatement(spark, dir,
+          withDefs ++ derived.map { case (n, b) => (n, Seq.empty[String], b) }, outerSql)
+      case Seq("UNION ALL") =>
+        val arms = parts.map(branch)
+        val cols = arms.head.outputCols
+        arms.zipWithIndex.drop(1).foreach { case (c, i) =>
+          if (c.outputCols != cols)
+            fail(s"UNION ALL branch ${i + 1} output ${c.outputCols.mkString("(", ",", ")")} " +
+              s"does not match branch 1's ${cols.mkString("(", ",", ")")} — align the " +
+              "SELECT lists (names and order) explicitly")
+        }
+        CompiledUnionAll(arms)
+      case Seq("UNION") =>
+        val cs = parts.flatMap(unionLeaves).map(branch)
+        checkSetBranches(cs, "UNION")
+        CompiledUnionDistinct(cs)
+      case Seq(op) =>
+        if (parts.size > 2)
+          fail(s"more than one top-level $op is not compiled — " +
+            "parenthesize to fix the association explicitly")
+        val Seq(l, r) = parts.map(branch)
+        checkSetBranches(Seq(l, r), op)
+        val except = op.startsWith("EXCEPT")
+        if (op.endsWith("ALL")) CompiledBagSetOp(l, r, except) else CompiledSetOp(l, r, except)
+      case mixed =>
+        fail(s"mixing ${mixed.mkString(" and ")} at one level is not compiled " +
+          "(parenthesize to fix the association)")
     }
-    cs
   }
 
-  /** Top-level `INTERSECT` / `EXCEPT` (SET semantics) of two
-    * independently compilable NON-AGGREGATE view branches, maintained
-    * incrementally — the cross-branch netting the UNION ALL path
-    * deliberately does not do, built from the engine's OWN vocabulary:
-    *
-    *  1. each branch's maintained-view leaf deltas project to their
-    *     OUTPUT ROW canon (alias→value pairs, typed values rendered
-    *     once — branch output types are required equal, so identical
-    *     SQL tuples produce identical strings) keyed by the row's md5;
-    *  2. the RIGHT branch dedups through a set-semantics root node
-    *     (its 0↔1 flips are "this tuple exists on the right");
-    *  3. the LEFT branch folds through a liveness hop gated on those
-    *     flips — plain liveness for INTERSECT (kept while present on
-    *     the right), `antiParent` for EXCEPT (kept while absent);
-    *  4. presentation = rows whose net > 0, one row per tuple (set
-    *     semantics), in the left branch's column order.
-    *
-    * Deletes on either branch's relations flow through its tree and
-    * flip tuples in/out of the result incrementally; the same wiring
-    * runs continuously ([[CompiledSetOp.runStream]], flatMap or TWS
-    * drivers). `INTERSECT ALL` / `EXCEPT ALL` (bag multiplicities)
-    * stay loudly uncompiled. */
-  def compileSetOp(spark: SparkSession, dir: String, sqlText: String): CompiledSetOp = {
-    val (lq, rq, except, all) = splitTopLevelSetOp(sqlText)
-    if (all)
-      fail("INTERSECT ALL / EXCEPT ALL (bag multiplicities) compile through " +
-        "compileBagSetOp, not the set-semantics path")
-    val l = compile(spark, dir, lq)
-    val r = compile(spark, dir, rq)
-    checkSetBranches(Seq(l, r), "INTERSECT/EXCEPT")
-    CompiledSetOp(l, r, except)
+  /** [[statement]] without relation overrides. */
+  def statement(spark: SparkSession, dir: String, sqlText: String): Statement =
+    statement(spark, dir, sqlText, Map.empty)
+
+  /** Split `sqlText` at its top-level set operators: `UNION`,
+    * `INTERSECT` and `EXCEPT` at paren depth 0 among Spark's tokens, so
+    * an operator inside a literal, a quoted name or a comment is not
+    * syntax. A following `ALL` or `DISTINCT` belongs to the operator.
+    * Returns the branch texts and, per separator, its operator: "UNION
+    * ALL", "UNION", "INTERSECT", "EXCEPT", "INTERSECT ALL" or "EXCEPT
+    * ALL" (`DISTINCT` spells the set form). A WITH statement's
+    * operators belong to its outer query, so it comes back whole. */
+  private[graft] def splitSetOps(sqlText: String): (Seq[String], Seq[String]) = {
+    val toks = SqlText.tokens(sqlText)
+    val setOps = Set(SqlBaseLexer.UNION, SqlBaseLexer.INTERSECT, SqlBaseLexer.EXCEPT)
+    val seps =
+      if (toks.headOption.exists(_.kind == SqlBaseLexer.WITH)) Nil
+      else toks.indices.filter(i => toks(i).depth == 0 && setOps(toks(i).kind)).map { i =>
+        val quantifier = toks.lift(i + 1).map(_.kind)
+          .filter(k => k == SqlBaseLexer.ALL || k == SqlBaseLexer.DISTINCT)
+        val end = toks(if (quantifier.isDefined) i + 1 else i).end
+        ((toks(i).start, end),
+          toks(i).text.toUpperCase + (if (quantifier.contains(SqlBaseLexer.ALL)) " ALL" else ""))
+      }
+    val parts = SqlText.between(sqlText, seps.map(_._1))
+    if (seps.nonEmpty && parts.exists(_.isEmpty))
+      fail(s"${seps.head._2} needs a query on each side")
+    (parts, seps.map(_._2))
   }
 
-  /** Top-level `INTERSECT ALL` / `EXCEPT ALL` (BAG multiplicities) of
-    * two non-aggregate view branches, maintained incrementally by
-    * COUNTS-BASED NETTING: both branches' canonical output-row deltas
-    * net per (side, tuple), and the result multiplicity is the
-    * standard bag formula — min(nl, nr) for INTERSECT ALL,
-    * max(nl − nr, 0) for EXCEPT ALL — evaluated at presentation and
-    * exploded back to rows. Deletes on either side move the counts and
-    * the multiplicities follow exactly. */
-  def compileBagSetOp(spark: SparkSession, dir: String,
-                      sqlText: String): CompiledBagSetOp = {
-    val (lq, rq, except, all) = splitTopLevelSetOp(sqlText)
-    if (!all)
-      fail("compileBagSetOp expects INTERSECT ALL or EXCEPT ALL — the set " +
-        "forms compile through compileSetOp")
-    val l = compile(spark, dir, lq)
-    val r = compile(spark, dir, rq)
-    checkSetBranches(Seq(l, r), "INTERSECT ALL/EXCEPT ALL")
-    CompiledBagSetOp(l, r, except)
-  }
-
-  /** Top-level bare `UNION` (SET semantics) of independently
-    * compilable NON-AGGREGATE view branches, maintained incrementally:
-    * every branch's leaf deltas project to the shared OUTPUT-ROW canon
-    * (as the INTERSECT/EXCEPT compiler) and the UNION of those signed
-    * delta streams folds through ONE set-semantics node — a tuple is
-    * present while its net count across ALL branches is positive, so a
-    * delete on one branch removes the tuple only when no other branch
-    * still produces it. `UNION DISTINCT` spells the same thing. */
-  def compileUnionDistinct(spark: SparkSession, dir: String,
-                           sqlText: String): CompiledUnionDistinct = {
-    val parts = splitTopLevelUnionDistinct(sqlText).flatMap(flattenUnionGroup)
-    if (parts.size < 2)
-      fail("compileUnionDistinct expects a top-level UNION of two or more queries")
-    val cs = parts.map(p => compile(spark, dir, p))
-    checkSetBranches(cs, "UNION")
-    CompiledUnionDistinct(cs)
-  }
-
-  /** Flatten a PARENTHESIZED union group under a set-semantics UNION:
-    * `(A UNION ALL B) UNION C` — and any deeper nesting of either
-    * union kind — collapses exactly under the outer netting node,
-    * because DISTINCT of any tree of ⊎/DISTINCT equals DISTINCT of
-    * all its leaves. (The converse, a set-semantics group under
-    * UNION ALL, does NOT collapse — compileUnionAll keeps its fence.) */
-  private def flattenUnionGroup(p: String): Seq[String] =
+  /** The leaves of a set-semantics UNION branch: a parenthesized
+    * `UNION [ALL]` group, at any depth, flattens into its branches,
+    * because DISTINCT of any tree of ⊎/DISTINCT equals DISTINCT of all
+    * its leaves. (A set group under UNION ALL does NOT collapse, so
+    * UNION ALL arms never flatten.) */
+  private def unionLeaves(p: String): Seq[String] =
     stripOuterParens(p) match {
       case Some(inner) =>
-        val (ps, _) = splitTopLevelUnion(inner)
-        if (ps.size <= 1) Seq(inner) else ps.flatMap(flattenUnionGroup)
+        val (parts, ops) = splitSetOps(inner)
+        if (ops.nonEmpty && ops.forall(_.startsWith("UNION"))) parts.flatMap(unionLeaves)
+        else Seq(inner)
       case None => Seq(p)
     }
 
@@ -266,27 +305,28 @@ object SqlCompiler {
     }
   }
 
-  /** Find the single top-level INTERSECT/EXCEPT [ALL]; returns
-    * (left, right, except, all) — [[compileSetOp]] takes the set
-    * forms, [[compileBagSetOp]] the ALL forms. */
-  private[graft] def splitTopLevelSetOp(sqlText: String): (String, String, Boolean, Boolean) = {
-    val toks = SqlText.tokens(sqlText)
-    val ops = toks.indices.filter { i =>
-      toks(i).depth == 0 &&
-        (toks(i).kind == SqlBaseLexer.INTERSECT || toks(i).kind == SqlBaseLexer.EXCEPT)
-    }
-    if (ops.size > 1)
-      fail("more than one top-level INTERSECT/EXCEPT is not compiled — " +
-        "parenthesize to fix the association explicitly")
-    ops.headOption match {
-      case Some(i) =>
-        val all = toks.lift(i + 1).exists(_.kind == SqlBaseLexer.ALL)
-        val end = toks(if (all) i + 1 else i).end
-        val (lq, rq) = (sqlText.substring(0, toks(i).start).trim, sqlText.substring(end).trim)
-        if (lq.isEmpty || rq.isEmpty) fail("INTERSECT/EXCEPT needs a query on each side")
-        (lq, rq, toks(i).kind == SqlBaseLexer.EXCEPT, all)
-      case None => fail("compileSetOp expects a top-level INTERSECT or EXCEPT")
-    }
+  /** The delete conditions on relations that `cs` read. */
+  private def deletesOn(cs: Seq[Compiled], deletes: Map[String, Column]): Map[String, Column] =
+    deletes.filter { case (rel, _) => cs.exists(_.path.contains(rel)) }
+
+  /** A top-level `UNION ALL`: each arm is its own maintained
+    * tree/aggregate (arms may join entirely different relation trees),
+    * and the union is presentation, the bag union of the arm views.
+    * Output schemas agree by NAME AND ORDER ([[statement]] checks);
+    * SQL's positional union is not papered over silently. Each arm
+    * takes the deletes on its own relations. */
+  final case class CompiledUnionAll(arms: Seq[Compiled]) extends Statement {
+    def branches: Seq[Compiled] = arms
+
+    def run(spark: SparkSession, dir: String, deletes: Map[String, Column]): DataFrame =
+      arms.map(c => c.run(spark, dir, deletesOn(Seq(c), deletes))).reduce(_ unionAll _)
+
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame =
+      arms.zipWithIndex.map { case (c, i) =>
+        c.runStreamed(spark, dir, deletesOn(Seq(c), deletes),
+          (part, q, d) => stream(s"_$i$part", q, d))
+      }.reduce(_ unionAll _)
   }
 
   /** Branch leaf deltas → Evts keyed by (md5 of) the OUTPUT ROW:
@@ -330,11 +370,30 @@ object SqlCompiler {
       .select(c.outputSel.map(t => col(t._2)): _*)
   }
 
-  /** The compiled set operation — see [[compileSetOp]]. */
-  final case class CompiledSetOp(left: Compiled, right: Compiled, except: Boolean) {
+  /** Top-level `INTERSECT` / `EXCEPT` (SET semantics) of two
+    * NON-AGGREGATE view branches, maintained incrementally — the
+    * cross-branch netting the UNION ALL arms do not do, built from the
+    * engine's OWN vocabulary:
+    *
+    *  1. each branch's maintained-view leaf deltas project to their
+    *     OUTPUT ROW canon (alias→value pairs, typed values rendered
+    *     once — branch output types are required equal, so identical
+    *     SQL tuples produce identical strings) keyed by the row's md5;
+    *  2. the RIGHT branch dedups through a set-semantics root node
+    *     (its 0↔1 flips are "this tuple exists on the right");
+    *  3. the LEFT branch folds through a liveness hop gated on those
+    *     flips — plain liveness for INTERSECT (kept while present on
+    *     the right), `antiParent` for EXCEPT (kept while absent);
+    *  4. presentation = rows whose net > 0, one row per tuple (set
+    *     semantics), in the left branch's column order.
+    *
+    * Deletes on either branch's relations flow through its tree and
+    * flip tuples in/out of the result incrementally; the same wiring
+    * runs continuously ([[runStream]], flatMap or TWS drivers). */
+  final case class CompiledSetOp(left: Compiled, right: Compiled, except: Boolean)
+      extends Statement {
 
-    private def projectOutput(c: Compiled, leaf: Dataset): Dataset =
-      projectOutputRow(c, leaf)
+    def branches: Seq[Compiled] = Seq(left, right)
 
     private def setStages: Seq[DeltaEngine.Stage] = Seq(
       DeltaEngine.Stage("__setop_rkeys",
@@ -351,8 +410,8 @@ object SqlCompiler {
 
     def run(spark: SparkSession, dir: String,
             deletes: Map[String, Column] = Map.empty): DataFrame = {
-      val l = projectOutput(left, left.leafDeltas(spark, dir, deletes))
-      val r = projectOutput(right, right.leafDeltas(spark, dir, deletes))
+      val l = projectOutputRow(left, left.leafDeltas(spark, dir, deletes))
+      val r = projectOutputRow(right, right.leafDeltas(spark, dir, deletes))
       present(DeltaEngine.runTree(setStages,
         Map("__setop_l" -> l, "__setop_r" -> r)))
     }
@@ -362,12 +421,16 @@ object SqlCompiler {
       * drivers. Consume with foreachBatch + [[present]]. */
     def runStream(leftLogs: Map[String, Dataset], rightLogs: Map[String, Dataset],
                   tws: Boolean = false): Dataset = {
-      val l = projectOutput(left, left.runStream(leftLogs, tws = tws))
-      val r = projectOutput(right, right.runStream(rightLogs, tws = tws))
+      val l = projectOutputRow(left, left.runStream(leftLogs, tws = tws))
+      val r = projectOutputRow(right, right.runStream(rightLogs, tws = tws))
       val logs = Map("__setop_l" -> l, "__setop_r" -> r)
       if (tws) DeltaEngine.runStreamTreeTws(setStages, logs)
       else DeltaEngine.runStreamTree(setStages, logs)
     }
+
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame =
+      stream("", StreamQuery(branches, (in, tws) => runStream(in(0), in(1), tws), present), deletes)
   }
 
   /** AS-OF JOIN from SQL text — the dialect is DuckDB's spelling
@@ -484,24 +547,14 @@ object SqlCompiler {
 
     // SELECT list: top-level comma split, each a qualified column with
     // an optional alias
-    val items = {
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      var depth = 0; var start = 0
-      selList.zipWithIndex.foreach { case (c, i) =>
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == ',' && depth == 0) { parts += selList.substring(start, i); start = i + 1 }
-      }
-      parts += selList.substring(start)
-      parts.map(_.trim).filter(_.nonEmpty).toSeq.map { frag =>
-        spark.sessionState.sqlParser.parseExpression(frag) match {
-          case a: UnresolvedAttribute if a.nameParts.size == 2 =>
-            (side(a.nameParts.head), a.nameParts(1), a.nameParts(1))
-          case Alias(a: UnresolvedAttribute, name) if a.nameParts.size == 2 =>
-            (side(a.nameParts.head), a.nameParts(1), name)
-          case other => fail("compileAsOf: select items must be qualified " +
-            s"columns (optionally aliased), got ${other.sql}")
-        }
+    val items = SqlText.splitAt(selList, SqlBaseLexer.COMMA).filter(_.nonEmpty).map { frag =>
+      spark.sessionState.sqlParser.parseExpression(frag) match {
+        case a: UnresolvedAttribute if a.nameParts.size == 2 =>
+          (side(a.nameParts.head), a.nameParts(1), a.nameParts(1))
+        case Alias(a: UnresolvedAttribute, name) if a.nameParts.size == 2 =>
+          (side(a.nameParts.head), a.nameParts(1), name)
+        case other => fail("compileAsOf: select items must be qualified " +
+          s"columns (optionally aliased), got ${other.sql}")
       }
     }
     CompiledAsOf(leftRel, rightRel, keyPairs, lTs, rTs, leftOuter, items,
@@ -557,12 +610,22 @@ object SqlCompiler {
     }
   }
 
-  /** The compiled bag set operation — see [[compileBagSetOp]]. The
-    * side marker rides in `fromParent` (the engine never reads that
-    * field past the leaf; here the "tree" is the two branch trees
-    * themselves, so the deltas land side-tagged in one changelog). */
-  final case class CompiledBagSetOp(left: Compiled, right: Compiled, except: Boolean) {
+  /** Top-level `INTERSECT ALL` / `EXCEPT ALL` (BAG multiplicities) of
+    * two non-aggregate view branches, maintained incrementally by
+    * COUNTS-BASED NETTING: both branches' canonical output-row deltas
+    * net per (side, tuple), and the result multiplicity is the
+    * standard bag formula — min(nl, nr) for INTERSECT ALL,
+    * max(nl − nr, 0) for EXCEPT ALL — evaluated at presentation and
+    * exploded back to rows. Deletes on either side move the counts and
+    * the multiplicities follow exactly. The side marker rides in
+    * `fromParent` (the engine never reads that field past the leaf;
+    * here the "tree" is the two branch trees themselves, so the deltas
+    * land side-tagged in one changelog). */
+  final case class CompiledBagSetOp(left: Compiled, right: Compiled, except: Boolean)
+      extends Statement {
     import org.apache.spark.sql.functions._
+
+    def branches: Seq[Compiled] = Seq(left, right)
 
     private def sideDeltas(c: Compiled, leaf: Dataset, right: Boolean): Dataset = {
       val spark = leaf.sparkSession
@@ -612,14 +675,22 @@ object SqlCompiler {
                   tws: Boolean = false): Dataset =
       sideDeltas(left, left.runStream(leftLogs, tws = tws), right = false)
         .union(sideDeltas(right, right.runStream(rightLogs, tws = tws), right = true))
+
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame =
+      stream("", StreamQuery(branches, (in, tws) => runStream(in(0), in(1), tws), present), deletes)
   }
 
-  /** The compiled set-semantics UNION — see [[compileUnionDistinct]].
-    * One set-semantics engine node over the UNION of every branch's
-    * canonical output-row deltas: the node's 0↔positive flips ARE the
-    * result's inserts/deletes, so multiplicity across branches (and
-    * within a bag branch) collapses exactly, under retraction. */
-  final case class CompiledUnionDistinct(branches: Seq[Compiled]) {
+  /** Top-level bare `UNION` (SET semantics) of NON-AGGREGATE view
+    * branches, maintained incrementally: every branch's leaf deltas
+    * project to the shared OUTPUT-ROW canon (as [[CompiledSetOp]]) and
+    * the UNION of those signed delta streams folds through ONE
+    * set-semantics node — its 0↔positive flips ARE the result's
+    * inserts/deletes, so multiplicity across branches (and within a
+    * bag branch) collapses exactly, under retraction: a delete on one
+    * branch removes the tuple only when no other branch still produces
+    * it. `UNION DISTINCT` spells the same thing. */
+  final case class CompiledUnionDistinct(branches: Seq[Compiled]) extends Statement {
 
     private def unionStages: Seq[DeltaEngine.Stage] = Seq(
       DeltaEngine.Stage("__setop_ukeys",
@@ -652,51 +723,10 @@ object SqlCompiler {
       if (tws) DeltaEngine.runStreamTreeTws(unionStages, logs)
       else DeltaEngine.runStreamTree(unionStages, logs)
     }
-  }
 
-  /** Split on top-level `UNION [ALL|DISTINCT]` at paren depth 0, over
-    * Spark's tokens (a UNION inside a literal, a quoted name or a
-    * comment is not syntax). Returns the branch texts plus, per
-    * separator, whether it was a bag union (`ALL`) — the
-    * [[splitTopLevelUnionAll]] / [[splitTopLevelUnionDistinct]]
-    * wrappers enforce a single kind per level (mixing associates
-    * left in standard SQL; parenthesize to compile it). */
-  private[graft] def splitTopLevelUnion(sqlText: String): (Seq[String], Seq[Boolean]) = {
-    val toks = SqlText.tokens(sqlText)
-    val unions = toks.indices.filter(i => toks(i).depth == 0 && toks(i).kind == SqlBaseLexer.UNION)
-    val seps = unions.map { i =>
-      toks.lift(i + 1).map(_.kind) match {
-        case Some(SqlBaseLexer.ALL) => (toks(i).start, toks(i + 1).end, true)
-        case Some(SqlBaseLexer.DISTINCT) => (toks(i).start, toks(i + 1).end, false)
-        case _ => (toks(i).start, toks(i).end, false)
-      }
-    }
-    val bounds = 0 +: seps.flatMap { case (s, e, _) => Seq(s, e) } :+ sqlText.length
-    val parts = bounds.grouped(2).map { case Seq(s, e) => sqlText.substring(s, e).trim }
-    (parts.filter(_.nonEmpty).toSeq, seps.map(_._3))
-  }
-
-  /** The bag-union split — every top-level separator must be
-    * `UNION ALL`; a set-semantics `UNION` routes to
-    * [[compileUnionDistinct]] instead. */
-  private[graft] def splitTopLevelUnionAll(sqlText: String): Seq[String] = {
-    val (parts, kinds) = splitTopLevelUnion(sqlText)
-    if (kinds.exists(k => !k))
-      fail("top-level UNION (set semantics) — compile it with " +
-        "compileUnionDistinct; mixing UNION and UNION ALL at one level " +
-        "is not compiled (parenthesize to fix the association)")
-    parts
-  }
-
-  /** The set-union split — every top-level separator must be a bare
-    * `UNION` (or `UNION DISTINCT`). */
-  private[graft] def splitTopLevelUnionDistinct(sqlText: String): Seq[String] = {
-    val (parts, kinds) = splitTopLevelUnion(sqlText)
-    if (kinds.exists(identity))
-      fail("compileUnionDistinct expects set-semantics UNION between every " +
-        "branch — mixing UNION ALL at one level is not compiled " +
-        "(parenthesize to fix the association)")
-    parts
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame =
+      stream("", StreamQuery(branches, (in, tws) => runStream(in, tws), present), deletes)
   }
 
   /** Conservative syntactic proof that a WHERE conjunct evaluates to
@@ -814,7 +844,9 @@ object SqlCompiler {
       havingCount: Int = 0,
       /** Scalar-subquery WHERE gates, resolved per batch refresh (see
         * [[ScalarGateSpec]]); nonlinear, so [[runStream]] fences. */
-      scalarGates: Seq[ScalarGateSpec] = Nil) {
+      scalarGates: Seq[ScalarGateSpec] = Nil) extends Statement {
+
+    def branches: Seq[Compiled] = Seq(this)
 
     /** Output column names of the grouping keys (spec/test surface). */
     def groupCols: Seq[String] = groups.map(_.alias)
@@ -1275,15 +1307,7 @@ object SqlCompiler {
           }
           DeltaEngine.runTreeShared(
             (if (suppressMainLeaf) Nil else Seq((stages, shared))) ++
-              outerPlans.map { p =>
-                val planLogs = p.path.map { rel =>
-                  rel -> (p.rekey.collectFirst { case (rr, rc) if rr == rel => rc } match {
-                    case Some(rc) => rekeyByCanon(shared(rel), rc)
-                    case None => shared(rel)
-                  })
-                }.toMap
-                (p.stages, planLogs)
-              })
+              outerPlans.map(p => (p.stages, p.changelogs(shared))))
         }
       leaf
     }
@@ -1355,15 +1379,7 @@ object SqlCompiler {
       * views) the inner tree's plan is never even constructed. */
     private def withOuterLeaves(logs: Map[String, Dataset], mainLeaf: => Dataset,
         runner: (Seq[DeltaEngine.Stage], Map[String, Dataset]) => Dataset): Dataset = {
-      val planLeaves = outerPlans.map { p =>
-        val planLogs = p.path.map { rel =>
-          rel -> (p.rekey.collectFirst { case (rr, rc) if rr == rel => rc } match {
-            case Some(rc) => rekeyByCanon(logs(rel), rc)
-            case None => logs(rel)
-          })
-        }.toMap
-        runner(p.stages, planLogs)
-      }
+      val planLeaves = outerPlans.map(p => runner(p.stages, p.changelogs(logs)))
       val leaves = (if (suppressMainLeaf) Nil else Seq(mainLeaf)) ++ planLeaves
       require(leaves.nonEmpty,
         "no surviving plan to run — the compile should have failed loudly")
@@ -1392,6 +1408,16 @@ object SqlCompiler {
         if (tws) DeltaEngine.runStreamTreeTws(sts, lgs, stateTtl)
         else DeltaEngine.runStreamTree(sts, lgs, stateTtl, eventTtl = eventTtl)
       withOuterLeaves(filtered, runner(stages, filtered), runner)
+    }
+
+    /** The continuous form: one streaming query of this tree, with any
+      * scalar-subquery gate first resolved over the survivor inputs
+      * ([[runStream]] does not compile gates). */
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame = {
+      val c = withScalarGatesResolved(spark, dir, deletes)
+      stream("", StreamQuery(Seq(c), (in, tws) => c.runStream(in.head, tws = tws),
+        leaf => c.aggregate(leaf.toDF())), deletes)
     }
 
     /** Column names a SQL fragment references (via the parser — no
@@ -1677,9 +1703,9 @@ object SqlCompiler {
               tolerateFloatFolds: Boolean = false): Compiled = {
     val plan: LogicalPlan = spark.sessionState.sqlParser.parsePlan(sqlText)
     // a WITH query reaching this path would die in the FROM walk with
-    // an unhelpful shape error — redirect to the CTE front end
+    // an unhelpful shape error — redirect to the statement front end
     if (plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith]))
-      fail("WITH (CTE) queries compile via SqlCompiler.compileCte / runCte — " +
+      fail("WITH (CTE) queries compile via SqlCompiler.statement — " +
         "each CTE body becomes its own maintained view and the outer query " +
         "evaluates over the views' output")
     // likewise FROM (SELECT ...) t — the derived-table spelling of the
@@ -1695,7 +1721,7 @@ object SqlCompiler {
           }
         case _ => false })
       fail("FROM (SELECT ...) derived tables compile via " +
-        "SqlCompiler.compileCte / runCte — the subquery becomes its own " +
+        "SqlCompiler.statement — the subquery becomes its own " +
         "maintained view named by its alias")
     val (corePlan0, present, presExprs) = unwrapPresentation(spark, plan)
 
@@ -2301,6 +2327,15 @@ object SqlCompiler {
     // orient each as child→parent
     val rels = relations.map(n => TreeCompiler.RelationSchema(n, schemas(n).fieldNames.toSeq))
     val fkEdges = explicitFk.getOrElse(TreeCompiler.fkEdges(rels))
+    // a caller-supplied edge must name real columns of the query's
+    // relations: a catalog typo fails here, not as an empty join
+    explicitFk.foreach(_.foreach { e =>
+      Seq(e.child -> e.fkCol, e.parent -> e.parentCol).foreach { case (rel, c) =>
+        rels.find(_.name == rel).filterNot(_.columns.contains(c)).foreach(r =>
+          fail(s"FK edge ${e.child}.${e.fkCol}→${e.parent}.${e.parentCol}: relation " +
+            s"'$rel' has no column '$c' (has ${r.columns.mkString(", ")})"))
+      }
+    })
     val queryEdges = joinConds.map {
       case eq @ EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
         val (an, bn) = (a.nameParts.last, b.nameParts.last)
@@ -3751,25 +3786,43 @@ object SqlCompiler {
     * `sqlText`: each becomes an anonymous CTE named by its alias, and
     * the span is replaced by the bare alias, so the derived-table
     * spelling rides the same [[CompiledCte]] machinery as WITH.
-    * Detection walks Spark's tokens: a `(` whose next token is SELECT
-    * *and* whose close paren is followed by an identifier (optionally
-    * after AS) that is not a clause keyword. Subquery PREDICATES —
-    * `IN (SELECT ...)`, `EXISTS (...)`, scalar `(SELECT max ...)`
-    * comparisons — are never followed by an alias, so they stay
-    * untouched for the gate/scalar compilers. Unaliased derived
-    * tables and alias column lists (`t(a, b)`) fail loudly. */
+    * Detection walks Spark's tokens: a `(` whose next token is SELECT,
+    * standing in a FROM list (right after FROM or JOIN, or after a
+    * comma of that FROM list), whose close paren is followed by an
+    * identifier (optionally after AS) that is not a clause keyword.
+    * Subquery PREDICATES and scalar subqueries — `IN (SELECT ...)`,
+    * `EXISTS (...)`, `(SELECT max ...)` in a comparison or a SELECT
+    * list — stand elsewhere, so they stay untouched for the
+    * gate/scalar compilers. Alias column lists (`t(a, b)`) fail
+    * loudly. */
   private[graft] def liftDerivedTables(sqlText: String): (Seq[(String, String)], String) = {
     val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val out = new StringBuilder
     val clauseKw = Set("ON", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
       "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "USING",
       "UNION", "INTERSECT", "EXCEPT", "AND", "OR", "WINDOW", "QUALIFY")
+    // the tokens that end a FROM list at its depth
+    val fromListEnd = Set(SqlBaseLexer.SELECT, SqlBaseLexer.WHERE, SqlBaseLexer.GROUP,
+      SqlBaseLexer.HAVING, SqlBaseLexer.ORDER, SqlBaseLexer.LIMIT, SqlBaseLexer.WINDOW,
+      SqlBaseLexer.UNION, SqlBaseLexer.INTERSECT, SqlBaseLexer.EXCEPT)
     val toks = SqlText.tokens(sqlText)
     def kindAt(i: Int): Int = toks.lift(i).fold(-1)(_.kind)
+    def inFromList(open: Int): Boolean = kindAt(open - 1) match {
+      case SqlBaseLexer.FROM | SqlBaseLexer.JOIN => true
+      case SqlBaseLexer.COMMA =>
+        // the comma's list: the nearest FROM or clause token at its depth
+        val d = toks(open).depth
+        (open - 2 to 0 by -1).iterator.map(toks)
+          .find(t => t.depth < d || (t.depth == d &&
+            (t.kind == SqlBaseLexer.FROM || fromListEnd(t.kind))))
+          .exists(t => t.depth == d && t.kind == SqlBaseLexer.FROM)
+      case _ => false
+    }
     var copied = 0 // sqlText before this offset is already in `out`
     var i = 0
     while (i < toks.length) {
-      if (toks(i).kind == SqlBaseLexer.LEFT_PAREN && kindAt(i + 1) == SqlBaseLexer.SELECT) {
+      if (toks(i).kind == SqlBaseLexer.LEFT_PAREN && kindAt(i + 1) == SqlBaseLexer.SELECT &&
+          inFromList(i)) {
         val close = SqlText.closeParen(toks, i)
           .getOrElse(fail("unbalanced parentheses in FROM subquery"))
         // alias? [AS] ident not a clause keyword → derived table
@@ -3785,7 +3838,7 @@ object SqlCompiler {
             out.append(sqlText.substring(copied, toks(i).start)).append(toks(a).text)
             copied = toks(a).end
             i = a + 1
-          case None => i = close + 1 // subquery predicate (IN/EXISTS/scalar) — left verbatim
+          case None => i = close + 1 // unaliased: left verbatim
         }
       } else i += 1
     }
@@ -3793,7 +3846,7 @@ object SqlCompiler {
   }
 
   /** A compiled WITH query: each CTE body is an incrementally
-    * maintained view ([[Compiled]]); the OUTER query evaluates as
+    * maintained view ([[Statement]]); the OUTER query evaluates as
     * stock Spark SQL over the refreshed view outputs (registered
     * under the CTE names) plus any base relations it decorates with.
     *
@@ -3808,12 +3861,10 @@ object SqlCompiler {
     * joins, window decorations, expressions the incremental fold
     * could not maintain. */
   final case class CompiledCte(
-      /** Maintained CTEs as BRANCH GROUPS: a plain body is one
-        * [[Compiled]]; a top-level UNION ALL body is one compiled
-        * tree per branch, unioned at refresh (each branch maintains
-        * independently — the same per-branch shape as
-        * [[compileUnionAll]], registered under the CTE's name). */
-      ctes: Seq[(String, Seq[Compiled])],
+      /** Maintained CTEs in definition order, each body compiled by
+        * [[statement]] — a plain SELECT, UNION ALL arms or a set
+        * operation — and registered under the CTE's name. */
+      views: Seq[(String, Statement)],
       /** PRESENTATION CTEs: bodies that read earlier CTEs. They are
         * never compiled — their input is already view output
         * (group-cardinality), so they evaluate as stock Spark SQL in
@@ -3827,16 +3878,13 @@ object SqlCompiler {
         * directly (dimension decoration); they see the SAME
         * deletes-applied state as the maintained views' changelogs. */
       outerBaseRels: Seq[String],
-      /** SET-SEMANTICS UNION bodies: maintained through the
-        * [[CompiledUnionDistinct]] netting node (a tuple leaves only
-        * when NO branch still produces it) and registered under the
-        * CTE's name like any other view. */
-      setCtes: Seq[(String, CompiledUnionDistinct)] = Nil,
       /** Per-CTE column-alias lists (`WITH t(a, b) AS ...`): rename
         * the view's output positionally before registration. */
-      cteAliases: Map[String, Seq[String]] = Map.empty) {
+      cteAliases: Map[String, Seq[String]]) extends Statement {
 
-    private[graft] def applyAliases(name: String, df: DataFrame): DataFrame =
+    def branches: Seq[Compiled] = views.flatMap(_._2.branches)
+
+    private def applyAliases(name: String, df: DataFrame): DataFrame =
       cteAliases.get(name) match {
         case None => df
         case Some(as) =>
@@ -3847,27 +3895,26 @@ object SqlCompiler {
       }
 
     def run(spark: SparkSession, dir: String,
-            deletes: Map[String, Column] = Map.empty): DataFrame = {
+            deletes: Map[String, Column] = Map.empty): DataFrame =
+      run(spark, dir, deletes, (ss, _, view, d) => view.run(ss, dir, d))
+
+    /** The refresh, with `view(session, name, statement, deletes)`
+      * building each maintained view's output in the refresh session
+      * from the deletes on its own relations. */
+    def run(spark: SparkSession, dir: String, deletes: Map[String, Column],
+            view: (SparkSession, String, Statement, Map[String, Column]) => DataFrame): DataFrame = {
       // a delete must land somewhere — a typo'd relation name that
       // silently no-ops would make a stale view read as maintained
-      val known = ctes.flatMap(_._2).flatMap(_.path).toSet ++
-        setCtes.flatMap(_._2.branches).flatMap(_.path).toSet ++ outerBaseRels
+      val known = branches.flatMap(_.path).toSet ++ outerBaseRels
       (deletes.keySet -- known).foreach(rel =>
         fail(s"delete condition on '$rel' references no relation of this " +
           s"WITH query (relations: ${known.toSeq.sorted.mkString(", ")})"))
       // temp-view isolation: CTE names must not leak into (or read
       // from) the caller's session
       val ss = spark.newSession()
-      ctes.foreach { case (name, branches) =>
-        applyAliases(name, branches.map { c =>
-          val d = deletes.filter { case (rel, _) => c.path.contains(rel) }
-          c.run(ss, dir, d)
-        }.reduce(_ union _)).createOrReplaceTempView(name)
-      }
-      setCtes.foreach { case (name, c) =>
-        val d = deletes.filter { case (rel, _) =>
-          c.branches.exists(_.path.contains(rel)) }
-        applyAliases(name, c.run(ss, dir, d)).createOrReplaceTempView(name)
+      views.foreach { case (name, st) =>
+        applyAliases(name, view(ss, name, st, deletesOn(st.branches, deletes)))
+          .createOrReplaceTempView(name)
       }
       outerBaseRels.foreach { rel =>
         val base = Tables.load(ss, dir, rel)
@@ -3879,13 +3926,24 @@ object SqlCompiler {
       }
       ss.sql(outerSql)
     }
+
+    /** The continuous form: every view streams as its own statement,
+      * and its final state re-homes into the refresh session, where the
+      * outer query reads it exactly as [[run]] does. */
+    def runStreamed(spark: SparkSession, dir: String, deletes: Map[String, Column],
+                    stream: (String, StreamQuery, Map[String, Column]) => DataFrame): DataFrame =
+      run(spark, dir, deletes, (ss, name, st, d) => {
+        val v = st.runStreamed(spark, dir, d, (part, q, dq) => stream(s"_$name$part", q, dq))
+        ss.createDataFrame(v.rdd, v.schema)
+      })
   }
 
-  /** Compile a `WITH ... SELECT ...` query. CTEs classify by what
-    * they read, in definition order:
+  /** Compile a WITH query from its CTE definitions (name, column
+    * aliases, body) and outer query text. CTEs classify by what they
+    * read, in definition order:
     *
     *  - a body reading ONLY base relations is a MAINTAINED view —
-    *    compiled through [[compile]] (the loud fences apply per
+    *    compiled through [[statement]] (the loud fences apply per
     *    body);
     *  - a body reading at least one EARLIER CTE is a PRESENTATION
     *    CTE — its input is already view output, so it evaluates as
@@ -3894,20 +3952,12 @@ object SqlCompiler {
     *    like the outer query's).
     *
     * Column-alias lists (`WITH t(a, b) AS ...`) rename the view's
-    * output; set-semantics UNION bodies maintain through the
-    * [[CompiledUnionDistinct]] netting node. Forward references,
-    * self references (recursion — see [[RecursiveSql]]) and duplicate
-    * names fail loudly. */
-  def compileCte(spark: SparkSession, dir: String, sqlText: String): CompiledCte = {
-    val (withDefs, outer0) = splitWith(sqlText)
-      .getOrElse((Seq.empty[(String, Seq[String], String)], sqlText))
-    // aliased FROM (SELECT ...) t derived tables lift to anonymous
-    // CTEs named by their alias — same machinery, second spelling
-    val (derivedDefs, outerSql) = liftDerivedTables(outer0)
-    val cteDefs = withDefs ++ derivedDefs.map { case (n, b) => (n, Seq.empty[String], b) }
-    if (cteDefs.isEmpty)
-      fail("compileCte: the query has neither a WITH clause nor an " +
-        "aliased FROM (SELECT ...) derived table")
+    * output. Forward references, self references (recursion — see
+    * [[RecursiveSql]]), duplicate names and a nested WITH or derived
+    * table inside a maintained body fail loudly. */
+  private def cteStatement(spark: SparkSession, dir: String,
+                           cteDefs: Seq[(String, Seq[String], String)],
+                           outerSql: String): CompiledCte = {
     val dups = cteDefs.map(_._1).groupBy(identity).collect { case (n, g) if g.size > 1 => n }
     if (dups.nonEmpty) fail(s"duplicate CTE name(s): ${dups.mkString(", ")}")
     val cteNames = cteDefs.map(_._1).toSet
@@ -3916,8 +3966,7 @@ object SqlCompiler {
       spark.sessionState.sqlParser.parsePlan(text).collect {
         case u: UnresolvedRelation => u.multipartIdentifier.last.toLowerCase
       }.distinct
-    val compiled = scala.collection.mutable.ArrayBuffer[(String, Seq[Compiled])]()
-    val setCompiled = scala.collection.mutable.ArrayBuffer[(String, CompiledUnionDistinct)]()
+    val views = scala.collection.mutable.ArrayBuffer[(String, Statement)]()
     val presentation = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val presBaseRels = scala.collection.mutable.ArrayBuffer[String]()
     val seen = scala.collection.mutable.Set[String]()
@@ -3934,23 +3983,12 @@ object SqlCompiler {
         presentation += ((name, body))
         presBaseRels ++= relsOf(body).filterNot(cteNames)
       } else {
-        // a top-level UNION ALL body compiles per branch (alignment
-        // validated by compileUnionAll); a set-semantics UNION body
-        // maintains through the CompiledUnionDistinct netting node;
-        // MIXING the two at one level stays fenced (association)
-        val (bparts, bkinds) = splitTopLevelUnion(body)
-        try {
-          if (bparts.size == 1) compiled += (name -> Seq(compile(spark, dir, body)))
-          else if (bkinds.forall(identity))
-            compiled += (name -> compileUnionAll(spark, dir, body))
-          else if (!bkinds.exists(identity))
-            setCompiled += (name -> compileUnionDistinct(spark, dir, body))
-          else fail("mixing UNION and UNION ALL at one level is not " +
-            "compiled (parenthesize to fix the association)")
-        }
-        catch { case e: IllegalArgumentException =>
-          fail(s"CTE '$name': ${e.getMessage}")
-        }
+        val st = try statement(spark, dir, body)
+          catch { case e: IllegalArgumentException => fail(s"CTE '$name': ${e.getMessage}") }
+        if (st.isInstanceOf[CompiledCte])
+          fail(s"CTE '$name': a WITH clause or derived table inside a maintained " +
+            "CTE body is not compiled — define it as a CTE of the outer WITH")
+        views += (name -> st)
       }
       seen += name
     }
@@ -3970,12 +4008,6 @@ object SqlCompiler {
     if (cteRefs.isEmpty)
       fail("the outer query reads no CTE — drop the WITH clause and " +
         "compile the query directly")
-    CompiledCte(compiled.toSeq, presentation.toSeq, outerSql, baseRels,
-      setCompiled.toSeq, cteAliases)
+    CompiledCte(views.toSeq, presentation.toSeq, outerSql, baseRels, cteAliases)
   }
-
-  /** [[compileCte]] + refresh in one call. */
-  def runCte(spark: SparkSession, dir: String, sqlText: String,
-             deletes: Map[String, Column] = Map.empty): DataFrame =
-    compileCte(spark, dir, sqlText).run(spark, dir, deletes)
 }

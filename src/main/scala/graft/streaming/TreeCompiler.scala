@@ -1,13 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import graft.streaming.DeltaEngine.NodeSpec
-
-/** Compiles [[DeltaEngine.NodeSpec]] chains from FK metadata derived
-  * off the parquet schemas — the step that turns the AJU engine from
-  * two hand-built trees into an API: name the relation path (or just
-  * the root and leaf when the FK graph makes it unique) and every
-  * routing/re-keying column is inferred.
+/** Derives the FK graph from the parquet schemas and compiles an
+  * acyclic FK join graph onto [[DeltaEngine.Stage]]s — the step that
+  * turns the AJU engine from two hand-built trees into an API: the
+  * query names its relations and join conditions ([[SqlCompiler]]
+  * validates them against these edges) and every routing/re-keying
+  * column is inferred.
   *
   * FK discovery is by the TPC-H prefix-naming convention the fixtures
   * follow (reference DataFlow.java wires the same joins by hand):
@@ -16,16 +14,16 @@ import graft.streaming.DeltaEngine.NodeSpec
   *  - a relation's PRIMARY KEY is its column whose suffix is
   *    `<stem>key` with `stem` a prefix of the table name
   *    (`n_nationkey` ← nation, `c_custkey` ← customer); composite-key
-  *    relations like lineitem have none, which is fine — a chain leaf
+  *    relations like lineitem have none, which is fine — a tree leaf
   *    needs no PK;
   *  - a FOREIGN KEY edge child→parent exists where a child column's
   *    suffix equals the parent PK's suffix (`c_nationkey` →
   *    `n_nationkey`).
   *
-  * Validation is loud: unknown relations, a hop with no FK edge, or an
-  * ambiguous root→leaf path (e.g. nation→lineitem reaches the leaf via
-  * customer∘orders AND via supplier) all throw with the alternatives
-  * spelled out rather than guessing.
+  * Schemas the convention cannot describe supply their edges directly
+  * (`SqlCompiler.compile`'s `explicitFk`). Validation is loud: a graph
+  * with the wrong edge count, a cycle or no single fact throws naming
+  * the relations rather than guessing.
   */
 object TreeCompiler {
 
@@ -61,11 +59,6 @@ object TreeCompiler {
   /** One FK edge: `child.fkCol` references `parent.parentCol`. */
   final case class FkEdge(child: String, fkCol: String, parent: String, parentCol: String)
 
-  /** Read just the schemas (footer-only, no data scan) of the named
-    * parquet tables. */
-  def fromParquet(s: SparkSession, dir: String, names: Seq[String]): Seq[RelationSchema] =
-    names.map(n => RelationSchema(n, s.read.parquet(s"$dir/$n.parquet").columns.toSeq))
-
   private def suffix(col: String): String = {
     val i = col.indexOf('_')
     if (i < 0) col else col.substring(i + 1)
@@ -92,18 +85,6 @@ object TreeCompiler {
       }
     }
 
-  /** A caller-supplied edge must reference real relations/columns —
-    * catch catalog typos at compile time, not as empty joins. */
-  private def validateEdge(byName: Map[String, RelationSchema], e: FkEdge): Unit = {
-    def col(rel: String, c: String): Unit = {
-      val r = byName.getOrElse(rel, throw new IllegalArgumentException(
-        s"FK edge ${e.child}.${e.fkCol}→${e.parent}.${e.parentCol}: unknown relation '$rel'"))
-      require(r.columns.contains(c), s"FK edge ${e.child}.${e.fkCol}→${e.parent}." +
-        s"${e.parentCol}: relation '$rel' has no column '$c' (has ${r.columns.mkString(", ")})")
-    }
-    col(e.child, e.fkCol); col(e.parent, e.parentCol)
-  }
-
   /** All child→parent FK edges derivable from the schemas. */
   def fkEdges(rels: Seq[RelationSchema]): Seq[FkEdge] =
     for {
@@ -112,42 +93,6 @@ object TreeCompiler {
       pk <- primaryKeyIn(parent, rels).toSeq
       fk <- child.columns.find(c => suffix(c) == suffix(pk)).toSeq
     } yield FkEdge(child.name, fk, parent.name, pk)
-
-  /** Compile an EXPLICIT relation path (root first) into a NodeSpec
-    * chain; key columns come from the FK edges. The root gets
-    * set-semantics dedup (the reference's J0 behavior). Local
-    * predicates are not part of the tree: they filter each relation's
-    * changelog at its source.
-    *
-    * `explicitEdges` supplies the FK graph directly — the API for any
-    * schema NOT named by the TPC-H convention (the caller's catalog,
-    * information_schema constraints, a config file); omitted, the
-    * convention-based [[fkEdges]] derivation is the fallback. */
-  def compile(rels: Seq[RelationSchema], path: Seq[String],
-              explicitEdges: Option[Seq[FkEdge]] = None)
-      : Seq[NodeSpec] = {
-    require(path.size >= 2, s"a join chain needs >= 2 relations, got $path")
-    val byName = rels.map(r => r.name -> r).toMap
-    path.foreach(n => require(byName.contains(n),
-      s"unknown relation '$n' (have ${rels.map(_.name).sorted.mkString(", ")})"))
-    val edges = explicitEdges.getOrElse(fkEdges(rels))
-    edges.foreach(e => validateEdge(byName, e))
-    // edge i: path(i+1) → path(i)
-    val chain = path.sliding(2).map { case Seq(parent, child) =>
-      edges.find(e => e.child == child && e.parent == parent).getOrElse(
-        throw new IllegalArgumentException(
-          s"no FK edge $child → $parent derivable from the schemas " +
-            s"(edges: ${edges.map(e => s"${e.child}.${e.fkCol}→${e.parent}.${e.parentCol}").mkString(", ")})"))
-    }.toSeq
-    val root = NodeSpec(path.head,
-      childKeyCol = chain.head.parentCol, nextKeyCol = chain.head.parentCol,
-      isRoot = true, setSemantics = true)
-    val rest = chain.zipWithIndex.map { case (e, i) =>
-      val nextKey = if (i + 1 < chain.size) chain(i + 1).parentCol else e.fkCol
-      NodeSpec(e.child, childKeyCol = e.fkCol, nextKeyCol = nextKey)
-    }
-    root +: rest
-  }
 
   /** Compile a general ACYCLIC FK join tree into
     * [[DeltaEngine.Stage]]s for `runTree`/`runStreamTree`.
@@ -407,26 +352,5 @@ object TreeCompiler {
     val swapped = Stage(glue.name, glue.spec.copy(childKeyCol = trunkKey),
       ownStage = Some(trunkRef), pairStage = Some(pass.name), salts = salts)
     stages.init ++ Seq(pass, swapped)
-  }
-
-  /** Find the UNIQUE FK path root→leaf and compile it; throws listing
-    * the alternatives when the FK graph offers more than one. */
-  def compileUnique(rels: Seq[RelationSchema], root: String, leaf: String,
-                    explicitEdges: Option[Seq[FkEdge]] = None)
-      : Seq[NodeSpec] = {
-    val edges = explicitEdges.getOrElse(fkEdges(rels))
-    def paths(from: String, seen: Set[String]): Seq[List[String]] =
-      if (from == root) Seq(List(root))
-      else edges.filter(e => e.child == from && !seen(e.parent))
-        .flatMap(e => paths(e.parent, seen + e.parent).map(p => p :+ from))
-    val found = paths(leaf, Set(leaf))
-    found match {
-      case Seq(p) => compile(rels, p, explicitEdges)
-      case Seq() => throw new IllegalArgumentException(
-        s"no FK path $root → $leaf in the derived graph")
-      case many => throw new IllegalArgumentException(
-        s"ambiguous FK path $root → $leaf; name the chain explicitly via compile(): " +
-          many.map(_.mkString("→")).mkString("; "))
-    }
   }
 }

@@ -821,42 +821,31 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     }
   }
 
-  // ---- TreeCompiler: FK-metadata-derived chains ----------------------
+  // ---- TreeCompiler: FK-metadata-derived trees -----------------------
 
   import graft.streaming.TreeCompiler
 
+  /** The footer-only schemas of the named parquet tables. */
+  private def schemas(dir: String, names: Seq[String]): Seq[TreeCompiler.RelationSchema] =
+    names.map(n => TreeCompiler.RelationSchema(n,
+      SparkTestSession.spark.read.parquet(s"$dir/$n.parquet").columns.toSeq))
+
   test("TreeCompiler derives the hand-built q10 and supplier trees from schemas") {
-    val rels = TreeCompiler.fromParquet(SparkTestSession.spark, SparkTestSession.sfTiny,
+    val rels = schemas(SparkTestSession.sfTiny,
       Seq("region", "nation", "customer", "supplier", "orders", "lineitem", "part"))
-    val q10 = TreeCompiler.compile(rels, Seq("nation", "customer", "orders", "lineitem"))
-    assert(q10 == Seq(
+    val edges = TreeCompiler.fkEdges(rels)
+    def tree(path: Seq[String]) = TreeCompiler.stagesFor(
+      edges.filter(e => path.contains(e.child) && path.contains(e.parent)), path).map(_.spec)
+    assert(tree(Seq("nation", "customer", "orders", "lineitem")) == Seq(
       NodeSpec("nation", "n_nationkey", "n_nationkey", isRoot = true, setSemantics = true),
       NodeSpec("customer", "c_nationkey", "c_custkey"),
       NodeSpec("orders", "o_custkey", "o_orderkey"),
       NodeSpec("lineitem", "l_orderkey", "l_orderkey")))
-    val sup = TreeCompiler.compile(rels, Seq("region", "nation", "supplier", "lineitem"))
-    assert(sup == Seq(
+    assert(tree(Seq("region", "nation", "supplier", "lineitem")) == Seq(
       NodeSpec("region", "r_regionkey", "r_regionkey", isRoot = true, setSemantics = true),
       NodeSpec("nation", "n_regionkey", "n_nationkey"),
       NodeSpec("supplier", "s_nationkey", "s_suppkey"),
       NodeSpec("lineitem", "l_suppkey", "l_suppkey")))
-  }
-
-  test("TreeCompiler finds unique paths and refuses ambiguous ones loudly") {
-    val rels = TreeCompiler.fromParquet(SparkTestSession.spark, SparkTestSession.sfTiny,
-      Seq("region", "nation", "customer", "supplier", "orders", "lineitem", "part"))
-    // region → orders is unique: region→nation→customer→orders
-    val t = TreeCompiler.compileUnique(rels, "region", "orders")
-    assert(t.map(_.relation) == Seq("region", "nation", "customer", "orders"))
-    // nation → lineitem has two FK paths (via customer∘orders, via supplier)
-    val ex = intercept[IllegalArgumentException] {
-      TreeCompiler.compileUnique(rels, "nation", "lineitem")
-    }
-    assert(ex.getMessage.contains("ambiguous"))
-    // no path at all
-    intercept[IllegalArgumentException] {
-      TreeCompiler.compileUnique(rels, "part", "region")
-    }
   }
 
   test("explicit FK metadata compiles trees over non-TPC-H-named relations") {
@@ -870,14 +859,11 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     Seq((10L, 1L, 7.5), (11L, 1L, 2.0), (12L, 2L, 9.0), (13L, 2L, 1.0))
       .toDF("member_id", "squad_ref", "score")
       .write.mode("overwrite").parquet(s"$dir/member.parquet")
-    val rels = TreeCompiler.fromParquet(s, dir, Seq("squad", "member"))
     // the convention derives NO edges here — the explicit catalog is
     // the only way in
-    assert(TreeCompiler.fkEdges(rels).isEmpty)
+    assert(TreeCompiler.fkEdges(schemas(dir, Seq("squad", "member"))).isEmpty)
     val edges = Seq(TreeCompiler.FkEdge("member", "squad_ref", "squad", "squad_id"))
-    val tree = TreeCompiler.compile(rels, Seq("squad", "member"),
-      explicitEdges = Some(edges))
-    assert(tree == Seq(
+    assert(TreeCompiler.stagesFor(edges, Seq("squad", "member")).map(_.spec) == Seq(
       NodeSpec("squad", "squad_id", "squad_id", isRoot = true, setSemantics = true),
       NodeSpec("member", "squad_ref", "squad_ref")))
     // SqlCompiler takes the same catalog and compiles the text unchanged
@@ -894,10 +880,10 @@ class DeltaEngineSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     assert(got == want && got.nonEmpty)
     // a catalog typo fails loudly at compile time, not as an empty join
     val ex = intercept[IllegalArgumentException] {
-      TreeCompiler.compile(rels, Seq("squad", "member"), explicitEdges =
+      SqlCompiler.compile(s, dir, sqlText, explicitFk =
         Some(Seq(TreeCompiler.FkEdge("member", "squad_key", "squad", "squad_id"))))
     }
-    assert(ex.getMessage.contains("no column 'squad_key'"))
+    assert(ex.getMessage.contains("no column 'squad_key'"), ex.getMessage)
   }
 
   test("compiled third tree: engine result equals batch join over survivors") {

@@ -101,10 +101,11 @@ class ReplayHarnessSpec extends AnyFunSuite {
         "TempDirs.tempDir (deleted at JVM exit):\n" + offenders.mkString("\n"))
   }
 
-  /** A hand-written SQL scanning loop: a string-literal flag or a
-    * block-comment end search. Spark's lexer, through `SqlText`, is the
-    * one place SQL text is cut into literals, comments and parens. */
-  private val sqlScan = """\binStr\b|indexOf\("\*/"""".r
+  /** A hand-written SQL scanning loop: a string-literal flag, a
+    * block-comment end search or a paren-depth count over characters.
+    * Spark's lexer, through `SqlText`, is the one place SQL text is cut
+    * into literals, comments and parens. */
+  private val sqlScan = """\binStr\b|indexOf\("\*/"|== '[()]'""".r
 
   test("no SQL text is scanned by hand outside SqlText") {
     val offenders = for {

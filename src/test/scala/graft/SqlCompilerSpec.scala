@@ -1695,53 +1695,57 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       s.sql(s"$lhs\n$op\n$rhs").collect().map(_.getString(0)).sorted.toSeq
     }
     for (op <- Seq("INTERSECT", "EXCEPT")) {
-      val got = SqlCompiler.compileSetOp(s, d, s"$lhs\n$op\n$rhs")
-        .run(s, d).collect().map(_.getString(0)).sorted.toSeq
+      val got = SqlCompiler.statement(s, d, s"$lhs\n$op\n$rhs")
+        .run(s, d, Map.empty).collect().map(_.getString(0)).sorted.toSeq
       assert(got == stock(op) && (op == "EXCEPT" || got.nonEmpty), s"$op: $got")
     }
     // DELETE-FLIP semantics: deleting every high-balance supplier of
     // some nation must flip it OUT of the intersect and INTO the
     // except — the cross-branch netting this machinery exists for
-    val interBase = SqlCompiler.compileSetOp(s, d, s"$lhs\nINTERSECT\n$rhs")
-      .run(s, d).collect().map(_.getString(0)).toSet
+    val interBase = SqlCompiler.statement(s, d, s"$lhs\nINTERSECT\n$rhs")
+      .run(s, d, Map.empty).collect().map(_.getString(0)).toSet
     assert(interBase.nonEmpty)
     val victim = interBase.min
     val nk = Tables.load(s, d, "nation").filter(col("n_name") === victim)
       .select(col("n_nationkey").cast("long")).head().getLong(0)
     val dels = Map("supplier" -> (col("s_nationkey") === nk))
-    val interDel = SqlCompiler.compileSetOp(s, d, s"$lhs\nINTERSECT\n$rhs")
+    val interDel = SqlCompiler.statement(s, d, s"$lhs\nINTERSECT\n$rhs")
       .run(s, d, dels).collect().map(_.getString(0)).toSet
-    val exceptDel = SqlCompiler.compileSetOp(s, d, s"$lhs\nEXCEPT\n$rhs")
+    val exceptDel = SqlCompiler.statement(s, d, s"$lhs\nEXCEPT\n$rhs")
       .run(s, d, dels).collect().map(_.getString(0)).toSet
     assert(!interDel.contains(victim) && exceptDel.contains(victim),
       s"victim $victim: inter=$interDel except=$exceptDel")
+    // EXCEPT DISTINCT spells plain EXCEPT
+    val exceptDistinct = SqlCompiler.statement(s, d, s"$lhs\nEXCEPT DISTINCT\n$rhs")
+    assert(exceptDistinct.isInstanceOf[SqlCompiler.CompiledSetOp])
+    assert(exceptDistinct.run(s, d, dels).collect().map(_.getString(0)).toSet == exceptDel)
+    // the statement's own tokens pick the member: ALL is the bag form,
+    // and a query without a top-level operator (one in a comment does
+    // not count) is a plain view
+    assert(SqlCompiler.statement(s, d, s"$lhs\nINTERSECT ALL\n$rhs")
+      .isInstanceOf[SqlCompiler.CompiledBagSetOp])
+    assert(SqlCompiler.statement(s, d, s"$lhs\nINTERSECT\n$rhs")
+      .isInstanceOf[SqlCompiler.CompiledSetOp])
+    assert(SqlCompiler.statement(s, d, lhs).isInstanceOf[SqlCompiler.Compiled])
+    assert(SqlCompiler.statement(s, d, s"$lhs -- INTERSECT trap\n")
+      .isInstanceOf[SqlCompiler.Compiled])
     // fences
-    val exAll = intercept[IllegalArgumentException](
-      SqlCompiler.compileSetOp(s, d, s"$lhs\nINTERSECT ALL\n$rhs"))
-    assert(exAll.getMessage.contains("compileBagSetOp"), exAll.getMessage)
-    val exSet = intercept[IllegalArgumentException](
-      SqlCompiler.compileBagSetOp(s, d, s"$lhs\nINTERSECT\n$rhs"))
-    assert(exSet.getMessage.contains("compileSetOp"), exSet.getMessage)
-    val exAgg = intercept[IllegalArgumentException](SqlCompiler.compileSetOp(s, d,
+    val exAgg = intercept[IllegalArgumentException](SqlCompiler.statement(s, d,
       """SELECT n_name, COUNT(*) AS n FROM nation
         |JOIN customer ON c_nationkey = n_nationkey GROUP BY n_name
         |INTERSECT
         |SELECT n_name, COUNT(*) AS n FROM nation
         |JOIN supplier ON s_nationkey = n_nationkey GROUP BY n_name""".stripMargin))
     assert(exAgg.getMessage.contains("non-aggregate"), exAgg.getMessage)
-    val exCols = intercept[IllegalArgumentException](SqlCompiler.compileSetOp(s, d,
+    val exCols = intercept[IllegalArgumentException](SqlCompiler.statement(s, d,
       s"""$lhs
          |INTERSECT
          |SELECT DISTINCT s_name FROM nation
          |JOIN supplier ON s_nationkey = n_nationkey""".stripMargin))
     assert(exCols.getMessage.contains("do not match"), exCols.getMessage)
-    val exNone = intercept[IllegalArgumentException](
-      SqlCompiler.compileSetOp(s, d, lhs))
-    assert(exNone.getMessage.contains("top-level INTERSECT"), exNone.getMessage)
-    // a commented-out op must not split
-    val exCmt = intercept[IllegalArgumentException](
-      SqlCompiler.compileSetOp(s, d, s"$lhs -- INTERSECT trap\n"))
-    assert(exCmt.getMessage.contains("top-level INTERSECT"), exCmt.getMessage)
+    val exTwo = intercept[IllegalArgumentException](
+      SqlCompiler.statement(s, d, s"$lhs\nINTERSECT\n$rhs\nINTERSECT\n$lhs"))
+    assert(exTwo.getMessage.contains("more than one top-level INTERSECT"), exTwo.getMessage)
   }
 
   test("mixed union association: parenthesized UNION ALL groups flatten under set UNION") {
@@ -1754,16 +1758,17 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         |UNION
         |SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey
         |WHERE s_acctbal > 9000""".stripMargin
-    val c = SqlCompiler.compileUnionDistinct(s, d, text)
+    val c = SqlCompiler.statement(s, d, text)
+    assert(c.isInstanceOf[SqlCompiler.CompiledUnionDistinct])
     assert(c.branches.size == 3) // the group flattened into the netting node
-    val got = c.run(s, d).orderBy("n_name").collect().map(_.getString(0)).toSeq
+    val got = c.run(s, d, Map.empty).orderBy("n_name").collect().map(_.getString(0)).toSeq
     val sref = s.newSession()
     Seq("nation", "customer", "supplier").foreach(t =>
       Tables.load(sref, d, t).createOrReplaceTempView(t))
     val want = sref.sql(text).orderBy("n_name").collect().map(_.getString(0)).toSeq
     assert(got == want && got.nonEmpty)
     // the converse does NOT collapse: a set group under UNION ALL
-    val ex = intercept[IllegalArgumentException](SqlCompiler.compileUnionAll(s, d,
+    val ex = intercept[IllegalArgumentException](SqlCompiler.statement(s, d,
       """(SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
         | UNION
         | SELECT n_name FROM nation JOIN supplier ON s_nationkey = n_nationkey)
@@ -1797,7 +1802,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       for (op <- Seq("INTERSECT", "EXCEPT")) {
         val want = sref.sql(s"$lhs\n$op\n$rhs")
           .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-        val got = SqlCompiler.compileSetOp(s, d, s"$lhs\n$op\n$rhs")
+        val got = SqlCompiler.statement(s, d, s"$lhs\n$op\n$rhs")
           .run(s, d, dels)
           .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
         assert(got == want, s"trial $trial $op (mod=$mod res=$res)")
@@ -2000,45 +2005,42 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   }
 
   test("top-level UNION ALL splits paren- and quote-aware; UNION and misaligned schemas are loud") {
-    import graft.streaming.SqlCompiler.splitTopLevelUnionAll
+    import graft.streaming.SqlCompiler.splitSetOps
     // UNION ALL inside parens or a string literal must NOT split
     val tricky = "SELECT 'a UNION ALL b' AS s, (SELECT 1 UNION ALL SELECT 2) AS x\nUNION ALL\nSELECT 'y', 3"
-    val parts = splitTopLevelUnionAll(tricky)
-    assert(parts.size == 2 && parts(1).startsWith("SELECT 'y'"), parts)
+    val (parts, ops) = splitSetOps(tricky)
+    assert(parts.size == 2 && parts(1).startsWith("SELECT 'y'") && ops == Seq("UNION ALL"), parts)
     // column-like identifiers containing "union" must not split
-    assert(splitTopLevelUnionAll("SELECT reunion_all FROM t").size == 1)
+    assert(splitSetOps("SELECT reunion_all FROM t")._1.size == 1)
     // comments: 'UNION ALL' inside -- and /* */ is text, not syntax
-    assert(splitTopLevelUnionAll(
-      "SELECT 1 -- UNION ALL SELECT 2\nFROM t").size == 1)
-    assert(splitTopLevelUnionAll(
-      "SELECT 1 /* UNION ALL\nSELECT 2 */ FROM t").size == 1)
+    assert(splitSetOps(
+      "SELECT 1 -- UNION ALL SELECT 2\nFROM t")._1.size == 1)
+    assert(splitSetOps(
+      "SELECT 1 /* UNION ALL\nSELECT 2 */ FROM t")._1.size == 1)
     // ...and a real split still works with comments present
-    assert(splitTopLevelUnionAll(
-      "SELECT 1 -- note\nUNION ALL\nSELECT 2").size == 2)
+    assert(splitSetOps(
+      "SELECT 1 -- note\nUNION ALL\nSELECT 2")._1.size == 2)
     // doubled quotes inside a literal are the SQL escape, not a close:
     // the UNION ALL here is still inside the string
-    assert(splitTopLevelUnionAll(
-      "SELECT 'it''s a UNION ALL trap' AS x FROM t").size == 1)
-    // bare UNION (set semantics) routes to the set compiler, not this one
-    val ex = intercept[IllegalArgumentException](
-      splitTopLevelUnionAll("SELECT 1 UNION SELECT 2"))
-    assert(ex.getMessage.contains("compileUnionDistinct"), ex.getMessage)
-    // ... and the set splitter takes bare UNION / UNION DISTINCT, not ALL
-    import graft.streaming.SqlCompiler.splitTopLevelUnionDistinct
-    assert(splitTopLevelUnionDistinct("SELECT 1 UNION SELECT 2").size == 2)
-    assert(splitTopLevelUnionDistinct(
-      "SELECT 1 UNION DISTINCT SELECT 2 UNION SELECT 3").size == 3)
-    val exMix = intercept[IllegalArgumentException](
-      splitTopLevelUnionDistinct("SELECT 1 UNION SELECT 2 UNION ALL SELECT 3"))
-    assert(exMix.getMessage.contains("mixing"), exMix.getMessage)
-    val exMix2 = intercept[IllegalArgumentException](
-      splitTopLevelUnionAll("SELECT 1 UNION SELECT 2 UNION ALL SELECT 3"))
-    assert(exMix2.getMessage.contains("mixing"), exMix2.getMessage)
+    assert(splitSetOps(
+      "SELECT 'it''s a UNION ALL trap' AS x FROM t")._1.size == 1)
+    // bare UNION and UNION DISTINCT are the set form, not the bag form
+    assert(splitSetOps("SELECT 1 UNION SELECT 2") ==
+      (Seq("SELECT 1", "SELECT 2"), Seq("UNION")))
+    assert(splitSetOps(
+      "SELECT 1 UNION DISTINCT SELECT 2 UNION SELECT 3") ==
+      (Seq("SELECT 1", "SELECT 2", "SELECT 3"), Seq("UNION", "UNION")))
+    // mixing the two at one level is loud
+    for (text <- Seq("SELECT 1 UNION SELECT 2 UNION ALL SELECT 3",
+                     "SELECT 1 UNION ALL SELECT 2 UNION SELECT 3")) {
+      val exMix = intercept[IllegalArgumentException](SqlCompiler.statement(s, d, text))
+      assert(exMix.getMessage.contains("mixing"), exMix.getMessage)
+    }
     // an identifier containing 'union' must not split the set form either
-    assert(splitTopLevelUnionDistinct("SELECT reunion FROM t UNION SELECT x FROM u").size == 2)
-    assert(splitTopLevelUnionDistinct("SELECT union_flag FROM t").size == 1)
+    assert(splitSetOps("SELECT reunion FROM t UNION SELECT x FROM u")._1.size == 2)
+    assert(splitSetOps("SELECT union_flag FROM t")._1.size == 1)
     // schema misalignment across branches is loud
-    val ex2 = intercept[IllegalArgumentException](SqlCompiler.compileUnionAll(s, d,
+    val ex2 = intercept[IllegalArgumentException](SqlCompiler.statement(s, d,
       """SELECT n_name, COUNT(*) AS n FROM nation JOIN customer ON c_nationkey = n_nationkey GROUP BY n_name
         |UNION ALL
         |SELECT n_name, COUNT(*) AS m FROM nation JOIN customer ON c_nationkey = n_nationkey GROUP BY n_name""".stripMargin))
@@ -2046,24 +2048,27 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
   }
 
   test("Spark-legal spellings split as Spark lexes them: escaped quotes, double quotes, backticks, nested comments") {
-    import SqlCompiler.{splitTopLevelSetOp, splitTopLevelUnionAll, splitTopLevelUnionDistinct}
+    import SqlCompiler.splitSetOps
     // a backslash escapes the quote: 'x\'' is one literal, then UNION ALL
-    assert(splitTopLevelUnionAll(
-      """SELECT a FROM t WHERE s = 'x\'' UNION ALL SELECT a FROM u WHERE s = 'y'""").size == 2)
-    assert(splitTopLevelUnionDistinct("""SELECT 'x\'' AS s UNION SELECT 'y'""").size == 2)
+    assert(splitSetOps(
+      """SELECT a FROM t WHERE s = 'x\'' UNION ALL SELECT a FROM u WHERE s = 'y'""")._1.size == 2)
+    assert(splitSetOps("""SELECT 'x\'' AS s UNION SELECT 'y'""")._1.size == 2)
     // double-quoted literals are literals
-    assert(splitTopLevelUnionAll(
-      """SELECT ")" AS p FROM t UNION ALL SELECT "UNION ALL" FROM u""") ==
+    assert(splitSetOps(
+      """SELECT ")" AS p FROM t UNION ALL SELECT "UNION ALL" FROM u""")._1 ==
       Seq("""SELECT ")" AS p FROM t""", """SELECT "UNION ALL" FROM u"""))
     // backticked names are names
-    assert(splitTopLevelUnionAll("SELECT `union` FROM t UNION ALL SELECT `a)b` FROM u") ==
+    assert(splitSetOps("SELECT `union` FROM t UNION ALL SELECT `a)b` FROM u")._1 ==
       Seq("SELECT `union` FROM t", "SELECT `a)b` FROM u"))
     // block comments nest
-    assert(splitTopLevelUnionAll("SELECT 1 /* a /* b */ UNION ALL */ FROM t").size == 1)
-    assert(splitTopLevelSetOp(
+    assert(splitSetOps("SELECT 1 /* a /* b */ UNION ALL */ FROM t")._1.size == 1)
+    assert(splitSetOps(
       """SELECT "INTERSECT", `except` FROM t /* /* */ EXCEPT */ EXCEPT SELECT 'x\'', y FROM u""") ==
-      ("""SELECT "INTERSECT", `except` FROM t /* /* */ EXCEPT */""",
-        """SELECT 'x\'', y FROM u""", true, false))
+      (Seq("""SELECT "INTERSECT", `except` FROM t /* /* */ EXCEPT */""",
+        """SELECT 'x\'', y FROM u"""), Seq("EXCEPT")))
+    // DISTINCT after the operator belongs to it: the set form
+    assert(splitSetOps("SELECT a FROM t EXCEPT DISTINCT SELECT a FROM u") ==
+      (Seq("SELECT a FROM t", "SELECT a FROM u"), Seq("EXCEPT")))
 
     val (ctes, outer) = SqlCompiler.splitWith(
       """WITH a AS (SELECT 'x\')' AS s FROM t),
@@ -2087,7 +2092,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         |UNION ALL
         |SELECT n_name, COUNT(*) AS n FROM nation JOIN supplier ON s_nationkey = n_nationkey
         |WHERE s_name <> 'y\'' GROUP BY n_name""".stripMargin
-    val got = SqlCompiler.compileUnionAll(s, d, text).map(_.run(s, d)).reduce(_ union _)
+    val got = SqlCompiler.statement(s, d, text).run(s, d, Map.empty)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val sref = s.newSession()
     Seq("nation", "customer", "supplier").foreach(t =>
@@ -2212,8 +2217,9 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | GROUP BY c_custkey)
         |SELECT n_orders, COUNT(*) AS n_customers
         |FROM per_cust GROUP BY n_orders""".stripMargin
-    val cc = SqlCompiler.compileCte(s, d, cteSql)
-    assert(cc.ctes.map(_._1) == Seq("per_cust") && cc.outerBaseRels.isEmpty)
+    def cte(text: String) = SqlCompiler.statement(s, d, text).asInstanceOf[SqlCompiler.CompiledCte]
+    val cc = cte(cteSql)
+    assert(cc.views.map(_._1) == Seq("per_cust") && cc.outerBaseRels.isEmpty)
     val got = cc.run(s, d).orderBy("n_orders").collect().toSeq
     val want = s.sql(cteSql).orderBy("n_orders").collect().toSeq
     assert(got == want && got.nonEmpty)
@@ -2230,7 +2236,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         |SELECT r_name, n_name, rev_e2
         |FROM rev JOIN nation ON n_nationkey = nk
         |JOIN region ON r_regionkey = n_regionkey""".stripMargin
-    val ccDim = SqlCompiler.compileCte(s, d, dimSql)
+    val ccDim = cte(dimSql)
     assert(ccDim.outerBaseRels.toSet == Set("nation", "region"))
     val gotDel = ccDim.run(s, d,
         deletes = Map("orders" -> (col("o_orderkey") % 6 === 0)))
@@ -2257,12 +2263,12 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | SELECT n_nationkey AS nk, COUNT(*) AS n_supp
         | FROM nation, supplier WHERE s_nationkey = n_nationkey GROUP BY n_nationkey)
         |SELECT c.nk, c.bal, s.n_supp FROM cust c JOIN supp s ON c.nk = s.nk""".stripMargin
-    val two = SqlCompiler.compileCte(s, d, joinSql)
-    assert(two.ctes.map(_._1) == Seq("cust", "supp"))
+    val two = cte(joinSql)
+    assert(two.views.map(_._1) == Seq("cust", "supp"))
     assert(two.run(s, d).count() == s.sql(joinSql).count())
 
     def bad(text: String, needle: String): Unit = {
-      val ex = intercept[IllegalArgumentException](SqlCompiler.compileCte(s, d, text))
+      val ex = intercept[IllegalArgumentException](SqlCompiler.statement(s, d, text))
       assert(ex.getMessage.contains(needle), s"message: ${ex.getMessage}")
     }
     // a CTE reading an EARLIER CTE classifies as PRESENTATION: it
@@ -2273,8 +2279,8 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | WHERE c_nationkey = n_nationkey GROUP BY n_name),
         |b AS (SELECT n_name, n FROM a WHERE n > 6)
         |SELECT n_name, n FROM b""".stripMargin
-    val chain = SqlCompiler.compileCte(s, d, chainSql)
-    assert(chain.ctes.map(_._1) == Seq("a"))
+    val chain = cte(chainSql)
+    assert(chain.views.map(_._1) == Seq("a"))
     assert(chain.presentation.map(_._1) == Seq("b"))
     assert(chain.run(s, d).orderBy("n_name").collect().toSeq ==
       s.sql(chainSql).orderBy("n_name").collect().toSeq)
@@ -2285,7 +2291,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | WHERE c_nationkey = n_nationkey GROUP BY c_nationkey),
         |decorated AS (SELECT n_name, n FROM a JOIN nation ON n_nationkey = nk)
         |SELECT n_name, n FROM decorated""".stripMargin
-    val mix = SqlCompiler.compileCte(s, d, mixSql)
+    val mix = cte(mixSql)
     assert(mix.presentation.map(_._1) == Seq("decorated"))
     assert(mix.outerBaseRels.contains("nation"))
     assert(mix.run(s, d).count() == s.sql(mixSql).count())
@@ -2301,8 +2307,8 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | SELECT n_name, COUNT(*) AS n FROM nation, supplier
         |  WHERE s_nationkey = n_nationkey GROUP BY n_name)
         |SELECT n_name, SUM(n) AS n_parties FROM bal GROUP BY n_name""".stripMargin
-    val u = SqlCompiler.compileCte(s, d, unionSql)
-    assert(u.ctes.map { case (n, bs) => (n, bs.size) } == Seq(("bal", 2)))
+    val u = cte(unionSql)
+    assert(u.views.map { case (n, v) => (n, v.branches.size) } == Seq(("bal", 2)))
     assert(u.run(s, d).orderBy("n_name").collect().toSeq ==
       s.sql(unionSql).orderBy("n_name").collect().toSeq)
 
@@ -2314,19 +2320,19 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
           |SELECT * FROM b""".stripMargin, "defined after")
     bad("WITH a AS (SELECT * FROM a) SELECT * FROM a", "references itself")
     // a column-alias list renames the view's output positionally
-    val aliased = SqlCompiler.runCte(s, d,
+    val aliased = SqlCompiler.statement(s, d,
       """WITH a(x, y) AS (SELECT n_name AS c1, COUNT(*) AS c2 FROM nation, customer
         | WHERE c_nationkey = n_nationkey GROUP BY n_name)
-        |SELECT x, y FROM a""".stripMargin)
+        |SELECT x, y FROM a""".stripMargin).run(s, d, Map.empty)
     assert(aliased.columns.toSeq == Seq("x", "y") && aliased.count() > 0)
     // an arity-mismatched alias list is loud
-    val exAl = intercept[IllegalArgumentException](SqlCompiler.runCte(s, d,
+    val exAl = intercept[IllegalArgumentException](SqlCompiler.statement(s, d,
       """WITH a(x) AS (SELECT n_name AS c1, COUNT(*) AS c2 FROM nation, customer
         | WHERE c_nationkey = n_nationkey GROUP BY n_name)
-        |SELECT x FROM a""".stripMargin))
+        |SELECT x FROM a""".stripMargin).run(s, d, Map.empty))
     assert(exAl.getMessage.contains("aliases"), exAl.getMessage)
     // a set-semantics UNION body maintains through the netting node
-    val setCte = SqlCompiler.compileCte(s, d,
+    val setCte = cte(
       """WITH nat AS (
         | SELECT n_name FROM nation, customer
         |  WHERE c_nationkey = n_nationkey AND c_acctbal > 8000
@@ -2334,7 +2340,7 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         | SELECT n_name FROM nation, supplier
         |  WHERE s_nationkey = n_nationkey AND s_acctbal > 5000)
         |SELECT COUNT(*) AS n FROM nat""".stripMargin)
-    assert(setCte.setCtes.map(_._1) == Seq("nat"))
+    assert(setCte.views.collect { case (n, _: SqlCompiler.CompiledUnionDistinct) => n } == Seq("nat"))
     assert(setCte.run(s, d).head().getLong(0) > 0)
     // mixing UNION and UNION ALL at one level stays fenced
     bad("""WITH nat AS (
@@ -2354,9 +2360,9 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
     bad("""WITH a AS (SELECT n_name, COUNT(*) AS n FROM nation, customer
           | WHERE c_nationkey = n_nationkey GROUP BY n_name)
           |SELECT * FROM aa""".stripMargin, "neither a CTE")
-    // the plain compiler redirects WITH text to the CTE front end
+    // the plain compiler redirects WITH text to the statement front end
     val red = intercept[IllegalArgumentException](SqlCompiler.compile(s, d, cteSql))
-    assert(red.getMessage.contains("compileCte"), red.getMessage)
+    assert(red.getMessage.contains("SqlCompiler.statement"), red.getMessage)
     // a delete naming no relation of the query is loud, not a no-op
     val exDel = intercept[IllegalArgumentException](
       cc.run(s, d, deletes = Map("lineitem" -> (col("l_linenumber") === 1))))
@@ -2493,8 +2499,8 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
         |      WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
         |      GROUP BY c_custkey) t
         |GROUP BY n_orders""".stripMargin
-    val cc = SqlCompiler.compileCte(s, d, derivedSql)
-    assert(cc.ctes.map(_._1) == Seq("t"))
+    val cc = SqlCompiler.statement(s, d, derivedSql).asInstanceOf[SqlCompiler.CompiledCte]
+    assert(cc.views.map(_._1) == Seq("t"))
     val got = cc.run(s, d,
         deletes = Map("orders" -> (col("o_orderkey") % 4 === 0)))
       .orderBy("n_orders").collect().toSeq
@@ -2509,15 +2515,22 @@ class SqlCompilerSpec extends AnyFunSuite with org.scalatest.ParallelTestExecuti
       .orderBy("n_orders").collect().toSeq
     assert(got == want && got.nonEmpty)
 
+    // only a subquery standing in a FROM list lifts: a word after a
+    // subquery predicate (here THEN) is not an alias
+    val caseText =
+      "SELECT CASE WHEN n_nationkey IN (SELECT 1) THEN 1 END AS f FROM nation"
+    assert(SqlCompiler.liftDerivedTables(caseText) == ((Nil, caseText)))
+    for (text <- Seq("SELECT a FROM (SELECT 1 AS a) t", "SELECT a FROM nation, (SELECT 1 AS a) t"))
+      assert(SqlCompiler.liftDerivedTables(text)._1.map(_._1) == Seq("t"), text)
     // alias column lists are loud; the plain compiler redirects the
-    // derived-table spelling to the CTE front end
+    // derived-table spelling to the statement front end
     val exCols = intercept[IllegalArgumentException](
-      SqlCompiler.compileCte(s, d,
+      SqlCompiler.statement(s, d,
         """SELECT x FROM (SELECT c_custkey FROM customer) t(x)"""))
     assert(exCols.getMessage.contains("alias column lists"), exCols.getMessage)
     val red = intercept[IllegalArgumentException](
       SqlCompiler.compile(s, d, derivedSql))
-    assert(red.getMessage.contains("compileCte"), red.getMessage)
+    assert(red.getMessage.contains("SqlCompiler.statement"), red.getMessage)
   }
 
   test("gates × FULL OUTER: fences stay loud; EXISTS empties the orphan-only view") {
